@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops.clean import synthesize_sku, tiered_discount_rate
+from dynamic_etl_spark.session import local_df
 
 # --------------------------------------------------------------------------
 # Seeded primitives (F21, F28-F30)
@@ -233,10 +234,16 @@ def _base(spark: SparkSession, n: int, partitions: int = 8) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def generate_stores(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
-    df = _base(spark, n)
     i = F.col("id")
-    cot = weighted_choice(uniform(seed + 1, i), CLASS_OF_TRADE_WEIGHTS)
-    state = pick_from(seed + 2, STATES, i)
+    # values referenced more than once are bound as columns first, so the
+    # plan carries each CASE tree once instead of once per reference
+    # (CollapseProject does not re-inline non-cheap expressions)
+    df = _base(spark, n).select(
+        "id",
+        weighted_choice(uniform(seed + 1, i), CLASS_OF_TRADE_WEIGHTS).alias("store_class_of_trade"),
+        pick_from(seed + 2, STATES, i).alias("store_state"),
+    )
+    cot, state = F.col("store_class_of_trade"), F.col("store_state")
     city = F.concat(state, F.lit(" City "), (uniform_int(seed + 3, 1, 9, i)).cast("string"))
     # chain rules (dim_store_daily): hypermarket always, supermarket 70%,
     # convenience 30%, kirana/wholesale never
@@ -247,9 +254,14 @@ def generate_stores(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
         .when((cot == "Convenience Store") & (chain_roll < 0.3), "Y")
         .otherwise("N")
     )
+    df = df.select("id", cot, state, city.alias("__city"), is_chain.alias("is_chain"))
+    city, is_chain = F.col("__city"), F.col("is_chain")
     chain = pick_from(seed + 5, CHAINS, i)
-    chain_name = F.when(is_chain == "Y", F.concat(chain, F.lit(" - "), city))
-    name = F.when(is_chain == "Y", F.concat(chain, F.lit(" - "), city)).otherwise(
+    df = df.withColumn(
+        "__chain_name", F.when(is_chain == "Y", F.concat(chain, F.lit(" - "), city))
+    )
+    chain_name = F.col("__chain_name")
+    name = F.when(is_chain == "Y", chain_name).otherwise(
         F.concat(city, F.lit(" "), pick_from(seed + 6, ("Supermarket", "Stores", "Mart", "Traders"), i))
     )
     zip_code = F.concat(
@@ -265,9 +277,9 @@ def generate_stores(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
         .alias("store_address_lane_2"),
         F.substring(city, 1, 25).alias("store_city"),
         zip_code.alias("store_zip"),
-        state.alias("store_state"),
-        cot.alias("store_class_of_trade"),
-        is_chain.alias("is_chain"),
+        state,
+        cot,
+        is_chain,
         F.substring(chain_name, 1, 50).alias("chain_name"),
     )
 
@@ -277,17 +289,27 @@ def generate_stores(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def generate_products(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
-    df = _base(spark, n)
     i = F.col("id")
-    cat = weighted_choice(uniform(seed + 11, i), CATEGORY_WEIGHTS)
+    # values referenced more than once are bound as columns first, so the
+    # plan carries each CASE tree once instead of once per reference
+    # (CollapseProject does not re-inline non-cheap expressions)
+    df = _base(spark, n).select(
+        "id", weighted_choice(uniform(seed + 11, i), CATEGORY_WEIGHTS).alias("category")
+    )
+    cat = F.col("category")
     subcat = F.lit(None).cast("string")
     for c, subs in SUBCATEGORIES.items():
         subcat = F.when(cat == c, pick_from(seed + 12, subs, i)).otherwise(subcat)
     brand = F.concat(F.lit("Brand"), (uniform_int(seed + 13, 1, 90, i)).cast("string"))
+    size = pick_from(seed + 15, ("100g", "250g", "500g", "1kg", "200ml", "500ml", "1L", "XL"), i)
+    df = df.select(
+        "id", "category", subcat.alias("sub_category"), brand.alias("brand"),
+        size.alias("product_size"),
+    )
+    subcat, brand, size = F.col("sub_category"), F.col("brand"), F.col("product_size")
     price = F.lit(None).cast("double")
     for c, (lo, hi) in PRICE_RANGES.items():
         price = F.when(cat == c, uniform_range(seed + 14, lo, hi, i)).otherwise(price)
-    size = pick_from(seed + 15, ("100g", "250g", "500g", "1kg", "200ml", "500ml", "1L", "XL"), i)
     flavour = F.when(
         uniform(seed + 16, i) < 0.5,
         pick_from(seed + 17, ("Classic", "Mint", "Lemon", "Rose", "Chocolate"), i),
@@ -295,11 +317,11 @@ def generate_products(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     return df.select(
         (i + 1).alias("product_id"),
         F.concat(brand, F.lit(" "), subcat, F.lit(" "), size).alias("product_name"),
-        cat.alias("category"),
-        subcat.alias("sub_category"),
-        brand.alias("brand"),
+        cat,
+        subcat,
+        brand,
         flavour.alias("flavour"),
-        size.alias("product_size"),
+        size,
         synthesize_sku(F.lit("PRD"), brand, subcat, i + 1).alias("sku"),
         pick_from(seed + 18, ("LTR", "KG", "G", "ML", "PCS"), i).alias("uom"),
         F.round(price, 2).cast("decimal(12,2)").alias("unit_price"),
@@ -362,26 +384,42 @@ def generate_fact_sales(
     # dimensions — otherwise the resolution inner-joins silently drop rows
     # whose weighted class/category has no members (e.g. no Baby Care
     # products in a tiny catalog) and the 1000-row contract breaks.
-    # Both collects are bounded by the 5/6 configured groups.
-    present_classes = {
-        r[0] for r in stores.select("store_class_of_trade").distinct().collect()
-    }
+    # ONE collect sizes every group and counts the active distributors;
+    # it is bounded by the 5/6 configured groups (+1 row).
+    active = distributors.filter(F.col("active_flag") == "Y")
+    sizes = (
+        stores.select(F.lit("store").alias("__dim"), F.col("store_class_of_trade").alias("__grp"))
+        .unionByName(products.select(F.lit("product").alias("__dim"), F.col("category").alias("__grp")))
+        .unionByName(active.select(F.lit("dist").alias("__dim"), F.lit(None).cast("string").alias("__grp")))
+        .groupBy("__dim", "__grp")
+        .agg(F.count(F.lit(1)).cast("int").alias("__n"))
+        .collect()
+    )
+    class_sizes = {r["__grp"]: r["__n"] for r in sizes if r["__dim"] == "store"}
+    cat_sizes = {r["__grp"]: r["__n"] for r in sizes if r["__dim"] == "product"}
+    n_dists = sum(r["__n"] for r in sizes if r["__dim"] == "dist")
+    present_classes = set(class_sizes)
     if not present_classes:
         raise ValueError("stores dimension is empty")
     class_weights = [
         (c, w) for c, w in STORE_VOLUME_WEIGHTS if c in present_classes
     ] or [(c, 2.0) for c in sorted(present_classes)]
-    present_cats = {r[0] for r in products.select("category").distinct().collect()}
+    present_cats = set(cat_sizes)
     if not present_cats:
         raise ValueError("products dimension is empty")
+
+    # group sizes become literal tables: their broadcasts resolve on the
+    # driver, no aggregation job (the size of a group is the max of its
+    # row_number index below)
+    class_counts = local_df(
+        spark, class_sizes.items(), {"store_class_of_trade": "STRING", "__scount": "INT"}
+    )
+    cat_counts = local_df(spark, cat_sizes.items(), {"category": "STRING", "__pcount": "INT"})
 
     s_idx = Window.partitionBy("store_class_of_trade").orderBy("store_id")
     stores_i = stores.select(
         "store_id", "store_class_of_trade", "is_chain",
         F.row_number().over(s_idx).alias("__sidx"),
-    )
-    class_counts = stores_i.groupBy("store_class_of_trade").agg(
-        F.max("__sidx").alias("__scount")
     )
 
     p_idx = Window.partitionBy("category").orderBy("product_id")
@@ -389,16 +427,15 @@ def generate_fact_sales(
         "product_id", "category", "unit_price",
         F.row_number().over(p_idx).alias("__pidx"),
     )
-    cat_counts = products_i.groupBy("category").agg(F.max("__pidx").alias("__pcount"))
 
     d_idx = Window.orderBy("distributor_id")
-    dists_i = (
-        distributors.filter(F.col("active_flag") == "Y")
-        .select("distributor_id", F.row_number().over(d_idx).alias("__didx"))
-    )
-    n_dists = dists_i.count()
+    dists_i = active.select("distributor_id", F.row_number().over(d_idx).alias("__didx"))
 
-    picked_class = weighted_choice(uniform(seed + 31, i), class_weights)
+    # the class pick feeds every affinity branch: bind it once
+    facts = facts.select(
+        "id", weighted_choice(uniform(seed + 31, i), class_weights).alias("store_class_of_trade")
+    )
+    picked_class = F.col("store_class_of_trade")
     fallback_cats = tuple(sorted(present_cats))
     affinity = pick_from(seed + 32, fallback_cats, i)
     for cls, cats in CLASS_AFFINITY.items():
@@ -408,7 +445,7 @@ def generate_fact_sales(
 
     fact_seeds = facts.select(
         i.alias("__fid"),
-        picked_class.alias("store_class_of_trade"),
+        picked_class,
         affinity.alias("category"),
         uniform(seed + 33, i).alias("__sroll"),
         uniform(seed + 34, i).alias("__proll"),
@@ -447,22 +484,34 @@ def generate_fact_sales(
     )
     qty = F.greatest((base_qty * bulk * weekend * seasonal).cast("long"), F.lit(1))
 
-    price = F.col("unit_price").cast("decimal(10,2)")
+    # qty, gross and discount each feed several outputs: bind each as a
+    # column once (one Project level apiece) so the plan carries every
+    # CASE tree once rather than inlined per reference
+    priced = resolved.select(
+        "__fid", "store_id", "product_id", "distributor_id",
+        "store_class_of_trade", "is_chain",
+        qty.alias("quantity_sold"),
+        F.col("unit_price").cast("decimal(10,2)").alias("unit_price"),
+    )
+    qty, price = F.col("quantity_sold"), F.col("unit_price")
     gross = F.round(qty.cast("decimal(12,2)") * price, 2).cast("decimal(12,2)")
+    priced = priced.withColumn("gross_amount", gross)
+    gross = F.col("gross_amount")
     rate = tiered_discount_rate(
         gross, F.col("store_class_of_trade"), F.col("is_chain")
     ).cast("decimal(4,2)")
-    discount = F.round(gross * rate, 2).cast("decimal(10,2)")
+    priced = priced.withColumn("discount_amount", F.round(gross * rate, 2).cast("decimal(10,2)"))
+    discount = F.col("discount_amount")
 
-    return resolved.select(
+    return priced.select(
         (fid + 1 + start_sales_id).alias("sales_id"),
         F.lit(date_id).cast("int").alias("date_id"),
         "store_id",
         "product_id",
         "distributor_id",
-        qty.alias("quantity_sold"),
-        price.alias("unit_price"),
-        gross.alias("gross_amount"),
-        discount.alias("discount_amount"),
+        qty,
+        price,
+        gross,
+        discount,
         (gross - discount).cast("decimal(12,2)").alias("net_amount"),
     )

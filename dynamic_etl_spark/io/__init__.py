@@ -11,6 +11,7 @@ from dynamic_etl_spark.io.sources import (  # noqa: F401
     list_dir_diagnostics,
     read_csv_schema_on_read,
     read_jdbc,
+    read_table,
     resolve_file,
 )
 from dynamic_etl_spark.io.versioned import (  # noqa: F401

@@ -17,6 +17,10 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Committed-schema sidecar written into every unpartitioned parquet table
+#: ``write_staging_swap`` publishes; ``io.sources.read_table`` reads it.
+SCHEMA_SIDECAR = "_schema.json"
+
 
 def _hive_partition_cols(path: str) -> list[str]:
     """Discover the ``k=v`` partition-directory chain under ``path``
@@ -92,7 +96,13 @@ def write_staging_swap(
     is never deleted before the replacement is safely on disk. The backup
     is only removed (a) right before rotating a fresh ``final`` into it,
     at which point the new table already exists in staging, or (b) after
-    a completed swap."""
+    a completed swap.
+
+    Unpartitioned parquet tables also get ``_schema.json`` (the written
+    ``df.schema``) in staging before the rename, so the schema commits
+    atomically with the data and ``io.sources.read_table`` can skip the
+    footer-inference job every plain ``spark.read.parquet`` runs. The
+    ``_`` prefix keeps it out of Spark's file listing."""
     parent = os.path.dirname(os.path.abspath(final_path))
     os.makedirs(parent, exist_ok=True)
     staging = os.path.join(parent, f".staging-{uuid.uuid4().hex}")
@@ -104,6 +114,9 @@ def write_staging_swap(
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.save(staging)
+        if fmt == "parquet" and not partition_by:
+            with open(os.path.join(staging, SCHEMA_SIDECAR), "w") as fh:
+                fh.write(df.schema.json())
         if os.path.exists(final_path):
             # a completed-swap crash can orphan the backup; clear it only
             # NOW (new table safely in staging) — renaming onto a

@@ -25,6 +25,15 @@ context passing: each pipeline's outputs become the next one's initial
 context, so ordering is structural, not temporal. Airflow/cron can
 still own the outer daily schedule.
 
+Each piece of work runs once: a day is bound by its Spark job count,
+not its data, so every fact a step needs comes from the job that
+already computes it. Step row counts are observed on the committing
+write (``Observation``), never re-read; parquet tables are read through
+``io.read_table``, whose committed ``_schema.json`` sidecar replaces a
+footer-inference job per read; the fact load's empty-dim guard reads
+the dim counts the ``load_dim_*`` steps published in the pipeline
+context; each validator gate is one scan (``validate``).
+
 Storage layout under the caller's roots (all commits atomic via
 staging+swap, io/sinks):
 
@@ -40,7 +49,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark import generate as G
@@ -49,6 +58,7 @@ from dynamic_etl_spark.io import (
     SkipRetry,
     latest_file,
     read_csv_schema_on_read,
+    read_table,
     rotate_current_to_archive,
     write_csv,
     write_staging_swap,
@@ -66,7 +76,18 @@ def _table(root: str, name: str) -> str:
 
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
-    return spark.read.parquet(path) if Path(path).exists() else None
+    return read_table(spark, path) if Path(path).exists() else None
+
+
+def _write_counted(df: DataFrame, path: str, where: Column | None = None) -> int:
+    """Commit ``df`` via staging+swap and return the committed row count
+    (only rows matching ``where``, if given), observed by the write job
+    itself — the same number a post-commit re-read would count, without
+    the re-read's two extra jobs."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if where is None else F.count(F.when(where, 1))
+    write_staging_swap(df.observe(obs, n.alias("n")), path)
+    return obs.get["n"]
 
 
 # --------------------------------------------------------------------------
@@ -93,13 +114,12 @@ def generation_pipeline(
     ``NVL(MAX(sales_id),0)`` (fact_sales_daily.py:16-17), the dim_date
     precondition probe (``SystemExit`` there, ``ValueError`` here —
     :22-33), atomic commit, and a post-insert verification count
-    (:228-233) returned as the step output."""
+    (:228-233) returned as the step output — observed on the committed
+    write (the day's rows of ``existing ∪ new``) rather than re-read."""
 
     def _gen_dim(name: str, fn) -> Callable[[dict], int]:
         def step(ctx):
-            df = fn()
-            write_staging_swap(df, _table(source_root, name))
-            return spark.read.parquet(_table(source_root, name)).count()
+            return _write_counted(fn(), _table(source_root, name))
         return step
 
     def gen_date(ctx):
@@ -113,20 +133,27 @@ def generation_pipeline(
             calendar_start or f"{year}-01-01",
             calendar_end or f"{year}-12-31",
         )
-        write_staging_swap(cal, _table(source_root, "dim_date"))
-        return cal.count()
+        return _write_counted(cal, _table(source_root, "dim_date"))
 
     def gen_fact(ctx):
-        cal = spark.read.parquet(_table(source_root, "dim_date"))
-        # precondition probe: today must exist in dim_date
-        if cal.filter(F.col("date_id") == date_id).limit(1).count() == 0:
+        cal = read_table(spark, _table(source_root, "dim_date"))
+        # precondition probe: today must exist in dim_date; the same
+        # one-row probe carries the day's weekend flag
+        today = (
+            cal.filter(F.col("date_id") == date_id)
+            .select(F.col("is_weekend") == "Y")
+            .limit(1)
+            .collect()
+        )
+        if not today:
             raise ValueError(
                 f"generation precondition failed: date_id {date_id} not in "
                 "dim_date (fact_sales_daily.py:22-33 exits here)"
             )
-        stores = spark.read.parquet(_table(source_root, "dim_store"))
-        products = spark.read.parquet(_table(source_root, "dim_product"))
-        dists = spark.read.parquet(_table(source_root, "dim_distributor"))
+        is_weekend = bool(today[0][0])
+        stores = read_table(spark, _table(source_root, "dim_store"))
+        products = read_table(spark, _table(source_root, "dim_product"))
+        dists = read_table(spark, _table(source_root, "dim_distributor"))
         fact_path = _table(source_root, "fact_sales")
         existing = _read_if_exists(spark, fact_path)
         hwm = (
@@ -136,11 +163,6 @@ def generation_pipeline(
                 F.coalesce(F.max("sales_id"), F.lit(0)).alias("m")
             ).collect()[0]["m"]
         )
-        is_weekend = bool(
-            cal.filter(F.col("date_id") == date_id)
-            .select(F.col("is_weekend") == "Y")
-            .collect()[0][0]
-        )
         new = G.generate_fact_sales(
             spark, stores, products, dists,
             date_id=date_id, rows=rows_per_day, seed=seed,
@@ -148,13 +170,8 @@ def generation_pipeline(
             month=(date_id // 100) % 100,
         )
         out = new if existing is None else existing.unionByName(new)
-        write_staging_swap(out, fact_path)
         # post-insert verification aggregate (the reference's step 7)
-        return (
-            spark.read.parquet(fact_path)
-            .filter(F.col("date_id") == date_id)
-            .count()
-        )
+        return _write_counted(out, fact_path, where=F.col("date_id") == date_id)
 
     return Pipeline(
         "retail_daily_generation",
@@ -197,7 +214,7 @@ def extract_pipeline(
     def extract_fact(ctx):
         rotate_current_to_archive(current, archive)
         day = (
-            spark.read.parquet(_table(source_root, "fact_sales"))
+            read_table(spark, _table(source_root, "fact_sales"))
             .filter(F.col("date_id") == date_id)
         )
         out = str(Path(current) / f"fact_sales_{date_id}")
@@ -205,13 +222,13 @@ def extract_pipeline(
         return out
 
     def extract_snapshot(ctx):
-        facts = spark.read.parquet(_table(source_root, "fact_sales")).filter(
+        facts = read_table(spark, _table(source_root, "fact_sales")).filter(
             F.col("date_id") == date_id
         )
-        stores = spark.read.parquet(_table(source_root, "dim_store"))
-        products = spark.read.parquet(_table(source_root, "dim_product"))
-        dists = spark.read.parquet(_table(source_root, "dim_distributor"))
-        cal = spark.read.parquet(_table(source_root, "dim_date"))
+        stores = read_table(spark, _table(source_root, "dim_store"))
+        products = read_table(spark, _table(source_root, "dim_product"))
+        dists = read_table(spark, _table(source_root, "dim_distributor"))
+        cal = read_table(spark, _table(source_root, "dim_date"))
         snap = (
             facts.join(F.broadcast(stores), "store_id")
             .join(F.broadcast(products), "product_id")
@@ -314,7 +331,7 @@ def validation_pipeline(
         return step
 
     def src(name: str):
-        return lambda: spark.read.parquet(_table(source_root, name))
+        return lambda: read_table(spark, _table(source_root, name))
 
     def snapshot_df():
         path = latest_file(
@@ -385,18 +402,20 @@ def dw_load_pipeline(
     lifecycle (scripts2/load_fact_sales_dw.py): oldest-unprocessed file
     via the processed-log queue (:65-77), header canonicalization +
     alias resolution (:98,178-210), empty-dim guard -> leave the file
-    unprocessed for retry (:156-175, U6 SkipRetry), per-row key
+    unprocessed for retry (:156-175, U6 SkipRetry; the dim counts come
+    from the ``load_dim_*`` step outputs in the context), per-row key
     resolution with drop-on-miss (:213-261), numeric cleanse
     (:283-297), fact-grain dedup, SCD-1 MERGE with tolerance 0.01 +
     MAX+1+i surrogates (:299-357), staged swap (:368-423), mark
-    processed (:425), verification count (:428-439)."""
+    processed (:425), verification count (:428-439; observed on the
+    committing write)."""
     current = str(Path(extract_root) / "Current")
     processed_log = str(Path(dw_root) / "processed.log")
     dw_fact = _table(dw_root, "fact_sales_dw")
 
     def _load_dim(name: str, key: str):
         def step(ctx):
-            incoming = spark.read.parquet(_table(source_root, name))
+            incoming = read_table(spark, _table(source_root, name))
             existing = _read_if_exists(spark, _table(dw_root, name))
             if existing is None:
                 merged = incoming
@@ -408,21 +427,21 @@ def dw_load_pipeline(
                     keys=[key],
                     order=["__gen"],
                 ).drop("__gen")
-            write_staging_swap(merged, _table(dw_root, name))
-            return spark.read.parquet(_table(dw_root, name)).count()
+            return _write_counted(merged, _table(dw_root, name))
         return step
 
     def load_fact(ctx):
         queue = FileQueue(current, processed_log, prefix="fact_sales_", suffix="")
         dims = {
-            n: spark.read.parquet(_table(dw_root, n))
+            n: read_table(spark, _table(dw_root, n))
             for n in ("dim_store", "dim_product", "dim_distributor")
         }
 
         def load_one(path):
-            # empty-dim guard: exit without consuming the file (U6)
-            for n, d in dims.items():
-                if d.limit(1).count() == 0:
+            # empty-dim guard: exit without consuming the file (U6); the
+            # load_dim_* steps published each committed dim's row count
+            for n in dims:
+                if ctx[f"load_{n}"] == 0:
                     raise SkipRetry(f"dimension {n} is empty; retry next run")
             raw = read_csv_schema_on_read(spark, path, sep=",")
             resolved = resolve_aliases(
@@ -453,12 +472,14 @@ def dw_load_pipeline(
                 .join(dims["dim_product"].select("product_id"), "product_id", "left_semi")
                 .join(dims["dim_distributor"].select("distributor_id"), "distributor_id", "left_semi")
             )
+            # the resolved batch feeds both the probe and the merge:
+            # materialize it once (shared-intermediate rule)
             typed = dedup_keep_last(
                 typed,
                 keys=["date_id", "store_id", "product_id", "distributor_id"],
                 order=["sales_id"],
-            )
-            if typed.limit(1).count() == 0:
+            ).localCheckpoint()
+            if typed.isEmpty():
                 raise SkipRetry("no rows survived key resolution")
             existing = _read_if_exists(spark, dw_fact)
             if existing is None:
@@ -471,8 +492,7 @@ def dw_load_pipeline(
                 exact_cols=["quantity_sold"],
                 tolerance_cols=["net_amount"],
             ).drop("operation")
-            write_staging_swap(merged, dw_fact)
-            return spark.read.parquet(dw_fact).count()
+            return _write_counted(merged, dw_fact)
 
         return queue.process_next(load_one)
 

@@ -24,12 +24,34 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _env_conf() -> dict[str, str]:
+    """Scale-dependent overrides without code edits (e.g. shuffle codec,
+    join-strategy preference, advisory partition size on a real
+    cluster): ``SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"``. Pairs split on
+    ``;``, so a value cannot contain ``;``. A pair without ``=`` or with
+    an empty key raises instead of silently setting an empty conf."""
+    conf = {}
+    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
+    for pair in filter(None, (p.strip() for p in env_conf.split(";"))):
+        key, sep, value = pair.partition("=")
+        if not sep or not key.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF: malformed pair {pair!r} "
+                "(expected key=value; pairs are separated by ';')"
+            )
+        conf[key.strip()] = value.strip()
+    return conf
+
+
 def get_spark(
     app_name: str = "dynamic-etl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    # parsed first: a malformed pair must fail before any builder state
+    # (shared across builders in PySpark) is touched
+    env_conf = _env_conf()
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or int(
@@ -51,17 +73,11 @@ def get_spark(
         # has no native type for; read as long and convert in the catalog.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for key, value in (extra_conf or {}).items():
-        builder = builder.config(key, value)
-    # Scale-dependent overrides without code edits (e.g. shuffle codec,
-    # join-strategy preference, advisory partition size on a real
-    # cluster): `SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2"`. Local defaults
+    # environment overrides (see _env_conf) apply last. Local defaults
     # stay exactly as above so bench numbers remain driver-comparable;
     # production values belong in the deployment environment.
-    env_conf = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for pair in filter(None, (p.strip() for p in env_conf.split(";"))):
-        key, _, value = pair.partition("=")
-        builder = builder.config(key.strip(), value.strip())
+    for key, value in {**(extra_conf or {}), **env_conf}.items():
+        builder = builder.config(key, value)
     spark = builder.getOrCreate()
     # getOrCreate silently ignores builder configs when a session already
     # exists in the process. The runtime-settable invariants (UTC timezone is

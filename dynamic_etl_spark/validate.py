@@ -3,10 +3,12 @@
 The reference is a dual-mode CLI (scripts/validate_table.py, 438 LoC) that
 raises on the first failing gate and issues one SQL query per check per
 column. Here a single declarative spec produces a pass/fail REPORT
-DataFrame, and all per-column counts are computed in ONE aggregate pass
-over the table (the A8 trick) plus one groupBy for PK uniqueness — two
-jobs total regardless of how many checks are configured, which is the
-shape you want when the table is 100 TB.
+DataFrame, and every count — per-column checks and PK uniqueness alike —
+comes from ONE scan of the table (the A8 trick): without a PK gate a
+single global aggregate; with one, a ``groupBy(pk)`` carrying per-key
+partial counters, then one global fold that sums them and the members
+of duplicated keys. One action regardless of how many checks are
+configured, which is the shape you want when the table is 100 TB.
 """
 
 from __future__ import annotations
@@ -101,31 +103,53 @@ def validate(spark: SparkSession, df: DataFrame, spec: ValidationSpec) -> DataFr
     """
     present = set(df.columns)
     rows: list[tuple] = []
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__n")]
+    #: counter name -> predicate; every counter counts the rows matching it
+    counters: dict[str, Column] = {}
 
     for c in spec.mandatory_columns:
         if c in present:
-            aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"null__{c}"))
+            counters[f"null__{c}"] = F.col(c).isNull()
     for c in spec.numeric_columns:
         if c in present:
             raw = F.col(c).cast("string")
             parsed = validator_numeric_clean(raw)
             blank = raw.isNull() | (F.trim(raw) == "")
-            aggs.append(F.count(F.when(~blank & parsed.isNull(), 1)).alias(f"num__{c}"))
+            counters[f"num__{c}"] = ~blank & parsed.isNull()
     for c in spec.flag_columns:
         if c in present:
             up = F.upper(F.trim(F.col(c)))
-            bad = F.col(c).isNull() | ~up.isin("Y", "N")
-            aggs.append(F.count(F.when(bad, 1)).alias(f"flag__{c}"))
+            counters[f"flag__{c}"] = F.col(c).isNull() | ~up.isin("Y", "N")
     for i, rule in enumerate(spec.cross_column):
         if all(c in present for c in rule.columns):
-            bad = rule.when & ~F.coalesce(rule.then, F.lit(False))
-            aggs.append(F.count(F.when(bad, 1)).alias(f"cc__{i}"))
+            counters[f"cc__{i}"] = rule.when & ~F.coalesce(rule.then, F.lit(False))
     if spec.freshness is not None and spec.freshness[0] in present:
         fcol, fval = spec.freshness
-        aggs.append(F.count(F.when(F.col(fcol) == fval, 1)).alias("__fresh"))
+        counters["__fresh"] = F.col(fcol) == fval
 
-    stats = df.agg(*aggs).collect()[0].asDict()
+    # positional aliases: counter names embed user column names, which
+    # may not be valid unquoted column references
+    aliases = ["__n", *(f"__k{j}" for j in range(len(counters)))]
+    counts = [F.count(F.lit(1)).alias("__n")] + [
+        F.count(F.when(cond, 1)).alias(a) for a, cond in zip(aliases[1:], counters.values())
+    ]
+    pk_present = spec.pk_column is not None and spec.pk_column in present
+    if pk_present:
+        # per-key partial counters, then one fold: sum the partials and
+        # the members of every duplicated key (keep=False; a NULL key is
+        # a group like any other). coalesce: an empty table has no keys.
+        dup = F.when(F.col("__n") > 1, F.col("__n"))
+        out = (
+            df.groupBy(spec.pk_column)
+            .agg(*counts)
+            .agg(
+                *[F.coalesce(F.sum(a), F.lit(0)).alias(a) for a in aliases],
+                F.coalesce(F.sum(dup), F.lit(0)).alias("__dup"),
+            )
+        )
+    else:
+        out = df.agg(*counts)
+    row = out.collect()[0]
+    stats = {name: row[a] for name, a in zip(["__n", *counters], aliases)}
     n = int(stats["__n"])
 
     rows.append(("min_rows", None, _status(n >= spec.min_rows), n, spec.min_rows))
@@ -155,15 +179,9 @@ def validate(spark: SparkSession, df: DataFrame, spec: ValidationSpec) -> DataFr
         bad = int(stats[f"cc__{i}"])
         rows.append(("cross_column", rule.name, _status(bad == 0), bad, 0))
 
-    if spec.pk_column is not None and spec.pk_column in present:
-        dup_members = (
-            df.groupBy(spec.pk_column)
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .filter(F.col("__c") > 1)
-            .agg(F.coalesce(F.sum("__c"), F.lit(0)).alias("__d"))
-            .collect()[0]["__d"]
-        )
-        rows.append(("pk_unique", spec.pk_column, _status(dup_members == 0), int(dup_members), 0))
+    if pk_present:
+        dup_members = int(row["__dup"])
+        rows.append(("pk_unique", spec.pk_column, _status(dup_members == 0), dup_members, 0))
     elif spec.pk_column is not None:
         rows.append(("pk_unique", spec.pk_column, "FAIL", None, None))
 

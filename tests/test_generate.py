@@ -182,3 +182,73 @@ def test_generation_is_partitioning_independent(spark):
     finally:
         gen._base = orig
     assert sorted(map(repr, a.collect())) == sorted(map(repr, b.collect()))
+
+
+# Order-insensitive row digests of the generators' output, captured from
+# the plain (un-rebound) expression trees: (schema, rows, sum over rows of
+# xxhash64(to_json(row))). Any change to a generator's expressions must
+# keep these bit-identical — to_json names every field, so a value moving
+# between columns or a NULL appearing changes the digest too.
+_GOLDEN_DIMS = {
+    "stores": (
+        "struct<store_id:bigint,store_name:string,store_address_lane_1:string,"
+        "store_address_lane_2:string,store_city:string,store_zip:string,"
+        "store_state:string,store_class_of_trade:string,is_chain:string,"
+        "chain_name:string>",
+        1000, 66520226396702727358,
+    ),
+    "products": (
+        "struct<product_id:bigint,product_name:string,category:string,"
+        "sub_category:string,brand:string,flavour:string,product_size:string,"
+        "sku:string,uom:string,unit_price:decimal(12,2),business_stage:string>",
+        1000, 59581175796097385593,
+    ),
+    "distributors": (
+        "struct<distributor_id:bigint,distributor_name:string,"
+        "distributor_type:string,city:string,state:string,"
+        "onboarding_date:date,active_flag:string>",
+        1000, -276459417450853876448,
+    ),
+}
+_FACT_SCHEMA = (
+    "struct<sales_id:bigint,date_id:int,store_id:bigint,product_id:bigint,"
+    "distributor_id:bigint,quantity_sold:bigint,unit_price:decimal(10,2),"
+    "gross_amount:decimal(12,2),discount_amount:decimal(10,2),"
+    "net_amount:decimal(12,2)>"
+)
+_GOLDEN_FACTS = {
+    # a plain March weekday, and a November weekend (every qty multiplier)
+    (20240301, False, 3): -203383009963076920333,
+    (20241109, True, 11): 82707040965054841518,
+}
+
+
+def _row_digest(df) -> tuple[str, int, int]:
+    h = F.xxhash64(F.to_json(F.struct(*df.columns)))
+    n, s = df.agg(F.count(F.lit(1)), F.sum(h.cast("decimal(38,0)"))).first()
+    return df.schema.simpleString(), n, int(s)
+
+
+@pytest.fixture(scope="module")
+def golden_dims(spark):
+    return {
+        "stores": G.generate_stores(spark, 1000, 1),
+        "products": G.generate_products(spark, 1000, 1),
+        "distributors": G.generate_distributors(spark, 1000, 1),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_GOLDEN_DIMS))
+def test_dimension_generators_match_golden_digest(golden_dims, name):
+    assert _row_digest(golden_dims[name]) == _GOLDEN_DIMS[name]
+
+
+@pytest.mark.parametrize("date_id,is_weekend,month", sorted(_GOLDEN_FACTS))
+def test_fact_generator_matches_golden_digest(spark, golden_dims, date_id, is_weekend, month):
+    facts = G.generate_fact_sales(
+        spark, golden_dims["stores"], golden_dims["products"],
+        golden_dims["distributors"], date_id=date_id, rows=20_000, seed=1,
+        start_sales_id=7, is_weekend=is_weekend, month=month,
+    )
+    expected = (_FACT_SCHEMA, 20_000, _GOLDEN_FACTS[(date_id, is_weekend, month)])
+    assert _row_digest(facts) == expected

@@ -406,3 +406,87 @@ def test_orc_round_trip_and_pushdown(spark, scratch):
     assert back.count() == df.filter(F.col("id") % 7 == 3).count()
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters: [" in plan and "k" in plan.split("PushedFilters")[1][:80]
+
+
+def _sidecar(path) -> str:
+    return os.path.join(str(path), "_schema.json")
+
+
+def test_read_table_sidecar_matches_inference_for_every_retail_table(spark, scratch):
+    """Every table a retail day commits carries a ``_schema.json`` that
+    reads back as exactly the schema footer inference would find — and
+    reading through it schedules no Spark job."""
+    from dynamic_etl_spark.io import read_table
+    from dynamic_etl_spark.pipelines import retail_daily_run
+
+    retail_daily_run(
+        spark, str(scratch), date_id=20240617,
+        n_stores=5, n_products=10, n_distributors=5, rows_per_day=30,
+    )
+    tables = [
+        scratch / "source" / n
+        for n in ("dim_store", "dim_product", "dim_distributor", "dim_date", "fact_sales")
+    ] + [
+        scratch / "dw" / n
+        for n in ("dim_store", "dim_product", "dim_distributor", "dim_date", "fact_sales_dw")
+    ]
+    sc = spark.sparkContext
+    for path in map(str, tables):
+        assert os.path.isfile(_sidecar(path)), path
+        sc.setJobGroup("read-table-sidecar", "read-table-sidecar")
+        try:
+            df = read_table(spark, path)
+        finally:
+            sc.setJobGroup(None, None)
+        assert not sc.statusTracker().getJobIdsForGroup("read-table-sidecar"), path
+        assert df.schema == spark.read.parquet(path).schema, path
+        assert df.count() == spark.read.parquet(path).count()
+
+
+def test_read_table_without_sidecar_falls_back_to_inference(spark, scratch):
+    from dynamic_etl_spark.io import read_table
+
+    path = str(scratch / "foreign")
+    spark.range(4).withColumn("v", F.lit("x")).write.parquet(path)
+    assert not os.path.exists(_sidecar(path))
+    df = read_table(spark, path)
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3]
+
+
+def test_failed_swap_keeps_old_table_and_sidecar(spark, scratch):
+    from pyspark.sql import types as T
+
+    from dynamic_etl_spark.io import read_table
+
+    final = str(scratch / "kept")
+    write_staging_swap(spark.range(5).withColumn("v", F.lit("good")), final)
+    with open(_sidecar(final)) as fh:
+        before = fh.read()
+
+    def boom(_it):
+        raise RuntimeError("writer died")
+        yield
+
+    schema = T.StructType([T.StructField("other", T.StringType())])
+    with pytest.raises(Exception):
+        write_staging_swap(spark.range(1).mapInPandas(boom, schema), final)
+    with open(_sidecar(final)) as fh:
+        assert fh.read() == before
+    kept = read_table(spark, final)
+    assert kept.columns == ["id", "v"] and kept.count() == 5
+    assert not [n for n in os.listdir(scratch) if n.startswith(".staging")]
+
+
+def test_compact_table_writes_a_correct_sidecar(spark, scratch):
+    from dynamic_etl_spark.io import read_table
+    from dynamic_etl_spark.io.sinks import compact_table
+
+    path = str(scratch / "fragmented")
+    spark.range(1_000).selectExpr("id", "CAST(id % 7 AS INT) AS k").repartition(6) \
+        .write.parquet(path)
+    assert not os.path.exists(_sidecar(path))
+    assert compact_table(spark, path, target_file_bytes=1 << 30) == 1
+    assert os.path.isfile(_sidecar(path))
+    assert read_table(spark, path).schema == spark.read.parquet(path).schema
+    assert read_table(spark, path).count() == 1_000

@@ -199,3 +199,57 @@ def test_meter_detects_an_extra_checkpoint(spark):
         f"extra checkpoint did not move the job count ({mutated_jobs} vs "
         f"{plain}) — the meter is blind"
     )
+
+
+#: Per-DAG job budgets for one fixture-sized retail day on a fresh root
+#: (measured + 1). Every fact the day needs — a table's schema, a
+#: written row count, an emptiness probe, a PK check — comes from the
+#: job that already computes it: parquet reads take the committed
+#: ``_schema.json`` sidecar instead of a footer-inference job, step
+#: counts come from write-side observations instead of a read-back,
+#: ``validate()`` folds the PK check into its one scan, the fact load
+#: reads dim emptiness from the pipeline context, and the fact generator
+#: sizes all its dimension groups in one collect. Before that the same
+#: day ran 43/20/33/46 jobs (here and at the benchmark's 20k-row size
+#: alike); now 17/14/18/14. One extra eager action anywhere trips this.
+RETAIL_DAY_JOB_BUDGETS = {
+    "generation": 18,
+    "extract": 15,
+    "validation": 19,
+    "dw_load": 15,
+}
+
+
+def test_retail_day_job_budget(spark, tmp_path):
+    from dynamic_etl_spark.pipelines import retail as R
+
+    src, ext, dw = (str(tmp_path / p) for p in ("source", "extract", "dw"))
+    date_id = 20240617
+    dags = {
+        "generation": lambda: R.generation_pipeline(
+            spark, src, date_id=date_id, n_stores=20, n_products=30,
+            n_distributors=10, rows_per_day=200,
+        ),
+        "extract": lambda: R.extract_pipeline(spark, src, ext, date_id=date_id),
+        "validation": lambda: R.validation_pipeline(
+            spark, src, ext, date_id=date_id, min_dim_rows=1, min_date_rows=1,
+            min_fact_rows=1,
+        ),
+        "dw_load": lambda: R.dw_load_pipeline(spark, src, ext, dw),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for dag, factory in dags.items():
+        group = f"job-budget-retail-{dag}-{next(_group_seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            factory().run()
+        finally:
+            sc.setJobGroup(None, None)
+        jobs[dag] = len(sc.statusTracker().getJobIdsForGroup(group))
+    over = {d: (n, RETAIL_DAY_JOB_BUDGETS[d]) for d, n in jobs.items()
+            if n > RETAIL_DAY_JOB_BUDGETS[d]}
+    assert not over, (
+        f"retail DAG(s) over their job budget (spent, budget): {over} — an "
+        f"extra eager action crept into the day; review it before raising"
+    )

@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.pipelines import (
-
     dw_load_pipeline,
     extract_pipeline,
     generation_pipeline,
@@ -185,3 +184,34 @@ def test_dw_load_skips_when_no_file(spark, scratch):
     assert result.outputs["load_fact_sales"] == (None, None)
     # dims still refreshed
     assert result.outputs["load_dim_store"] == 5
+
+
+def test_dw_load_empty_dim_defers_file_then_retries(spark, scratch):
+    """The fact loader's empty-dim guard (U6 SkipRetry, reference
+    load_fact_sales_dw.py:156-175): an empty dimension leaves the day's
+    file queued — reported as SKIPPED, not marked in the ledger — and
+    the next run, with the dimension back, consumes it."""
+    from dynamic_etl_spark.io import write_staging_swap
+    from dynamic_etl_spark.io.queue import SKIPPED
+
+    src, ext, dw = (str(scratch / p) for p in ("source", "extract", "dw"))
+    generation_pipeline(
+        spark, src, date_id=20240617,
+        n_stores=5, n_products=10, n_distributors=5, rows_per_day=20,
+    ).run()
+    extract_pipeline(spark, src, ext, date_id=20240617).run()
+    stores_path = str(scratch / "source" / "dim_store")
+    stores = spark.read.parquet(stores_path).localCheckpoint()
+    write_staging_swap(stores.limit(0), stores_path)
+
+    result = dw_load_pipeline(spark, src, ext, dw).run()
+    assert result.outputs["load_dim_store"] == 0
+    assert result.outputs["load_fact_sales"] == ("fact_sales_20240617", SKIPPED)
+    assert not (scratch / "dw" / "fact_sales_dw").exists()
+    ledger = scratch / "dw" / "processed.log"
+    assert not ledger.exists() or "fact_sales_20240617" not in ledger.read_text()
+
+    write_staging_swap(stores, stores_path)
+    name, rows = dw_load_pipeline(spark, src, ext, dw).run().outputs["load_fact_sales"]
+    assert name == "fact_sales_20240617" and rows > 0
+    assert "fact_sales_20240617" in ledger.read_text()

@@ -286,3 +286,30 @@ def test_ks_autogrid_excludes_infinities(spark, tmp_path):
     assert (row["n_before"], row["n_after"]) == (10, 10)
     assert row["n_bins"] > 1
     assert 0.0 < row["ks_statistic"] < 1.0
+
+
+def _pk_row(spark, rows):
+    df = spark.createDataFrame(rows, "k long, v string")
+    report = validate(spark, df, ValidationSpec(min_rows=0, pk_column="k"))
+    [row] = [r for r in report.collect() if r["check_name"] == "pk_unique"]
+    return row["status"], row["observed"], row["threshold"]
+
+
+def test_pk_unique_observed_counts_every_member_of_duplicated_groups(spark):
+    """V6 keep=False semantics: ``observed`` is the number of ROWS in
+    duplicated key groups (not the number of groups, not the surplus).
+    A NULL key is a key like any other: two NULLs are a duplicated
+    group, a lone NULL is not; an empty table has no duplicates."""
+    # groups 1 (x2) and 2 (x3) are duplicated, 3 is unique -> 5 members
+    assert _pk_row(spark, [(1, "a"), (1, "b"), (2, "c"), (2, "d"), (2, "e"), (3, "f")]) == (
+        "FAIL", 5, 0,
+    )
+    # a duplicated NULL-key group counts its members too
+    assert _pk_row(spark, [(None, "a"), (None, "b"), (1, "c")]) == ("FAIL", 2, 0)
+    # a single NULL key is not a duplicate
+    assert _pk_row(spark, [(None, "a"), (1, "b"), (2, "c")]) == ("PASS", 0, 0)
+    # NULL group and value groups together
+    assert _pk_row(spark, [(None, "a"), (None, "b"), (None, "c"), (4, "d"), (4, "e")]) == (
+        "FAIL", 5, 0,
+    )
+    assert _pk_row(spark, []) == ("PASS", 0, 0)
