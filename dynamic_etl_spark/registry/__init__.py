@@ -28,109 +28,111 @@ from dynamic_etl_spark.registry.core import Query, QueryRegistry
 #: checked in tests/test_llm.py) go last.
 DRIVER_WINDOW = 50
 
-#: Positions 1-50 — the r14 rotation (VERDICT r13 #1 + the hygiene
-#: tripwire's due list): ALL 33 due re-confirmations (latest driver
-#: green r10 — the exact list the tripwire computed when
-#: CORRECTNESS_r13.json landed), then the six surfaces VERDICT r13
-#: ordered back into the window because r13 re-planned them without a
-#: driver re-earn (cascade tier-5 BLAS swap, concurrent margin fits,
-#: md5 LSH twin, DSIR admission forms), then the four r13-green
-#: surfaces this round's tier-2/tier-3/job-count work re-plans again,
-#: then 7 r11-era refreshes to keep the re-confirmation debt level.
+#: Positions 1-50 — the rotation that followed CORRECTNESS_r14.json:
+#: ALL 38 due re-confirmations (latest green r11 — the exact list
+#: the hygiene tripwire computes from the checked-in ledger), then the
+#: four composed curation-gate queries, re-planned onto the one
+#: shared gate (ops/curation_gate), then the three generators the
+#: retail job-count work re-planned after their r14 green, then 5
+#: r12-era refreshes to keep the re-confirmation debt level.
 #: The stale-ledger CI property (tests/test_oracle_parity.py) computes
 #: this window's obligations from the checked-in CORRECTNESS_r*.json.
 _WINDOW_ORDER = (
-    # ---- ALL 33 due re-confirmations (latest green r10) ----
-    "benchmark_decontamination",
-    "benchmark_span_scrub",
-    "bm25_topk_retrieval",
-    "change_detection_classification",
-    "clean_product_feed",
-    "clean_store_feed",
-    "coercion_failure_profile",
-    "count_min_maintenance",
-    "date_gap_fill_incremental",
-    "dedup_impact_forecast",
-    "dedup_survivors",
-    "document_gram_exposure",
-    "drop_unresolved_keys",
-    "duplicate_detection",
-    "duplicated_span_removal",
-    "events_asof_last_purchase",
-    "events_compaction_plan",
-    "events_hourly_heatmap",
-    "events_range_interval_join",
+    # ---- ALL 38 due re-confirmations (latest green r11) ----
+    "alias_header_resolution",
+    "bpe_encode_stats",
+    "bpe_fertility_by_lang",
+    "bpe_merge_training",
+    "c4_quality_gates",
+    "clean_distributor_feed",
+    "corpus_stratified_sample",
+    "cube_order_totals",
+    "customer_order_sequence",
+    "date_backfill_initial",
+    "embedding_mmr_select",
+    "embedding_mmr_select_pooled",
+    "embedding_topk_vectorized",
+    "events_ks_drift",
+    "events_ks_drift_binned",
+    "events_tumbling_window",
+    "events_value_trend",
+    "fallback_key_resolution",
+    "generator_fact_day",
+    "gopher_repetition_gates",
+    "knn_label_vote",
+    "ks_drift_maintenance",
+    "language_id_profile",
+    "leakage_safe_split",
+    "length_bucketed_batching",
+    "pii_detect_redact",
+    "pricing_summary",
+    "quasi_identifier_risk",
+    "rollup_slice_rebuild",
+    "scan_projection_filter",
+    "scd1_merge_orders",
+    "scd2_merge_customers",
+    "sequence_packing",
+    "source_diversity_profile",
+    "split_leakage_audit",
+    "surrogate_key_assignment",
+    "text_stats_profile",
+    "validation_report",
+    # ---- re-planned onto the shared curation gate ----
+    "incremental_curation_admission",
+    "incremental_curation_admission_steady",
+    "incremental_curation_admission_dsir",
+    "incremental_curation_admission_dsir_steady",
+    # ---- re-planned by the retail job-count work since r14 ----
     "generator_distributors",
     "generator_products",
     "generator_stores",
-    "grouping_sets_order_totals",
-    "hashed_linear_quality_score",
-    "heavy_hitter_maintenance",
-    "mini_dim_upsert",
-    "nation_segment_listagg",
-    "null_count_profile",
-    "rank_sketch_finalize_exact",
-    "rollup_totals",
-    "salted_skew_join",
-    "value_anomaly_mad",
-    "value_outlier_gate",
-    # ---- VERDICT r13 #1: r13-replanned surfaces needing re-earn ----
-    "curation_pipeline_accounting",
-    "curation_pipeline_lsh",
-    "embedding_margin_alignment",
-    "minhash_near_dup_exacthash",
-    "incremental_curation_admission_dsir",
-    "incremental_curation_admission_dsir_steady",
-    # ---- r13-green surfaces re-planned again by this round's work ----
-    "incremental_curation_admission",
-    "incremental_curation_admission_steady",
-    "incremental_near_dup_exacthash",
-    "incremental_semantic_dedup",
-    # ---- 7 r11-era refreshes (oldest-green debt reduction) ----
-    "hybrid_rrf_retrieval",
-    "semantic_decontamination",
-    "semantic_decontamination_vectorized",
-    "near_dup_components",
-    "ngram_jaccard_similarity",
-    "line_dedup_profile",
-    "multimodal_feature_extract",
+    # ---- 5 r12-era refreshes (oldest-green debt reduction) ----
+    "curated_corpus_retrieval",
+    "dedup_survivors_best_quality",
+    "dsir_importance_selection",
+    "fk_integrity_report",
+    "scd2_point_in_time_lookup",
 )
 
 #: Rotated out after earning their driver-green; the local pytest
 #: parity harness still hash-checks each against the same oracle every
 #: run. Alphabetical — position past 50 carries no signal.
 _ROTATED_OUT = (
-    "alias_header_resolution",
     "approx_distinct_exacthash",
+    "benchmark_decontamination",
     "benchmark_decontamination_bloom",
+    "benchmark_span_scrub",
     "bigram_novelty_profile",
     "bigram_perplexity_profile",
-    "bpe_encode_stats",
-    "bpe_fertility_by_lang",
-    "bpe_merge_training",
-    "c4_quality_gates",
-    "clean_distributor_feed",
+    "bm25_topk_retrieval",
+    "change_detection_classification",
+    "clean_product_feed",
+    "clean_store_feed",
+    "coercion_failure_profile",
     "corpus_mixture_sample",
     "corpus_split_assignment",
-    "corpus_stratified_sample",
-    "cube_order_totals",
-    "curated_corpus_retrieval",
-    "customer_order_sequence",
+    "count_min_maintenance",
+    "curation_pipeline_accounting",
+    "curation_pipeline_lsh",
     "customer_rfm_segmentation",
     "customers_with_orders",
     "customers_without_orders",
-    "date_backfill_initial",
     "date_dimension_build",
+    "date_gap_fill_incremental",
     "date_key_lookup",
+    "dedup_impact_forecast",
     "dedup_keep_first_line",
     "dedup_keep_last_line",
     "dedup_keep_last_line_agg",
-    "dedup_survivors_best_quality",
+    "dedup_survivors",
     "distinct_profile",
     "distinct_sketch_maintenance_exacthash",
     "document_chunking",
-    "dsir_importance_selection",
+    "document_gram_exposure",
+    "drop_unresolved_keys",
+    "duplicate_detection",
     "duplicate_group_members",
+    "duplicated_span_removal",
     "embedding_ann_ivf_exacthash",
     "embedding_ann_lsh_exacthash",
     "embedding_density_exacthash",
@@ -139,23 +141,23 @@ _ROTATED_OUT = (
     "embedding_jl_projection",
     "embedding_knn_join_exacthash",
     "embedding_label_centroids",
-    "embedding_mmr_select",
-    "embedding_mmr_select_pooled",
+    "embedding_margin_alignment",
     "embedding_near_dup",
     "embedding_topk_bruteforce",
-    "embedding_topk_vectorized",
     "encoding_repair_profile",
+    "events_asof_last_purchase",
+    "events_compaction_plan",
     "events_equidepth_deciles",
     "events_fill_forward",
     "events_funnel_conversion",
+    "events_hourly_heatmap",
     "events_hourly_resample",
     "events_interarrival_profile",
     "events_json_extract",
     "events_key_skew_profile",
-    "events_ks_drift",
     "events_ks_drift_autogrid",
-    "events_ks_drift_binned",
     "events_minmax_scaled",
+    "events_range_interval_join",
     "events_rate_profile",
     "events_retention_cohorts",
     "events_rolling_distinct_users",
@@ -163,71 +165,67 @@ _ROTATED_OUT = (
     "events_sessionization",
     "events_sliding_window",
     "events_transition_matrix",
-    "events_tumbling_window",
     "events_type_drift_profile",
     "events_type_pagerank_exacthash",
     "events_type_pivot",
     "events_type_unpivot",
     "events_value_histogram",
     "events_value_percentiles",
-    "events_value_trend",
     "events_value_zscore",
     "events_zorder_tiles",
     "exact_dedup_fingerprint",
-    "fallback_key_resolution",
-    "fk_integrity_report",
     "fk_orphan_attribution",
     "flagship_star_join",
     "freshness_watermark",
     "fuzzy_brand_match",
-    "generator_fact_day",
-    "gopher_repetition_gates",
+    "grouping_sets_order_totals",
+    "hashed_linear_quality_score",
+    "heavy_hitter_maintenance",
     "high_water_mark",
+    "hybrid_rrf_retrieval",
+    "incremental_near_dup_exacthash",
     "incremental_rollup_maintenance",
+    "incremental_semantic_dedup",
     "insert_only_merge",
-    "knn_label_vote",
-    "ks_drift_maintenance",
-    "language_id_profile",
     "latest_order_per_customer",
-    "leakage_safe_split",
-    "length_bucketed_batching",
+    "line_dedup_profile",
     "markup_strip_clean",
+    "minhash_near_dup_exacthash",
+    "mini_dim_upsert",
+    "multimodal_feature_extract",
     "nation_key_set_ops",
+    "nation_segment_listagg",
     "natural_key_concat",
+    "near_dup_components",
+    "ngram_jaccard_similarity",
+    "null_count_profile",
     "numeric_profile",
     "order_price_distribution_ranks",
     "orders_above_customer_avg",
     "orders_snapshot_diff",
-    "pii_detect_redact",
     "pmi_collocations_top",
     "point_and_flag_filter",
-    "pricing_summary",
     "quality_rank_calibration",
     "quantile_hist_maintenance",
-    "quasi_identifier_risk",
+    "rank_sketch_finalize_exact",
     "reservoir_sample_maintenance",
-    "rollup_slice_rebuild",
-    "scan_projection_filter",
-    "scd1_merge_orders",
-    "scd2_merge_customers",
-    "scd2_point_in_time_lookup",
+    "rollup_totals",
+    "salted_skew_join",
+    "semantic_decontamination",
+    "semantic_decontamination_vectorized",
     "semantic_dedup_survivors",
-    "sequence_packing",
     "shard_assignment_profile",
     "simhash_near_dup_exacthash",
     "snowflake_extraction",
     "source_concentration_profile",
-    "source_diversity_profile",
     "source_quota_cap",
-    "split_leakage_audit",
-    "surrogate_key_assignment",
-    "text_stats_profile",
     "tfidf_top_terms",
     "tiered_discount_pricing",
     "top_part_types",
     "url_canonical_dedup",
     "url_filter_profile",
-    "validation_report",
+    "value_anomaly_mad",
+    "value_outlier_gate",
     "vocabulary_build",
     "winnowing_fingerprint",
     "winnowing_overlap_pairs",

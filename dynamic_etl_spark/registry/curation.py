@@ -1467,134 +1467,57 @@ def _run_curation_gate(
     state: dict | None = None,
     dsir_min_lw: str | None = None,
 ) -> DataFrame:
-    """The shared tier composition behind the composed-gate queries:
-    exact -> lexical -> semantic admission with per-doc attribution,
-    plus (``dsir_min_lw`` set) an optional FOURTH tier — DSIR
-    quality admission of the semantic survivors against a frozen
-    bucket-ratio table (VERDICT r11 #4: the same frozen-fit pattern as
-    the semantic tier's centers; ``state['dsir_ratios']`` carries the
-    prebuilt table, else it is fit from the corpus inline with target
-    slice ``doc_id % 4 == 0``). ``state`` is the persistent-store
-    bundle a production caller holds between batches (None builds
-    everything from the corpus inline — the bootstrap-pricing form)."""
-    from dynamic_etl_spark.ops import ann as ANN
-    from dynamic_etl_spark.ops import lsh as L
-    from dynamic_etl_spark.ops.text import fingerprint_md5
+    """The composed-gate queries' fixture/state wrapper around
+    ops/curation_gate.curation_gate (exact -> lexical -> semantic
+    [-> DSIR quality with ``dsir_min_lw`` set] admission with per-doc
+    attribution). ``state`` is the :func:`_build_curation_state` bundle
+    a production caller holds between batches; None builds it here —
+    the bootstrap-pricing form — CONCURRENTLY with the batch checkpoint
+    (guide §2.6: independent corpus passes whose wall cost was
+    otherwise their sum). Each batch doc carries its embedding, NULL
+    when it has none, so an embedding-less doc passes the semantic tier
+    through."""
+    from dynamic_etl_spark.ops.curation_gate import curation_gate
     from dynamic_etl_spark.session import run_concurrently
 
-    corpus_docs, corpus_emb, batch_docs, batch_emb = _incremental_curation_fixture(
+    corpus_docs, _, batch_docs, batch_emb = _incremental_curation_fixture(
         spark, sf_dir
     )
+    # attach each batch doc's embedding (NULL when it has none) as a
+    # union + per-doc max rather than a left join: Spark sizes a join as
+    # the PRODUCT of its sides and the checkpointed leaf keeps that
+    # estimate, which would cost every tier join downstream its
+    # broadcast plan (measured +4 jobs per admission at sf0.001). Every
+    # batch doc has text; embedding rows carry NULL text.
+    no_vec = F.lit(None).cast(batch_emb.schema["embedding"].dataType)
+    batch = ensure_fanout_parallelism(
+        batch_docs.withColumn("embedding", no_vec)
+        .unionByName(batch_emb, allowMissingColumns=True)
+        .groupBy("doc_id")
+        .agg(F.max("text").alias("text"), F.max("embedding").alias("embedding"))
+        .filter(F.col("text").isNotNull())
+    )
     if state is None:
-        # Bootstrap form (r13): the corpus-side stores are built fresh
-        # per invocation (this query PRICES bootstrap — memoizing would
-        # be result caching, which the steady sibling exists for), but
-        # they build CONCURRENTLY with each other and with the batch
-        # checkpoint: four independent corpus passes whose wall cost was
-        # previously their sum (guide §2.6). Identical contents to the
-        # lazy inline builds the tiers used to embed — the shared
-        # bootstrap==steady oracle already proves prebuilt-store
-        # admission equals fit-inline admission.
-        state, batch_docs = run_concurrently(
+        state, batch = run_concurrently(
             lambda: _build_curation_state(
                 spark, sf_dir, dsir=dsir_min_lw is not None
             ),
-            lambda: ensure_fanout_parallelism(batch_docs).localCheckpoint(),
+            batch.localCheckpoint,
         )
     else:
-        batch_docs = ensure_fanout_parallelism(batch_docs).localCheckpoint()
-
-    # tier 1 — exact fingerprints vs the store, keep-min within batch
-    store_fp = state.get("store_fp")
-    if store_fp is None:
-        store_fp = corpus_docs.select(
-            fingerprint_md5(F.col("text")).alias("__fp")
-        ).distinct()
-    bfp = batch_docs.select("doc_id", fingerprint_md5(F.col("text")).alias("__fp"))
-    keep1 = (
-        bfp.join(store_fp, "__fp", "left_anti")
-        .groupBy("__fp")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
+        batch = batch.localCheckpoint()
+    out = curation_gate(
+        batch, corpus_docs, id_col="doc_id", text_col="text",
+        vec_col="embedding",
+        fp_set=state["store_fp"],
+        lex_store=state["lex_store"],
+        centers=state["centers"],
+        sem_store=state["emb_store"],
+        dsir_ratios=state["dsir_ratios"] if dsir_min_lw is not None else None,
+        dsir_min_log_weight=dsir_min_lw,
+        hash_mode="md5",
     )
-    s1 = batch_docs.join(keep1, "doc_id", "leftsemi").localCheckpoint()
-
-    # tier 2 — banded MinHash lexical admission over tier-1 survivors
-    out2 = L.incremental_near_dup_merge(
-        corpus_docs, s1, "doc_id", "text", threshold=0.5, hash_mode="md5",
-        existing_banded=state.get("lex_store"),
-    )
-    s2 = out2["accepted"].localCheckpoint()
-
-    # tier 3 — semantic admission over tier-2 survivors' embeddings;
-    # survivors without an embedding pass through
-    s2e = s2.join(batch_emb, "doc_id").select("doc_id", "embedding")
-    out3 = ANN.incremental_semantic_merge(
-        corpus_emb, s2e, "doc_id", "embedding",
-        threshold=0.95, n_cells=8, n_probe=2,
-        centers=state.get("centers"),
-        existing_assigned=state.get("emb_store"),
-    )
-    no_emb = s2.join(batch_emb, "doc_id", "left_anti").select("doc_id")
-    admitted = out3["accepted"].select("doc_id").unionByName(no_emb)
-
-    # r14 attribution (guide §2.4/§1.2): the tier survivor sets are
-    # strictly NESTED (batch ⊇ s1 ⊇ s2 ⊇ admitted [⊇ s3 ⊇ final]), so
-    # "first tier that dropped the doc" is just the MAX tier the doc
-    # reached — one tagged union + groupBy replaces the r13 chain of
-    # 3-4 per-tier flag joins (each a broadcast build + probe stage in
-    # the surfaced plan; measured 11 jobs for the attribution tail).
-    def _attribution(tiers: list, labels: list) -> DataFrame:
-        spine = tiers[0].select("doc_id", F.lit(0).alias("__tier"))
-        for i, frame in enumerate(tiers[1:], start=1):
-            spine = spine.unionByName(
-                frame.select("doc_id", F.lit(i).alias("__tier"))
-            )
-        top = len(tiers) - 1
-        reached = F.col("__tier")
-        label = F.lit(labels[0])
-        for i in range(1, top + 1):
-            label = F.when(reached == i, F.lit(labels[i])).otherwise(label)
-        return (
-            spine.groupBy("doc_id")
-            .agg(F.max("__tier").alias("__tier"))
-            .select(
-                "doc_id",
-                (reached == top).alias("admitted"),
-                label.alias("rejected_by"),
-            )
-            .orderBy("doc_id")
-        )
-
-    if dsir_min_lw is not None:
-        # tier 4 — DSIR quality admission of the semantic survivors
-        # against the frozen ratio table (fit once, score for weeks)
-        from dynamic_etl_spark.ops import quality as Q
-
-        ratios = state.get("dsir_ratios")
-        if ratios is None:
-            ratios = Q.dsir_bucket_ratios(
-                corpus_docs,
-                target=F.col("doc_id") % 4 == 0,
-                n_buckets=DSIR_GATE_BUCKETS,
-            )
-        # two consumers of the tier-3 survivor set (the DSIR scoring
-        # input and the attribution spine) — checkpoint the seam
-        s3 = batch_docs.join(admitted, "doc_id", "leftsemi").localCheckpoint()
-        final = (
-            Q.dsir_gate(s3, ratios, min_log_weight=dsir_min_lw)
-            .filter(F.col("passes"))
-            .select("doc_id")
-        )
-        return _attribution(
-            [batch_docs, s1, s2, s3, final],
-            ["exact", "lexical", "semantic", "quality", "none"],
-        )
-
-    return _attribution(
-        [batch_docs, s1, s2, admitted],
-        ["exact", "lexical", "semantic", "none"],
-    )
+    return out["attribution"].orderBy("doc_id")
 
 
 def incremental_curation_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1630,11 +1553,11 @@ def incremental_curation_admission(spark: SparkSession, sf_dir: str) -> DataFram
     cascade's tier-5 convention; none exist in this fixture).
 
     Scale shape: tier costs equal the single-tier admission queries'
-    costs on shrinking inputs — composition adds attribution joins over
-    checkpointed leaves, not shuffles. Each tier's store delta for a
-    production caller is the existing ops' outputs filtered to the
-    final admitted set (tests/test_incremental_semantic.py and
-    test_incremental_dedup.py pin the single-tier delta contracts)."""
+    costs on shrinking inputs; attribution is one tagged union +
+    groupBy over the checkpointed tier leaves. The tiers are
+    ops/curation_gate.curation_gate — the same composition the
+    streaming sink runs, whose per-store deltas (filtered to the final
+    admitted set) are what a production caller commits."""
     return _run_curation_gate(spark, sf_dir, state=None)
 
 

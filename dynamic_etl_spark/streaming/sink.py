@@ -24,9 +24,104 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from dynamic_etl_spark.io.sinks import write_staging_swap
+from dynamic_etl_spark.io.versioned import (
+    latest_metadata,
+    latest_version,
+    read_versioned,
+    write_versioned,
+)
 from dynamic_etl_spark.ops.dedup import dedup_keep_last_agg
 from dynamic_etl_spark.ops.keys import assign_surrogate_keys
 from dynamic_etl_spark.ops.merge import scd1_merge
+
+
+def _drain(stream_df: DataFrame, apply, checkpoint_dir: str, timeout_sec: int,
+           sink: str) -> StreamingQuery:
+    """Run ``apply`` on every micro-batch with ``Trigger.AvailableNow``
+    and block until the stream drains (the repo batch-cadence
+    convention); a timeout names the ``sink``."""
+    query = (
+        stream_df.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not query.awaitTermination(timeout_sec):
+        raise TimeoutError(
+            f"streaming {sink} did not drain within {timeout_sec}s; the "
+            f"query is still running — raise timeout_sec or stop() it"
+        )
+    return query
+
+
+def _read_or_empty(spark, root: str, template: DataFrame) -> DataFrame:
+    """The latest version of ``root``, or an empty frame shaped like
+    ``template`` when nothing has been committed yet."""
+    if latest_version(root) is None:
+        return template.limit(0)
+    return read_versioned(spark, root)
+
+
+def _append(root: str, current: DataFrame, delta: DataFrame,
+            metadata: dict | None = None) -> DataFrame:
+    """Commit ``current ∪ delta`` as the next version of ``root``,
+    failing if another writer committed since ``current`` was read; an
+    empty delta commits nothing. Returns the table's new contents."""
+    if delta.isEmpty():
+        return current
+    merged = current.unionByName(delta)
+    write_versioned(
+        merged, root,
+        base_version=latest_version(root), expected_base=True,
+        metadata=metadata,
+    )
+    return merged
+
+
+def _heal(spark, id_col: str, specs) -> list[DataFrame]:
+    """Self-heal derived stores forward from the committed docs they
+    derive from. ``specs`` holds ``(store_root, docs, rows)`` triples,
+    ``rows(docs)`` building a store's rows: docs missing from their
+    store (the docs-committed/store-crashed window) get their rows
+    recomputed and appended. The probe is an id-only anti-join,
+    normally empty. Returns the post-heal stores in ``specs`` order."""
+    stores = []
+    for root, docs, rows in specs:
+        store = _read_or_empty(spark, root, rows(docs.limit(0)))
+        missing = docs.join(store.select(id_col).distinct(), id_col, "left_anti")
+        stores.append(_append(root, store, rows(missing)))
+    return stores
+
+
+def _frozen_centers(spark, root: str, sources, id_col: str, vec_col: str,
+                    n_cells: int, seed: int, max_iter: int):
+    """The committed semantic centroid fit at ``root``, or — none yet —
+    a fit on the first non-empty frame of ``sources``, committed before
+    anything depends on it. None while every source is empty."""
+    from dynamic_etl_spark.ops.ann import (
+        centers_from_rows,
+        centers_to_rows,
+        fit_semantic_centers,
+    )
+
+    if latest_version(root) is not None:
+        return centers_from_rows(read_versioned(spark, root))
+    for src in sources:
+        if not src.isEmpty():
+            centers = fit_semantic_centers(src, id_col, vec_col, n_cells, seed, max_iter)
+            write_versioned(centers_to_rows(spark, centers), root)
+            return centers
+    return None
+
+
+def _nonzero_norm(vec_col: str):
+    """True where the embedding has a non-zero norm: a zero vector can
+    never match anything, so no replay could re-reject it."""
+    from dynamic_etl_spark.ops.ann import as_double_vec
+
+    return F.aggregate(
+        as_double_vec(F.col(vec_col)), F.lit(0.0), lambda acc, x: acc + x * x
+    ) > 0.0
 
 
 def run_streaming_merge(
@@ -122,18 +217,7 @@ def run_streaming_merge(
         # before any rename touches final_path
         write_staging_swap(merged, table_path)
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming merge did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "merge")
 
 
 def run_streaming_dedup(
@@ -158,25 +242,20 @@ def run_streaming_dedup(
 
     Crash consistency across TWO tables: the corpus version commits
     first, the store second, and every batch starts by SELF-HEALING the
-    store — corpus docs missing from the store (the corpus-committed/
-    store-crashed window) get their signatures recomputed and appended.
-    Combined with checkpoint redelivery this makes the sink idempotent:
-    a replayed batch finds its docs already in the healed store and
-    rejects them all, so the corpus never holds a doc twice. The heal
-    probe is an id-only anti-join (normally empty) — cheap relative to
-    the admission joins.
+    store (:func:`_heal`) — corpus docs missing from the store (the
+    corpus-committed/store-crashed window, including a crash before the
+    bootstrap's first store commit) get their signatures recomputed and
+    appended. Combined with checkpoint redelivery this makes the sink
+    idempotent: a replayed batch finds its docs already in the healed
+    store and rejects them all, so the corpus never holds a doc twice.
 
     Bootstraps an absent corpus from the first batch (admission against
     an empty corpus still deduplicates WITHIN the batch). Drains with
     ``Trigger.AvailableNow`` and blocks, per the repo batch-cadence
     convention.
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
     from dynamic_etl_spark.ops.lsh import incremental_near_dup_merge, minhash_banded_rows
+    from dynamic_etl_spark.ops.text import tokens
 
     spark = stream_df.sparkSession
 
@@ -186,8 +265,6 @@ def run_streaming_dedup(
         )
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        from dynamic_etl_spark.ops.text import tokens
-
         # zero-token docs can never collide (no shingles -> no signature
         # rows), so admitting them would break BOTH invariants this sink
         # maintains: every corpus doc has store signatures (the heal
@@ -199,64 +276,17 @@ def run_streaming_dedup(
         )
         if batch_df.isEmpty():
             return
-        if latest_version(corpus_root) is None:
-            empty = spark.createDataFrame([], batch_df.schema)
-            out = incremental_near_dup_merge(
-                empty, batch_df, id_col, text_col,
-                threshold=threshold, num_hashes=num_hashes,
-                bands=bands, shingle_k=shingle_k,
-                existing_banded=_sigs(empty),
-            )
-            write_versioned(out["accepted"], corpus_root)
-            write_versioned(out["new_banded"], store_root)
-            return
-
-        corpus = read_versioned(spark, corpus_root)
-        # a crash between the bootstrap's two commits leaves a corpus
-        # with NO store at all — the widest corpus-committed/
-        # store-crashed window; start the heal from an empty store
-        # instead of failing the stream on read (review r4)
-        if latest_version(store_root) is None:
-            store = spark.createDataFrame([], _sigs(corpus.limit(0)).schema)
-        else:
-            store = read_versioned(spark, store_root)
-        unhealed = corpus.join(
-            store.select(id_col).distinct(), id_col, "left_anti"
-        )
-        if not unhealed.isEmpty():
-            store = store.unionByName(_sigs(unhealed))
-            write_versioned(
-                store, store_root,
-                base_version=latest_version(store_root), expected_base=True,
-            )
+        corpus = _read_or_empty(spark, corpus_root, batch_df)
+        (store,) = _heal(spark, id_col, [(store_root, corpus, _sigs)])
         out = incremental_near_dup_merge(
             corpus, batch_df, id_col, text_col,
             threshold=threshold, num_hashes=num_hashes,
             bands=bands, shingle_k=shingle_k, existing_banded=store,
         )
-        if out["accepted"].isEmpty():
-            return
-        write_versioned(
-            corpus.unionByName(out["accepted"]), corpus_root,
-            base_version=latest_version(corpus_root), expected_base=True,
-        )
-        write_versioned(
-            store.unionByName(out["new_banded"]), store_root,
-            base_version=latest_version(store_root), expected_base=True,
-        )
+        _append(corpus_root, corpus, out["accepted"])
+        _append(store_root, store, out["new_banded"])
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming dedup did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "dedup")
 
 
 def run_streaming_semantic_dedup(
@@ -277,21 +307,20 @@ def run_streaming_semantic_dedup(
 ) -> StreamingQuery:
     """Continuously admit an EMBEDDED document stream into a
     semantically-deduplicated corpus — the SemDeDup sibling of
-    :func:`run_streaming_dedup` (VERDICT r8 #4: lexical dedup had a
-    maintained path, semantic was batch-only). Each micro-batch runs
+    :func:`run_streaming_dedup`. Each micro-batch runs
     ``ops/ann.incremental_semantic_merge`` against the versioned corpus
     + embedding store under the FROZEN centroid fit and commits the
     deltas as new table versions (io/versioned).
 
     State is THREE tables, committed in dependency order so every crash
     window heals forward:
-    - ``centers_root`` (cell, center): fitted ONCE on the bootstrap
-      batch and never rewritten — the frozen fit is what makes
-      admission independent of arrival order. Committed FIRST; a
+    - ``centers_root`` (cell, center): fitted ONCE — on the committed
+      corpus if it has rows, else on the bootstrap batch — and never
+      rewritten (:func:`_frozen_centers`); the frozen fit is what makes
+      admission independent of arrival order. Committed FIRST, so a
       centers-committed/corpus-crashed window re-bootstraps under the
-      already-committed fit instead of refitting on a different batch.
-      A corpus-committed/centers-crashed window (legacy seeding) refits
-      deterministically from the committed corpus.
+      already-committed fit, and a corpus seeded outside the sink
+      refits deterministically from the committed corpus.
     - ``corpus_root``: the admitted documents. Committed second.
     - ``store_root`` (id, vec, cell): the admission probe target.
       Committed last; every batch starts by SELF-HEALING it — corpus
@@ -309,110 +338,32 @@ def run_streaming_semantic_dedup(
     Drains with ``Trigger.AvailableNow`` and blocks, per the repo
     batch-cadence convention.
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
-    from dynamic_etl_spark.ops.ann import (
-        as_double_vec,
-        centers_from_rows,
-        centers_to_rows,
-        fit_semantic_centers,
-        incremental_semantic_merge,
-        semantic_store_rows,
-    )
+    from dynamic_etl_spark.ops.ann import incremental_semantic_merge, semantic_store_rows
 
     spark = stream_df.sparkSession
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, vec_col).filter(
-            F.aggregate(
-                as_double_vec(F.col(vec_col)),
-                F.lit(0.0),
-                lambda acc, x: acc + x * x,
-            )
-            > 0.0
-        )
+        batch_df = batch_df.select(id_col, vec_col).filter(_nonzero_norm(vec_col))
         if batch_df.isEmpty():
             return
-        if latest_version(corpus_root) is None:
-            # bootstrap: freeze the fit on the first batch — unless a
-            # centers-committed/corpus-crashed window already froze one
-            if latest_version(centers_root) is None:
-                centers = fit_semantic_centers(
-                    batch_df, id_col, vec_col, n_cells, seed, max_iter
-                )
-                write_versioned(centers_to_rows(spark, centers), centers_root)
-            else:
-                centers = centers_from_rows(read_versioned(spark, centers_root))
-            empty = spark.createDataFrame([], batch_df.schema)
-            out = incremental_semantic_merge(
-                empty, batch_df, id_col, vec_col,
-                threshold=threshold, n_cells=n_cells, n_probe=n_probe,
-                seed=seed, centers=centers,
-                existing_assigned=semantic_store_rows(
-                    empty, id_col, vec_col, centers
-                ),
-            )
-            write_versioned(out["accepted"], corpus_root)
-            write_versioned(out["new_assigned"], store_root)
-            return
-
-        corpus = read_versioned(spark, corpus_root)
-        # a corpus seeded outside this sink (or a crash before the
-        # bootstrap's centers commit under older ordering) has no fit:
-        # refit deterministically from the committed corpus and freeze
-        if latest_version(centers_root) is None:
-            centers = fit_semantic_centers(
-                corpus, id_col, vec_col, n_cells, seed, max_iter
-            )
-            write_versioned(centers_to_rows(spark, centers), centers_root)
-        else:
-            centers = centers_from_rows(read_versioned(spark, centers_root))
-        if latest_version(store_root) is None:
-            store = semantic_store_rows(corpus.limit(0), id_col, vec_col, centers)
-        else:
-            store = read_versioned(spark, store_root)
-        unhealed = corpus.join(
-            store.select(id_col).distinct(), id_col, "left_anti"
+        corpus = _read_or_empty(spark, corpus_root, batch_df)
+        centers = _frozen_centers(
+            spark, centers_root, (corpus, batch_df),
+            id_col, vec_col, n_cells, seed, max_iter,
         )
-        if not unhealed.isEmpty():
-            store = store.unionByName(
-                semantic_store_rows(unhealed, id_col, vec_col, centers)
-            )
-            write_versioned(
-                store, store_root,
-                base_version=latest_version(store_root), expected_base=True,
-            )
+        (store,) = _heal(spark, id_col, [(
+            store_root, corpus,
+            lambda docs: semantic_store_rows(docs, id_col, vec_col, centers),
+        )])
         out = incremental_semantic_merge(
             corpus, batch_df, id_col, vec_col,
             threshold=threshold, n_cells=n_cells, n_probe=n_probe,
             seed=seed, centers=centers, existing_assigned=store,
         )
-        if out["accepted"].isEmpty():
-            return
-        write_versioned(
-            corpus.unionByName(out["accepted"]), corpus_root,
-            base_version=latest_version(corpus_root), expected_base=True,
-        )
-        write_versioned(
-            store.unionByName(out["new_assigned"]), store_root,
-            base_version=latest_version(store_root), expected_base=True,
-        )
+        _append(corpus_root, corpus, out["accepted"])
+        _append(store_root, store, out["new_assigned"])
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming semantic dedup did not drain within {timeout_sec}s; "
-            f"the query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "semantic dedup")
 
 
 def run_streaming_curation(
@@ -444,35 +395,31 @@ def run_streaming_curation(
     dsir_buckets: int = 128,
     timeout_sec: int = 480,
 ) -> StreamingQuery:
-    """The THREE-TIER curation gate on a stream (VERDICT r9 #4): each
-    micro-batch runs exact-fingerprint, banded-MinHash lexical, and
-    SemDeDup semantic admission — the composition of
-    registry/curation's maintained gate — against persistent versioned
-    stores, with per-doc tier attribution appended to a ledger table.
+    """The curation admission gate on a stream: each micro-batch runs
+    ops/curation_gate.curation_gate — exact-fingerprint, banded-MinHash
+    lexical, SemDeDup semantic and, with ``dsir_root`` set, DSIR quality
+    admission; the same composition as registry/curation's composed-gate
+    queries — against persistent versioned stores, and appends the
+    per-doc tier attribution to a ledger table. This sink owns only the
+    boundary drops, the frozen fits, the commit order and crash
+    recovery.
 
-    ``dsir_root`` (VERDICT r11 #4) enables the optional FOURTH tier:
-    DSIR quality admission. The bucket-ratio table is FIT ONCE — on the
-    committed corpus if one exists, else on the bootstrap batch, with
-    ``dsir_target`` (a Column predicate over the doc frame, e.g.
-    ``F.col("doc_id") % 4 == 0``) marking the target slice — committed
-    to ``dsir_root`` before anything depends on it (the centers_root
-    convention), and every later batch scores its semantic survivors
-    against the frozen table (ops/quality.dsir_gate), admitting docs
-    whose exact-decimal log weight clears ``dsir_min_log_weight``.
-    Attribution gains the ``quality`` category. Per-doc weights depend
-    only on the doc text and the frozen table, so streamed admission
-    equals the batch gate's on any batch split (pytest-pinned). DSIR
-    keeps NO per-doc store — the frozen fit is its entire state, so
-    there is nothing to heal.
+    Frozen fits, each fit ONCE — on the committed corpus if it has
+    rows, else on the batch, so a replayed bootstrap refits on the same
+    rows — and committed before anything depends on it:
+    - ``centers_root``: the semantic centroid fit, on the first
+      embedded docs seen (:func:`_frozen_centers`);
+    - ``dsir_root``: the DSIR bucket-ratio table, with ``dsir_target``
+      (a Column predicate over the doc frame, e.g.
+      ``F.col("doc_id") % 4 == 0``) marking the target slice. Later
+      batches score their semantic survivors against it and admit docs
+      whose exact-decimal log weight clears ``dsir_min_log_weight``.
+      Per-doc weights depend only on the doc text and the frozen table,
+      so streamed admission equals the batch gate's on any batch split
+      (pytest-pinned). DSIR keeps no per-doc store, so there is nothing
+      to heal.
 
-    Composes what :func:`run_streaming_dedup` and
-    :func:`run_streaming_semantic_dedup` each do for ONE tier, with
-    crash-consistent commits across BOTH state families (previously a
-    user wiring the three-tier policy on a stream had to hand-build
-    this).
-
-    State is SIX tables. ``centers_root`` (frozen semantic fit) commits
-    once, before anything depends on it. Per batch the commit order is:
+    Per batch the commit order is:
 
     1. ``ledger_root`` — (id, admitted, rejected_by, batch_id) rows,
        the batch's attribution, with ``batch_id`` in the commit
@@ -482,10 +429,8 @@ def run_streaming_curation(
        embedding).
     3. ``fp_root`` / ``lex_root`` / ``sem_root`` — the exact
        fingerprint set, banded signature store, and assigned embedding
-       store; each delta is the tier op's output FILTERED TO THE FINAL
-       ADMITTED SET (a tier-2 survivor the semantic tier rejects must
-       never leave signatures behind — phantom store entries would
-       reject future legitimate batches).
+       store; each delta is the gate's, filtered to the final admitted
+       set.
 
     Crash recovery, window by window:
     - before the ledger commit: checkpoint redelivery recomputes the
@@ -498,17 +443,17 @@ def run_streaming_curation(
       recompute-on-replay would report it), re-appends any admitted
       docs the corpus lost, and heals the stores forward.
     - corpus committed outside the sink / store crashed: every batch
-      starts by self-healing all three stores from the corpus (the
-      single-tier sinks' heal, composed).
+      starts by self-healing all three stores from the corpus
+      (:func:`_heal`).
 
     Boundary drops mirror the single-tier sinks: zero-token docs are
     dropped (no lexical signature is possible; an empty-text doc has no
     place in a text corpus), zero-norm embeddings are normalized to
-    NULL (they can never match; the composed gate's convention routes
-    embedding-less survivors past the semantic tier). Replay
-    idempotence needs no cosine self-hit here: every admitted doc's
-    fingerprint is in the fp store, so tier 1 re-rejects replays even
-    for docs that have no embedding.
+    NULL (they can never match; the gate routes embedding-less
+    survivors past the semantic tier). Replay idempotence needs no
+    cosine self-hit here: every admitted doc's fingerprint is in the fp
+    store, so tier 1 re-rejects replays even for docs that have no
+    embedding.
 
     ``vec_col=None`` runs the two lexical tiers only. Pair ONE
     checkpoint with ONE state-table family for the stream's lifetime
@@ -517,25 +462,10 @@ def run_streaming_curation(
     ``Trigger.AvailableNow`` and blocks, per the repo batch-cadence
     convention.
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_metadata,
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
-    from dynamic_etl_spark.ops.ann import (
-        as_double_vec,
-        centers_from_rows,
-        centers_to_rows,
-        fit_semantic_centers,
-        incremental_semantic_merge,
-        semantic_store_rows,
-    )
-    from dynamic_etl_spark.ops.lsh import (
-        incremental_near_dup_merge,
-        minhash_banded_rows,
-    )
-    from dynamic_etl_spark.ops.quality import dsir_bucket_ratios, dsir_gate
+    from dynamic_etl_spark.ops.ann import semantic_store_rows
+    from dynamic_etl_spark.ops.curation_gate import curation_gate
+    from dynamic_etl_spark.ops.lsh import minhash_banded_rows
+    from dynamic_etl_spark.ops.quality import dsir_bucket_ratios
     from dynamic_etl_spark.ops.text import fingerprint_md5, tokens
 
     if dsir_root is not None and (dsir_target is None or dsir_min_log_weight is None):
@@ -545,23 +475,6 @@ def run_streaming_curation(
         )
 
     spark = stream_df.sparkSession
-
-    def _read_or(root: str, template: DataFrame) -> DataFrame:
-        if latest_version(root) is None:
-            return template.limit(0)
-        return read_versioned(spark, root)
-
-    def _append(root: str, current: DataFrame, delta: DataFrame) -> None:
-        if delta.isEmpty():
-            return
-        base = latest_version(root)
-        if base is None:
-            write_versioned(current.unionByName(delta), root)
-        else:
-            write_versioned(
-                current.unionByName(delta), root,
-                base_version=base, expected_base=True,
-            )
 
     def _fp_rows(docs: DataFrame) -> DataFrame:
         return docs.select(
@@ -574,42 +487,19 @@ def run_streaming_curation(
             hash_mode=hash_mode,
         )
 
-    def _heal(corpus: DataFrame, centers):
+    def _heal_stores(corpus: DataFrame, centers):
         """Self-heal every store against the committed corpus; returns
-        the post-heal (fp_store, lex_store, sem_store) frames."""
-        fp_store = _read_or(fp_root, _fp_rows(corpus))
-        lex_store = _read_or(lex_root, _sigs(corpus.limit(0)))
-        unhealed_fp = corpus.join(
-            fp_store.select(id_col).distinct(), id_col, "left_anti"
-        )
-        if not unhealed_fp.isEmpty():
-            delta = _fp_rows(unhealed_fp)
-            _append(fp_root, fp_store, delta)
-            fp_store = fp_store.unionByName(delta)
-        unhealed_lex = corpus.join(
-            lex_store.select(id_col).distinct(), id_col, "left_anti"
-        )
-        if not unhealed_lex.isEmpty():
-            delta = _sigs(unhealed_lex)
-            _append(lex_root, lex_store, delta)
-            lex_store = lex_store.unionByName(delta)
-        sem_store = None
-        if vec_col is not None and centers is not None:
-            emb_corpus = corpus.filter(F.col(vec_col).isNotNull()).select(
-                id_col, vec_col
-            )
-            sem_store = _read_or(
+        the post-heal (fp, lex, sem) stores — sem is None without a
+        frozen fit."""
+        specs = [(fp_root, corpus, _fp_rows), (lex_root, corpus, _sigs)]
+        if centers is not None:
+            specs.append((
                 sem_root,
-                semantic_store_rows(emb_corpus.limit(0), id_col, vec_col, centers),
-            )
-            unhealed_sem = emb_corpus.join(
-                sem_store.select(id_col).distinct(), id_col, "left_anti"
-            )
-            if not unhealed_sem.isEmpty():
-                healed = semantic_store_rows(unhealed_sem, id_col, vec_col, centers)
-                _append(sem_root, sem_store, healed)
-                sem_store = sem_store.unionByName(healed)
-        return fp_store, lex_store, sem_store
+                corpus.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col),
+                lambda docs: semantic_store_rows(docs, id_col, vec_col, centers),
+            ))
+        fp_store, lex_store, *sem = _heal(spark, id_col, specs)
+        return fp_store, lex_store, (sem[0] if sem else None)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         cols = [id_col, text_col] + ([vec_col] if vec_col else [])
@@ -617,72 +507,47 @@ def run_streaming_curation(
             F.size(tokens(F.col(text_col))) > 0
         )
         if vec_col is not None:
-            norm_ok = (
-                F.aggregate(
-                    as_double_vec(F.col(vec_col)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x * x,
-                )
-                > 0.0
-            )
             batch_df = batch_df.withColumn(
-                vec_col, F.when(norm_ok, F.col(vec_col))
+                vec_col, F.when(_nonzero_norm(vec_col), F.col(vec_col))
             )
         if batch_df.isEmpty():
             return
         # several tiers scan the batch; read the stream source once
         batch_df = batch_df.localCheckpoint()
+        corpus = _read_or_empty(spark, corpus_root, batch_df)
 
-        corpus = _read_or(corpus_root, batch_df)
-
-        # frozen fit: read it, or freeze one on the first embedded docs
-        # seen (corpus first — a replayed bootstrap must refit on the
-        # same rows; batch otherwise) and commit it BEFORE any state
-        # that depends on it
         centers = None
         if vec_col is not None:
-            if latest_version(centers_root) is not None:
-                centers = centers_from_rows(read_versioned(spark, centers_root))
-            else:
-                fit_src = corpus.filter(F.col(vec_col).isNotNull())
-                if fit_src.isEmpty():
-                    fit_src = batch_df.filter(F.col(vec_col).isNotNull())
-                if not fit_src.isEmpty():
-                    centers = fit_semantic_centers(
-                        fit_src, id_col, vec_col, n_cells, seed, max_iter
-                    )
-                    write_versioned(centers_to_rows(spark, centers), centers_root)
+            embedded = F.col(vec_col).isNotNull()
+            centers = _frozen_centers(
+                spark, centers_root,
+                (corpus.filter(embedded), batch_df.filter(embedded)),
+                id_col, vec_col, n_cells, seed, max_iter,
+            )
 
         recorded = -1
         if latest_version(ledger_root) is not None:
             recorded = latest_metadata(ledger_root).get("batch_id", -1)
-
         if batch_id <= recorded:
             # the ledger already decided this batch (crash after commit
             # window 1): finish the state from its attribution, never
             # recompute — then heal
-            ledger = read_versioned(spark, ledger_root)
-            admitted_ids = (
-                ledger.filter(
-                    (F.col("batch_id") == batch_id) & F.col("admitted")
-                )
+            admitted = (
+                read_versioned(spark, ledger_root)
+                .filter((F.col("batch_id") == batch_id) & F.col("admitted"))
                 .select(id_col)
             )
-            lost = batch_df.join(admitted_ids, id_col, "leftsemi").join(
+            lost = batch_df.join(admitted, id_col, "leftsemi").join(
                 corpus.select(id_col), id_col, "left_anti"
             )
-            if not lost.isEmpty():
-                _append(corpus_root, corpus, lost)
-                corpus = corpus.unionByName(lost)
-            _heal(corpus, centers)
+            _heal_stores(_append(corpus_root, corpus, lost), centers)
             return
 
-        # frozen DSIR ratio table: read it, or fit once (corpus first —
-        # a replayed bootstrap must refit on the same rows; batch
-        # otherwise) and commit it BEFORE the ledger decision depends on
-        # it. Sits AFTER the replay early-return: a replayed batch never
-        # reads the table (the ledger decided it), and its original
-        # application committed the fit before that ledger commit.
+        # frozen DSIR ratio table: read it, or fit once and commit it
+        # BEFORE the ledger decision depends on it. Sits AFTER the
+        # replay early-return: a replayed batch never reads the table
+        # (the ledger decided it), and its original application
+        # committed the fit before that ledger commit.
         ratios = None
         if dsir_root is not None:
             if latest_version(dsir_root) is not None:
@@ -696,133 +561,41 @@ def run_streaming_curation(
                 )
                 write_versioned(ratios, dsir_root)
 
-        fp_store, lex_store, sem_store = _heal(corpus, centers)
-
-        # tier 1 — exact fingerprints vs the store, keep-min in batch
-        bfp = _fp_rows(batch_df)
-        keep1 = (
-            bfp.join(fp_store.select("__fp").distinct(), "__fp", "left_anti")
-            .groupBy("__fp")
-            .agg(F.min(id_col).alias(id_col))
-            .select(id_col)
+        fp_store, lex_store, sem_store = _heal_stores(corpus, centers)
+        out = curation_gate(
+            batch_df, corpus, id_col=id_col, text_col=text_col,
+            vec_col=vec_col,
+            fp_set=fp_store.select("__fp").distinct(),
+            lex_store=lex_store,
+            centers=centers,
+            sem_store=sem_store,
+            dsir_ratios=ratios,
+            dsir_min_log_weight=dsir_min_log_weight,
+            lex_threshold=lex_threshold, num_hashes=num_hashes, bands=bands,
+            shingle_k=shingle_k, hash_mode=hash_mode,
+            sem_threshold=sem_threshold, n_probe=n_probe,
         )
-        s1 = batch_df.join(keep1, id_col, "leftsemi").localCheckpoint()
-
-        # tier 2 — banded MinHash lexical admission vs the store
-        out2 = incremental_near_dup_merge(
-            corpus, s1, id_col, text_col,
-            threshold=lex_threshold, num_hashes=num_hashes, bands=bands,
-            shingle_k=shingle_k, existing_banded=lex_store,
-            hash_mode=hash_mode,
-        )
-        s2 = out2["accepted"].localCheckpoint()
-
-        # tier 3 — semantic admission vs the store; embedding-less
-        # survivors pass through (the composed gate's convention)
-        out3 = None
-        if vec_col is not None and centers is not None:
-            s2e = s2.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col)
-            emb_corpus = corpus.filter(F.col(vec_col).isNotNull()).select(
-                id_col, vec_col
-            )
-            out3 = incremental_semantic_merge(
-                emb_corpus, s2e, id_col, vec_col,
-                threshold=sem_threshold, n_cells=n_cells, n_probe=n_probe,
-                seed=seed, centers=centers, existing_assigned=sem_store,
-            )
-            no_emb = s2.filter(F.col(vec_col).isNull()).select(id_col)
-            admitted_ids = (
-                out3["accepted"].select(id_col).unionByName(no_emb)
-            )
-        else:
-            admitted_ids = s2.select(id_col)
-
-        # tier 4 — DSIR quality admission of the dedup survivors
-        # against the frozen ratio table (no per-doc store)
-        s3_ids = None
-        if ratios is not None:
-            s3_ids = admitted_ids.localCheckpoint()
-            gate = dsir_gate(
-                batch_df.join(s3_ids, id_col, "leftsemi").select(id_col, text_col),
-                ratios, id_col=id_col, text_col=text_col,
-                min_log_weight=dsir_min_log_weight,
-            )
-            admitted_ids = gate.filter(F.col("passes")).select(id_col)
-        admitted_ids = admitted_ids.localCheckpoint()
-
-        flag = lambda df, name: df.select(id_col, F.lit(True).alias(name))
-        attributed = (
-            batch_df.select(id_col)
-            .join(flag(s1, "__t1"), id_col, "left")
-            .join(flag(s2, "__t2"), id_col, "left")
-        )
-        quality_case = F.lit(None).cast("boolean")
-        if s3_ids is not None:
-            attributed = attributed.join(flag(s3_ids, "__t3"), id_col, "left")
-            quality_case = F.col("__t3")
-        ledger_delta = (
-            attributed
-            .join(flag(admitted_ids, "__adm"), id_col, "left")
-            .select(
-                id_col,
-                F.coalesce(F.col("__adm"), F.lit(False)).alias("admitted"),
-                F.when(F.coalesce(F.col("__adm"), F.lit(False)), F.lit("none"))
-                .when(F.coalesce(quality_case, F.lit(False)), F.lit("quality"))
-                .when(F.coalesce(F.col("__t2"), F.lit(False)), F.lit("semantic"))
-                .when(F.coalesce(F.col("__t1"), F.lit(False)), F.lit("lexical"))
-                .otherwise(F.lit("exact"))
-                .alias("rejected_by"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
+        ledger_delta = out["attribution"].withColumn(
+            "batch_id", F.lit(batch_id).cast("long")
         )
         # commit window 1: the attribution ledger (the pivot)
-        ledger_current = _read_or(ledger_root, ledger_delta)
-        base = latest_version(ledger_root)
-        if base is None:
-            write_versioned(
-                ledger_delta, ledger_root, metadata={"batch_id": batch_id}
-            )
-        else:
-            write_versioned(
-                ledger_current.unionByName(ledger_delta), ledger_root,
-                base_version=base, expected_base=True,
-                metadata={"batch_id": batch_id},
-            )
-        # commit window 2: the corpus
-        admitted_docs = batch_df.join(admitted_ids, id_col, "leftsemi")
-        _append(corpus_root, corpus, admitted_docs)
-        # commit window 3: the stores — every delta filtered to the
-        # FINAL admitted set
-        _append(fp_root, fp_store, bfp.join(admitted_ids, id_col, "leftsemi"))
         _append(
-            lex_root, lex_store,
-            out2["new_banded"].join(admitted_ids, id_col, "leftsemi"),
+            ledger_root, _read_or_empty(spark, ledger_root, ledger_delta),
+            ledger_delta, metadata={"batch_id": batch_id},
         )
-        if out3 is not None and sem_store is not None:
-            # filtered to the FINAL admitted set like the fp/lex deltas
-            # (ADVICE r12 #1): with the DSIR fourth tier active, tier 4
-            # can reject a doc tier 3 accepted — an unfiltered semantic
-            # delta would permanently store the quality-reject's
-            # embedding (_heal only adds rows) and later batches would
-            # reject near docs as 'semantic' against a doc absent from
-            # the corpus, breaking batch-vs-stream admission parity
-            _append(
-                sem_root, sem_store,
-                out3["new_assigned"].join(admitted_ids, id_col, "leftsemi"),
-            )
+        # commit window 2: the corpus
+        _append(
+            corpus_root, corpus,
+            batch_df.join(out["admitted"], id_col, "leftsemi"),
+        )
+        # commit window 3: the stores (the gate filtered every delta to
+        # the FINAL admitted set)
+        _append(fp_root, fp_store, out["fp_delta"])
+        _append(lex_root, lex_store, out["lex_delta"])
+        if sem_store is not None:
+            _append(sem_root, sem_store, out["sem_delta"])
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming curation did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "curation")
 
 
 def run_streaming_rollup(
@@ -900,13 +673,6 @@ def run_streaming_summary(
     Delta txn batch-id pattern; see its docstring for the crash cases
     and the one-checkpoint-one-state-table rule).
     """
-    from dynamic_etl_spark.io.versioned import (
-        latest_metadata,
-        latest_version,
-        read_versioned,
-        write_versioned,
-    )
-
     spark = stream_df.sparkSession
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
@@ -928,15 +694,4 @@ def run_streaming_summary(
             metadata={"batch_id": batch_id},
         )
 
-    query = (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming summary did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "summary")

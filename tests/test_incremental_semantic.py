@@ -327,3 +327,67 @@ def test_incremental_curation_tier_attribution(spark, monkeypatch):
         105: (True, "none"),      # no embedding: semantic tier passes through
         106: (False, "lexical"),  # within-batch pair keeps min id 101
     }
+
+
+def test_curation_gate_four_tiers_attribution_and_final_deltas(spark):
+    """ops/curation_gate.curation_gate called directly with all four
+    tier stores on hand-built frames: every rejected_by label fires on
+    its planted doc, and a doc the DSIR tier rejects after passing all
+    three dedup tiers leaves NO fp, lexical or semantic delta row — the
+    deltas are filtered to the FINAL admitted set, not to their own
+    tier's survivors."""
+    from dynamic_etl_spark.ops import lsh as L
+    from dynamic_etl_spark.ops import quality as Q
+    from dynamic_etl_spark.ops.curation_gate import curation_gate
+    from dynamic_etl_spark.ops.text import fingerprint_md5
+
+    tgt = ["alpha", "beta", "gamma", "delta", "epsilon",
+           "zeta", "eta", "theta", "iota", "kappa"]
+    raw = ["one", "two", "three", "four", "five",
+           "six", "seven", "eight", "nine", "ten"]
+
+    def perm(words, stride):
+        # strides coprime with 10 share no ordered 3-shingle
+        return " ".join(words[(j * stride) % 10] for j in range(10))
+
+    schema = "doc_id long, text string, embedding array<double>"
+    corpus = spark.createDataFrame(
+        [(0, perm(tgt, 7), _vec(0)), (1, perm(raw, 7), _vec(1))], schema
+    )
+    batch = spark.createDataFrame(
+        [
+            (10, perm(tgt, 7).upper(), _vec(10)),     # exact copy of 0
+            (11, perm(tgt, 7) + " alpha", _vec(11)),  # lexical near 0
+            (12, perm(tgt, 1), _near(_vec(1))),       # semantic near 1
+            (20, perm(tgt, 3), _vec(20)),             # admitted
+            (21, perm(raw, 3), _vec(21)),             # quality reject
+        ],
+        schema,
+    )
+    centers = A.fit_semantic_centers(corpus, "doc_id", "embedding", n_cells=2)
+    out = curation_gate(
+        batch, corpus, id_col="doc_id", text_col="text", vec_col="embedding",
+        fp_set=corpus.select(fingerprint_md5(F.col("text")).alias("__fp")).distinct(),
+        lex_store=L.minhash_banded_rows(corpus, "doc_id", "text"),
+        centers=centers,
+        sem_store=A.semantic_store_rows(corpus, "doc_id", "embedding", centers),
+        dsir_ratios=Q.dsir_bucket_ratios(
+            corpus, target=F.col("doc_id") == 0, n_buckets=64
+        ),
+        dsir_min_log_weight="0",
+    )
+    rows = {
+        r["doc_id"]: (r["admitted"], r["rejected_by"])
+        for r in out["attribution"].collect()
+    }
+    assert rows == {
+        10: (False, "exact"),
+        11: (False, "lexical"),
+        12: (False, "semantic"),
+        20: (True, "none"),
+        21: (False, "quality"),
+    }
+    assert {r["doc_id"] for r in out["admitted"].collect()} == {20}
+    for store in ("fp_delta", "lex_delta", "sem_delta"):
+        ids = {r["doc_id"] for r in out[store].select("doc_id").collect()}
+        assert ids == {20}, f"{store} holds rows of non-admitted docs: {ids}"

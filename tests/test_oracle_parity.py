@@ -32,44 +32,38 @@ def test_rows_only_query_runs(spark, name):
     assert len(df.columns) > 0
 
 
-def test_driver_window_holds_the_r14_rotation():
+def test_driver_window_holds_the_rotation():
     """The driver hash-checks only the first DRIVER_WINDOW registered
-    queries. The r14 window (VERDICT r13 #1 + the hygiene tripwire):
-    ALL 33 due re-confirmations (latest driver green r10 — exactly the
-    list the rotation-hygiene tripwire computed when
-    CORRECTNESS_r13.json landed); then the six surfaces r13 re-planned
-    without a driver re-earn (cascade tier-5 BLAS swap, concurrent
-    margin fits, md5 LSH twin, DSIR admission forms); then the four
-    r13-green surfaces this round's tier-2/tier-3/job-count work
-    re-plans again; then 7 r11-era refreshes. Every windowed query is
+    queries. The window after CORRECTNESS_r14.json landed: ALL 38 due
+    re-confirmations (latest green r11 — exactly the list the
+    rotation-hygiene tripwire computes from the ledger), then the four
+    composed curation-gate queries re-planned onto the one shared gate
+    (ops/curation_gate), then the three re-planned generators and 5
+    r12-era refreshes. The r14 window's pins all confirmed green in
+    CORRECTNESS_r14.json and rotated out: 38 due + 19 r14 pins = 57
+    names would not fit the 50 slots. Every windowed query is
     oracle-backed; everything rotated out stays hash-checked by this
     local harness."""
     from dynamic_etl_spark.registry import DRIVER_WINDOW, _ROTATED_OUT
 
     window = list(REGISTRY)[:DRIVER_WINDOW]
     for name in (
-        # representatives of the 33 due r10-era re-confirmations
-        "benchmark_span_scrub",
-        "duplicated_span_removal",
-        "dedup_survivors",
-        "duplicate_detection",
-        "generator_products",
-        "heavy_hitter_maintenance",
-        "rollup_totals",
-        "salted_skew_join",
-        "value_outlier_gate",
-        # VERDICT r13 #1: r13-replanned surfaces needing re-earn
-        "curation_pipeline_accounting",
-        "curation_pipeline_lsh",
-        "embedding_margin_alignment",
-        "minhash_near_dup_exacthash",
-        "incremental_curation_admission_dsir",
-        "incremental_curation_admission_dsir_steady",
-        # r13-green surfaces re-planned again by r14's work
+        # representatives of the 38 due r11-era re-confirmations
+        "alias_header_resolution",
+        "bpe_merge_training",
+        "c4_quality_gates",
+        "embedding_mmr_select",
+        "events_ks_drift",
+        "generator_fact_day",
+        "pricing_summary",
+        "scd1_merge_orders",
+        "scd2_merge_customers",
+        "validation_report",
+        # re-planned onto the shared curation gate
         "incremental_curation_admission",
         "incremental_curation_admission_steady",
-        "incremental_near_dup_exacthash",
-        "incremental_semantic_dedup",
+        "incremental_curation_admission_dsir",
+        "incremental_curation_admission_dsir_steady",
     ):
         assert name in window, f"{name} fell outside the driver correctness window"
     # a rows-only query in the window would waste a hash slot
