@@ -9,7 +9,7 @@ ingestion.
 
 Layout (see SURVEY.md §7):
     session.py     SparkSession factory (AQE on, Arrow on, UTC, decimal-safe)
-    catalog.py     testdata + reference-shaped schemas, table loading
+    catalog.py     testdata table names + table loading
     ops/           operator library (clean/dates/money/keys/joins/dedup/merge/agg)
     io_/           sources, sinks, incremental file queue
     llm/           large-scale training-data ops (dedup, similarity, text, multimodal)

@@ -1,12 +1,8 @@
-"""Table catalog for the driver-provided testdata and the engine's schemas.
+"""Table catalog for the testdata corpus.
 
 Testdata (TESTDATA.md): deterministic TPC-H-ish star schema + `events`
 stream table + `documents`/`embeddings` LLM-pipeline tables, one parquet
 file per table under /root/testdata/sf{0.001,0.01,0.1}/.
-
-The reference's own star/snowflake schemas (SURVEY.md §1.4 —
-oracledb.sql:1-113, target_dw~2.sql:1-136) are declared here as explicit
-StructTypes for the generator / cleaning / merge fixtures.
 """
 
 from __future__ import annotations
@@ -15,9 +11,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 TESTDATA_TABLES = (
     "region",
@@ -64,103 +57,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # exceed 2^53).
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql queries."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-# --- Reference-shaped schemas (SURVEY.md §1.4; money = decimal(12,2),
-# --- flags = 1-char Y/N strings, date_id = int yyyyMMdd) ------------------
-
-DIM_STORE_SCHEMA = T.StructType(
-    [
-        T.StructField("store_id", T.LongType(), False),
-        T.StructField("store_name", T.StringType(), False),
-        T.StructField("store_address_lane_1", T.StringType(), False),
-        T.StructField("store_address_lane_2", T.StringType(), True),
-        T.StructField("store_city", T.StringType(), False),
-        T.StructField("store_zip", T.StringType(), True),
-        T.StructField("store_state", T.StringType(), False),
-        T.StructField("store_class_of_trade", T.StringType(), True),
-        # NOT NULL in the reference DDL (oracledb.sql:11) — ADVICE r1.
-        T.StructField("is_chain", T.StringType(), False),
-        T.StructField("chain_name", T.StringType(), True),
-    ]
-)
-
-DIM_PRODUCT_SCHEMA = T.StructType(
-    [
-        T.StructField("product_id", T.LongType(), False),
-        T.StructField("product_name", T.StringType(), False),
-        T.StructField("category", T.StringType(), True),
-        T.StructField("sub_category", T.StringType(), True),
-        T.StructField("brand", T.StringType(), False),
-        T.StructField("flavour", T.StringType(), True),
-        T.StructField("product_size", T.StringType(), False),
-        T.StructField("sku", T.StringType(), False),
-        T.StructField("uom", T.StringType(), True),
-        T.StructField("unit_price", T.DecimalType(12, 2), False),
-        # NOT NULL in the reference DDL (oracledb.sql:37) — ADVICE r1.
-        T.StructField("business_stage", T.StringType(), False),
-    ]
-)
-
-DIM_DISTRIBUTOR_SCHEMA = T.StructType(
-    [
-        T.StructField("distributor_id", T.LongType(), False),
-        T.StructField("distributor_name", T.StringType(), False),
-        T.StructField("distributor_type", T.StringType(), True),
-        T.StructField("city", T.StringType(), True),
-        T.StructField("state", T.StringType(), True),
-        T.StructField("onboarding_date", T.DateType(), True),
-        T.StructField("active_flag", T.StringType(), True),
-    ]
-)
-
-DIM_DATE_SCHEMA = T.StructType(
-    [
-        T.StructField("date_id", T.IntegerType(), False),
-        T.StructField("full_date", T.DateType(), False),
-        T.StructField("day", T.IntegerType(), False),
-        T.StructField("day_name", T.StringType(), False),
-        T.StructField("day_of_week", T.IntegerType(), False),
-        T.StructField("week_of_year", T.IntegerType(), False),
-        T.StructField("month", T.IntegerType(), False),
-        T.StructField("month_name", T.StringType(), False),
-        T.StructField("quarter", T.IntegerType(), False),
-        T.StructField("year", T.IntegerType(), False),
-        T.StructField("fiscal_quarter", T.IntegerType(), False),
-        T.StructField("fiscal_year", T.IntegerType(), False),
-        T.StructField("is_weekend", T.StringType(), False),
-        T.StructField("is_month_end", T.StringType(), False),
-        T.StructField("is_quarter_end", T.StringType(), False),
-        T.StructField("is_fiscal_quarter_end", T.StringType(), False),
-        T.StructField("is_year_end", T.StringType(), False),
-        T.StructField("is_fiscal_year_end", T.StringType(), False),
-        T.StructField("is_holiday", T.StringType(), False),
-        T.StructField("holiday_name", T.StringType(), True),
-        T.StructField("is_business_day", T.StringType(), False),
-    ]
-)
-
-FACT_SALES_SCHEMA = T.StructType(
-    [
-        T.StructField("sales_id", T.LongType(), False),
-        T.StructField("date_id", T.IntegerType(), False),
-        T.StructField("store_id", T.LongType(), False),
-        T.StructField("product_id", T.LongType(), False),
-        T.StructField("distributor_id", T.LongType(), False),
-        T.StructField("quantity_sold", T.LongType(), False),
-        T.StructField("unit_price", T.DecimalType(10, 2), False),
-        T.StructField("gross_amount", T.DecimalType(12, 2), False),
-        T.StructField("discount_amount", T.DecimalType(10, 2), False),
-        T.StructField("net_amount", T.DecimalType(12, 2), False),
-    ]
-)

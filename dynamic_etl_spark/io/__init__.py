@@ -1,6 +1,8 @@
 from dynamic_etl_spark.io.queue import FileQueue, PoisonPill, SkipRetry  # noqa: F401
 from dynamic_etl_spark.io.sinks import (  # noqa: F401
+    restore_interrupted_swap,
     rotate_current_to_archive,
+    write_counted,
     write_csv,
     write_jdbc,
     write_staging_swap,

@@ -14,7 +14,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: Committed-schema sidecar written into every unpartitioned parquet table
@@ -75,6 +75,16 @@ def rotate_current_to_archive(current_dir: str, archive_dir: str) -> list[str]:
     return moved
 
 
+def restore_interrupted_swap(final_path: str) -> None:
+    """Repair the one non-atomic window of :func:`write_staging_swap`: a
+    crash between its two renames leaves no ``final`` but a surviving
+    ``final.old`` backup, which moves back into place. Call it before
+    deciding from ``final``'s existence that a table is absent."""
+    backup = final_path + ".old"
+    if not os.path.exists(final_path) and os.path.exists(backup):
+        os.rename(backup, final_path)
+
+
 def write_staging_swap(
     df: DataFrame,
     final_path: str,
@@ -107,8 +117,7 @@ def write_staging_swap(
     os.makedirs(parent, exist_ok=True)
     staging = os.path.join(parent, f".staging-{uuid.uuid4().hex}")
     backup = final_path + ".old"
-    if not os.path.exists(final_path) and os.path.exists(backup):
-        os.rename(backup, final_path)
+    restore_interrupted_swap(final_path)
     try:
         writer = df.write.mode("overwrite").format(fmt).options(**(options or {}))
         if partition_by:
@@ -133,6 +142,17 @@ def write_staging_swap(
         shutil.rmtree(staging, ignore_errors=True)
         raise
     shutil.rmtree(backup, ignore_errors=True)
+
+
+def write_counted(df: DataFrame, path: str, where: Column | None = None) -> int:
+    """Commit ``df`` via :func:`write_staging_swap` and return the
+    committed row count (only rows matching ``where``, if given),
+    observed by the write job itself — the same number a post-commit
+    re-read would count, without the re-read's two extra jobs."""
+    obs = Observation()
+    n = F.count(F.lit(1)) if where is None else F.count(F.when(where, 1))
+    write_staging_swap(df.observe(obs, n.alias("n")), path)
+    return obs.get["n"]
 
 
 def compact_table(

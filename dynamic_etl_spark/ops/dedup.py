@@ -37,17 +37,6 @@ def dedup_keep_first(df: DataFrame, keys: Sequence[str], order: Sequence[str]) -
     return _keep_one(df, keys, order, desc=False)
 
 
-def _keep_one_agg(df: DataFrame, keys: Sequence[str], order, desc: bool) -> DataFrame:
-    ord_struct = F.struct(*[F.col(c) for c in order])
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    pick = F.max_by(payload, ord_struct) if desc else F.min_by(payload, ord_struct)
-    return (
-        df.groupBy(*keys)
-        .agg(pick.alias("__row"))
-        .select(*[F.col(f"__row.{c}").alias(c) for c in df.columns])
-    )
-
-
 def dedup_keep_last_agg(df: DataFrame, keys: Sequence[str], order: Sequence[str]) -> DataFrame:
     """D1, hot-key-resilient formulation: ``max_by`` over the ordering
     tuple instead of a row_number window. Same result as
@@ -58,12 +47,13 @@ def dedup_keep_last_agg(df: DataFrame, keys: Sequence[str], order: Sequence[str]
     colocate every row of the hot key on one reducer (AQE cannot split a
     window partition). Prefer this at 100 TB whenever only the surviving
     row — not its rank — is needed."""
-    return _keep_one_agg(df, keys, order, desc=True)
-
-
-def dedup_keep_first_agg(df: DataFrame, keys: Sequence[str], order: Sequence[str]) -> DataFrame:
-    """D2 twin of ``dedup_keep_last_agg`` (``min_by``)."""
-    return _keep_one_agg(df, keys, order, desc=False)
+    ord_struct = F.struct(*[F.col(c) for c in order])
+    payload = F.struct(*[F.col(c) for c in df.columns])
+    return (
+        df.groupBy(*keys)
+        .agg(F.max_by(payload, ord_struct).alias("__row"))
+        .select(*[F.col(f"__row.{c}").alias(c) for c in df.columns])
+    )
 
 
 def duplicate_members(df: DataFrame, keys: Sequence[str]) -> DataFrame:

@@ -11,12 +11,16 @@ result is written out whole (write-new-then-swap).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dynamic_etl_spark.io.sinks import restore_interrupted_swap, write_counted
+from dynamic_etl_spark.io.sources import read_table
 from dynamic_etl_spark.ops.agg import high_water_mark
+from dynamic_etl_spark.ops.dedup import dedup_keep_last_agg
 from dynamic_etl_spark.ops.joins import anti_join, any_change
 from dynamic_etl_spark.ops.keys import CONTIGUOUS_GUARD_ROWS, assign_surrogate_keys
 
@@ -59,11 +63,10 @@ def scd1_merge(
     full-outer join fans out otherwise, and a duplicated incoming key
     emits multiple UPDATE rows carrying the SAME preserved surrogate
     (collapse change feeds first, e.g. ``dedup_keep_last_agg``;
-    ``run_streaming_merge`` does this per micro-batch via
-    ``batch_order_col``). Note the contiguous-key guard raises lazily
-    from the executor as ``SparkRuntimeException`` when the key column
-    is evaluated (not ``ValueError`` at build time) — see
-    ``assign_surrogate_keys``.
+    :func:`scd1_merge_into` does this via ``batch_order_col``). Note the
+    contiguous-key guard raises lazily from the executor as
+    ``SparkRuntimeException`` when the key column is evaluated (not
+    ``ValueError`` at build time) — see ``assign_surrogate_keys``.
     """
     keys = list(natural_key)
     value_cols = [*exact_cols, *tolerance_cols]
@@ -120,6 +123,66 @@ def scd1_merge(
     )
     out_cols = [surrogate_col, *keys, *value_cols, op_col]
     return inserts.select(*out_cols).unionByName(others.select(*out_cols))
+
+
+def scd1_merge_into(
+    table_path: str,
+    batch: DataFrame,
+    natural_key: Sequence[str],
+    surrogate_col: str,
+    exact_cols: Sequence[str] = (),
+    tolerance_cols: Sequence[str] = (),
+    batch_order_col: str | None = None,
+) -> int:
+    """The whole SCD-1 table load — MERGE ``batch`` into the parquet
+    table at ``table_path``, then staged swap (load_fact_sales_dw.py:
+    299-423) — returning the committed row count observed on the write.
+    The DW fact load and the streaming merge sink both end here.
+
+    - The batch is collapsed to one row per natural key first (the
+      merge's precondition): with ``batch_order_col`` the latest row by
+      that column wins (``dedup_keep_last_agg``); without it a
+      duplicated key raises — an unordered batch has no "last" row.
+    - The committed table is read through ``io.read_table``. The result
+      REPLACES it, so a table column outside the declared ones
+      (``surrogate_col`` + ``natural_key`` + ``exact_cols`` +
+      ``tolerance_cols``) raises instead of being silently destroyed;
+      batch columns outside them are not persisted.
+    - An absent table (checked after repairing an interrupted swap)
+      bootstraps from the batch with surrogates 1..n in natural-key
+      order: what a merge against an empty table assigns, without its
+      join and high-water-mark job.
+    """
+    keys = list(natural_key)
+    declared = [surrogate_col, *keys, *exact_cols, *tolerance_cols]
+    if batch_order_col is not None:
+        batch = dedup_keep_last_agg(batch, keys=keys, order=[batch_order_col])
+    elif not batch.groupBy(*keys).count().filter(F.col("count") > 1).isEmpty():
+        raise ValueError(
+            "batch contains duplicate natural keys; pass batch_order_col "
+            "to keep the latest row per key"
+        )
+    restore_interrupted_swap(table_path)
+    if not os.path.exists(table_path):
+        merged = assign_surrogate_keys(
+            batch.select(*keys, *exact_cols, *tolerance_cols),
+            order_cols=keys,
+            key_col=surrogate_col,
+        ).select(*declared)
+    else:
+        existing = read_table(batch.sparkSession, table_path)
+        undeclared = set(existing.columns) - set(declared)
+        if undeclared:
+            raise ValueError(
+                f"table has columns the merge would destroy (declare them "
+                f"as exact/tolerance cols): {sorted(undeclared)}"
+            )
+        merged = scd1_merge(
+            existing, batch, keys, surrogate_col, exact_cols, tolerance_cols
+        ).drop("operation")
+    # the self-referential rewrite is safe: the swap writes the staging
+    # copy (executing the read of the current table) before any rename
+    return write_counted(merged, table_path)
 
 
 def scd2_merge(

@@ -265,27 +265,6 @@ def tfidf_topk(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
 # _gram_rows machinery the Gopher gates use).
 # --------------------------------------------------------------------------
 
-def bigram_model(df: DataFrame, *, id_col: str = "doc_id",
-                 text_col: str = "text") -> DataFrame:
-    """Corpus bigram counts ``(w1, gram, c)`` — one explode + one codegen
-    partial aggregation on the gram key. The model is corpus-sized (not
-    bounded), so NOTHING here collects or broadcasts it: consumers join
-    on the gram key, which shuffles model and corpus alike on their
-    natural key. ``w1`` (the context word) rides along for context-count
-    rollups; grams never contain internal whitespace beyond the single
-    separator (whitespace tokenization), so the split is lossless."""
-    return (
-        _gram_rows(df, [2], id_col, text_col)
-        .groupBy("__gram")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .select(
-            F.split_part(F.col("__gram"), F.lit(" "), F.lit(1)).alias("w1"),
-            F.col("__gram").alias("gram"),
-            "c",
-        )
-    )
-
-
 def bigram_novelty_profile(df: DataFrame, *, id_col: str = "doc_id",
                            text_col: str = "text",
                            familiar_min_count: int = 2) -> DataFrame:

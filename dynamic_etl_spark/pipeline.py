@@ -12,7 +12,6 @@ schedule; the intra-day ordering is no longer implicit.
 
 from __future__ import annotations
 
-import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
@@ -23,20 +22,18 @@ from typing import Any
 class Step:
     """One pipeline step.
 
-    ``retries``/``retry_delay_s`` mirror the reference DAGs' default_args
-    (retries=1, retry_delay=5min — dags/retail_daily_pipeline.py:5-10):
-    a step that raises is re-run up to ``retries`` more times, sleeping
-    ``retry_delay_s`` between attempts. The default stays 0 (fail fast) so
-    deterministic failures — the common case in tests and data bugs —
-    surface immediately; transient-failure steps (network reads, queue
-    polls) opt in per step.
+    ``retries`` mirrors the reference DAGs' default_args (retries=1 —
+    dags/retail_daily_pipeline.py:5-10): a step that raises is re-run up
+    to ``retries`` more times, immediately. The default stays 0 (fail
+    fast) so deterministic failures — the common case in tests and data
+    bugs — surface immediately; transient-failure steps (network reads,
+    queue polls) opt in per step.
     """
 
     name: str
     fn: Callable[[dict[str, Any]], Any]
     depends_on: tuple[str, ...] = ()
     retries: int = 0
-    retry_delay_s: float = 0.0
 
 
 @dataclass
@@ -77,8 +74,6 @@ class Pipeline:
                             f"pipeline '{self.name}' failed at step '{name}' "
                             f"after {attempt + 1} attempt(s)"
                         ) from exc
-                    if step.retry_delay_s > 0:
-                        time.sleep(step.retry_delay_s)
             result.outputs[name] = out
             result.order.append(name)
         return result

@@ -27,10 +27,11 @@ still own the outer daily schedule.
 
 Each piece of work runs once: a day is bound by its Spark job count,
 not its data, so every fact a step needs comes from the job that
-already computes it. Step row counts are observed on the committing
-write (``Observation``), never re-read; parquet tables are read through
-``io.read_table``, whose committed ``_schema.json`` sidecar replaces a
-footer-inference job per read; the fact load's empty-dim guard reads
+already computes it. Every table commits through ``io.write_counted``
+(staging+swap), whose row count is observed by the committing write,
+never re-read; parquet tables are read through ``io.read_table``,
+whose committed ``_schema.json`` sidecar replaces a footer-inference
+job per read; the fact load's empty-dim guard reads
 the dim counts the ``load_dim_*`` steps published in the pipeline
 context; each validator gate is one scan (``validate``).
 
@@ -49,7 +50,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark import generate as G
@@ -59,14 +60,16 @@ from dynamic_etl_spark.io import (
     latest_file,
     read_csv_schema_on_read,
     read_table,
+    restore_interrupted_swap,
     rotate_current_to_archive,
+    write_counted,
     write_csv,
-    write_staging_swap,
 )
+from dynamic_etl_spark.ops.agg import high_water_mark
 from dynamic_etl_spark.ops.clean import clean_numeric, resolve_aliases
 from dynamic_etl_spark.ops.dates import build_date_dimension
 from dynamic_etl_spark.ops.dedup import dedup_keep_last
-from dynamic_etl_spark.ops.merge import scd1_merge
+from dynamic_etl_spark.ops.merge import scd1_merge_into
 from dynamic_etl_spark.pipeline import Pipeline, Step
 from dynamic_etl_spark.validate import ValidationSpec, validate
 
@@ -76,18 +79,8 @@ def _table(root: str, name: str) -> str:
 
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    restore_interrupted_swap(path)
     return read_table(spark, path) if Path(path).exists() else None
-
-
-def _write_counted(df: DataFrame, path: str, where: Column | None = None) -> int:
-    """Commit ``df`` via staging+swap and return the committed row count
-    (only rows matching ``where``, if given), observed by the write job
-    itself — the same number a post-commit re-read would count, without
-    the re-read's two extra jobs."""
-    obs = Observation()
-    n = F.count(F.lit(1)) if where is None else F.count(F.when(where, 1))
-    write_staging_swap(df.observe(obs, n.alias("n")), path)
-    return obs.get["n"]
 
 
 # --------------------------------------------------------------------------
@@ -119,7 +112,7 @@ def generation_pipeline(
 
     def _gen_dim(name: str, fn) -> Callable[[dict], int]:
         def step(ctx):
-            return _write_counted(fn(), _table(source_root, name))
+            return write_counted(fn(), _table(source_root, name))
         return step
 
     def gen_date(ctx):
@@ -133,7 +126,7 @@ def generation_pipeline(
             calendar_start or f"{year}-01-01",
             calendar_end or f"{year}-12-31",
         )
-        return _write_counted(cal, _table(source_root, "dim_date"))
+        return write_counted(cal, _table(source_root, "dim_date"))
 
     def gen_fact(ctx):
         cal = read_table(spark, _table(source_root, "dim_date"))
@@ -156,22 +149,16 @@ def generation_pipeline(
         dists = read_table(spark, _table(source_root, "dim_distributor"))
         fact_path = _table(source_root, "fact_sales")
         existing = _read_if_exists(spark, fact_path)
-        hwm = (
-            0
-            if existing is None
-            else existing.agg(
-                F.coalesce(F.max("sales_id"), F.lit(0)).alias("m")
-            ).collect()[0]["m"]
-        )
+        hwm = 0 if existing is None else high_water_mark(existing, "sales_id")
         new = G.generate_fact_sales(
             spark, stores, products, dists,
             date_id=date_id, rows=rows_per_day, seed=seed,
-            start_sales_id=int(hwm), is_weekend=is_weekend,
+            start_sales_id=hwm, is_weekend=is_weekend,
             month=(date_id // 100) % 100,
         )
         out = new if existing is None else existing.unionByName(new)
         # post-insert verification aggregate (the reference's step 7)
-        return _write_counted(out, fact_path, where=F.col("date_id") == date_id)
+        return write_counted(out, fact_path, where=F.col("date_id") == date_id)
 
     return Pipeline(
         "retail_daily_generation",
@@ -405,10 +392,10 @@ def dw_load_pipeline(
     unprocessed for retry (:156-175, U6 SkipRetry; the dim counts come
     from the ``load_dim_*`` step outputs in the context), per-row key
     resolution with drop-on-miss (:213-261), numeric cleanse
-    (:283-297), fact-grain dedup, SCD-1 MERGE with tolerance 0.01 +
-    MAX+1+i surrogates (:299-357), staged swap (:368-423), mark
-    processed (:425), verification count (:428-439; observed on the
-    committing write)."""
+    (:283-297), then ``ops.merge.scd1_merge_into``: fact-grain dedup,
+    SCD-1 MERGE with tolerance 0.01 + MAX+1+i surrogates (:299-357),
+    staged swap (:368-423) and the verification count (:428-439;
+    observed on the committing write); then mark processed (:425)."""
     current = str(Path(extract_root) / "Current")
     processed_log = str(Path(dw_root) / "processed.log")
     dw_fact = _table(dw_root, "fact_sales_dw")
@@ -427,7 +414,7 @@ def dw_load_pipeline(
                     keys=[key],
                     order=["__gen"],
                 ).drop("__gen")
-            return _write_counted(merged, _table(dw_root, name))
+            return write_counted(merged, _table(dw_root, name))
         return step
 
     def load_fact(ctx):
@@ -467,32 +454,26 @@ def dw_load_pipeline(
                     F.col("NET_AMOUNT"), dtype="decimal(12,2)", min_value=None
                 ).cast("double").alias("net_amount"),
             )
+            # the resolved batch feeds both the probe and the merge:
+            # materialize it once (shared-intermediate rule)
             typed = (
                 typed.join(dims["dim_store"].select("store_id"), "store_id", "left_semi")
                 .join(dims["dim_product"].select("product_id"), "product_id", "left_semi")
                 .join(dims["dim_distributor"].select("distributor_id"), "distributor_id", "left_semi")
+                .localCheckpoint()
             )
-            # the resolved batch feeds both the probe and the merge:
-            # materialize it once (shared-intermediate rule)
-            typed = dedup_keep_last(
-                typed,
-                keys=["date_id", "store_id", "product_id", "distributor_id"],
-                order=["sales_id"],
-            ).localCheckpoint()
             if typed.isEmpty():
                 raise SkipRetry("no rows survived key resolution")
-            existing = _read_if_exists(spark, dw_fact)
-            if existing is None:
-                existing = typed.limit(0)
-            merged = scd1_merge(
-                existing,
+            # fact-grain dedup keeps the latest sales_id per grain key
+            return scd1_merge_into(
+                dw_fact,
                 typed,
                 natural_key=["date_id", "store_id", "product_id", "distributor_id"],
                 surrogate_col="sales_id",
                 exact_cols=["quantity_sold"],
                 tolerance_cols=["net_amount"],
-            ).drop("operation")
-            return _write_counted(merged, dw_fact)
+                batch_order_col="sales_id",
+            )
 
         return queue.process_next(load_one)
 
@@ -503,10 +484,10 @@ def dw_load_pipeline(
             Step("load_dim_product", _load_dim("dim_product", "product_id"), depends_on=("load_dim_store",)),
             Step("load_dim_distributor", _load_dim("dim_distributor", "distributor_id"), depends_on=("load_dim_product",)),
             Step("load_dim_date", _load_dim("dim_date", "date_id"), depends_on=("load_dim_distributor",)),
-            # the reference DAG default_args: retries=1, retry_delay=5min
-            # (dags/retail_target_dw_load_pipeline.py:5-10); tests override
-            # nothing — a deterministic failure raises after 2 attempts
-            Step("load_fact_sales", load_fact, depends_on=("load_dim_date",), retries=1, retry_delay_s=0.0),
+            # the reference DAG default_args: retries=1
+            # (dags/retail_target_dw_load_pipeline.py:5-10); a
+            # deterministic failure raises after 2 attempts
+            Step("load_fact_sales", load_fact, depends_on=("load_dim_date",), retries=1),
         ],
     )
 

@@ -130,7 +130,7 @@ def run_available_now(
 ) -> StreamingQuery:
     """Drain everything currently pending, then stop (the reference's
     daily-batch cadence with streaming exactly-once bookkeeping). Blocks
-    until the drain completes."""
+    until the drain completes (:func:`await_drain`)."""
     writer = (
         df.writeStream.format(fmt)
         .outputMode(output_mode)
@@ -140,6 +140,16 @@ def run_available_now(
     )
     if path is not None:
         writer = writer.option("path", path)
-    query = writer.start()
-    query.awaitTermination(timeout_sec)
+    return await_drain(writer.start(), timeout_sec, f"query {query_name!r}")
+
+
+def await_drain(query: StreamingQuery, timeout_sec: float, name: str) -> StreamingQuery:
+    """Block until ``query`` terminates and return it; past
+    ``timeout_sec`` raise ``TimeoutError`` naming it, never hand back a
+    still-running query whose results are partial."""
+    if not query.awaitTermination(timeout_sec):
+        raise TimeoutError(
+            f"streaming {name} did not drain within {timeout_sec}s; the "
+            f"query is still running — raise timeout_sec or stop() it"
+        )
     return query

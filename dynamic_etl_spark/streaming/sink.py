@@ -23,16 +23,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from dynamic_etl_spark.io.sinks import write_staging_swap
 from dynamic_etl_spark.io.versioned import (
     latest_metadata,
     latest_version,
     read_versioned,
     write_versioned,
 )
-from dynamic_etl_spark.ops.dedup import dedup_keep_last_agg
-from dynamic_etl_spark.ops.keys import assign_surrogate_keys
-from dynamic_etl_spark.ops.merge import scd1_merge
+from dynamic_etl_spark.ops.merge import scd1_merge_into
+from dynamic_etl_spark.streaming.incremental import await_drain
 
 
 def _drain(stream_df: DataFrame, apply, checkpoint_dir: str, timeout_sec: int,
@@ -46,12 +44,7 @@ def _drain(stream_df: DataFrame, apply, checkpoint_dir: str, timeout_sec: int,
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(timeout_sec):
-        raise TimeoutError(
-            f"streaming {sink} did not drain within {timeout_sec}s; the "
-            f"query is still running — raise timeout_sec or stop() it"
-        )
-    return query
+    return await_drain(query, timeout_sec, sink)
 
 
 def _read_or_empty(spark, root: str, template: DataFrame) -> DataFrame:
@@ -133,89 +126,23 @@ def run_streaming_merge(
     surrogate_col: str,
     exact_cols: Sequence[str] = (),
     tolerance_cols: Sequence[str] = (),
-    op_col: str = "operation",
     batch_order_col: str | None = None,
     timeout_sec: int = 120,
 ) -> StreamingQuery:
-    """Continuously upsert a parquet table from a stream of change rows.
-
-    Each micro-batch runs the SCD-1 full-outer MERGE against the current
-    table and swaps the result into place atomically. The op column is
-    dropped from the persisted table (it is per-merge provenance, not
-    state). A missing ``table_path`` bootstraps from the first batch
-    (declared columns + surrogate keys from 1). Drains with
+    """Continuously upsert a parquet table from a stream of change rows:
+    every non-empty micro-batch is one :func:`ops.merge.scd1_merge_into`
+    of ``table_path`` (its parameters pass through). Drains with
     ``Trigger.AvailableNow`` and blocks, matching the repo's
     batch-cadence convention; remove the trigger for a continuous
     deployment.
-
-    Because the merge result REPLACES the table, the declared columns
-    (``surrogate_col`` + ``natural_key`` + ``exact_cols`` +
-    ``tolerance_cols``) must cover every existing table column — a
-    column the caller forgot to declare would otherwise be silently
-    destroyed by the rewrite, so the first batch raises instead.
-
-    ``scd1_merge`` requires the incoming side to be unique per natural
-    key (a full-outer join fans out otherwise, emitting duplicate
-    surrogate rows that compound on the next merge). A change stream
-    routinely delivers several change rows for one key in a micro-batch,
-    so each batch is collapsed first: pass ``batch_order_col`` (an
-    event-time / version column present in the stream) to keep the
-    LATEST change per key via a ``max_by`` aggregate (map-side combine,
-    hot-key safe). Without it, a batch containing duplicate natural keys
-    raises — there is no deterministic "last" row in an unordered batch.
     """
-    import os
-
-    spark = stream_df.sparkSession
-    declared = [surrogate_col, *natural_key, *exact_cols, *tolerance_cols]
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if batch_order_col is not None:
-            batch_df = dedup_keep_last_agg(
-                batch_df, keys=natural_key, order=[batch_order_col]
+        if not batch_df.isEmpty():
+            scd1_merge_into(
+                table_path, batch_df, natural_key, surrogate_col,
+                exact_cols, tolerance_cols, batch_order_col,
             )
-        else:
-            dups = (
-                batch_df.groupBy(*natural_key)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-            )
-            if not dups.isEmpty():
-                raise ValueError(
-                    "micro-batch contains duplicate natural keys; pass "
-                    "batch_order_col to keep the latest change per key"
-                )
-        if not os.path.exists(table_path):
-            initial = assign_surrogate_keys(
-                batch_df.select(*[c for c in declared if c != surrogate_col]),
-                order_cols=natural_key,
-                key_col=surrogate_col,
-            )
-            write_staging_swap(initial.select(*declared), table_path)
-            return
-        existing = spark.read.parquet(table_path)
-        undeclared = set(existing.columns) - set(declared)
-        if undeclared:
-            raise ValueError(
-                f"table has columns the merge would destroy (declare them "
-                f"as exact/tolerance cols): {sorted(undeclared)}"
-            )
-        merged = scd1_merge(
-            existing,
-            batch_df,
-            natural_key=natural_key,
-            surrogate_col=surrogate_col,
-            exact_cols=exact_cols,
-            tolerance_cols=tolerance_cols,
-            op_col=op_col,
-        ).drop(op_col)
-        # self-referential rewrite is safe: the swap fully writes the
-        # staging copy (executing the read of the current table)
-        # before any rename touches final_path
-        write_staging_swap(merged, table_path)
 
     return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "merge")
 

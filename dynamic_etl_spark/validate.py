@@ -18,7 +18,6 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from dynamic_etl_spark.session import local_df
 
@@ -71,17 +70,6 @@ class ValidationSpec:
     freshness: tuple[str, Column] | None = None
     cross_column: tuple[CrossColumnRule, ...] = ()
     extra_identifiers: tuple[str, ...] = field(default_factory=tuple)
-
-
-REPORT_SCHEMA = T.StructType(
-    [
-        T.StructField("check_name", T.StringType(), False),
-        T.StructField("column_name", T.StringType(), True),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("observed", T.LongType(), True),
-        T.StructField("threshold", T.LongType(), True),
-    ]
-)
 
 
 def validate(spark: SparkSession, df: DataFrame, spec: ValidationSpec) -> DataFrame:

@@ -490,3 +490,23 @@ def test_compact_table_writes_a_correct_sidecar(spark, scratch):
     assert os.path.isfile(_sidecar(path))
     assert read_table(spark, path).schema == spark.read.parquet(path).schema
     assert read_table(spark, path).count() == 1_000
+
+
+def test_available_now_drain_timeout_raises_naming_the_query(spark, tmp_path):
+    """A drain that outlives its timeout raises instead of handing back a
+    still-running query whose memory-sink results are partial."""
+    from dynamic_etl_spark.streaming import file_stream, run_available_now
+
+    src = str(tmp_path / "feed")
+    spark.range(10).write.parquet(src)
+    stream = file_stream(spark, src, spark.read.parquet(src).schema)
+    try:
+        with pytest.raises(TimeoutError, match="'drain_timeout_probe'"):
+            run_available_now(
+                stream, str(tmp_path / "ckpt"), "drain_timeout_probe",
+                output_mode="append", timeout_sec=0.001,
+            )
+    finally:
+        for q in spark.streams.active:
+            if q.name == "drain_timeout_probe":
+                q.stop()

@@ -52,7 +52,7 @@ JOB_BUDGETS = {
     "incremental_near_dup_exacthash": 37,  # xxhash twin's band + the md5
     # signature chain's extra sub-jobs (measured 33 after the r9 cut;
     # r14 candidate-leaf: measured 32)
-    "incremental_curation_admission": 66,  # r9 composed gate: tier-1
+    "incremental_curation_admission": 61,  # r9 composed gate: tier-1
     # fingerprint checkpoint + the full lexical admission chain + the
     # semantic fit/cogroup chain + attribution tail — cost ~ sum of the
     # single-tier admission queries, which is the point (r10: measured
@@ -68,7 +68,9 @@ JOB_BUDGETS = {
     # incremental_semantic_dedup below); then +2 (measured 66) from the
     # lexical tier's candidate-pair leaf checkpoint, which buys ~1.5-3s
     # of wall per merge by collapsing the verify plan's duplicated
-    # banded-join subtrees (22 SMJ + 42 BHJ -> ~14 joins at sf0.1)
+    # banded-join subtrees (22 SMJ + 42 BHJ -> ~14 joins at sf0.1).
+    # One shared ops/curation_gate for registry and sink: measured 60
+    # in three runs, pinned 61
     "incremental_semantic_dedup": 29,  # one MLlib fit on the corpus
     # (clamp count + seeded-random init + capped iterations) + the
     # dup_pairs checkpoint + admit_batch's take + the surface tail
@@ -82,20 +84,23 @@ JOB_BUDGETS = {
     # r10 steady-state gate: per-batch admission against prebuilt
     # checkpointed stores (measured 47 at sf0.01 warm; the session-once
     # store build is excluded — see _WARM_FIRST). r14 fused semantic
-    # tier: measured 41; + lexical candidate leaf: 43
-    "incremental_curation_admission_steady": 43,
+    # tier: measured 41; + lexical candidate leaf: 43; one shared gate:
+    # measured 37 in three runs
+    "incremental_curation_admission_steady": 38,
     # r12 fourth-tier gate: the bootstrap gate + the DSIR fit's gram
     # pass/checkpoint + the ratio-table count + the survivor checkpoint
     # and scoring tail (measured 80). r13 plan review: +3 — the same
     # explicit concurrent-state-build checkpoints as the 3-tier form
     # above (measured 91). r14 fused semantic tier: measured 86; +
-    # lexical candidate leaf: 88
-    "incremental_curation_admission_dsir": 88,
+    # lexical candidate leaf: 88; one shared gate: measured 81 in three
+    # runs
+    "incremental_curation_admission_dsir": 82,
     # r12 steady form: per-batch four-tier admission against the
     # prebuilt stores + frozen ratio table (measured 56 warm; the
     # session-once state build is excluded — see _WARM_FIRST). r14
-    # fused semantic tier: measured 51; + lexical candidate leaf: 53
-    "incremental_curation_admission_dsir_steady": 53,
+    # fused semantic tier: measured 51; + lexical candidate leaf: 53;
+    # one shared gate: measured 46 in three runs
+    "incremental_curation_admission_dsir_steady": 47,
     # r12 fused pipeline: the curated-corpus checkpoint (URL survivors
     # + C4 gates materialize there) + the lazy hybrid-RRF tail over the
     # checkpointed corpus (measured 34)
@@ -211,12 +216,14 @@ def test_meter_detects_an_extra_checkpoint(spark):
 #: reads dim emptiness from the pipeline context, and the fact generator
 #: sizes all its dimension groups in one collect. Before that the same
 #: day ran 43/20/33/46 jobs (here and at the benchmark's 20k-row size
-#: alike); now 17/14/18/14. One extra eager action anywhere trips this.
+#: alike); then 17/14/18/14, and 17/14/18/13 once the fact load
+#: bootstrapped its absent DW table instead of merging against an empty
+#: one. One extra eager action anywhere trips this.
 RETAIL_DAY_JOB_BUDGETS = {
     "generation": 18,
     "extract": 15,
     "validation": 19,
-    "dw_load": 15,
+    "dw_load": 14,
 }
 
 

@@ -4,6 +4,7 @@ resolution."""
 
 from __future__ import annotations
 
+import os
 import shutil
 from pathlib import Path
 
@@ -167,6 +168,59 @@ def test_scd1_bulk_insert_guard_and_sparse_mode(spark):
     ).collect()[0]
     assert stats["n"] == 200 and stats["nd"] == 200 and stats["mn"] > 10
     assert out.filter(F.col("operation") == "KEEP").count() == 1
+
+
+def test_scd1_merge_into_bootstrap_guard_and_batch_collapse(spark, tmp_path):
+    """The one SCD-1 table load (DW fact load, streaming merge sink): an
+    absent table bootstraps to exactly what a merge against an empty
+    table commits; a duplicated natural key is refused without an order
+    column and collapsed to its latest row with one; a load after a crash
+    inside the swap merges into the surviving backup; a table column the
+    caller did not declare is refused, table untouched."""
+    from dynamic_etl_spark.io import read_table
+    from dynamic_etl_spark.ops.merge import scd1_merge, scd1_merge_into
+
+    def rows(path):
+        return sorted(tuple(r) for r in read_table(spark, path).collect())
+
+    cols = dict(natural_key=["nk"], surrogate_col="sk", exact_cols=["q"],
+                tolerance_cols=["v"])
+    table = str(tmp_path / "t")
+    batch = spark.createDataFrame(
+        [("k3", 3, 30.0), ("k1", 1, 10.0), ("k2", 2, 20.0)], "nk string, q long, v double"
+    )
+    assert scd1_merge_into(table, batch, **cols) == 3
+    empty = spark.createDataFrame([], "sk long, nk string, q long, v double")
+    via_merge = scd1_merge(empty, batch, **cols).drop("operation")
+    assert read_table(spark, table).schema == via_merge.schema
+    assert rows(table) == sorted(tuple(r) for r in via_merge.collect())
+    assert rows(table) == [(1, "k1", 1, 10.0), (2, "k2", 2, 20.0), (3, "k3", 3, 30.0)]
+
+    changes = spark.createDataFrame(
+        [("k1", 1, 11.0, 1), ("k1", 1, 12.0, 2), ("k9", 9, 90.0, 1)],
+        "nk string, q long, v double, seq int",
+    )
+    with pytest.raises(ValueError, match="duplicate natural keys"):
+        scd1_merge_into(table, changes, **cols)
+    assert len(rows(table)) == 3
+    assert scd1_merge_into(table, changes, batch_order_col="seq", **cols) == 4
+    assert read_table(spark, table).columns == ["sk", "nk", "q", "v"]
+    assert rows(table) == [
+        (1, "k1", 1, 12.0), (2, "k2", 2, 20.0), (3, "k3", 3, 30.0), (4, "k9", 9, 90.0),
+    ]
+    # a crash between the swap's two renames leaves only the backup
+    os.rename(table, table + ".old")
+    one = spark.createDataFrame([("k2", 2, 25.0)], "nk string, q long, v double")
+    assert scd1_merge_into(table, one, **cols) == 4
+    assert rows(table)[1] == (2, "k2", 2, 25.0)
+
+    guarded = str(tmp_path / "guarded")
+    spark.createDataFrame(
+        [(1, "k1", 1, 1.0, "keep me")], "sk long, nk string, q long, v double, note string"
+    ).write.parquet(guarded)
+    with pytest.raises(ValueError, match="destroy"):
+        scd1_merge_into(guarded, batch, **cols)
+    assert rows(guarded) == [(1, "k1", 1, 1.0, "keep me")]
 
 
 def test_mini_dim_upsert_ignores_nulls_and_is_idempotent(spark):

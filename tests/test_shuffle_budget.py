@@ -366,19 +366,20 @@ SHUFFLE_BUDGET = {
     "incremental_semantic_dedup": 4,
     # r9 composed admission gate: the three tiers' heavy joins all sit
     # behind eager checkpoints; the surfaced plan is the attribution
-    # joins over leaves (measured 4)
-    "incremental_curation_admission": 4,
+    # joins over leaves (measured 4); one shared ops/curation_gate with
+    # max-tier attribution: measured 2 for all four forms in three runs
+    "incremental_curation_admission": 3,
     # r10 steady-state form: identical surfaced plan — the prebuilt
     # stores swap checkpointed-leaf sources in, never an exchange
-    "incremental_curation_admission_steady": 4,
+    "incremental_curation_admission_steady": 3,
     # r12 fourth-tier form: the three tiers' plan + the DSIR gate's
     # survivor-sized scoring tail (gram window + doc agg — the
     # dsir_importance_selection shuffles on a checkpointed leaf) and
     # one more attribution join over broadcastable flags (measured 5)
-    "incremental_curation_admission_dsir": 5,
+    "incremental_curation_admission_dsir": 3,
     # r12 steady form: identical surfaced plan over prebuilt stores +
     # the frozen ratio table (measured 5)
-    "incremental_curation_admission_dsir_steady": 5,
+    "incremental_curation_admission_dsir_steady": 3,
     "simhash_near_dup": 2,
     # reviewed, not bumped: 2 fanout round-robins (one per branch, same
     # as the xxhash twin's 2) + 2 bit-vote groupBy exchanges the per-row
