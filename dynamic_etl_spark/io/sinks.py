@@ -5,7 +5,7 @@ Batched-insert atomicity (S9) needs no code: Spark's file committer
 stages task output and publishes on job commit, which is the reference's
 batch-then-single-commit (load_fact_sales_dw.py:376-387) at executor
 scale. The staging-table + MERGE + drop dance (S10) becomes
-write-new-then-atomic-swap on plain parquet/CSV.
+write-new-then-atomic-swap on plain parquet.
 """
 
 from __future__ import annotations
@@ -17,9 +17,7 @@ import uuid
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-#: Committed-schema sidecar written into every unpartitioned parquet table
-#: ``write_staging_swap`` publishes; ``io.sources.read_table`` reads it.
-SCHEMA_SIDECAR = "_schema.json"
+from dynamic_etl_spark.io.table import read_table, write_table
 
 
 def _hive_partition_cols(path: str) -> list[str]:
@@ -88,8 +86,6 @@ def restore_interrupted_swap(final_path: str) -> None:
 def write_staging_swap(
     df: DataFrame,
     final_path: str,
-    fmt: str = "parquet",
-    options: dict[str, str] | None = None,
     partition_by: tuple[str, ...] = (),
 ) -> None:
     """S10 — staging + atomic swap: write the full new table next to the
@@ -108,24 +104,16 @@ def write_staging_swap(
     at which point the new table already exists in staging, or (b) after
     a completed swap.
 
-    Unpartitioned parquet tables also get ``_schema.json`` (the written
-    ``df.schema``) in staging before the rename, so the schema commits
-    atomically with the data and ``io.sources.read_table`` can skip the
-    footer-inference job every plain ``spark.read.parquet`` runs. The
-    ``_`` prefix keeps it out of Spark's file listing."""
+    The staging directory is written by ``io.table.write_table``, flat
+    or partitioned, so its ``_schema.json`` sidecar commits atomically
+    with the data and ``io.table.read_table`` needs no inference."""
     parent = os.path.dirname(os.path.abspath(final_path))
     os.makedirs(parent, exist_ok=True)
     staging = os.path.join(parent, f".staging-{uuid.uuid4().hex}")
     backup = final_path + ".old"
     restore_interrupted_swap(final_path)
     try:
-        writer = df.write.mode("overwrite").format(fmt).options(**(options or {}))
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(staging)
-        if fmt == "parquet" and not partition_by:
-            with open(os.path.join(staging, SCHEMA_SIDECAR), "w") as fh:
-                fh.write(df.schema.json())
+        write_table(df, staging, partition_by)
         if os.path.exists(final_path):
             # a completed-swap crash can orphan the backup; clear it only
             # NOW (new table safely in staging) — renaming onto a
@@ -159,9 +147,7 @@ def compact_table(
     spark,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    fmt: str = "parquet",
     rebalance: bool = False,
-    options: dict[str, str] | None = None,
 ) -> int:
     """Small-file compaction: rewrite a table directory toward
     ``ceil(total_bytes / target_file_bytes)`` files via the crash-safe
@@ -171,10 +157,9 @@ def compact_table(
     does; periodic compaction is the maintenance half of any
     incremental-write design.
 
-    Non-parquet formats MUST pass the same reader ``options`` the table
-    was written with (a pipe-delimited header CSV read with defaults
-    would be re-persisted mangled); they are applied to both the read
-    and the rewrite. ``rebalance=False`` (default) uses ``coalesce``: no
+    The table is read through ``io.table.read_table``, so a table this
+    package committed keeps its written schema, partition-column types
+    included. ``rebalance=False`` (default) uses ``coalesce``: no
     shuffle, but the file count cannot EXCEED the scan's parallelism and
     sizes follow the original layout; ``rebalance=True`` pays one
     round-robin shuffle for evenly-sized output at exactly the target
@@ -192,17 +177,11 @@ def compact_table(
     per partition → one file). ``rebalance``/``target_file_bytes`` are
     ignored for partitioned layouts.
     """
-    if fmt != "parquet" and not options:
-        raise ValueError(
-            f"compacting fmt={fmt!r} requires the reader options the "
-            f"table was written with (sep/header/...); defaults would "
-            f"corrupt it"
-        )
     pcols = _hive_partition_cols(path)
-    df = spark.read.format(fmt).options(**(options or {})).load(path)
+    df = read_table(spark, path)
     if pcols:
         shaped = df.repartition(*[F.col(c) for c in pcols])
-        write_staging_swap(shaped, path, fmt=fmt, options=options, partition_by=tuple(pcols))
+        write_staging_swap(shaped, path, partition_by=tuple(pcols))
     else:
         total = 0
         for root, _dirs, files in os.walk(path):
@@ -211,7 +190,7 @@ def compact_table(
                     total += os.path.getsize(os.path.join(root, f))
         n = max(1, -(-total // int(target_file_bytes)))
         shaped = df.repartition(n) if rebalance else df.coalesce(n)
-        write_staging_swap(shaped, path, fmt=fmt, options=options)
+        write_staging_swap(shaped, path)
     return sum(
         1
         for root, _dirs, files in os.walk(path)

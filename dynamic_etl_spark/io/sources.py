@@ -11,14 +11,10 @@ codegen, still one scan.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from dynamic_etl_spark.io.sinks import SCHEMA_SIDECAR
 
 #: Reference na_values (load_fact_sales_dw.py:85-88).
 NULL_SENTINELS = ("", "NULL", "null", "NA")
@@ -50,25 +46,6 @@ def read_csv_schema_on_read(
         for c in df.columns
     ]
     return df.select(*cleaned)
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet table read that takes its schema from the ``_schema.json``
-    sidecar ``write_staging_swap`` commits with the data, instead of the
-    one-task footer-inference job a plain ``spark.read.parquet`` runs per
-    read (a fixed ~0.1 s of planning and scheduling that dominates small
-    daily tables). Tables without the sidecar — partitioned layouts,
-    tables some other writer produced — fall back to inference.
-
-    The sidecar is authoritative only while every write of the table
-    goes through ``write_staging_swap``; a table appended to in place
-    with a different schema must not be read through here."""
-    try:
-        with open(os.path.join(path, SCHEMA_SIDECAR)) as fh:
-            schema = T.StructType.fromJson(json.load(fh))
-    except FileNotFoundError:
-        return spark.read.parquet(path)
-    return spark.read.schema(schema).parquet(path)
 
 
 def latest_file(directory: str, suffix: str = ".csv", prefix: str = "") -> str:

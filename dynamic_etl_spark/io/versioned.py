@@ -11,14 +11,17 @@ plus an atomic commit primitive; this module is that design reduced to
 what a posix/HDFS-style filesystem gives us natively:
 
 - data is written to an immutable, uniquely-named directory under
-  ``<root>/_versions/`` — invisible until committed;
+  ``<root>/_versions/`` by ``io.table.write_table`` — invisible until
+  committed;
 - a commit is the creation of ``<root>/_commits/{version:08d}.json``
   via hard-link-from-temp, which is atomic AND exclusive: exactly one
   writer can create version N, and the record never exists half-written
-  (content is fully durable before the link);
+  (content is fully durable before the link). It holds ``version``,
+  ``dir`` (the data directory's name) and the caller's ``metadata``;
 - readers resolve ``max(_commits/*.json)`` and scan the data directory
-  it names — they see the newest COMPLETE snapshot, never a partial
-  write, and old snapshots stay readable until ``vacuum``;
+  it names through ``io.table.read_table`` — they see the newest
+  COMPLETE snapshot, never a partial write, and old snapshots stay
+  readable until ``vacuum``;
 - a writer declares the version it based its computation on; if another
   writer committed first, the CAS fails and ``ConcurrentWriteError``
   tells it to recompute from the new snapshot (optimistic concurrency —
@@ -50,6 +53,8 @@ import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from dynamic_etl_spark.io.table import read_table, write_table
 
 _VERSIONS = "_versions"
 _COMMITS = "_commits"
@@ -101,16 +106,15 @@ def _commit_record(root: str, version: int) -> dict:
 def write_versioned(
     df: DataFrame,
     root: str,
-    fmt: str = "parquet",
-    options: dict[str, str] | None = None,
-    partition_by: tuple[str, ...] = (),
     base_version: int | None = None,
     expected_base: bool = False,
     metadata: dict | None = None,
     put_if_absent=None,
 ) -> int:
     """Write ``df`` as the next snapshot of the table at ``root`` and
-    atomically commit it. Returns the committed version number.
+    atomically commit it. Returns the committed version number. The
+    snapshot is parquet plus ``_schema.json`` (``io.table.write_table``);
+    the commit record holds ``version``, ``dir`` and ``metadata``.
 
     ``base_version``/``expected_base``: pass the version the computation
     read from (``latest_version(root)``) with ``expected_base=True`` to
@@ -145,11 +149,8 @@ def write_versioned(
 
     data_name = f"v-{uuid.uuid4().hex}"
     data_dir = os.path.join(root, _VERSIONS, data_name)
-    writer = df.write.mode("overwrite").format(fmt).options(**(options or {}))
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
     try:
-        writer.save(data_dir)
+        write_table(df, data_dir)
 
         while True:
             current = latest_version(root)
@@ -158,14 +159,7 @@ def write_versioned(
                     f"table {root!r} advanced past base version {base_version!r}; recompute"
                 )
             version = (current if current is not None else -1) + 1
-            record = {
-                "version": version,
-                "dir": data_name,
-                "fmt": fmt,
-                "options": options or {},
-                "partition_by": list(partition_by),
-                "metadata": metadata or {},
-            }
+            record = {"version": version, "dir": data_name, "metadata": metadata or {}}
             # atomic + exclusive publish through the pluggable primitive
             # (local hard-link CAS by default, conditional PUT on object
             # stores); a False return means another writer won this
@@ -183,18 +177,13 @@ def write_versioned(
 def read_versioned(
     spark: SparkSession, root: str, version: int | None = None
 ) -> DataFrame:
-    """Scan the newest committed snapshot (or a pinned ``version``).
-    Format/options/partitioning come from the commit record, so readers
-    need no out-of-band schema-of-the-write knowledge."""
+    """Scan the newest committed snapshot (or a pinned ``version``)
+    through ``io.table.read_table``: its ``_schema.json`` spares the
+    footer-inference job (older snapshots without one infer)."""
     v = latest_version(root) if version is None else version
     if v is None:
         raise FileNotFoundError(f"no committed versions at {root!r}")
-    rec = _commit_record(root, v)
-    return (
-        spark.read.format(rec["fmt"])
-        .options(**rec["options"])
-        .load(os.path.join(root, _VERSIONS, rec["dir"]))
-    )
+    return read_table(spark, os.path.join(root, _VERSIONS, _commit_record(root, v)["dir"]))
 
 
 def latest_metadata(root: str) -> dict:

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.io.sinks import restore_interrupted_swap, write_counted
-from dynamic_etl_spark.io.sources import read_table
+from dynamic_etl_spark.io.table import read_table
 from dynamic_etl_spark.ops.agg import high_water_mark
 from dynamic_etl_spark.ops.dedup import dedup_keep_last_agg
 from dynamic_etl_spark.ops.joins import anti_join, any_change

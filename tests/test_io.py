@@ -272,9 +272,6 @@ def test_compact_table_reduces_files_and_preserves_rows(spark, scratch):
     assert 2 <= n4 <= 8
     assert len(glob.glob(f"{path}/part-*")) == n4
     assert spark.read.parquet(path).count() == 10_000
-    # non-parquet formats without reader options are rejected, not mangled
-    with pytest.raises(ValueError, match="options"):
-        compact_table(spark, path, fmt="csv")
 
 
 def test_parquet_merge_schema_reads_evolved_table(spark, scratch):
@@ -454,13 +451,15 @@ def test_read_table_without_sidecar_falls_back_to_inference(spark, scratch):
     assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3]
 
 
-def test_failed_swap_keeps_old_table_and_sidecar(spark, scratch):
+@pytest.mark.parametrize("partition_by", [(), ("v",)], ids=["flat", "partitioned"])
+def test_failed_swap_keeps_old_table_and_sidecar(spark, scratch, partition_by):
     from pyspark.sql import types as T
 
     from dynamic_etl_spark.io import read_table
 
     final = str(scratch / "kept")
-    write_staging_swap(spark.range(5).withColumn("v", F.lit("good")), final)
+    good = spark.range(5).withColumn("v", F.lit("good"))
+    write_staging_swap(good, final, partition_by=partition_by)
     with open(_sidecar(final)) as fh:
         before = fh.read()
 
@@ -468,14 +467,43 @@ def test_failed_swap_keeps_old_table_and_sidecar(spark, scratch):
         raise RuntimeError("writer died")
         yield
 
-    schema = T.StructType([T.StructField("other", T.StringType())])
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in ("other", *partition_by)])
     with pytest.raises(Exception):
-        write_staging_swap(spark.range(1).mapInPandas(boom, schema), final)
+        write_staging_swap(
+            spark.range(1).mapInPandas(boom, schema), final, partition_by=partition_by
+        )
     with open(_sidecar(final)) as fh:
         assert fh.read() == before
     kept = read_table(spark, final)
     assert kept.columns == ["id", "v"] and kept.count() == 5
     assert not [n for n in os.listdir(scratch) if n.startswith(".staging")]
+
+
+def test_compacting_a_partitioned_swap_keeps_string_partition_keys(spark, scratch):
+    """A zero-padded string partition key survives a partitioned swap and
+    a compaction: the sidecar, not the directory names, types the key."""
+    from dynamic_etl_spark.io import read_table
+    from dynamic_etl_spark.io.sinks import compact_table
+
+    path = str(scratch / "by_store")
+    df = spark.createDataFrame(
+        [(i, f"r{i}", f"{i % 3 + 1:03d}") for i in range(30)],
+        "id long, v string, store_code string",
+    )
+    write_staging_swap(df.repartition(6), path, partition_by=("store_code",))
+    compact_table(spark, path)
+    assert sorted(n for n in os.listdir(path) if not n.startswith(("_", "."))) == [
+        "store_code=001", "store_code=002", "store_code=003",
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("read-partitioned-table", "read-partitioned-table")
+    try:
+        back = read_table(spark, path)
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup("read-partitioned-table")
+    assert back.schema == df.schema
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
 def test_compact_table_writes_a_correct_sidecar(spark, scratch):

@@ -39,6 +39,27 @@ def test_versioned_write_read_roundtrip(spark, tmp_path):
     assert read_versioned(spark, root, version=0).count() == 10
 
 
+def test_read_versioned_takes_the_committed_schema(spark, tmp_path):
+    """A snapshot commits its ``_schema.json``: reading it schedules no
+    Spark job and yields the footer schema. A snapshot without one (as
+    written before the sidecar existed) still reads, by inference."""
+    root = str(tmp_path / "t")
+    write_versioned(_table(spark, 10, "a"), root)
+    snapshot = os.path.join(root, "_versions", V._commit_record(root, 0)["dir"])
+    sc = spark.sparkContext
+    sc.setJobGroup("read-versioned", "read-versioned")
+    try:
+        df = read_versioned(spark, root)
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup("read-versioned")
+    assert df.schema == spark.read.parquet(snapshot).schema
+    rows = sorted(map(tuple, df.collect()))
+
+    os.remove(os.path.join(snapshot, "_schema.json"))
+    assert sorted(map(tuple, read_versioned(spark, root).collect())) == rows
+
+
 def test_versioned_stale_writer_cannot_clobber(spark, tmp_path):
     """Optimistic concurrency: writer A bases on v0, writer B commits v1
     first; A's commit is rejected and B's snapshot survives untouched."""
