@@ -23,12 +23,13 @@ driver-side lists, no collect, scales to any dimension size.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dynamic_etl_spark.ops.clean import synthesize_sku, tiered_discount_rate
+from dynamic_etl_spark.ops.clean import format_sku, tiered_discount_rate
 from dynamic_etl_spark.session import local_df
 
 # --------------------------------------------------------------------------
@@ -196,6 +197,22 @@ SUBCATEGORIES: dict[str, tuple[str, ...]] = {
     "Baby Care": ("Baby Powder", "Baby Wipes", "Diapers", "Baby Soap"),
 }
 
+
+def _sku_code(value: str) -> str:
+    """``ops.clean._alpha_code`` of a catalog value, evaluated here: a
+    per-row Spark ``upper`` would initialise ICU case mapping in the JVM
+    (about 2 s of CPU on first use) to recompute a fixed answer."""
+    return re.sub("[^A-Z]", "", value.upper())[:3]
+
+
+#: SKU code of every brand: brands are always ``Brand<n>``
+_BRAND_CODE = _sku_code("Brand")
+
+#: SKU code per sub-category
+_SUBCATEGORY_CODES: dict[str, str] = {
+    s: _sku_code(s) for subs in SUBCATEGORIES.values() for s in subs
+}
+
 #: price range per category (uniform within; F30)
 PRICE_RANGES: dict[str, tuple[float, float]] = {
     "Grocery": (40.0, 600.0), "Beverage": (20.0, 150.0), "Dairy": (25.0, 400.0),
@@ -322,7 +339,12 @@ def generate_products(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
         brand,
         flavour.alias("flavour"),
         size,
-        synthesize_sku(F.lit("PRD"), brand, subcat, i + 1).alias("sku"),
+        format_sku(
+            F.lit("PRD"),
+            F.lit(_BRAND_CODE),
+            F.create_map(*[F.lit(x) for kv in _SUBCATEGORY_CODES.items() for x in kv])[subcat],
+            i + 1,
+        ).alias("sku"),
         pick_from(seed + 18, ("LTR", "KG", "G", "ML", "PCS"), i).alias("uom"),
         F.round(price, 2).cast("decimal(12,2)").alias("unit_price"),
         weighted_choice(uniform(seed + 19, i), BUSINESS_STAGE_WEIGHTS).alias("business_stage"),

@@ -1,6 +1,8 @@
 """The committed-table format: parquet plus a ``_schema.json`` sidecar.
 Every table ``io.sinks`` swaps in or ``io.versioned`` commits is written
-by :func:`write_table` and read by :func:`read_table`."""
+by :func:`write_table` and read by :func:`read_table`, which also reads
+foreign parquet that carries no sidecar (the catalog's one-file corpus
+tables)."""
 
 from __future__ import annotations
 
@@ -30,13 +32,34 @@ def write_table(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) ->
         fh.write(schema.json())
 
 
+#: Session confs that change what footer inference returns for a file;
+#: part of the memo key of :func:`_file_schema`.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: (path, size, mtime_ns, inode, inference confs) -> inferred schema
+_INFERRED: dict[tuple, T.StructType] = {}
+
+
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     """Parquet table read that takes its schema from the sidecar
     :func:`write_table` committed with the data, instead of the one-task
     footer-inference job a plain ``spark.read.parquet`` runs per read (a
-    fixed ~0.1 s that dominates small daily tables) and instead of typing
-    partition columns from directory names (``k=001`` would read as 1).
-    Tables without the sidecar fall back to inference.
+    fixed ~0.1 s that dominates small daily tables and short queries)
+    and instead of typing partition columns from directory names
+    (``k=001`` would read as 1).
+
+    Without a sidecar, the schema is inferred. A single parquet file (the
+    catalog's corpus tables) is inferred once per process: the result is
+    remembered under the file's path, size, mtime and inode and the
+    session confs that change inference, so a rewritten file or a
+    changed conf infers afresh. A directory without a sidecar infers on
+    every read, since files can land in it without changing its own
+    stat.
 
     The sidecar is authoritative only while every write of the table
     goes through :func:`write_table`; a table appended to in place with
@@ -44,6 +67,22 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     try:
         with open(os.path.join(path, SCHEMA_SIDECAR)) as fh:
             schema = T.StructType.fromJson(json.load(fh))
+    except NotADirectoryError:
+        schema = _file_schema(spark, path)
     except FileNotFoundError:
         return spark.read.parquet(path)
     return spark.read.schema(schema).parquet(path)
+
+
+def _file_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The footer-inferred schema of the single parquet file ``path``,
+    inferred at most once per file version and inference conf."""
+    st = os.stat(path)
+    key = (
+        os.path.abspath(path), st.st_size, st.st_mtime_ns, st.st_ino,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _INFERRED.get(key)
+    if schema is None:
+        schema = _INFERRED[key] = spark.read.parquet(path).schema
+    return schema

@@ -144,12 +144,15 @@ def synthesize_sku(prefix: Column, brand: Column, subcategory: Column, counter: 
     """F7 — `PREFIX-BRA-SUB-00042` (reference generate_sku,
     scripts/dim_product_daily.py:938-946: alpha-only uppercase 3-char codes,
     zero-padded 5-digit counter)."""
+    return format_sku(prefix, _alpha_code(brand), _alpha_code(subcategory), counter)
+
+
+def format_sku(prefix: Column, brand_code: Column, sub_code: Column, counter: Column) -> Column:
+    """The SKU layout of :func:`synthesize_sku` over codes already
+    derived (a generator whose brand and sub-category codes are known
+    in advance skips the per-row ``upper``)."""
     return F.concat_ws(
-        "-",
-        prefix,
-        _alpha_code(brand),
-        _alpha_code(subcategory),
-        F.lpad(counter.cast("string"), 5, "0"),
+        "-", prefix, brand_code, sub_code, F.lpad(counter.cast("string"), 5, "0")
     )
 
 

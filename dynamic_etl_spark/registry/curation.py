@@ -1113,8 +1113,11 @@ _CURATION_TOKLEN = f"len({_SQL_TOKENS})"
 #: The ONE tier-3 grams CTE both cascade configurations interpolate
 #: (review r8: it was copy-pasted into each; an edit to the gram
 #: definition would have forked the two driver-windowed oracles'
-#: tier-3 semantics silently).
-_TIER3_SH_CTE = f"""sh AS (
+#: tier-3 semantics silently). MATERIALIZED: it is read two or three
+#: times and DuckDB re-runs an inlined CTE — here the whole cascade
+#: above it — per reference (the LSH oracle took 237 s instead of 2.5 s
+#: at sf0.001).
+_TIER3_SH_CTE = f"""sh AS MATERIALIZED (
   SELECT doc_id, lang, source,
          list_distinct(list_transform(
            range(0, greatest(len(toks) - 3, 0) + 1),

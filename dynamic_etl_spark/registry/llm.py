@@ -731,7 +731,7 @@ def sql_minhash_cand_ctes(
     the single-corpus shape shared by the standalone exacthash query and
     the LSH-configured curation cascade (registry/curation.py)."""
     return f"""{sql_minhash_band_ctes(src, "", num_hashes, bands)},
-cand AS (
+cand AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM bands a JOIN bands b
     ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash

@@ -8,6 +8,9 @@ plain SQL. Mixed PASS/FAIL statuses prove both branches of each gate.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -671,6 +674,43 @@ _FK_EDGES = (
 )
 
 
+def _fk_keys(j: int, cks: tuple) -> list[str]:
+    """Column names of edge ``j``'s dirtied child key parts."""
+    return [f"__e{j}k{i}" for i in range(len(cks))]
+
+
+def _fk_flag_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The one edge check both FK queries share: per CHILD table, one
+    scan carrying every edge's dirtied key parts (``__e{j}k{i}``) and a
+    hit flag per edge (``__e{j}hit``: the key tuple exists in the
+    parent). The flag is a correlated EXISTS, which plans as an
+    ExistenceJoin: it never fans out, so the parent needs no DISTINCT
+    (and no shuffle); a NULL key part never matches, so NULL plants
+    count as orphans."""
+    by_child: dict[str, list[int]] = {}
+    for j, (_, child, _, _, _) in enumerate(_FK_EDGES):
+        by_child.setdefault(child, []).append(j)
+    frames = {}
+    for child, edges in by_child.items():
+        c = t(spark, sf_dir, child).select(*[
+            _fk_dirty(ck).alias(k)
+            for j in edges
+            for ck, k in zip(_FK_EDGES[j][2], _fk_keys(j, _FK_EDGES[j][2]))
+        ]).alias("__child")
+        hits = []
+        for j in edges:
+            _, _, cks, parent, pks = _FK_EDGES[j]
+            cond = reduce(operator.and_, [
+                F.col(pk) == F.col(f"__child.{k}").outer()
+                for pk, k in zip(pks, _fk_keys(j, cks))
+            ])
+            hits.append(
+                t(spark, sf_dir, parent).where(cond).exists().alias(f"__e{j}hit")
+            )
+        frames[child] = c.select("*", *hits)
+    return frames
+
+
 def fk_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warehouse-wide referential-integrity audit: one row per FK edge
     with child rows, orphan rows (child key matching no parent — NULL
@@ -680,11 +720,17 @@ def fk_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     relationship a bad load broke before any consumer join silently
     drops rows.
 
-    Plan: per edge, a LEFT join against the DISTINCT parent keys and a
-    conditional count — dimension-sized sides broadcast (Catalyst picks
-    it from stats); the two fact-to-fact edges shuffle on their join
-    key exactly as the consumer joins would, which is the point: the
-    audit costs what one run of the join it protects costs.
+    Plan: one scan per CHILD table (:func:`_fk_flag_frames`), each edge
+    flagged by an ExistenceJoin against its parent's key columns —
+    dimension-sized parents broadcast (Catalyst picks it from stats),
+    with no DISTINCT shuffle since an existence join cannot fan out; the
+    fact-to-fact edges shuffle on their join key only when the parent
+    outgrows the broadcast threshold, exactly as the consumer joins
+    would, which is the point: the audit costs what one run of the join
+    it protects costs. The five flag frames union into ONE global
+    aggregate (one exchange) whose per-edge counts ``inline`` into the
+    edge rows. A flag is NULL on other child tables' rows, so
+    ``count(flag)`` is the edge's child rows.
 
     The clean fixture has zero orphans everywhere, which would leave
     the orphan branch hash-unexercised — so child keys are planted
@@ -696,33 +742,31 @@ def fk_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     reports a nonzero mixed PASS/FAIL row like validation_report.
 
     Composite edges (r8): every key PART gets the dirty rule
-    independently, the join equates all parts (a NULL part never
-    matches — unresolvable either way), and the parent side is the
-    DISTINCT clean key tuples. Worst-offender attribution lives in the
-    sibling :func:`fk_orphan_attribution`."""
-    per_edge = []
-    for name, child, cks, parent, pks in _FK_EDGES:
-        c = t(spark, sf_dir, child).select(
-            *[_fk_dirty(ck).alias(f"__k{i}") for i, ck in enumerate(cks)]
-        )
-        p = (
-            t(spark, sf_dir, parent)
-            .select(*[F.col(pk).alias(f"__k{i}") for i, pk in enumerate(pks)])
-            .distinct()
-        )
-        keys = [f"__k{i}" for i in range(len(cks))]
-        per_edge.append(
-            c.join(p.withColumn("__hit", F.lit(1)), keys, "left").agg(
+    independently, the existence check equates all parts (a NULL part
+    never matches — unresolvable either way) against the clean key
+    tuples. Worst-offender attribution lives in the sibling
+    :func:`fk_orphan_attribution`."""
+    flags = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        _fk_flag_frames(spark, sf_dir).values(),
+    )
+    counts = []
+    for j in range(len(_FK_EDGES)):
+        hit = F.col(f"__e{j}hit")
+        counts += [
+            F.count(hit).alias(f"__n{j}"),
+            F.count(F.when(~hit, 1)).alias(f"__o{j}"),
+        ]
+    report = flags.agg(*counts).select(
+        F.inline(F.array(*[
+            F.struct(
                 F.lit(name).alias("relationship"),
-                F.count(F.lit(1)).alias("child_rows"),
-                F.sum(F.when(F.col("__hit").isNull(), 1).otherwise(0)).alias(
-                    "orphan_rows"
-                ),
+                F.col(f"__n{j}").alias("child_rows"),
+                F.col(f"__o{j}").alias("orphan_rows"),
             )
-        )
-    report = per_edge[0]
-    for e in per_edge[1:]:
-        report = report.unionByName(e)
+            for j, (name, *_) in enumerate(_FK_EDGES)
+        ]))
+    )
     return report.select(
         "relationship",
         "child_rows",
@@ -750,7 +794,9 @@ def fk_orphan_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     acts on ('which supplier id is flooding the load with unresolvable
     references'). Key tuples render as '|'-joined strings with NULL
     parts as '∅', so the NULL-plant bucket surfaces as its own (usually
-    dominant) offender. Rank is total-ordered (count DESC, key ASC) and
+    dominant) offender. Orphans come from the same per-child flag frames
+    as :func:`fk_integrity_report`, so the parents need no DISTINCT.
+    Rank is total-ordered (count DESC, key ASC) and
     LIMITED to 5 per edge — bounded output regardless of corpus size.
     Scale shape: the top-5 cut is orderBy+limit, which compiles to
     TakeOrderedAndProject (each partition keeps its own top-5, the
@@ -759,23 +805,16 @@ def fk_orphan_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured: Spark does NOT push WindowGroupLimit into an
     unpartitioned window); the row_number that labels the final rank
     runs AFTER the limit, over at most 5 rows per edge."""
+    frames = _fk_flag_frames(spark, sf_dir)
     per_edge = []
-    for name, child, cks, parent, pks in _FK_EDGES:
-        c = t(spark, sf_dir, child).select(
-            *[_fk_dirty(ck).alias(f"__k{i}") for i, ck in enumerate(cks)]
-        )
-        p = (
-            t(spark, sf_dir, parent)
-            .select(*[F.col(pk).alias(f"__k{i}") for i, pk in enumerate(pks)])
-            .distinct()
-        )
-        keys = [f"__k{i}" for i in range(len(cks))]
+    for j, (name, child, cks, _, _) in enumerate(_FK_EDGES):
         orphan_key = F.concat_ws(
-            "|", *[F.coalesce(F.col(k).cast("string"), F.lit("∅")) for k in keys]
+            "|",
+            *[F.coalesce(F.col(k).cast("string"), F.lit("∅")) for k in _fk_keys(j, cks)],
         )
         top5 = (
-            c.join(p.withColumn("__hit", F.lit(1)), keys, "left")
-            .filter(F.col("__hit").isNull())
+            frames[child]
+            .filter(~F.col(f"__e{j}hit"))
             .groupBy(orphan_key.alias("orphan_key"))
             .agg(F.count(F.lit(1)).alias("orphan_count"))
             .orderBy(F.col("orphan_count").desc(), F.col("orphan_key"))

@@ -105,8 +105,11 @@ def validate(spark: SparkSession, df: DataFrame, spec: ValidationSpec) -> DataFr
             counters[f"num__{c}"] = ~blank & parsed.isNull()
     for c in spec.flag_columns:
         if c in present:
-            up = F.upper(F.trim(F.col(c)))
-            counters[f"flag__{c}"] = F.col(c).isNull() | ~up.isin("Y", "N")
+            # isin over both cases, not upper(): no other character
+            # upper-cases to exactly Y or N, and upper() would initialise
+            # ICU case mapping in the JVM
+            flag = F.trim(F.col(c)).isin("Y", "N", "y", "n")
+            counters[f"flag__{c}"] = F.col(c).isNull() | ~flag
     for i, rule in enumerate(spec.cross_column):
         if all(c in present for c in rule.columns):
             counters[f"cc__{i}"] = rule.when & ~F.coalesce(rule.then, F.lit(False))

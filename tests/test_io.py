@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import glob
+import itertools
 import os
 import shutil
 from pathlib import Path
@@ -449,6 +450,98 @@ def test_read_table_without_sidecar_falls_back_to_inference(spark, scratch):
     df = read_table(spark, path)
     assert df.schema == spark.read.parquet(path).schema
     assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3]
+
+
+_memo_groups = itertools.count()
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"read-table-memo-{next(_memo_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_a_corpus_file_once(spark, scratch):
+    """A foreign single parquet file carries no sidecar; its footer is
+    inferred on the first read only, and the remembered schema is the
+    one inference finds."""
+    path = str(scratch / "nation.parquet")
+    shutil.copy(os.path.join(SF_SMALL, "nation.parquet"), path)
+    _, first = _jobs_of(spark, lambda: load_table(spark, str(scratch), "nation"))
+    assert first >= 1  # the meter sees the inference job
+    df, second = _jobs_of(spark, lambda: load_table(spark, str(scratch), "nation"))
+    assert second == 0
+    plain = spark.read.parquet(path)
+    assert df.schema == plain.schema
+    assert sorted(map(tuple, df.collect())) == sorted(map(tuple, plain.collect()))
+
+
+def test_read_table_reinfers_a_file_rewritten_in_place(spark, scratch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_etl_spark.io import read_table
+
+    path = str(scratch / "rewritten.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert read_table(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x", "y"], "c": [1.5, 2.5]}), path)
+    df = read_table(spark, path)
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, df.collect())) == [("x", 1.5), ("y", 2.5)]
+
+
+def test_events_ts_type_with_nanos_as_long_on_and_off(spark, scratch):
+    """``events.ts`` stored as TIMESTAMP(NANOS) loads as a timestamp
+    whatever the session's ``nanosAsLong`` is, and the conf stays as the
+    caller set it. The conf is part of the memo key: with it off, a
+    plain read of the file fails, and so does ``read_table`` even after
+    the file was inferred with it on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dynamic_etl_spark.io import read_table
+
+    corpus = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
+    i = corpus.schema.get_field_index("ts")
+    nanos = corpus.set_column(i, "ts", corpus.column("ts").cast(pa.timestamp("ns")))
+    path = str(scratch / "events.parquet")
+    pq.write_table(nanos, path)
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(key, None)
+    want = sorted(
+        r["ts"] for r in load_table(spark, SF_SMALL, "events").select("ts").collect()
+    )
+    try:
+        for value in ("true", "false", "true", "false"):
+            spark.conf.set(key, value)
+            assert dict(load_table(spark, SF_SMALL, "events").dtypes)["ts"] == "timestamp_ntz"
+            ev = load_table(spark, str(scratch), "events")
+            assert dict(ev.dtypes)["ts"] == "timestamp"
+            assert spark.conf.get(key) == value
+        got = sorted(
+            r["ts"] for r in ev.select(F.col("ts").cast("timestamp_ntz")).collect()
+        )
+        assert got == want
+        spark.conf.set(key, "true")
+        assert dict(read_table(spark, path).dtypes)["ts"] == "bigint"
+        spark.conf.set(key, "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            spark.read.parquet(path)
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            read_table(spark, path)
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
 
 
 @pytest.mark.parametrize("partition_by", [(), ("v",)], ids=["flat", "partitioned"])

@@ -312,10 +312,12 @@ SHUFFLE_BUDGET = {
     # shared grid-bounded fold
     "ks_drift_maintenance": 6,      # 3 slice builds + 2 monoid folds share
     # exchanges under AQE; CDF window + final fold on the state
-    "fk_integrity_report": 16,      # 8 edges x (parent distinct + agg); joins
-    # broadcast (r8: +2 for the composite partsupp(implied) edge)
-    "fk_orphan_attribution": 16,    # same 8 edge subtrees; the top-5 cut is
-    # TakeOrderedAndProject (no extra exchange), rank window over <= 5 rows
+    "fk_integrity_report": 1,       # one scan per child table, every edge an
+    # ExistenceJoin (no parent distinct; broadcast), one global agg over
+    # the union of the five flag frames (was 16: a distinct + agg per edge)
+    "fk_orphan_attribution": 8,     # the same per-child edge check, one
+    # orphan-key groupBy per edge; the top-5 cut is TakeOrderedAndProject
+    # (no extra exchange), rank window over <= 5 rows (was 16)
     "rollup_slice_rebuild": 4,      # 3 slice builds + merge fold (sort rides the fold)
     "document_chunking": 1,
     "vocabulary_build": 1,
