@@ -13,7 +13,6 @@ from dynamic_etl_spark.io.sources import (  # noqa: F401
     list_dir_diagnostics,
     read_csv_schema_on_read,
     read_jdbc,
-    resolve_file,
 )
 from dynamic_etl_spark.io.table import read_table  # noqa: F401
 from dynamic_etl_spark.io.versioned import (  # noqa: F401

@@ -199,72 +199,6 @@ def compact_table(
     )
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int,
-    key_col: str,
-    salt: int = 0,
-    shard_col: str = "shard",
-) -> dict:
-    """Deterministic training-shard export: every row lands in
-    ``shard=K/`` (Hive layout) by ``ops.sample.assign_shard`` of its key,
-    plus a ``_manifest.json`` recording per-shard rows / files / bytes and
-    the assignment recipe. A training loader can consume shards
-    independently, restart per shard, and RECOMPUTE any row's shard from
-    its key (the manifest pins n_shards/salt/key_col — no stored mapping).
-
-    Scale: the shard id is row-local codegen, and the write keeps the
-    scan's parallelism — each task fans its rows across shard dirs, so no
-    repartition funnels a whole shard through one executor (a shard of a
-    100 TB corpus is itself huge). Many files per shard dir is the
-    intended layout; compact per-partition later via ``compact_table``
-    if a consumer needs fewer. Row counts come from ONE distributed agg
-    (n_shards bounded rows to the driver — repo bounded-scalar rule).
-    """
-    import json
-
-    from dynamic_etl_spark.ops.sample import assign_shard
-
-    out = df.withColumn(shard_col, assign_shard(key_col, n_shards, salt))
-    out.write.mode("overwrite").partitionBy(shard_col).parquet(path)
-    rows = {
-        r[shard_col]: r["n_rows"]
-        for r in out.groupBy(shard_col).agg(F.count(F.lit(1)).alias("n_rows")).collect()
-    }
-    shards = []
-    for k in range(n_shards):
-        shard_dir = os.path.join(path, f"{shard_col}={k}")
-        files = (
-            sorted(
-                f for f in os.listdir(shard_dir) if not f.startswith(("_", "."))
-            )
-            if os.path.isdir(shard_dir)
-            else []
-        )
-        shards.append(
-            {
-                "shard": k,
-                "rows": int(rows.get(k, 0)),
-                "files": len(files),
-                "bytes": sum(os.path.getsize(os.path.join(shard_dir, f)) for f in files),
-            }
-        )
-    manifest = {
-        "n_shards": n_shards,
-        "key_col": key_col,
-        "salt": salt,
-        "shard_col": shard_col,
-        "total_rows": int(sum(s["rows"] for s in shards)),
-        "shards": shards,
-    }
-    # underscore prefix: Spark/Hadoop file indexes skip _-prefixed
-    # files, so re-reading the shard directory as parquet stays clean
-    with open(os.path.join(path, "_manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    return manifest
-
-
 def write_jdbc(
     df: DataFrame,
     url: str,
@@ -290,48 +224,3 @@ def write_jdbc(
         .mode(mode)
         .save()
     )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: tuple[str, ...],
-    n_buckets: int,
-    path: str | None = None,
-    sort_cols: tuple[str, ...] | None = None,
-) -> None:
-    """Persist a table BUCKETED by its join/aggregation key: rows are
-    hash-partitioned into ``n_buckets`` files per write-partition and
-    the layout is recorded in the catalog, so a join or aggregation on
-    the bucket key needs NO shuffle at read time — the co-location was
-    paid once at write. This is the table-design half of SCALE.md's
-    "pre-partition the big joins": at 100 TB, re-shuffling a fact table
-    per query dwarfs every other cost; bucket both sides of a recurring
-    fact-dim or fact-fact join identically (same cols, same count) and
-    the exchange disappears from every downstream plan
-    (tests/test_bucketing.py proves the plan shape).
-
-    ``sort_cols`` additionally sorts within buckets (merge-join-ready
-    files). ``path`` makes it an external table (data outlives a DROP).
-    Bucketing only helps keys you join/group on REPEATEDLY — it fixes
-    the partitioning at write time, the opposite trade of letting AQE
-    pick per query."""
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path is not None:
-        writer = writer.option("path", path)
-    writer.format("parquet").saveAsTable(table_name)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (one object per line — the interchange format of
-    most corpus-curation tooling). Scan-parallel: one file per
-    partition, no coalesce; downstream re-reads with read_jsonl and an
-    explicit schema."""
-    df.write.mode(mode).json(path)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink — columnar interchange with Hive-era warehouses."""
-    df.write.mode(mode).orc(path)

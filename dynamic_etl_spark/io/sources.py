@@ -64,51 +64,6 @@ def latest_file(directory: str, suffix: str = ".csv", prefix: str = "") -> str:
     return os.path.join(directory, sorted(names)[-1])
 
 
-def resolve_file(
-    pattern: str,
-    search_days_back: int = 0,
-    allow_missing: bool = False,
-) -> str | None:
-    """V8 — resolve a concrete file from a glob pattern: newest match
-    wins (reverse sort); on miss, rewind the first 8-digit yyyyMMdd token
-    in the BASENAME up to ``search_days_back`` days; still nothing ->
-    None with ``allow_missing`` else FileNotFoundError with a directory
-    listing (reference validate_table.py:71-125)."""
-    import glob as _glob
-    import re
-    from datetime import datetime, timedelta
-
-    if "*" in pattern or "?" in pattern:
-        files = sorted(_glob.glob(pattern), reverse=True)
-        if not files and search_days_back > 0:
-            basename = os.path.basename(pattern)
-            dirpart = os.path.dirname(pattern)
-            m = re.search(r"(\d{8})", basename)
-            if m:
-                token = m.group(1)
-                day0 = datetime.strptime(token, "%Y%m%d")
-                for back in range(1, search_days_back + 1):
-                    prev = (day0 - timedelta(days=back)).strftime("%Y%m%d")
-                    prev_pattern = os.path.join(dirpart, basename.replace(token, prev, 1))
-                    prev_files = sorted(_glob.glob(prev_pattern), reverse=True)
-                    if prev_files:
-                        files = prev_files
-                        break
-        if files:
-            return files[0]
-        if allow_missing:
-            return None
-        raise FileNotFoundError(
-            f"No file found matching pattern: {pattern}. "
-            + list_dir_diagnostics(os.path.dirname(pattern) or ".")
-        )
-    if os.path.exists(pattern):
-        return pattern
-    if allow_missing:
-        return None
-    raise FileNotFoundError(f"File not found: {pattern}")
-
-
 def list_dir_diagnostics(directory: str, limit: int = 10) -> str:
     """S11 — first-N directory listing for error messages
     (reference validate_table.py:98-107)."""
@@ -175,42 +130,3 @@ def read_jdbc(
     if predicates:
         return reader.jdbc(url, table, predicates=list(predicates))
     return reader.load()
-
-
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: str,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """JSON-lines source with an EXPLICIT schema and PERMISSIVE
-    corrupt-record accounting — the file-level sibling of the coercion
-    accounting the cleaning layer does per column (F25/P9): malformed
-    lines land whole in ``corrupt_col`` instead of killing the read or
-    silently vanishing, so ingestion can route them to a reject sink
-    with exact counts.
-
-    Never inferSchema: inference is a SECOND full scan of the input
-    before the real one — at 100 TB that doubles ingest cost and pins
-    the types to whatever the first day's data looked like. The schema
-    string is the contract; drift shows up as corrupt/NULL rows the
-    validator counts, not as a silently changed column type.
-
-    Spark caveat: a downstream plan may not reference ONLY the corrupt
-    column (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — keep at least one data
-    column in the projection when counting/routing rejects.
-    """
-    full_schema = f"{schema}, {corrupt_col} STRING"
-    return (
-        spark.read.schema(full_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .json(path)
-    )
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source: columnar like parquet (predicate pushdown + column
-    pruning both apply; tests pin PushedFilters on the scan), here for
-    interchange with Hive-era warehouses that standardized on ORC."""
-    return spark.read.orc(path)

@@ -84,20 +84,11 @@ def pct_exact(col, p: float, alias: str) -> Column:
     """Exact interpolated percentile (SQL PERCENTILE_CONT semantics:
     sort, index (n-1)*p, linear interpolation — identical to DuckDB's
     quantile_cont, so oracle-checkable at 6dp). Exact percentiles
-    materialize each group's values; at 100 TB use :func:`pct_approx`
-    (mergeable sketch, bounded memory) and keep this for the small-group
-    profiles the reference's validators run."""
+    materialize each group's values; at 100 TB use Spark's
+    ``percentile_approx`` (mergeable sketch, bounded memory) and keep this
+    for the small-group profiles the reference's validators run."""
     col = F.col(col) if isinstance(col, str) else col
     return F.round(F.percentile(col, F.lit(float(p))), 6).alias(alias)
-
-
-def pct_approx(col, p: float, alias: str, accuracy: int = 10_000) -> Column:
-    """Approximate percentile via Spark's mergeable KLL-style sketch —
-    the 100 TB path: O(accuracy) memory per group, map-side partial
-    merge, rank error ~ 1/accuracy. Engine-hash-specific, so it gets a
-    tolerance pytest instead of a DuckDB oracle."""
-    col = F.col(col) if isinstance(col, str) else col
-    return F.percentile_approx(col, F.lit(float(p)), F.lit(accuracy)).alias(alias)
 
 
 def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:

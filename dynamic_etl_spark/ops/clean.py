@@ -65,12 +65,6 @@ def clean_zip(c: Column, digits: int = 6) -> Column:
     return F.when(F.length(only_digits) >= digits, F.substring(only_digits, 1, digits))
 
 
-def truncate(c: Column, n: int) -> Column:
-    """F6 — truncation to VARCHAR(n) bounds (reference `[:50]` slices,
-    scripts2/load_dim_store_dw.py:318-327)."""
-    return F.substring(c, 1, n)
-
-
 # ---------------------------------------------------------------------------
 # Numeric cleansing (F5, F25, F26)
 # ---------------------------------------------------------------------------
@@ -108,14 +102,6 @@ def clean_numeric(
     if max_value is not None:
         cond = cond & (parsed <= max_value)
     return F.when(cond, parsed)
-
-
-def split_valid(df: DataFrame, condition: Column) -> tuple[DataFrame, DataFrame]:
-    """P9 side channel — (valid, rejected) pair for loaders that must
-    quarantine rather than silently drop (SURVEY §2.2: "invalid-row side
-    channel via filter(isNull)"). Both frames share the scan; write the
-    rejects to a dead-letter path instead of losing them."""
-    return df.filter(condition), df.filter(~F.coalesce(condition, F.lit(False)))
 
 
 def coercion_failures(raw: Column, parsed: Column) -> Column:

@@ -68,11 +68,6 @@ def date_key(d: Column) -> Column:
     return F.date_format(d, "yyyyMMdd").cast("int")
 
 
-def from_date_key(k: Column) -> Column:
-    """F13 inverse — yyyyMMdd int -> date."""
-    return F.to_date(k.cast("string"), "yyyyMMdd")
-
-
 def fiscal_quarter(d: Column) -> Column:
     """F15 — Indian FY: Q1=Apr-Jun … Q4=Jan-Mar
     (reference get_fiscal_quarter, scripts/dim_date_daily.py:81-86)."""

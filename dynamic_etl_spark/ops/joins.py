@@ -16,24 +16,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def star_join(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, str | Sequence[str] | Column, bool]],
-    how: str = "inner",
-) -> DataFrame:
-    """N-way star equi-join (J1 — reference flagship:
-    scripts/extract_sales_snapshot.py:90-95, oracledb.sql:181-189).
-
-    ``dims`` is a sequence of (dim_df, join_key(s), broadcast_hint). Only
-    dimensions known to be small at ANY scale should set broadcast_hint;
-    AQE handles the data-dependent cases.
-    """
-    out = fact
-    for dim, key, hint in dims:
-        out = out.join(F.broadcast(dim) if hint else dim, key, how)
-    return out
-
-
 def semi_join(df: DataFrame, other: DataFrame, on) -> DataFrame:
     """J7 — existence check (reference: scripts/validate_table.py:352-366
     does it as a per-key SQL probe; set-based here)."""

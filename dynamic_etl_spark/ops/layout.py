@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -86,26 +86,3 @@ def sql_zorder_key(col_sqls: Sequence[str], bits: int = 16) -> str:
         for i, c in enumerate(col_sqls):
             parts.append(f"(((CAST({c} AS BIGINT) >> {b}) & 1) << {b * n + i})")
     return " | ".join(parts)
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    zcol: Column,
-    n_files: int = 8,
-    fmt: str = "parquet",
-) -> None:
-    """Write ``df`` clustered by a Z-order key: range-partition on the
-    key (each output file owns a contiguous Morton range = a tile of the
-    multi-dimensional space) and sort within partitions so row-group
-    stats stay tight inside each file. One range-exchange + local sort —
-    the standard price of any clustered write."""
-    (
-        df.withColumn("__z", zcol)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.format(fmt)
-        .mode("overwrite")
-        .save(path)
-    )

@@ -69,7 +69,7 @@ def line_dup_profile(
     Empty lines are ignored; a document with no non-empty lines still
     gets a row (zeros, frac 0.0) so downstream gates that join the
     profile never silently lose it. This is the measurement half of
-    CCNet's gate; :func:`drop_duplicated_lines` is the enforcement half.
+    CCNet's gate.
     """
     hashed = _exploded_lines(docs, id_col, text_col, sep, with_pos=False).select(
         id_col, F.md5(F.col("__line")).alias("__lh")
@@ -91,68 +91,6 @@ def line_dup_profile(
         )
         .otherwise(0.0)
         .alias("dup_line_frac"),
-    )
-
-
-def drop_duplicated_lines(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-    keep_first: bool = True,
-) -> DataFrame:
-    """Rebuild each document with corpus-duplicated lines removed.
-
-    ``keep_first=True`` keeps one canonical copy of each duplicated line
-    (in the MIN-``id_col`` document holding it — deterministic, matching
-    the repo's MIN-id survivor convention in exact_dedup); ``False`` drops
-    every copy, CCNet's harsher variant. Line order within a document is
-    preserved (positions ride the explode and a total-ordered re-sort).
-    Documents whose every line was dropped come back with empty text
-    rather than vanishing — downstream length gates decide their fate.
-    Empty lines are structure, not content: they are never counted as
-    duplicates and always survive, so blank-line paragraph breaks in
-    otherwise-unique documents pass through untouched.
-    ``sep`` doubles as the literal rejoin delimiter, so pass a fixed
-    string (the default newline), not a regex class.
-    """
-    lines = _exploded_lines(
-        docs, id_col, text_col, sep, with_pos=True, keep_empty=True
-    )
-    hashed = lines.withColumn(
-        "__lh", F.when(F.col("__line") != "", F.md5(F.col("__line")))
-    )
-    owners = (
-        hashed.filter(F.col("__lh").isNotNull())
-        .groupBy("__lh")
-        .agg(
-            F.countDistinct(id_col).alias("__n_docs"),
-            F.min(id_col).alias("__owner"),
-        )
-    )
-    kept = hashed.join(owners, "__lh", "left").filter(
-        F.col("__lh").isNull()  # empty line: always kept
-        | (F.col("__n_docs") == 1)
-        | (F.lit(keep_first) & (F.col(id_col) == F.col("__owner")))
-    )
-    rebuilt = (
-        kept.groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("__pos", "__line"))
-            ).alias("__ordered")
-        )
-        .select(
-            id_col,
-            F.array_join(
-                F.transform(F.col("__ordered"), lambda s: s["__line"]), sep
-            ).alias(text_col),
-        )
-    )
-    ids = docs.select(id_col)
-    return ids.join(rebuilt, id_col, "left").select(
-        id_col, F.coalesce(F.col(text_col), F.lit("")).alias(text_col)
     )
 
 

@@ -15,17 +15,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from dynamic_etl_spark.ops.text import normalize_for_fingerprint, tokens
+from dynamic_etl_spark.ops.text import tokens
 from dynamic_etl_spark.session import ensure_fanout_parallelism
-
-
-def char_shingles(c: Column, k: int = 5) -> Column:
-    """Distinct character k-grams of the normalized text."""
-    norm = normalize_for_fingerprint(c)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(norm) - (k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
 
 
 def word_shingles(c: Column, k: int = 3) -> Column:
@@ -79,91 +71,11 @@ def _affine_params(i: int) -> tuple[int, int]:
     return a, b
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature via the universal-hash family
-    h_i(s) = (a_i * H(s) + b_i) mod (2^31-1), where H is ONE xxhash64 per
-    shingle folded into the field. Hashing each shingle once and deriving
-    the num_hashes functions as affine transforms is ~num_hashes x cheaper
-    than seeded re-hashing — the dominant cost of MinHash at corpus scale.
-
-    Pr[sig_a[i] == sig_b[i]] = Jaccard(a, b) — the classic estimator.
-    (Constants are closed over per index, never lambda default args —
-    PySpark reads lambda arity, and a 2-arg transform lambda would get the
-    ELEMENT INDEX as its second argument.)
-    """
-    return signature_from_hashes(shingle_hashes(shingles), num_hashes)
-
-
-def shingle_hashes(shingles: Column) -> Column:
-    """One xxhash64 per shingle, folded into the affine field.
-
-    Evaluate this ONCE per row and materialize it (e.g. behind a
-    repartition) before fanning out to the signature slots: higher-order
-    functions run interpreted (outside codegen), and Catalyst's project
-    collapsing would otherwise inline — i.e. recompute — this array into
-    every one of the num_hashes array_min expressions."""
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MINHASH_P)))
-
-
-def signature_from_hashes(hashes: Column, num_hashes: int = 32) -> Column:
-    def one(i: int) -> Column:
-        a, b = _affine_params(i)
-        return F.array_min(
-            F.transform(hashes, lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MINHASH_P)))
-        )
-
-    return F.array(*[one(i) for i in range(num_hashes)])
-
-
-def band_hashes(sig: Column, bands: int, rows: int) -> Column:
-    """Collapse each band of ``rows`` signature slots to one 64-bit hash."""
-    return F.array(
-        *[
-            F.xxhash64(F.lit(b), *[sig[b * rows + j] for j in range(rows)])
-            for b in range(bands)
-        ]
-    )
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over two (distinct-element) arrays."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(F.array_union(a, b)).cast("double")
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    shingle_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """Banded-LSH candidate generation.
-
-    Plan: signature (narrow) -> posexplode bands (xB rows) -> self-join on
-    (band_index, band_hash) -> distinct (id_a < id_b) pairs. The join
-    shuffles on band hash; AQE's skew handling covers pathological
-    all-identical corpora. Returns (id_a, id_b).
-    """
-    rows = num_hashes // bands
-    sig = df.select(
-        F.col(id_col),
-        F.posexplode(band_hashes(minhash_signature(F.col(shingle_col), num_hashes), bands, rows))
-        .alias("band_idx", "band_hash"),
-    )
-    left = sig.select(
-        F.col(id_col).alias("id_a"), "band_idx", "band_hash"
-    )
-    right = sig.select(
-        F.col(id_col).alias("id_b"), "band_idx", "band_hash"
-    )
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def base_shingle_hash(s: Column, hash_mode: str = "xxhash") -> Column:

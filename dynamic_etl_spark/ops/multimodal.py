@@ -12,7 +12,7 @@ explicit output schema, and partition-preserving plumbing. Codecs:
   compressed formats (JPEG/PNG/MP3/...), which need an image/audio
   library this container does not ship.
 - ``header_features`` is the deterministic byte-level fallback decoder
-  for opaque payloads, kept for the text-bytes plumbing path.
+  for opaque payloads (``extract_media_features``' default).
 """
 
 from __future__ import annotations
@@ -23,7 +23,6 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from dynamic_etl_spark.session import ensure_fanout_parallelism
 from pyspark.sql import types as T
@@ -57,9 +56,8 @@ def decode_bmp(payload: bytes) -> tuple[int, int, list[tuple[int, int, int]]]:
     row-major top-down (r, g, b) order — i.e. the stored bottom-up BGR
     rows are un-flipped and channel-swapped, and per-row 4-byte padding
     is stripped. Convenience tuple-list surface for fixture-scale callers
-    (tests); both hot paths — feature extraction AND the resize
-    transform — use :func:`decode_bmp_array` and never materialize
-    Python tuples."""
+    (tests); the feature-extraction hot path uses :func:`decode_bmp_array`
+    and never materializes Python tuples."""
     w, h, arr = decode_bmp_array(payload)
     return w, h, [tuple(p) for p in arr.tolist()]
 
@@ -385,109 +383,6 @@ def encode_wav(doc_id: int, rate: int = WAV_RATE, n: int = WAV_N) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
-def resize_nearest(
-    pixels: list[tuple[int, int, int]], w: int, h: int, new_w: int, new_h: int
-) -> list[tuple[int, int, int]]:
-    """Nearest-neighbor image resize over logical row-major pixels: out
-    pixel (x, y) samples source (floor(x*w/new_w), floor(y*h/new_h)) —
-    the standard box-free resampling, exactly reproducible from the
-    source generating function (no interpolation arithmetic to diverge)."""
-    if new_w <= 0 or new_h <= 0:
-        raise ValueError("resize dimensions must be positive")
-    out = []
-    for y in range(new_h):
-        sy = y * h // new_h
-        for x in range(new_w):
-            out.append(pixels[sy * w + x * w // new_w])
-    return out
-
-
-def resize_nearest_array(arr, w: int, h: int, new_w: int, new_h: int):
-    """numpy twin of :func:`resize_nearest` over a (h*w, 3) uint8 array:
-    two integer index vectors + one fancy-index — the C-side inner shape
-    for the resize TRANSFORM stage (r7 self-review: the tuple-list hop
-    was the one decode consumer the r6 vectorization pass missed).
-    Bit-identical sampling: out (x, y) reads source
-    (x*w // new_w, y*h // new_h), the same floor arithmetic."""
-    import numpy as np
-
-    if new_w <= 0 or new_h <= 0:
-        raise ValueError("resize dimensions must be positive")
-    img = arr.reshape(h, w, 3)
-    ys = (np.arange(new_h) * h) // new_h
-    xs = (np.arange(new_w) * w) // new_w
-    return img[ys][:, xs].reshape(new_h * new_w, 3)
-
-
-def serialize_bmp_array(arr, w: int, h: int) -> bytes:
-    """numpy twin of :func:`serialize_bmp`: one reshape + reversed views
-    + zero-padded row matrix -> tobytes. Byte-identical output (pinned
-    in tests/test_multimodal.py)."""
-    import numpy as np
-
-    row_size = (3 * w + 3) & ~3
-    img = arr.reshape(h, w, 3)[::-1, :, ::-1]  # stored bottom-up, BGR
-    rows = np.zeros((h, row_size), dtype=np.uint8)
-    rows[:, : 3 * w] = img.reshape(h, 3 * w)
-    data = rows.tobytes()
-    pixel_off = 14 + 40
-    header = struct.pack("<2sIHHI", b"BM", pixel_off + len(data), 0, 0, pixel_off)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0)
-    return bytes(header + info) + data
-
-
-def resize_media(
-    media: DataFrame, new_w: int, new_h: int, on_error: str = "raise"
-) -> DataFrame:
-    """Media TRANSFORM stage (the brief's 'resize' verb): decode each
-    BMP payload, nearest-neighbor resize to (new_w, new_h), RE-ENCODE as
-    BMP — output has the same (doc_id, media, media_type) schema as the
-    input, so transforms chain before feature extraction. Non-image
-    payloads pass through untouched; undecodable images follow
-    ``on_error`` ('raise' or 'drop'). Arrow mapInPandas, partition-
-    preserving, no shuffle — same plumbing discipline as
-    extract_media_features."""
-    if on_error not in ("raise", "drop"):
-        raise ValueError(f"on_error must be 'raise' or 'drop', got {on_error!r}")
-    drop_failures = on_error == "drop"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media": [], "media_type": []}
-            for doc_id, payload, mtype in zip(
-                pdf["doc_id"], pdf["media"], pdf["media_type"]
-            ):
-                if payload is None:
-                    continue
-                raw = bytes(payload)
-                if raw[:2] == b"BM":
-                    try:
-                        w, h, arr = decode_bmp_array(raw)
-                        raw = serialize_bmp_array(
-                            resize_nearest_array(arr, w, h, new_w, new_h),
-                            new_w,
-                            new_h,
-                        )
-                    except DECODE_FAILURES:
-                        if drop_failures:
-                            continue
-                        raise
-                out["doc_id"].append(int(doc_id))
-                out["media"].append(raw)
-                out["media_type"].append(mtype)
-            if out["doc_id"]:
-                yield pd.DataFrame(out)
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("media", T.BinaryType(), False),
-            T.StructField("media_type", T.StringType(), False),
-        ]
-    )
-    return ensure_fanout_parallelism(media).mapInPandas(run, schema)
-
-
 def synthetic_media(docs: DataFrame) -> DataFrame:
     """Fixture adapter: deterministic REAL media payloads keyed off
     doc_id — BMP for doc_id%3==0, WAV for %3==1, raw-frames video for
@@ -524,14 +419,3 @@ def synthetic_media(docs: DataFrame) -> DataFrame:
         ]
     )
     return ensure_fanout_parallelism(docs.select("doc_id")).mapInPandas(run, schema)
-
-
-def documents_as_media(docs: DataFrame) -> DataFrame:
-    """Fixture adapter: treat document text bytes as an opaque media
-    payload (the testdata ships no binary column; utf-8 bytes exercise the
-    identical binary plumbing)."""
-    return docs.select(
-        F.col("doc_id"),
-        F.encode(F.col("text"), "utf-8").alias("media"),
-        F.lit("text/plain").alias("media_type"),
-    )

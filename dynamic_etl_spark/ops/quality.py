@@ -141,13 +141,6 @@ def multi_ngram_stats(df: DataFrame, ns: Sequence[int], *,
     )
 
 
-def ngram_stats(df: DataFrame, n: int, *, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """Per-document word n-gram statistics for a single ``n`` — see
-    :func:`multi_ngram_stats` for the plan."""
-    return multi_ngram_stats(df, [n], id_col=id_col, text_col=text_col)
-
-
 def repetition_profile(df: DataFrame, *, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """Gopher-style per-document quality profile + boolean gates.

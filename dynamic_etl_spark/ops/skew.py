@@ -3,18 +3,17 @@ skew").
 
 AQE's skew-join handling (on in session.py) covers sort-merge joins by
 splitting oversized partitions at runtime. Salting is the complementary
-STATIC remedy for the cases AQE can't fix: skewed aggregations (one hot
-group key) and broadcast-ineligible joins against a replicable side. Both
-helpers are semantics-preserving — results are identical to the unsalted
-plan, only the shuffle distribution changes — which is exactly what makes
-them oracle-checkable.
+STATIC remedy for a case AQE can't fix: a broadcast-ineligible join
+against a replicable side. ``salted_join`` is semantics-preserving —
+results are identical to the unsalted plan, only the shuffle distribution
+changes — which is exactly what makes it oracle-checkable.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -24,29 +23,6 @@ def with_salt(df: DataFrame, buckets: int, salt_col: str = "__salt") -> DataFram
     return df.withColumn(
         salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(buckets))
     )
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-    reaggs: Sequence[Column],
-    buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for a skewed group key: phase 1 groups on
-    (key, salt) — the hot key's rows spread over ``buckets`` reducers —
-    phase 2 re-combines per key. ``aggs`` are the phase-1 aggregates
-    (aliased); ``reaggs`` combine those aliases (e.g. count -> sum,
-    sum -> sum, min -> min).
-
-    Note Spark's hash aggregation already does map-side partial
-    aggregation, which defuses most count/sum skew; salting matters when
-    phase-1 state per key is large (collect_set, exact distinct) or the
-    combiner can't run (few input partitions, high cardinality payloads).
-    """
-    salted = with_salt(df, buckets)
-    phase1 = salted.groupBy(*keys, "__salt").agg(*aggs)
-    return phase1.groupBy(*keys).agg(*reaggs)
 
 
 def salted_join(

@@ -725,7 +725,7 @@ WHERE mix_rank <= q
 
 
 # ==========================================================================
-# Shard assignment: the query surface of io.sinks.write_training_shards —
+# Shard assignment: the query surface of ops/sample.assign_shard —
 # per-shard row counts + id-range + checksum, oracle-exact (integer
 # arithmetic over the SQL-twinned affine uniform). A training loader can
 # audit a shard export against this profile without re-reading the data.

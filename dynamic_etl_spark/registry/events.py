@@ -804,7 +804,7 @@ def events_equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution, the fixed grid does not.
 
     Scale note: ntile is a single-total-order window — the global sort is
-    inherent to exact equi-depth. At 100 TB use pct_approx sketch
+    inherent to exact equi-depth. At 100 TB use percentile_approx sketch
     boundaries instead; this exact form is the validator-scale tool and
     the oracle for the sketch."""
     ev = t(spark, sf_dir, "events").select("event_id", "value")
@@ -1009,8 +1009,7 @@ LEFT JOIN counts c ON c.user_id IS NOT DISTINCT FROM u.user_id
 # event_type (PERCENTILE_CONT semantics — Spark `percentile` and DuckDB
 # `quantile_cont` share the (n-1)*p linear-interpolation definition, so
 # 6dp rounding is oracle-stable). Exact percentiles sort each group; the
-# 100 TB path is ops/agg.pct_approx (mergeable sketch), tolerance-tested
-# against this in tests/test_ops_units.py.
+# 100 TB path is Spark's percentile_approx (mergeable sketch).
 # --------------------------------------------------------------------------
 
 def events_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,7 +20,6 @@ from dynamic_etl_spark.ops import pack as PK
 from dynamic_etl_spark.ops import sample as SMP
 from dynamic_etl_spark.ops import text as TX
 from dynamic_etl_spark.ops.multimodal import (
-    documents_as_media,
     extract_media_features,
     strict_decoder,
     synthetic_media,

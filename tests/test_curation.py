@@ -185,31 +185,6 @@ def test_line_dup_profile_hand_example(spark):
     assert rows[2]["dup_line_frac"] == 0.5
 
 
-def test_drop_duplicated_lines_keep_first_and_drop_all(spark):
-    from dynamic_etl_spark.ops.lines import drop_duplicated_lines
-
-    df = spark.createDataFrame(
-        [
-            (1, "alpha\ncommon footer\nbeta"),
-            (2, "gamma\ncommon footer"),
-            (3, "common footer"),
-        ],
-        "doc_id long, text string",
-    )
-    kept = {r["doc_id"]: r["text"] for r in drop_duplicated_lines(df).collect()}
-    # doc 1 is the MIN-id owner of the footer: keeps it, in original order
-    assert kept[1] == "alpha\ncommon footer\nbeta"
-    assert kept[2] == "gamma"
-    assert kept[3] == ""  # fully-deduped doc survives with empty text
-    harsh = {
-        r["doc_id"]: r["text"]
-        for r in drop_duplicated_lines(df, keep_first=False).collect()
-    }
-    assert harsh[1] == "alpha\nbeta"
-    assert harsh[2] == "gamma"
-    assert harsh[3] == ""
-
-
 # ------------------------------------------------------------- quota cap ---
 
 def test_per_key_top_n_rank_and_quota(spark):
@@ -246,22 +221,20 @@ def test_per_key_top_n_plan_has_rank_limit_pushdown(spark):
 
 
 def test_line_ops_edge_cases_blank_lines_and_empty_docs(spark):
-    """Review fixes: blank lines are structure (never deduped, always
-    survive the rebuild); empty docs still get a zero profile row; a
-    rank-column collision raises instead of clobbering."""
-    from dynamic_etl_spark.ops.lines import drop_duplicated_lines, line_dup_profile
+    """Review fixes: blank lines are structure (never counted, so a blank
+    line two documents share is no duplicate); empty docs still get a zero
+    profile row; a rank-column collision raises instead of clobbering."""
+    from dynamic_etl_spark.ops.lines import line_dup_profile
     from dynamic_etl_spark.ops.sample import per_key_top_n
 
     df = spark.createDataFrame(
         [(1, "para1\n\npara2"), (2, "other\n\nthing"), (3, "")],
         "doc_id long, text string",
     )
-    kept = {r["doc_id"]: r["text"] for r in drop_duplicated_lines(df).collect()}
-    assert kept[1] == "para1\n\npara2"  # blank line preserved, not "deduped"
-    assert kept[2] == "other\n\nthing"
     prof = {r["doc_id"]: r for r in line_dup_profile(df).collect()}
     assert prof[3]["n_lines"] == 0 and prof[3]["dup_line_frac"] == 0.0
     assert prof[1]["n_lines"] == 2  # blank line not counted as content
+    assert prof[1]["n_dup_lines"] == prof[2]["n_dup_lines"] == 0
 
     clash = df.withColumn("rk", F.lit(1))
     import pytest as _pytest

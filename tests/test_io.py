@@ -192,22 +192,6 @@ def test_staging_swap_crash_recovery(spark, scratch):
     shutil.rmtree(os.path.dirname(final) + "/.staging-dead", ignore_errors=True)
 
 
-def test_split_valid_side_channel(spark):
-    from pyspark.sql import functions as F2
-
-    from dynamic_etl_spark.ops.clean import clean_numeric, split_valid
-
-    df = spark.createDataFrame(
-        [("1", "₹10.50"), ("2", "abc"), ("3", None), ("4", "99")], ["k", "raw"]
-    )
-    parsed = df.withColumn("amt", clean_numeric(F2.col("raw"), min_value=None))
-    valid, rejected = split_valid(parsed, F2.col("amt").isNotNull())
-    assert {r["k"] for r in valid.collect()} == {"1", "4"}
-    assert {r["k"] for r in rejected.collect()} == {"2", "3"}
-    # nothing lost, nothing duplicated
-    assert valid.count() + rejected.count() == df.count()
-
-
 def test_json_and_orc_roundtrip(spark, scratch):
     src = load_table(spark, SF_SMALL, "nation")
     for fmt in ("json", "orc"):
@@ -357,53 +341,6 @@ def test_jdbc_roundtrip_with_pushdown_and_partitioned_read(spark, tmp_path):
         read_jdbc(spark, url, "fact_sales", predicates=("1=1",), partition_column="id")
     with pytest.raises(ValueError, match="needs lower_bound"):
         read_jdbc(spark, url, "fact_sales", partition_column="id")
-
-
-def test_jsonl_round_trip_with_corrupt_accounting(spark, scratch):
-    """write_jsonl -> read_jsonl: clean rows round-trip exactly; a
-    malformed line lands whole in _corrupt_record (not dropped, not a
-    crash) so ingestion can count and route it — the file-level F25."""
-    from dynamic_etl_spark.io.sinks import write_jsonl
-    from dynamic_etl_spark.io.sources import read_jsonl
-
-    path = str(scratch / "jsonl")
-    rows = [(1, "alpha", 1.5), (2, "beta", -0.25), (3, None, 2.0)]
-    df = spark.createDataFrame(rows, "id long, name string, score double")
-    write_jsonl(df, path)
-    # plant one corrupt line next to the clean part files
-    with open(f"{path}/zz_corrupt.json", "w") as fh:
-        fh.write('{"id": 4, "name": "broken"\n')  # unterminated object
-    back = read_jsonl(spark, path, "id long, name string, score double")
-    clean = back.filter(F.col("_corrupt_record").isNull())
-    # Spark disallows plans referencing ONLY the corrupt column
-    # (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — keep a data column in the
-    # projection, as read_jsonl's docstring instructs
-    bad = back.filter(F.col("_corrupt_record").isNotNull()).select(
-        "id", "_corrupt_record"
-    ).collect()
-    assert sorted(
-        (r["id"], r["name"], r["score"]) for r in clean.collect()
-    ) == sorted(rows)
-    assert len(bad) == 1
-    assert "broken" in bad[0]["_corrupt_record"]
-
-
-def test_orc_round_trip_and_pushdown(spark, scratch):
-    """write_orc -> read_orc: values round-trip and a filter reaches the
-    ORC scan as a pushed predicate (columnar pruning parity with
-    parquet)."""
-    from dynamic_etl_spark.io.sinks import write_orc
-    from dynamic_etl_spark.io.sources import read_orc
-
-    path = str(scratch / "orc")
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7).alias("k"), (F.col("id") * 1.5).alias("v")
-    )
-    write_orc(df, path)
-    back = read_orc(spark, path).filter(F.col("k") == 3).select("id", "v")
-    assert back.count() == df.filter(F.col("id") % 7 == 3).count()
-    plan = back._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "k" in plan.split("PushedFilters")[1][:80]
 
 
 def _sidecar(path) -> str:

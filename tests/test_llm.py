@@ -94,13 +94,27 @@ def test_minhash_verify_scopes_agree(spark, docs_with_near_dups):
 
 
 def test_minhash_signature_slots_are_independent(spark, docs_with_near_dups):
-    # regression for the lambda-index bug: distinct seeds must produce
-    # distinct signature slots
-    sig = docs_with_near_dups.limit(1).select(
-        L.minhash_signature(L.word_shingles(F.col("text"), 3), 8).alias("sig")
+    # regression for the lambda-index bug: each slot must get its own
+    # affine parameters. With one slot per band, identical slots would make
+    # a near-dup pair collide in all bands or in none; independent slots
+    # make some pairs collide in only some bands.
+    rows = L.minhash_banded_rows(
+        docs_with_near_dups, "doc_id", "text", num_hashes=8, bands=8
     )
-    values = sig.collect()[0]["sig"]
-    assert len(set(values)) > 1, "all MinHash slots identical — seeds not applied"
+    orig = rows.filter(F.col("doc_id") < 2000000)
+    resent = rows.filter(F.col("doc_id") >= 2000000).select(
+        (F.col("doc_id") - 2000000).alias("doc_id"),
+        "band_idx",
+        F.col("band_hash").alias("resent_hash"),
+    )
+    hits = {
+        r["n"]
+        for r in orig.join(resent, ["doc_id", "band_idx"])
+        .groupBy("doc_id")
+        .agg(F.sum((F.col("band_hash") == F.col("resent_hash")).cast("int")).alias("n"))
+        .collect()
+    }
+    assert any(0 < n < 8 for n in hits), f"collisions all-or-nothing {hits}: slots not independent"
 
 
 def test_simhash_near_dups_have_small_hamming(spark, docs_with_near_dups):

@@ -31,7 +31,6 @@ from dynamic_etl_spark.ops.multimodal import (
     encode_wav,
     extract_media_features,
     header_features,
-    resize_media,
     strict_decoder,
     synthetic_media,
 )
@@ -151,15 +150,6 @@ def test_on_error_drop_survives_truncated_and_zero_frame_payloads(spark):
     media = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
     out = extract_media_features(media, decoder=strict_decoder, on_error="drop")
     assert sorted(r["doc_id"] for r in out.collect()) == [1]
-    # resize's drop path takes the same failure tuple: a truncated BMP
-    # (magic intact, header cut) must drop, good rows must survive
-    bad_bmp = encode_bmp(7)[:30]
-    media2 = spark.createDataFrame(
-        [(1, encode_bmp(4), "image/bmp"), (2, bad_bmp, "image/bmp")],
-        "doc_id long, media binary, media_type string",
-    )
-    resized = resize_media(media2, 2, 2, on_error="drop")
-    assert sorted(r["doc_id"] for r in resized.collect()) == [1]
 
 
 def test_header_features_fallback_unchanged():
@@ -199,47 +189,6 @@ def test_video_frames_round_trip_and_temporal_sampling():
         decode_frames(b"FRS0" + b"\x01\x00\x00\x00" + b"XX definitely not a frame here")
 
 
-def test_resize_media_chain(spark):
-    """resize_media: BMPs resize via nearest-neighbor and re-encode as
-    valid BMPs (decode_bmp round-trips them at the new geometry); WAV
-    payloads pass through byte-identical; the resized chain feeds
-    extract_media_features unchanged."""
-    from dynamic_etl_spark.ops.multimodal import resize_media, resize_nearest
-
-    docs = spark.range(0, 12).select(F.col("id").alias("doc_id"))
-    resized = resize_media(synthetic_media(docs), new_w=6, new_h=4)
-    got = {r["doc_id"]: r for r in resized.collect()}
-    assert len(got) == 12
-    for d in range(12):
-        if d % 3 == 0:  # image: resized
-            w, h, px = decode_bmp(bytes(got[d]["media"]))
-            assert (w, h) == (6, 4)
-            src = [_bmp_rgb(d, i) for i in range(BMP_W * BMP_H)]
-            assert px == resize_nearest(src, BMP_W, BMP_H, 6, 4)
-        elif d % 3 == 1:  # audio: pass-through
-            assert bytes(got[d]["media"]) == encode_wav(d)
-    feats = extract_media_features(resized, decoder=strict_decoder)
-    for r in feats.collect():
-        if r["media_type"] == "image/bmp":
-            assert r["features"][1:3] == [6.0, 4.0]
-
-
-def test_resize_nearest_reference_cases():
-    from dynamic_etl_spark.ops.multimodal import resize_nearest
-
-    # 2x1 -> 4x2: each source pixel replicates into a 2x2 block
-    px = [(1, 2, 3), (4, 5, 6)]
-    out = resize_nearest(px, 2, 1, 4, 2)
-    assert out == [px[0], px[0], px[1], px[1]] * 2
-    # downscale 4x2 -> 2x1 picks the top-left of each block
-    big = [(i, i, i) for i in range(8)]
-    assert resize_nearest(big, 4, 2, 2, 1) == [(0, 0, 0), (2, 2, 2)]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        resize_nearest(px, 2, 1, 0, 2)
-
-
 def test_strict_decoder_numpy_path_equals_python_sums():
     """VERDICT r6 #4: the numpy inner loops must be bit-identical to the
     Python-int sums they replaced — uint8/int16 sums accumulated in
@@ -277,29 +226,3 @@ def test_strict_decoder_numpy_path_equals_python_sums():
             sum(p[2] for p in px) / n,
         ]
         assert strict_decoder(encode_frames(doc_id)) == expect
-
-
-def test_array_resize_and_serialize_twins_are_byte_identical():
-    """r7 self-review follow-up: the array-native resize/serialize twins
-    the resize TRANSFORM hot path now uses must be byte-identical to the
-    tuple-list reference implementations, including non-square geometry
-    and rows needing 4-byte padding."""
-    from dynamic_etl_spark.ops.multimodal import (
-        decode_bmp_array,
-        resize_nearest,
-        resize_nearest_array,
-        serialize_bmp,
-        serialize_bmp_array,
-    )
-
-    for doc_id in (0, 7, 254):
-        payload = encode_bmp(doc_id)
-        w, h, px = decode_bmp(payload)
-        _, _, arr = decode_bmp_array(payload)
-        assert serialize_bmp_array(arr, w, h) == serialize_bmp(px, w, h) == payload
-        for new_w, new_h in ((6, 4), (1, 1), (5, 3), (7, 2)):
-            ref = serialize_bmp(resize_nearest(px, w, h, new_w, new_h), new_w, new_h)
-            fast = serialize_bmp_array(
-                resize_nearest_array(arr, w, h, new_w, new_h), new_w, new_h
-            )
-            assert fast == ref, (doc_id, new_w, new_h)

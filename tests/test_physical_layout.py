@@ -92,7 +92,7 @@ def test_zorder_write_prunes_second_dimension(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from dynamic_etl_spark.ops.layout import write_zordered, zorder_key
+    from dynamic_etl_spark.ops.layout import zorder_key
 
     n_side = 200
     df = (
@@ -110,8 +110,16 @@ def test_zorder_write_prunes_second_dimension(spark, tmp_path):
         .write.mode("overwrite")
         .parquet(linear_dir)
     )
-    # x/y are already grid coordinates in [0, 256): 8 bits each suffice
-    write_zordered(df, z_dir, zorder_key([F.col("x"), F.col("y")], bits=8), n_files=32)
+    # x/y are already grid coordinates in [0, 256): 8 bits each suffice;
+    # range-partitioning on the key gives each file a contiguous Morton range
+    (
+        df.withColumn("__z", zorder_key([F.col("x"), F.col("y")], bits=8))
+        .repartitionByRange(32, "__z")
+        .sortWithinPartitions("__z")
+        .drop("__z")
+        .write.mode("overwrite")
+        .parquet(z_dir)
+    )
 
     def files_overlapping_y_band(d, lo, hi):
         hit, total = 0, 0

@@ -22,7 +22,7 @@ def _docs(spark, texts):
 def test_ngram_stats_counts_duplicates(spark):
     # "a b a b a": 2-grams = [a b, b a, a b, b a] -> total 4, distinct 2, top 2
     df = _docs(spark, ["a b a b a"])
-    row = Q.ngram_stats(df, 2).collect()[0]
+    row = Q.multi_ngram_stats(df, [2]).collect()[0]
     assert (row.total_2grams, row.distinct_2grams, row.top_2gram_count) == (4, 2, 2)
 
 
@@ -30,7 +30,7 @@ def test_ngram_stats_short_doc_zeros(spark):
     # 1 token < n=2: the WHEN guard must yield an empty array (unguarded
     # sequence(1, 0) would run DESCENDING and fabricate grams)
     df = _docs(spark, ["solo"])
-    row = Q.ngram_stats(df, 2).collect()[0]
+    row = Q.multi_ngram_stats(df, [2]).collect()[0]
     assert (row.total_2grams, row.distinct_2grams, row.top_2gram_count) == (0, 0, 0)
 
 

@@ -216,26 +216,3 @@ def test_bpe_segment_reconstructs_word(word):
     ranks = {("a", "b"): 0, ("ab", "c"): 1, ("d", "e"): 2, ("c", "d"): 3}
     seg = bpe_segment(word, ranks)
     assert "".join(seg) == word + "</w>"
-
-
-# ---------------------------------------------------------------------------
-# resize_nearest properties
-# ---------------------------------------------------------------------------
-
-dims = st.integers(min_value=1, max_value=8)
-
-
-@settings(max_examples=60, deadline=None)
-@given(dims, dims, dims, dims)
-def test_resize_nearest_properties(w, h, nw, nh):
-    """(1) identity at the same geometry; (2) output size is exactly
-    nw*nh; (3) every output pixel exists in the source (nearest-neighbor
-    never invents values)."""
-    from dynamic_etl_spark.ops.multimodal import resize_nearest
-
-    px = [(i % 256, (i * 3) % 256, (i * 7) % 256) for i in range(w * h)]
-    assert resize_nearest(px, w, h, w, h) == px
-    out = resize_nearest(px, w, h, nw, nh)
-    assert len(out) == nw * nh
-    src = set(px)
-    assert all(p in src for p in out)
