@@ -15,16 +15,21 @@ integer arithmetic both engines evaluate identically, so every generator
 has an exact DuckDB SQL twin (the ``sql_*`` builders below) and the
 driver can hash-check generated tables like any other query.
 
-Weighted choice (F28/F29) is the inverse-CDF when-chain; store pick and
-product affinity (F36) are two-stage: weighted class/category choice,
-then uniform index within the group resolved by an equi-join — no
+Weighted choice (F28/F29) is the inverse-CDF when-chain. A pick that
+depends on a group (sub-category and price per category, affinity
+category per store class, quantity per category) is ONE draw indexing a
+literal map of per-group arrays or bounds, not a when-chain with a copy
+of the draw per group: same values, a fraction of the generated code,
+and no join or job (the map is a literal). Store pick and product
+affinity (F36) are two-stage: weighted class/category choice, then
+uniform index within the group resolved by an equi-join — no
 driver-side lists, no collect, scales to any dimension size.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -75,12 +80,12 @@ def uniform(seed: int, *cols: Column) -> Column:
     return h2 / float(_P)
 
 
-def uniform_int(seed: int, lo: int, hi: int, *cols: Column) -> Column:
+def uniform_int(seed: int, lo: int | Column, hi: int | Column, *cols: Column) -> Column:
     """randint(lo, hi) twin — inclusive bounds (F30)."""
     return (F.floor(uniform(seed, *cols) * (hi - lo + 1)) + lo).cast("int")
 
 
-def uniform_range(seed: int, lo: float, hi: float, *cols: Column) -> Column:
+def uniform_range(seed: int, lo: float | Column, hi: float | Column, *cols: Column) -> Column:
     """uniform(lo, hi) twin (F30)."""
     return uniform(seed, *cols) * (hi - lo) + lo
 
@@ -109,11 +114,24 @@ def pick_from(seed: int, values: Sequence[str], *cols: Column) -> Column:
     return F.element_at(arr, uniform_int(seed, 1, len(values), *cols))
 
 
+def _group_lookup(key: Column, table: Mapping[str, Sequence]) -> Column:
+    """``table[key]`` as an array, from a literal map: NULL for a key the
+    table lacks. A per-group draw passes it to ONE primitive call (the
+    bounds of ``uniform_int``/``uniform_range``, the array a pick
+    indexes), which gives every row the value a when-chain with one
+    copy of the draw per group gave it."""
+    return F.create_map(
+        *[c for k, vs in table.items() for c in (F.lit(k), F.array(*map(F.lit, vs)))]
+    )[key]
+
+
 # --------------------------------------------------------------------------
 # DuckDB SQL twins of the primitives above. Each mirrors its Spark
-# counterpart operation-for-operation (same constants, same double ops) so
-# generated tables hash-match across engines. ``expr`` is a SQL expression
-# for the integer key column.
+# counterpart's values operation-for-operation (same constants, same
+# double ops) so generated tables hash-match across engines; they match
+# values, not plan structure (the generators' per-group lookups are CASE
+# chains in the SQL twins). ``expr`` is a SQL expression for the integer
+# key column.
 # --------------------------------------------------------------------------
 
 
@@ -314,9 +332,8 @@ def generate_products(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
         "id", weighted_choice(uniform(seed + 11, i), CATEGORY_WEIGHTS).alias("category")
     )
     cat = F.col("category")
-    subcat = F.lit(None).cast("string")
-    for c, subs in SUBCATEGORIES.items():
-        subcat = F.when(cat == c, pick_from(seed + 12, subs, i)).otherwise(subcat)
+    subs = _group_lookup(cat, SUBCATEGORIES)
+    subcat = F.element_at(subs, uniform_int(seed + 12, 1, F.size(subs), i))
     brand = F.concat(F.lit("Brand"), (uniform_int(seed + 13, 1, 90, i)).cast("string"))
     size = pick_from(seed + 15, ("100g", "250g", "500g", "1kg", "200ml", "500ml", "1L", "XL"), i)
     df = df.select(
@@ -324,9 +341,8 @@ def generate_products(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
         size.alias("product_size"),
     )
     subcat, brand, size = F.col("sub_category"), F.col("brand"), F.col("product_size")
-    price = F.lit(None).cast("double")
-    for c, (lo, hi) in PRICE_RANGES.items():
-        price = F.when(cat == c, uniform_range(seed + 14, lo, hi, i)).otherwise(price)
+    lo_hi = _group_lookup(cat, PRICE_RANGES)
+    price = uniform_range(seed + 14, lo_hi[0], lo_hi[1], i)
     flavour = F.when(
         uniform(seed + 16, i) < 0.5,
         pick_from(seed + 17, ("Classic", "Mint", "Lemon", "Rose", "Chocolate"), i),
@@ -453,17 +469,20 @@ def generate_fact_sales(
     d_idx = Window.orderBy("distributor_id")
     dists_i = active.select("distributor_id", F.row_number().over(d_idx).alias("__didx"))
 
-    # the class pick feeds every affinity branch: bind it once
+    # the class pick is the affinity lookup's key: bind it once
     facts = facts.select(
         "id", weighted_choice(uniform(seed + 31, i), class_weights).alias("store_class_of_trade")
     )
     picked_class = F.col("store_class_of_trade")
     fallback_cats = tuple(sorted(present_cats))
-    affinity = pick_from(seed + 32, fallback_cats, i)
-    for cls, cats in CLASS_AFFINITY.items():
-        present_affinity = tuple(c for c in cats if c in present_cats) or fallback_cats
-        pick = pick_from(seed + 32, present_affinity, i)
-        affinity = F.when(picked_class == cls, pick).otherwise(affinity)
+    present_affinity = {
+        cls: tuple(c for c in cats if c in present_cats) or fallback_cats
+        for cls, cats in CLASS_AFFINITY.items()
+    }
+    affinity_cats = F.coalesce(
+        _group_lookup(picked_class, present_affinity), F.array(*map(F.lit, fallback_cats))
+    )
+    affinity = F.element_at(affinity_cats, uniform_int(seed + 32, 1, F.size(affinity_cats), i))
 
     fact_seeds = facts.select(
         i.alias("__fid"),
@@ -489,12 +508,8 @@ def generate_fact_sales(
     )
 
     fid = F.col("__fid")
-    base_qty = F.lit(None).cast("int")
-    for cat, (lo, hi) in CATEGORY_QTY.items():
-        base_qty = F.when(F.col("category") == cat, uniform_int(seed + 36, lo, hi, fid)).otherwise(
-            base_qty
-        )
-    base_qty = F.coalesce(base_qty, uniform_int(seed + 36, 1, 5, fid))
+    lo_hi = F.coalesce(_group_lookup(F.col("category"), CATEGORY_QTY), F.array(F.lit(1), F.lit(5)))
+    base_qty = uniform_int(seed + 36, lo_hi[0], lo_hi[1], fid)
     bulk = F.when(
         F.col("store_class_of_trade").contains("Wholesale")
         | F.col("store_class_of_trade").contains("Cash & Carry"),

@@ -10,14 +10,16 @@ write-new-then-atomic-swap on plain parquet.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from dynamic_etl_spark.io.table import read_table, write_table
+from dynamic_etl_spark.io.table import SCHEMA_SIDECAR, read_table, write_table
 
 
 def _hive_partition_cols(path: str) -> list[str]:
@@ -54,9 +56,24 @@ def write_csv(
 
     ``single_file`` reproduces the reference's one-file-per-extract shape
     (coalesce(1) — fine for extracts, wrong for bulk data; default keeps
-    one file per partition)."""
+    one file per partition).
+
+    A header written by an overwrite is also committed as the directory's
+    ``_schema.json``: the header's names as an all-string schema, which
+    ``io.read_csv_schema_on_read`` reads instead of running a
+    header-inference job. Any other mode may leave files with another
+    header in the directory, so it removes the sidecar and readers
+    infer."""
     out = df.coalesce(1) if single_file else df
     out.write.mode(mode).option("sep", sep).option("header", str(header).lower()).csv(path)
+    sidecar = os.path.join(path, SCHEMA_SIDECAR)
+    if mode != "overwrite":
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(sidecar)
+    elif header:
+        schema = T.StructType([T.StructField(c, T.StringType()) for c in df.columns])
+        with open(sidecar, "w") as fh:
+            fh.write(schema.json())
 
 
 def rotate_current_to_archive(current_dir: str, archive_dir: str) -> list[str]:

@@ -11,10 +11,14 @@ codegen, still one scan.
 
 from __future__ import annotations
 
+import json
 import os
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from dynamic_etl_spark.io.table import SCHEMA_SIDECAR
 
 #: Reference na_values (load_fact_sales_dw.py:85-88).
 NULL_SENTINELS = ("", "NULL", "null", "NA")
@@ -30,7 +34,14 @@ def read_csv_schema_on_read(
 ) -> DataFrame:
     """S5 — all-string CSV ingest with sentinel nulls; P10 — filename
     predicate via pathGlobFilter (pushed to the file listing, so excluded
-    files are never opened)."""
+    files are never opened).
+
+    A directory ``io.write_csv`` wrote carries the header it wrote as
+    ``_schema.json``; with ``header=True`` that header is the schema, so
+    the read runs no header-inference job. The sidecar assumes the file
+    is read with the separator it was written with. Column names follow
+    the rule inference applies to the header (:func:`_header_names`).
+    Without a sidecar the header is inferred."""
     reader = (
         spark.read.option("sep", sep)
         .option("header", str(header).lower())
@@ -38,14 +49,57 @@ def read_csv_schema_on_read(
     )
     if path_glob is not None:
         reader = reader.option("pathGlobFilter", path_glob)
-    df = reader.csv(path)
-    cleaned = [
-        F.when(F.trim(F.col(c)).isin(*[s for s in sentinels if s != ""]) | (F.trim(F.col(c)) == ""), None)
-        .otherwise(F.col(c))
-        .alias(c)
-        for c in df.columns
+    written = _written_header(path) if header else None
+    if written is None:
+        df = reader.csv(path)
+        names = df.columns
+    else:
+        case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
+        names = _header_names(written, case_sensitive)
+        schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
+        df = reader.schema(schema).csv(path)
+    # one SQL projection: built from Column objects it costs about 11
+    # py4j calls per column
+    listed = ", ".join(_sql_string(s) for s in sentinels if s != "")
+
+    def null_sentinels(q: str) -> str:
+        t = f"trim({q})"
+        hit = f"{t} IN ({listed}) OR {t} = ''" if listed else f"{t} = ''"
+        return f"CASE WHEN {hit} THEN NULL ELSE {q} END AS {q}"
+
+    return df.selectExpr(*[null_sentinels(_sql_ident(n)) for n in names])
+
+
+def _written_header(path: str) -> list[str] | None:
+    """The header ``io.write_csv`` committed with the directory ``path``,
+    or None (a file, or a directory without the sidecar)."""
+    try:
+        with open(os.path.join(path, SCHEMA_SIDECAR)) as fh:
+            return [f["name"] for f in json.load(fh)["fields"]]
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def _header_names(header: list[str], case_sensitive: bool) -> list[str]:
+    """The column names Spark's CSV reader gives a header row
+    (``CSVUtils.makeSafeHeader``): an empty name becomes ``_c<i>``, and
+    every copy of a repeated name (compared case-insensitively unless
+    ``spark.sql.caseSensitive``) becomes ``<name><i>``, ``i`` its
+    0-based position."""
+    fold = (lambda n: n) if case_sensitive else str.lower
+    seen = Counter(fold(n) for n in header)
+    return [
+        f"_c{i}" if n == "" else f"{n}{i}" if seen[fold(n)] > 1 else n
+        for i, n in enumerate(header)
     ]
-    return df.select(*cleaned)
+
+
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(value: str) -> str:
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def latest_file(directory: str, suffix: str = ".csv", prefix: str = "") -> str:

@@ -65,8 +65,10 @@ def _coin(arr: np.ndarray) -> int:
     """Deterministic compaction coin: parity of a crc32 over the sorted
     level content. Pseudo-random across compactions (so errors cancel
     like KLL's random coin in practice) yet a pure function of the data
-    — no RNG state to carry in the sketch."""
-    return zlib.crc32(arr.tobytes()) & 1
+    — no RNG state to carry in the sketch. ``+ 0.0`` turns -0.0 into
+    0.0: the sort ranks the two zeros equal, so their order (and bytes)
+    would otherwise depend on arrival order."""
+    return zlib.crc32((arr + 0.0).tobytes()) & 1
 
 
 def _compress(levels: dict[int, np.ndarray], k: int) -> dict[int, np.ndarray]:

@@ -31,9 +31,11 @@ already computes it. Every table commits through ``io.write_counted``
 (staging+swap), whose row count is observed by the committing write,
 never re-read; parquet tables are read through ``io.read_table``,
 whose committed ``_schema.json`` sidecar replaces a footer-inference
-job per read; the fact load's empty-dim guard reads
-the dim counts the ``load_dim_*`` steps published in the pipeline
-context; each validator gate is one scan (``validate``).
+job per read; the CSVs the day writes commit their header the same way
+(``io.write_csv``), so reading them back runs no header-inference job;
+the fact load's empty-dim guard reads the dim counts the ``load_dim_*``
+steps published in the pipeline context; each validator gate is one
+scan (``validate``).
 
 Storage layout under the caller's roots (all commits atomic via
 staging+swap, io/sinks):
@@ -221,7 +223,11 @@ def extract_pipeline(
             .join(F.broadcast(products), "product_id")
             .join(F.broadcast(dists), "distributor_id")
             .join(F.broadcast(cal.select("date_id", "full_date", "is_weekend")), "date_id")
-            .orderBy("sales_id")
+            # the extract is one file: sorting inside its one partition
+            # writes the bytes a global sort would, without the global
+            # sort's sampling job and shuffle
+            .coalesce(1)
+            .sortWithinPartitions("sales_id")
         )
         out = str(Path(snapshots) / f"sales_snapshot_{date_id}")
         write_csv(snap, out, sep="|", single_file=True)

@@ -14,7 +14,7 @@ Parity discipline (SURVEY.md §5, §7 "parity traps"):
 
 from __future__ import annotations
 
-from dynamic_etl_spark.registry.core import Query, QueryRegistry
+from dynamic_etl_spark.registry.core import QueryRegistry
 
 #: The driver records hard correctness rows (row-count + schema + value
 #: hash vs the DuckDB oracle) for the FIRST 50 registered queries only, so

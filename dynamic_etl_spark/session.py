@@ -69,8 +69,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # events.parquet stores ts as Parquet TIMESTAMP(NANOS), which Spark
-        # has no native type for; read as long and convert in the catalog.
+        # Every shipped events.parquet stores ts as timestamp[us], which
+        # reads as TIMESTAMP_NTZ whatever this conf says. Parquet
+        # TIMESTAMP(NANOS), which Spark has no native type for, reads as
+        # long and the catalog converts it.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     # environment overrides (see _env_conf) apply last. Local defaults

@@ -184,6 +184,92 @@ def test_generation_is_partitioning_independent(spark):
     assert sorted(map(repr, a.collect())) == sorted(map(repr, b.collect()))
 
 
+# The per-group when-chains the generators carried before each group's
+# draw became one lookup, rebuilt verbatim as the reference the lookups
+# must equal — absent groups included, which the golden digests below
+# never reach.
+
+
+def _affinity_chain(seed, picked_class, present_cats, i):
+    fallback = tuple(sorted(present_cats))
+    affinity = G.pick_from(seed + 32, fallback, i)
+    for cls, cats in G.CLASS_AFFINITY.items():
+        present = tuple(c for c in cats if c in present_cats) or fallback
+        affinity = F.when(picked_class == cls, G.pick_from(seed + 32, present, i)).otherwise(affinity)
+    return affinity
+
+
+def _base_qty_chain(seed, category, fid):
+    base = F.lit(None).cast("int")
+    for cat, (lo, hi) in G.CATEGORY_QTY.items():
+        base = F.when(category == cat, G.uniform_int(seed + 36, lo, hi, fid)).otherwise(base)
+    return F.coalesce(base, G.uniform_int(seed + 36, 1, 5, fid))
+
+
+def test_product_lookups_equal_the_when_chains(spark):
+    seed = 5
+    products = G.generate_products(spark, 400, seed)
+    i, cat = F.col("product_id") - 1, F.col("category")
+    subcat = F.lit(None).cast("string")
+    price = F.lit(None).cast("double")
+    for c, subs in G.SUBCATEGORIES.items():
+        subcat = F.when(cat == c, G.pick_from(seed + 12, subs, i)).otherwise(subcat)
+    for c, (lo, hi) in G.PRICE_RANGES.items():
+        price = F.when(cat == c, G.uniform_range(seed + 14, lo, hi, i)).otherwise(price)
+    price = F.round(price, 2).cast("decimal(12,2)")
+    differ = products.filter(
+        ~F.col("sub_category").eqNullSafe(subcat) | ~F.col("unit_price").eqNullSafe(price)
+    )
+    assert differ.count() == 0
+
+
+@pytest.mark.parametrize("store_classes", ["reference", "unknown"])
+def test_fact_lookups_equal_the_when_chains(spark, store_classes):
+    """Products without Beverage, Home Care or Baby Care, and with a
+    category outside ``CATEGORY_QTY``: Cash & Carry has no present
+    affinity category and picks from the fallback list, and a fallback
+    pick of the unknown category draws its quantity from 1..5. Stores
+    of a class outside ``CLASS_AFFINITY`` pick from the fallback list."""
+    seed = 7
+    stores = G.generate_stores(spark, 60, seed)
+    if store_classes == "unknown":
+        stores = stores.withColumn("store_class_of_trade", F.lit("Pharmacy"))
+    products = (
+        G.generate_products(spark, 300, seed)
+        .filter(F.col("category").isin("Grocery", "Dairy", "Personal Care"))
+        .withColumn(
+            "category",
+            F.when(F.col("category") == "Grocery", "Stationery").otherwise(F.col("category")),
+        )
+    )
+    present = {"Stationery", "Dairy", "Personal Care"}
+    facts = G.generate_fact_sales(
+        spark, stores, products, G.generate_distributors(spark, 20, seed),
+        date_id=20240603, rows=600, seed=seed, month=6,
+    )
+    fid, cls, cat = F.col("sales_id") - 1, F.col("store_class_of_trade"), F.col("category")
+    rows = (
+        facts.join(stores.select("store_id", "store_class_of_trade"), "store_id")
+        .join(products.select("product_id", "category"), "product_id")
+        .select(
+            cls, cat,
+            (cat == _affinity_chain(seed, cls, present, fid)).alias("affinity_equal"),
+            # qty is base_qty wherever no bulk multiplier applies
+            (F.col("quantity_sold") == _base_qty_chain(seed, cat, fid)).alias("qty_equal"),
+        )
+        .collect()
+    )
+    assert len(rows) == 600
+    assert all(r["affinity_equal"] for r in rows)
+    assert all(r["qty_equal"] for r in rows if "Wholesale" not in r["store_class_of_trade"])
+    seen = {(r["store_class_of_trade"], r["category"]) for r in rows}
+    if store_classes == "unknown":
+        assert {c for _, c in seen} == present
+    else:
+        assert {c for c, _ in seen} == {c for c, _ in G.STORE_VOLUME_WEIGHTS}
+        assert ("Cash & Carry - Wholesale", "Stationery") in seen
+
+
 # Order-insensitive row digests of the generators' output, captured from
 # the plain (un-rebound) expression trees: (schema, rows, sum over rows of
 # xxhash64(to_json(row))). Any change to a generator's expressions must

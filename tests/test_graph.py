@@ -7,7 +7,6 @@ from __future__ import annotations
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops.graph import connected_components
 

@@ -6,7 +6,6 @@ from __future__ import annotations
 from itertools import combinations
 
 import pytest
-from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops import lsh as L
 

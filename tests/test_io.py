@@ -347,22 +347,30 @@ def _sidecar(path) -> str:
     return os.path.join(str(path), "_schema.json")
 
 
-def test_read_table_sidecar_matches_inference_for_every_retail_table(spark, scratch):
+@pytest.fixture(scope="module")
+def retail_day(spark, tmp_path_factory) -> Path:
+    """The root of one small retail day."""
+    from dynamic_etl_spark.pipelines import retail_daily_run
+
+    root = tmp_path_factory.mktemp("retail_day")
+    retail_daily_run(
+        spark, str(root), date_id=20240617,
+        n_stores=5, n_products=10, n_distributors=5, rows_per_day=30,
+    )
+    return root
+
+
+def test_read_table_sidecar_matches_inference_for_every_retail_table(spark, retail_day):
     """Every table a retail day commits carries a ``_schema.json`` that
     reads back as exactly the schema footer inference would find — and
     reading through it schedules no Spark job."""
     from dynamic_etl_spark.io import read_table
-    from dynamic_etl_spark.pipelines import retail_daily_run
 
-    retail_daily_run(
-        spark, str(scratch), date_id=20240617,
-        n_stores=5, n_products=10, n_distributors=5, rows_per_day=30,
-    )
     tables = [
-        scratch / "source" / n
+        retail_day / "source" / n
         for n in ("dim_store", "dim_product", "dim_distributor", "dim_date", "fact_sales")
     ] + [
-        scratch / "dw" / n
+        retail_day / "dw" / n
         for n in ("dim_store", "dim_product", "dim_distributor", "dim_date", "fact_sales_dw")
     ]
     sc = spark.sparkContext
@@ -376,6 +384,74 @@ def test_read_table_sidecar_matches_inference_for_every_retail_table(spark, scra
         assert not sc.statusTracker().getJobIdsForGroup("read-table-sidecar"), path
         assert df.schema == spark.read.parquet(path).schema, path
         assert df.count() == spark.read.parquet(path).count()
+
+
+def _part_file(directory) -> str:
+    (part,) = glob.glob(os.path.join(str(directory), "part-*"))
+    return part
+
+
+def test_csv_sidecar_read_matches_inference_without_a_job(spark, scratch):
+    """``write_csv`` commits the header it wrote; reading it back takes
+    the names inference would give a header that repeats a name
+    (case-insensitively: ``<name><position>``), the same rows, and no
+    Spark job. A file, or a directory without the sidecar, still infers."""
+    df = spark.createDataFrame(
+        [("1", "a", " NA ", "x"), ("2", None, "b", "")],
+        ["id", "Price", "v", "price"],
+    )
+    out = scratch / "dup"
+    write_csv(df, str(out), sep="|", single_file=True)
+    assert os.path.isfile(_sidecar(out))
+
+    back, jobs = _jobs_of(spark, lambda: read_csv_schema_on_read(spark, str(out), sep="|"))
+    assert jobs == 0
+    inferred, inference_jobs = _jobs_of(
+        spark, lambda: read_csv_schema_on_read(spark, _part_file(out), sep="|")
+    )
+    assert inference_jobs > 0
+    assert back.columns == inferred.columns == ["id", "Price1", "v", "price3"]
+    assert back.collect() == inferred.collect() == [
+        ("1", "a", None, "x"), ("2", None, "b", None),
+    ]
+
+    bare = scratch / "bare"
+    shutil.copytree(out, bare, ignore=shutil.ignore_patterns("_schema.json"))
+    same, bare_jobs = _jobs_of(spark, lambda: read_csv_schema_on_read(spark, str(bare), sep="|"))
+    assert bare_jobs > 0
+    assert same.columns == back.columns and same.collect() == back.collect()
+
+    # an append may add files with another header: the sidecar goes
+    write_csv(df.select("id"), str(out), sep="|", mode="append")
+    assert not os.path.exists(_sidecar(out))
+
+
+def test_retail_day_csvs_read_back_with_their_header(spark, retail_day):
+    """The day's two CSV extracts read back through their committed
+    header exactly as through inference, and the snapshot is written in
+    ascending ``sales_id`` order."""
+    extracts = [
+        (next((retail_day / "extract" / "snapshots").iterdir()), "|"),
+        (next((retail_day / "extract" / "Current").iterdir()), ","),
+    ]
+    for directory, sep in extracts:
+        assert os.path.isfile(_sidecar(directory)), directory
+        back, jobs = _jobs_of(
+            spark, lambda: read_csv_schema_on_read(spark, str(directory), sep=sep)
+        )
+        assert jobs == 0, directory
+        inferred = read_csv_schema_on_read(spark, _part_file(directory), sep=sep)
+        assert back.columns == inferred.columns, directory
+        assert back.collect() == inferred.collect(), directory
+    snapshot = extracts[0][0]
+    assert {"unit_price6", "unit_price27"} <= set(
+        read_csv_schema_on_read(spark, str(snapshot), sep="|").columns
+    )
+    with open(_part_file(snapshot)) as fh:
+        header, *lines = fh.read().splitlines()
+    at = header.split("|").index("sales_id")
+    ids = [int(line.split("|")[at]) for line in lines]
+    assert len(ids) == 30 and ids == sorted(ids)
 
 
 def test_read_table_without_sidecar_falls_back_to_inference(spark, scratch):

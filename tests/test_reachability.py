@@ -1,4 +1,4 @@
-"""Guard against code that only tests call.
+"""Guard against code that only tests call, and against unused imports.
 
 The product is what the registry, the retail pipelines, streaming and
 the benchmark run. This test takes the name-reference closure of every
@@ -16,6 +16,11 @@ Module-level ``Assign``/``AnnAssign`` statements are definitions whose
 value is followed, so a constant consumed by another constant is reached
 through it. Other module-level statements run on import and are treated
 as roots.
+
+The second check is the unused-import rule of a linter (F401), which
+this repository does not install: an AST scan of ``dynamic_etl_spark/``
+and ``tests/`` for imported names no code in the module uses. A
+re-export says so with ``# noqa: F401`` on its import statement.
 """
 
 from __future__ import annotations
@@ -147,4 +152,38 @@ def test_only_the_keep_list_is_unreached_from_the_product():
     assert not KEEP - unreached, (
         f"the product now reaches (or no longer defines) {sorted(KEEP - unreached)}; "
         "drop it from KEEP"
+    )
+
+
+def unused_imports() -> list[str]:
+    """``file:line name`` of every imported name its module never uses."""
+    found = []
+    for root in (PACKAGE, os.path.join(REPO_ROOT, "tests")):
+        for path in _python_files(root):
+            with open(path) as fh:
+                source = fh.read()
+            lines = source.splitlines()
+            tree = ast.parse(source, filename=path)
+            used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+            for stmt in ast.walk(tree):
+                if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                    continue
+                if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                    continue
+                span = lines[stmt.lineno - 1 : stmt.end_lineno]
+                if any("noqa: F401" in line for line in span):
+                    continue
+                for alias in stmt.names:
+                    name = alias.asname or alias.name.split(".")[0]
+                    if name not in used:
+                        rel = os.path.relpath(path, REPO_ROOT)
+                        found.append(f"{rel}:{alias.lineno} {name}")
+    return found
+
+
+def test_no_unused_imports():
+    unused = unused_imports()
+    assert not unused, (
+        f"imported but never used: {unused}; delete the import, or mark a "
+        "re-export with # noqa: F401"
     )
