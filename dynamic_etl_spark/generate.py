@@ -146,8 +146,8 @@ def sql_uniform_int(seed: int, lo: int, hi: int, expr: str = "i") -> str:
     return f"CAST(floor({sql_uniform(seed, expr)} * {hi - lo + 1}) + {lo} AS INT)"
 
 
-def sql_uniform_range(seed: int, lo: float, hi: float, expr: str = "i") -> str:
-    return f"({sql_uniform(seed, expr)} * {hi - lo!r} + {lo!r})"
+def sql_uniform_range(seed: int, lo: float, hi: float) -> str:
+    return f"({sql_uniform(seed)} * {hi - lo!r} + {lo!r})"
 
 
 def sql_weighted_choice(u_expr: str, options: Sequence[tuple[str, float]]) -> str:
@@ -167,8 +167,8 @@ def sql_pick_from(seed: int, values: Sequence[str], expr: str = "i") -> str:
     return f"({lst})[{sql_uniform_int(seed, 1, len(values), expr)}]"
 
 
-def sql_random_date(seed: int, start: str, days: int, expr: str = "i") -> str:
-    return f"(DATE '{start}' + {sql_uniform_int(seed, 0, days - 1, expr)})"
+def sql_random_date(seed: int, start: str, days: int) -> str:
+    return f"(DATE '{start}' + {sql_uniform_int(seed, 0, days - 1)})"
 
 
 # --------------------------------------------------------------------------

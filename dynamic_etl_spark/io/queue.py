@@ -1,7 +1,7 @@
 """Exactly-once batch file queue (SURVEY.md §2.1 S8, §2.9 U6).
 
 The reference's ledger: an append-only ``processed_files.log`` consulted
-to pick the OLDEST unprocessed ``prefix*.csv``, marked only AFTER the
+to pick the OLDEST unprocessed ``prefix*`` entry, marked only AFTER the
 merge commits (scripts2/load_fact_sales_dw.py:26-35,65-77,425). This is
 the batch-mode twin of streaming/incremental.py (where the checkpoint
 file-log is the ledger); it exists because the reference's skip/retry
@@ -42,15 +42,13 @@ class FileQueue:
         self,
         incoming_dir: str,
         ledger_path: str,
-        prefix: str = "",
-        suffix: str = ".csv",
+        prefix: str,
     ) -> None:
         if not os.path.isdir(incoming_dir):
             raise RuntimeError(f"Incoming directory not found: {incoming_dir}")
         self.incoming_dir = incoming_dir
         self.ledger_path = ledger_path
         self.prefix = prefix
-        self.suffix = suffix
 
     # -- ledger ------------------------------------------------------------
     def processed(self) -> set[str]:
@@ -70,11 +68,7 @@ class FileQueue:
         """Oldest-first unprocessed files (lexicographic = chronological
         for timestamped names)."""
         done = self.processed()
-        names = sorted(
-            f
-            for f in os.listdir(self.incoming_dir)
-            if f.startswith(self.prefix) and f.endswith(self.suffix)
-        )
+        names = sorted(f for f in os.listdir(self.incoming_dir) if f.startswith(self.prefix))
         return [f for f in names if f not in done]
 
     def next_unprocessed(self) -> str | None:

@@ -10,7 +10,6 @@ write-new-then-atomic-swap on plain parquet.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import uuid
@@ -43,37 +42,29 @@ def _hive_partition_cols(path: str) -> list[str]:
     return cols
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    sep: str = "|",
-    header: bool = True,
-    single_file: bool = False,
-    mode: str = "overwrite",
-) -> None:
+def write_csv(df: DataFrame, path: str, sep: str = "|") -> None:
     """S3/S4 — comma or pipe ("DW best practice" in the reference,
-    extract_sales_snapshot.py:104) delimited CSV.
+    extract_sales_snapshot.py:104) delimited CSV with a header row,
+    overwriting ``path`` with ONE file: the reference's one-file-per-
+    extract shape (coalesce(1) — fine for extracts, wrong for bulk data).
 
-    ``single_file`` reproduces the reference's one-file-per-extract shape
-    (coalesce(1) — fine for extracts, wrong for bulk data; default keeps
-    one file per partition).
-
-    A header written by an overwrite is also committed as the directory's
-    ``_schema.json``: the header's names as an all-string schema, which
-    ``io.read_csv_schema_on_read`` reads instead of running a
-    header-inference job. Any other mode may leave files with another
-    header in the directory, so it removes the sidecar and readers
-    infer."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode(mode).option("sep", sep).option("header", str(header).lower()).csv(path)
-    sidecar = os.path.join(path, SCHEMA_SIDECAR)
-    if mode != "overwrite":
-        with contextlib.suppress(FileNotFoundError):
-            os.remove(sidecar)
-    elif header:
-        schema = T.StructType([T.StructField(c, T.StringType()) for c in df.columns])
-        with open(sidecar, "w") as fh:
-            fh.write(schema.json())
+    The header is also committed as the directory's ``_schema.json``: its
+    names as an all-string schema, which ``io.read_csv_schema_on_read``
+    reads instead of running a header-inference job. A header Spark's
+    reader would rename — an empty name, or one repeated
+    case-insensitively — is refused before anything is written, so the
+    sidecar's names are the names every reader sees."""
+    folded = [c.lower() for c in df.columns]
+    unsafe = sorted({c for c in df.columns if c == "" or folded.count(c.lower()) > 1})
+    if unsafe:
+        raise ValueError(
+            f"write_csv: header names must be non-empty and unique "
+            f"case-insensitively; rename {unsafe}"
+        )
+    df.coalesce(1).write.mode("overwrite").option("sep", sep).option("header", "true").csv(path)
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in df.columns])
+    with open(os.path.join(path, SCHEMA_SIDECAR), "w") as fh:
+        fh.write(schema.json())
 
 
 def rotate_current_to_archive(current_dir: str, archive_dir: str) -> list[str]:

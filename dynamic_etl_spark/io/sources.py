@@ -1,5 +1,4 @@
-"""CSV sources + file-selection utilities (SURVEY.md §2.1 S5, S6, S11;
-§2.2 P10).
+"""CSV sources + file-selection utilities (SURVEY.md §2.1 S5, S6, S11).
 
 The reference's schema-on-read contract (scripts2/load_fact_sales_dw.py:
 84-90): everything ingests as STRING with sentinel nulls
@@ -13,7 +12,6 @@ from __future__ import annotations
 
 import json
 import os
-from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -24,48 +22,30 @@ from dynamic_etl_spark.io.table import SCHEMA_SIDECAR
 NULL_SENTINELS = ("", "NULL", "null", "NA")
 
 
-def read_csv_schema_on_read(
-    spark: SparkSession,
-    path: str,
-    sep: str = "|",
-    header: bool = True,
-    sentinels: tuple[str, ...] = NULL_SENTINELS,
-    path_glob: str | None = None,
-) -> DataFrame:
-    """S5 — all-string CSV ingest with sentinel nulls; P10 — filename
-    predicate via pathGlobFilter (pushed to the file listing, so excluded
-    files are never opened).
+def read_csv_schema_on_read(spark: SparkSession, path: str, sep: str = "|") -> DataFrame:
+    """S5 — all-string ingest of a CSV with a header row, sentinel nulls.
 
     A directory ``io.write_csv`` wrote carries the header it wrote as
-    ``_schema.json``; with ``header=True`` that header is the schema, so
-    the read runs no header-inference job. The sidecar assumes the file
-    is read with the separator it was written with. Column names follow
-    the rule inference applies to the header (:func:`_header_names`).
-    Without a sidecar the header is inferred."""
-    reader = (
-        spark.read.option("sep", sep)
-        .option("header", str(header).lower())
-        .option("inferSchema", "false")
-    )
-    if path_glob is not None:
-        reader = reader.option("pathGlobFilter", path_glob)
-    written = _written_header(path) if header else None
-    if written is None:
+    ``_schema.json``, and that header is the schema, so the read runs no
+    header-inference job (``write_csv`` refuses the empty and repeated
+    names inference would rename). The sidecar assumes the file is read
+    with the separator it was written with. Without a sidecar the header
+    is inferred."""
+    reader = spark.read.option("sep", sep).option("header", "true").option("inferSchema", "false")
+    names = _written_header(path)
+    if names is None:
         df = reader.csv(path)
         names = df.columns
     else:
-        case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
-        names = _header_names(written, case_sensitive)
         schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
         df = reader.schema(schema).csv(path)
     # one SQL projection: built from Column objects it costs about 11
     # py4j calls per column
-    listed = ", ".join(_sql_string(s) for s in sentinels if s != "")
+    listed = ", ".join(_sql_string(s) for s in NULL_SENTINELS if s != "")
 
     def null_sentinels(q: str) -> str:
         t = f"trim({q})"
-        hit = f"{t} IN ({listed}) OR {t} = ''" if listed else f"{t} = ''"
-        return f"CASE WHEN {hit} THEN NULL ELSE {q} END AS {q}"
+        return f"CASE WHEN {t} IN ({listed}) OR {t} = '' THEN NULL ELSE {q} END AS {q}"
 
     return df.selectExpr(*[null_sentinels(_sql_ident(n)) for n in names])
 
@@ -80,20 +60,6 @@ def _written_header(path: str) -> list[str] | None:
         return None
 
 
-def _header_names(header: list[str], case_sensitive: bool) -> list[str]:
-    """The column names Spark's CSV reader gives a header row
-    (``CSVUtils.makeSafeHeader``): an empty name becomes ``_c<i>``, and
-    every copy of a repeated name (compared case-insensitively unless
-    ``spark.sql.caseSensitive``) becomes ``<name><i>``, ``i`` its
-    0-based position."""
-    fold = (lambda n: n) if case_sensitive else str.lower
-    seen = Counter(fold(n) for n in header)
-    return [
-        f"_c{i}" if n == "" else f"{n}{i}" if seen[fold(n)] > 1 else n
-        for i, n in enumerate(header)
-    ]
-
-
 def _sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
@@ -102,30 +68,25 @@ def _sql_string(value: str) -> str:
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def latest_file(directory: str, suffix: str = ".csv", prefix: str = "") -> str:
-    """S6/W3 — lexicographic newest (timestamped names sort naturally;
-    reference read_extract_snapshot.py:9-21)."""
-    names = [
-        f
-        for f in os.listdir(directory)
-        if f.startswith(prefix) and f.endswith(suffix)
-    ]
+def latest_file(directory: str, prefix: str) -> str:
+    """S6/W3 — lexicographic newest entry named ``prefix*`` (timestamped
+    names sort naturally; reference read_extract_snapshot.py:9-21)."""
+    names = [f for f in os.listdir(directory) if f.startswith(prefix)]
     if not names:
         raise FileNotFoundError(
-            f"no '{prefix}*{suffix}' files in {directory}. "
-            + list_dir_diagnostics(directory)
+            f"no '{prefix}*' entries in {directory}. " + list_dir_diagnostics(directory)
         )
     return os.path.join(directory, sorted(names)[-1])
 
 
-def list_dir_diagnostics(directory: str, limit: int = 10) -> str:
-    """S11 — first-N directory listing for error messages
+def list_dir_diagnostics(directory: str) -> str:
+    """S11 — first-10 directory listing for error messages
     (reference validate_table.py:98-107)."""
     try:
-        names = sorted(os.listdir(directory))[:limit]
+        names = sorted(os.listdir(directory))[:10]
     except OSError as exc:
         return f"(listing failed: {exc})"
-    return f"Directory contains (first {limit}): {names}"
+    return f"Directory contains (first 10): {names}"
 
 
 def read_jdbc(

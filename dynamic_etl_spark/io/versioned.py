@@ -109,7 +109,6 @@ def write_versioned(
     base_version: int | None = None,
     expected_base: bool = False,
     metadata: dict | None = None,
-    put_if_absent=None,
 ) -> int:
     """Write ``df`` as the next snapshot of the table at ``root`` and
     atomically commit it. Returns the committed version number. The
@@ -131,11 +130,11 @@ def write_versioned(
     NON-idempotent state fold (e.g. a running aggregate) survives
     checkpoint redelivery applied exactly once.
 
-    ``put_if_absent(path, payload) -> bool`` swaps the commit primitive
-    (VERDICT r11 #6): the default is the local hard-link CAS; an
-    object-store deployment passes its conditional PUT (S3
-    ``If-None-Match: *``, GCS ``ifGenerationMatch=0``) bound to the
-    same key layout. The contract: create the key with exactly-one
+    The commit primitive is :func:`_local_put_if_absent`, the local
+    hard-link CAS (VERDICT r11 #6: the protocol's only storage-specific
+    semantic). An object-store port replaces it with its conditional
+    PUT (S3 ``If-None-Match: *``, GCS ``ifGenerationMatch=0``) bound to
+    the same key layout. The contract: create the key with exactly-one
     winner — True iff THIS call created it, False if it already exists,
     and the key must never be readable half-written.
     """
@@ -160,27 +159,23 @@ def write_versioned(
                 )
             version = (current if current is not None else -1) + 1
             record = {"version": version, "dir": data_name, "metadata": metadata or {}}
-            # atomic + exclusive publish through the pluggable primitive
-            # (local hard-link CAS by default, conditional PUT on object
-            # stores); a False return means another writer won this
-            # version number — the loop re-reads latest: expected_base
-            # writers abort above, blind writers retry at the next number
+            # atomic + exclusive publish; a False return means another
+            # writer won this version number — the loop re-reads latest:
+            # expected_base writers abort above, blind writers retry at
+            # the next number
             target = os.path.join(root, _COMMITS, f"{version:08d}.json")
-            publish = put_if_absent or _local_put_if_absent
-            if publish(target, json.dumps(record).encode()):
+            if _local_put_if_absent(target, json.dumps(record).encode()):
                 return version
     except BaseException:
         shutil.rmtree(data_dir, ignore_errors=True)
         raise
 
 
-def read_versioned(
-    spark: SparkSession, root: str, version: int | None = None
-) -> DataFrame:
-    """Scan the newest committed snapshot (or a pinned ``version``)
-    through ``io.table.read_table``: its ``_schema.json`` spares the
-    footer-inference job (older snapshots without one infer)."""
-    v = latest_version(root) if version is None else version
+def read_versioned(spark: SparkSession, root: str) -> DataFrame:
+    """Scan the newest committed snapshot through ``io.table.read_table``:
+    its ``_schema.json`` spares the footer-inference job (older snapshots
+    without one infer)."""
+    v = latest_version(root)
     if v is None:
         raise FileNotFoundError(f"no committed versions at {root!r}")
     return read_table(spark, os.path.join(root, _VERSIONS, _commit_record(root, v)["dir"]))

@@ -8,7 +8,6 @@ exact). Helpers return Columns so callers compose them in one ``agg`` pass.
 
 from __future__ import annotations
 
-import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -59,12 +58,11 @@ def count_if(cond: Column, alias: str) -> Column:
     return F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(alias)
 
 
-def null_counts(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+def null_counts(df: DataFrame) -> DataFrame:
     """A8 — per-column NULL counts in ONE scan (the reference issues one
     SELECT COUNT(*) per column — scripts/validate_table.py:288-298)."""
-    cols = list(cols or df.columns)
     return df.select(
-        [F.count(F.when(F.col(c).isNull(), 1)).cast("long").alias(c) for c in cols]
+        [F.count(F.when(F.col(c).isNull(), 1)).cast("long").alias(c) for c in df.columns]
     )
 
 
@@ -276,7 +274,7 @@ def category_drift_profile(
 
 
 def build_distinct_sketch_state(
-    df: DataFrame, keys: Sequence[str], value: str, lg_k: int = 12
+    df: DataFrame, keys: Sequence[str], value: str
 ) -> DataFrame:
     """Mergeable DISTINCT-count state: a Datasketches HLL sketch per key
     group — the approximate sibling of :func:`build_agg_state` for the
@@ -288,7 +286,7 @@ def build_distinct_sketch_state(
     Sketch bytes are engine-specific: rows-only territory, tolerance
     pytest instead of a DuckDB oracle."""
     return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(F.col(value), F.lit(lg_k)).alias("state_sketch")
+        F.hll_sketch_agg(F.col(value), F.lit(12)).alias("state_sketch")
     )
 
 
@@ -488,7 +486,6 @@ def _mg_compress(
     keys: Sequence[str],
     k: int,
     two_phase: bool = False,
-    n_salts: int | None = None,
 ) -> DataFrame:
     """Misra-Gries compression: subtract the (k+1)-th largest counter
     value per key group from every counter and drop the non-positive —
@@ -516,8 +513,7 @@ def _mg_compress(
     order = [F.desc("state_cnt"), F.asc("state_item")]
     cand = counters
     if two_phase:
-        if n_salts is None:
-            n_salts = _mg_salts(counters)
+        n_salts = _mg_salts(counters)
         wg = Window.partitionBy(*keys, "__salt").orderBy(*order)
         cand = (
             counters.withColumn(
@@ -553,7 +549,6 @@ def build_heavy_hitter_state(
     keys: Sequence[str],
     item: str,
     k: int = 8,
-    n_salts: int | None = None,
 ) -> DataFrame:
     """Mergeable HEAVY-HITTER state: a Misra-Gries summary of at most
     ``k`` (item, counter) rows per key group — the frequent-items
@@ -575,13 +570,12 @@ def build_heavy_hitter_state(
     partials; the initial compression is the salted two-phase form (see
     :func:`_mg_compress`), so a hot key's million-item distinct set is
     ranked in shuffle-width-many bounded salt groups (derived by
-    :func:`_mg_salts`, or passed explicitly via ``n_salts``), never one
-    task; state thereafter is O(|keys| * k) rows, and every merge moves
+    :func:`_mg_salts`), never one task; state thereafter is O(|keys| * k) rows, and every merge moves
     only summaries, never history."""
     counts = df.groupBy(*keys, F.col(item).alias("state_item")).agg(
         F.count(F.lit(1)).alias("state_cnt")
     )
-    return _mg_compress(counts, keys, k, two_phase=True, n_salts=n_salts)
+    return _mg_compress(counts, keys, k, two_phase=True)
 
 
 def merge_heavy_hitter_state(
@@ -724,84 +718,34 @@ def cm_bucket(item: Column, depth_idx: int, width: int) -> Column:
     return F.conv(hex8, 16, 10).cast("long") % width
 
 
-def cm_params(eps: float, delta: float) -> tuple[int, int]:
-    """Derive (depth, width) from the standard Count-Min guarantee
-    (Cormode-Muthukrishnan 2005 §3.1): with ``width = ceil(e / eps)``
-    and ``depth = ceil(ln(1 / delta))``, every estimate satisfies
-    ``true <= est <= true + eps * n`` with probability ``>= 1 - delta``
-    (n = total stream count). The md5-slice hash family yields at most
-    4 independent 32-bit rows per item (:func:`cm_bucket`), so depth is
-    capped at 4 — i.e. delta >= e^-4 ~= 0.0184; a tighter delta needs a
-    second hash family and is refused loudly rather than silently
-    delivering a weaker guarantee."""
-    if not 0 < eps < 1:
-        raise ValueError(f"cm_params: eps must be in (0,1), got {eps}")
-    if not 0 < delta < 1:
-        raise ValueError(f"cm_params: delta must be in (0,1), got {delta}")
-    depth = math.ceil(math.log(1.0 / delta))
-    width = math.ceil(math.e / eps)
-    if depth > 4:
-        raise ValueError(
-            f"cm_params: delta={delta} needs depth={depth} > 4 independent "
-            "md5 slices (min supported delta is exp(-4) ~= 0.0184)"
-        )
-    return max(depth, 1), width
-
-
 def build_cm_state(
     df: DataFrame,
     keys: Sequence[str],
     item: str,
-    depth: int | None = None,
-    width: int | None = None,
-    *,
-    eps: float | None = None,
-    delta: float | None = None,
+    width: int = 256,
 ) -> DataFrame:
     """Mergeable Count-Min frequency state (Cormode-Muthukrishnan 2005):
-    per key group, ``depth`` hash rows of ``width`` counters; an item's
+    per key group, 4 hash rows of ``width`` counters; an item's
     estimated count is the MIN over its rows, always >= the true count
     (overestimate-only, never under). The point-frequency member of the
     maintained-summary suite: Misra-Gries answers "who is heavy", CM
-    answers "how often is THIS key" for ANY key in O(depth) lookups over
-    O(depth*width) state — no item list retained at all. State rows:
+    answers "how often is THIS key" for ANY key in 4 lookups over
+    O(4*width) state — no item list retained at all. State rows:
     (keys..., state_depth, state_bucket, state_cnt); merging is
     elementwise integer addition (an exact monoid, like the rollup
     state), so merge-tree == one-shot bit-for-bit and the whole
     maintenance path is oracle-checkable. Error: overestimate <=
-    2n/width with prob >= 1 - 2^-depth. One explode (depth rows/event)
-    + one partial-aggregated groupBy.
+    2n/width with prob >= 1 - 2^-4 (the md5-slice hash family yields 4
+    independent 32-bit rows per item, :func:`cm_bucket`). One explode
+    (4 rows/event) + one partial-aggregated groupBy.
 
     ``state_width`` rides along as a constant column: a probe against a
     grid hashed at a DIFFERENT width reads the wrong buckets and can
     UNDERestimate — the one failure CM must never have — so
     :func:`cm_estimate` derives width/depth from the state instead of
     trusting caller defaults (and a mixed-width merge becomes visible
-    as two width groups instead of a silently summed wrong grid).
-
-    Pass ``eps``/``delta`` (both, keyword-only) to size the grid from
-    the accuracy contract instead of raw knobs: :func:`cm_params` gives
-    ``est <= true + eps*n`` with probability ``>= 1 - delta``. Raw
-    width/depth (default 4 x 256) remain the low-level override when
-    neither is given."""
-    if (eps is None) != (delta is None):
-        raise ValueError("build_cm_state: pass BOTH eps and delta, or neither")
-    if eps is not None and delta is not None:
-        # refuse mixed sizing, matching the pass-both-or-neither rule: a
-        # caller handing eps/delta AND explicit depth/width would get the
-        # accuracy-contract sizing with their raw knobs silently ignored —
-        # a weaker sketch than they thought they configured (ADVICE r7 #2).
-        # None-sentinel defaults (review r8) so EVERY explicit raw knob is
-        # caught, including depth=4/width=256 spelled out.
-        if depth is not None or width is not None:
-            raise ValueError(
-                "build_cm_state: eps/delta sizing and explicit depth/width "
-                "are mutually exclusive — pass one sizing, not both"
-            )
-        depth, width = cm_params(eps, delta)
-    depth = 4 if depth is None else depth
-    width = 256 if width is None else width
-    buckets = F.array(*[cm_bucket(F.col(item), d, width) for d in range(depth)])
+    as two width groups instead of a silently summed wrong grid)."""
+    buckets = F.array(*[cm_bucket(F.col(item), d, width) for d in range(4)])
     return (
         df.select(*keys, F.posexplode(buckets).alias("state_depth", "state_bucket"))
         .groupBy(*keys, "state_depth", "state_bucket")
@@ -871,7 +815,7 @@ def cm_estimate(state: DataFrame, probes: DataFrame, item: str) -> DataFrame:
     if len(meta["ws"]) != 1:
         raise ValueError(f"cm_estimate: mixed-width state {sorted(meta['ws'])}")
     width, depth = int(meta["ws"][0]), int(meta["depth"])
-    buckets = F.array(*[cm_bucket(F.col(item), d, width) for d in range(depth)])
+    buckets = F.array(*[cm_bucket(F.col(item), d, width) for d in range(4)])
     fanned = probes.select(
         *keys, F.col(item), F.posexplode(buckets).alias("state_depth", "state_bucket")
     )

@@ -29,6 +29,13 @@ from pyspark.sql import types as T
 # and the guard is a no-op either way).
 from dynamic_etl_spark.session import ensure_fanout_parallelism
 
+#: The per-cell BLAS passes score this many rows against a cell at a
+#: time: peak memory is O(BLOCK_ROWS * cell_size), never cell_size².
+BLOCK_ROWS = 1024
+#: A cell past this many rows raises instead of OOMing its executor
+#: (200k rows x 768 dims x 8 B ≈ 1.2 GB of vectors; SemDeDup's guard).
+MAX_CELL_ROWS = 200_000
+
 
 def as_double_vec(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -100,7 +107,6 @@ def max_cosine_vs_queries(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    query_id_col: str | None = None,
 ) -> DataFrame:
     """Per-CORPUS-row nearest query by cosine — :func:`cosine_topk`'s
     transpose (that one ranks neighbors per query; this one keeps each
@@ -131,7 +137,6 @@ def max_cosine_vs_queries(
     construction; the corpus plan is untouched), so both twins now fail
     identically loudly (ADVICE r6).
     """
-    query_id_col = query_id_col or id_col
     # take(1), not limit(1).count(): CollectLimit short-circuits in ONE
     # job, while an AQE count over the filtered scan spends three
     if not queries.take(1):
@@ -139,7 +144,7 @@ def max_cosine_vs_queries(
     anchor = F.broadcast(
         queries.select(
             F.struct(
-                F.col(query_id_col).cast("long").alias("qid"),
+                F.col(id_col).cast("long").alias("qid"),
                 as_double_vec(F.col(vec_col)).alias("qv"),
             ).alias("__q")
         ).agg(F.sort_array(F.collect_list("__q")).alias("__evals"))
@@ -281,7 +286,6 @@ def cosine_topk_vectorized(
     id_col: str,
     vec_col: str,
     k: int = 10,
-    query_id_col: str | None = None,
 ) -> DataFrame:
     """Exact top-k, Arrow/numpy path: the query matrix ships to every
     executor inside the mapInPandas closure, each Arrow batch scores with
@@ -301,15 +305,14 @@ def cosine_topk_vectorized(
     import numpy as np
     import pandas as pd
 
-    query_id_col = query_id_col or id_col
-    qrows = queries.select(query_id_col, vec_col).collect()
+    qrows = queries.select(id_col, vec_col).collect()
     q_ids = [r[0] for r in qrows]
     q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
 
     out_schema = T.StructType(
         [
-            T.StructField("query_id", queries.schema[query_id_col].dataType, True),
+            T.StructField("query_id", queries.schema[id_col].dataType, True),
             T.StructField("neighbor_id", corpus.schema[id_col].dataType, True),
             T.StructField("__sim", T.DoubleType(), False),
         ]
@@ -389,7 +392,6 @@ def build_ivf_index(
     id_col: str,
     vec_col: str,
     n_cells: int = 16,
-    seed: int = 42,
     persist: bool = True,
     max_iter: int = 20,
     init_mode: str = "k-means||",
@@ -419,7 +421,7 @@ def build_ivf_index(
     # jobs on the sf0.01 embeddings fit (VERDICT r9 #6) — at the cost
     # of init quality the threshold-gated callers don't need.
     km = KMeans(
-        k=n_cells, seed=seed, maxIter=max_iter, initMode=init_mode,
+        k=n_cells, seed=42, maxIter=max_iter, initMode=init_mode,
         featuresCol="__features", predictionCol="__cell",
     )
     model = km.fit(c)
@@ -436,42 +438,38 @@ def ivf_topk(
     id_col: str,
     vec_col: str,
     k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    query_id_col: str | None = None,
     index: IvfIndex | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: k-means partitions the corpus into
-    ``n_cells`` inverted lists; each query probes only its ``n_probe``
-    nearest centroids and exact cosine ranks the candidates.
+    inverted lists (16 unless ``index`` was built with another count);
+    each query probes only its 4 nearest centroids and exact cosine
+    ranks the candidates.
 
     The index build is one MLlib k-means fit (seeded, samples the corpus);
     the cell assignment is a model transform (one pass); the search joins
     queries to candidates on cell id — candidate volume is
-    ~corpus * n_probe / n_cells, never the full corpus. Complements the
+    ~corpus * 4 / cells, never the full corpus. Complements the
     SRP-LSH path: IVF adapts to the data distribution, LSH needs no
     training. Pass a prebuilt ``index`` (see :func:`build_ivf_index`)
     when searching repeatedly — one-shot calls may leave it None.
     """
     import numpy as np
 
-    query_id_col = query_id_col or id_col
     if index is None:
-        index = build_ivf_index(corpus, id_col, vec_col, n_cells, seed, persist=False)
+        index = build_ivf_index(corpus, id_col, vec_col, persist=False)
     assigned, centers = index.assigned, index.centers
-    qrows = queries.select(query_id_col, vec_col).collect()
+    qrows = queries.select(id_col, vec_col).collect()
     probe_rows = []
     for r in qrows:
         qv = np.asarray(r[1], dtype=np.float64)
         d = ((centers - qv) ** 2).sum(axis=1)
-        for cell in np.argsort(d)[:n_probe]:
+        for cell in np.argsort(d)[:4]:
             probe_rows.append((r[0], int(cell)))
     # explicit schema: keeps the caller's id type (ints are NOT assumed)
     # and makes an empty query set a valid empty frame, not a crash
     probe_schema = T.StructType(
         [
-            T.StructField("query_id", queries.schema[query_id_col].dataType, True),
+            T.StructField("query_id", queries.schema[id_col].dataType, True),
             T.StructField("__cell", T.IntegerType(), False),
         ]
     )
@@ -480,7 +478,7 @@ def ivf_topk(
     )
     q = F.broadcast(
         queries.select(
-            F.col(query_id_col).alias("query_id"), as_double_vec(F.col(vec_col)).alias("__qv")
+            F.col(id_col).alias("query_id"), as_double_vec(F.col(vec_col)).alias("__qv")
         )
     )
     cands = (
@@ -508,9 +506,6 @@ def lsh_ann_topk(
     id_col: str,
     vec_col: str,
     k: int = 10,
-    bits: int = 16,
-    bands: int = 4,
-    query_id_col: str | None = None,
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Approximate top-k: candidates are corpus rows sharing at least one
@@ -526,12 +521,11 @@ def lsh_ann_topk(
     vectors are joined back only for the exact-cosine re-rank — the heavy
     arrays never ride through the band join or the distinct.
     """
-    query_id_col = query_id_col or id_col
-    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col))
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col))
     cands = (
-        srp_banded_rows(q, "query_id", vec_col, bits, bands, hash_mode=hash_mode)
-        .join(srp_banded_rows(c, "neighbor_id", vec_col, bits, bands, hash_mode=hash_mode),
+        srp_banded_rows(q, "query_id", vec_col, 16, hash_mode=hash_mode)
+        .join(srp_banded_rows(c, "neighbor_id", vec_col, 16, hash_mode=hash_mode),
               ["band_idx", "band_hash"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
@@ -553,7 +547,6 @@ def srp_banded_rows(
     vec_col: str,
     bits: int = 32,
     bands: int = 4,
-    seed: int = 0,
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """(id, band_idx, band_hash) rows of a sign-random-projection signature,
@@ -588,7 +581,7 @@ def srp_banded_rows(
             parity = (
                 F.conv(
                     F.substring(
-                        F.md5(F.concat_ws(":", F.lit(seed), F.lit(b), F.col("__j"))), 1, 8
+                        F.md5(F.concat_ws(":", F.lit(0), F.lit(b), F.col("__j"))), 1, 8
                     ),
                     16,
                     10,
@@ -600,7 +593,7 @@ def srp_banded_rows(
         if hash_mode != "xxhash":
             raise ValueError(f"unknown hash_mode: {hash_mode!r}")
         sign = F.lit(1.0) - 2.0 * (
-            F.xxhash64(F.lit(seed), F.lit(b), F.col("__j")).bitwiseAND(F.lit(1))
+            F.xxhash64(F.lit(0), F.lit(b), F.col("__j")).bitwiseAND(F.lit(1))
         ).cast("double")
         return F.sum(F.col("__x") * sign).alias(f"__p{b}")
 
@@ -971,20 +964,9 @@ def int8_quant_profile(
     )
 
 
-def semantic_dedup_pairs(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    n_cells: int = 16,
-    seed: int = 42,
-    index: IvfIndex | None = None,
-    block_rows: int = 1024,
-    max_cell_rows: int = 200_000,
-    max_iter: int = 8,
-) -> DataFrame:
-    """SemDeDup candidate generation (Abbas et al. 2023, arXiv:2303.09540):
-    k-means clusters the embedding space, and pairwise cosine runs ONLY
+def semantic_dedup_pairs(index: IvfIndex, threshold: float) -> DataFrame:
+    """SemDeDup candidate generation (Abbas et al. 2023, arXiv:2303.09540)
+    over the cells of ``index``: k-means clusters the embedding space, and pairwise cosine runs ONLY
     within a cluster — the curation method for removing *semantic*
     duplicates (paraphrases, templated rewrites) that no lexical tier
     (MinHash / SimHash / n-gram Jaccard, ops/lsh.py) can see and that the
@@ -994,20 +976,20 @@ def semantic_dedup_pairs(
 
     Output (id_a, id_b, cosine_sim) with id_a < id_b, each within-cell
     pair at cosine >= threshold exactly once. Cross-cluster duplicates
-    are missed BY DESIGN — that is SemDeDup's recall trade-off; raise
-    ``n_cells`` for speed, lower it for recall.
+    are missed BY DESIGN — that is SemDeDup's recall trade-off; more
+    cells for speed, fewer for recall.
 
-    Scale shape: one k-means fit (MLlib, samples the corpus), one
-    transform pass, ONE shuffle on the cell id into applyInPandas, then
+    Scale shape (after the index's k-means fit and transform pass): ONE
+    shuffle on the cell id into applyInPandas, then
     per-cell blockwise BLAS: rows sort by id, normalize once, and each
-    ``block_rows`` slab computes slab @ V.T so peak memory is
-    O(block_rows * cell_size), never cell_size² — a 1M-row cell at
+    ``BLOCK_ROWS`` slab computes slab @ V.T so peak memory is
+    O(BLOCK_ROWS * cell_size), never cell_size² — a 1M-row cell at
     block 1024 holds a 1024x1M float64 slab (~8 GB executor budget),
     the cell_size² similarity matrix is never materialized. The cluster
     must fit one executor's memory as vectors (SemDeDup's own
-    constraint: the paper caps cluster sizes); size ``n_cells`` so
-    corpus/n_cells vectors fit, and the op raises past
-    ``max_cell_rows`` rather than silently OOMing (set by the 8 GB slab
+    constraint: the paper caps cluster sizes); size the index so
+    corpus/cells vectors fit, and the op raises past
+    ``MAX_CELL_ROWS`` rather than silently OOMing (set by the 8 GB slab
     bound: 200k rows x 768 dims x 8 B ≈ 1.2 GB of vectors).
     """
     import numpy as np
@@ -1015,12 +997,8 @@ def semantic_dedup_pairs(
 
     from pyspark.sql import types as T
 
-    if index is None:
-        index = build_ivf_index(
-            corpus, id_col, vec_col, n_cells, seed, persist=False, max_iter=max_iter
-        )
     assigned = index.assigned  # (neighbor_id, __cv, __cell)
-    id_type = corpus.schema[id_col].dataType
+    id_type = assigned.schema["neighbor_id"].dataType
     out_schema = T.StructType(
         [
             T.StructField("id_a", id_type, False),
@@ -1035,9 +1013,9 @@ def semantic_dedup_pairs(
                 {"id_a": pdf["neighbor_id"].dtype, "id_b": pdf["neighbor_id"].dtype,
                  "cosine_sim": "float64"}
             )
-        if n > max_cell_rows:
+        if n > MAX_CELL_ROWS:
             raise ValueError(
-                f"semantic_dedup cell holds {n} rows > {max_cell_rows}; "
+                f"semantic_dedup cell holds {n} rows > {MAX_CELL_ROWS}; "
                 f"raise n_cells so clusters fit executor memory"
             )
         pdf = pdf.sort_values("neighbor_id", kind="mergesort")
@@ -1047,8 +1025,8 @@ def semantic_dedup_pairs(
         # zero vectors have no direction: they never reach any threshold
         V = V / np.where(norms == 0.0, 1.0, norms)[:, None]
         a_parts, b_parts, s_parts = [], [], []
-        for lo in range(0, n - 1, block_rows):
-            hi = min(lo + block_rows, n)
+        for lo in range(0, n - 1, BLOCK_ROWS):
+            hi = min(lo + BLOCK_ROWS, n)
             sims = V[lo:hi] @ V.T  # (hi-lo, n) slab — never n x n
             # strict upper triangle in GLOBAL index == id order (sorted)
             ii, jj = np.nonzero(sims >= threshold)
@@ -1076,12 +1054,8 @@ def knn_join(
     k: int = 10,
     n_cells: int = 64,
     n_probe: int = 8,
-    seed: int = 42,
     index: IvfIndex | None = None,
-    block_rows: int = 1024,
-    max_cell_rows: int = 200_000,
     queries: DataFrame | None = None,
-    query_id_col: str | None = None,
 ) -> DataFrame:
     """Corpus x corpus kNN JOIN: every corpus row gets its k nearest
     corpus neighbors by cosine — the all-rows sibling of ivf_topk, whose
@@ -1099,7 +1073,7 @@ def knn_join(
     3. probes cogroup with cell members on the cell id — ONE shuffle
        each — and per-cell blockwise BLAS scores each query block
        against the cell's member matrix (the semantic_dedup_pairs slab
-       discipline: peak memory O(block_rows * cell_size), never
+       discipline: peak memory O(BLOCK_ROWS * cell_size), never
        cell_size²), keeping a per-cell local top-k per query;
     4. a final per-query window merges the <= n_probe*k local winners.
 
@@ -1107,7 +1081,7 @@ def knn_join(
     proportional to the corpus (the IVF convention) and the join stays
     near-linear — pytest-pinned at 100k vectors with recall >= 0.9 vs
     brute force (tests/test_scale_stress.py). Cells overflowing
-    ``max_cell_rows`` raise rather than OOM (SemDeDup's guard).
+    ``MAX_CELL_ROWS`` raise rather than OOM (SemDeDup's guard).
     Deterministic at any parallelism: seeded k-means, stable probe
     argsort, members sorted by id before the slab pass, and the final
     window totally ordered by (sim DESC, neighbor ASC) — over sims
@@ -1144,7 +1118,6 @@ def knn_join(
     # exact-equality guard turned working cross-side calls into hard
     # failures).
     if queries is not None:
-        _qid = query_id_col or id_col
 
         def _family(dt) -> str:
             if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
@@ -1153,29 +1126,28 @@ def knn_join(
                 return "fractional"
             return dt.simpleString()
 
-        qdt = queries.schema[_qid].dataType
+        qdt = queries.schema[id_col].dataType
         cdt = corpus.schema[id_col].dataType
         if _family(qdt) != _family(cdt):
             raise TypeError(
                 f"knn_join cross-side id dtype families must match for "
-                f"the self-match exclusion: queries[{_qid}] is "
+                f"the self-match exclusion: queries[{id_col}] is "
                 f"{qdt.simpleString()}, corpus[{id_col}] is "
                 f"{cdt.simpleString()}"
             )
 
     if index is None:
-        index = build_ivf_index(corpus, id_col, vec_col, n_cells, seed, persist=True)
+        index = build_ivf_index(corpus, id_col, vec_col, n_cells)
     assigned, centers = index.assigned, index.centers
     if queries is None:
         probe_src = assigned.select("neighbor_id", "__cv")
         id_type = corpus.schema[id_col].dataType
     else:
-        qid = query_id_col or id_col
         probe_src = queries.select(
-            F.col(qid).alias("neighbor_id"),
+            F.col(id_col).alias("neighbor_id"),
             as_double_vec(F.col(vec_col)).alias("__cv"),
         )
-        id_type = queries.schema[qid].dataType
+        id_type = queries.schema[id_col].dataType
 
     probe_schema = T.StructType(
         [
@@ -1217,9 +1189,9 @@ def knn_join(
         empty = pd.DataFrame({"query_id": [], "neighbor_id": [], "__sim": []})
         if len(qpdf) == 0 or len(mpdf) == 0:
             return empty
-        if len(mpdf) > max_cell_rows:
+        if len(mpdf) > MAX_CELL_ROWS:
             raise ValueError(
-                f"knn_join cell holds {len(mpdf)} rows > {max_cell_rows}; "
+                f"knn_join cell holds {len(mpdf)} rows > {MAX_CELL_ROWS}; "
                 f"raise n_cells so cells fit executor memory"
             )
         mpdf = mpdf.sort_values("neighbor_id", kind="mergesort")
@@ -1233,8 +1205,8 @@ def knn_join(
         Q = Q / np.where(qn == 0.0, 1.0, qn)[:, None]
         kk = min(k, len(mids))
         q_parts, n_parts, s_parts = [], [], []
-        for lo in range(0, len(qids_all), block_rows):
-            hi = min(lo + block_rows, len(qids_all))
+        for lo in range(0, len(qids_all), BLOCK_ROWS):
+            hi = min(lo + BLOCK_ROWS, len(qids_all))
             S = Q[lo:hi] @ M.T  # (block, cell_size) slab
             # 12dp quantize before ANY ordering (the
             # cosine_topk_vectorized rationale): cells/blocks have
@@ -1286,11 +1258,6 @@ def semantic_dedup(
     vec_col: str,
     threshold: float = 0.95,
     n_cells: int = 16,
-    seed: int = 42,
-    index: IvfIndex | None = None,
-    block_rows: int = 1024,
-    max_cell_rows: int = 200_000,
-    max_iter: int = 8,
 ) -> DataFrame:
     """Full SemDeDup pass: within-cluster cosine pairs at >= threshold
     (semantic_dedup_pairs) chained into connected components
@@ -1305,27 +1272,22 @@ def semantic_dedup(
     """
     from dynamic_etl_spark.ops.graph import connected_components
 
-    if index is None:
-        # init_mode="random" (seeded), the fit_semantic_centers default
-        # (VERDICT r9 #6): cells only GATE candidate pairs here — the
-        # exact within-cell cosine decides. The survivor set is NOT
-        # theoretically init-independent (ADVICE r13 #4: a pair barely
-        # at threshold could straddle a Voronoi boundary that a
-        # different init places elsewhere — SemDeDup's documented
-        # cross-cluster recall trade-off); what holds is EMPIRICAL:
-        # outputs verified bit-identical to the k-means|| fit at
-        # sf0.001/0.01/0.1 (r13) because this data's >= 0.95 pairs are
-        # planted perturbations at near-zero distance. Re-verify across
-        # inits before trusting a data change; the random init saves
-        # ~5 jobs of k-means|| passes.
-        index = build_ivf_index(
-            corpus, id_col, vec_col, n_cells, seed, persist=False,
-            max_iter=max_iter, init_mode="random",
-        )
-    pairs = semantic_dedup_pairs(
-        corpus, id_col, vec_col, threshold, n_cells, seed,
-        index=index, block_rows=block_rows, max_cell_rows=max_cell_rows,
+    # init_mode="random" (seeded), as in fit_semantic_centers
+    # (VERDICT r9 #6): cells only GATE candidate pairs here — the
+    # exact within-cell cosine decides. The survivor set is NOT
+    # theoretically init-independent (ADVICE r13 #4: a pair barely
+    # at threshold could straddle a Voronoi boundary that a
+    # different init places elsewhere — SemDeDup's documented
+    # cross-cluster recall trade-off); what holds is EMPIRICAL:
+    # outputs verified bit-identical to the k-means|| fit at
+    # sf0.001/0.01/0.1 (r13) because this data's >= 0.95 pairs are
+    # planted perturbations at near-zero distance. Re-verify across
+    # inits before trusting a data change; the random init saves
+    # ~5 jobs of k-means|| passes.
+    index = build_ivf_index(
+        corpus, id_col, vec_col, n_cells, persist=False, max_iter=8, init_mode="random"
     )
+    pairs = semantic_dedup_pairs(index, threshold)
     comp = connected_components(pairs, "id_a", "id_b")
     ids = index.assigned.select(F.col("neighbor_id").alias(id_col))
     return (
@@ -1429,12 +1391,6 @@ def fit_semantic_centers(
     id_col: str,
     vec_col: str,
     n_cells: int = 8,
-    seed: int = 42,
-    max_iter: int = 8,
-    method: str = "mllib",
-    init_mode: str = "random",
-    lloyd_iters: int = 3,
-    scale: int = 1 << 16,
 ):
     """The frozen centroid fit of the incremental semantic tier, k
     clamped to 2 <= k <= |docs| (the clamp's count job only runs here —
@@ -1445,30 +1401,15 @@ def fit_semantic_centers(
 
     Centers only GATE candidate generation here — admission is decided
     by the exact per-pair cosine re-verify — so rough Voronoi structure
-    is all the fit must deliver. The VERDICT r9 #6 measurement (sf0.01
-    embeddings fit, idle, steady-state) picked the default:
-
-    - ``"mllib"`` + ``init_mode="random"`` (default): one seeded MLlib
-      k-means with the k-means|| init passes skipped — 12 jobs vs 20
-      for k-means|| init; flip ``init_mode="k-means||"`` for the
-      quality init when cells must balance tightly.
-    - ``"lloyd"``: the fixed-round integer Lloyd fit
-      (:func:`_integer_lloyd`, the machinery behind the exacthash ANN
-      twins) — deterministic at ANY parallelism by construction
-      (``seed`` is ignored: seeding is the min-id rows), which a
-      proof-style caller may need, but it costs MORE jobs, not fewer
-      (measured 30 at ``lloyd_iters=3`` vs mllib-random's 12: every
-      fixed round eagerly checkpoints its centroid update), and its
-      quantized coordinate rows materialize corpus x dims. The r9 #6
-      hypothesis — Lloyd as the cheaper default — is therefore
-      refuted by measurement; MLlib stays, with the job win coming
-      from the init mode instead (incremental_semantic_dedup: 43 ->
-      37 jobs; the composed gate 69 -> 62).
-
-    Either method yields identical ADMISSIONS on near-dup regimes: a
-    >= threshold pair sits at near-zero distance, so no Voronoi
-    structure separates it (the SemDeDup argument); the 50k stress
-    gate (tests/test_scale_stress.py) pins recall for the default."""
+    is all the fit must deliver. The fit is one seeded MLlib k-means
+    with the k-means|| init passes skipped (``init_mode="random"``):
+    12 jobs vs 20 for k-means|| init in the VERDICT r9 #6 measurement
+    (sf0.01 embeddings fit, idle, steady-state). The fixed-round integer
+    Lloyd fit (:func:`_integer_lloyd`) was measured there too and cost
+    more (30 jobs at 3 rounds: every round eagerly checkpoints its
+    centroid update). A >= threshold pair sits at near-zero distance, so
+    no Voronoi structure separates it (the SemDeDup argument); the 50k
+    stress gate (tests/test_scale_stress.py) pins recall."""
     import numpy as np
 
     n_rows = docs.count()
@@ -1486,22 +1427,10 @@ def fit_semantic_centers(
         )
         return np.asarray([rows[0]["__v"]], dtype=np.float64)
     k = min(n_cells, n_rows)
-    if method == "mllib":
-        index = build_ivf_index(
-            docs, id_col, vec_col, k, seed,
-            persist=False, max_iter=max_iter, init_mode=init_mode,
-        )
-        return index.centers
-    if method != "lloyd":
-        raise ValueError(f"fit_semantic_centers: unknown method {method!r}")
-    _, cent = _integer_lloyd(docs, id_col, vec_col, k, lloyd_iters, scale)
-    # k x dims centroid rows — a bounded-scalar collect by construction
-    rows = cent.collect()
-    dims = max(r["j"] for r in rows) + 1
-    centers = np.zeros((k, dims), dtype=np.float64)
-    for r in rows:
-        centers[r["cell"], r["j"]] = r["c"] / scale
-    return centers
+    index = build_ivf_index(
+        docs, id_col, vec_col, k, persist=False, max_iter=8, init_mode="random"
+    )
+    return index.centers
 
 
 def semantic_store_rows(
@@ -1524,12 +1453,8 @@ def incremental_semantic_merge(
     threshold: float = 0.95,
     n_cells: int = 8,
     n_probe: int = 2,
-    seed: int = 42,
     centers=None,
     existing_assigned: DataFrame | None = None,
-    block_rows: int = 1024,
-    max_cell_rows: int = 200_000,
-    max_iter: int = 8,
 ) -> dict:
     """Incremental SEMANTIC admission — the SemDeDup sibling of the
     lexical ops/lsh.incremental_near_dup_merge (VERDICT r8 #4: lexical
@@ -1555,8 +1480,8 @@ def incremental_semantic_merge(
     driver collect); candidates meet the store ONLY within a cell — one
     cogroup shuffle each for batch x store and batch x batch — and the
     per-cell blockwise-BLAS threshold scan keeps peak memory
-    O(block_rows * cell_size), never cell_size²; cells past
-    ``max_cell_rows`` raise instead of OOMing. The BLAS pass only
+    O(BLOCK_ROWS * cell_size), never cell_size²; cells past
+    ``MAX_CELL_ROWS`` raise instead of OOMing. The BLAS pass only
     GATES candidates; surfaced similarities are re-computed per pair by
     the repo's sequential-fold ``cosine`` (the proven cross-engine
     parity surface), so the output is deterministic at any parallelism.
@@ -1591,9 +1516,7 @@ def incremental_semantic_merge(
     from dynamic_etl_spark.ops.graph import admit_batch
 
     if centers is None:
-        centers = fit_semantic_centers(
-            existing_docs, id_col, vec_col, n_cells, seed, max_iter
-        )
+        centers = fit_semantic_centers(existing_docs, id_col, vec_col, n_cells)
     if existing_assigned is None:
         existing_assigned = semantic_store_rows(
             existing_docs, id_col, vec_col, centers
@@ -1649,10 +1572,10 @@ def incremental_semantic_merge(
         nq = len(qpdf)
         if nq == 0:
             return _empty_cand()
-        if nq > max_cell_rows:
+        if nq > MAX_CELL_ROWS:
             raise ValueError(
                 f"incremental_semantic_merge batch cell holds {nq} rows > "
-                f"{max_cell_rows}; raise n_cells so cells fit executor memory"
+                f"{MAX_CELL_ROWS}; raise n_cells so cells fit executor memory"
             )
         qpdf = qpdf.sort_values(id_col, kind="mergesort")
         qids = qpdf[id_col].to_numpy()
@@ -1664,10 +1587,10 @@ def incremental_semantic_merge(
         # cross: batch x store — a (new, old) pair meets at most once
         # (old's store row sits in its ONE assignment cell), no dedup
         if len(mpdf):
-            if len(mpdf) > max_cell_rows:
+            if len(mpdf) > MAX_CELL_ROWS:
                 raise ValueError(
                     f"incremental_semantic_merge store cell holds {len(mpdf)} "
-                    f"rows > {max_cell_rows}; raise n_cells so cells fit "
+                    f"rows > {MAX_CELL_ROWS}; raise n_cells so cells fit "
                     "executor memory"
                 )
             mids = mpdf["__mid"].to_numpy()
@@ -1675,8 +1598,8 @@ def incremental_semantic_merge(
             M = np.asarray(mvec, dtype=np.float64)
             mn = np.linalg.norm(M, axis=1)
             Mn = M / np.where(mn == 0.0, 1.0, mn)[:, None]
-            for lo in range(0, nq, block_rows):
-                hi = min(lo + block_rows, nq)
+            for lo in range(0, nq, BLOCK_ROWS):
+                hi = min(lo + BLOCK_ROWS, nq)
                 S = Qn[lo:hi] @ Mn.T
                 ii, jj = np.nonzero(S >= threshold)
                 if len(ii):
@@ -1696,8 +1619,8 @@ def incremental_semantic_merge(
         if nq >= 2:
             C = np.asarray(qpdf["__cells"].to_list(), dtype=np.int64)
             cell_here = int(qpdf["cell"].iloc[0])
-            for lo in range(0, nq - 1, block_rows):
-                hi = min(lo + block_rows, nq)
+            for lo in range(0, nq - 1, BLOCK_ROWS):
+                hi = min(lo + BLOCK_ROWS, nq)
                 S = Qn[lo:hi] @ Qn.T
                 ii, jj = np.nonzero(S >= threshold)
                 keep = jj > ii + lo
@@ -1771,7 +1694,6 @@ def ivf_exacthash_topk(
     n_probe: int = 2,
     iters: int = 5,
     scale: int = 1 << 16,
-    query_id_col: str | None = None,
 ) -> DataFrame:
     """IVF top-k with an INTEGER-QUANTIZED Lloyd iteration — the
     oracle-checkable twin of :func:`ivf_topk` (whose MLlib k-means sums
@@ -1807,7 +1729,6 @@ def ivf_exacthash_topk(
     """
     from pyspark.sql import Window as W
 
-    query_id_col = query_id_col or id_col
     cv, cent = _integer_lloyd(corpus, id_col, vec_col, n_cells, iters, scale)
 
     assigned = (
@@ -1820,7 +1741,7 @@ def ivf_exacthash_topk(
         .select(F.col(id_col).alias("__nid"), "cell")
     )
     qv = _quantized_rows(
-        queries.select(F.col(query_id_col).alias("__qid"), F.col(vec_col)),
+        queries.select(F.col(id_col).alias("__qid"), F.col(vec_col)),
         "__qid",
         vec_col,
         scale,
@@ -1836,7 +1757,7 @@ def ivf_exacthash_topk(
         F.col("__qid").alias("query_id"), F.col("__nid").alias("neighbor_id")
     )
     qfull = queries.select(
-        F.col(query_id_col).alias("query_id"), as_double_vec(F.col(vec_col)).alias("__qv")
+        F.col(id_col).alias("query_id"), as_double_vec(F.col(vec_col)).alias("__qv")
     )
     cfull = corpus.select(
         F.col(id_col).alias("neighbor_id"), as_double_vec(F.col(vec_col)).alias("__cv")

@@ -37,9 +37,8 @@ def asof_join(
     ts_col: str,
     attach_cols: Sequence[str],
     tiebreak_col: str,
-    attach_prefix: str = "asof_",
 ) -> DataFrame:
-    """Left as-of join. Returns every probe row + ``attach_prefix``-named
+    """Left as-of join. Returns every probe row + ``asof_``-prefixed
     copies of ``attach_cols`` from the latest state row at-or-before the
     probe's ``ts_col`` (nulls when no state precedes it).
 
@@ -48,7 +47,7 @@ def asof_join(
     rows (highest wins).
     """
     keys = list(key_cols)
-    out_cols = [f"{attach_prefix}{c}" for c in attach_cols]
+    out_cols = [f"asof_{c}" for c in attach_cols]
     collide = set(out_cols) & set(probe.columns)
     if collide:
         raise ValueError(f"attach columns collide with probe columns: {sorted(collide)}")

@@ -23,7 +23,7 @@ the standard collapse: merges depend only on the WORD-FREQUENCY table
      the reference semantics)                          extension point
 
 Rounds iterate on the VOCAB table only; lineage is truncated with
-localCheckpoint every ``checkpoint_every`` rounds (iterative-op rule —
+localCheckpoint every 5 rounds (iterative-op rule —
 un-truncated lineage compounds per round until plan stringification
 blows up), and each round's cache is released as soon as the next one
 lands (no CacheManager leak for per-batch callers).
@@ -80,8 +80,6 @@ def train_bpe(
     text_col: str = "text",
     n_merges: int = 50,
     min_count: int = 2,
-    eow: str = "</w>",
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Train ``n_merges`` BPE merges on ``corpus`` and return the merge
     table: (rank, left, right, merged, pair_count), rank 0 first.
@@ -98,7 +96,7 @@ def train_bpe(
     spark = corpus.sparkSession
     vocab = (
         word_counts(corpus, text_col)
-        .select(_initial_symbols(F.col("word"), eow).alias("symbols"), "freq")
+        .select(_initial_symbols(F.col("word"), "</w>").alias("symbols"), "freq")
         .persist()
     )
     sym_schema = T.StructType(
@@ -146,7 +144,7 @@ def train_bpe(
                     )
 
             nxt = vocab.mapInPandas(apply_merge, sym_schema)
-            if (rank + 1) % checkpoint_every == 0:
+            if (rank + 1) % 5 == 0:
                 nxt = nxt.localCheckpoint()
             else:
                 nxt = nxt.persist()
@@ -167,11 +165,11 @@ def train_bpe(
     return spark.createDataFrame(merges, out_schema)
 
 
-def bpe_segment(word: str, merge_ranks: dict, eow: str = "</w>") -> list:
+def bpe_segment(word: str, merge_ranks: dict) -> list:
     """Segment one word with a trained merge table ({(left, right): rank})
     by always applying the LOWEST-rank applicable merge — the standard
     encode loop; driver-side utility for inspection and tests."""
-    symbols = list(word) + [eow]
+    symbols = list(word) + ["</w>"]
     while len(symbols) > 1:
         ranked = [
             (merge_ranks[(a, b)], a, b)
@@ -189,7 +187,6 @@ def bpe_encode_words(
     words: DataFrame,
     merge_table: DataFrame,
     word_col: str = "word",
-    eow: str = "</w>",
 ) -> DataFrame:
     """Segment each DISTINCT word with a trained merge table: (word,
     pieces array<string>, n_pieces). The merge table is n_merges rows —
@@ -214,7 +211,7 @@ def bpe_encode_words(
             # dedup happened in the plan, where it belongs
             pieces = []
             for w in pdf[word_col]:
-                pieces.append(bpe_segment(w, ranks, eow))
+                pieces.append(bpe_segment(w, ranks))
             yield pd.DataFrame(
                 {
                     word_col: pdf[word_col],
@@ -238,7 +235,6 @@ def bpe_encode_profile(
     merge_table: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    eow: str = "</w>",
 ) -> DataFrame:
     """Per-document BPE tokenization stats WITHOUT per-document Python —
     the 100 TB encode shape: the corpus explodes to words (codegen
@@ -255,7 +251,7 @@ def bpe_encode_profile(
     words = corpus.select(
         F.col(id_col), F.explode(F.split(F.col(text_col), r"\s+")).alias("word")
     ).filter(F.length("word") > 0)
-    encoded = bpe_encode_words(words, merge_table, "word", eow)
+    encoded = bpe_encode_words(words, merge_table, "word")
     return (
         words.join(encoded, "word")
         .groupBy(id_col)

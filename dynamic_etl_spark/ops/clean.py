@@ -58,11 +58,11 @@ def clean_title(c: Column, empty_default: str | None = None) -> Column:
     return F.when(_is_blank(c), default).otherwise(F.initcap(collapse_ws(c)))
 
 
-def clean_zip(c: Column, digits: int = 6) -> Column:
+def clean_zip(c: Column) -> Column:
     """F4 — digit extraction + length gate: >=6 digits -> first 6, else null
     (reference clean_zip, scripts2/load_dim_store_dw.py:59-65)."""
     only_digits = F.regexp_replace(F.trim(c), "[^0-9]", "")
-    return F.when(F.length(only_digits) >= digits, F.substring(only_digits, 1, digits))
+    return F.when(F.length(only_digits) >= 6, F.substring(only_digits, 1, 6))
 
 
 # ---------------------------------------------------------------------------
@@ -122,8 +122,8 @@ def safe_ratio(num: Column, denom: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _alpha_code(c: Column, n: int = 3) -> Column:
-    return F.substring(F.regexp_replace(F.upper(c), "[^A-Z]", ""), 1, n)
+def _alpha_code(c: Column) -> Column:
+    return F.substring(F.regexp_replace(F.upper(c), "[^A-Z]", ""), 1, 3)
 
 
 def synthesize_sku(prefix: Column, brand: Column, subcategory: Column, counter: Column) -> Column:
@@ -153,10 +153,10 @@ def parse_sku_counter(sku: Column) -> Column:
     )
 
 
-def natural_key(*cols: Column, sep: str = "_") -> Column:
+def natural_key(*cols: Column) -> Column:
     """F9 — natural-key concat `a_b_c` over normalized components
     (reference: scripts2/load_fact_sales_dw.py:299-313)."""
-    return F.concat_ws(sep, *cols)
+    return F.concat_ws("_", *cols)
 
 
 # ---------------------------------------------------------------------------
@@ -261,7 +261,6 @@ def lookup_map_join(
     value_col: str,
     out_col: str,
     default: str,
-    case_insensitive_fallback: bool = True,
 ) -> DataFrame:
     """F34 — enrichment against a lookup table (brand -> manufacturer):
     exact match first, case-insensitive fallback second, constant default
@@ -274,18 +273,14 @@ def lookup_map_join(
         lookup.select(F.col(lookup_key).alias("__mk"), F.col(value_col).alias("__mv_exact"))
     )
     out = df.join(exact, F.trim(F.col(on)) == F.col("__mk"), "left").drop("__mk")
-    if case_insensitive_fallback:
-        ci = F.broadcast(
-            lookup.groupBy(F.upper(F.col(lookup_key)).alias("__mku")).agg(
-                F.min(value_col).alias("__mv_ci")
-            )
+    ci = F.broadcast(
+        lookup.groupBy(F.upper(F.col(lookup_key)).alias("__mku")).agg(
+            F.min(value_col).alias("__mv_ci")
         )
-        out = out.join(ci, F.upper(F.trim(F.col(on))) == F.col("__mku"), "left").drop("__mku")
-        resolved = F.coalesce(F.col("__mv_exact"), F.col("__mv_ci"), F.lit(default))
-        return out.withColumn(out_col, resolved).drop("__mv_exact", "__mv_ci")
-    return out.withColumn(out_col, F.coalesce(F.col("__mv_exact"), F.lit(default))).drop(
-        "__mv_exact"
     )
+    out = out.join(ci, F.upper(F.trim(F.col(on))) == F.col("__mku"), "left").drop("__mku")
+    resolved = F.coalesce(F.col("__mv_exact"), F.col("__mv_ci"), F.lit(default))
+    return out.withColumn(out_col, resolved).drop("__mv_exact", "__mv_ci")
 
 
 def demote_chain(is_chain: Column, chain_name: Column) -> Column:
@@ -313,8 +308,6 @@ LENIENT_DATE_FORMATS = ("yyyy-MM-dd", "yyyy/MM/dd", "dd-MM-yyyy")
 
 def lenient_date(
     c: Column,
-    formats: Sequence[str] = LENIENT_DATE_FORMATS,
-    min_date: str = "1990-01-01",
     max_date: str | None = None,
 ) -> Column:
     """F19 — multi-format date parse with coercion-to-null + plausibility
@@ -325,9 +318,12 @@ def lenient_date(
     a pinned as-of keeps results deterministic/oracle-checkable).
     """
     parsed = F.coalesce(
-        *[F.try_to_timestamp(F.trim(c), F.lit(fmt)).cast("date") for fmt in formats]
+        *[
+            F.try_to_timestamp(F.trim(c), F.lit(fmt)).cast("date")
+            for fmt in LENIENT_DATE_FORMATS
+        ]
     )
-    window = parsed >= F.lit(min_date).cast("date")
+    window = parsed >= F.lit("1990-01-01").cast("date")
     if max_date is not None:
         window = window & (parsed <= F.lit(max_date).cast("date"))
     return F.when(window, parsed)

@@ -38,13 +38,7 @@ def curation_gate(
     sem_store: DataFrame | None = None,
     dsir_ratios: DataFrame | None = None,
     dsir_min_log_weight=None,
-    lex_threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
     hash_mode: str = "xxhash",
-    sem_threshold: float = 0.95,
-    n_probe: int = 2,
 ) -> dict:
     """Admit ``batch`` (``id_col``, ``text_col`` and, when ``vec_col``
     is set, a NULLABLE embedding column) against the corpus stores.
@@ -98,10 +92,7 @@ def curation_gate(
     s2, lex_delta = s1, None
     if lex_store is not None:
         out2 = incremental_near_dup_merge(
-            corpus, s1, id_col, text_col,
-            threshold=lex_threshold, num_hashes=num_hashes, bands=bands,
-            shingle_k=shingle_k, existing_banded=lex_store,
-            hash_mode=hash_mode,
+            corpus, s1, id_col, text_col, existing_banded=lex_store, hash_mode=hash_mode
         )
         s2 = out2["accepted"].localCheckpoint()
         lex_delta = out2["new_banded"]
@@ -113,9 +104,7 @@ def curation_gate(
         embedded = F.col(vec_col).isNotNull()
         out3 = incremental_semantic_merge(
             corpus, s2.filter(embedded).select(id_col, vec_col),
-            id_col, vec_col,
-            threshold=sem_threshold, n_probe=n_probe,
-            centers=centers, existing_assigned=sem_store,
+            id_col, vec_col, centers=centers, existing_assigned=sem_store,
         )
         s3 = out3["accepted"].select(id_col).unionByName(
             s2.filter(~embedded).select(id_col)

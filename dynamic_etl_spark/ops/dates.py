@@ -89,7 +89,6 @@ def build_date_dimension(
     spark: SparkSession,
     start: str | date,
     end: str | date,
-    holidays: DataFrame | None = None,
 ) -> DataFrame:
     """G4/F13-F17 — full calendar dimension for [start, end] inclusive
     (reference row loop: scripts/dim_date_daily.py:149-204).
@@ -123,8 +122,7 @@ def build_date_dimension(
         _yn((F.month(d) == 12) & (F.dayofmonth(d) == 31)).alias("is_year_end"),
         _yn((F.month(d) == 3) & (F.dayofmonth(d) == 31)).alias("is_fiscal_year_end"),
     )
-    hol = holidays if holidays is not None else holiday_table(spark)
-    cal = cal.join(F.broadcast(hol), "date_id", "left")
+    cal = cal.join(F.broadcast(holiday_table(spark)), "date_id", "left")
     return cal.withColumn("is_holiday", _yn(F.col("holiday_name").isNotNull())).withColumn(
         "is_business_day",
         _yn((F.col("day_of_week") <= 5) & F.col("holiday_name").isNull()),
@@ -135,12 +133,10 @@ def date_dimension_delta(
     spark: SparkSession,
     existing: DataFrame,
     as_of: str,
-    backfill_years: int = 2,
-    holidays: DataFrame | None = None,
 ) -> DataFrame:
     """U5/A3/F20 — initial-vs-incremental mode switch (reference:
     scripts2/load_dim_date_dw.py:181-207): empty dim -> backfill from Jan 1
-    ``backfill_years`` back; else gap-fill from MAX(full_date)+1 through
+    two years back; else gap-fill from MAX(full_date)+1 through
     ``as_of`` (never the future). Returns the NEW rows only.
 
     The MAX probe is a scalar aggregate (one job, one row back to the
@@ -151,10 +147,10 @@ def date_dimension_delta(
     hwm = row["hwm"]
     as_of_d = date.fromisoformat(as_of)
     if hwm is None:
-        start = date(as_of_d.year - backfill_years, 1, 1)
+        start = date(as_of_d.year - 2, 1, 1)
     else:
         hwm = hwm.date() if hasattr(hwm, "date") and not isinstance(hwm, date) else hwm
         start = date.fromordinal(hwm.toordinal() + 1)
     if start > as_of_d:
-        return build_date_dimension(spark, as_of_d, as_of_d, holidays).limit(0)
-    return build_date_dimension(spark, start, as_of_d, holidays)
+        return build_date_dimension(spark, as_of_d, as_of_d).limit(0)
+    return build_date_dimension(spark, start, as_of_d)

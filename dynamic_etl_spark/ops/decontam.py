@@ -22,16 +22,14 @@ from pyspark.sql import functions as F
 from dynamic_etl_spark.ops.lsh import word_shingles
 
 
-def benchmark_gram_set(benchmark: DataFrame, text_col: str = "text",
-                       k: int = 5) -> DataFrame:
+def benchmark_gram_set(benchmark: DataFrame, k: int = 5) -> DataFrame:
     """Distinct word k-grams across the whole benchmark set (column ``g``)."""
     return benchmark.select(
-        F.explode(word_shingles(F.col(text_col), k)).alias("g")
+        F.explode(word_shingles(F.col("text"), k)).alias("g")
     ).distinct()
 
 
 def contamination_profile(corpus: DataFrame, benchmark: DataFrame, *,
-                          id_col: str = "doc_id", text_col: str = "text",
                           k: int = 5, min_shared: int = 5) -> DataFrame:
     """Per-corpus-document overlap with the benchmark gram set.
 
@@ -41,19 +39,19 @@ def contamination_profile(corpus: DataFrame, benchmark: DataFrame, *,
     document's distinct grams that appear anywhere in the benchmark.
     Empty documents still surface one row (their single empty gram).
     """
-    bench = benchmark_gram_set(benchmark, text_col, k)
+    bench = benchmark_gram_set(benchmark, k=k)
     grams = corpus.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), k)).alias("g")
+        F.col("doc_id"), F.explode(word_shingles(F.col("text"), k)).alias("g")
     )
     marked = grams.join(
         F.broadcast(bench.withColumn("__hit", F.lit(1))), "g", "left"
     )
-    prof = marked.groupBy(id_col).agg(
+    prof = marked.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.count("__hit").alias("n_shared_grams"),  # count skips the null misses
     )
     return prof.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_grams"),
         F.col("n_shared_grams"),
         F.round(
@@ -67,9 +65,13 @@ def _signed64(v: int) -> int:
     return v if v < (1 << 63) else v - (1 << 64)
 
 
-def bloom_words(
-    grams: DataFrame, m_bits: int = 1 << 20, k_hashes: int = 5
-) -> list[int]:
+#: contamination_profile_bloom's filter: bit count (a multiple of 64;
+#: 1<<20 bits = 16 KB broadcast) and hash positions per gram.
+BLOOM_BITS = 1 << 20
+BLOOM_HASHES = 5
+
+
+def bloom_words(grams: DataFrame, m_bits: int, k_hashes: int) -> list[int]:
     """Driver-side bloom bit array (``m_bits / 64`` longs) over the gram
     column ``g``: position ``i`` of gram g is ``pmod(xxhash64(i, g), m)``.
     The build is one distributed pass (explode k positions, groupBy word
@@ -127,17 +129,13 @@ def contamination_profile_bloom(
     corpus: DataFrame,
     benchmark: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     min_shared: int = 5,
-    m_bits: int = 1 << 20,
-    k_hashes: int = 5,
 ) -> DataFrame:
     """contamination_profile's scale path for a benchmark too large to
     broadcast as exact strings (a full eval SUITE, or corpus-vs-corpus
     decontamination): broadcast a BLOOM FILTER of the benchmark grams
-    (16 KB at the default 1<<20 bits vs megabytes of strings), prefilter
+    (16 KB at ``BLOOM_BITS`` = 1<<20 bits vs megabytes of strings), prefilter
     corpus grams map-side — no shuffle touches the corpus — and
     exact-verify only the bloom survivors with a semi join against the
     true gram set. Bloom false positives make the prefilter conservative
@@ -155,26 +153,27 @@ def contamination_profile_bloom(
     gram-keyed shuffle join moving the ENTIRE corpus gram volume, which
     is the 1000x-at-scale cost this path exists to avoid.
     """
-    bench = benchmark_gram_set(benchmark, text_col, k)
+    bench = benchmark_gram_set(benchmark, k=k)
+    m_bits, k_hashes = BLOOM_BITS, BLOOM_HASHES
     words = bloom_words(bench, m_bits, k_hashes)
     spark = corpus.sparkSession
     bloom_row = F.broadcast(
         spark.createDataFrame([(words,)], "__bloom: array<bigint>")
     )
     grams = corpus.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), k)).alias("g")
+        F.col("doc_id"), F.explode(word_shingles(F.col("text"), k)).alias("g")
     )
     flagged = grams.join(bloom_row).withColumn(
         "__cand", _bloom_hit(F.col("g"), F.col("__bloom"), m_bits, k_hashes)
     )
-    cand = flagged.filter(F.col("__cand")).select(id_col, "g")
+    cand = flagged.filter(F.col("__cand")).select("doc_id", "g")
     hits = cand.join(bench, "g", "left_semi")
-    totals = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-    shared = hits.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shared_grams"))
+    totals = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
+    shared = hits.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shared_grams"))
     return (
-        totals.join(shared, id_col, "left")
+        totals.join(shared, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("n_grams"),
             F.coalesce(F.col("n_shared_grams"), F.lit(0)).alias("n_shared_grams"),
             F.round(

@@ -23,7 +23,7 @@ are dense (diameter 1-3) and converge in 2-3 rounds.
 Scale shape: every round is two key shuffles (neighbor groupBy, label
 self-join) over (vertex, label) pairs — never over payloads. Labels are
 persisted per round and unpersisted as soon as the next round lands;
-lineage is truncated with ``localCheckpoint`` every ``checkpoint_every``
+lineage is truncated with ``localCheckpoint`` every 5
 rounds so plan size stays O(1) across iterations (an iterative job's
 classic failure mode). The only driver-side values are the per-round
 label-sum convergence scalars (labels never increase, so an unchanged
@@ -41,8 +41,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 30,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """Label every vertex of the undirected graph ``edges`` with the
     MINIMUM vertex id of its connected component (the canonical-survivor
@@ -77,7 +75,7 @@ def connected_components(
 
     prev_sum = _label_sum(labels)
     converged = False
-    for it in range(max_iter):
+    for it in range(30):
         nbr = (
             sym.join(labels.select(F.col("v").alias("n"), F.col("l").alias("nl")), "n")
             .groupBy("v")
@@ -91,7 +89,7 @@ def connected_components(
         jumped = prop.join(lookup, "l", "left").select(
             "v", F.least(F.col("l"), F.coalesce(F.col("ll"), F.col("l"))).alias("l")
         )
-        if (it + 1) % checkpoint_every == 0:
+        if (it + 1) % 5 == 0:
             jumped = jumped.localCheckpoint()
         else:
             jumped = jumped.persist()
@@ -105,9 +103,9 @@ def connected_components(
     sym.unpersist()
     if not converged:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
+            "connected_components did not converge in 30 rounds — "
             "with pointer jumping this needs a component diameter beyond "
-            f"~2^{max_iter}; raise max_iter"
+            "~2^30"
         )
     # return a checkpointed LEAF and release the loop's cache: the final
     # per-round persist would otherwise stay pinned in the CacheManager
@@ -232,17 +230,21 @@ def admit_batch(
     )
 
 
+#: PageRank's damping factor (the random-surfer follow probability).
+DAMPING = 0.85
+#: pagerank runs graphs with at most this many vertices AND edges as one
+#: driver-side numpy loop instead of distributed power iteration.
+SMALL_GRAPH_THRESHOLD = 2000
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    damping: float = 0.85,
     max_iter: int = 20,
     tol: float = 1e-6,
-    checkpoint_every: int = 5,
     tol_check_every: int = 1,
-    small_graph_threshold: int = 2000,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list — the influence /
     centrality companion to :func:`connected_components` (cluster
@@ -265,7 +267,7 @@ def pagerank(
     re-shuffles once AQE plans the join) and one ``dst`` aggregation —
     both partial-combined. Ranks persist per round, the previous round
     unpersists as soon as the next lands, and lineage truncates via
-    localCheckpoint every ``checkpoint_every`` rounds (the iterative-op
+    localCheckpoint every 5 rounds (the iterative-op
     rule). Driver-side values: three scalar aggregates per round
     (dangling mass, L1 delta via one join — vertex-sized, never edges).
 
@@ -274,7 +276,7 @@ def pagerank(
     tolerance — rows-only territory (numpy-checked in pytest), same
     class as the perplexity profile.
 
-    Graphs at or under ``small_graph_threshold`` vertices AND edges run
+    Graphs at or under ``SMALL_GRAPH_THRESHOLD`` vertices AND edges run
     the identical recurrence as one dense numpy loop on the driver (the
     small-CC union-find hybrid pattern): ~2 cluster jobs x max_iter of
     scheduling overhead collapses to milliseconds, and both paths are
@@ -329,7 +331,7 @@ def pagerank(
     # territory and pytest pins them against each other). The threshold
     # bounds what the driver collects: normalized edges + the vertex set.
     m = trans.count()
-    if max(n, m) <= small_graph_threshold:
+    if max(n, m) <= SMALL_GRAPH_THRESHOLD:
         import numpy as np
 
         # sorted: collect order of a .distinct() is shuffle-dependent and
@@ -342,10 +344,10 @@ def pagerank(
             P[idx[r["src"]], idx[r["dst"]]] = r["p"]
         has_out = P.sum(axis=1) > 0
         rank = np.full(n, 1.0 / n)
-        base_v = (1.0 - damping) / n
+        base_v = (1.0 - DAMPING) / n
         for it in range(max_iter):
             dangling = rank[~has_out].sum()
-            nxt = base_v + damping * (rank @ P + dangling / n)
+            nxt = base_v + DAMPING * (rank @ P + dangling / n)
             delta = np.abs(nxt - rank).sum()
             rank = nxt
             if delta < tol:
@@ -380,7 +382,7 @@ def pagerank(
     verts.unpersist()
 
     ranks = flagged.select("v", "__has_out", F.lit(1.0 / n).alias("rank")).persist()
-    base = (1.0 - damping) / n
+    base = (1.0 - DAMPING) / n
     # a round's frame is unpersisted only AFTER its child is materialized
     # by an action (the dangling collect or the delta probe) — releasing
     # earlier would make skipped-probe rounds recompute the whole join
@@ -406,12 +408,12 @@ def pagerank(
                 "__has_out",
                 (
                     F.lit(base)
-                    + F.lit(damping)
+                    + F.lit(DAMPING)
                     * (F.coalesce(F.col("__c"), F.lit(0.0)) + F.lit(dangling / n))
                 ).alias("rank"),
             )
         )
-        if (it + 1) % checkpoint_every == 0:
+        if (it + 1) % 5 == 0:
             nxt = nxt.localCheckpoint()
         else:
             nxt = nxt.persist()

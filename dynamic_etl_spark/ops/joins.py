@@ -58,22 +58,20 @@ def lookup_with_fallback(
 def any_change(
     exact_cols: Sequence[str],
     tolerance_cols: Sequence[str],
-    tolerance: float,
     new_prefix: str = "",
-    old_prefix: str = "__ex_",
 ) -> Column:
     """F24 — the shared change predicate of J8 and the SCD-1 merge:
-    null-safe inequality on exact columns; ``abs(a-b) > tolerance`` on
+    null-safe inequality on exact columns; ``abs(a-b) > 0.01`` on
     measures with both-null counting as unchanged and one-sided null as
     changed (reference: load_fact_sales_dw.py:320-350,
     load_dim_product_dw.py:524-531)."""
     diffs: list[Column] = []
     for c in exact_cols:
-        diffs.append(~F.col(f"{new_prefix}{c}").eqNullSafe(F.col(f"{old_prefix}{c}")))
+        diffs.append(~F.col(f"{new_prefix}{c}").eqNullSafe(F.col(f"__ex_{c}")))
     for c in tolerance_cols:
-        new, old = F.col(f"{new_prefix}{c}"), F.col(f"{old_prefix}{c}")
+        new, old = F.col(f"{new_prefix}{c}"), F.col(f"__ex_{c}")
         both_null = new.isNull() & old.isNull()
-        moved = F.abs(new - old) > F.lit(tolerance)
+        moved = F.abs(new - old) > F.lit(0.01)
         diffs.append(~both_null & F.coalesce(moved, F.lit(True)))
     out = F.lit(False)
     for d in diffs:
@@ -87,14 +85,12 @@ def change_detection(
     natural_key: Sequence[str],
     exact_cols: Sequence[str] = (),
     tolerance_cols: Sequence[str] = (),
-    tolerance: float = 0.01,
-    op_col: str = "operation",
 ) -> DataFrame:
     """J8 — INSERT/UPDATE/NOOP classification against the existing table
     (reference: scripts2/load_fact_sales_dw.py:299-350 loads the ENTIRE
     fact table into a driver dict; here it is a distributed left join).
 
-    Numeric measure columns compare with ``abs(a-b) > tolerance`` (F24);
+    Numeric measure columns compare with ``abs(a-b) > 0.01`` (F24);
     exact columns (int quantities, strings) compare with null-safe
     equality. Reference parity: both-null counts as unchanged
     (scripts2/load_dim_product_dw.py:524-531).
@@ -106,9 +102,9 @@ def change_detection(
         F.lit(True).alias("__ex_present"),
     )
     joined = incoming.join(ex, keys, "left")
-    any_diff = any_change(exact_cols, tolerance_cols, tolerance)
+    any_diff = any_change(exact_cols, tolerance_cols)
     out = joined.withColumn(
-        op_col,
+        "operation",
         F.when(F.col("__ex_present").isNull(), F.lit("INSERT"))
         .when(any_diff, F.lit("UPDATE"))
         .otherwise(F.lit("NOOP")),
@@ -124,7 +120,6 @@ def fuzzy_blocked_match(
     dim_col: str,
     block,
     max_distance: int = 2,
-    out_prefix: str = "match_",
 ) -> DataFrame:
     """Fuzzy lookup: resolve each dirty value to its closest dimension
     value by Levenshtein distance, comparing ONLY within a blocking key.
@@ -162,8 +157,8 @@ def fuzzy_blocked_match(
         .filter(F.col("__rn") == 1)
         .select(
             dirty_col,
-            F.col("__dim_val").alias(f"{out_prefix}value"),
-            F.col("__dist").alias(f"{out_prefix}distance"),
+            F.col("__dim_val").alias("match_value"),
+            F.col("__dist").alias("match_distance"),
         )
     )
 
@@ -174,9 +169,6 @@ def point_in_time_join(
     fact_key: str,
     dim_key: str,
     ts_col: str,
-    valid_from: str = "valid_from",
-    valid_to: str = "valid_to",
-    how: str = "left",
 ) -> DataFrame:
     """SCD-2 point-in-time lookup: each fact row joins the dimension
     VERSION whose ``[valid_from, valid_to)`` interval contains the fact
@@ -188,7 +180,7 @@ def point_in_time_join(
     Half-open intervals ensure a fact on a version boundary matches
     exactly the NEWER version (the SCD-2 close/open convention:
     ``valid_to`` of the closed row equals ``valid_from`` of its
-    successor). With ``how="left"``, facts predating every version of
+    successor). The join is a left join: facts predating every version of
     their key survive with null dim columns — unmatched-fact accounting
     stays visible instead of silently dropping rows.
 
@@ -201,10 +193,10 @@ def point_in_time_join(
     """
     cond = (
         (facts[fact_key] == dim[dim_key])
-        & (facts[ts_col] >= dim[valid_from])
-        & (facts[ts_col] < dim[valid_to])
+        & (facts[ts_col] >= dim["valid_from"])
+        & (facts[ts_col] < dim["valid_to"])
     )
-    return facts.join(dim, cond, how)
+    return facts.join(dim, cond, "left")
 
 
 def snapshot_diff(

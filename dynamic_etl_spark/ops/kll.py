@@ -153,8 +153,6 @@ def build_kll_state(
     df: DataFrame,
     keys: Sequence[str],
     value: str,
-    k: int = DEFAULT_K,
-    max_keys_in_flight: int = MAX_KEYS_IN_FLIGHT,
 ) -> DataFrame:
     """Mergeable RANK-SKETCH state: a KLL compactor hierarchy per key
     group — the unknown-range quantile member of the maintained-summary
@@ -179,7 +177,7 @@ def build_kll_state(
 
         def drain():
             for kt, levels in sketches.items():
-                lv, vv = _emit(_compress(levels, k))
+                lv, vv = _emit(_compress(levels, DEFAULT_K))
                 if lv:
                     out = {c: [kt[i]] * len(lv) for i, c in enumerate(keys)}
                     out["state_level"] = lv
@@ -200,17 +198,17 @@ def build_kll_state(
                 levels[0] = (
                     chunk if zero is None or len(zero) == 0 else np.concatenate([zero, chunk])
                 )
-                if len(levels[0]) > k:
-                    sketches[kt] = _compress(levels, k)
+                if len(levels[0]) > DEFAULT_K:
+                    sketches[kt] = _compress(levels, DEFAULT_K)
             # high-cardinality guard: emit fragments and reset rather than
             # hold every key's sketch for the whole partition (the keyed
             # fold merges fragments either way; only fragment COUNT grows)
-            if len(sketches) > max_keys_in_flight:
+            if len(sketches) > MAX_KEYS_IN_FLIGHT:
                 yield from drain()
         yield from drain()
 
     fragments = src.mapInPandas(presketch, schema)
-    return _fold_per_key(fragments, keys, k, schema)
+    return _fold_per_key(fragments, keys, DEFAULT_K, schema)
 
 
 def _fold_per_key(
@@ -237,12 +235,12 @@ def _fold_per_key(
     return fragments.groupBy(*keys).applyInPandas(fold, schema)
 
 
-def merge_kll_state(state: DataFrame, delta: DataFrame, k: int = DEFAULT_K) -> DataFrame:
+def merge_kll_state(state: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold a delta sketch into the stored sketch: union the compactor
     rows, re-compress per key. Sketch-sized shuffle, never history."""
     keys = [c for c in state.columns if c not in _STATE_COLS]
     unioned = state.unionByName(delta)
-    return _fold_per_key(unioned, keys, k, unioned.schema)
+    return _fold_per_key(unioned, keys, DEFAULT_K, unioned.schema)
 
 
 def finalize_kll_state(

@@ -31,11 +31,8 @@ def _exploded_lines(
     text_col: str,
     sep: str,
     with_pos: bool,
-    keep_empty: bool = False,
 ) -> DataFrame:
-    """One row per line (``sep`` is a Java regex, F.split). Empty lines
-    are dropped unless ``keep_empty`` — the rebuild path needs them to
-    preserve paragraph structure."""
+    """One non-empty row per line (``sep`` is a Java regex, F.split)."""
     parts = F.split(F.col(text_col), sep)
     if with_pos:
         ex = docs.select(
@@ -43,7 +40,7 @@ def _exploded_lines(
         )
     else:
         ex = docs.select(F.col(id_col), F.explode(parts).alias("__line"))
-    return ex if keep_empty else ex.filter(F.col("__line") != "")
+    return ex.filter(F.col("__line") != "")
 
 
 def _line_doc_counts(hashed: DataFrame, id_col: str) -> DataFrame:
@@ -55,34 +52,29 @@ def _line_doc_counts(hashed: DataFrame, id_col: str) -> DataFrame:
 
 def line_dup_profile(
     docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-    min_docs: int = 2,
 ) -> DataFrame:
     """Per-document duplicated-line profile.
 
-    Returns ``(id_col, n_lines, n_dup_lines, dup_line_frac)`` where a line
-    is "duplicated" when its md5 appears in at least ``min_docs`` distinct
+    Returns ``(doc_id, n_lines, n_dup_lines, dup_line_frac)`` where a line
+    is "duplicated" when its md5 appears in at least 2 distinct
     documents (md5 so a SQL oracle reproduces the decision bit-for-bit).
     Empty lines are ignored; a document with no non-empty lines still
     gets a row (zeros, frac 0.0) so downstream gates that join the
     profile never silently lose it. This is the measurement half of
     CCNet's gate.
     """
-    hashed = _exploded_lines(docs, id_col, text_col, sep, with_pos=False).select(
-        id_col, F.md5(F.col("__line")).alias("__lh")
+    hashed = _exploded_lines(docs, "doc_id", "text", "\n", with_pos=False).select(
+        "doc_id", F.md5(F.col("__line")).alias("__lh")
     )
-    joined = hashed.join(_line_doc_counts(hashed, id_col), "__lh")
+    joined = hashed.join(_line_doc_counts(hashed, "doc_id"), "__lh")
     dup: Column = F.sum(
-        F.when(F.col("__n_docs") >= min_docs, 1).otherwise(0)
+        F.when(F.col("__n_docs") >= 2, 1).otherwise(0)
     ).cast("long")
-    stats = joined.groupBy(id_col).agg(
+    stats = joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"), dup.alias("n_dup_lines")
     )
-    return docs.select(id_col).join(stats, id_col, "left").select(
-        id_col,
+    return docs.select("doc_id").join(stats, "doc_id", "left").select(
+        "doc_id",
         F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
         F.coalesce("n_dup_lines", F.lit(0)).alias("n_dup_lines"),
         F.when(
@@ -96,23 +88,18 @@ def line_dup_profile(
 
 def c4_page_profile(
     docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 5,
-    min_sentences: int = 3,
 ) -> DataFrame:
     """The C4 cleaning gates (Raffel et al. 2020 JMLR §2.2 — the rules
     behind the "Colossal Clean Crawled Corpus", public knowledge),
     line-level + page-level in one pass:
 
     - keep only lines ENDING in a terminal punctuation mark (. ! ? ");
-    - keep only lines with at least ``min_words`` words;
+    - keep only lines with at least 5 words;
     - drop any line containing the word "javascript" (the cookie/JS
       warning boilerplate rule);
     - drop the whole PAGE if it contains "lorem ipsum" or a curly
       brace ``{`` (placeholder text / leaked code), or if fewer than
-      ``min_sentences`` sentences survive line filtering.
+      3 sentences survive line filtering.
 
     Sentence counting: terminal marks ``[.!?]`` in KEPT lines (C4's
     reference implementation splits with an NLTK sentence tokenizer;
@@ -136,17 +123,17 @@ def c4_page_profile(
     verdict joined back to the doc spine so line-less docs still
     surface. One corpus shuffle (the doc rollup).
     """
-    lines = _exploded_lines(docs, id_col, text_col, r"\n", with_pos=True)
+    lines = _exploded_lines(docs, "doc_id", "text", r"\n", with_pos=True)
     from dynamic_etl_spark.ops.text import token_count
 
     line = F.col("__line")
     kept = (
         line.rlike(r'[.!?"]$')
-        & (token_count(line) >= min_words)
+        & (token_count(line) >= 5)
         & ~F.lower(line).contains("javascript")
     )
     per_line = lines.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "__pos",
         "__line",
         kept.alias("__keep"),
@@ -154,7 +141,7 @@ def c4_page_profile(
             "__sent"
         ),
     )
-    rolled = per_line.groupBy(id_col).agg(
+    rolled = per_line.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_lines"),
         F.sum(F.col("__keep").cast("int")).alias("n_kept_lines"),
         F.sum("__sent").alias("__n_sent"),
@@ -164,18 +151,16 @@ def c4_page_profile(
             )
         ).alias("__kept"),
     )
-    page_bad = F.lower(F.col(text_col)).contains("lorem ipsum") | F.col(
-        text_col
-    ).contains("{")
-    spine = docs.select(F.col(id_col), page_bad.alias("__bad"))
-    out = spine.join(rolled, on=id_col, how="left")
+    page_bad = F.lower(F.col("text")).contains("lorem ipsum") | F.col("text").contains("{")
+    spine = docs.select(F.col("doc_id"), page_bad.alias("__bad"))
+    out = spine.join(rolled, on="doc_id", how="left")
     n_sent = F.coalesce(F.col("__n_sent"), F.lit(0)).cast("bigint")
-    page_kept = ~F.col("__bad") & (n_sent >= min_sentences)
+    page_kept = ~F.col("__bad") & (n_sent >= 3)
     clean = F.array_join(
         F.transform(F.col("__kept"), lambda s: s["__line"]), "\n"
     )
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.coalesce(F.col("n_lines"), F.lit(0)).cast("bigint").alias("n_lines"),
         F.coalesce(F.col("n_kept_lines"), F.lit(0)).cast("bigint").alias("n_kept_lines"),
         n_sent.alias("n_sentences"),

@@ -115,13 +115,15 @@ def band_hash_expr(slots: list[Column], b: int, hash_mode: str = "xxhash") -> Co
     raise ValueError(f"unknown hash_mode: {hash_mode!r}")
 
 
+#: MinHash geometry of every near-dup tier: 32 hash slots in 8 bands of
+#: 4, over 3-word shingles (registry/llm.py's DuckDB twins use the same).
+NUM_HASHES, BANDS, SHINGLE_K = 32, 8, 3
+
+
 def minhash_banded_rows(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """(id, band_idx, band_hash) rows of a banded MinHash signature — the
@@ -137,7 +139,7 @@ def minhash_banded_rows(
     stay governed by the S-curve alone.
     """
     exploded = docs.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), shingle_k)).alias("__s")
+        F.col(id_col), F.explode(word_shingles(F.col(text_col), SHINGLE_K)).alias("__s")
     ).select(F.col(id_col), base_shingle_hash(F.col("__s"), hash_mode).alias("__h"))
 
     def slot(i: int) -> Column:
@@ -146,14 +148,14 @@ def minhash_banded_rows(
             F.pmod(F.lit(a_i) * F.col("__h") + F.lit(b_i), F.lit(_MINHASH_P))
         ).alias(f"__mh{i}")
 
-    sig_cols = exploded.groupBy(id_col).agg(*[slot(i) for i in range(num_hashes)])
-    rows = num_hashes // bands
+    sig_cols = exploded.groupBy(id_col).agg(*[slot(i) for i in range(NUM_HASHES)])
+    rows = NUM_HASHES // BANDS
     bands_arr = F.array(
         *[
             band_hash_expr(
                 [F.col(f"__mh{b * rows + j}") for j in range(rows)], b, hash_mode
             )
-            for b in range(bands)
+            for b in range(BANDS)
         ]
     )
     return sig_cols.select(
@@ -166,17 +168,13 @@ def minhash_near_dup_pairs(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    verify_scope: str = "corpus",
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Near-dup pipeline: word shingles -> MinHash -> banded LSH candidates
     -> exact-Jaccard verify >= threshold. Output (id_a, id_b, jaccard_sim).
 
-    With 32 hashes / 8 bands the LSH S-curve crosses ~0.65 at
-    sim=threshold 0.5; callers wanting higher recall raise bands.
+    With 32 hashes / 8 bands (3-word shingles) the LSH S-curve crosses
+    ~0.65 at sim=threshold 0.5.
 
     Plan shape — the signature is computed WITHOUT array lambdas:
     higher-order functions evaluate interpreted (outside whole-stage
@@ -186,34 +184,25 @@ def minhash_near_dup_pairs(
     aggregation — one shuffle of (doc, 32 mins), fully vectorizable, and
     parallelism follows the data, not the input file count.
 
-    ``verify_scope`` picks the exact-verify strategy (both measured r3):
+    The exact verify shingles the whole corpus once per join side and
+    joins the candidates against it: the fewest stages, so the best
+    single-execution latency for a run-once batch job (7.5s vs 12.4s at
+    sf0.1 cold, measured r3 against persisting the candidate pairs and
+    shingling only the docs that appear in one — which was 3.7x faster
+    warm, 5.6s -> 1.5s, but only pays off when the pipeline re-runs in
+    one session).
 
-    - ``"corpus"`` (default): shingle the whole corpus once per join side
-      and join candidates against it. Fewest stages — best single-
-      execution latency (7.5s vs 12.4s at sf0.1 cold, where one-time
-      stage/codegen compile dominates) and the shape a run-once batch job
-      wants.
-    - ``"candidates"``: persist the bare candidate-id pairs, semi-join
-      the corpus down to docs that appear in some pair, and shingle only
-      those. 3.7x faster steady-state at sf0.1 (5.6s -> 1.5s warm) and
-      the right shape when the corpus is huge relative to the near-dup
-      set or the pipeline runs repeatedly in one session.
-
-    A third strategy — computing shingles AFTER joining raw text to the
+    Another strategy — computing shingles AFTER joining raw text to the
     pairs — is a trap, not an option: Catalyst pushes the jaccard filter
     down by SUBSTITUTING the shingle HOFs into the join condition (cost
     is not considered, only determinism), re-evaluating them per probed
-    row: measured 4x slower than either strategy above. Heavy expressions
+    row: measured 4x slower than the verify above. Heavy expressions
     must sit below a join-input projection, never above the join.
     """
-    if verify_scope not in ("corpus", "candidates"):
-        raise ValueError(f"unknown verify_scope: {verify_scope!r}")
     # shingling + signatures dwarf a raw-row shuffle; no-op on well-split
     # inputs (see session.ensure_fanout_parallelism — measured 3.5x here)
     docs = ensure_fanout_parallelism(docs)
-    banded = minhash_banded_rows(
-        docs, id_col, text_col, num_hashes, bands, shingle_k, hash_mode
-    )
+    banded = minhash_banded_rows(docs, id_col, text_col, hash_mode=hash_mode)
     pairs = (
         banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
         .join(
@@ -224,36 +213,14 @@ def minhash_near_dup_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    if verify_scope == "candidates":
-        # bare id pairs feed BOTH the candidate-id distinct and the final
-        # verify join — an EAGER localCheckpoint materializes the
-        # signature pipeline once. Pair-set size tracks duplicate
-        # clusters, not corpus size (the LSH guarantee), so the
-        # materialization is bounded the way mini-dims are. Deliberately
-        # NOT persist(): a CacheManager entry would stay pinned until an
-        # explicit unpersist the lazy return value forbids — a per-batch
-        # caller would leak one entry per call (VERDICT r8 nit #2); the
-        # checkpoint blocks are released by the ContextCleaner when the
-        # frame goes unreferenced.
-        pairs = pairs.localCheckpoint()
-        cand_ids = pairs.select(
-            F.explode(F.array("id_a", "id_b")).alias(id_col)
-        ).distinct()
-        base_docs = docs.select(F.col(id_col), F.col(text_col)).join(
-            cand_ids, id_col, "leftsemi"
-        )
-    else:
-        base_docs = docs.select(F.col(id_col), F.col(text_col))
     # Shingles are computed in a projection BELOW the join inputs (once
-    # per doc), never above the join — see the verify_scope docstring for
-    # why the post-join formulation is 4x slower. A counts-based verify
+    # per doc), never above the join — see the docstring for why the
+    # post-join formulation is 4x slower. A counts-based verify
     # (join exploded shingle hashes per candidate pair) was also measured
     # 2x slower: the exploded relation is recomputed per join side
     # (different shuffle keys, no exchange reuse) and the intersection
     # join shuffles the full exploded corpus twice more.
-    base = base_docs.select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_k).alias("__sh")
-    )
+    base = docs.select(F.col(id_col), word_shingles(F.col(text_col), SHINGLE_K).alias("__sh"))
     a = base.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a"))
     b = base.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b"))
     # threshold applies to the UNROUNDED jaccard (rounding only in the
@@ -268,7 +235,7 @@ def minhash_near_dup_pairs(
     return verified.select("id_a", "id_b", F.round("__j", 6).alias("jaccard_sim"))
 
 
-def simhash64(c: Column, bits: int = 64) -> Column:
+def simhash64(c: Column) -> Column:
     """64-bit SimHash over whitespace tokens: per bit, sum +1/-1 votes of
     each token's xxhash64; the sign becomes the bit. Near-duplicates land
     within small Hamming distance (use with F.bit_count(a ^ b)).
@@ -287,7 +254,7 @@ def simhash64(c: Column, bits: int = 64) -> Column:
         )
 
     out = F.lit(0).cast("long")
-    for b in range(bits):
+    for b in range(64):
         # bit 63 is the sign bit in two's complement
         weight = (1 << b) if b < 63 else -(1 << 63)
         out = out + F.when(bit_vote(b) > 0, F.lit(weight).cast("long")).otherwise(
@@ -378,9 +345,6 @@ def incremental_near_dup_merge(
     id_col: str,
     text_col: str,
     threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
     existing_banded: DataFrame | None = None,
     hash_mode: str = "xxhash",
 ) -> dict[str, DataFrame]:
@@ -447,9 +411,7 @@ def incremental_near_dup_merge(
     # ReusedExchange (same band key), and every downstream consumer
     # reads a leaf. (Still no persist: CacheManager pins plans until an
     # explicit unpersist the lazy outputs forbid — review r4.)
-    banded_new = minhash_banded_rows(
-        new_docs, id_col, text_col, num_hashes, bands, shingle_k, hash_mode
-    )
+    banded_new = minhash_banded_rows(new_docs, id_col, text_col, hash_mode=hash_mode)
     if existing_banded is None:
         # the corpus-side signature pass is the merge's heaviest fan-out
         # when no store is passed (bootstrap); a single-row-group corpus
@@ -457,8 +419,7 @@ def incremental_near_dup_merge(
         # split). Per-doc min-aggregates are partition-invariant, and at
         # production split counts the wrapper is a no-op.
         existing_banded = minhash_banded_rows(
-            ensure_fanout_parallelism(existing_docs),
-            id_col, text_col, num_hashes, bands, shingle_k, hash_mode
+            ensure_fanout_parallelism(existing_docs), id_col, text_col, hash_mode=hash_mode
         )
 
     cand_cross_lazy = (
@@ -498,7 +459,7 @@ def incremental_near_dup_merge(
         )
         return base.select(
             F.col(id_col).alias(alias),
-            word_shingles(F.col(text_col), shingle_k).alias(f"__sh_{alias}"),
+            word_shingles(F.col(text_col), SHINGLE_K).alias(f"__sh_{alias}"),
         )
 
     # No distincts on the shingle-prefilter id probes: cand is already a

@@ -22,7 +22,7 @@ from dynamic_etl_spark.io.table import read_table
 from dynamic_etl_spark.ops.agg import high_water_mark
 from dynamic_etl_spark.ops.dedup import dedup_keep_last_agg
 from dynamic_etl_spark.ops.joins import anti_join, any_change
-from dynamic_etl_spark.ops.keys import CONTIGUOUS_GUARD_ROWS, assign_surrogate_keys
+from dynamic_etl_spark.ops.keys import assign_surrogate_keys
 
 
 def scd1_merge(
@@ -32,10 +32,6 @@ def scd1_merge(
     surrogate_col: str,
     exact_cols: Sequence[str] = (),
     tolerance_cols: Sequence[str] = (),
-    tolerance: float = 0.01,
-    op_col: str = "operation",
-    key_mode: str = "contiguous",
-    max_contiguous_insert_rows: int | None = CONTIGUOUS_GUARD_ROWS,
 ) -> DataFrame:
     """U1/J5/J8 — SCD Type-1 MERGE as one full-outer join rewrite.
 
@@ -44,20 +40,22 @@ def scd1_merge(
     - KEEP: existing row with no incoming match (MERGE leaves it untouched);
     - INSERT: incoming row with no existing match — gets MAX(surrogate)+i;
     - UPDATE: natural key matches and any exact col differs (null-safe) or
-      any tolerance col moved more than ``tolerance`` — incoming values win,
+      any tolerance col moved more than 0.01 — incoming values win,
       existing surrogate is preserved;
     - NOOP: matched within tolerance — EXISTING values win (a <0.01 drift
       is deliberately not written, same as the reference's skip).
 
-    Scale: one shuffle on the natural key (the join), one scalar MAX to the
-    driver (the reference's A1 pattern). Insert surrogates route through
-    ``assign_surrogate_keys``: ``key_mode='contiguous'`` (reference
-    semantics, gap-free) runs the numbering window on a single partition
-    and therefore inherits the ``CONTIGUOUS_GUARD_ROWS`` row-count guard —
-    a bulk/initial load where everything classifies INSERT raises instead
-    of silently funneling the table through one task. For such loads pass
-    ``key_mode='sparse'`` (monotonically increasing above the high-water
-    mark, non-contiguous, no shuffle, 100 TB-safe).
+    Plan: the INSERT branch and the non-INSERT branch of the union
+    each plan the full-outer join on their own, and column
+    pruning makes their ``existing`` projections differ, so no exchange
+    is reused: ``scd1_merge_orders`` at sf0.01 runs 2 SortMergeJoins
+    over 4 parquet scans, 5 shuffles (``tests/test_shuffle_budget.py``)
+    and 9 jobs. Add one scalar MAX of the surrogate to the driver (the
+    reference's A1 pattern) and the insert numbering, a global window on
+    a single partition. Insert surrogates are gap-free (reference
+    semantics) and inherit ``assign_surrogate_keys``' row-count guard: a
+    bulk/initial load where everything classifies INSERT raises instead
+    of silently funneling the table through one task.
 
     Preconditions: BOTH sides must be unique per natural key — the
     full-outer join fans out otherwise, and a duplicated incoming key
@@ -86,7 +84,7 @@ def scd1_merge(
     cond = [ex[k].eqNullSafe(inc[f"__in_{k}"]) for k in keys]
     j = ex.join(inc, cond, "full_outer")
 
-    any_diff = any_change(exact_cols, tolerance_cols, tolerance, new_prefix="__in_")
+    any_diff = any_change(exact_cols, tolerance_cols, new_prefix="__in_")
     op = (
         F.when(F.col("__in_present").isNull(), F.lit("KEEP"))
         .when(F.col("__ex_present").isNull(), F.lit("INSERT"))
@@ -102,7 +100,7 @@ def scd1_merge(
             .alias(c)
             for c in value_cols
         ],
-        op.alias(op_col),
+        op.alias("operation"),
     )
 
     # Surrogate numbering runs over the INSERT rows ONLY: a window
@@ -111,17 +109,15 @@ def scd1_merge(
     # to discard the result. Inserts are delta-sized in steady state; the
     # guard inside assign_surrogate_keys catches the bulk-load case.
     inserts = assign_surrogate_keys(
-        joined.filter(F.col(op_col) == "INSERT"),
+        joined.filter(F.col("operation") == "INSERT"),
         order_cols=keys,
         key_col=surrogate_col,
         offset=hwm,
-        mode=key_mode,
-        max_contiguous_rows=max_contiguous_insert_rows,
     )
-    others = joined.filter(F.col(op_col) != "INSERT").withColumn(
+    others = joined.filter(F.col("operation") != "INSERT").withColumn(
         surrogate_col, F.col("__ex_sk")
     )
-    out_cols = [surrogate_col, *keys, *value_cols, op_col]
+    out_cols = [surrogate_col, *keys, *value_cols, "operation"]
     return inserts.select(*out_cols).unionByName(others.select(*out_cols))
 
 
@@ -193,14 +189,6 @@ def scd2_merge(
     effective_date: str,
     exact_cols: Sequence[str] = (),
     tolerance_cols: Sequence[str] = (),
-    tolerance: float = 0.01,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
-    current_col: str = "is_current",
-    open_end_date: str = "2100-01-01 00:00:00",
-    op_col: str = "operation",
-    key_mode: str = "contiguous",
-    max_contiguous_insert_rows: int | None = CONTIGUOUS_GUARD_ROWS,
 ) -> DataFrame:
     """SCD Type-2 MERGE: history-preserving upsert as one full-outer join.
 
@@ -216,51 +204,53 @@ def scd2_merge(
     - a current row with no incoming match stays open (KEEP — no delete
       detection, matching the reference's merge);
     - a matched row with no change (same null-safe exact cols, tolerance
-      cols within ``tolerance`` — the shared ``any_change`` predicate)
+      cols within 0.01 — the shared ``any_change`` predicate)
       stays open (KEEP);
     - a changed row is emitted twice: the old version closed out at
       ``effective_date`` with ``is_current='N'`` (CLOSE), and a new open
       version with the incoming values and a fresh surrogate (REVISE);
     - an unmatched incoming key becomes a first open version (INSERT).
 
-    The open-end sentinel defaults to 2100-01-01 rather than the
+    The open-end sentinel is 2100-01-01 rather than the
     warehouse-classic 9999-12-31: the parity harness (and any pandas
     consumer) converts timestamps to nanoseconds, whose ceiling is
     2262-04-11 — a year-9999 sentinel overflows Arrow's ns cast.
     ``effective_date`` is an explicit literal (repo determinism rule: no
-    ``current_date``), cast to ``valid_from_col``'s type; it must postdate
+    ``current_date``), cast to ``valid_from``'s type; it must postdate
     every open row's ``valid_from`` (same-day re-merge of a key is the
     caller's conflict to resolve). New surrogates are numbered
     hwm+1.. in natural-key order over INSERT∪REVISE together, through
-    the same guard/sparse switch as :func:`scd1_merge`.
+    the same guarded window as :func:`scd1_merge`.
 
-    Scale: identical shape to ``scd1_merge`` — one natural-key shuffle for
-    the join (current rows only; history never shuffles), one scalar MAX,
+    Plan: the join (current rows only; history never shuffles) feeds
+    three branches; ``scd2_merge_customers`` runs it as 1 SortMergeJoin
+    and 2 BroadcastHashJoins within 3 shuffles
+    (``tests/test_shuffle_budget.py``), plus one scalar MAX and the
     delta-sized insert numbering.
     """
     keys = list(natural_key)
     value_cols = [*exact_cols, *tolerance_cols]
     out_cols = [
         surrogate_col, *keys, *value_cols,
-        valid_from_col, valid_to_col, current_col, op_col,
+        "valid_from", "valid_to", "is_current", "operation",
     ]
-    vf_type = existing.schema[valid_from_col].dataType
+    vf_type = existing.schema["valid_from"].dataType
     eff = F.lit(effective_date).cast(vf_type)
-    open_end = F.lit(open_end_date).cast(vf_type)
+    open_end = F.lit("2100-01-01 00:00:00").cast(vf_type)
     hwm = high_water_mark(existing, surrogate_col)
 
     # null-safe split: a row with a NULL current flag counts as history
     # (plain != 'Y' is NULL for it, which would drop the row from BOTH
     # branches — silent data loss in a history-PRESERVING merge)
-    is_open = F.col(current_col).eqNullSafe(F.lit("Y"))
-    history = existing.filter(~is_open).withColumn(op_col, F.lit("HISTORY"))
+    is_open = F.col("is_current").eqNullSafe(F.lit("Y"))
+    history = existing.filter(~is_open).withColumn("operation", F.lit("HISTORY"))
     cur = existing.filter(is_open)
 
     ex = cur.select(
         *keys,
         F.col(surrogate_col).alias("__ex_sk"),
-        F.col(valid_from_col).alias("__ex_vf"),
-        F.col(valid_to_col).alias("__ex_vt"),
+        F.col("valid_from").alias("__ex_vf"),
+        F.col("valid_to").alias("__ex_vt"),
         *[F.col(c).alias(f"__ex_{c}") for c in value_cols],
         F.lit(True).alias("__ex_present"),
     )
@@ -273,9 +263,7 @@ def scd2_merge(
         inc, [ex[k].eqNullSafe(inc[f"__in_{k}"]) for k in keys], "full_outer"
     )
     matched = F.col("__ex_present").isNotNull() & F.col("__in_present").isNotNull()
-    changed = matched & any_change(
-        exact_cols, tolerance_cols, tolerance, new_prefix="__in_"
-    )
+    changed = matched & any_change(exact_cols, tolerance_cols, new_prefix="__in_")
 
     keep = j.filter(
         (F.col("__in_present").isNull() & F.col("__ex_present").isNotNull())
@@ -284,37 +272,35 @@ def scd2_merge(
         F.col("__ex_sk").alias(surrogate_col),
         *keys,
         *[F.col(f"__ex_{c}").alias(c) for c in value_cols],
-        F.col("__ex_vf").alias(valid_from_col),
-        F.col("__ex_vt").alias(valid_to_col),
-        F.lit("Y").alias(current_col),
-        F.lit("KEEP").alias(op_col),
+        F.col("__ex_vf").alias("valid_from"),
+        F.col("__ex_vt").alias("valid_to"),
+        F.lit("Y").alias("is_current"),
+        F.lit("KEEP").alias("operation"),
     )
     closed = j.filter(changed).select(
         F.col("__ex_sk").alias(surrogate_col),
         *keys,
         *[F.col(f"__ex_{c}").alias(c) for c in value_cols],
-        F.col("__ex_vf").alias(valid_from_col),
-        eff.alias(valid_to_col),
-        F.lit("N").alias(current_col),
-        F.lit("CLOSE").alias(op_col),
+        F.col("__ex_vf").alias("valid_from"),
+        eff.alias("valid_to"),
+        F.lit("N").alias("is_current"),
+        F.lit("CLOSE").alias("operation"),
     )
     fresh = j.filter(changed | F.col("__ex_present").isNull()).select(
         *[F.col(f"__in_{k}").alias(k) for k in keys],
         *[F.col(f"__in_{c}").alias(c) for c in value_cols],
-        eff.alias(valid_from_col),
-        open_end.alias(valid_to_col),
-        F.lit("Y").alias(current_col),
+        eff.alias("valid_from"),
+        open_end.alias("valid_to"),
+        F.lit("Y").alias("is_current"),
         F.when(F.col("__ex_present").isNull(), F.lit("INSERT"))
         .otherwise(F.lit("REVISE"))
-        .alias(op_col),
+        .alias("operation"),
     )
     fresh = assign_surrogate_keys(
         fresh,
         order_cols=keys,
         key_col=surrogate_col,
         offset=hwm,
-        mode=key_mode,
-        max_contiguous_rows=max_contiguous_insert_rows,
     )
     return (
         history.select(*out_cols)

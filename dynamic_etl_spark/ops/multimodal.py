@@ -251,34 +251,18 @@ def strict_decoder(payload: bytes) -> list[float]:
     )
 
 
-#: Failure classes the 'drop' path must survive: NotImplementedError
-#: (compressed codec), ValueError (corrupt/degenerate container), and
-#: struct.error (truncated payload mid-unpack — NOT a ValueError
-#: subclass, so listing ValueError alone still kills a mixed-corpus job
-#: on a truncated WAV/frames payload).
-DECODE_FAILURES = (NotImplementedError, ValueError, struct.error)
-
-
 def extract_media_features(
     media: DataFrame,
     decoder: Callable[[bytes], list[float]] = header_features,
-    batch_size_hint: int | None = None,
-    on_error: str = "raise",
 ) -> DataFrame:
     """Arrow-batched feature extraction over a media table with columns
     (doc_id long, media binary, media_type string).
 
     mapInPandas (not a scalar UDF) so the decoder sees whole Arrow record
-    batches — the shape real codecs want — and can emit a different row
-    count if a decode fails (``on_error='drop'`` skips undecodable rows —
-    dropped, never nulled mid-schema — which is how a mixed corpus runs
-    the strict decoder past its compressed formats; the default 'raise'
-    surfaces the failure). Partitioning of the input is preserved; no
-    shuffle is introduced.
+    batches — the shape real codecs want. A decode failure raises (a
+    corpus is never silently shrunk); NULL payloads are skipped.
+    Partitioning of the input is preserved; no shuffle is introduced.
     """
-    if on_error not in ("raise", "drop"):
-        raise ValueError(f"on_error must be 'raise' or 'drop', got {on_error!r}")
-    drop_failures = on_error == "drop"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -294,17 +278,12 @@ def extract_media_features(
                 if payload is None:
                     continue
                 raw = bytes(payload)
-                try:
-                    feats = decoder(raw)
-                except DECODE_FAILURES:
-                    if drop_failures:
-                        continue
-                    raise
+                feats = decoder(raw)
                 out["doc_id"].append(int(doc_id))
                 out["media_type"].append(mtype)
                 out["n_bytes"].append(len(raw))
                 out["features"].append(feats)
-            # a fully-dropped batch must yield NOTHING: an empty pandas
+            # an all-NULL batch must yield NOTHING: an empty pandas
             # "features" column types as float64 ndarray, which Arrow
             # cannot convert to list<double>
             if out["doc_id"]:
@@ -354,9 +333,9 @@ def serialize_bmp(pixels: list[tuple[int, int, int]], w: int, h: int) -> bytes:
     return bytes(header + info + data)
 
 
-def encode_bmp(doc_id: int, w: int = BMP_W, h: int = BMP_H) -> bytes:
+def encode_bmp(doc_id: int) -> bytes:
     """The deterministic pixel function serialized via serialize_bmp."""
-    return serialize_bmp([_bmp_rgb(doc_id, i) for i in range(w * h)], w, h)
+    return serialize_bmp([_bmp_rgb(doc_id, i) for i in range(BMP_W * BMP_H)], BMP_W, BMP_H)
 
 
 def _frame_seed(doc_id: int, f: int) -> int:
@@ -366,18 +345,18 @@ def _frame_seed(doc_id: int, f: int) -> int:
     return doc_id * 1000 + f
 
 
-def encode_frames(doc_id: int, n_frames: int = VIDEO_N_FRAMES) -> bytes:
+def encode_frames(doc_id: int) -> bytes:
     """Serialize n_frames deterministic BMP frames into the raw-frames
     container the video branch of strict_decoder parses."""
-    body = b"".join(encode_bmp(_frame_seed(doc_id, f)) for f in range(n_frames))
-    return FRAMES_MAGIC + struct.pack("<I", n_frames) + body
+    body = b"".join(encode_bmp(_frame_seed(doc_id, f)) for f in range(VIDEO_N_FRAMES))
+    return FRAMES_MAGIC + struct.pack("<I", VIDEO_N_FRAMES) + body
 
 
-def encode_wav(doc_id: int, rate: int = WAV_RATE, n: int = WAV_N) -> bytes:
+def encode_wav(doc_id: int) -> bytes:
     """Serialize the deterministic sample function as a real RIFF/WAVE
     PCM16 mono file."""
-    data = struct.pack(f"<{n}h", *(_wav_sample(doc_id, i) for i in range(n)))
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+    data = struct.pack(f"<{WAV_N}h", *(_wav_sample(doc_id, i) for i in range(WAV_N)))
+    fmt = struct.pack("<HHIIHH", 1, 1, WAV_RATE, WAV_RATE * 2, 2, 16)
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", len(body)) + body

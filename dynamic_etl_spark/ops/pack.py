@@ -16,13 +16,13 @@ two-level scan:
    computed from its min/max (2 driver scalars);
 2. cumulative sum WITHIN each bucket (window partitioned by bucket — many
    parallel, bucket-sized tasks);
-3. one bucket-totals aggregate (``num_buckets`` rows, collected — bounded
+3. one bucket-totals aggregate (``PREFIX_SUM_BUCKETS`` rows, collected — bounded
    by construction), exclusive-scanned on the driver and broadcast-joined
    back as each bucket's starting offset.
 
 Cost: one narrow bucket projection, one window shuffle on bucket id, one
 tiny aggregate + broadcast join. No single-task stage anywhere; 100 TB
-needs only ``num_buckets`` sized so buckets fit an executor.
+needs only ``PREFIX_SUM_BUCKETS`` sized so buckets fit an executor.
 
 The result is partitioning-independent (a prefix sum over a unique total
 order is a pure function of the data), so it oracle-checks against the
@@ -40,12 +40,16 @@ from pyspark.sql import functions as F
 from dynamic_etl_spark.session import local_df
 
 
+#: prefix_sum's range buckets: one driver-side offset per bucket, one
+#: window partition each.
+PREFIX_SUM_BUCKETS = 64
+
+
 def prefix_sum(
     df: DataFrame,
     order_col: str,
     value_col: str,
     out_col: str = "cumulative",
-    num_buckets: int = 64,
 ) -> DataFrame:
     """Add ``out_col`` = inclusive running total of ``value_col`` over the
     total order given by ``order_col``.
@@ -62,7 +66,7 @@ def prefix_sum(
     if bounds["lo"] is None:
         return df.withColumn(out_col, F.lit(None).cast("bigint"))
     lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    span = (hi - lo) // num_buckets + 1
+    span = (hi - lo) // PREFIX_SUM_BUCKETS + 1
 
     val = F.col(value_col).cast("bigint")
     bucketed = df.withColumn(
@@ -99,7 +103,6 @@ def sequence_pack(
     id_col: str,
     token_col: str,
     budget: int,
-    num_buckets: int = 64,
 ) -> DataFrame:
     """Greedy concat-and-chunk packing: documents are concatenated in
     ``id_col`` order and split every ``budget`` tokens. Emits, per doc:
@@ -115,7 +118,7 @@ def sequence_pack(
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
-    cum = prefix_sum(df, id_col, token_col, "__cum", num_buckets=num_buckets)
+    cum = prefix_sum(df, id_col, token_col, "__cum")
     tokens = F.col(token_col).cast("bigint")
     start = F.col("__cum") - tokens
     # BIGINT `div`, not `/`: a corpus past 2^53 tokens would round in double

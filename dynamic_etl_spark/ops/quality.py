@@ -95,9 +95,7 @@ def _gram_rows(df: DataFrame, ns: Sequence[int], id_col: str,
     )
 
 
-def multi_ngram_stats(df: DataFrame, ns: Sequence[int], *,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
+def multi_ngram_stats(df: DataFrame, ns: Sequence[int]) -> DataFrame:
     """Per-document n-gram statistics for several ``n`` at once.
 
     One row per input row with ``total_{n}grams``, ``distinct_{n}grams``,
@@ -107,18 +105,18 @@ def multi_ngram_stats(df: DataFrame, ns: Sequence[int], *,
     window across all ``n`` instead of one pipeline per gram size.
     """
     per_gram = (
-        _gram_rows(df, ns, id_col, text_col)
-        .groupBy(id_col, "__n", "__gram")
+        _gram_rows(df, ns, "doc_id", "text")
+        .groupBy("doc_id", "__n", "__gram")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    stats = per_gram.groupBy(id_col, "__n").agg(
+    stats = per_gram.groupBy("doc_id", "__n").agg(
         F.sum("__c").alias("__total"),
         F.count(F.lit(1)).alias("__distinct"),
         F.max("__c").alias("__top"),
     )
     def pick(src: str, n: int):
         return F.sum(F.when(F.col("__n") == n, F.col(src)))
-    rolled = stats.groupBy(id_col).agg(
+    rolled = stats.groupBy("doc_id").agg(
         *[
             agg
             for n in ns
@@ -129,10 +127,10 @@ def multi_ngram_stats(df: DataFrame, ns: Sequence[int], *,
             )
         ]
     )
-    base = df.select(id_col)
-    out = base.join(rolled, on=id_col, how="left")
+    base = df.select("doc_id")
+    out = base.join(rolled, on="doc_id", how="left")
     return out.select(
-        id_col,
+        "doc_id",
         *[
             F.coalesce(F.col(c), F.lit(0)).alias(c)
             for n in ns
@@ -141,8 +139,7 @@ def multi_ngram_stats(df: DataFrame, ns: Sequence[int], *,
     )
 
 
-def repetition_profile(df: DataFrame, *, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def repetition_profile(df: DataFrame) -> DataFrame:
     """Gopher-style per-document quality profile + boolean gates.
 
     Columns: token/char stats, repetition fractions (rounded 6dp), one
@@ -150,15 +147,15 @@ def repetition_profile(df: DataFrame, *, id_col: str = "doc_id",
     Emits flags rather than filtering so downstream curation can count,
     stratify, or drop per policy (same contract as ops/pii.py).
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     # total non-whitespace chars / tokens: exact mean word length without
     # an interpreted per-token length pass.
-    nonws = F.length(F.regexp_replace(F.col(text_col), r"\s", ""))
-    n_symbols = F.regexp_count(F.col(text_col), F.lit(r"[^A-Za-z0-9\s]"))
+    nonws = F.length(F.regexp_replace(F.col("text"), r"\s", ""))
+    n_symbols = F.regexp_count(F.col("text"), F.lit(r"[^A-Za-z0-9\s]"))
 
     base = df.select(
-        id_col,
+        "doc_id",
         n_tokens.alias("n_tokens"),
         F.round(
             F.when(n_tokens > 0, nonws.cast("double") / n_tokens).otherwise(0.0), 6
@@ -167,11 +164,11 @@ def repetition_profile(df: DataFrame, *, id_col: str = "doc_id",
             F.when(n_tokens > 0, n_symbols.cast("double") / n_tokens).otherwise(0.0), 6
         ).alias("symbol_word_ratio"),
     )
-    grams = multi_ngram_stats(df, [2, 3], id_col=id_col, text_col=text_col)
+    grams = multi_ngram_stats(df, [2, 3])
     prof = (
-        base.join(grams, on=id_col)
+        base.join(grams, on="doc_id")
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             "mean_word_len",
             "symbol_word_ratio",
@@ -217,8 +214,7 @@ def _dup_frac(total: str, distinct: str):
     )
 
 
-def tfidf_topk(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
-               k: int = 3) -> DataFrame:
+def tfidf_topk(df: DataFrame, *, k: int = 3) -> DataFrame:
     """Top-k TF-IDF terms per document (smoothed idf: ln((N+1)/(df+1))+1,
     the scikit-learn 'smooth_idf' formulation — public knowledge).
 
@@ -229,11 +225,11 @@ def tfidf_topk(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
     Ranking is total-ordered (score desc, term asc) per repo convention.
     """
     n_docs = df.count()  # bounded scalar (high-water-mark pattern)
-    toks = df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
-    tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     scored = tf.join(docfreq, on="term").select(
-        F.col(id_col),
+        F.col("doc_id"),
         "term",
         "tf",
         "df",
@@ -242,11 +238,11 @@ def tfidf_topk(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
             * (F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0)) + 1.0)
         ).alias("__score"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("__score"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("__score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(id_col, "rank", "term", "tf", "df", F.round("__score", 6).alias("tfidf"))
+        .select("doc_id", "rank", "term", "tf", "df", F.round("__score", 6).alias("tfidf"))
     )
 
 
@@ -258,34 +254,32 @@ def tfidf_topk(df: DataFrame, *, id_col: str = "doc_id", text_col: str = "text",
 # _gram_rows machinery the Gopher gates use).
 # --------------------------------------------------------------------------
 
-def bigram_novelty_profile(df: DataFrame, *, id_col: str = "doc_id",
-                           text_col: str = "text",
-                           familiar_min_count: int = 2) -> DataFrame:
+def bigram_novelty_profile(df: DataFrame) -> DataFrame:
     """Per-document novelty vs the self-trained corpus bigram model:
     ``n_bigrams``, ``n_familiar`` (bigram INSTANCES whose corpus count >=
-    ``familiar_min_count``), ``novelty_ratio = 1 - familiar/n``.
+    2), ``novelty_ratio = 1 - familiar/n``.
 
     Oracle-exact by construction (repo float rules): every statistic is
     an integer count; the single ratio divides the integer sums ONCE at
     the end (both engines compute the identical IEEE quotient). Docs
     shorter than 2 tokens surface with zeros, mirroring
     multi_ngram_stats' left-join contract."""
-    grams = _gram_rows(df, [2], id_col, text_col).select(id_col, "__gram")
+    grams = _gram_rows(df, [2], "doc_id", "text").select("doc_id", "__gram")
     model = grams.groupBy("__gram").agg(F.count(F.lit(1)).alias("__c"))
     scored = (
         grams.join(model, on="__gram")  # self-trained: always matches
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum(
-                F.when(F.col("__c") >= familiar_min_count, 1).otherwise(0)
+                F.when(F.col("__c") >= 2, 1).otherwise(0)
             ).alias("n_familiar"),
         )
     )
-    out = df.select(id_col).join(scored, on=id_col, how="left")
+    out = df.select("doc_id").join(scored, on="doc_id", how="left")
     n, fam = F.col("n_bigrams"), F.col("n_familiar")
     return out.select(
-        id_col,
+        "doc_id",
         F.coalesce(n, F.lit(0)).alias("n_bigrams"),
         F.coalesce(fam, F.lit(0)).alias("n_familiar"),
         F.round(
@@ -294,8 +288,7 @@ def bigram_novelty_profile(df: DataFrame, *, id_col: str = "doc_id",
     )
 
 
-def bigram_perplexity_profile(df: DataFrame, *, id_col: str = "doc_id",
-                              text_col: str = "text", k: float = 1.0) -> DataFrame:
+def bigram_perplexity_profile(df: DataFrame) -> DataFrame:
     """Per-document add-k bigram perplexity under the self-trained corpus
     model: ``P(w2|w1) = (c(w1 w2) + k) / (c(w1 .) + k*V)``, ``V`` =
     corpus vocabulary size; ``cross_entropy = -mean(log2 P)``;
@@ -317,13 +310,13 @@ def bigram_perplexity_profile(df: DataFrame, *, id_col: str = "doc_id",
     skew bounded by stopword frequency caps at ~corpus fraction); V is a
     1-row aggregate joined via broadcast anchor (repo's bounded-scalar
     pattern) — nothing corpus-sized crosses the driver."""
-    grams = _gram_rows(df, [2], id_col, text_col).select(id_col, "__gram")
+    grams = _gram_rows(df, [2], "doc_id", "text").select("doc_id", "__gram")
     model = grams.groupBy("__gram").agg(F.count(F.lit(1)).alias("__cg"))
     ctx = model.groupBy(
         F.split_part(F.col("__gram"), F.lit(" "), F.lit(1)).alias("__w1")
     ).agg(F.sum("__cg").alias("__cw"))
     vocab = df.select(
-        F.explode(tokens(F.col(text_col))).alias("__tok")
+        F.explode(tokens(F.col("text"))).alias("__tok")
     ).agg(F.countDistinct("__tok").alias("__v"))
 
     scored = (
@@ -332,11 +325,11 @@ def bigram_perplexity_profile(df: DataFrame, *, id_col: str = "doc_id",
         .join(ctx, on="__w1")
         .join(F.broadcast(vocab))  # 1-row anchor (deliberate, plan-tested class)
         .select(
-            id_col,
+            "doc_id",
             F.round(
                 F.log2(
-                    (F.col("__cg") + F.lit(k))
-                    / (F.col("__cw") + F.lit(k) * F.col("__v"))
+                    (F.col("__cg") + F.lit(1.0))
+                    / (F.col("__cw") + F.lit(1.0) * F.col("__v"))
                 ),
                 12,
             )
@@ -344,16 +337,16 @@ def bigram_perplexity_profile(df: DataFrame, *, id_col: str = "doc_id",
             .alias("__lp"),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_bigrams"),
         F.sum("__lp").alias("__slp"),
     )
     h = -F.col("__slp").cast("double") / F.col("n_bigrams")
     return (
-        df.select(id_col)
-        .join(per_doc, on=id_col, how="left")
+        df.select("doc_id")
+        .join(per_doc, on="doc_id", how="left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce(F.col("n_bigrams"), F.lit(0)).alias("n_bigrams"),
             F.round(F.when(F.col("n_bigrams") > 0, h).otherwise(0.0), 6).alias(
                 "cross_entropy"
@@ -368,8 +361,6 @@ def bigram_perplexity_profile(df: DataFrame, *, id_col: str = "doc_id",
 def pmi_collocations(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_count: int = 5,
     top_k: int = 20,
 ) -> DataFrame:
@@ -388,14 +379,14 @@ def pmi_collocations(
     the two corpus totals are bounded driver scalars (high-water-mark
     convention); top-k is a sort-limit (TakeOrdered), never a window.
     """
-    toks = df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+    toks = df.select(F.explode(tokens(F.col("text"))).alias("w"))
     # localCheckpoint (not persist): shared by both join sides, released
     # by the ContextCleaner when unreferenced — persist would leak a
     # cache entry per invocation (review r4)
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
     n_uni = toks.agg(F.count(F.lit(1)).alias("v")).collect()[0]["v"]
 
-    grams = _gram_rows(df, [2], id_col, text_col).filter(
+    grams = _gram_rows(df, [2], "doc_id", "text").filter(
         F.col("__gram").contains(" ")  # guard: 1-token docs emit no bigram
     )
     bi = grams.groupBy("__gram").agg(F.count(F.lit(1)).alias("n_xy"))
@@ -478,11 +469,7 @@ def hashed_linear_score(
     df: DataFrame,
     weights: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 64,
-    bucket_col: str = "bucket",
-    weight_col: str = "weight",
     bias: float = 0.0,
     threshold: float = 0.0,
 ) -> DataFrame:
@@ -519,14 +506,14 @@ def hashed_linear_score(
     """
     wq = F.broadcast(
         weights.select(
-            F.col(bucket_col).alias("__b"),
-            F.round(F.col(weight_col), 6).cast("decimal(18,6)").alias("__w"),
+            F.col("bucket").alias("__b"),
+            F.round(F.col("weight"), 6).cast("decimal(18,6)").alias("__w"),
         )
     )
     toks = df.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__t")
+        F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("__t")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         (
             F.conv(F.substring(F.md5(F.col("__t")), 1, 8), 16, 10).cast("long")
             % n_buckets
@@ -534,7 +521,7 @@ def hashed_linear_score(
     )
     per_doc = (
         toks.join(wq, on="__b", how="left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.sum(F.coalesce(F.col("__w"), F.lit(0).cast("decimal(18,6)"))).alias("__s"),
@@ -542,10 +529,10 @@ def hashed_linear_score(
     )
     logit_exact = F.coalesce(F.col("__s").cast("double"), F.lit(0.0)) + F.lit(bias)
     return (
-        df.select(id_col)
-        .join(per_doc, on=id_col, how="left")
+        df.select("doc_id")
+        .join(per_doc, on="doc_id", how="left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce(F.col("n_tokens"), F.lit(0)).cast("bigint").alias("n_tokens"),
             # + 0.0 collapses a round-to-zero-from-below -0.0 (SCALE.md)
             (F.round(logit_exact, 6) + F.lit(0.0)).alias("logit"),
@@ -567,11 +554,8 @@ def hashed_linear_score(
 def dsir_bucket_ratios(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     target,
     n_buckets: int = 256,
-    smoothing: float = 1.0,
 ) -> DataFrame:
     """FIT half of DSIR: the per-bucket log importance ratio table —
     ``(bucket, log_ratio)``, exactly ``n_buckets`` rows (absent buckets
@@ -598,14 +582,14 @@ def dsir_bucket_ratios(
     scalars — without the checkpoint that second read would re-run the
     corpus pass). Nothing corpus-sized crosses the driver.
     """
-    grams = _gram_rows(df, (1, 2), id_col, text_col).select(id_col, "__gram")
-    flags = df.select(F.col(id_col), target.alias("__t"))
+    grams = _gram_rows(df, (1, 2), "doc_id", "text").select("doc_id", "__gram")
+    flags = df.select(F.col("doc_id"), target.alias("__t"))
     bucket = (
         F.conv(F.substring(F.md5(F.col("__gram")), 1, 8), 16, 10).cast("long")
         % n_buckets
     )
     fstats = (
-        grams.join(flags, on=id_col)
+        grams.join(flags, on="doc_id")
         .select(bucket.alias("bucket"), "__t")
         .groupBy("bucket")
         .agg(
@@ -621,7 +605,7 @@ def dsir_bucket_ratios(
     ).first()
     spark = df.sparkSession
     grid = spark.range(n_buckets).select(F.col("id").cast("long").alias("bucket"))
-    s = float(smoothing)
+    s = 1.0  # add-one smoothing
     lt = F.round(
         F.log(
             (F.coalesce(F.col("__ct"), F.lit(0)) + F.lit(s))
@@ -647,8 +631,6 @@ def dsir_log_weights(
     df: DataFrame,
     ratios: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     top_n: int | None = None,
 ) -> DataFrame:
     """SCORE half of DSIR: per-document log importance weight = the
@@ -676,7 +658,7 @@ def dsir_log_weights(
     corpus. Two corpus shuffles (gram window + doc agg), both eager
     behind the checkpoint; the surfaced plan is a checkpoint scan.
     """
-    spine = _dsir_scored_spine(df, ratios, id_col=id_col, text_col=text_col)
+    spine = _dsir_scored_spine(df, ratios, id_col="doc_id", text_col="text")
     if top_n is None:
         sel = F.lit(True)
     else:
@@ -689,19 +671,19 @@ def dsir_log_weights(
         # two consumers of the corpus-sized scoring lineage.
         spine = spine.localCheckpoint()
         cut = (
-            spine.orderBy(F.desc("__lw"), F.asc(id_col))
-            .select("__lw", id_col)
+            spine.orderBy(F.desc("__lw"), F.asc("doc_id"))
+            .select("__lw", "doc_id")
             .take(top_n)
         )
         if len(cut) < top_n:
             sel = F.lit(True)
         else:
-            cw, cid = cut[-1]["__lw"], cut[-1][id_col]
+            cw, cid = cut[-1]["__lw"], cut[-1]["doc_id"]
             sel = (F.col("__lw") > F.lit(cw)) | (
-                (F.col("__lw") == F.lit(cw)) & (F.col(id_col) <= F.lit(cid))
+                (F.col("__lw") == F.lit(cw)) & (F.col("doc_id") <= F.lit(cid))
             )
     return spine.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "n_features",
         (F.round(F.col("__lw").cast("double"), 6) + F.lit(0.0)).alias("log_weight"),
         sel.alias("selected"),

@@ -36,8 +36,6 @@ def point_in_interval_join(
     intervals: DataFrame,
     *,
     ts_col: str = "ts",
-    start_col: str = "w_start",
-    end_col: str = "w_end",
     bucket_seconds: int,
     how: str = "left",
 ) -> DataFrame:
@@ -61,25 +59,25 @@ def point_in_interval_join(
         "__pbucket", F.floor(_epoch_us(F.col(ts_col)) / F.lit(us))
     )
     last_bucket = F.when(
-        _epoch_us(F.col(end_col)) - _epoch_us(F.col(start_col)) <= F.lit(us),
-        F.floor((_epoch_us(F.col(end_col)) - 1) / F.lit(us)),
+        _epoch_us(F.col("w_end")) - _epoch_us(F.col("w_start")) <= F.lit(us),
+        F.floor((_epoch_us(F.col("w_end")) - 1) / F.lit(us)),
     ).otherwise(
         F.raise_error(F.lit(
             f"interval longer than bucket_seconds={bucket_seconds}; "
             "matches would be lost"
         ))
     )
-    iv = intervals.filter(F.col(end_col) > F.col(start_col)).withColumn(
+    iv = intervals.filter(F.col("w_end") > F.col("w_start")).withColumn(
         "__bucket",
         F.explode(
             F.sequence(
-                F.floor(_epoch_us(F.col(start_col)) / F.lit(us)), last_bucket
+                F.floor(_epoch_us(F.col("w_start")) / F.lit(us)), last_bucket
             )
         ),
     )
     cond = (
         (iv["__bucket"] == p["__pbucket"])
-        & (p[ts_col] >= iv[start_col])
-        & (p[ts_col] < iv[end_col])
+        & (p[ts_col] >= iv["w_start"])
+        & (p[ts_col] < iv["w_end"])
     )
     return iv.join(p, cond, how).drop("__bucket", "__pbucket")

@@ -34,12 +34,6 @@ def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "query_text",
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     top_k: int = 5,
 ) -> DataFrame:
     """Top-``top_k`` documents per query under Okapi BM25 with the
@@ -77,24 +71,24 @@ def bm25_topk(
     # token count in ONE pass; avgdl is their IEEE quotient, embedded as
     # a literal so both engines share the exact double
     n_docs, total_tokens = docs.select(
-        F.count(F.lit(1)), F.coalesce(F.sum(token_count(F.col(text_col))), F.lit(0))
+        F.count(F.lit(1)), F.coalesce(F.sum(token_count(F.col("text"))), F.lit(0))
     ).first()
     if n_docs == 0 or total_tokens == 0:
         raise ValueError("bm25_topk: empty corpus (no documents or no tokens)")
     avgdl = total_tokens / n_docs
 
     tf = (
-        docs.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term"))
-        .groupBy(id_col, "term")
+        docs.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     # doc length is a projection of the corpus, NOT an aggregate of tf —
     # tf then has exactly one consumer and the corpus tokenizes into a
     # shuffle once
-    dl = docs.select(F.col(id_col), token_count(F.col(text_col)).alias("dl"))
+    dl = docs.select(F.col("doc_id"), token_count(F.col("text")).alias("dl"))
 
     qterms = queries.select(
-        F.col(query_id_col), F.explode(tokens(F.col(query_text_col))).alias("term")
+        F.col("query_id"), F.explode(tokens(F.col("query_text"))).alias("term")
     ).distinct()
     qvocab = qterms.select("term").distinct()
 
@@ -109,26 +103,26 @@ def bm25_topk(
     idf = F.log(
         (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
-    tf_factor = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / F.lit(avgdl)))
+    tf_factor = (F.col("tf") * (BM25_K1 + 1.0)) / (
+        F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B * (F.col("dl") / F.lit(avgdl)))
     )
     contrib = F.round(idf * tf_factor, 12).cast("decimal(38,12)")
 
     scored = (
-        tf_qd.join(dl, on=id_col)
+        tf_qd.join(dl, on="doc_id")
         .join(F.broadcast(qterms), on="term")
-        .select(query_id_col, id_col, contrib.alias("__c"))
-        .groupBy(query_id_col, id_col)
+        .select("query_id", "doc_id", contrib.alias("__c"))
+        .groupBy("query_id", "doc_id")
         .agg(F.sum("__c").alias("__s"), F.count(F.lit(1)).alias("n_hit_terms"))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("__s"), F.asc(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("__s"), F.asc("doc_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
         .select(
-            query_id_col,
+            "query_id",
             "rank",
-            id_col,
+            "doc_id",
             "n_hit_terms",
             F.round(F.col("__s").cast("double"), 6).alias("bm25"),
         )
@@ -153,8 +147,6 @@ MMR_POOL_BUDGET_BYTES = 128 * 2**20
 def mmr_select(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     anchor_id,
     k: int = 10,
     lam: float = 0.5,
@@ -224,8 +216,8 @@ def mmr_select(
 
     spark = corpus.sparkSession
     anchor_rows = (
-        corpus.filter(F.col(id_col) == anchor_id)
-        .select(as_double_vec(F.col(vec_col)).alias("__a"))
+        corpus.filter(F.col("vec_id") == anchor_id)
+        .select(as_double_vec(F.col("embedding")).alias("__a"))
         .take(1)
     )
     if not anchor_rows:
@@ -238,8 +230,8 @@ def mmr_select(
         return F.array(*[F.lit(float(x)) for x in values])
 
     base = (
-        corpus.filter(F.col(id_col) != anchor_id)
-        .select(F.col(id_col).alias("__id"), as_double_vec(F.col(vec_col)).alias("__v"))
+        corpus.filter(F.col("vec_id") != anchor_id)
+        .select(F.col("vec_id").alias("__id"), as_double_vec(F.col("embedding")).alias("__v"))
         .filter(l2_norm(F.col("__v")) > 0.0)
         .withColumn("__rel", cosine(F.col("__v"), vec_lit(anchor)))
     )
@@ -247,7 +239,7 @@ def mmr_select(
     out_schema = T.StructType(
         [
             T.StructField("rank", T.IntegerType(), False),
-            T.StructField(id_col, corpus.schema[id_col].dataType, False),
+            T.StructField("vec_id", corpus.schema["vec_id"].dataType, False),
             T.StructField("__score", T.DoubleType(), False),
         ]
     )
@@ -256,7 +248,7 @@ def mmr_select(
             _mmr_pool(base, pool_size, dim=len(anchor)), lam, one_minus, k
         )
         return spark.createDataFrame(picked, out_schema).select(
-            "rank", id_col, F.round("__score", 6).alias("mmr_score")
+            "rank", "vec_id", F.round("__score", 6).alias("mmr_score")
         )
 
     state = base.withColumn("__ms", F.lit(None).cast("double")).localCheckpoint()
@@ -284,7 +276,7 @@ def mmr_select(
             .localCheckpoint()
         )
     return spark.createDataFrame(picked, out_schema).select(
-        "rank", id_col, F.round("__score", 6).alias("mmr_score")
+        "rank", "vec_id", F.round("__score", 6).alias("mmr_score")
     )
 
 
@@ -370,9 +362,6 @@ RRF_K0 = 60
 def rrf_fuse(
     rankings: list[DataFrame],
     *,
-    query_id_col: str = "query_id",
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
     names: list[str] | None = None,
     k0: int = RRF_K0,
     top_k: int = 10,
@@ -409,10 +398,10 @@ def rrf_fuse(
     fused = None
     for df, name in zip(rankings, names):
         side = df.select(
-            query_id_col, id_col, F.col(rank_col).alias(name)
+            "query_id", "doc_id", F.col("rank").alias(name)
         )
         fused = side if fused is None else fused.join(
-            side, on=[query_id_col, id_col], how="full_outer"
+            side, on=["query_id", "doc_id"], how="full_outer"
         )
     score = None
     for name in names:
@@ -420,15 +409,15 @@ def rrf_fuse(
             F.lit(1.0) / (F.lit(k0) + F.col(name)), F.lit(0.0)
         )
         score = term if score is None else score + term
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("__rrf"), F.asc(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("__rrf"), F.asc("doc_id")
     )
     return (
         fused.withColumn("__rrf", score)
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_k)
         .select(
-            query_id_col, "rank", id_col, *names,
+            "query_id", "rank", "doc_id", *names,
             F.col("__rrf").alias("rrf_score"),
         )
     )

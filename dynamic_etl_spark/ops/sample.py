@@ -137,7 +137,6 @@ def hash_split(
     df: DataFrame,
     uniform: Column,
     splits: Sequence[tuple[str, float]],
-    split_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/validation/test assignment: label each row by
     where its hash-uniform falls in the cumulative split fractions.
@@ -162,7 +161,7 @@ def hash_split(
         bounds.append((name, cum))
     for name, bound in reversed(bounds):
         expr = F.when(uniform < F.lit(bound), F.lit(name)).otherwise(expr)
-    return df.withColumn(split_col, expr)
+    return df.withColumn("split", expr)
 
 
 def stratified_sample(
@@ -198,10 +197,7 @@ def leakage_safe_split(
     df: DataFrame,
     splits: Sequence[tuple[str, float]],
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     salt: int = 0,
-    split_col: str = "split",
 ) -> DataFrame:
     """Group-holdout train/validation/test split: every EXACT-DUPLICATE
     group (md5 content fingerprint, the engine's whole-doc dedup key)
@@ -215,7 +211,7 @@ def leakage_safe_split(
     Lee et al. 2022 §6 quantify on duplicated eval sets).
 
     Adds ``group_id`` (canonical min id over the fingerprint group),
-    ``group_size``, and ``split_col``. One shuffle, on the fingerprint;
+    ``group_size``, and ``split``. One shuffle, on the fingerprint;
     the assignment itself is the row-local codegen CASE of
     :func:`hash_split` over ``uniform_affine(group_id)``, so it stays
     reproducible in SQL and stable under any partitioning. Skew is
@@ -226,14 +222,12 @@ def leakage_safe_split(
 
     w = Window.partitionBy("__fp")
     grouped = (
-        df.withColumn("__fp", fingerprint_md5(F.col(text_col)))
-        .withColumn("group_id", F.min(id_col).over(w))
+        df.withColumn("__fp", fingerprint_md5(F.col("text")))
+        .withColumn("group_id", F.min("doc_id").over(w))
         .withColumn("group_size", F.count(F.lit(1)).over(w))
         .drop("__fp")
     )
-    return hash_split(
-        grouped, uniform_affine(F.col("group_id"), salt=salt), splits, split_col
-    )
+    return hash_split(grouped, uniform_affine(F.col("group_id"), salt=salt), splits)
 
 
 def assign_shard(key: Column | str, n_shards: int, salt: int = 0) -> Column:
@@ -297,7 +291,7 @@ def weighted_sample_without_replacement(
 
 
 def build_reservoir_state(
-    df: DataFrame, keys: Sequence[str], item: str, n: int, salt: int = 0
+    df: DataFrame, keys: Sequence[str], item: str, n: int
 ) -> DataFrame:
     """Mergeable per-key uniform RESERVOIR: the ``n`` rows with the
     smallest deterministic priority per key group, priority =
@@ -319,7 +313,7 @@ def build_reservoir_state(
     100 TB shape: one shuffle on the keys with a per-key sort; merges
     move only ≤ 2n rows per key.
     """
-    pri = uniform_affine(F.col(item), salt)
+    pri = uniform_affine(F.col(item))
     base = df.select(
         *keys, F.col(item).alias("state_item"), pri.alias("state_pri")
     )

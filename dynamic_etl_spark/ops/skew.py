@@ -17,11 +17,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, buckets: int, salt_col: str = "__salt") -> DataFrame:
+def with_salt(df: DataFrame, buckets: int) -> DataFrame:
     """Deterministic per-row salt in [0, buckets): derived from the whole
     row's hash, not rand() (reproducible at any parallelism)."""
     return df.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(buckets))
+        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(buckets))
     )
 
 
@@ -30,29 +30,22 @@ def salted_join(
     dim: DataFrame,
     on: Sequence[str],
     buckets: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-proof equi-join: the fact side gets a row-hash salt, the dim
+    """Skew-proof inner equi-join: the fact side gets a row-hash salt, the dim
     side is REPLICATED ``buckets`` times (explode of the salt range), and
     the join key becomes (key, salt) — a hot fact key now lands on
     ``buckets`` different reducers instead of one.
 
-    Result is exactly the unsalted join for fact-preserving modes.
-    Right/full-outer are rejected: an unmatched dim row exists ``buckets``
-    times after replication and would be emitted once per copy.
-    Replication multiplies the dim shuffle volume by ``buckets``: use for
+    Result is exactly the unsalted inner join (a right/full-outer join
+    would not be: an unmatched dim row exists ``buckets`` times after
+    replication and would be emitted once per copy). Replication multiplies the dim shuffle volume by ``buckets``: use for
     moderate dims that are too big to broadcast but far smaller than the
     fact side.
     """
-    if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
-        raise ValueError(
-            f"salted_join supports fact-preserving modes only, not {how!r} "
-            "(replicated dim rows would duplicate in right/full outer)"
-        )
     keys = list(on)
     salted_fact = with_salt(fact, buckets)
     replicated = dim.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
     ).withColumn("__salt", F.col("__salt").cast("bigint"))
-    out = salted_fact.join(replicated, [*keys, "__salt"], how)
+    out = salted_fact.join(replicated, [*keys, "__salt"])
     return out.drop("__salt")

@@ -38,8 +38,6 @@ from dynamic_etl_spark.ops.text import tokens
 def duplicated_span_stats(
     df: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
     """Per-document duplicated-span profile + cleaned text.
@@ -58,14 +56,14 @@ def duplicated_span_stats(
     -> explode merged spans to covered positions -> anti-join the token
     stream -> ordered re-assembly. The merge window's orderBy is gpos,
     unique per document (total order per repo rule)."""
-    base = _tokenized(df, id_col, text_col)
-    grams = _positional_grams(base, id_col, k)
+    base = _tokenized(df, "doc_id", "text")
+    grams = _positional_grams(base, "doc_id", k)
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__occ"))
     dup_starts = (
         grams.join(counts.filter(F.col("__occ") >= 2), "gram")
-        .select(id_col, "gpos")
+        .select("doc_id", "gpos")
     )
-    return span_stats_from_starts(base, dup_starts, id_col=id_col, k=k)
+    return span_stats_from_starts(base, dup_starts, id_col="doc_id", k=k)
 
 
 def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -103,9 +101,6 @@ def contaminated_span_stats(
     df: DataFrame,
     benchmark: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_text_col: str = "text",
     k: int = 5,
 ) -> DataFrame:
     """Surgical span-level decontamination: ExactSubstr's window-merge
@@ -128,19 +123,19 @@ def contaminated_span_stats(
     text column — just the distinct gram SET is kept, so no id column is
     required of it (r7 review: demanding the corpus's id_col there was a
     hidden precondition the computation never used)."""
-    base = _tokenized(df, id_col, text_col)
-    bench_toks = benchmark.select(tokens(F.col(bench_text_col)).alias("__toks"))
+    base = _tokenized(df, "doc_id", "text")
+    bench_toks = benchmark.select(tokens(F.col("text")).alias("__toks"))
     bench_grams = (
         bench_toks.filter(F.size("__toks") >= k)
         .select(F.explode(gram_seq_pretokenized(F.col("__toks"), k)).alias("gram"))
         .distinct()
     )
     dup_starts = (
-        _positional_grams(base, id_col, k)
+        _positional_grams(base, "doc_id", k)
         .join(F.broadcast(bench_grams), "gram", "leftsemi")
-        .select(id_col, "gpos")
+        .select("doc_id", "gpos")
     )
-    return span_stats_from_starts(base, dup_starts, id_col=id_col, k=k)
+    return span_stats_from_starts(base, dup_starts, id_col="doc_id", k=k)
 
 
 def span_stats_from_starts(

@@ -106,8 +106,7 @@ def fingerprint_md5(c: Column) -> Column:
     return F.md5(normalize_for_fingerprint(c))
 
 
-def winnow_fingerprints(df, *, id_col: str = "doc_id", text_col: str = "text",
-                        k: int = 3, w: int = 4):
+def winnow_fingerprints(df, *, k: int = 3, w: int = 4):
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting").
 
@@ -133,19 +132,18 @@ def winnow_fingerprints(df, *, id_col: str = "doc_id", text_col: str = "text",
     where fp_digest = md5 of the ','-joined ascending fingerprint set.
     """
     return (
-        winnow_fp_rows(df, id_col=id_col, text_col=text_col, k=k, w=w)
-        .groupBy(id_col)
+        winnow_fp_rows(df, k=k, w=w)
+        .groupBy("doc_id")
         .agg(F.sort_array(F.collect_set("fp")).alias("__fps"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.size("__fps").alias("n_fingerprints"),
             F.md5(F.concat_ws(",", F.col("__fps"))).alias("fp_digest"),
         )
     )
 
 
-def winnow_fp_rows(df, *, id_col: str = "doc_id", text_col: str = "text",
-                   k: int = 3, w: int = 4):
+def winnow_fp_rows(df, *, k: int = 3, w: int = 4):
     """The (id, fp) DISTINCT selected-fingerprint rows behind
     :func:`winnow_fingerprints` — factored out so pair mining can join
     on raw fingerprints while the digest query keeps its aggregate
@@ -155,17 +153,17 @@ def winnow_fp_rows(df, *, id_col: str = "doc_id", text_col: str = "text",
     from dynamic_etl_spark.ops.lsh import word_gram_seq
 
     g = df.select(
-        F.col(id_col),
-        F.posexplode(word_gram_seq(F.col(text_col), k)).alias("pos", "gram"),
+        F.col("doc_id"),
+        F.posexplode(word_gram_seq(F.col("text"), k)).alias("pos", "gram"),
     ).withColumn("h", F.md5("gram"))
-    part = Window.partitionBy(id_col)
-    frame = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
+    part = Window.partitionBy("doc_id")
+    frame = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
     return (
         g.withColumn("n_grams", F.count(F.lit(1)).over(part))
         .withColumn("fp", F.min("h").over(frame))
         # full windows only (plus the clamped single window when n < w)
         .filter(F.col("pos") <= F.greatest(F.col("n_grams") - w, F.lit(0)))
-        .select(id_col, "fp")
+        .select("doc_id", "fp")
         .distinct()
     )
 
@@ -173,8 +171,6 @@ def winnow_fp_rows(df, *, id_col: str = "doc_id", text_col: str = "text",
 def winnow_overlap_pairs(
     df,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     w: int = 4,
     min_shared: int = 2,
@@ -216,17 +212,17 @@ def winnow_overlap_pairs(
     # subtrees). The checkpointed rows are (id, fp) — a fraction of the
     # input text's bytes at any scale (one fingerprint per w-window).
     fps = winnow_fp_rows(
-        df, id_col=id_col, text_col=text_col, k=k, w=w
+        df, k=k, w=w
     ).localCheckpoint()
-    totals = fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("__n"))
+    totals = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n"))
     joinable = fps
     if max_df is not None:
         dfreq = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("__df"))
         joinable = fps.join(
             dfreq.filter(F.col("__df") <= max_df).select("fp"), on="fp"
         )
-    a = joinable.select(F.col(id_col).alias("id_a"), "fp")
-    b = joinable.select(F.col(id_col).alias("id_b"), "fp")
+    a = joinable.select(F.col("doc_id").alias("id_a"), "fp")
+    b = joinable.select(F.col("doc_id").alias("id_b"), "fp")
     pairs = (
         a.join(b, on="fp")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -234,8 +230,8 @@ def winnow_overlap_pairs(
         .agg(F.count(F.lit(1)).alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)
     )
-    na = totals.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
-    nb = totals.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
+    na = totals.select(F.col("doc_id").alias("id_a"), F.col("__n").alias("__na"))
+    nb = totals.select(F.col("doc_id").alias("id_b"), F.col("__n").alias("__nb"))
     return (
         pairs.join(na, "id_a")
         .join(nb, "id_b")

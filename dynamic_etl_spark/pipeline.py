@@ -13,7 +13,7 @@ schedule; the intra-day ordering is no longer implicit.
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from graphlib import TopologicalSorter
 from typing import Any
 
@@ -38,8 +38,8 @@ class Step:
 
 @dataclass
 class RunResult:
-    order: list[str] = field(default_factory=list)
-    outputs: dict[str, Any] = field(default_factory=dict)
+    order: list[str]
+    outputs: dict[str, Any]
 
 
 class Pipeline:
@@ -61,7 +61,7 @@ class Pipeline:
         ts = TopologicalSorter(
             {name: set(s.depends_on) for name, s in self.steps.items()}
         )
-        result = RunResult(outputs=dict(initial_context or {}))
+        result = RunResult(order=[], outputs=dict(initial_context or {}))
         for name in ts.static_order():
             step = self.steps[name]
             for attempt in range(step.retries + 1):

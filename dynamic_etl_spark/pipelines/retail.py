@@ -207,15 +207,22 @@ def extract_pipeline(
             .filter(F.col("date_id") == date_id)
         )
         out = str(Path(current) / f"fact_sales_{date_id}")
-        write_csv(day, out, sep=",", single_file=True)
+        write_csv(day, out, sep=",")
         return out
 
     def extract_snapshot(ctx):
-        facts = read_table(spark, _table(source_root, "fact_sales")).filter(
-            F.col("date_id") == date_id
+        # both sides carry a unit_price: alias them apart as the reference
+        # does (extract_sales_snapshot.py:32-96), so the header has no
+        # repeated name
+        facts = (
+            read_table(spark, _table(source_root, "fact_sales"))
+            .filter(F.col("date_id") == date_id)
+            .withColumnRenamed("unit_price", "sales_unit_price")
         )
         stores = read_table(spark, _table(source_root, "dim_store"))
-        products = read_table(spark, _table(source_root, "dim_product"))
+        products = read_table(spark, _table(source_root, "dim_product")).withColumnRenamed(
+            "unit_price", "product_unit_price"
+        )
         dists = read_table(spark, _table(source_root, "dim_distributor"))
         cal = read_table(spark, _table(source_root, "dim_date"))
         snap = (
@@ -230,21 +237,21 @@ def extract_pipeline(
             .sortWithinPartitions("sales_id")
         )
         out = str(Path(snapshots) / f"sales_snapshot_{date_id}")
-        write_csv(snap, out, sep="|", single_file=True)
+        write_csv(snap, out, sep="|")
         return out
 
     def read_snapshot(ctx):
-        path = latest_file(snapshots, suffix="", prefix="sales_snapshot_")
+        path = latest_file(snapshots, "sales_snapshot_")
         return read_csv_schema_on_read(spark, path, sep="|").count()
 
     def read_current(ctx):
-        path = latest_file(current, suffix="", prefix="fact_sales_")
+        path = latest_file(current, "fact_sales_")
         return read_csv_schema_on_read(spark, path, sep=",").count()
 
     def read_archive(ctx):
         if not Path(archive).exists() or not any(Path(archive).iterdir()):
             return 0
-        path = latest_file(archive, suffix="", prefix="fact_sales_")
+        path = latest_file(archive, "fact_sales_")
         return read_csv_schema_on_read(spark, path, sep=",").count()
 
     return Pipeline(
@@ -327,9 +334,7 @@ def validation_pipeline(
         return lambda: read_table(spark, _table(source_root, name))
 
     def snapshot_df():
-        path = latest_file(
-            str(Path(extract_root) / "snapshots"), suffix="", prefix="sales_snapshot_"
-        )
+        path = latest_file(str(Path(extract_root) / "snapshots"), "sales_snapshot_")
         return read_csv_schema_on_read(spark, path, sep="|")
 
     return Pipeline(
@@ -424,7 +429,7 @@ def dw_load_pipeline(
         return step
 
     def load_fact(ctx):
-        queue = FileQueue(current, processed_log, prefix="fact_sales_", suffix="")
+        queue = FileQueue(current, processed_log, "fact_sales_")
         dims = {
             n: read_table(spark, _table(dw_root, n))
             for n in ("dim_store", "dim_product", "dim_distributor")
@@ -507,35 +512,25 @@ def retail_daily_run(
     root: str,
     *,
     date_id: int,
-    n_stores: int = 50,
-    n_products: int = 100,
-    n_distributors: int = 20,
-    rows_per_day: int = 1000,
-    min_dim_rows: int = 1,
-    min_date_rows: int = 1,
-    min_fact_rows: int = 1,
 ) -> dict:
     """Run the four pipelines in the reference's daily order with
     STRUCTURAL sequencing (each stage runs only after the previous
     returned) instead of the reference's wall-clock cadence. Returns
-    {pipeline_name: RunResult}. Threshold defaults are permissive so a
-    dev-sized day passes; production callers pass the DAG's 1000/700."""
+    {pipeline_name: RunResult}. The day is dev-sized (50 stores, 100
+    products, 20 distributors, 1000 fact rows) and its row-count gates
+    are permissive (1 row); production runs the four factories with the
+    DAG's 1000/700 thresholds (``production_thresholds``)."""
     source_root = _table(root, "source")
     extract_root = _table(root, "extract")
     dw_root = _table(root, "dw")
     results = {}
-    gen = generation_pipeline(
-        spark, source_root, date_id=date_id, n_stores=n_stores,
-        n_products=n_products, n_distributors=n_distributors,
-        rows_per_day=rows_per_day,
-    )
+    gen = generation_pipeline(spark, source_root, date_id=date_id)
     results[gen.name] = gen.run()
     ext = extract_pipeline(spark, source_root, extract_root, date_id=date_id)
     results[ext.name] = ext.run()
     val = validation_pipeline(
         spark, source_root, extract_root, date_id=date_id,
-        min_dim_rows=min_dim_rows, min_date_rows=min_date_rows,
-        min_fact_rows=min_fact_rows,
+        min_dim_rows=1, min_date_rows=1, min_fact_rows=1,
     )
     results[val.name] = val.run()
     load = dw_load_pipeline(spark, source_root, extract_root, dw_root)

@@ -873,7 +873,7 @@ def exact_blocked_pair_source(frame: DataFrame) -> DataFrame:
     )
 
 
-def lsh_pair_source(frame: DataFrame, hash_mode: str = "md5") -> DataFrame:
+def lsh_pair_source(frame: DataFrame) -> DataFrame:
     """Production near-dup pair source: banded MinHash-LSH candidates +
     exact-Jaccard verify (ops/lsh.minhash_near_dup_pairs), restricted to
     pairs sharing a (lang, source) block to match the exact tier's
@@ -889,7 +889,7 @@ def lsh_pair_source(frame: DataFrame, hash_mode: str = "md5") -> DataFrame:
     from dynamic_etl_spark.ops.lsh import minhash_near_dup_pairs
 
     pairs = minhash_near_dup_pairs(
-        frame, "doc_id", "text", threshold=0.5, hash_mode=hash_mode
+        frame, "doc_id", "text", threshold=0.5, hash_mode="md5"
     ).select("id_a", "id_b")
     meta = frame.select("doc_id", "lang", "source")
     return (

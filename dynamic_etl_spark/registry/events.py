@@ -1594,9 +1594,9 @@ ORDER BY event_type, priority, event_id
 """
 
 
-def _mg_sql(src: str, out: str, k: int = 8) -> str:
-    """One Misra-Gries compression round as a CTE pair (ranked + output):
-    subtract the (k+1)-th largest counter per key, drop non-positive."""
+def _mg_sql(src: str, out: str) -> str:
+    """One Misra-Gries compression round (k = 8) as a CTE pair (ranked +
+    output): subtract the 9th largest counter per key, drop non-positive."""
     return f"""{out}_r AS (
   SELECT *,
          row_number() OVER (PARTITION BY event_type
@@ -1606,7 +1606,7 @@ def _mg_sql(src: str, out: str, k: int = 8) -> str:
 {out} AS (
   SELECT event_type, state_item, state_cnt - off AS state_cnt
   FROM (
-    SELECT *, COALESCE(MAX(CASE WHEN rn = {k + 1} THEN state_cnt END)
+    SELECT *, COALESCE(MAX(CASE WHEN rn = 9 THEN state_cnt END)
                  OVER (PARTITION BY event_type), 0) AS off
     FROM {out}_r
   )

@@ -31,7 +31,7 @@ _SQL_TOKENS = "list_filter(string_split_regex(lower(text), '\\s+'), w -> w <> ''
 _SQL_NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
 
-def sql_positional_grams(k: int, src: str = "base") -> str:
+def sql_positional_grams(k: int) -> str:
     """Shared CTE body: (doc_id, gpos, gram) for every k-token window of
     ``src(doc_id, toks)`` — the DuckDB twin of ops/lsh.gram_seq_pretokenized
     with positions, single-sourced so the span-removal family's oracles
@@ -42,7 +42,7 @@ def sql_positional_grams(k: int, src: str = "base") -> str:
          unnest(range(0, len(toks) - {k} + 1)) AS gpos,
          unnest(list_transform(range(0, len(toks) - {k} + 1),
                 i -> array_to_string(toks[i + 1 : i + {k}], ' '))) AS gram
-  FROM {src} WHERE len(toks) >= {k}"""
+  FROM base WHERE len(toks) >= {k}"""
 
 
 def sql_span_tail(k: int) -> str:
@@ -687,9 +687,7 @@ def minhash_near_dup_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sql_minhash_band_ctes(
-    src: str, prefix: str = "", num_hashes: int = 32, bands: int = 8
-) -> str:
+def sql_minhash_band_ctes(src: str, prefix: str = "") -> str:
     """{prefix}h/{prefix}sig/{prefix}bands CTE chain — the DuckDB twin
     of md5-mode ops/lsh.minhash_banded_rows over ``src(doc_id, grams)``,
     generated from the SAME affine constants the Spark side uses
@@ -698,16 +696,16 @@ def sql_minhash_band_ctes(
     lets one oracle band TWO corpora (the incremental admission query's
     store vs batch)."""
     P = L._MINHASH_P
-    rows_per = num_hashes // bands
+    rows_per = L.NUM_HASHES // L.BANDS
     mins = ",\n         ".join(
         f"MIN(({a} * h + {b}) % {P}) AS m{i}"
-        for i, (a, b) in ((i, L._affine_params(i)) for i in range(num_hashes))
+        for i, (a, b) in ((i, L._affine_params(i)) for i in range(L.NUM_HASHES))
     )
     band_selects = "\n  UNION ALL\n".join(
         f"  SELECT doc_id, {b} AS band_idx, md5(concat_ws(':', {b}, "
         + ", ".join(f"m{b * rows_per + j}" for j in range(rows_per))
         + f")) AS band_hash FROM {prefix}sig"
-        for b in range(bands)
+        for b in range(L.BANDS)
     )
     return f"""{prefix}h AS (
   SELECT doc_id, ('0x' || substr(md5(g), 1, 8))::BIGINT % {P} AS h
@@ -723,13 +721,11 @@ def sql_minhash_band_ctes(
 )"""
 
 
-def sql_minhash_cand_ctes(
-    src: str = "sh", num_hashes: int = 32, bands: int = 8
-) -> str:
+def sql_minhash_cand_ctes(src: str = "sh") -> str:
     """:func:`sql_minhash_band_ctes` plus the self-join candidate CTE —
     the single-corpus shape shared by the standalone exacthash query and
     the LSH-configured curation cascade (registry/curation.py)."""
-    return f"""{sql_minhash_band_ctes(src, "", num_hashes, bands)},
+    return f"""{sql_minhash_band_ctes(src)},
 cand AS MATERIALIZED (
   SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
   FROM bands a JOIN bands b
@@ -1812,7 +1808,7 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     return train_bpe(docs, "text", n_merges=16, min_count=2).orderBy("rank")
 
 
-def _sql_bpe_vt_cte(n_merges: int = 16, min_count: int = 2) -> str:
+def _sql_bpe_vt_cte() -> str:
     """The recursive vocab-trajectory CTE chain shared by BOTH BPE
     oracles: ``vt(it, word, freq, syms)`` holds the word-frequency
     table's symbol state after each merge round. The encode oracle reads
@@ -1838,7 +1834,7 @@ vt(it, word, freq, syms) AS (
   SELECT * FROM (
     WITH base AS (
       SELECT it, word, freq, generate_subscripts(syms, 1) AS pos, unnest(syms) AS sym
-      FROM vt WHERE it < {n_merges}
+      FROM vt WHERE it < 16
     ),
     best AS (
       SELECT l, r FROM (
@@ -1846,7 +1842,7 @@ vt(it, word, freq, syms) AS (
                ROW_NUMBER() OVER (ORDER BY SUM(a.freq) DESC, a.sym, b.sym) AS rn
         FROM base a JOIN base b ON a.word = b.word AND b.pos = a.pos + 1
         GROUP BY a.sym, b.sym
-      ) WHERE rn = 1 AND cnt >= {min_count}
+      ) WHERE rn = 1 AND cnt >= 2
     ),
     marked AS (
       SELECT p.it, p.word, p.freq, p.pos, p.sym,

@@ -347,11 +347,11 @@ def approx_distinct_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return finalize_hll_md5_state(state, p=10).orderBy("col_name")
 
 
-def sql_hll_registers(src: str, key: str, value: str, p: int = 10) -> str:
+def sql_hll_registers(src: str, key: str, value: str) -> str:
     """DuckDB twin of build_hll_md5_state over ``{src}({key}, {value})``
     — generated beside the Spark op so the hash slices, the bucket
     modulus, and the bin()-length rho can never drift apart."""
-    m = 1 << p
+    m = 1 << 10
     return f"""(
   SELECT {key}, bucket, MAX(rho) AS max_rho
   FROM (
@@ -367,20 +367,20 @@ def sql_hll_registers(src: str, key: str, value: str, p: int = 10) -> str:
 )"""
 
 
-def sql_hll_finalize(registers: str, key: str, p: int = 10) -> str:
+def sql_hll_finalize(registers: str, key: str) -> str:
     """DuckDB twin of finalize_hll_md5_state: integer register sum (the
     1::BIGINT << shift DuckDB allows where Spark needs the array lookup),
     then the one-division estimate from the SAME embedded constant."""
     from dynamic_etl_spark.ops.agg import _HLL_MD5_RMAX, hll_md5_scale_const
 
-    m = 1 << p
+    m = 1 << 10
     return f"""
 SELECT {key},
        CAST(COUNT(*) AS BIGINT) AS buckets_used,
        CAST(SUM(1::BIGINT << ({_HLL_MD5_RMAX} - max_rho))
             + ({m} - COUNT(*)) * {1 << _HLL_MD5_RMAX} AS BIGINT)
          AS sum_inv_scaled,
-       {hll_md5_scale_const(p)!r} / CAST(
+       {hll_md5_scale_const()!r} / CAST(
          SUM(1::BIGINT << ({_HLL_MD5_RMAX} - max_rho))
          + ({m} - COUNT(*)) * {1 << _HLL_MD5_RMAX} AS DOUBLE)
          AS raw_estimate

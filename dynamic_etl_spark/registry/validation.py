@@ -471,7 +471,7 @@ def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_ks_drift_binned(
-    spark: SparkSession, sf_dir: str, bin_width: float = KS_BIN_WIDTH
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Fixed-grid scale path of :func:`events_ks_drift` (VERDICT r6 #2):
     values collapse to ``floor(value / KS_BIN_WIDTH)`` buckets BEFORE the
@@ -491,7 +491,7 @@ def events_ks_drift_binned(
     difference. The exact form IS this query's oracle at validator
     scale: at bin width -> 0 the two coincide (pinned in
     tests/test_validate.py)."""
-    bucket = F.floor(F.col("value").cast("double") / F.lit(bin_width)).cast("long")
+    bucket = F.floor(F.col("value").cast("double") / F.lit(KS_BIN_WIDTH)).cast("long")
     return _ks_fold(
         _ks_side_counts(t(spark, sf_dir, "events"), bucket),
         with_bins=True,

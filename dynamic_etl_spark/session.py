@@ -6,8 +6,9 @@ contract) needs:
 - AQE on (runtime join-strategy switch, partition coalescing, skew-join
   handling) — at 100 TB the static plan is never right; AQE re-plans from
   actual shuffle statistics.
-- shuffle partitions sized to the local core count (overridable); on a real
-  cluster this should be ~2-3x total executor cores — AQE coalesces down.
+- shuffle partitions sized to the local core count (overridable through
+  ``SPARK_GRAFT_EXTRA_CONF``); on a real cluster this should be ~2-3x
+  total executor cores — AQE coalesces down.
 - Arrow on for the few Pandas-UDF operators (multimodal decode).
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive UTC) and are cluster-location-independent.
@@ -47,15 +48,16 @@ def get_spark(
     app_name: str = "dynamic-etl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     # parsed first: a malformed pair must fail before any builder state
     # (shared across builders in PySpark) is touched
     env_conf = _env_conf()
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(cpus))
+    # the environment overrides the argument here as it does every other
+    # builder conf, so the re-apply below keeps the value it gave
+    partitions = env_conf.get(
+        "spark.sql.shuffle.partitions", str(shuffle_partitions or cpus)
     )
     builder = (
         SparkSession.builder.appName(app_name)
@@ -63,7 +65,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", partitions)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
@@ -78,7 +80,7 @@ def get_spark(
     # environment overrides (see _env_conf) apply last. Local defaults
     # stay exactly as above so bench numbers remain driver-comparable;
     # production values belong in the deployment environment.
-    for key, value in {**(extra_conf or {}), **env_conf}.items():
+    for key, value in env_conf.items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()
     # getOrCreate silently ignores builder configs when a session already
@@ -86,7 +88,7 @@ def get_spark(
     # an oracle-parity requirement; shuffle sizing matters for plan shape)
     # are re-applied via conf.set, which works post-creation.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     spark.sparkContext.setLogLevel("WARN")
     _silence_bounded_window_warning(spark)
@@ -193,7 +195,7 @@ def run_concurrently(*thunks):
         return [f.result() for f in futures]
 
 
-def ensure_fanout_parallelism(df, factor: int = 1):
+def ensure_fanout_parallelism(df):
     """Guarantee cluster-wide parallelism BEFORE a compute-heavy fan-out
     (shingling, signature building, media decode).
 
@@ -225,7 +227,7 @@ def ensure_fanout_parallelism(df, factor: int = 1):
     fan-out whose per-row cost dwarfs one exchange of an under-split
     input.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism * factor
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         current = df._jdf.queryExecution().toRdd().getNumPartitions()
     except Exception:

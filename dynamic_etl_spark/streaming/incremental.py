@@ -23,66 +23,39 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 
-def file_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str = "parquet",
-    options: dict[str, str] | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """S8 source half: an exactly-once incremental file scan.
-
-    ``maxFilesPerTrigger`` reproduces the reference's one-file-per-run
-    pacing when set to 1 (each micro-batch = one file, committed
-    atomically with the checkpoint ledger entry).
-    """
-    reader = spark.readStream.format(fmt).schema(schema)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path)
+def file_stream(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """S8 source half: an exactly-once incremental parquet file scan."""
+    return spark.readStream.format("parquet").schema(schema).load(path)
 
 
-def windowed_aggregate(
-    df: DataFrame,
-    ts_col: str,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Watermarked tumbling-window aggregation — the streaming twin of
-    registry/events.events_tumbling_window. The watermark bounds state:
-    windows older than max(event time) - watermark are finalized and
-    evicted, so state size is O(active windows), not O(history)."""
+def windowed_aggregate(df: DataFrame, ts_col: str) -> DataFrame:
+    """Watermarked one-hour tumbling-window aggregation — the streaming
+    twin of registry/events.events_tumbling_window. The 10-minute
+    watermark bounds state: windows older than max(event time) - 10
+    minutes are finalized and evicted, so state size is O(active
+    windows), not O(history)."""
     return (
-        df.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), *group_cols)
+        df.withWatermark(ts_col, "10 minutes")
+        .groupBy(F.window(ts_col, "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), *group_cols, "n_events", "total_value")
+        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
 
 
-def dedup_within_watermark(
-    df: DataFrame,
-    keys: tuple[str, ...] | list[str],
-    ts_col: str = "ts",
-    delay: str = "1 hour",
-) -> DataFrame:
+def dedup_within_watermark(df: DataFrame, keys: tuple[str, ...] | list[str]) -> DataFrame:
     """Row-level exactly-once on top of the file queue's file-level
     exactly-once: drops re-deliveries of the same key (retried producer
-    batches, overlapping extracts) arriving within ``delay`` of each
-    other — the streaming twin of D1 dedup-keep-first.
+    batches, overlapping extracts) whose ``ts`` lies within one hour of
+    each other — the streaming twin of D1 dedup-keep-first.
 
     State is keyed by ``keys`` and EVICTED once the watermark passes a
     row's event time (unlike plain ``dropDuplicates``, whose state grows
     without bound on an endless stream). The contract at 100 TB: state is
-    O(keys arriving within one delay window); a duplicate older than
-    ``delay`` slips through, which is the documented at-least-once
+    O(keys arriving within one hour); a duplicate older than that slips
+    through, which is the documented at-least-once
     residue an idempotent sink absorbs.
     """
-    return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(list(keys))
+    return df.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(list(keys))
 
 
 def interval_stream_join(
@@ -93,54 +66,45 @@ def interval_stream_join(
     right_key: str,
     left_ts: str,
     right_ts: str,
-    within: str = "30 minutes",
 ) -> DataFrame:
     """Watermarked stream-stream interval join: pair each left row with
     the right rows for the same key whose event time falls in
-    ``[left_ts, left_ts + within]`` — click-to-purchase attribution,
+    ``[left_ts, left_ts + 30 minutes]`` — click-to-purchase attribution,
     request/response correlation.
 
-    Both sides carry a watermark equal to ``within`` and the join
+    Both sides carry a 30-minute watermark and the join
     condition bounds right's time against left's, which is exactly what
     Structured Streaming needs to EVICT state: each side buffers only
-    rows younger than the watermark, so state is O(rate x within), not
+    rows younger than the watermark, so state is O(rate x 30 min), not
     O(stream). Without the time bound the state store grows forever —
     the unbounded join is rejected for append output. Key/ts columns are
     named per side; any remaining name collisions are the caller's to
     pre-alias, as with any Spark join.
     """
-    l_wm = left.withWatermark(left_ts, within)
-    r_wm = right.withWatermark(right_ts, within)
+    l_wm = left.withWatermark(left_ts, "30 minutes")
+    r_wm = right.withWatermark(right_ts, "30 minutes")
     cond = (
         (l_wm[left_key] == r_wm[right_key])
         & (r_wm[right_ts] >= l_wm[left_ts])
-        & (r_wm[right_ts] <= l_wm[left_ts] + F.expr(f"INTERVAL {within}"))
+        & (r_wm[right_ts] <= l_wm[left_ts] + F.expr("INTERVAL 30 minutes"))
     )
     return l_wm.join(r_wm, cond, "inner")
 
 
-def run_available_now(
-    df: DataFrame,
-    checkpoint_dir: str,
-    query_name: str,
-    output_mode: str = "complete",
-    fmt: str = "memory",
-    path: str | None = None,
-    timeout_sec: int = 120,
-) -> StreamingQuery:
-    """Drain everything currently pending, then stop (the reference's
-    daily-batch cadence with streaming exactly-once bookkeeping). Blocks
-    until the drain completes (:func:`await_drain`)."""
-    writer = (
-        df.writeStream.format(fmt)
-        .outputMode(output_mode)
+def run_available_now(df: DataFrame, checkpoint_dir: str, query_name: str) -> StreamingQuery:
+    """Drain everything currently pending into the in-memory table
+    ``query_name`` (complete output mode), then stop — the reference's
+    daily-batch cadence with streaming exactly-once bookkeeping. Blocks
+    until the drain completes (:func:`await_drain`, 120 s)."""
+    query = (
+        df.writeStream.format("memory")
+        .outputMode("complete")
         .queryName(query_name)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
+        .start()
     )
-    if path is not None:
-        writer = writer.option("path", path)
-    return await_drain(writer.start(), timeout_sec, f"query {query_name!r}")
+    return await_drain(query, 120, f"query {query_name!r}")
 
 
 def await_drain(query: StreamingQuery, timeout_sec: float, name: str) -> StreamingQuery:

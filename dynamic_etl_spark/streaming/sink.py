@@ -86,8 +86,7 @@ def _heal(spark, id_col: str, specs) -> list[DataFrame]:
     return stores
 
 
-def _frozen_centers(spark, root: str, sources, id_col: str, vec_col: str,
-                    n_cells: int, seed: int, max_iter: int):
+def _frozen_centers(spark, root: str, sources, id_col: str, vec_col: str):
     """The committed semantic centroid fit at ``root``, or — none yet —
     a fit on the first non-empty frame of ``sources``, committed before
     anything depends on it. None while every source is empty."""
@@ -101,7 +100,7 @@ def _frozen_centers(spark, root: str, sources, id_col: str, vec_col: str,
         return centers_from_rows(read_versioned(spark, root))
     for src in sources:
         if not src.isEmpty():
-            centers = fit_semantic_centers(src, id_col, vec_col, n_cells, seed, max_iter)
+            centers = fit_semantic_centers(src, id_col, vec_col)
             write_versioned(centers_to_rows(spark, centers), root)
             return centers
     return None
@@ -124,14 +123,12 @@ def run_streaming_merge(
     *,
     natural_key: Sequence[str],
     surrogate_col: str,
-    exact_cols: Sequence[str] = (),
-    tolerance_cols: Sequence[str] = (),
-    batch_order_col: str | None = None,
-    timeout_sec: int = 120,
+    tolerance_cols: Sequence[str],
 ) -> StreamingQuery:
     """Continuously upsert a parquet table from a stream of change rows:
     every non-empty micro-batch is one :func:`ops.merge.scd1_merge_into`
-    of ``table_path`` (its parameters pass through). Drains with
+    of ``table_path`` (its parameters pass through; a micro-batch that
+    repeats a natural key is refused, as that merge refuses it). Drains with
     ``Trigger.AvailableNow`` and blocks, matching the repo's
     batch-cadence convention; remove the trigger for a continuous
     deployment.
@@ -141,10 +138,10 @@ def run_streaming_merge(
         if not batch_df.isEmpty():
             scd1_merge_into(
                 table_path, batch_df, natural_key, surrogate_col,
-                exact_cols, tolerance_cols, batch_order_col,
+                tolerance_cols=tolerance_cols,
             )
 
-    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "merge")
+    return _drain(stream_df, _apply, checkpoint_dir, 120, "merge")
 
 
 def run_streaming_dedup(
@@ -155,11 +152,6 @@ def run_streaming_dedup(
     *,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    timeout_sec: int = 240,
 ) -> StreamingQuery:
     """Continuously admit a document stream into a deduplicated corpus:
     each micro-batch runs ``ops/lsh.incremental_near_dup_merge`` against
@@ -187,9 +179,7 @@ def run_streaming_dedup(
     spark = stream_df.sparkSession
 
     def _sigs(docs: DataFrame) -> DataFrame:
-        return minhash_banded_rows(
-            docs, id_col, text_col, num_hashes, bands, shingle_k
-        )
+        return minhash_banded_rows(docs, id_col, text_col)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         # zero-token docs can never collide (no shingles -> no signature
@@ -206,14 +196,12 @@ def run_streaming_dedup(
         corpus = _read_or_empty(spark, corpus_root, batch_df)
         (store,) = _heal(spark, id_col, [(store_root, corpus, _sigs)])
         out = incremental_near_dup_merge(
-            corpus, batch_df, id_col, text_col,
-            threshold=threshold, num_hashes=num_hashes,
-            bands=bands, shingle_k=shingle_k, existing_banded=store,
+            corpus, batch_df, id_col, text_col, existing_banded=store
         )
         _append(corpus_root, corpus, out["accepted"])
         _append(store_root, store, out["new_banded"])
 
-    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "dedup")
+    return _drain(stream_df, _apply, checkpoint_dir, 240, "dedup")
 
 
 def run_streaming_semantic_dedup(
@@ -225,12 +213,6 @@ def run_streaming_semantic_dedup(
     *,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.95,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    seed: int = 42,
-    max_iter: int = 8,
-    timeout_sec: int = 240,
 ) -> StreamingQuery:
     """Continuously admit an EMBEDDED document stream into a
     semantically-deduplicated corpus — the SemDeDup sibling of
@@ -274,23 +256,18 @@ def run_streaming_semantic_dedup(
         if batch_df.isEmpty():
             return
         corpus = _read_or_empty(spark, corpus_root, batch_df)
-        centers = _frozen_centers(
-            spark, centers_root, (corpus, batch_df),
-            id_col, vec_col, n_cells, seed, max_iter,
-        )
+        centers = _frozen_centers(spark, centers_root, (corpus, batch_df), id_col, vec_col)
         (store,) = _heal(spark, id_col, [(
             store_root, corpus,
             lambda docs: semantic_store_rows(docs, id_col, vec_col, centers),
         )])
         out = incremental_semantic_merge(
-            corpus, batch_df, id_col, vec_col,
-            threshold=threshold, n_cells=n_cells, n_probe=n_probe,
-            seed=seed, centers=centers, existing_assigned=store,
+            corpus, batch_df, id_col, vec_col, centers=centers, existing_assigned=store
         )
         _append(corpus_root, corpus, out["accepted"])
         _append(store_root, store, out["new_assigned"])
 
-    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "semantic dedup")
+    return _drain(stream_df, _apply, checkpoint_dir, 240, "semantic dedup")
 
 
 def run_streaming_curation(
@@ -305,46 +282,21 @@ def run_streaming_curation(
     *,
     id_col: str,
     text_col: str,
-    vec_col: str | None = None,
-    lex_threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_k: int = 3,
-    hash_mode: str = "xxhash",
-    sem_threshold: float = 0.95,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    seed: int = 42,
-    max_iter: int = 8,
-    dsir_root: str | None = None,
-    dsir_target=None,
-    dsir_min_log_weight=None,
-    dsir_buckets: int = 128,
-    timeout_sec: int = 480,
+    vec_col: str,
 ) -> StreamingQuery:
     """The curation admission gate on a stream: each micro-batch runs
     ops/curation_gate.curation_gate — exact-fingerprint, banded-MinHash
-    lexical, SemDeDup semantic and, with ``dsir_root`` set, DSIR quality
-    admission; the same composition as registry/curation's composed-gate
-    queries — against persistent versioned stores, and appends the
-    per-doc tier attribution to a ledger table. This sink owns only the
-    boundary drops, the frozen fits, the commit order and crash
-    recovery.
+    lexical and SemDeDup semantic admission; the tier composition of
+    registry/curation's three-tier gate — against persistent versioned
+    stores, and appends the per-doc tier attribution to a ledger table.
+    This sink owns only the boundary drops, the frozen fits, the commit
+    order and crash recovery.
 
-    Frozen fits, each fit ONCE — on the committed corpus if it has
-    rows, else on the batch, so a replayed bootstrap refits on the same
-    rows — and committed before anything depends on it:
-    - ``centers_root``: the semantic centroid fit, on the first
-      embedded docs seen (:func:`_frozen_centers`);
-    - ``dsir_root``: the DSIR bucket-ratio table, with ``dsir_target``
-      (a Column predicate over the doc frame, e.g.
-      ``F.col("doc_id") % 4 == 0``) marking the target slice. Later
-      batches score their semantic survivors against it and admit docs
-      whose exact-decimal log weight clears ``dsir_min_log_weight``.
-      Per-doc weights depend only on the doc text and the frozen table,
-      so streamed admission equals the batch gate's on any batch split
-      (pytest-pinned). DSIR keeps no per-doc store, so there is nothing
-      to heal.
+    The semantic centroid fit at ``centers_root`` is frozen: fitted
+    ONCE, on the first embedded docs seen — the committed corpus if it
+    has any, else the batch, so a replayed bootstrap refits on the same
+    rows — and committed before anything depends on it
+    (:func:`_frozen_centers`).
 
     Per batch the commit order is:
 
@@ -382,24 +334,16 @@ def run_streaming_curation(
     store, so tier 1 re-rejects replays even for docs that have no
     embedding.
 
-    ``vec_col=None`` runs the two lexical tiers only. Pair ONE
-    checkpoint with ONE state-table family for the stream's lifetime
-    (the run_streaming_rollup rule): a fresh checkpoint renumbers
-    batches from 0, which the ledger treats as replays. Drains with
-    ``Trigger.AvailableNow`` and blocks, per the repo batch-cadence
+    Pair ONE checkpoint with ONE state-table family for the stream's
+    lifetime (the run_streaming_rollup rule): a fresh checkpoint
+    renumbers batches from 0, which the ledger treats as replays. Drains
+    with ``Trigger.AvailableNow`` and blocks, per the repo batch-cadence
     convention.
     """
     from dynamic_etl_spark.ops.ann import semantic_store_rows
     from dynamic_etl_spark.ops.curation_gate import curation_gate
     from dynamic_etl_spark.ops.lsh import minhash_banded_rows
-    from dynamic_etl_spark.ops.quality import dsir_bucket_ratios
     from dynamic_etl_spark.ops.text import fingerprint_md5, tokens
-
-    if dsir_root is not None and (dsir_target is None or dsir_min_log_weight is None):
-        raise ValueError(
-            "dsir_root requires dsir_target (the fit's target-slice "
-            "predicate) and dsir_min_log_weight (the admission threshold)"
-        )
 
     spark = stream_df.sparkSession
 
@@ -409,10 +353,7 @@ def run_streaming_curation(
         )
 
     def _sigs(docs: DataFrame) -> DataFrame:
-        return minhash_banded_rows(
-            docs, id_col, text_col, num_hashes, bands, shingle_k,
-            hash_mode=hash_mode,
-        )
+        return minhash_banded_rows(docs, id_col, text_col)
 
     def _heal_stores(corpus: DataFrame, centers):
         """Self-heal every store against the committed corpus; returns
@@ -429,28 +370,23 @@ def run_streaming_curation(
         return fp_store, lex_store, (sem[0] if sem else None)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        cols = [id_col, text_col] + ([vec_col] if vec_col else [])
-        batch_df = batch_df.select(*cols).filter(
-            F.size(tokens(F.col(text_col))) > 0
+        batch_df = (
+            batch_df.select(id_col, text_col, vec_col)
+            .filter(F.size(tokens(F.col(text_col))) > 0)
+            .withColumn(vec_col, F.when(_nonzero_norm(vec_col), F.col(vec_col)))
         )
-        if vec_col is not None:
-            batch_df = batch_df.withColumn(
-                vec_col, F.when(_nonzero_norm(vec_col), F.col(vec_col))
-            )
         if batch_df.isEmpty():
             return
         # several tiers scan the batch; read the stream source once
         batch_df = batch_df.localCheckpoint()
         corpus = _read_or_empty(spark, corpus_root, batch_df)
 
-        centers = None
-        if vec_col is not None:
-            embedded = F.col(vec_col).isNotNull()
-            centers = _frozen_centers(
-                spark, centers_root,
-                (corpus.filter(embedded), batch_df.filter(embedded)),
-                id_col, vec_col, n_cells, seed, max_iter,
-            )
+        embedded = F.col(vec_col).isNotNull()
+        centers = _frozen_centers(
+            spark, centers_root,
+            (corpus.filter(embedded), batch_df.filter(embedded)),
+            id_col, vec_col,
+        )
 
         recorded = -1
         if latest_version(ledger_root) is not None:
@@ -470,24 +406,6 @@ def run_streaming_curation(
             _heal_stores(_append(corpus_root, corpus, lost), centers)
             return
 
-        # frozen DSIR ratio table: read it, or fit once and commit it
-        # BEFORE the ledger decision depends on it. Sits AFTER the
-        # replay early-return: a replayed batch never reads the table
-        # (the ledger decided it), and its original application
-        # committed the fit before that ledger commit.
-        ratios = None
-        if dsir_root is not None:
-            if latest_version(dsir_root) is not None:
-                ratios = read_versioned(spark, dsir_root).localCheckpoint()
-            else:
-                fit_src = corpus if not corpus.isEmpty() else batch_df
-                ratios = dsir_bucket_ratios(
-                    fit_src.select(id_col, text_col),
-                    id_col=id_col, text_col=text_col,
-                    target=dsir_target, n_buckets=dsir_buckets,
-                )
-                write_versioned(ratios, dsir_root)
-
         fp_store, lex_store, sem_store = _heal_stores(corpus, centers)
         out = curation_gate(
             batch_df, corpus, id_col=id_col, text_col=text_col,
@@ -496,11 +414,6 @@ def run_streaming_curation(
             lex_store=lex_store,
             centers=centers,
             sem_store=sem_store,
-            dsir_ratios=ratios,
-            dsir_min_log_weight=dsir_min_log_weight,
-            lex_threshold=lex_threshold, num_hashes=num_hashes, bands=bands,
-            shingle_k=shingle_k, hash_mode=hash_mode,
-            sem_threshold=sem_threshold, n_probe=n_probe,
         )
         ledger_delta = out["attribution"].withColumn(
             "batch_id", F.lit(batch_id).cast("long")
@@ -522,7 +435,7 @@ def run_streaming_curation(
         if sem_store is not None:
             _append(sem_root, sem_store, out["sem_delta"])
 
-    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "curation")
+    return _drain(stream_df, _apply, checkpoint_dir, 480, "curation")
 
 
 def run_streaming_rollup(
@@ -532,7 +445,6 @@ def run_streaming_rollup(
     *,
     keys: Sequence[str],
     value: str,
-    timeout_sec: int = 120,
 ) -> StreamingQuery:
     """Continuously MAINTAIN a per-key aggregate from a stream: each
     micro-batch aggregates alone (ops/agg.build_agg_state — delta-sized
@@ -568,7 +480,6 @@ def run_streaming_rollup(
         checkpoint_dir,
         build=lambda batch: build_agg_state(batch, list(keys), value),
         merge=merge_agg_state,
-        timeout_sec=timeout_sec,
     )
 
 
@@ -579,7 +490,6 @@ def run_streaming_summary(
     *,
     build,
     merge,
-    timeout_sec: int = 120,
 ) -> StreamingQuery:
     """Generalized :func:`run_streaming_rollup`: continuously maintain
     ANY mergeable summary from a stream. ``build(batch_df) -> state_df``
@@ -621,4 +531,4 @@ def run_streaming_summary(
             metadata={"batch_id": batch_id},
         )
 
-    return _drain(stream_df, _apply, checkpoint_dir, timeout_sec, "summary")
+    return _drain(stream_df, _apply, checkpoint_dir, 120, "summary")

@@ -4,10 +4,7 @@ express).
 
 ``running_user_stats`` keeps one state row per user — event count, value
 sum, last-seen event time — updated per micro-batch and emitted on every
-update, with a processing-time timeout that finalizes and evicts idle
-users (the state-store-native form of sessionize-then-expire). State is
-per-key and partitioned by the grouping hash, so it scales with ACTIVE
-keys, not history.
+update. State is per-key and partitioned by the grouping hash.
 """
 
 from __future__ import annotations
@@ -28,71 +25,43 @@ STATE_SCHEMA = T.StructType(
     ]
 )
 
-#: Users idle this long (processing time) are finalized and evicted when a
-#: timeout is requested (continuous-trigger deployments). Under
-#: Trigger.AvailableNow leave timeouts OFF: the executor keeps scheduling
-#: empty micro-batches until every state timer fires, which turns a batch
-#: drain into a slow timer loop.
-IDLE_TIMEOUT_MS = 30_000
-
 OUTPUT_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType(), False),
         T.StructField("n_events", T.LongType(), False),
         T.StructField("total_value", T.DoubleType(), False),
-        T.StructField("finalized", T.BooleanType(), False),
     ]
 )
 
 
-def _make_update_user(timeout_ms: int | None):
-    def _update_user(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            n, total, _ = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {"user_id": [user_id], "n_events": [n], "total_value": [total],
-                 "finalized": [True]}
-            )
-            return
-        n, total, last = state.get if state.exists else (0, 0.0, None)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            batch_last = pdf["ts"].max()
-            last = batch_last if last is None or batch_last > last else last
-        state.update((n, total, last))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {"user_id": [user_id], "n_events": [n], "total_value": [total],
-             "finalized": [False]}
-        )
-
-    return _update_user
+def _update_user(
+    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    (user_id,) = key
+    n, total, last = state.get if state.exists else (0, 0.0, None)
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+        batch_last = pdf["ts"].max()
+        last = batch_last if last is None or batch_last > last else last
+    state.update((n, total, last))
+    yield pd.DataFrame({"user_id": [user_id], "n_events": [n], "total_value": [total]})
 
 
-def running_user_stats(events: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
+def running_user_stats(events: DataFrame) -> DataFrame:
     """Apply the per-user stateful update over a (possibly streaming)
-    events frame with columns (user_id, ts, value). Pass
-    ``idle_timeout_ms`` (e.g. IDLE_TIMEOUT_MS) on continuous triggers to
-    finalize+evict idle users; leave None for AvailableNow drains."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
+    events frame with columns (user_id, ts, value). No state timeout:
+    under Trigger.AvailableNow (the repo's drain cadence) a timeout
+    keeps the executor scheduling empty micro-batches until every state
+    timer fires, which turns a batch drain into a slow timer loop."""
     return (
         events.select("user_id", "ts", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_update_user(idle_timeout_ms),
+            _update_user,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )

@@ -14,7 +14,7 @@ configured, which is the shape you want when the table is 100 TB.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,7 +69,6 @@ class ValidationSpec:
     #: (column, literal) — freshness passes when >=1 row matches (V7).
     freshness: tuple[str, Column] | None = None
     cross_column: tuple[CrossColumnRule, ...] = ()
-    extra_identifiers: tuple[str, ...] = field(default_factory=tuple)
 
 
 def validate(spark: SparkSession, df: DataFrame, spec: ValidationSpec) -> DataFrame:
@@ -191,7 +190,6 @@ def validate(spark: SparkSession, df: DataFrame, spec: ValidationSpec) -> DataFr
             + list(spec.flag_columns)
             + ([spec.pk_column] if spec.pk_column else [])
             + [c for rule in spec.cross_column for c in rule.columns]
-            + list(spec.extra_identifiers)
         )
     )
     for name in checked:

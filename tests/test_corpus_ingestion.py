@@ -6,11 +6,15 @@ ingest DAG actually looks like on this engine."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.catalog import load_table
+from dynamic_etl_spark.io import read_table
+from dynamic_etl_spark.io import versioned as V
 from dynamic_etl_spark.io.versioned import latest_version, read_versioned, write_versioned
 from dynamic_etl_spark.ops.lsh import incremental_near_dup_merge, minhash_banded_rows
 from dynamic_etl_spark.pipeline import Pipeline, Step
@@ -110,7 +114,9 @@ def test_corpus_ingestion_pipeline(spark, tmp_path):
 
     # three corpus versions committed; history still readable
     assert latest_version(corpus_root) == 2
-    assert read_versioned(spark, corpus_root, version=0).count() == 300
+    assert read_table(
+        spark, os.path.join(corpus_root, "_versions", V._commit_record(corpus_root, 0)["dir"])
+    ).count() == 300
     assert read_versioned(spark, corpus_root).count() == 300 + len(acc1)
     # signature store grew by exactly the admitted docs' bands
     store = read_versioned(spark, store_root)

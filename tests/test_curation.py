@@ -264,24 +264,25 @@ def test_bloom_path_equals_exact_contamination(spark):
     assert bloom == exact
 
 
-def test_bloom_prefilter_under_tiny_filter_still_exact(spark):
+def test_bloom_prefilter_under_tiny_filter_still_exact(spark, monkeypatch):
     """A deliberately undersized bloom (256 bits for hundreds of grams —
     high fp rate) floods the verify stage with false candidates but the
     output stays exact: the correctness of the two-phase design cannot
     depend on the fp rate, only its COST can."""
+    from dynamic_etl_spark.ops import decontam
     from dynamic_etl_spark.ops.decontam import contamination_profile_bloom
     from dynamic_etl_spark.registry.curation import _planted_decontam_inputs
 
     corpus, bench = _planted_decontam_inputs(spark, SF_SMALL)
+    monkeypatch.setattr(decontam, "BLOOM_BITS", 256)
+    monkeypatch.setattr(decontam, "BLOOM_HASHES", 2)
     exact = {
         r["doc_id"]: (r["n_grams"], r["n_shared_grams"])
         for r in contamination_profile(corpus, bench, k=5, min_shared=5).collect()
     }
     tiny = {
         r["doc_id"]: (r["n_grams"], r["n_shared_grams"])
-        for r in contamination_profile_bloom(
-            corpus, bench, k=5, min_shared=5, m_bits=256, k_hashes=2
-        ).collect()
+        for r in contamination_profile_bloom(corpus, bench, k=5, min_shared=5).collect()
     }
     assert tiny == exact
 

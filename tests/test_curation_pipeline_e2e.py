@@ -72,9 +72,7 @@ def _run(spark, corpus, benchmark):
         return kept.join(losers, "doc_id", "left_anti")
 
     def decontam(ctx):
-        prof = contamination_profile(
-            ctx["dedup"], ctx["benchmark"], id_col="doc_id", text_col="text"
-        )
+        prof = contamination_profile(ctx["dedup"], ctx["benchmark"])
         dirty = prof.filter(F.col("is_contaminated") == 1).select("doc_id")
         return ctx["dedup"].join(dirty, "doc_id", "left_anti")
 

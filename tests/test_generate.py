@@ -150,9 +150,9 @@ def test_uniform_sql_twins_bit_identical(spark):
     spark_rows = {r["id"]: r for r in df.select("id", *cols).collect()}
 
     sel = ", ".join(f"{G.sql_uniform(s, 'i')} AS u{s}" for s in seeds)
-    sel += f", {G.sql_uniform_int(7, 3, 17, 'i')} AS ui"
-    sel += f", {G.sql_uniform_range(9, 2.5, 7.75, 'i')} AS ur"
-    sel += f", {G.sql_pick_from(5, ('a', 'b', 'c', 'd'), 'i')} AS pk"
+    sel += f", {G.sql_uniform_int(7, 3, 17)} AS ui"
+    sel += f", {G.sql_uniform_range(9, 2.5, 7.75)} AS ur"
+    sel += f", {G.sql_pick_from(5, ('a', 'b', 'c', 'd'))} AS pk"
     sel += (
         f", {G.sql_weighted_choice(G.sql_uniform(11, 'i'), (('x', 1.0), ('y', 2.5), ('z', 0.5)))}"
         " AS wc"

@@ -95,8 +95,11 @@ def _numpy_pagerank(edges, n, damping=0.85, iters=60):
 
 
 @pytest.mark.slow  # fast-tier skip: heavy reference comparison (FULL_SUITE=1)
-def test_pagerank_matches_numpy_reference(spark):
+def test_pagerank_matches_numpy_reference(spark, monkeypatch):
+    from dynamic_etl_spark.ops import graph
     from dynamic_etl_spark.ops.graph import pagerank
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
 
     # 60-node graph with hubs, a cycle, and dangling vertices
     n = 60
@@ -112,7 +115,6 @@ def test_pagerank_matches_numpy_reference(spark):
         r["v"]: r["rank"]
         for r in pagerank(
             df, "src", "dst", weight="w", max_iter=60, tol=1e-12,
-            small_graph_threshold=0,  # force the DISTRIBUTED loop
         ).collect()
     }
     ref = _numpy_pagerank(edges, n, iters=60)
@@ -125,8 +127,11 @@ def test_pagerank_matches_numpy_reference(spark):
     assert got[0] > statistics.median(got.values()) * 2
 
 
-def test_pagerank_uniform_on_symmetric_cycle(spark):
+def test_pagerank_uniform_on_symmetric_cycle(spark, monkeypatch):
+    from dynamic_etl_spark.ops import graph
     from dynamic_etl_spark.ops.graph import pagerank
+
+    monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
 
     n = 10
     df = spark.createDataFrame(
@@ -134,7 +139,7 @@ def test_pagerank_uniform_on_symmetric_cycle(spark):
     )
     got = [
         r["rank"]
-        for r in pagerank(df, max_iter=30, small_graph_threshold=0).collect()
+        for r in pagerank(df, max_iter=30).collect()
     ]
     assert len(got) == n
     for r in got:
@@ -149,9 +154,10 @@ def test_pagerank_empty_edges(spark):
 
 
 @pytest.mark.slow  # fast-tier skip: heavy reference comparison (FULL_SUITE=1)
-def test_pagerank_driver_path_matches_distributed(spark):
+def test_pagerank_driver_path_matches_distributed(spark, monkeypatch):
     """The small-graph driver shortcut runs the identical recurrence:
     both paths agree to float tolerance on the same graph."""
+    from dynamic_etl_spark.ops import graph
     from dynamic_etl_spark.ops.graph import pagerank
 
     edges = [(i, (i * 3 + 1) % 40, float(1 + i % 3)) for i in range(40)] + [
@@ -162,11 +168,10 @@ def test_pagerank_driver_path_matches_distributed(spark):
         r["v"]: r["rank"]
         for r in pagerank(df, weight="w", max_iter=40, tol=1e-12).collect()
     }
+    monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
     dist = {
         r["v"]: r["rank"]
-        for r in pagerank(
-            df, weight="w", max_iter=40, tol=1e-12, small_graph_threshold=0
-        ).collect()
+        for r in pagerank(df, weight="w", max_iter=40, tol=1e-12).collect()
     }
     assert fast.keys() == dist.keys()
     for v in fast:
@@ -174,11 +179,12 @@ def test_pagerank_driver_path_matches_distributed(spark):
 
 
 @pytest.mark.slow  # fast-tier skip: heavy reference comparison (FULL_SUITE=1)
-def test_pagerank_zero_weight_edges_are_dangling(spark):
+def test_pagerank_zero_weight_edges_are_dangling(spark, monkeypatch):
     """Zero-weight out-edges carry no mass: the vertex counts as
     dangling (matching the numpy reference's divide-where convention)
     instead of crashing on ANSI DIVIDE_BY_ZERO, and stays in the
     vertex set."""
+    from dynamic_etl_spark.ops import graph
     from dynamic_etl_spark.ops.graph import pagerank
 
     edges = [(1, 2, 1.0), (2, 1, 1.0), (3, 1, 0.0)]
@@ -192,11 +198,10 @@ def test_pagerank_zero_weight_edges_are_dangling(spark):
     for v in (1, 2, 3):
         assert abs(got[v] - ref[v - 1]) < 1e-9
     # distributed path agrees on the same graph
+    monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
     dist = {
         r["v"]: r["rank"]
-        for r in pagerank(
-            df, weight="w", max_iter=40, tol=1e-12, small_graph_threshold=0
-        ).collect()
+        for r in pagerank(df, weight="w", max_iter=40, tol=1e-12).collect()
     }
     for v in (1, 2, 3):
         assert abs(dist[v] - got[v]) < 1e-9

@@ -258,9 +258,10 @@ def test_semantic_within_pair_shared_cells_emits_once(spark):
     assert {r["vec_id"] for r in out["accepted"].collect()} == {30, 32}
 
 
-def test_semantic_cell_overflow_raises(spark):
-    """Cells past max_cell_rows refuse loudly instead of OOMing (the
+def test_semantic_cell_overflow_raises(spark, monkeypatch):
+    """Cells past MAX_CELL_ROWS refuse loudly instead of OOMing (the
     SemDeDup guard, shared by every BLAS cogroup in the repo)."""
+    monkeypatch.setattr(A, "MAX_CELL_ROWS", 3)
     existing = {i: _vec(i) for i in range(6)}
     batch = {100 + i: _vec(100 + i) for i in range(6)}
     # dup_pairs localCheckpoints eagerly inside the merge (stateful-
@@ -268,7 +269,7 @@ def test_semantic_cell_overflow_raises(spark):
     with pytest.raises(Exception, match="cell holds"):
         A.incremental_semantic_merge(
             _df(spark, existing), _df(spark, batch), "vec_id", "embedding",
-            threshold=THRESHOLD, n_cells=1, n_probe=1, max_cell_rows=3,
+            threshold=THRESHOLD, n_cells=1, n_probe=1,
         )
 
 

@@ -42,7 +42,7 @@ def scratch():
 def test_pipe_csv_roundtrip_matches_duckdb(spark, scratch):
     src = load_table(spark, SF_SMALL, "nation")
     out = str(scratch / "nation_csv")
-    write_csv(src, out, sep="|", header=True, single_file=True)
+    write_csv(src, out, sep="|")
 
     back = read_csv_schema_on_read(spark, out, sep="|")
     assert back.count() == src.count()
@@ -65,23 +65,14 @@ def test_sentinel_nulls_apply(spark, scratch):
     assert rows == {"1": (None, "x"), "2": (None, None), "3": ("ok", None)}
 
 
-def test_path_glob_filter(spark, scratch):
-    raw = scratch / "feed"
-    raw.mkdir()
-    (raw / "sales_1.csv").write_text("a\n1\n")
-    (raw / "other_2.csv").write_text("a\n2\n")
-    df = read_csv_schema_on_read(spark, str(raw), sep="|", path_glob="sales_*.csv")
-    assert [r["a"] for r in df.collect()] == ["1"]
-
-
 def test_latest_file_and_diagnostics(scratch):
     d = scratch / "in"
     d.mkdir()
     for name in ("snap_20240101.csv", "snap_20240301.csv", "snap_20240201.csv"):
         (d / name).write_text("x\n")
-    assert latest_file(str(d), prefix="snap_").endswith("snap_20240301.csv")
+    assert latest_file(str(d), "snap_").endswith("snap_20240301.csv")
     with pytest.raises(FileNotFoundError, match="Directory contains"):
-        latest_file(str(d), prefix="nope_")
+        latest_file(str(d), "nope_")
 
 
 def test_rotation(scratch):
@@ -353,10 +344,7 @@ def retail_day(spark, tmp_path_factory) -> Path:
     from dynamic_etl_spark.pipelines import retail_daily_run
 
     root = tmp_path_factory.mktemp("retail_day")
-    retail_daily_run(
-        spark, str(root), date_id=20240617,
-        n_stores=5, n_products=10, n_distributors=5, rows_per_day=30,
-    )
+    retail_daily_run(spark, str(root), date_id=20240617)
     return root
 
 
@@ -393,15 +381,16 @@ def _part_file(directory) -> str:
 
 def test_csv_sidecar_read_matches_inference_without_a_job(spark, scratch):
     """``write_csv`` commits the header it wrote; reading it back takes
-    the names inference would give a header that repeats a name
-    (case-insensitively: ``<name><position>``), the same rows, and no
-    Spark job. A file, or a directory without the sidecar, still infers."""
+    the names inference gives, the same rows, and no Spark job. A file,
+    or a directory without the sidecar, still infers. A header inference
+    would rename — an empty name, or one repeated case-insensitively —
+    is refused before anything is written."""
     df = spark.createDataFrame(
         [("1", "a", " NA ", "x"), ("2", None, "b", "")],
-        ["id", "Price", "v", "price"],
+        ["id", "Price", "v", "qty"],
     )
-    out = scratch / "dup"
-    write_csv(df, str(out), sep="|", single_file=True)
+    out = scratch / "csv"
+    write_csv(df, str(out), sep="|")
     assert os.path.isfile(_sidecar(out))
 
     back, jobs = _jobs_of(spark, lambda: read_csv_schema_on_read(spark, str(out), sep="|"))
@@ -410,7 +399,7 @@ def test_csv_sidecar_read_matches_inference_without_a_job(spark, scratch):
         spark, lambda: read_csv_schema_on_read(spark, _part_file(out), sep="|")
     )
     assert inference_jobs > 0
-    assert back.columns == inferred.columns == ["id", "Price1", "v", "price3"]
+    assert back.columns == inferred.columns == ["id", "Price", "v", "qty"]
     assert back.collect() == inferred.collect() == [
         ("1", "a", None, "x"), ("2", None, "b", None),
     ]
@@ -421,9 +410,11 @@ def test_csv_sidecar_read_matches_inference_without_a_job(spark, scratch):
     assert bare_jobs > 0
     assert same.columns == back.columns and same.collect() == back.collect()
 
-    # an append may add files with another header: the sidecar goes
-    write_csv(df.select("id"), str(out), sep="|", mode="append")
-    assert not os.path.exists(_sidecar(out))
+    for unsafe in (["id", "Price", "v", "price"], ["id", "", "v", "qty"]):
+        refused = scratch / "refused"
+        with pytest.raises(ValueError, match="non-empty and unique"):
+            write_csv(df.toDF(*unsafe), str(refused), sep="|")
+        assert not refused.exists()
 
 
 def test_retail_day_csvs_read_back_with_their_header(spark, retail_day):
@@ -444,14 +435,14 @@ def test_retail_day_csvs_read_back_with_their_header(spark, retail_day):
         assert back.columns == inferred.columns, directory
         assert back.collect() == inferred.collect(), directory
     snapshot = extracts[0][0]
-    assert {"unit_price6", "unit_price27"} <= set(
+    assert {"sales_unit_price", "product_unit_price"} <= set(
         read_csv_schema_on_read(spark, str(snapshot), sep="|").columns
     )
     with open(_part_file(snapshot)) as fh:
         header, *lines = fh.read().splitlines()
     at = header.split("|").index("sales_id")
     ids = [int(line.split("|")[at]) for line in lines]
-    assert len(ids) == 30 and ids == sorted(ids)
+    assert len(ids) == 1000 and ids == sorted(ids)
 
 
 def test_read_table_without_sidecar_falls_back_to_inference(spark, scratch):
@@ -629,17 +620,22 @@ def test_compact_table_writes_a_correct_sidecar(spark, scratch):
 def test_available_now_drain_timeout_raises_naming_the_query(spark, tmp_path):
     """A drain that outlives its timeout raises instead of handing back a
     still-running query whose memory-sink results are partial."""
-    from dynamic_etl_spark.streaming import file_stream, run_available_now
+    from dynamic_etl_spark.streaming import file_stream
+    from dynamic_etl_spark.streaming.incremental import await_drain
 
     src = str(tmp_path / "feed")
     spark.range(10).write.parquet(src)
     stream = file_stream(spark, src, spark.read.parquet(src).schema)
     try:
+        query = (
+            stream.writeStream.format("memory")
+            .queryName("drain_timeout_probe")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
         with pytest.raises(TimeoutError, match="'drain_timeout_probe'"):
-            run_available_now(
-                stream, str(tmp_path / "ckpt"), "drain_timeout_probe",
-                output_mode="append", timeout_sec=0.001,
-            )
+            await_drain(query, 0.001, "query 'drain_timeout_probe'")
     finally:
         for q in spark.streams.active:
             if q.name == "drain_timeout_probe":

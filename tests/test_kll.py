@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.catalog import load_table
+from dynamic_etl_spark.ops import kll
 from dynamic_etl_spark.ops.kll import (
     DEFAULT_K,
     _compress,
@@ -233,7 +234,7 @@ def test_finalize_tie_invariance(spark):
         assert got == round(expected, 6)
 
 
-def test_streaming_summary_maintains_rank_sketch(spark, scratch):
+def test_streaming_summary_maintains_rank_sketch(spark, scratch, monkeypatch):
     """run_streaming_summary with the KLL builders: after three
     micro-batches the maintained estimates sit inside the merge-tree
     bound vs the exact percentiles of everything ingested."""
@@ -246,6 +247,7 @@ def test_streaming_summary_maintains_rank_sketch(spark, scratch):
     os.makedirs(src)
     all_rows = []
     k = 128
+    monkeypatch.setattr(kll, "DEFAULT_K", k)
     for part in range(3):
         rows = [
             (str(part % 2), float(((i * 7919 + part * 104729) % 100000)) / 7.0)
@@ -256,11 +258,11 @@ def test_streaming_summary_maintains_rank_sketch(spark, scratch):
             "append"
         ).parquet(src)
         run_streaming_summary(
-            file_stream(spark, src, "grp string, value double", fmt="parquet"),
+            file_stream(spark, src, "grp string, value double"),
             state,
             ckpt,
-            build=lambda b: build_kll_state(b, ["grp"], "value", k=k),
-            merge=lambda s, d: merge_kll_state(s, d, k=k),
+            build=lambda b: build_kll_state(b, ["grp"], "value"),
+            merge=merge_kll_state,
         )
     maintained = finalize_kll_state(read_versioned(spark, state), qs=QS).collect()
     by_grp = {}
@@ -278,31 +280,33 @@ def test_streaming_summary_maintains_rank_sketch(spark, scratch):
     assert worst <= bound, f"maintained rank error {worst:.5f} > bound {bound:.5f}"
 
 
-def test_kll_empty_and_all_null_inputs(spark):
+def test_kll_empty_and_all_null_inputs(spark, monkeypatch):
     """An empty or all-NULL build yields an empty state; merging an
     empty delta is the identity; finalize of empty is empty — the edges
     a streaming micro-batch hits routinely."""
+    monkeypatch.setattr(kll, "DEFAULT_K", 64)
     empty = spark.createDataFrame([], "grp string, value double")
-    s_empty = build_kll_state(empty, ["grp"], "value", k=64)
+    s_empty = build_kll_state(empty, ["grp"], "value")
     assert s_empty.count() == 0
     assert finalize_kll_state(s_empty, qs=QS).count() == 0
 
     nulls = spark.createDataFrame([("a", None), ("b", None)], "grp string, value double")
-    assert build_kll_state(nulls, ["grp"], "value", k=64).count() == 0
+    assert build_kll_state(nulls, ["grp"], "value").count() == 0
 
     real = build_kll_state(
         spark.createDataFrame([("a", float(i)) for i in range(50)], "grp string, value double"),
-        ["grp"], "value", k=64,
+        ["grp"], "value",
     )
-    merged = merge_kll_state(real, s_empty, k=64)
+    merged = merge_kll_state(real, s_empty)
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, real.collect()))
 
 
-def test_kll_single_value_and_single_row(spark):
+def test_kll_single_value_and_single_row(spark, monkeypatch):
     """Degenerate distributions: one row, and one value repeated past
     the compaction threshold — every quantile must return that value."""
+    monkeypatch.setattr(kll, "DEFAULT_K", 8)
     one = build_kll_state(
-        spark.createDataFrame([("a", 7.5)], "grp string, value double"), ["grp"], "value", k=8
+        spark.createDataFrame([("a", 7.5)], "grp string, value double"), ["grp"], "value"
     )
     rows = finalize_kll_state(one, qs=QS).collect()
     assert [(r["q"], r["quantile_est"]) for r in sorted(rows, key=lambda r: r["q"])] == [
@@ -310,13 +314,13 @@ def test_kll_single_value_and_single_row(spark):
     ]
     const = build_kll_state(
         spark.createDataFrame([("a", 3.25)] * 500, "grp string, value double"),
-        ["grp"], "value", k=16,
+        ["grp"], "value",
     )
     for r in finalize_kll_state(const, qs=QS).collect():
         assert r["quantile_est"] == 3.25
 
 
-def test_presketch_key_flush_preserves_correctness(spark):
+def test_presketch_key_flush_preserves_correctness(spark, monkeypatch):
     """The high-cardinality guard (fragments emitted mid-partition when
     too many keys are in flight) must not change semantics: with the
     flush threshold forced to 3 over 40 keys, every key's estimates
@@ -325,7 +329,9 @@ def test_presketch_key_flush_preserves_correctness(spark):
     rows = [(f"k{i % 40:02d}", float((i * 37) % 1000)) for i in range(8000)]
     df = spark.createDataFrame(rows, "grp string, value double").repartition(4)
     k = 64
-    state = build_kll_state(df, ["grp"], "value", k=k, max_keys_in_flight=3)
+    monkeypatch.setattr(kll, "DEFAULT_K", k)
+    monkeypatch.setattr(kll, "MAX_KEYS_IN_FLIGHT", 3)
+    state = build_kll_state(df, ["grp"], "value")
     per_key_rows = {r["grp"]: r["count"] for r in state.groupBy("grp").count().collect()}
     assert set(per_key_rows) == {f"k{i:02d}" for i in range(40)}
     n_per = 8000 // 40

@@ -13,7 +13,6 @@ from dynamic_etl_spark.ops.multimodal import (
     BMP_H,
     BMP_W,
     FRAME_SAMPLE_EVERY,
-    FRAMES_MAGIC,
     KIND_BMP,
     KIND_VIDEO,
     KIND_WAV,
@@ -118,7 +117,7 @@ def test_spark_decode_chain_matches_pure_python(spark):
         assert got[d]["media_type"] == typ[d % 3]
 
 
-def test_on_error_drop_skips_undecodable_rows(spark):
+def test_strict_decoder_failure_raises(spark):
     rows = [
         (1, encode_bmp(4), "image/bmp"),
         (2, b"\xff\xd8\xff\xe0 fake jpeg", "image/jpeg"),
@@ -126,30 +125,9 @@ def test_on_error_drop_skips_undecodable_rows(spark):
         (4, None, "image/bmp"),
     ]
     media = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
-    out = extract_media_features(media, decoder=strict_decoder, on_error="drop")
-    assert sorted(r["doc_id"] for r in out.collect()) == [1, 3]
-    # default surfaces the failure instead of silently shrinking
+    # a compressed format surfaces the failure instead of silently shrinking
     with pytest.raises(Exception, match="NotImplementedError|compressed"):
         extract_media_features(media, decoder=strict_decoder).collect()
-
-
-def test_on_error_drop_survives_truncated_and_zero_frame_payloads(spark):
-    """ADVICE r5: struct.error (truncated payload mid-unpack) is NOT a
-    ValueError subclass, and a zero-frame raw-frames container used to
-    hit ZeroDivisionError — both must follow the 'drop' path, not kill
-    the job."""
-    truncated_wav = encode_wav(5)[:20]  # RIFF/WAVE magic intact, fmt cut
-    zero_frames = FRAMES_MAGIC + struct.pack("<I", 0)
-    truncated_frames = encode_frames(2)[:10]  # magic + count + partial BM
-    rows = [
-        (1, encode_bmp(4), "image/bmp"),
-        (2, truncated_wav, "audio/wav"),
-        (3, zero_frames, "video/x-raw-frames"),
-        (4, truncated_frames, "video/x-raw-frames"),
-    ]
-    media = spark.createDataFrame(rows, "doc_id long, media binary, media_type string")
-    out = extract_media_features(media, decoder=strict_decoder, on_error="drop")
-    assert sorted(r["doc_id"] for r in out.collect()) == [1]
 
 
 def test_header_features_fallback_unchanged():

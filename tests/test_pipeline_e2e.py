@@ -73,7 +73,7 @@ def test_full_lifecycle(spark, scratch):
             F.col("quantity_sold").alias("QTY"),
             F.concat(F.lit("₹"), F.col("net_amount").cast("string")).alias("NET_SALES"),
         )
-        write_csv(feed, out, sep="|", single_file=True)
+        write_csv(feed, out, sep="|")
         return out
 
     def validate_file(ctx):
@@ -89,7 +89,7 @@ def test_full_lifecycle(spark, scratch):
         return report
 
     def load(ctx):
-        queue = FileQueue(str(current), str(scratch / "processed.log"), prefix="sales_", suffix="")
+        queue = FileQueue(str(current), str(scratch / "processed.log"), prefix="sales_")
         d = ctx["gen_dims"]
 
         def load_one(path):
@@ -174,7 +174,7 @@ def test_full_lifecycle(spark, scratch):
     assert dw_rows == dw.count()
 
     # idempotence: queue is drained, rerunning the load step is a no-op
-    queue = FileQueue(str(current), str(scratch / "processed.log"), prefix="sales_", suffix="")
+    queue = FileQueue(str(current), str(scratch / "processed.log"), prefix="sales_")
     assert queue.next_unprocessed() is None
 
 

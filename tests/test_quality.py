@@ -174,9 +174,7 @@ def test_dsir_matches_python_bruteforce(spark):
     ]
     B, S, TOP = 32, 1.0, 3
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    ratios = dsir_bucket_ratios(
-        df, target=F.col("lang") == "en", n_buckets=B, smoothing=S
-    )
+    ratios = dsir_bucket_ratios(df, target=F.col("lang") == "en", n_buckets=B)
     got = {
         r.doc_id: r
         for r in dsir_log_weights(df, ratios, top_n=TOP).collect()

@@ -1,4 +1,5 @@
-"""Guard against code that only tests call, and against unused imports.
+"""Guard against code and options that only tests use, and against
+unused imports.
 
 The product is what the registry, the retail pipelines, streaming and
 the benchmark run. This test takes the name-reference closure of every
@@ -17,7 +18,18 @@ value is followed, so a constant consumed by another constant is reached
 through it. Other module-level statements run on import and are treated
 as roots.
 
-The second check is the unused-import rule of a linter (F401), which
+The second check applies the same rule to options: every defaulted
+parameter of a top-level function in ``dynamic_etl_spark/`` and every
+defaulted field of a dataclass there is a value a caller may set. A call
+from the product (``dynamic_etl_spark/``, ``perfbench/``, ``bench.py``,
+``__spark_entry__.py``) sets it by keyword or by position; a call that
+forwards ``*args`` or ``**kwargs`` sets every option of its callee.
+Calls resolve by name alone, like references, and through a name
+bound to a function (``pick = G.sql_pick_from``). An option no product call
+sets is a constant with a code path only tests select: make it one, or
+put it on the commented ``KEEP_OPTIONS``.
+
+The third check is the unused-import rule of a linter (F401), which
 this repository does not install: an AST scan of ``dynamic_etl_spark/``
 and ``tests/`` for imported names no code in the module uses. A
 re-export says so with ``# noqa: F401`` on its import statement.
@@ -60,6 +72,48 @@ KEEP = {
     # Package metadata.
     ("__init__.py", "__version__"),
 }
+
+
+# Options no product call sets, each kept for a stated reason.
+KEEP_OPTIONS = {
+    # The JDBC seam (KEEP): the reference's store takes these as the
+    # connection's tuning and its partitioned reads.
+    *(
+        ("io/sources.py", "read_jdbc", p)
+        for p in (
+            "predicates", "partition_column", "lower_bound", "upper_bound",
+            "num_partitions", "fetch_size", "options",
+        )
+    ),
+    *(("io/sinks.py", "write_jdbc", p) for p in ("mode", "batch_size", "options")),
+    # Operator maintenance run by hand (KEEP): the operator sizes the
+    # compacted files and chooses the rebalance,
+    ("io/sinks.py", "compact_table", "target_file_bytes"),
+    ("io/sinks.py", "compact_table", "rebalance"),
+    # and the retention of the versioned snapshots.
+    ("io/versioned.py", "vacuum", "keep_versions"),
+    ("io/versioned.py", "vacuum", "min_orphan_age_s"),
+    # The references the tests compare the product against (KEEP): the
+    # per-row SRP signature at the banded form's bits and seed, and the
+    # KLL bounds at the sketch sizes and merge counts a test runs.
+    ("ops/ann.py", "hyperplane_signature", "bits"),
+    ("ops/ann.py", "hyperplane_signature", "seed"),
+    ("ops/kll.py", "kll_state_bound", "k"),
+    ("ops/kll.py", "kll_rank_error_bound", "k"),
+    ("ops/kll.py", "kll_rank_error_bound", "n_merges"),
+    # SRP banding must widen with the corpus: 32 bits in 4 bands suit the
+    # registry's corpus, and the 100k-vector scale test needs 64 bits in
+    # 2 bands to keep its buckets unsaturated (tests/test_scale_stress.py).
+    ("ops/ann.py", "cosine_near_dup_pairs", "bits"),
+    ("ops/ann.py", "cosine_near_dup_pairs", "bands"),
+    # Test seams for properties the product relies on: generation is
+    # independent of the partition count, and the test session pins its
+    # parallelism (tests/conftest.py).
+    ("generate.py", "_base", "partitions"),
+    ("session.py", "get_spark", "master"),
+    ("session.py", "get_spark", "shuffle_partitions"),
+}
+OPTION_ROOT_PATHS = ("dynamic_etl_spark", "perfbench", "bench.py", "__spark_entry__.py")
 
 
 def _parse(path: str) -> ast.Module:
@@ -152,6 +206,85 @@ def test_only_the_keep_list_is_unreached_from_the_product():
     assert not KEEP - unreached, (
         f"the product now reaches (or no longer defines) {sorted(KEEP - unreached)}; "
         "drop it from KEEP"
+    )
+
+
+def _is_dataclass(node: ast.ClassDef) -> bool:
+    for dec in node.decorator_list:
+        target = dec.func if isinstance(dec, ast.Call) else dec
+        if getattr(target, "id", getattr(target, "attr", None)) == "dataclass":
+            return True
+    return False
+
+
+def unset_options() -> set[tuple[str, str, str]]:
+    """(module path, function or dataclass, option) of every defaulted
+    parameter or field no product call sets."""
+    options: dict[tuple[str, str, str], None] = {}
+    positional: dict[tuple[str, str], list[str]] = {}
+    by_name: dict[str, list[str]] = defaultdict(list)
+    for path in _python_files(PACKAGE):
+        rel = os.path.relpath(path, PACKAGE).replace(os.sep, "/")
+        for stmt in _parse(path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = stmt.args
+                params = [p.arg for p in a.posonlyargs + a.args]
+                defaulted = params[len(params) - len(a.defaults):] + [
+                    p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+                ]
+            elif isinstance(stmt, ast.ClassDef) and _is_dataclass(stmt):
+                fields = [
+                    f for f in stmt.body
+                    if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
+                ]
+                params = [f.target.id for f in fields]
+                defaulted = [f.target.id for f in fields if f.value is not None]
+            else:
+                continue
+            positional[(rel, stmt.name)] = params
+            by_name[stmt.name].append(rel)
+            options.update(dict.fromkeys((rel, stmt.name, p) for p in defaulted))
+    set_: set[tuple[str, str, str]] = set()
+    for root in OPTION_ROOT_PATHS:
+        for path in _python_files(os.path.join(REPO_ROOT, root)):
+            tree = _parse(path)
+            # ``pick = G.sql_pick_from`` makes ``pick(...)`` a call of it
+            aliases = {
+                n.targets[0].id: target
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Assign)
+                and len(n.targets) == 1
+                and isinstance(n.targets[0], ast.Name)
+                and (target := getattr(n.value, "id", getattr(n.value, "attr", None))) in by_name
+            }
+            for call in ast.walk(tree):
+                if not isinstance(call, ast.Call):
+                    continue
+                name = getattr(call.func, "id", getattr(call.func, "attr", None))
+                name = aliases.get(name, name)
+                forwards = any(isinstance(a, ast.Starred) for a in call.args) or any(
+                    k.arg is None for k in call.keywords
+                )
+                keywords = {k.arg for k in call.keywords}
+                for rel in by_name.get(name, ()):
+                    given = set(positional[(rel, name)][: len(call.args)]) | keywords
+                    set_ |= {
+                        o for o in options
+                        if o[:2] == (rel, name) and (forwards or o[2] in given)
+                    }
+    return set(options) - set_
+
+
+def test_only_the_keep_list_options_are_unset_by_the_product():
+    unset = unset_options()
+    assert not unset - KEEP_OPTIONS, (
+        "options in dynamic_etl_spark/ no product call sets: "
+        f"{sorted(unset - KEEP_OPTIONS)}; make each a constant and delete the "
+        "code path only another value selects, or keep-list it with a reason"
+    )
+    assert not KEEP_OPTIONS - unset, (
+        f"the product now sets (or no longer defines) {sorted(KEEP_OPTIONS - unset)}; "
+        "drop it from KEEP_OPTIONS"
     )
 
 

@@ -42,25 +42,19 @@ def test_retail_daily_two_day_cycle(spark, scratch):
     continue from the high-water mark, Current rotates to Archive, the
     DW fact grain stays unique, and the queue marks files processed."""
     root = str(scratch)
-    r1 = retail_daily_run(
-        spark, root, date_id=20240617,
-        n_stores=20, n_products=30, n_distributors=10, rows_per_day=200,
-    )
+    r1 = retail_daily_run(spark, root, date_id=20240617)
     assert set(r1) == {
         "retail_daily_generation", "retail_daily_extract",
         "retail_daily_validation", "retail_target_dw_load",
     }
-    assert r1["retail_daily_generation"].outputs["fact_sales"] == 200
+    assert r1["retail_daily_generation"].outputs["fact_sales"] == 1000
     name1, dw_rows1 = r1["retail_target_dw_load"].outputs["load_fact_sales"]
     assert name1 is not None and dw_rows1 > 0
 
     src_fact = spark.read.parquet(str(scratch / "source" / "fact_sales"))
     hwm1 = src_fact.agg(F.max("sales_id")).collect()[0][0]
 
-    r2 = retail_daily_run(
-        spark, root, date_id=20240618,
-        n_stores=20, n_products=30, n_distributors=10, rows_per_day=200,
-    )
+    r2 = retail_daily_run(spark, root, date_id=20240618)
     src_fact = spark.read.parquet(str(scratch / "source" / "fact_sales"))
     # day 2 continued the surrogate sequence past day 1's high-water mark
     day2_min = (
@@ -68,7 +62,7 @@ def test_retail_daily_two_day_cycle(spark, scratch):
         .agg(F.min("sales_id")).collect()[0][0]
     )
     assert day2_min > hwm1
-    assert src_fact.count() == 400
+    assert src_fact.count() == 2000
 
     # extract rotated day 1's file out of Current
     current = scratch / "extract" / "Current"

@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from dynamic_etl_spark.ops import pack
 from dynamic_etl_spark.ops.pack import prefix_sum, sequence_pack
 from dynamic_etl_spark.ops.sample import (
     stratified_sample,
@@ -76,15 +77,13 @@ def test_stratified_sample_is_row_stable(spark):
 # ------------------------------------------------------------- prefix sums
 
 @pytest.mark.parametrize("num_buckets", [1, 7, 64])
-def test_prefix_sum_matches_python(spark, num_buckets):
+def test_prefix_sum_matches_python(spark, monkeypatch, num_buckets):
     rng = random.Random(42)
     ids = rng.sample(range(100000), 600)  # sparse, unordered ids
     rows = [(i, rng.randrange(0, 50)) for i in ids]
     df = spark.createDataFrame(rows, ["k", "v"]).repartition(8)
-    out = {
-        r["k"]: r["c"]
-        for r in prefix_sum(df, "k", "v", "c", num_buckets=num_buckets).collect()
-    }
+    monkeypatch.setattr(pack, "PREFIX_SUM_BUCKETS", num_buckets)
+    out = {r["k"]: r["c"] for r in prefix_sum(df, "k", "v", "c").collect()}
     running = 0
     for k, v in sorted(rows):
         running += v

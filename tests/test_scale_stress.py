@@ -266,9 +266,9 @@ def _clustered_vecs(spark, n: int, dim: int = 16):
     )
 
 
-def test_knn_join_adversarial_cell_skew(spark):
+def test_knn_join_adversarial_cell_skew(spark, monkeypatch):
     """The documented failure mode must be LOUD, not silent: when one
-    cell overflows ``max_cell_rows`` the join raises with actionable
+    cell overflows ``MAX_CELL_ROWS`` the join raises with actionable
     guidance; with the guard admitting the skewed cell, recall still
     holds vs brute force."""
     from dynamic_etl_spark.ops.ann import build_ivf_index, cosine_topk, knn_join
@@ -284,22 +284,16 @@ def test_knn_join_adversarial_cell_skew(spark):
     assert sizes[-1] > 1.5 * n / 8, f"cell sizes {sizes} — skew did not materialize"
 
     # (a) guard fires loudly when the hot cell exceeds the cap
-    with pytest.raises(Exception, match="max_cell_rows|raise n_cells"):
-        knn_join(
-            corpus,
-            "vec_id",
-            "emb",
-            k=k,
-            n_probe=4,
-            index=idx,
-            max_cell_rows=sizes[-1] - 1,
-        ).collect()
+    from dynamic_etl_spark.ops import ann
+
+    monkeypatch.setattr(ann, "MAX_CELL_ROWS", sizes[-1] - 1)
+    with pytest.raises(Exception, match="raise n_cells"):
+        knn_join(corpus, "vec_id", "emb", k=k, n_probe=4, index=idx).collect()
 
     # (b) admitted, the skewed layout still answers correctly: recall
     # vs brute force on a deterministic 100-query sample (hot + uniform)
-    out = knn_join(
-        corpus, "vec_id", "emb", k=k, n_probe=4, index=idx, max_cell_rows=n
-    ).persist()
+    monkeypatch.setattr(ann, "MAX_CELL_ROWS", n)
+    out = knn_join(corpus, "vec_id", "emb", k=k, n_probe=4, index=idx).persist()
     assert out.count() == n * k
     sample_ids = [i * (n // 100) + 3 for i in range(100)]
     queries = corpus.filter(F.col("vec_id").isin(sample_ids))
@@ -318,14 +312,15 @@ def test_knn_join_adversarial_cell_skew(spark):
 
 def test_heavy_hitter_hot_key_salt_bound(spark):
     """VERDICT r5 #4: ONE deliberately hot key carrying ~1M distinct
-    items through the two-phase MG compress at 64 salts. Asserts (a) the
+    items through the two-phase MG compress at the session-derived salt
+    count (``_mg_salts``). Asserts (a) the
     hot key's ranking splits into bounded salt groups — the largest
     phase-1 sort is ~distinct/n_salts rows, never the full set; (b)
     phase 2's frame is bounded at (k+1)*n_salts candidate rows; (c) the
     salted result is bit-identical to the one-window form."""
     from dynamic_etl_spark.ops.agg import _mg_compress, _mg_salts, build_heavy_hitter_state
 
-    n, k, n_salts = 1_000_000, 8, 64
+    n, k = 1_000_000, 8
     # one key: ~1M singleton items + 10 planted heavies (20k hits each)
     base = spark.range(n).select(
         F.lit("hot").alias("g"), (F.col("id") + 1000).alias("item")
@@ -343,10 +338,11 @@ def test_heavy_hitter_hot_key_salt_bound(spark):
     )
     df = base.unionByName(heavies)
 
-    got = build_heavy_hitter_state(df, ["g"], "item", k=k, n_salts=n_salts)
+    got = build_heavy_hitter_state(df, ["g"], "item", k=k)
     counts = df.groupBy("g", F.col("item").alias("state_item")).agg(
         F.count(F.lit(1)).alias("state_cnt")
     )
+    n_salts = _mg_salts(counts)
     one_phase = _mg_compress(counts, ["g"], k, two_phase=False)
     got_rows = sorted(map(tuple, got.collect()))
     ref_rows = sorted(map(tuple, one_phase.collect()))
@@ -412,7 +408,7 @@ def test_prefix_sum_million_partition_compaction(spark):
         F.col("id").alias("k"),
         (((F.xxhash64("id") % max_v) + max_v) % max_v + 1).alias("v"),
     )
-    cum = prefix_sum(parts, "k", "v", "c", num_buckets=64)
+    cum = prefix_sum(parts, "k", "v", "c")
     files = (
         cum.select(F.expr(f"(c - v) div {target}").alias("f"), "v")
         .groupBy("f")
@@ -476,11 +472,12 @@ def test_ks_drift_binned_grid_bounds_the_sort_frame(spark):
     assert abs(row["ks_statistic"] - 0.1) <= 0.011, row["ks_statistic"]
 
 
-def test_ks_drift_binned_coincides_with_exact_at_fine_grid(spark, tmp_path):
+def test_ks_drift_binned_coincides_with_exact_at_fine_grid(spark, tmp_path, monkeypatch):
     """At a bin width finer than the data's value resolution every value
     owns its own bucket, so the binned statistic must EQUAL the exact
     one bit-for-bit — the exact form is the binned form's oracle, and
     this pins that the grid is the only difference between the twins."""
+    from dynamic_etl_spark.registry import validation as V
     from dynamic_etl_spark.registry.validation import (
         events_ks_drift,
         events_ks_drift_binned,
@@ -492,9 +489,10 @@ def test_ks_drift_binned_coincides_with_exact_at_fine_grid(spark, tmp_path):
         for r in events_ks_drift(spark, sf_dir).collect()
     }
     # fixture values are 2dp; width 0.005 separates every distinct value
+    monkeypatch.setattr(V, "KS_BIN_WIDTH", 0.005)
     binned = {
         r["event_type"]: (r["n_before"], r["n_after"], r["ks_statistic"])
-        for r in events_ks_drift_binned(spark, sf_dir, bin_width=0.005).collect()
+        for r in events_ks_drift_binned(spark, sf_dir).collect()
     }
     assert exact == binned
 
@@ -672,7 +670,7 @@ def test_incremental_semantic_admission_fifty_k_store(spark):
     )
 
     start = time.perf_counter()
-    centers = fit_semantic_centers(store_docs, "vec_id", "emb", n_cells=32, max_iter=4)
+    centers = fit_semantic_centers(store_docs, "vec_id", "emb", n_cells=32)
     store = semantic_store_rows(store_docs, "vec_id", "emb", centers).localCheckpoint()
     out = incremental_semantic_merge(
         store_docs, batch_docs, "vec_id", "emb",

@@ -1,4 +1,4 @@
-"""SparkSession factory: ``SPARK_GRAFT_EXTRA_CONF`` parsing."""
+"""SparkSession factory: ``SPARK_GRAFT_EXTRA_CONF`` parsing and precedence."""
 
 from __future__ import annotations
 
@@ -28,3 +28,16 @@ def test_extra_conf_env_rejects_malformed_pair(monkeypatch, bad):
     # get_spark refuses before building (or reconfiguring) any session
     with pytest.raises(ValueError, match="malformed pair"):
         get_spark()
+
+
+def test_extra_conf_env_shuffle_partitions_survive_the_reapply(spark, monkeypatch):
+    """get_spark re-applies the shuffle partition count after
+    getOrCreate; the value it re-applies is the one the environment
+    gave, not the core count."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    monkeypatch.setenv("SPARK_GRAFT_EXTRA_CONF", "spark.sql.shuffle.partitions=7")
+    shared = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert get_spark().conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", shared)

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.streaming import file_stream, run_available_now
+from dynamic_etl_spark.streaming.incremental import await_drain
 from tests.conftest import SF_SMALL
 
 pytestmark = pytest.mark.slow  # fast-tier skip (FULL_SUITE=1 runs it) — VERDICT r13 #7: the
@@ -46,6 +47,21 @@ def _normalize_ts(df):
     return df
 
 
+def _drain_to_memory(df, ckpt, name, output_mode):
+    """AvailableNow drain into the in-memory table ``name`` in an output
+    mode run_available_now does not use (stateful and stream-stream
+    queries need update/append)."""
+    query = (
+        df.writeStream.format("memory")
+        .outputMode(output_mode)
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    return await_drain(query, 120, f"query {name!r}")
+
+
 def _type_counts(df):
     return {
         r["event_type"]: r["n"]
@@ -65,7 +81,7 @@ def test_available_now_drains_and_checkpoint_dedupes(spark, scratch):
         F.count(F.lit(1)).alias("n")
     )
 
-    q1 = run_available_now(counts, ckpt, query_name="ev1", output_mode="complete")
+    q1 = run_available_now(counts, ckpt, query_name="ev1")
     got1 = {r["event_type"]: r["n"] for r in spark.sql("SELECT * FROM ev1").collect()}
     assert got1 == _type_counts(batch)
     n_file_rows = batch.count()
@@ -77,7 +93,7 @@ def test_available_now_drains_and_checkpoint_dedupes(spark, scratch):
     counts2 = file_stream(spark, str(src), batch.schema).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    q2 = run_available_now(counts2, ckpt, query_name="ev2", output_mode="complete")
+    q2 = run_available_now(counts2, ckpt, query_name="ev2")
     assert q2.lastProgress["numInputRows"] == n_file_rows
     got2 = {r["event_type"]: r["n"] for r in spark.sql("SELECT * FROM ev2").collect()}
     assert got2 == {k: 2 * v for k, v in got1.items()}
@@ -86,7 +102,7 @@ def test_available_now_drains_and_checkpoint_dedupes(spark, scratch):
     counts3 = file_stream(spark, str(src), batch.schema).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n")
     )
-    q3 = run_available_now(counts3, ckpt, query_name="ev3", output_mode="complete")
+    q3 = run_available_now(counts3, ckpt, query_name="ev3")
     assert q3.lastProgress is None or q3.lastProgress["numInputRows"] == 0
 
 
@@ -99,18 +115,16 @@ def test_watermarked_window_matches_batch(spark, scratch):
     batch = spark.read.parquet(str(src))
 
     stream = file_stream(spark, str(src), batch.schema)
-    agg = windowed_aggregate(
-        _normalize_ts(stream), "ts", window="1 hour", group_cols=("event_type",)
-    )
-    run_available_now(agg, str(scratch / "ckpt_w"), query_name="win", output_mode="complete")
+    agg = windowed_aggregate(_normalize_ts(stream), "ts")
+    run_available_now(agg, str(scratch / "ckpt_w"), query_name="win")
     got = {
-        (r["window_start"], r["event_type"]): (r["n_events"], round(r["total_value"], 6))
+        r["window_start"]: (r["n_events"], round(r["total_value"], 6))
         for r in spark.sql("SELECT * FROM win").collect()
     }
     expected = {
-        (r["w"]["start"], r["event_type"]): (r["n"], round(r["tv"], 6))
+        r["w"]["start"]: (r["n"], round(r["tv"], 6))
         for r in _normalize_ts(batch)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("tv"))
         .collect()
     }
@@ -127,9 +141,7 @@ def test_stateful_running_user_stats(spark, scratch):
 
     stream = _normalize_ts(file_stream(spark, str(src), batch.schema))
     stats = running_user_stats(stream)
-    run_available_now(
-        stats, str(scratch / "ckpt_state"), query_name="ustats", output_mode="update"
-    )
+    _drain_to_memory(stats, str(scratch / "ckpt_state"), "ustats", "update")
     # update mode may emit several rows per user (updates + a timeout
     # finalization batch); the LATEST state is the max event count
     got: dict[int, tuple[int, float]] = {}
@@ -148,41 +160,15 @@ def test_stateful_running_user_stats(spark, scratch):
     # second drain with a new file AND a fresh checkpoint over both files:
     # per-key state accumulates across micro-batches within the run
     shutil.copy(f"{SF_SMALL}/events.parquet", src / "b2.parquet")
-    stream2 = _normalize_ts(
-        file_stream(spark, str(src), batch.schema, max_files_per_trigger=1)
-    )
-    run_available_now(
-        running_user_stats(stream2),
-        str(scratch / "ckpt_state2"),
-        query_name="ustats2",
-        output_mode="update",
+    stream2 = _normalize_ts(file_stream(spark, str(src), batch.schema))
+    _drain_to_memory(
+        running_user_stats(stream2), str(scratch / "ckpt_state2"), "ustats2", "update"
     )
     got2: dict[int, int] = {}
     for r in spark.sql("SELECT * FROM ustats2").collect():
         got2[r["user_id"]] = max(got2.get(r["user_id"], 0), r["n_events"])
     for uid, (n, _) in expected.items():
         assert got2[uid] == 2 * n, f"state did not accumulate for user {uid}"
-
-
-def test_one_file_per_trigger_paces_batches(spark, scratch):
-    src = scratch / "incoming"
-    src.mkdir()
-    events_file = f"{SF_SMALL}/events.parquet"
-    shutil.copy(events_file, src / "a.parquet")
-    shutil.copy(events_file, src / "b.parquet")
-    batch = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-
-    stream = file_stream(spark, str(src), batch.schema, max_files_per_trigger=1)
-    q = run_available_now(
-        stream.groupBy().count(),
-        str(scratch / "ckpt2"),
-        query_name="paced",
-        output_mode="complete",
-    )
-    # one micro-batch per file => at least 2 batches in recentProgress
-    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    assert len(batches) == 2
-    assert all(p["numInputRows"] == batch.count() for p in batches)
 
 
 def test_dedup_within_watermark_drops_redelivered_rows(spark, scratch):
@@ -199,11 +185,9 @@ def test_dedup_within_watermark_drops_redelivered_rows(spark, scratch):
     batch = spark.read.parquet(events_file)
 
     stream = _normalize_ts(file_stream(spark, str(src), batch.schema))
-    deduped = dedup_within_watermark(stream, ["event_id"], delay="10 minutes")
+    deduped = dedup_within_watermark(stream, ["event_id"])
     counts = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    run_available_now(
-        counts, str(scratch / "ckpt_dd"), query_name="dd", output_mode="complete"
-    )
+    run_available_now(counts, str(scratch / "ckpt_dd"), query_name="dd")
     got = {r["event_type"]: r["n"] for r in spark.sql("SELECT * FROM dd").collect()}
     assert got == _type_counts(batch)  # single-copy counts, not doubled
 
@@ -235,11 +219,9 @@ def test_interval_stream_join_matches_batch(spark, scratch):
     sc, sp = sides(_normalize_ts(file_stream(spark, str(src), spark.read.parquet(str(src)).schema)))
     joined = interval_stream_join(
         sc, sp, left_key="c_user", right_key="p_user",
-        left_ts="c_ts", right_ts="p_ts", within="30 minutes",
+        left_ts="c_ts", right_ts="p_ts",
     ).select("click_id", "purchase_id")
-    run_available_now(
-        joined, str(scratch / "ckpt_ssj"), query_name="ssj", output_mode="append"
-    )
+    _drain_to_memory(joined, str(scratch / "ckpt_ssj"), "ssj", "append")
     got = {
         (r["click_id"], r["purchase_id"])
         for r in spark.sql("SELECT * FROM ssj").collect()
@@ -336,49 +318,31 @@ def test_streaming_merge_sink_bootstrap_and_column_guard(spark, scratch):
     assert row["audit_note"] == "keep me"
 
 
-def test_streaming_merge_sink_dedups_batch_on_natural_key(spark, scratch):
+def test_streaming_merge_sink_refuses_duplicate_natural_keys(spark, scratch):
     """ADVICE r3 (medium): a micro-batch with two change rows for one
     natural key must NOT fan out the full-outer merge into duplicate
-    (sk, nk) rows. With ``batch_order_col`` the latest change per key
-    wins; without it a duplicated batch raises instead of corrupting."""
+    (sk, nk) rows: the duplicated batch raises instead of corrupting."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from dynamic_etl_spark.streaming import file_stream, run_streaming_merge
 
-    table = str(scratch / "dim_table")
-    spark.createDataFrame([(1, "k1", 10.0)], ["sk", "nk", "v"]).write.parquet(table)
-
     feed_dir = scratch / "feed"
     feed_dir.mkdir()
-    # two changes for k1 (seq 1 then 2) + an insert for k9, one batch
+    # two changes for k1 + an insert for k9, one batch
     changes = spark.createDataFrame(
-        [("k1", 11.0, 1), ("k1", 12.0, 2), ("k9", 90.0, 1)],
-        ["nk", "v", "seq"],
+        [("k1", 11.0), ("k1", 12.0), ("k9", 90.0)], ["nk", "v"]
     )
     changes.coalesce(1).write.parquet(str(feed_dir / "f1.parquet"))
 
+    table = str(scratch / "dim_table")
+    spark.createDataFrame([(1, "k1", 10.0)], ["sk", "nk", "v"]).write.parquet(table)
     stream = file_stream(spark, str(feed_dir / "f1.parquet"), changes.schema)
-    run_streaming_merge(
-        stream, table, str(scratch / "ckpt_dedup"),
-        natural_key=["nk"], surrogate_col="sk", tolerance_cols=["v"],
-        batch_order_col="seq",
-    )
-    rows = spark.read.parquet(table).collect()
-    assert len(rows) == 2  # no duplicate (sk, nk) rows
-    got = {r["nk"]: (r["sk"], r["v"]) for r in rows}
-    assert got["k1"] == (1, 12.0)  # latest change by seq wins
-    assert got["k9"] == (2, 90.0)
-
-    # without batch_order_col the same duplicated batch must abort
-    table2 = str(scratch / "dim_table2")
-    spark.createDataFrame([(1, "k1", 10.0)], ["sk", "nk", "v"]).write.parquet(table2)
-    stream2 = file_stream(spark, str(feed_dir / "f1.parquet"), changes.schema)
     with pytest.raises(StreamingQueryException, match="duplicate natural keys"):
         run_streaming_merge(
-            stream2, table2, str(scratch / "ckpt_dedup2"),
+            stream, table, str(scratch / "ckpt_dedup"),
             natural_key=["nk"], surrogate_col="sk", tolerance_cols=["v"],
         )
-    assert spark.read.parquet(table2).count() == 1  # table untouched
+    assert spark.read.parquet(table).count() == 1  # table untouched
 
 
 def test_streaming_dedup_sink_admits_and_heals(spark, scratch):
@@ -541,7 +505,7 @@ def test_streaming_semantic_dedup_admits_and_heals(spark, scratch):
     run_streaming_semantic_dedup(
         file_stream(spark, str(feed / "*.parquet"), b1.schema),
         corpus_root, store_root, centers_root, str(scratch / "ckpt_sem"),
-        id_col="vec_id", vec_col="embedding", n_cells=2,
+        id_col="vec_id", vec_col="embedding",
     )
     assert latest_version(corpus_root) == 0
     assert latest_version(centers_root) == 0
@@ -561,7 +525,7 @@ def test_streaming_semantic_dedup_admits_and_heals(spark, scratch):
     run_streaming_semantic_dedup(
         file_stream(spark, str(feed / "*.parquet"), b1.schema),
         corpus_root, store_root, centers_root, str(scratch / "ckpt_sem"),
-        id_col="vec_id", vec_col="embedding", n_cells=2,
+        id_col="vec_id", vec_col="embedding",
     )
     corpus = {r["vec_id"] for r in read_versioned(spark, corpus_root).collect()}
     assert corpus == {1, 2, 11}
@@ -587,7 +551,7 @@ def test_streaming_semantic_dedup_admits_and_heals(spark, scratch):
     run_streaming_semantic_dedup(
         file_stream(spark, str(feed / "*.parquet"), b1.schema),
         corpus_root, store_root, centers_root, str(scratch / "ckpt_sem"),
-        id_col="vec_id", vec_col="embedding", n_cells=2,
+        id_col="vec_id", vec_col="embedding",
     )
     corpus = {r["vec_id"] for r in read_versioned(spark, corpus_root).collect()}
     assert corpus == {1, 2, 11, 50}  # 60 rejected against the healed store
@@ -641,7 +605,7 @@ def test_streaming_semantic_dedup_bootstrap_crash_heals_fit(spark, scratch):
     run_streaming_semantic_dedup(
         file_stream(spark, str(feed / "*.parquet"), b1.schema),
         corpus_root, store_root, centers_root, str(scratch / "ckpt_sem_bc"),
-        id_col="vec_id", vec_col="embedding", n_cells=2,
+        id_col="vec_id", vec_col="embedding",
     )
     corpus = {r["vec_id"] for r in read_versioned(spark, corpus_root).collect()}
     assert corpus == {1, 2, 11}
@@ -744,7 +708,7 @@ def test_streaming_summary_maintains_quantile_histogram(spark, scratch):
             1
         ).write.mode("append").parquet(src)
         run_streaming_summary(
-            file_stream(spark, src, "grp string, value double", fmt="parquet"),
+            file_stream(spark, src, "grp string, value double"),
             state,
             ckpt,
             build=lambda b: build_quantile_hist_state(b, ["grp"], "value", lo, hi, nb),
@@ -767,7 +731,7 @@ def test_streaming_summary_maintains_quantile_histogram(spark, scratch):
     # drained checkpoint: re-running with no new files folds nothing
     before = latest_metadata(state).get("batch_id")
     run_streaming_summary(
-        file_stream(spark, src, "grp string, value double", fmt="parquet"),
+        file_stream(spark, src, "grp string, value double"),
         state,
         ckpt,
         build=lambda b: build_quantile_hist_state(b, ["grp"], "value", lo, hi, nb),
@@ -819,7 +783,7 @@ def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch)
         expected = expected.localCheckpoint()
         bdf.coalesce(1).write.mode("append").parquet(src)
         run_streaming_summary(
-            file_stream(spark, src, schema, fmt="parquet"), state, ckpt,
+            file_stream(spark, src, schema), state, ckpt,
             build=lambda b: build_heavy_hitter_state(b, ["grp"], "item", k=4),
             merge=lambda s, d: merge_heavy_hitter_state(s, d, k=4),
         )
@@ -837,7 +801,7 @@ def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch)
         all_rows += rows
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src2)
         run_streaming_summary(
-            file_stream(spark, src2, schema, fmt="parquet"), state2, ckpt2,
+            file_stream(spark, src2, schema), state2, ckpt2,
             build=lambda b: build_reservoir_state(b, ["grp"], "item", n=10),
             merge=lambda s, d: merge_reservoir_state(s, d, n=10),
         )
@@ -876,7 +840,7 @@ def test_streaming_summary_maintains_count_min(spark, scratch):
             "append"
         ).parquet(src)
         run_streaming_summary(
-            file_stream(spark, src, "item long", fmt="parquet"),
+            file_stream(spark, src, "item long"),
             state,
             ckpt,
             build=lambda b: build_cm_state(b, [], "item", width=16),
@@ -953,7 +917,7 @@ def test_streaming_summary_maintains_ks_drift_state(spark, scratch):
         all_rows += rows
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
         run_streaming_summary(
-            file_stream(spark, src, schema, fmt="parquet"),
+            file_stream(spark, src, schema),
             state,
             ckpt,
             build=lambda b: _ks_side_counts(b, bucket),
@@ -1013,7 +977,7 @@ def test_streaming_summary_maintains_md5_hll(spark, scratch):
             "append"
         ).parquet(src)
         run_streaming_summary(
-            file_stream(spark, src, "item long", fmt="parquet"),
+            file_stream(spark, src, "item long"),
             state,
             ckpt,
             build=lambda b: build_hll_md5_state(b, [], "item", p=8),
@@ -1056,14 +1020,13 @@ def _curation_roots(scratch, tag):
 
 
 def _drain_curation(spark, feed, roots, ckpt, mfpt=None):
-    from dynamic_etl_spark.streaming import file_stream, run_streaming_curation
+    from dynamic_etl_spark.streaming import run_streaming_curation
 
+    reader = spark.readStream.schema(spark.createDataFrame([], _CURATION_SCHEMA).schema)
+    if mfpt is not None:
+        reader = reader.option("maxFilesPerTrigger", mfpt)
     run_streaming_curation(
-        file_stream(
-            spark, str(feed / "*.parquet"), spark.createDataFrame(
-                [], _CURATION_SCHEMA
-            ).schema, max_files_per_trigger=mfpt,
-        ),
+        reader.parquet(str(feed / "*.parquet")),
         **roots,
         checkpoint_dir=ckpt,
         id_col="doc_id", text_col="text", vec_col="vec",
@@ -1233,196 +1196,6 @@ def test_streaming_curation_three_tier_admission(spark, scratch):
     assert batch_attr == {d: (a, why) for d, (a, why, bid) in ledger.items() if bid == 1}
 
 
-def test_streaming_curation_dsir_fourth_tier(spark, scratch):
-    """The optional DSIR quality tier on the stream (VERDICT r11 #4):
-    the ratio table is fit ONCE on the bootstrap batch (target slice =
-    doc_id == 1), committed to dsir_root, and every later batch scores
-    its dedup survivors against the FROZEN table — so a target-
-    vocabulary doc is admitted, a raw-vocabulary doc is rejected with
-    the new 'quality' attribution, and dedup still runs first (an exact
-    copy rejects as 'exact', never reaching the scorer). Batch-vs-
-    stream parity: composing the tier ops directly on the committed
-    state (fingerprint anti-join -> lexical merge -> dsir_gate with the
-    read-back frozen ratios) reproduces the streamed batch-1 ledger
-    exactly."""
-    from dynamic_etl_spark.io.versioned import read_versioned
-    from dynamic_etl_spark.streaming import file_stream, run_streaming_curation
-
-    tgt = ["alpha", "beta", "gamma", "delta", "epsilon",
-           "zeta", "eta", "theta", "iota", "kappa"]
-    raw = ["one", "two", "three", "four", "five",
-           "six", "seven", "eight", "nine", "ten"]
-    # stride varies per seed (both coprime with 10) — a shared stride
-    # would make the two sequences rotations of each other, whose
-    # 3-shingles overlap enough to trip the LEXICAL tier
-    perm = lambda ws, s: " ".join(ws[(j * (7 if s == 0 else 3)) % 10] for j in range(10))
-
-    roots = _curation_roots(scratch, "d")
-    roots["dsir_root"] = str(scratch / "cur_dsir_d")
-    feed = scratch / "cur_feed_d"
-    feed.mkdir()
-    schema = "doc_id int, text string"
-    # bootstrap: the fit batch (corpus is empty, so the frozen table is
-    # fit here); doc 1 is the target slice, doc 2 the raw side — DSIR
-    # itself rejects doc 2 at threshold 0 (raw-leaning grams)
-    b1 = spark.createDataFrame([(1, perm(tgt, 0)), (2, perm(raw, 0))], schema)
-    b1.coalesce(1).write.parquet(str(feed / "b1.parquet"))
-    drain = lambda: run_streaming_curation(
-        file_stream(spark, str(feed / "*.parquet"),
-                    spark.createDataFrame([], schema).schema),
-        **roots,
-        checkpoint_dir=str(scratch / "cur_ckpt_d"),
-        id_col="doc_id", text_col="text", vec_col=None,
-        dsir_target=F.col("doc_id") == 1, dsir_min_log_weight="0",
-        dsir_buckets=64,
-    )
-    drain()
-    assert _ledger_rows(spark, roots) == {
-        1: (True, "none", 0),
-        2: (False, "quality", 0),
-    }
-    assert _ids(spark, roots["corpus_root"]) == {1}
-    # quality rejects leave nothing in the dedup stores
-    assert _ids(spark, roots["fp_root"]) == {1}
-    assert _ids(spark, roots["lex_root"]) == {1}
-
-    b2 = spark.createDataFrame(
-        [
-            # target-vocabulary permutation: passes dedup (shingles
-            # differ) AND the frozen gate (every unigram target-side)
-            (20, perm(tgt, 1)),
-            # raw-vocabulary permutation: passes dedup, fails the gate
-            (21, perm(raw, 1)),
-            # exact copy of corpus doc 1: dedup first — 'exact', the
-            # scorer never sees it
-            (22, perm(tgt, 0).upper()),
-        ],
-        schema,
-    )
-    b2.coalesce(1).write.parquet(str(feed / "b2.parquet"))
-    drain()
-    ledger = _ledger_rows(spark, roots)
-    assert ledger == {
-        1: (True, "none", 0),
-        2: (False, "quality", 0),
-        20: (True, "none", 1),
-        21: (False, "quality", 1),
-        22: (False, "exact", 1),
-    }
-    assert _ids(spark, roots["corpus_root"]) == {1, 20}
-
-    # ---- batch-vs-stream parity: the same tier composition on the
-    # committed state, with the read-back FROZEN ratio table ----
-    from dynamic_etl_spark.ops.lsh import incremental_near_dup_merge
-    from dynamic_etl_spark.ops.quality import dsir_gate
-    from dynamic_etl_spark.ops.text import fingerprint_md5
-
-    corpus_b1 = spark.createDataFrame([(1, perm(tgt, 0))], schema)
-    fp = corpus_b1.select(fingerprint_md5(F.col("text")).alias("__fp")).distinct()
-    bfp = b2.select("doc_id", fingerprint_md5(F.col("text")).alias("__fp"))
-    keep1 = (
-        bfp.join(fp, "__fp", "left_anti")
-        .groupBy("__fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
-    )
-    s1 = b2.join(keep1, "doc_id", "leftsemi").localCheckpoint()
-    s2 = incremental_near_dup_merge(
-        corpus_b1, s1, "doc_id", "text"
-    )["accepted"].localCheckpoint()
-    ratios = read_versioned(spark, roots["dsir_root"])
-    gate = dsir_gate(s2.select("doc_id", "text"), ratios, min_log_weight="0")
-    admitted = {r["doc_id"] for r in gate.filter(F.col("passes")).collect()}
-    s1_ids = {r["doc_id"] for r in s1.select("doc_id").collect()}
-    s2_ids = {r["doc_id"] for r in s2.select("doc_id").collect()}
-    batch_attr = {
-        r["doc_id"]: (
-            r["doc_id"] in admitted,
-            "none" if r["doc_id"] in admitted
-            else "quality" if r["doc_id"] in s2_ids
-            else "lexical" if r["doc_id"] in s1_ids
-            else "exact",
-        )
-        for r in b2.select("doc_id").collect()
-    }
-    assert batch_attr == {d: (a, why) for d, (a, why, bid) in ledger.items() if bid == 1}
-
-
-def test_streaming_curation_dsir_quality_reject_leaves_no_semantic_state(
-    spark, scratch
-):
-    """ADVICE r12 #1: with the DSIR fourth tier active AND vec_col set,
-    a doc that tier 3 (semantic) accepted but tier 4 (quality) rejected
-    must leave NOTHING in the semantic store — the sem delta is
-    filtered to the FINAL admitted set like the fp/lex deltas. The
-    regression this pins: an unfiltered delta permanently stored the
-    quality-reject's embedding (_heal only adds rows), so a later batch
-    doc semantically near it was rejected as 'semantic' against a doc
-    absent from the corpus, breaking batch-vs-stream admission parity."""
-    from dynamic_etl_spark.streaming import file_stream, run_streaming_curation
-
-    tgt = ["alpha", "beta", "gamma", "delta", "epsilon",
-           "zeta", "eta", "theta", "iota", "kappa"]
-    raw = ["one", "two", "three", "four", "five",
-           "six", "seven", "eight", "nine", "ten"]
-    perm = lambda ws, s: " ".join(ws[(j * (7 if s == 0 else 3)) % 10] for j in range(10))
-
-    roots = _curation_roots(scratch, "e")
-    roots["dsir_root"] = str(scratch / "cur_dsir_e")
-    feed = scratch / "cur_feed_e"
-    feed.mkdir()
-    # bootstrap: doc 1 target slice (admitted), doc 2 raw side —
-    # passes all three dedup tiers, rejected by the DSIR gate
-    b1 = spark.createDataFrame(
-        [(1, perm(tgt, 0), [1.0, 0.0, 0.0, 0.0]),
-         (2, perm(raw, 0), [0.0, 1.0, 0.0, 0.0])],
-        _CURATION_SCHEMA,
-    )
-    b1.coalesce(1).write.parquet(str(feed / "b1.parquet"))
-    drain = lambda: run_streaming_curation(
-        file_stream(spark, str(feed / "*.parquet"),
-                    spark.createDataFrame([], _CURATION_SCHEMA).schema),
-        **roots,
-        checkpoint_dir=str(scratch / "cur_ckpt_e"),
-        id_col="doc_id", text_col="text", vec_col="vec",
-        dsir_target=F.col("doc_id") == 1, dsir_min_log_weight="0",
-        dsir_buckets=64,
-    )
-    drain()
-    assert _ledger_rows(spark, roots) == {
-        1: (True, "none", 0),
-        2: (False, "quality", 0),
-    }
-    # the quality reject leaves nothing in ANY store — including the
-    # semantic one (the r12 leak: doc 2's embedding stayed behind)
-    assert _ids(spark, roots["corpus_root"]) == {1}
-    assert _ids(spark, roots["fp_root"]) == {1}
-    assert _ids(spark, roots["lex_root"]) == {1}
-    assert _ids(spark, roots["sem_root"]) == {1}
-
-    b2 = spark.createDataFrame(
-        [
-            # target vocabulary, embedding near the QUALITY-REJECTED
-            # doc 2 (cosine ~0.9999995): with the leak it was rejected
-            # 'semantic' against a doc absent from the corpus; correct
-            # behavior admits it (nearest corpus vec is doc 1 at ~0.001)
-            (20, perm(tgt, 1), [0.001, 1.0, 0.0, 0.0]),
-            # raw vocabulary: passes dedup, fails the gate — and again
-            # leaves no semantic state behind
-            (21, perm(raw, 1), [0.0, 0.0, 1.0, 0.0]),
-        ],
-        _CURATION_SCHEMA,
-    )
-    b2.coalesce(1).write.parquet(str(feed / "b2.parquet"))
-    drain()
-    assert _ledger_rows(spark, roots) == {
-        1: (True, "none", 0),
-        2: (False, "quality", 0),
-        20: (True, "none", 1),
-        21: (False, "quality", 1),
-    }
-    assert _ids(spark, roots["corpus_root"]) == {1, 20}
-    assert _ids(spark, roots["sem_root"]) == {1, 20}
-
-
 def test_streaming_curation_replay_is_idempotent(spark, scratch):
     """A fresh checkpoint redelivers every batch under its original
     numbering (one file per trigger): each lands at-or-below the
@@ -1548,12 +1321,11 @@ def test_streaming_curation_crash_windows_heal_forward(spark, scratch):
     assert _ids(spark, roots["sem_root"]) == {1, 2, 50, 99}
 
 
-def test_streaming_curation_all_rejected_batch_and_two_tier_mode(spark, scratch):
-    """Two seams probed separately from the tier walk: (1) a batch whose
-    every doc dies at tier 1 flows an EMPTY survivor frame through the
-    lexical and semantic tiers (the ledger still records the batch, no
-    state table advances a version for it); (2) vec_col=None runs the
-    two lexical tiers only — 'semantic' never appears in attribution."""
+def test_streaming_curation_all_rejected_batch(spark, scratch):
+    """A seam probed separately from the tier walk: a batch whose every
+    doc dies at tier 1 flows an EMPTY survivor frame through the lexical
+    and semantic tiers (the ledger still records the batch, no state
+    table advances a version for it)."""
     from dynamic_etl_spark.io.versioned import latest_version
 
     roots = _curation_roots(scratch, "d")
@@ -1582,25 +1354,3 @@ def test_streaming_curation_all_rejected_batch_and_two_tier_mode(spark, scratch)
     assert _ids(spark, roots["corpus_root"]) == {1, 2}
     # nothing admitted -> no state table advanced past the bootstrap
     assert latest_version(roots["corpus_root"]) == corpus_v
-
-    # vec_col=None: the two lexical tiers compose alone
-    from dynamic_etl_spark.streaming import file_stream, run_streaming_curation
-
-    roots2 = _curation_roots(scratch, "e")
-    feed2 = scratch / "cur_feed_e"
-    feed2.mkdir()
-    b = spark.createDataFrame(
-        [(1, _sentence(5), None), (2, _sentence(5, " x"), None)],
-        _CURATION_SCHEMA,
-    ).select("doc_id", "text")
-    b.coalesce(1).write.parquet(str(feed2 / "b1.parquet"))
-    run_streaming_curation(
-        file_stream(spark, str(feed2 / "*.parquet"), b.schema),
-        **roots2, checkpoint_dir=str(scratch / "cur_ckpt_e"),
-        id_col="doc_id", text_col="text", vec_col=None,
-    )
-    assert _ledger_rows(spark, roots2) == {
-        1: (True, "none", 0), 2: (False, "lexical", 0),
-    }
-    assert latest_version(roots2["sem_root"]) is None
-    assert latest_version(roots2["centers_root"]) is None

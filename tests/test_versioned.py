@@ -19,6 +19,15 @@ from dynamic_etl_spark.io.versioned import (
 )
 
 
+def _read_at(spark, root, version):
+    """The snapshot a past commit record points at."""
+    from dynamic_etl_spark.io import read_table
+
+    return read_table(
+        spark, os.path.join(root, "_versions", V._commit_record(root, version)["dir"])
+    )
+
+
 def _table(spark, n, tag):
     from pyspark.sql import functions as F
 
@@ -36,7 +45,7 @@ def test_versioned_write_read_roundtrip(spark, tmp_path):
     df = read_versioned(spark, root)
     assert df.count() == 20 and df.select("tag").distinct().collect()[0][0] == "b"
     # time travel: the old snapshot stays readable until vacuumed
-    assert read_versioned(spark, root, version=0).count() == 10
+    assert _read_at(spark, root, 0).count() == 10
 
 
 def test_read_versioned_takes_the_committed_schema(spark, tmp_path):
@@ -101,13 +110,13 @@ def test_versioned_cas_race_retries_blind_writer(spark, tmp_path, monkeypatch):
     assert calls["n"] >= 2
     assert read_versioned(spark, root).count() == 30
     # both prior snapshots intact
-    assert read_versioned(spark, root, version=1).count() == 20
+    assert _read_at(spark, root, 1).count() == 20
 
 
 def test_versioned_commit_primitive_is_pluggable(spark, tmp_path, monkeypatch):
     """VERDICT r11 #6: the protocol's only storage-specific semantic is
-    atomic create-exclusive of the commit record, injected via
-    put_if_absent. A fake object-store conditional PUT (S3
+    atomic create-exclusive of the commit record, _local_put_if_absent.
+    A fake object-store conditional PUT (S3
     If-None-Match: exists -> lost, else atomic replace -> won) drives
     the full lifecycle with zero hard links: commits, reads, the
     blind-writer race (losing PUT -> next version number), and the
@@ -125,11 +134,12 @@ def test_versioned_commit_primitive_is_pluggable(spark, tmp_path, monkeypatch):
         os.replace(tmp, path)  # object PUT: all-or-nothing visibility
         return True
 
+    monkeypatch.setattr(V, "_local_put_if_absent", cond_put)
     root = str(tmp_path / "t")
-    assert write_versioned(_table(spark, 10, "v0"), root, put_if_absent=cond_put) == 0
-    assert write_versioned(_table(spark, 20, "v1"), root, put_if_absent=cond_put) == 1
+    assert write_versioned(_table(spark, 10, "v0"), root) == 0
+    assert write_versioned(_table(spark, 20, "v1"), root) == 1
     assert read_versioned(spark, root).count() == 20
-    assert read_versioned(spark, root, version=0).count() == 10
+    assert _read_at(spark, root, 0).count() == 10
 
     # blind-writer race: a stale latest makes the writer PUT a key that
     # already exists — the conditional PUT loses, the loop re-reads and
@@ -142,17 +152,17 @@ def test_versioned_commit_primitive_is_pluggable(spark, tmp_path, monkeypatch):
         return 0 if calls["n"] == 1 else real(r)
 
     monkeypatch.setattr(V, "latest_version", stale_once)
-    v = write_versioned(_table(spark, 30, "v2"), root, put_if_absent=cond_put)
-    monkeypatch.undo()
+    v = write_versioned(_table(spark, 30, "v2"), root)
+    monkeypatch.setattr(V, "latest_version", real)
     assert v == 2 and puts["losses"] >= 1
     assert read_versioned(spark, root).count() == 30
-    assert read_versioned(spark, root, version=1).count() == 20
+    assert _read_at(spark, root, 1).count() == 20
 
     # optimistic concurrency is unchanged under the injected primitive
     with pytest.raises(V.ConcurrentWriteError):
         write_versioned(
             _table(spark, 40, "stale"), root,
-            base_version=0, expected_base=True, put_if_absent=cond_put,
+            base_version=0, expected_base=True,
         )
     # no hard-link temp residue: every commit key came from the fake PUT
     assert not [
@@ -192,7 +202,7 @@ def test_versioned_vacuum_prunes_old_snapshots(spark, tmp_path):
     removed = vacuum(root, keep_versions=2)
     assert len(removed) == 2
     assert read_versioned(spark, root).count() == 13
-    assert read_versioned(spark, root, version=2).count() == 12
+    assert _read_at(spark, root, 2).count() == 12
     with pytest.raises(FileNotFoundError):
         _ = json.load(open(os.path.join(root, "_commits", "00000000.json")))
 
@@ -257,8 +267,8 @@ def test_snapshot_diff_between_versions(spark, tmp_path):
     out = {
         r["id"]: (r["change_type"], r["changed_cols"])
         for r in snapshot_diff(
-            read_versioned(spark, root, version=0),
-            read_versioned(spark, root, version=1),
+            _read_at(spark, root, 0),
+            _read_at(spark, root, 1),
             ["id"],
         ).collect()
     }
