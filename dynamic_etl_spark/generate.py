@@ -104,9 +104,16 @@ def weighted_choice(r: Column, options: Sequence[tuple[str, float]]) -> Column:
     return out
 
 
-def random_date(seed: int, start: str, days: int, *cols: Column) -> Column:
-    """F21 — random date within [start, start+days)."""
-    return F.date_add(F.lit(start).cast("date"), uniform_int(seed, 0, days - 1, *cols))
+#: Width of the window a random date falls in (the store onboarding
+#: decade), shared with the SQL twin.
+DATE_SPAN_DAYS = 3650
+
+
+def random_date(seed: int, start: str, *cols: Column) -> Column:
+    """F21 — random date within [start, start + DATE_SPAN_DAYS)."""
+    return F.date_add(
+        F.lit(start).cast("date"), uniform_int(seed, 0, DATE_SPAN_DAYS - 1, *cols)
+    )
 
 
 def pick_from(seed: int, values: Sequence[str], *cols: Column) -> Column:
@@ -167,8 +174,8 @@ def sql_pick_from(seed: int, values: Sequence[str], expr: str = "i") -> str:
     return f"({lst})[{sql_uniform_int(seed, 1, len(values), expr)}]"
 
 
-def sql_random_date(seed: int, start: str, days: int) -> str:
-    return f"(DATE '{start}' + {sql_uniform_int(seed, 0, days - 1)})"
+def sql_random_date(seed: int, start: str) -> str:
+    return f"(DATE '{start}' + {sql_uniform_int(seed, 0, DATE_SPAN_DAYS - 1)})"
 
 
 # --------------------------------------------------------------------------
@@ -388,7 +395,7 @@ def generate_distributors(spark: SparkSession, n: int, seed: int = 42) -> DataFr
         dtype.alias("distributor_type"),
         F.concat(state, F.lit(" City ")).alias("city"),
         state.alias("state"),
-        random_date(seed + 23, "2015-01-01", 3650, i).alias("onboarding_date"),
+        random_date(seed + 23, "2015-01-01", i).alias("onboarding_date"),
         F.when(uniform(seed + 24, i) < 0.85, "Y").otherwise(F.lit("N")).alias("active_flag"),
     )
 

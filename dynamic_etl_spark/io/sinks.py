@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from dynamic_etl_spark.io.table import SCHEMA_SIDECAR, read_table, write_table
+from dynamic_etl_spark.io.table import read_table, write_schema, write_table
 
 
 def _hive_partition_cols(path: str) -> list[str]:
@@ -48,8 +48,9 @@ def write_csv(df: DataFrame, path: str, sep: str = "|") -> None:
     overwriting ``path`` with ONE file: the reference's one-file-per-
     extract shape (coalesce(1) — fine for extracts, wrong for bulk data).
 
-    The header is also committed as the directory's ``_schema.json``: its
-    names as an all-string schema, which ``io.read_csv_schema_on_read``
+    The header is also committed as the directory's schema sidecar
+    (``io.table.write_schema``): its names as an all-string schema, which
+    ``io.read_csv_schema_on_read``
     reads instead of running a header-inference job. A header Spark's
     reader would rename — an empty name, or one repeated
     case-insensitively — is refused before anything is written, so the
@@ -62,9 +63,7 @@ def write_csv(df: DataFrame, path: str, sep: str = "|") -> None:
             f"case-insensitively; rename {unsafe}"
         )
     df.coalesce(1).write.mode("overwrite").option("sep", sep).option("header", "true").csv(path)
-    schema = T.StructType([T.StructField(c, T.StringType()) for c in df.columns])
-    with open(os.path.join(path, SCHEMA_SIDECAR), "w") as fh:
-        fh.write(schema.json())
+    write_schema(path, T.StructType([T.StructField(c, T.StringType()) for c in df.columns]))
 
 
 def rotate_current_to_archive(current_dir: str, archive_dir: str) -> list[str]:

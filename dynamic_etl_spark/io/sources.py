@@ -10,13 +10,11 @@ codegen, still one scan.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
-from dynamic_etl_spark.io.table import SCHEMA_SIDECAR
+from dynamic_etl_spark.io.table import read_schema
 
 #: Reference na_values (load_fact_sales_dw.py:85-88).
 NULL_SENTINELS = ("", "NULL", "null", "NA")
@@ -25,20 +23,16 @@ NULL_SENTINELS = ("", "NULL", "null", "NA")
 def read_csv_schema_on_read(spark: SparkSession, path: str, sep: str = "|") -> DataFrame:
     """S5 — all-string ingest of a CSV with a header row, sentinel nulls.
 
-    A directory ``io.write_csv`` wrote carries the header it wrote as
-    ``_schema.json``, and that header is the schema, so the read runs no
+    A directory ``io.write_csv`` wrote carries the header it wrote as an
+    all-string schema (``io.table.read_schema``), so the read runs no
     header-inference job (``write_csv`` refuses the empty and repeated
     names inference would rename). The sidecar assumes the file is read
     with the separator it was written with. Without a sidecar the header
     is inferred."""
     reader = spark.read.option("sep", sep).option("header", "true").option("inferSchema", "false")
-    names = _written_header(path)
-    if names is None:
-        df = reader.csv(path)
-        names = df.columns
-    else:
-        schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
-        df = reader.schema(schema).csv(path)
+    schema = read_schema(path)
+    df = reader.csv(path) if schema is None else reader.schema(schema).csv(path)
+    names = df.columns
     # one SQL projection: built from Column objects it costs about 11
     # py4j calls per column
     listed = ", ".join(_sql_string(s) for s in NULL_SENTINELS if s != "")
@@ -48,16 +42,6 @@ def read_csv_schema_on_read(spark: SparkSession, path: str, sep: str = "|") -> D
         return f"CASE WHEN {t} IN ({listed}) OR {t} = '' THEN NULL ELSE {q} END AS {q}"
 
     return df.selectExpr(*[null_sentinels(_sql_ident(n)) for n in names])
-
-
-def _written_header(path: str) -> list[str] | None:
-    """The header ``io.write_csv`` committed with the directory ``path``,
-    or None (a file, or a directory without the sidecar)."""
-    try:
-        with open(os.path.join(path, SCHEMA_SIDECAR)) as fh:
-            return [f["name"] for f in json.load(fh)["fields"]]
-    except (FileNotFoundError, NotADirectoryError):
-        return None
 
 
 def _sql_ident(name: str) -> str:

@@ -2,7 +2,9 @@
 Every table ``io.sinks`` swaps in or ``io.versioned`` commits is written
 by :func:`write_table` and read by :func:`read_table`, which also reads
 foreign parquet that carries no sidecar (the catalog's one-file corpus
-tables)."""
+tables). The CSV extracts commit their header through the same sidecar
+(:func:`write_schema`, :func:`read_schema`), so this module alone owns
+its format."""
 
 from __future__ import annotations
 
@@ -27,9 +29,27 @@ def write_table(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) ->
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     fields = [f for f in df.schema if f.name not in partition_by]
-    schema = T.StructType(fields + [df.schema[c] for c in partition_by])
+    write_schema(path, T.StructType(fields + [df.schema[c] for c in partition_by]))
+
+
+def write_schema(path: str, schema: T.StructType) -> None:
+    """Commit ``schema`` as the sidecar of the directory ``path``."""
     with open(os.path.join(path, SCHEMA_SIDECAR), "w") as fh:
         fh.write(schema.json())
+
+
+def read_schema(path: str) -> T.StructType | None:
+    """The schema committed with the directory ``path``, or None for a
+    file or a directory without a sidecar."""
+    try:
+        return _sidecar(path)
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+
+
+def _sidecar(path: str) -> T.StructType:
+    with open(os.path.join(path, SCHEMA_SIDECAR)) as fh:
+        return T.StructType.fromJson(json.load(fh))
 
 
 #: Session confs that change what footer inference returns for a file;
@@ -65,8 +85,7 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
     goes through :func:`write_table`; a table appended to in place with
     a different schema must not be read through here."""
     try:
-        with open(os.path.join(path, SCHEMA_SIDECAR)) as fh:
-            schema = T.StructType.fromJson(json.load(fh))
+        schema = _sidecar(path)
     except NotADirectoryError:
         schema = _file_schema(spark, path)
     except FileNotFoundError:

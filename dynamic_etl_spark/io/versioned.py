@@ -31,9 +31,9 @@ At 100 TB this is exactly the object-store-friendly shape: no renames
 of big directories (the data dir is written once, in place), one tiny
 commit object per version, and O(1) pointer resolution per read.
 The ONE storage semantic the protocol needs beyond plain list/get/put
-is atomic create-exclusive of the commit record, and it is pluggable
-(VERDICT r11 #6): ``write_versioned(put_if_absent=...)`` swaps the
-local hard-link CAS for an object store's conditional PUT — S3
+is atomic create-exclusive of the commit record, which one function
+provides: ``_local_put_if_absent``, the local hard-link CAS. An
+object-store port replaces it with the store's conditional PUT — S3
 ``If-None-Match: *``, GCS ``ifGenerationMatch=0``, Azure Blob
 ``If-None-Match: *`` all give the same exactly-one-winner guarantee on
 key creation, so the commit loop is unchanged. Everything else already
@@ -65,14 +65,14 @@ class ConcurrentWriteError(RuntimeError):
 
 
 def _local_put_if_absent(path: str, payload: bytes) -> bool:
-    """Default commit primitive — atomic + exclusive create of a small
+    """The commit primitive — atomic + exclusive create of a small
     record on a posix/HDFS-style filesystem: the payload is made fully
     durable under a temp name first, then hard-linked to its final name.
     link(2) fails with EEXIST when another writer won the key, and a
-    reader can never observe a half-written record. Object-store
-    deployments pass their conditional-PUT equivalent instead (module
-    docstring) — the return contract is the only interface: True iff
-    this call created the key."""
+    reader can never observe a half-written record. An object-store port
+    replaces it with its conditional-PUT equivalent (module docstring) —
+    the return contract is the only interface: True iff this call
+    created the key."""
     tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
     with open(tmp, "wb") as fh:
         fh.write(payload)

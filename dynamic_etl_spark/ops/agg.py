@@ -17,6 +17,13 @@ from pyspark.sql import functions as F
 # addition headroom at 100 TB row counts (sum precision grows to 35,6).
 MEASURE_DECIMAL = "decimal(25,6)"
 
+#: The maintained summaries' sizes, which the registry's DuckDB twins
+#: read too: HLL precision (m = 2^HLL_P registers per key), Misra-Gries
+#: counters kept per key, and Count-Min counters per hash row.
+HLL_P, MG_K, CM_WIDTH = 10, 8, 32
+#: The quantiles the histogram and KLL summaries report.
+QUANTILES = (0.5, 0.9, 0.99)
+
 
 def as_double(c: Column) -> Column:
     """Decimal -> double, portably.
@@ -336,19 +343,17 @@ def hll_md5_register(value: Column) -> tuple[Column, Column]:
     return bucket, rho
 
 
-def build_hll_md5_state(
-    df: DataFrame, keys: Sequence[str], value: str, p: int = 10
-) -> DataFrame:
+def build_hll_md5_state(df: DataFrame, keys: Sequence[str], value: str) -> DataFrame:
     """Mergeable md5-HLL distinct-count state: one (bucket, max_rho) row
     per non-empty register per key group — the oracle-checkable sibling
-    of :func:`build_distinct_sketch_state`. State is <= 2^p rows per key
+    of :func:`build_distinct_sketch_state`. State is <= 2^HLL_P rows per key
     (fixed regardless of data volume), merges by MAX (associative,
     commutative, idempotent — re-delivered batches cannot inflate it),
     and builds with ONE hash-shuffle whose map-side partial MAX reduces
-    each partition to <= 2^p rows per key before the exchange. NULLs are
+    each partition to <= 2^HLL_P rows per key before the exchange. NULLs are
     skipped (groupBy drops the null bucket row), matching
     approx_count_distinct / DuckDB approx semantics."""
-    m = 1 << p
+    m = 1 << HLL_P
     bucket, rho = hll_md5_register(F.col(value))
     return (
         df.filter(F.col(value).isNotNull())
@@ -356,10 +361,10 @@ def build_hll_md5_state(
         .groupBy(*keys, "bucket")
         .agg(F.max("rho").alias("max_rho"))
         # The precision rides IN the state (ADVICE r8): finalize/merge
-        # validate it instead of trusting the caller to repeat the same
-        # p — a mismatched p would silently mis-pad the empty buckets
-        # and embed the wrong alpha_m*m^2 constant.
-        .withColumn("hll_p", F.lit(p).cast("int"))
+        # validate it, so a state persisted at another HLL_P cannot
+        # silently mis-pad the empty buckets and embed the wrong
+        # alpha_m*m^2 constant.
+        .withColumn("hll_p", F.lit(HLL_P).cast("int"))
     )
 
 
@@ -389,7 +394,7 @@ def merge_hll_md5_state(state: DataFrame, delta: DataFrame) -> DataFrame:
     )
 
 
-def finalize_hll_md5_state(state: DataFrame, p: int = 10) -> DataFrame:
+def finalize_hll_md5_state(state: DataFrame) -> DataFrame:
     """(keys..., buckets_used, sum_inv_scaled, raw_estimate): the raw
     HLL estimate alpha_m * m^2 / sum(2^-M_j) evaluated the deterministic
     way — registers sum as the INTEGER sum_inv_scaled = sum over all m
@@ -406,7 +411,7 @@ def finalize_hll_md5_state(state: DataFrame, p: int = 10) -> DataFrame:
     the surface to apply their own correction; the registers, not the
     headline number, are the maintained product.
 
-    ``p`` is cross-checked against the ``hll_p`` the state carries
+    ``HLL_P`` is cross-checked against the ``hll_p`` the state carries
     (ADVICE r8): a state built at a different precision — or a mix of
     precisions surviving a hand-rolled merge — raises at evaluation
     instead of mis-padding the (m - V) empty buckets and embedding the
@@ -417,7 +422,7 @@ def finalize_hll_md5_state(state: DataFrame, p: int = 10) -> DataFrame:
             "built before the precision-in-state contract; rebuild it "
             "with build_hll_md5_state"
         )
-    m = 1 << p
+    m = 1 << HLL_P
     keys = [c for c in state.columns if c not in ("bucket", "max_rho", "hll_p")]
     # 2^(RMAX - rho) by 1-based array lookup — Spark's shiftleft only
     # takes literal shift amounts, and pow() is banned (libm)
@@ -432,11 +437,11 @@ def finalize_hll_md5_state(state: DataFrame, p: int = 10) -> DataFrame:
         F.max("hll_p").alias("__p_hi"),
     )
     checked_sum = F.when(
-        (F.col("__p_lo") != p) | (F.col("__p_hi") != p),
+        (F.col("__p_lo") != HLL_P) | (F.col("__p_hi") != HLL_P),
         F.raise_error(
             F.format_string(
                 "finalize_hll_md5_state: state built at p in [%s, %s] "
-                f"but finalized at p={p}",
+                f"but finalized at p={HLL_P}",
                 F.col("__p_lo"),
                 F.col("__p_hi"),
             )
@@ -450,18 +455,18 @@ def finalize_hll_md5_state(state: DataFrame, p: int = 10) -> DataFrame:
         *keys,
         "buckets_used",
         full_sum.alias("sum_inv_scaled"),
-        (F.lit(hll_md5_scale_const(p)) / full_sum.cast("double")).alias(
+        (F.lit(hll_md5_scale_const()) / full_sum.cast("double")).alias(
             "raw_estimate"
         ),
     )
 
 
-def hll_md5_scale_const(p: int = 10) -> float:
+def hll_md5_scale_const() -> float:
     """alpha_m * m^2 * 2^RMAX as ONE Python double, embedded verbatim on
     both engine sides (repr() round-trips exactly; DuckDB's literal
     parser is correctly-rounded, so both engines hold the identical
     bits). alpha_m per Flajolet et al. 2007 Fig. 3 (m >= 128)."""
-    m = 1 << p
+    m = 1 << HLL_P
     alpha = 0.7213 / (1.0 + 1.079 / m)
     return alpha * m * m * float(1 << _HLL_MD5_RMAX)
 
@@ -544,23 +549,18 @@ def _mg_compress(
     )
 
 
-def build_heavy_hitter_state(
-    df: DataFrame,
-    keys: Sequence[str],
-    item: str,
-    k: int = 8,
-) -> DataFrame:
+def build_heavy_hitter_state(df: DataFrame, keys: Sequence[str], item: str) -> DataFrame:
     """Mergeable HEAVY-HITTER state: a Misra-Gries summary of at most
-    ``k`` (item, counter) rows per key group — the frequent-items
+    ``MG_K`` (item, counter) rows per key group — the frequent-items
     sibling of :func:`build_agg_state` (exact monoid) and
     :func:`build_distinct_sketch_state` (HLL). Exact per-batch top items
     do not merge (a globally-frequent item can be locally unremarkable
     in every batch); MG summaries do (Agarwal et al., "Mergeable
     Summaries", PODS'12): counters for matching items ADD, then one
-    compression re-bounds the summary to ``k`` rows.
+    compression re-bounds the summary to ``MG_K`` rows.
 
     Counters are LOWER bounds on true frequency; the classic guarantee
-    survives any merge tree: an item with true count > N/(k+1) (N =
+    survives any merge tree: an item with true count > N/(MG_K+1) (N =
     total rows ingested for that key) is always present. Deterministic
     at any parallelism — build is an exact groupBy count, compression's
     offset is tie-robust (see :func:`_mg_compress`) — so unlike the HLL
@@ -570,19 +570,17 @@ def build_heavy_hitter_state(
     partials; the initial compression is the salted two-phase form (see
     :func:`_mg_compress`), so a hot key's million-item distinct set is
     ranked in shuffle-width-many bounded salt groups (derived by
-    :func:`_mg_salts`), never one task; state thereafter is O(|keys| * k) rows, and every merge moves
+    :func:`_mg_salts`), never one task; state thereafter is O(|keys| * MG_K) rows, and every merge moves
     only summaries, never history."""
     counts = df.groupBy(*keys, F.col(item).alias("state_item")).agg(
         F.count(F.lit(1)).alias("state_cnt")
     )
-    return _mg_compress(counts, keys, k, two_phase=True)
+    return _mg_compress(counts, keys, MG_K, two_phase=True)
 
 
-def merge_heavy_hitter_state(
-    state: DataFrame, delta: DataFrame, k: int = 8
-) -> DataFrame:
+def merge_heavy_hitter_state(state: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold a delta summary into the stored summary: union, add counters
-    for matching items, re-compress to ``k`` rows. Summary-sized
+    for matching items, re-compress to ``MG_K`` rows. Summary-sized
     shuffle."""
     keys = [c for c in state.columns if c not in ("state_item", "state_cnt")]
     summed = (
@@ -590,7 +588,7 @@ def merge_heavy_hitter_state(
         .groupBy(*keys, "state_item")
         .agg(F.sum("state_cnt").alias("state_cnt"))
     )
-    return _mg_compress(summed, keys, k)
+    return _mg_compress(summed, keys, MG_K)
 
 
 def finalize_heavy_hitter_state(state: DataFrame, item_alias: str = "item") -> DataFrame:
@@ -654,13 +652,10 @@ def merge_quantile_hist_state(state: DataFrame, delta: DataFrame) -> DataFrame:
 
 
 def finalize_quantile_hist_state(
-    state: DataFrame,
-    lo: float,
-    hi: float,
-    n_bins: int,
-    qs: Sequence[float] = (0.5, 0.9, 0.99),
+    state: DataFrame, lo: float, hi: float, n_bins: int
 ) -> DataFrame:
-    """Quantile estimates from the merged histogram: for each q, the
+    """Quantile estimates from the merged histogram: for each q of
+    ``QUANTILES``, the
     first bin whose cumulative count reaches ``ceil(q * total)``,
     linearly interpolated inside the bin. Underflow/overflow bins clamp
     to ``lo``/``hi``. One keyed sort window shared by every q; output
@@ -684,7 +679,7 @@ def finalize_quantile_hist_state(
         .withColumn("__prev", F.col("__cum") - F.col("state_n"))
         # every q rides the SAME windowed pass via a literal-array
         # explode — no per-q branch recomputing the sort, no union
-        .withColumn("q", F.explode(F.array(*[F.lit(float(q)) for q in qs])))
+        .withColumn("q", F.explode(F.array(*[F.lit(float(q)) for q in QUANTILES])))
     )
     t = F.greatest(F.ceil(F.col("q") * F.col("__tot")), F.lit(1))
     est = (
@@ -718,39 +713,34 @@ def cm_bucket(item: Column, depth_idx: int, width: int) -> Column:
     return F.conv(hex8, 16, 10).cast("long") % width
 
 
-def build_cm_state(
-    df: DataFrame,
-    keys: Sequence[str],
-    item: str,
-    width: int = 256,
-) -> DataFrame:
+def build_cm_state(df: DataFrame, keys: Sequence[str], item: str) -> DataFrame:
     """Mergeable Count-Min frequency state (Cormode-Muthukrishnan 2005):
-    per key group, 4 hash rows of ``width`` counters; an item's
+    per key group, 4 hash rows of ``CM_WIDTH`` counters; an item's
     estimated count is the MIN over its rows, always >= the true count
     (overestimate-only, never under). The point-frequency member of the
     maintained-summary suite: Misra-Gries answers "who is heavy", CM
     answers "how often is THIS key" for ANY key in 4 lookups over
-    O(4*width) state — no item list retained at all. State rows:
+    O(4*CM_WIDTH) state — no item list retained at all. State rows:
     (keys..., state_depth, state_bucket, state_cnt); merging is
     elementwise integer addition (an exact monoid, like the rollup
     state), so merge-tree == one-shot bit-for-bit and the whole
     maintenance path is oracle-checkable. Error: overestimate <=
-    2n/width with prob >= 1 - 2^-4 (the md5-slice hash family yields 4
+    2n/CM_WIDTH with prob >= 1 - 2^-4 (the md5-slice hash family yields 4
     independent 32-bit rows per item, :func:`cm_bucket`). One explode
     (4 rows/event) + one partial-aggregated groupBy.
 
     ``state_width`` rides along as a constant column: a probe against a
-    grid hashed at a DIFFERENT width reads the wrong buckets and can
+    grid persisted at a DIFFERENT width reads the wrong buckets and can
     UNDERestimate — the one failure CM must never have — so
     :func:`cm_estimate` derives width/depth from the state instead of
     trusting caller defaults (and a mixed-width merge becomes visible
     as two width groups instead of a silently summed wrong grid)."""
-    buckets = F.array(*[cm_bucket(F.col(item), d, width) for d in range(4)])
+    buckets = F.array(*[cm_bucket(F.col(item), d, CM_WIDTH) for d in range(4)])
     return (
         df.select(*keys, F.posexplode(buckets).alias("state_depth", "state_bucket"))
         .groupBy(*keys, "state_depth", "state_bucket")
         .agg(F.count(F.lit(1)).alias("state_cnt"))
-        .withColumn("state_width", F.lit(width))
+        .withColumn("state_width", F.lit(CM_WIDTH))
     )
 
 

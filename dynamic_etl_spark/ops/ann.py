@@ -36,6 +36,17 @@ BLOCK_ROWS = 1024
 #: (200k rows x 768 dims x 8 B ≈ 1.2 GB of vectors; SemDeDup's guard).
 MAX_CELL_ROWS = 200_000
 
+# Operator settings the registry's DuckDB twins read too.
+#: Neighbours per query of the LSH and IVF top-k searches.
+ANN_TOPK = 10
+#: kNN join: neighbours per vector, Lloyd cells, and cells each vector probes.
+KNN_K, KNN_CELLS, KNN_PROBE = 5, 8, 4
+#: SemDeDup: the duplicate cosine, k-means cells, and cells a batch
+#: vector probes on incremental admission.
+SEMDEDUP_THRESHOLD, SEMDEDUP_CELLS, SEMDEDUP_PROBE = 0.95, 8, 2
+#: The cosine at which cosine_near_dup_pairs calls a pair a near-dup.
+NEAR_DUP_COSINE = 0.9
+
 
 def as_double_vec(v: Column) -> Column:
     return F.transform(v, lambda x: x.cast("double"))
@@ -437,7 +448,6 @@ def ivf_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 10,
     index: IvfIndex | None = None,
 ) -> DataFrame:
     """IVF-style approximate top-k: k-means partitions the corpus into
@@ -487,7 +497,7 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("__sim", cosine(F.col("__qv"), F.col("__cv")))
     )
-    return _rank_topk(cands, k)
+    return _rank_topk(cands, ANN_TOPK)
 
 
 def hyperplane_signature(v: Column, bits: int = 16, seed: int = 0) -> Column:
@@ -505,7 +515,6 @@ def lsh_ann_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 10,
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Approximate top-k: candidates are corpus rows sharing at least one
@@ -538,7 +547,7 @@ def lsh_ann_topk(
               "neighbor_id")
         .withColumn("__sim", cosine(F.col("__v_q"), F.col("__v_n")))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, ANN_TOPK)
 
 
 def srp_banded_rows(
@@ -873,14 +882,13 @@ def cosine_near_dup_pairs(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.9,
     bits: int = 32,
     bands: int = 4,
 ) -> DataFrame:
     """Embedding-cosine near-dup detection (driver brief: the fifth dedup
     tier after exact / MinHash / SimHash / n-gram Jaccard): corpus
     self-joined ONLY where an SRP signature band collides, then exact
-    cosine verifies ``>= threshold``. Output (id_a, id_b, cosine_sim),
+    cosine verifies ``>= NEAR_DUP_COSINE``. Output (id_a, id_b, cosine_sim),
     each unordered pair once (id_a < id_b). Zero false positives by
     construction; recall is the banded-LSH S-curve — with 32 bits / 4
     bands (8-bit rows) a 0.9-cosine pair collides with p≈0.75 and a
@@ -913,7 +921,7 @@ def cosine_near_dup_pairs(
         pairs.join(vecs.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__v_a")), "id_a")
         .join(vecs.select(F.col(id_col).alias("id_b"), F.col("__v").alias("__v_b")), "id_b")
         .withColumn("__sim", cosine(F.col("__v_a"), F.col("__v_b")))
-        .filter(F.col("__sim") >= F.lit(threshold))
+        .filter(F.col("__sim") >= F.lit(NEAR_DUP_COSINE))
         .select("id_a", "id_b", F.round("__sim", 6).alias("cosine_sim"))
     )
 
@@ -1252,14 +1260,8 @@ def knn_join(
     return _rank_topk(local, k)
 
 
-def semantic_dedup(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    n_cells: int = 16,
-) -> DataFrame:
-    """Full SemDeDup pass: within-cluster cosine pairs at >= threshold
+def semantic_dedup(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Full SemDeDup pass: within-cluster cosine pairs at >= SEMDEDUP_THRESHOLD
     (semantic_dedup_pairs) chained into connected components
     (ops/graph.py), keep-MIN-id per component — the same
     survivor convention as the lexical dedup tiers (registry
@@ -1285,9 +1287,10 @@ def semantic_dedup(
     # inits before trusting a data change; the random init saves
     # ~5 jobs of k-means|| passes.
     index = build_ivf_index(
-        corpus, id_col, vec_col, n_cells, persist=False, max_iter=8, init_mode="random"
+        corpus, id_col, vec_col, SEMDEDUP_CELLS, persist=False, max_iter=8,
+        init_mode="random",
     )
-    pairs = semantic_dedup_pairs(index, threshold)
+    pairs = semantic_dedup_pairs(index, SEMDEDUP_THRESHOLD)
     comp = connected_components(pairs, "id_a", "id_b")
     ids = index.assigned.select(F.col("neighbor_id").alias(id_col))
     return (
@@ -1450,9 +1453,6 @@ def incremental_semantic_merge(
     new_docs: DataFrame,
     id_col: str,
     vec_col: str,
-    threshold: float = 0.95,
-    n_cells: int = 8,
-    n_probe: int = 2,
     centers=None,
     existing_assigned: DataFrame | None = None,
 ) -> dict:
@@ -1461,7 +1461,7 @@ def incremental_semantic_merge(
     dedup had a maintained/streaming path, SemDeDup was batch-only).
     Admit a batch of embedded documents against a persistent,
     semantically-deduplicated corpus: a batch doc whose cosine against
-    any stored doc reaches ``threshold`` is rejected; within-batch
+    any stored doc reaches ``SEMDEDUP_THRESHOLD`` is rejected; within-batch
     near-dups form components and admit only their MIN-id member
     (ops/graph.admit_batch — the SAME rule as the lexical tier, so the
     two compose into one curation policy).
@@ -1476,7 +1476,7 @@ def incremental_semantic_merge(
       assign ``existing_docs`` now.
 
     Scale shape (mirrors semantic_dedup_pairs/knn_join): batch vectors
-    probe their ``n_probe`` nearest cells in one mapInPandas pass (no
+    probe their ``SEMDEDUP_PROBE`` nearest cells in one mapInPandas pass (no
     driver collect); candidates meet the store ONLY within a cell — one
     cogroup shuffle each for batch x store and batch x batch — and the
     per-cell blockwise-BLAS threshold scan keeps peak memory
@@ -1516,7 +1516,7 @@ def incremental_semantic_merge(
     from dynamic_etl_spark.ops.graph import admit_batch
 
     if centers is None:
-        centers = fit_semantic_centers(existing_docs, id_col, vec_col, n_cells)
+        centers = fit_semantic_centers(existing_docs, id_col, vec_col, SEMDEDUP_CELLS)
     if existing_assigned is None:
         existing_assigned = semantic_store_rows(
             existing_docs, id_col, vec_col, centers
@@ -1525,7 +1525,7 @@ def incremental_semantic_merge(
     id_type = new_docs.schema[id_col].dataType
 
     probes = _probe_cells(
-        new_docs, id_col, vec_col, centers, n_probe, with_cells=True
+        new_docs, id_col, vec_col, centers, SEMDEDUP_PROBE, with_cells=True
     )
     store = existing_assigned.select(
         F.col(id_col).alias("__mid"),
@@ -1575,7 +1575,7 @@ def incremental_semantic_merge(
         if nq > MAX_CELL_ROWS:
             raise ValueError(
                 f"incremental_semantic_merge batch cell holds {nq} rows > "
-                f"{MAX_CELL_ROWS}; raise n_cells so cells fit executor memory"
+                f"{MAX_CELL_ROWS}; raise SEMDEDUP_CELLS so cells fit executor memory"
             )
         qpdf = qpdf.sort_values(id_col, kind="mergesort")
         qids = qpdf[id_col].to_numpy()
@@ -1590,7 +1590,7 @@ def incremental_semantic_merge(
             if len(mpdf) > MAX_CELL_ROWS:
                 raise ValueError(
                     f"incremental_semantic_merge store cell holds {len(mpdf)} "
-                    f"rows > {MAX_CELL_ROWS}; raise n_cells so cells fit "
+                    f"rows > {MAX_CELL_ROWS}; raise SEMDEDUP_CELLS so cells fit "
                     "executor memory"
                 )
             mids = mpdf["__mid"].to_numpy()
@@ -1601,7 +1601,7 @@ def incremental_semantic_merge(
             for lo in range(0, nq, BLOCK_ROWS):
                 hi = min(lo + BLOCK_ROWS, nq)
                 S = Qn[lo:hi] @ Mn.T
-                ii, jj = np.nonzero(S >= threshold)
+                ii, jj = np.nonzero(S >= SEMDEDUP_THRESHOLD)
                 if len(ii):
                     frames.append(
                         pd.DataFrame(
@@ -1622,7 +1622,7 @@ def incremental_semantic_merge(
             for lo in range(0, nq - 1, BLOCK_ROWS):
                 hi = min(lo + BLOCK_ROWS, nq)
                 S = Qn[lo:hi] @ Qn.T
-                ii, jj = np.nonzero(S >= threshold)
+                ii, jj = np.nonzero(S >= SEMDEDUP_THRESHOLD)
                 keep = jj > ii + lo
                 ii, jj = ii[keep] + lo, jj[keep]
                 if len(ii):
@@ -1665,7 +1665,7 @@ def incremental_semantic_merge(
     # lexical tier's rule — un-truncated plans compound per batch)
     dup_pairs = (
         cand.withColumn("__s", cosine(F.col("__nv"), F.col("__mv")))
-        .filter(F.col("__s") >= threshold)
+        .filter(F.col("__s") >= SEMDEDUP_THRESHOLD)
         .select(
             "id_new",
             "id_matched",
@@ -1689,7 +1689,6 @@ def ivf_exacthash_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 10,
     n_cells: int = 8,
     n_probe: int = 2,
     iters: int = 5,
@@ -1768,7 +1767,7 @@ def ivf_exacthash_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("__sim", cosine(F.col("__qv"), F.col("__cv")))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, ANN_TOPK)
 
 
 def _quantized_rows(df: DataFrame, ident: str, vec_col: str, scale: int) -> DataFrame:
@@ -1864,15 +1863,12 @@ def knn_join_exacthash(
     corpus: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
-    n_cells: int = 8,
-    n_probe: int = 4,
     iters: int = 5,
     scale: int = 1 << 16,
 ) -> DataFrame:
     """Corpus x corpus kNN join through the integer-quantized Lloyd fit
     (:func:`_integer_lloyd`) — the oracle-checkable twin of
-    :func:`knn_join`. Every vector probes its ``n_probe`` nearest final
+    :func:`knn_join`. Every vector probes its ``KNN_PROBE`` nearest final
     cells (exact BIGINT distance, ties to the lower cell); candidates
     are the cell members under the same fit's argmin assignment; exact
     cosine ranks them (the proven parity surface). No driver collect,
@@ -1880,14 +1876,14 @@ def knn_join_exacthash(
     Output: (query_id, neighbor_id, rank, cosine_sim)."""
     from pyspark.sql import Window as W
 
-    cv, cent = _integer_lloyd(corpus, id_col, vec_col, n_cells, iters, scale)
+    cv, cent = _integer_lloyd(corpus, id_col, vec_col, KNN_CELLS, iters, scale)
     dists = _int_cell_dists(cv, cent, id_col)
     rn_w = W.partitionBy(id_col).orderBy("dist", "cell")
     ranked = dists.withColumn("__rn", F.row_number().over(rn_w))
     assigned = ranked.filter(F.col("__rn") == 1).select(
         F.col(id_col).alias("__nid"), "cell"
     )
-    probed = ranked.filter(F.col("__rn") <= n_probe).select(
+    probed = ranked.filter(F.col("__rn") <= KNN_PROBE).select(
         F.col(id_col).alias("__qid"), "cell"
     )
     cand = probed.join(assigned, "cell").select(
@@ -1905,4 +1901,4 @@ def knn_join_exacthash(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("__sim", cosine(F.col("__qv"), F.col("__cv")))
     )
-    return _rank_topk(scored, k)
+    return _rank_topk(scored, KNN_K)

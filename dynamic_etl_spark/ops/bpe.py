@@ -31,7 +31,7 @@ lands (no CacheManager leak for per-batch callers).
 100 TB shape: the corpus is touched exactly once (step 1); every round
 after that moves only the ~100M-row word-vocab table. Pair counting
 partial-aggregates map-side; the only driver-side values are the 1-row
-argmax per round and the final merge table (n_merges rows).
+argmax per round and the final merge table (N_MERGES rows).
 """
 
 from __future__ import annotations
@@ -39,6 +39,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Merge rounds trained, and the weighted pair count a merge needs; the
+# registry's DuckDB replay of the training loop reads both.
+N_MERGES, MIN_COUNT = 16, 2
 
 
 def word_counts(corpus: DataFrame, text_col: str = "text") -> DataFrame:
@@ -75,16 +79,11 @@ def merge_word(symbols: list, left: str, right: str) -> list:
     return out
 
 
-def train_bpe(
-    corpus: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 50,
-    min_count: int = 2,
-) -> DataFrame:
-    """Train ``n_merges`` BPE merges on ``corpus`` and return the merge
+def train_bpe(corpus: DataFrame, text_col: str = "text") -> DataFrame:
+    """Train ``N_MERGES`` BPE merges on ``corpus`` and return the merge
     table: (rank, left, right, merged, pair_count), rank 0 first.
 
-    Stops early when no adjacent pair reaches ``min_count`` (weighted by
+    Stops early when no adjacent pair reaches ``MIN_COUNT`` (weighted by
     word frequency). Pair statistics count EVERY adjacent occurrence
     (the classic get_stats — "aaa" contributes (a,a) twice); the apply
     step merges greedily leftmost non-overlapping (:func:`merge_word`).
@@ -107,7 +106,7 @@ def train_bpe(
     )
     merges: list[tuple] = []
     try:
-        for rank in range(n_merges):
+        for rank in range(N_MERGES):
             n = F.size("symbols")
             pairs = (
                 vocab.select(
@@ -125,7 +124,7 @@ def train_bpe(
             top = (
                 pairs.orderBy(F.desc("cnt"), F.asc("l"), F.asc("r")).limit(1).collect()
             )
-            if not top or top[0]["cnt"] < min_count:
+            if not top or top[0]["cnt"] < MIN_COUNT:
                 break
             left, right, cnt = top[0]["l"], top[0]["r"], top[0]["cnt"]
             merges.append((rank, left, right, left + right, int(cnt)))
@@ -189,7 +188,7 @@ def bpe_encode_words(
     word_col: str = "word",
 ) -> DataFrame:
     """Segment each DISTINCT word with a trained merge table: (word,
-    pieces array<string>, n_pieces). The merge table is n_merges rows —
+    pieces array<string>, n_pieces). The merge table is N_MERGES rows —
     a tokenizer config, bounded by construction — so it collects once
     and ships in the worker closure; segmentation itself runs in Arrow
     batches over the distinct-word table, where each word is segmented

@@ -21,16 +21,19 @@ from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops.lsh import word_shingles
 
+#: Word-gram length of the overlap test, and the shared grams that flag
+#: a document; the registry's DuckDB twin reads both.
+DECONTAM_K, DECONTAM_MIN_SHARED = 5, 5
 
-def benchmark_gram_set(benchmark: DataFrame, k: int = 5) -> DataFrame:
+
+def benchmark_gram_set(benchmark: DataFrame) -> DataFrame:
     """Distinct word k-grams across the whole benchmark set (column ``g``)."""
     return benchmark.select(
-        F.explode(word_shingles(F.col("text"), k)).alias("g")
+        F.explode(word_shingles(F.col("text"), DECONTAM_K)).alias("g")
     ).distinct()
 
 
-def contamination_profile(corpus: DataFrame, benchmark: DataFrame, *,
-                          k: int = 5, min_shared: int = 5) -> DataFrame:
+def contamination_profile(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Per-corpus-document overlap with the benchmark gram set.
 
     Returns (id_col, n_grams, n_shared_grams, contamination_ratio,
@@ -39,9 +42,9 @@ def contamination_profile(corpus: DataFrame, benchmark: DataFrame, *,
     document's distinct grams that appear anywhere in the benchmark.
     Empty documents still surface one row (their single empty gram).
     """
-    bench = benchmark_gram_set(benchmark, k=k)
+    bench = benchmark_gram_set(benchmark)
     grams = corpus.select(
-        F.col("doc_id"), F.explode(word_shingles(F.col("text"), k)).alias("g")
+        F.col("doc_id"), F.explode(word_shingles(F.col("text"), DECONTAM_K)).alias("g")
     )
     marked = grams.join(
         F.broadcast(bench.withColumn("__hit", F.lit(1))), "g", "left"
@@ -57,7 +60,9 @@ def contamination_profile(corpus: DataFrame, benchmark: DataFrame, *,
         F.round(
             F.col("n_shared_grams").cast("double") / F.col("n_grams"), 6
         ).alias("contamination_ratio"),
-        (F.col("n_shared_grams") >= min_shared).cast("int").alias("is_contaminated"),
+        (F.col("n_shared_grams") >= DECONTAM_MIN_SHARED)
+        .cast("int")
+        .alias("is_contaminated"),
     )
 
 
@@ -125,13 +130,7 @@ def _bloom_hit(g, words_col, m_bits: int, k_hashes: int):
     return test
 
 
-def contamination_profile_bloom(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    *,
-    k: int = 5,
-    min_shared: int = 5,
-) -> DataFrame:
+def contamination_profile_bloom(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """contamination_profile's scale path for a benchmark too large to
     broadcast as exact strings (a full eval SUITE, or corpus-vs-corpus
     decontamination): broadcast a BLOOM FILTER of the benchmark grams
@@ -153,7 +152,7 @@ def contamination_profile_bloom(
     gram-keyed shuffle join moving the ENTIRE corpus gram volume, which
     is the 1000x-at-scale cost this path exists to avoid.
     """
-    bench = benchmark_gram_set(benchmark, k=k)
+    bench = benchmark_gram_set(benchmark)
     m_bits, k_hashes = BLOOM_BITS, BLOOM_HASHES
     words = bloom_words(bench, m_bits, k_hashes)
     spark = corpus.sparkSession
@@ -161,7 +160,7 @@ def contamination_profile_bloom(
         spark.createDataFrame([(words,)], "__bloom: array<bigint>")
     )
     grams = corpus.select(
-        F.col("doc_id"), F.explode(word_shingles(F.col("text"), k)).alias("g")
+        F.col("doc_id"), F.explode(word_shingles(F.col("text"), DECONTAM_K)).alias("g")
     )
     flagged = grams.join(bloom_row).withColumn(
         "__cand", _bloom_hit(F.col("g"), F.col("__bloom"), m_bits, k_hashes)
@@ -181,7 +180,7 @@ def contamination_profile_bloom(
                 / F.col("n_grams"),
                 6,
             ).alias("contamination_ratio"),
-            (F.coalesce(F.col("n_shared_grams"), F.lit(0)) >= min_shared)
+            (F.coalesce(F.col("n_shared_grams"), F.lit(0)) >= DECONTAM_MIN_SHARED)
             .cast("int")
             .alias("is_contaminated"),
         )

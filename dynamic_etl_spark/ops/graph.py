@@ -235,6 +235,9 @@ DAMPING = 0.85
 #: pagerank runs graphs with at most this many vertices AND edges as one
 #: driver-side numpy loop instead of distributed power iteration.
 SMALL_GRAPH_THRESHOLD = 2000
+#: pagerank's round cap, its L1-delta convergence tolerance, and the
+#: distributed rounds per delta probe (each probe is a full extra job).
+PR_MAX_ITER, PR_TOL, PR_TOL_CHECK_EVERY = 12, 1e-9, 4
 
 
 def pagerank(
@@ -242,9 +245,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str | None = None,
-    max_iter: int = 20,
-    tol: float = 1e-6,
-    tol_check_every: int = 1,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list — the influence /
     centrality companion to :func:`connected_components` (cluster
@@ -259,8 +259,8 @@ def pagerank(
 
     where ``W(u)`` is u's total out-weight and ``dangling`` is the rank
     mass parked on vertices with no out-edges (redistributed uniformly —
-    ranks always sum to 1). Stops when the L1 delta drops below ``tol``
-    or at ``max_iter``.
+    ranks always sum to 1). Stops when the L1 delta drops below
+    ``PR_TOL`` or at ``PR_MAX_ITER``.
 
     Scale shape: each round is one join of the rank vector to the edge
     list on ``src`` (the rank side is vertex-sized; the edge side never
@@ -278,7 +278,7 @@ def pagerank(
 
     Graphs at or under ``SMALL_GRAPH_THRESHOLD`` vertices AND edges run
     the identical recurrence as one dense numpy loop on the driver (the
-    small-CC union-find hybrid pattern): ~2 cluster jobs x max_iter of
+    small-CC union-find hybrid pattern): ~2 cluster jobs x PR_MAX_ITER of
     scheduling overhead collapses to milliseconds, and both paths are
     pinned against each other in pytest. Dense cost is n² doubles —
     the default 2000 caps it at 32 MB.
@@ -326,7 +326,7 @@ def pagerank(
 
     # HYBRID execution (the small-CC union-find pattern, ops/lsh.py): a
     # small graph's power iteration is pure scheduling overhead as ~2
-    # cluster jobs x max_iter — run it as one numpy loop on the driver
+    # cluster jobs x PR_MAX_ITER — run it as one numpy loop on the driver
     # instead (identical recurrence; both paths are float-tolerance
     # territory and pytest pins them against each other). The threshold
     # bounds what the driver collects: normalized edges + the vertex set.
@@ -345,12 +345,12 @@ def pagerank(
         has_out = P.sum(axis=1) > 0
         rank = np.full(n, 1.0 / n)
         base_v = (1.0 - DAMPING) / n
-        for it in range(max_iter):
+        for it in range(PR_MAX_ITER):
             dangling = rank[~has_out].sum()
             nxt = base_v + DAMPING * (rank @ P + dangling / n)
             delta = np.abs(nxt - rank).sum()
             rank = nxt
-            if delta < tol:
+            if delta < PR_TOL:
                 break
         verts.unpersist()
         trans.unpersist()
@@ -388,7 +388,7 @@ def pagerank(
     # earlier would make skipped-probe rounds recompute the whole join
     # chain back to the last checkpoint inside the next collect
     prev: DataFrame | None = None
-    for it in range(max_iter):
+    for it in range(PR_MAX_ITER):
         dangling = (
             ranks.filter(~F.col("__has_out")).agg(F.sum("rank")).collect()[0][0]
             or 0.0
@@ -418,10 +418,10 @@ def pagerank(
         else:
             nxt = nxt.persist()
         # the L1-delta convergence probe is a full extra job per round on
-        # a small graph; ``tol_check_every`` amortizes it when the caller
-        # has a hard max_iter anyway (the iteration itself still runs via
-        # the dangling-mass collect, which materializes nxt)
-        if (it + 1) % tol_check_every == 0 or it == max_iter - 1:
+        # a small graph; ``PR_TOL_CHECK_EVERY`` amortizes it against the
+        # hard PR_MAX_ITER (the iteration itself still runs via the
+        # dangling-mass collect, which materializes nxt)
+        if (it + 1) % PR_TOL_CHECK_EVERY == 0 or it == PR_MAX_ITER - 1:
             delta = (
                 ranks.select("v", F.col("rank").alias("__prev"))
                 .join(nxt, "v")
@@ -434,7 +434,7 @@ def pagerank(
             delta = None
             prev = ranks  # still backs the lazy nxt — release next round
         ranks = nxt
-        if delta is not None and delta < tol:
+        if delta is not None and delta < PR_TOL:
             break
     out = ranks.select("v", "rank").localCheckpoint()
     if prev is not None:

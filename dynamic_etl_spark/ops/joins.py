@@ -112,6 +112,11 @@ def change_detection(
     return out.drop("__ex_present", *[f"__ex_{c}" for c in (*exact_cols, *tolerance_cols)])
 
 
+#: The largest Levenshtein distance fuzzy_blocked_match accepts; the
+#: registry's DuckDB twin reads it.
+FUZZY_MAX_DISTANCE = 2
+
+
 def fuzzy_blocked_match(
     dirty: DataFrame,
     dim: DataFrame,
@@ -119,7 +124,6 @@ def fuzzy_blocked_match(
     dirty_col: str,
     dim_col: str,
     block,
-    max_distance: int = 2,
 ) -> DataFrame:
     """Fuzzy lookup: resolve each dirty value to its closest dimension
     value by Levenshtein distance, comparing ONLY within a blocking key.
@@ -133,7 +137,7 @@ def fuzzy_blocked_match(
     the expected error mode cannot corrupt. Best match per dirty value =
     lowest (distance, dim value) — a total order, per the repo window
     rule; ``dirty`` must be unique on ``dirty_col`` (pre-distinct it).
-    Values with no in-block candidate within ``max_distance`` are
+    Values with no in-block candidate within ``FUZZY_MAX_DISTANCE`` are
     dropped — the caller decides the fallback, as with any lookup miss.
     """
     from pyspark.sql import Window
@@ -149,7 +153,7 @@ def fuzzy_blocked_match(
         .withColumn(
             "__dist", F.levenshtein(F.col(dirty_col), F.col("__dim_val")).cast("long")
         )
-        .filter(F.col("__dist") <= max_distance)
+        .filter(F.col("__dist") <= FUZZY_MAX_DISTANCE)
     )
     w = Window.partitionBy(dirty_col).orderBy("__dist", "__dim_val")
     return (

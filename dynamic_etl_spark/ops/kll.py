@@ -56,6 +56,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dynamic_etl_spark.ops.agg import QUANTILES
+
 DEFAULT_K = 512
 
 _STATE_COLS = ("state_level", "state_value")
@@ -243,12 +245,11 @@ def merge_kll_state(state: DataFrame, delta: DataFrame) -> DataFrame:
     return _fold_per_key(unioned, keys, DEFAULT_K, unioned.schema)
 
 
-def finalize_kll_state(
-    state: DataFrame, qs: Sequence[float] = (0.5, 0.9, 0.99)
-) -> DataFrame:
+def finalize_kll_state(state: DataFrame) -> DataFrame:
     """Quantile estimates from the weighted compactor contents — pure
     codegen, no Python: weight = 2^level, one keyed cumulative-sum
-    window over the (value, level) total order, then for each q the
+    window over the (value, level) total order, then for each q of
+    ``QUANTILES`` the
     first value whose cumulative weight reaches ``ceil(q * W)``. The
     per-key frame is sketch-bounded (k * n_levels rows), so the window
     is safe at any key skew. Output (keys..., q, quantile_est)."""
@@ -289,13 +290,15 @@ def finalize_kll_state(
                 F.col("state_value"),
             )
         ).alias(f"__q{i}")
-        for i, q in enumerate(qs)
+        for i, q in enumerate(QUANTILES)
     ]
     wide = cum.groupBy(*keys).agg(*aggs)
-    stack = ", ".join(f"CAST({float(q)} AS DOUBLE), __q{i}" for i, q in enumerate(qs))
+    stack = ", ".join(
+        f"CAST({float(q)} AS DOUBLE), __q{i}" for i, q in enumerate(QUANTILES)
+    )
     return wide.select(
         *keys,
-        F.expr(f"stack({len(qs)}, {stack}) AS (q, quantile_est)"),
+        F.expr(f"stack({len(QUANTILES)}, {stack}) AS (q, quantile_est)"),
     ).select(
         *keys,
         "q",

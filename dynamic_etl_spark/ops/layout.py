@@ -26,44 +26,45 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def normalize_to_grid(
-    c: Column, lo: int, hi: int, bits: int = 16
-) -> Column:
-    """Map an integer column in [lo, hi] onto the [0, 2^bits) grid:
-    ``floor((c - lo) * (2^bits - 1) / (hi - lo))``. The numerator stays
-    below 2^47 for any 32-bit range at the default 16 bits, so the
-    double division is exact and the floor is the true integer quotient
-    — identical on both engines. Values are clamped into the range
-    first, so out-of-bound rows land on the grid edge instead of
-    corrupting the key. ``lo``/``hi`` are caller-supplied constants
-    (profile bounds, domain knowledge) — not computed here, so the
-    expression stays a pure per-row map with no extra pass."""
-    if hi <= lo:
-        raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
-    cells = (1 << bits) - 1
-    clamped = F.least(F.greatest(c.cast("long"), F.lit(lo)), F.lit(hi))
-    return F.floor(
-        (clamped - F.lit(lo)) * F.lit(cells) / F.lit(hi - lo)
-    ).cast("long")
+#: Bits per grid coordinate; the registry's DuckDB twin reads it too.
+ZORDER_BITS = 16
 
 
-def zorder_key(cols: Sequence[Column], bits: int = 16) -> Column:
+def normalize_to_grid(c: Column, hi: int) -> Column:
+    """Map an integer column in [0, hi] onto the [0, 2^ZORDER_BITS) grid:
+    ``floor(c * (2^ZORDER_BITS - 1) / hi)``. The numerator stays below
+    2^47 for any 32-bit range at 16 bits, so the double division is
+    exact and the floor is the true integer quotient — identical on both
+    engines. Values are clamped into the range first, so out-of-bound
+    rows land on the grid edge instead of corrupting the key. ``hi`` is
+    a caller-supplied constant (profile bound, domain knowledge) — not
+    computed here, so the expression stays a pure per-row map with no
+    extra pass."""
+    if hi <= 0:
+        raise ValueError(f"need hi > 0, got {hi}")
+    cells = (1 << ZORDER_BITS) - 1
+    clamped = F.least(F.greatest(c.cast("long"), F.lit(0)), F.lit(hi))
+    return F.floor(clamped * F.lit(cells) / F.lit(hi)).cast("long")
+
+
+def zorder_key(cols: Sequence[Column]) -> Column:
     """Morton interleave of ``len(cols)`` grid coordinates (each already
-    in [0, 2^bits), e.g. from :func:`normalize_to_grid` — fractional
-    inputs are floored). Bit ``b`` of column ``i`` lands at position
-    ``b * n_cols + i`` of the key, so the key's high bits alternate
-    between columns and sorting by it tiles the space into nested
-    quadrants. Total key width ``bits * n_cols`` must fit a long
-    (< 63)."""
+    in [0, 2^ZORDER_BITS), e.g. from :func:`normalize_to_grid` —
+    fractional inputs are floored). Bit ``b`` of column ``i`` lands at
+    position ``b * n_cols + i`` of the key, so the key's high bits
+    alternate between columns and sorting by it tiles the space into
+    nested quadrants. Total key width ``ZORDER_BITS * n_cols`` must fit
+    a long (< 63)."""
     n = len(cols)
     if n < 1:
         raise ValueError("zorder_key needs at least one column")
-    if bits * n > 62:
-        raise ValueError(f"{n} cols x {bits} bits = {bits * n} > 62 key bits")
+    if ZORDER_BITS * n > 62:
+        raise ValueError(
+            f"{n} cols x {ZORDER_BITS} bits = {ZORDER_BITS * n} > 62 key bits"
+        )
     ints = [F.floor(c).cast("long") for c in cols]
     parts = []
-    for b in range(bits):
+    for b in range(ZORDER_BITS):
         for i, c in enumerate(ints):
             # ((c >> b) & 1) << (b * n + i) — literal shift amounts only
             parts.append(
@@ -77,12 +78,12 @@ def zorder_key(cols: Sequence[Column], bits: int = 16) -> Column:
     return out
 
 
-def sql_zorder_key(col_sqls: Sequence[str], bits: int = 16) -> str:
+def sql_zorder_key(col_sqls: Sequence[str]) -> str:
     """DuckDB twin of :func:`zorder_key` over the same grid coordinates
     (each SQL snippet must already evaluate to the integer grid cell)."""
     n = len(col_sqls)
     parts = []
-    for b in range(bits):
+    for b in range(ZORDER_BITS):
         for i, c in enumerate(col_sqls):
             parts.append(f"(((CAST({c} AS BIGINT) >> {b}) & 1) << {b * n + i})")
     return " | ".join(parts)

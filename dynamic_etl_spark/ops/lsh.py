@@ -118,6 +118,9 @@ def band_hash_expr(slots: list[Column], b: int, hash_mode: str = "xxhash") -> Co
 #: MinHash geometry of every near-dup tier: 32 hash slots in 8 bands of
 #: 4, over 3-word shingles (registry/llm.py's DuckDB twins use the same).
 NUM_HASHES, BANDS, SHINGLE_K = 32, 8, 3
+#: The exact shingle Jaccard at which a candidate pair is a near-dup;
+#: the registry's DuckDB twins read it too.
+JACCARD_THRESHOLD = 0.5
 
 
 def minhash_banded_rows(
@@ -167,14 +170,14 @@ def minhash_near_dup_pairs(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
     hash_mode: str = "xxhash",
 ) -> DataFrame:
     """Near-dup pipeline: word shingles -> MinHash -> banded LSH candidates
-    -> exact-Jaccard verify >= threshold. Output (id_a, id_b, jaccard_sim).
+    -> exact-Jaccard verify >= JACCARD_THRESHOLD. Output (id_a, id_b,
+    jaccard_sim).
 
     With 32 hashes / 8 bands (3-word shingles) the LSH S-curve crosses
-    ~0.65 at sim=threshold 0.5.
+    ~0.65 at sim=JACCARD_THRESHOLD 0.5.
 
     Plan shape — the signature is computed WITHOUT array lambdas:
     higher-order functions evaluate interpreted (outside whole-stage
@@ -230,7 +233,7 @@ def minhash_near_dup_pairs(
         pairs.join(a, "id_a")
         .join(b, "id_b")
         .withColumn("__j", jaccard(F.col("__sh_a"), F.col("__sh_b")))
-        .filter(F.col("__j") >= threshold)
+        .filter(F.col("__j") >= JACCARD_THRESHOLD)
     )
     return verified.select("id_a", "id_b", F.round("__j", 6).alias("jaccard_sim"))
 
@@ -344,7 +347,6 @@ def incremental_near_dup_merge(
     new_docs: DataFrame,
     id_col: str,
     text_col: str,
-    threshold: float = 0.5,
     existing_banded: DataFrame | None = None,
     hash_mode: str = "xxhash",
 ) -> dict[str, DataFrame]:
@@ -477,7 +479,7 @@ def incremental_near_dup_merge(
         cand_cross.join(sh_new, "id_new")
         .join(sh_old, "id_old")
         .withColumn("__j", jaccard(F.col("__sh_id_new"), F.col("__sh_id_old")))
-        .filter(F.col("__j") >= threshold)
+        .filter(F.col("__j") >= JACCARD_THRESHOLD)
         .select(
             "id_new",
             F.col("id_old").alias("id_matched"),
@@ -489,7 +491,7 @@ def incremental_near_dup_merge(
         cand_within.join(sh_new.select(F.col("id_new").alias("id_a"), F.col("__sh_id_new").alias("__sh_a")), "id_a")
         .join(sh_new.select(F.col("id_new").alias("id_b"), F.col("__sh_id_new").alias("__sh_b")), "id_b")
         .withColumn("__j", jaccard(F.col("__sh_a"), F.col("__sh_b")))
-        .filter(F.col("__j") >= threshold)
+        .filter(F.col("__j") >= JACCARD_THRESHOLD)
         .select(
             F.col("id_b").alias("id_new"),
             F.col("id_a").alias("id_matched"),

@@ -43,6 +43,8 @@ from dynamic_etl_spark.session import local_df
 #: prefix_sum's range buckets: one driver-side offset per bucket, one
 #: window partition each.
 PREFIX_SUM_BUCKETS = 64
+#: Tokens per packed training sequence; the registry's DuckDB twin reads it.
+SEQ_TOKENS = 512
 
 
 def prefix_sum(
@@ -98,14 +100,9 @@ def prefix_sum(
     )
 
 
-def sequence_pack(
-    df: DataFrame,
-    id_col: str,
-    token_col: str,
-    budget: int,
-) -> DataFrame:
+def sequence_pack(df: DataFrame, id_col: str, token_col: str) -> DataFrame:
     """Greedy concat-and-chunk packing: documents are concatenated in
-    ``id_col`` order and split every ``budget`` tokens. Emits, per doc:
+    ``id_col`` order and split every ``SEQ_TOKENS`` tokens. Emits, per doc:
 
     - ``global_offset`` — index of the doc's first token in the corpus
       token stream (exclusive prefix sum of ``token_col``);
@@ -116,8 +113,6 @@ def sequence_pack(
 
     Zero-token docs attach to the sequence at their offset and never span.
     """
-    if budget <= 0:
-        raise ValueError(f"budget must be positive, got {budget}")
     cum = prefix_sum(df, id_col, token_col, "__cum")
     tokens = F.col(token_col).cast("bigint")
     start = F.col("__cum") - tokens
@@ -126,10 +121,10 @@ def sequence_pack(
         cum.withColumn("global_offset", start)
         # last token's index; an empty doc has none, pin it to start
         .withColumn("__last", F.greatest(F.col("__cum") - F.lit(1), start))
-        .withColumn("seq_id", F.expr(f"global_offset div {int(budget)}"))
-        .withColumn("seq_offset", F.pmod(F.col("global_offset"), F.lit(budget)))
+        .withColumn("seq_id", F.expr(f"global_offset div {SEQ_TOKENS}"))
+        .withColumn("seq_offset", F.pmod(F.col("global_offset"), F.lit(SEQ_TOKENS)))
         .withColumn(
-            "spans_boundary", F.expr(f"__last div {int(budget)}") > F.col("seq_id")
+            "spans_boundary", F.expr(f"__last div {SEQ_TOKENS}") > F.col("seq_id")
         )
         .drop("__cum", "__last")
     )

@@ -37,6 +37,18 @@ GATE_MAX_MEAN_WORD_LEN = 10.0
 GATE_MAX_SYMBOL_WORD_RATIO = 0.1
 GATE_MAX_TOP_2GRAM_FRAC = 0.20
 GATE_MAX_DUP_3GRAM_FRAC = 0.18
+#: The gram sizes the repetition gates count.
+GATE_NGRAM_SIZES = (2, 3)
+
+# The registry's DuckDB twins read these too.
+#: Terms per document tfidf_topk keeps.
+TFIDF_K = 3
+#: pmi_collocations' minimum bigram count and result size.
+PMI_MIN_COUNT, PMI_TOP_K = 5, 20
+#: Word-gram length of cross_doc_gram_exposure.
+EXPOSURE_K = 3
+#: The logit hashed_linear_score's gate passes at.
+LOGIT_THRESHOLD = 0.0
 
 
 def _gram_rows(df: DataFrame, ns: Sequence[int], id_col: str,
@@ -95,17 +107,17 @@ def _gram_rows(df: DataFrame, ns: Sequence[int], id_col: str,
     )
 
 
-def multi_ngram_stats(df: DataFrame, ns: Sequence[int]) -> DataFrame:
-    """Per-document n-gram statistics for several ``n`` at once.
+def multi_ngram_stats(df: DataFrame) -> DataFrame:
+    """Per-document n-gram statistics for every ``n`` of ``GATE_NGRAM_SIZES``.
 
     One row per input row with ``total_{n}grams``, ``distinct_{n}grams``,
-    ``top_{n}gram_count`` per requested ``n`` (zeros for docs shorter
+    ``top_{n}gram_count`` per ``n`` (zeros for docs shorter
     than ``n``). Counting is explode -> codegen partial aggregation per
     (id, n, gram), then a conditional rollup per id — sharing the token
     window across all ``n`` instead of one pipeline per gram size.
     """
     per_gram = (
-        _gram_rows(df, ns, "doc_id", "text")
+        _gram_rows(df, GATE_NGRAM_SIZES, "doc_id", "text")
         .groupBy("doc_id", "__n", "__gram")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
@@ -119,7 +131,7 @@ def multi_ngram_stats(df: DataFrame, ns: Sequence[int]) -> DataFrame:
     rolled = stats.groupBy("doc_id").agg(
         *[
             agg
-            for n in ns
+            for n in GATE_NGRAM_SIZES
             for agg in (
                 pick("__total", n).alias(f"total_{n}grams"),
                 pick("__distinct", n).alias(f"distinct_{n}grams"),
@@ -133,7 +145,7 @@ def multi_ngram_stats(df: DataFrame, ns: Sequence[int]) -> DataFrame:
         "doc_id",
         *[
             F.coalesce(F.col(c), F.lit(0)).alias(c)
-            for n in ns
+            for n in GATE_NGRAM_SIZES
             for c in (f"total_{n}grams", f"distinct_{n}grams", f"top_{n}gram_count")
         ],
     )
@@ -164,7 +176,7 @@ def repetition_profile(df: DataFrame) -> DataFrame:
             F.when(n_tokens > 0, n_symbols.cast("double") / n_tokens).otherwise(0.0), 6
         ).alias("symbol_word_ratio"),
     )
-    grams = multi_ngram_stats(df, [2, 3])
+    grams = multi_ngram_stats(df)
     prof = (
         base.join(grams, on="doc_id")
         .select(
@@ -214,8 +226,8 @@ def _dup_frac(total: str, distinct: str):
     )
 
 
-def tfidf_topk(df: DataFrame, *, k: int = 3) -> DataFrame:
-    """Top-k TF-IDF terms per document (smoothed idf: ln((N+1)/(df+1))+1,
+def tfidf_topk(df: DataFrame) -> DataFrame:
+    """Top-``TFIDF_K`` TF-IDF terms per document (smoothed idf: ln((N+1)/(df+1))+1,
     the scikit-learn 'smooth_idf' formulation — public knowledge).
 
     Plan: explode tokens -> tf per (doc, term) [codegen partial agg] ->
@@ -241,7 +253,7 @@ def tfidf_topk(df: DataFrame, *, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("__score"), F.asc("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_K)
         .select("doc_id", "rank", "term", "tf", "df", F.round("__score", 6).alias("tfidf"))
     )
 
@@ -358,22 +370,17 @@ def bigram_perplexity_profile(df: DataFrame) -> DataFrame:
     )
 
 
-def pmi_collocations(
-    df: DataFrame,
-    *,
-    min_count: int = 5,
-    top_k: int = 20,
-) -> DataFrame:
+def pmi_collocations(df: DataFrame) -> DataFrame:
     """Collocation mining by pointwise mutual information — WITHOUT libm:
     log is monotone, so ranking by the PMI *ratio*
     ``p(xy) / (p(x) p(y)) = (n_xy * N_uni²) / (N_bi * n_x * n_y)``
     ranks identically to PMI itself, and the ratio is ONE IEEE division
     of two exact integer products — bit-identical across engines while
     the products stay under 2^53 (true far past this corpus; at larger
-    scale route the products through decimal first). ``min_count``
+    scale route the products through decimal first). ``PMI_MIN_COUNT``
     suppresses the low-frequency pairs PMI notoriously over-ranks.
 
-    Emits the ``top_k`` pairs by (ratio DESC, w1, w2) — a deterministic
+    Emits the ``PMI_TOP_K`` pairs by (ratio DESC, w1, w2) — a deterministic
     total order. Scale: unigram and bigram counts are explode +
     partial-agg shuffles; the two count joins shuffle on the token key;
     the two corpus totals are bounded driver scalars (high-water-mark
@@ -396,7 +403,7 @@ def pmi_collocations(
         F.split_part(F.col("__gram"), F.lit(" "), F.lit(1)).alias("w1"),
         F.split_part(F.col("__gram"), F.lit(" "), F.lit(2)).alias("w2"),
         "n_xy",
-    ).filter(F.col("n_xy") >= min_count)
+    ).filter(F.col("n_xy") >= PMI_MIN_COUNT)
     out = (
         pairs.join(uni.select(F.col("w").alias("w1"), F.col("n").alias("n_x")), "w1")
         .join(uni.select(F.col("w").alias("w2"), F.col("n").alias("n_y")), "w2")
@@ -412,7 +419,7 @@ def pmi_collocations(
             ).alias("pmi_ratio"),
         )
         .orderBy(F.col("pmi_ratio").desc(), "w1", "w2")
-        .limit(top_k)
+        .limit(PMI_TOP_K)
     )
     return out
 
@@ -422,10 +429,9 @@ def cross_doc_gram_exposure(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 3,
 ) -> DataFrame:
     """Cross-document duplication EXPOSURE: the fraction of each
-    document's distinct word k-grams that also appear in at least one
+    document's distinct word ``EXPOSURE_K``-grams that also appear in at least one
     OTHER document — the corpus-level complement of the within-document
     repetition gates (Gopher A1.1) and the pairwise near-dup tiers.
     RefinedWeb/C4 prune by exactly this signal (fraction of content
@@ -440,7 +446,7 @@ def cross_doc_gram_exposure(
     from dynamic_etl_spark.ops.lsh import word_shingles
 
     grams = df.select(
-        F.col(id_col), F.explode(word_shingles(F.col(text_col), k)).alias("gram")
+        F.col(id_col), F.explode(word_shingles(F.col(text_col), EXPOSURE_K)).alias("gram")
     )
     # word_shingles is distinct-per-doc, so COUNT(*) per gram == document
     # frequency; map-side partials collapse boilerplate grams pre-shuffle
@@ -470,8 +476,6 @@ def hashed_linear_score(
     weights: DataFrame,
     *,
     n_buckets: int = 64,
-    bias: float = 0.0,
-    threshold: float = 0.0,
 ) -> DataFrame:
     """Linear text-classifier scoring with the hashing trick — the
     model-scored quality filter of modern curation pipelines (a
@@ -491,11 +495,12 @@ def hashed_linear_score(
     decimal and the per-doc sum is order-free — the logit is
     partition- and engine-invariant (repo float discipline). The logit
     surfaces ROUNDED at 6dp; ``passes`` gates the pre-display value
-    (the exact decimal sum cast once to double, plus bias) so the flag
-    never depends on the display rounding.
+    (the exact decimal sum cast once to double) against
+    ``LOGIT_THRESHOLD``, so the flag never depends on the display
+    rounding.
 
     Surface: ``(id, n_tokens, logit, passes)`` — one row per input doc;
-    zero-token docs score ``bias`` (their gate still applies: an empty
+    zero-token docs score 0 (their gate still applies: an empty
     doc is a policy decision for the threshold, not a silent drop —
     unlike the dedup sinks, nothing downstream needs a signature here).
 
@@ -527,7 +532,7 @@ def hashed_linear_score(
             F.sum(F.coalesce(F.col("__w"), F.lit(0).cast("decimal(18,6)"))).alias("__s"),
         )
     )
-    logit_exact = F.coalesce(F.col("__s").cast("double"), F.lit(0.0)) + F.lit(bias)
+    logit_exact = F.coalesce(F.col("__s").cast("double"), F.lit(0.0))
     return (
         df.select("doc_id")
         .join(per_doc, on="doc_id", how="left")
@@ -536,7 +541,7 @@ def hashed_linear_score(
             F.coalesce(F.col("n_tokens"), F.lit(0)).cast("bigint").alias("n_tokens"),
             # + 0.0 collapses a round-to-zero-from-below -0.0 (SCALE.md)
             (F.round(logit_exact, 6) + F.lit(0.0)).alias("logit"),
-            (logit_exact >= F.lit(threshold)).alias("passes"),
+            (logit_exact >= F.lit(LOGIT_THRESHOLD)).alias("passes"),
         )
     )
 

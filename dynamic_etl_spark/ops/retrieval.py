@@ -142,6 +142,9 @@ MMR_POOL_CAP = 8192
 #: (pool_size, dim) combination whose raw payload exceeds this budget
 #: instead of silently ballooning the driver heap.
 MMR_POOL_BUDGET_BYTES = 128 * 2**20
+#: MMR's relevance weight λ (1 - λ weighs diversity); the registry's
+#: DuckDB twin reads it.
+MMR_LAMBDA = 0.5
 
 
 def mmr_select(
@@ -149,12 +152,11 @@ def mmr_select(
     *,
     anchor_id,
     k: int = 10,
-    lam: float = 0.5,
     pool_size: int | None = None,
 ) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein 1998):
     greedily pick ``k`` items maximizing
-    ``lam * rel(d) - (1 - lam) * max_{s in S} sim(d, s)`` — relevance
+    ``λ * rel(d) - (1 - λ) * max_{s in S} sim(d, s)`` (λ = ``MMR_LAMBDA``) — relevance
     traded against redundancy with what's already selected. The
     training-data uses: assembling a DIVERSE eval/demo set around a
     topic anchor, or picking exemplar documents per cluster without
@@ -197,12 +199,12 @@ def mmr_select(
     ~2 jobs instead of k corpus passes + k checkpoints.
 
     Approximation regime: pooled selection equals the exact loop
-    whenever every pick falls inside the rel-top-M pool. High ``lam``
+    whenever every pick falls inside the rel-top-M pool. High λ
     (relevance-dominated, >= 0.5 in practice) keeps picks near the top
-    of the rel ranking; LOW lam weights diversity enough that a pick
+    of the rel ranking; LOW λ weights diversity enough that a pick
     can in principle score above pool members from OUTSIDE any
     rel-pruned pool — use the exact mode there, or widen the pool
-    (pytest pins pooled == exact on the fixture at lam = 0.5).
+    (pytest pins pooled == exact on the fixture at λ = 0.5).
 
     Driver-memory sizing (VERDICT r11 #3): the pooled mode ships
     ``pool_size * dim * 8`` bytes of float64 vectors to the driver
@@ -235,7 +237,7 @@ def mmr_select(
         .filter(l2_norm(F.col("__v")) > 0.0)
         .withColumn("__rel", cosine(F.col("__v"), vec_lit(anchor)))
     )
-    one_minus = 1.0 - lam
+    lam, one_minus = MMR_LAMBDA, 1.0 - MMR_LAMBDA
     out_schema = T.StructType(
         [
             T.StructField("rank", T.IntegerType(), False),

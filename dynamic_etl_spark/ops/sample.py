@@ -19,7 +19,7 @@ that determinism to distributed filters.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -29,6 +29,18 @@ from pyspark.sql import functions as F
 _AFFINE_M = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 #: Knuth's multiplicative-hash constant (2^32 / phi).
 _AFFINE_A = 2_654_435_761
+
+#: Keep rate per language and for every other language; the registry's
+#: DuckDB twin builds its CASE from the same map.
+LANG_FRACTIONS = {"en": 0.5, "es": 0.25, "de": 0.1}
+OTHER_LANG_FRACTION = 0.75
+#: Salt of the train/validation/test coin, shared by the group-holdout
+#: split, the row-hash split it is audited against and their SQL twins.
+SPLIT_SALT = 73
+#: Shard count and salt of the training-shard assignment and its SQL twin.
+N_SHARDS, SHARD_SALT = 16, 13
+#: Rows a per-key reservoir keeps.
+RESERVOIR_N = 5
 
 
 def uniform_hash(*cols: Column | str, salt: int = 0) -> Column:
@@ -164,41 +176,23 @@ def hash_split(
     return df.withColumn("split", expr)
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata: Sequence[str],
-    fractions: Mapping[tuple | str, float],
-    uniform: Column,
-    default_fraction: float = 0.0,
-) -> DataFrame:
-    """Keep each row with probability ``fractions[its stratum]``, decided
-    by comparing the caller-supplied deterministic ``uniform`` column to
-    the stratum's fraction. Rows in strata absent from ``fractions`` keep
-    with ``default_fraction`` (0 = drop, 1 = keep all).
+def stratified_sample(df: DataFrame, lang_col: str, uniform: Column) -> DataFrame:
+    """Keep each row with probability ``LANG_FRACTIONS[its language]``,
+    decided by comparing the caller-supplied deterministic ``uniform``
+    column to the language's fraction. Rows in languages absent from
+    ``LANG_FRACTIONS`` keep with ``OTHER_LANG_FRACTION``.
 
-    ``fractions`` keys are tuples matching ``strata`` (bare values allowed
-    for a single stratum column). The lookup compiles to a literal CASE
-    chain — strata maps are config-sized by definition; a data-sized map
-    should be a broadcast join instead.
+    The lookup compiles to a literal CASE chain — strata maps are
+    config-sized by definition; a data-sized map should be a broadcast
+    join instead.
     """
-    frac = F.lit(float(default_fraction))
-    for key, fraction in reversed(list(fractions.items())):
-        key_t = key if isinstance(key, tuple) else (key,)
-        if len(key_t) != len(strata):
-            raise ValueError(f"stratum key {key!r} does not match strata {strata!r}")
-        cond = F.lit(True)
-        for col, val in zip(strata, key_t):
-            cond = cond & (F.col(col) == F.lit(val))
-        frac = F.when(cond, F.lit(float(fraction))).otherwise(frac)
+    frac = F.lit(float(OTHER_LANG_FRACTION))
+    for lang, fraction in reversed(list(LANG_FRACTIONS.items())):
+        frac = F.when(F.col(lang_col) == F.lit(lang), F.lit(float(fraction))).otherwise(frac)
     return df.filter(uniform < frac)
 
 
-def leakage_safe_split(
-    df: DataFrame,
-    splits: Sequence[tuple[str, float]],
-    *,
-    salt: int = 0,
-) -> DataFrame:
+def leakage_safe_split(df: DataFrame, splits: Sequence[tuple[str, float]]) -> DataFrame:
     """Group-holdout train/validation/test split: every EXACT-DUPLICATE
     group (md5 content fingerprint, the engine's whole-doc dedup key)
     receives ONE split assignment, hashed from the group's canonical
@@ -227,23 +221,21 @@ def leakage_safe_split(
         .withColumn("group_size", F.count(F.lit(1)).over(w))
         .drop("__fp")
     )
-    return hash_split(grouped, uniform_affine(F.col("group_id"), salt=salt), splits)
+    return hash_split(grouped, uniform_affine(F.col("group_id"), SPLIT_SALT), splits)
 
 
-def assign_shard(key: Column | str, n_shards: int, salt: int = 0) -> Column:
-    """Deterministic shard id in [0, n_shards): ``floor(U(key) * n)`` over
+def assign_shard(key: Column | str) -> Column:
+    """Deterministic shard id in [0, N_SHARDS): ``floor(U(key) * n)`` over
     the SQL-reproducible affine uniform. Row-local codegen — no shuffle,
     stable under any partitioning, and a training job can recompute the
     same assignment from the key alone (no stored mapping to ship).
     SQL twin: ``sql_assign_shard``."""
-    if n_shards <= 0:
-        raise ValueError(f"n_shards must be positive, got {n_shards}")
-    return F.floor(uniform_affine(key, salt) * n_shards).cast("int")
+    return F.floor(uniform_affine(key, SHARD_SALT) * N_SHARDS).cast("int")
 
 
-def sql_assign_shard(key_sql: str, n_shards: int, salt: int = 0) -> str:
+def sql_assign_shard(key_sql: str) -> str:
     """DuckDB twin of :func:`assign_shard`."""
-    return f"CAST(floor({sql_uniform_affine(key_sql, salt)} * {n_shards}) AS INT)"
+    return f"CAST(floor({sql_uniform_affine(key_sql, SHARD_SALT)} * {N_SHARDS}) AS INT)"
 
 
 def weighted_sample_without_replacement(
@@ -290,10 +282,8 @@ def weighted_sample_without_replacement(
     return eligible.orderBy(*order).limit(k).drop("__aes_key")
 
 
-def build_reservoir_state(
-    df: DataFrame, keys: Sequence[str], item: str, n: int
-) -> DataFrame:
-    """Mergeable per-key uniform RESERVOIR: the ``n`` rows with the
+def build_reservoir_state(df: DataFrame, keys: Sequence[str], item: str) -> DataFrame:
+    """Mergeable per-key uniform RESERVOIR: the ``RESERVOIR_N`` rows with the
     smallest deterministic priority per key group, priority =
     ``uniform_affine(item)`` with the item id as tie-break (``item``
     must uniquely identify a row, e.g. an event id). The fourth
@@ -322,12 +312,12 @@ def build_reservoir_state(
     )
     return (
         base.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
+        .filter(F.col("__rn") <= RESERVOIR_N)
         .drop("__rn")
     )
 
 
-def merge_reservoir_state(state: DataFrame, delta: DataFrame, n: int) -> DataFrame:
+def merge_reservoir_state(state: DataFrame, delta: DataFrame) -> DataFrame:
     """Fold a delta reservoir into the stored reservoir: union and keep
     the bottom-n priorities per key again. Summary-sized shuffle."""
     keys = [c for c in state.columns if c not in ("state_item", "state_pri")]
@@ -337,7 +327,7 @@ def merge_reservoir_state(state: DataFrame, delta: DataFrame, n: int) -> DataFra
     return (
         state.unionByName(delta)
         .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= n)
+        .filter(F.col("__rn") <= RESERVOIR_N)
         .drop("__rn")
     )
 

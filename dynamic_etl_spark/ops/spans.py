@@ -34,19 +34,19 @@ from pyspark.sql import functions as F
 from dynamic_etl_spark.ops.lsh import gram_seq_pretokenized
 from dynamic_etl_spark.ops.text import tokens
 
+#: Window length in tokens of a marked span; the registry's DuckDB twins
+#: read it.
+SPAN_K = 5
 
-def duplicated_span_stats(
-    df: DataFrame,
-    *,
-    k: int = 5,
-) -> DataFrame:
+
+def duplicated_span_stats(df: DataFrame) -> DataFrame:
     """Per-document duplicated-span profile + cleaned text.
 
     Output: (id, n_tokens, n_dup_spans, n_dup_tokens, dup_token_frac,
     cleaned_text). ``cleaned_text`` is the token-normalized document
     (lowercased, single-space joined — the same normalization every
     token statistic in this engine uses) with every duplicated span
-    removed; documents shorter than ``k`` tokens emit no windows and
+    removed; documents shorter than ``SPAN_K`` tokens emit no windows and
     pass through untouched.
 
     Plan shape: grams -> global count (>=2 occurrences anywhere marks a
@@ -57,13 +57,13 @@ def duplicated_span_stats(
     stream -> ordered re-assembly. The merge window's orderBy is gpos,
     unique per document (total order per repo rule)."""
     base = _tokenized(df, "doc_id", "text")
-    grams = _positional_grams(base, "doc_id", k)
+    grams = _positional_grams(base, "doc_id")
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("__occ"))
     dup_starts = (
         grams.join(counts.filter(F.col("__occ") >= 2), "gram")
         .select("doc_id", "gpos")
     )
-    return span_stats_from_starts(base, dup_starts, id_col="doc_id", k=k)
+    return span_stats_from_starts(base, dup_starts, id_col="doc_id")
 
 
 def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -87,22 +87,17 @@ def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _positional_grams(base: DataFrame, id_col: str, k: int) -> DataFrame:
-    """(id, gpos, gram) for every k-token window of every document."""
-    return base.filter(F.size("__toks") >= k).select(
+def _positional_grams(base: DataFrame, id_col: str) -> DataFrame:
+    """(id, gpos, gram) for every SPAN_K-token window of every document."""
+    return base.filter(F.size("__toks") >= SPAN_K).select(
         id_col,
-        F.posexplode(gram_seq_pretokenized(F.col("__toks"), k)).alias(
+        F.posexplode(gram_seq_pretokenized(F.col("__toks"), SPAN_K)).alias(
             "gpos", "gram"
         ),
     )
 
 
-def contaminated_span_stats(
-    df: DataFrame,
-    benchmark: DataFrame,
-    *,
-    k: int = 5,
-) -> DataFrame:
+def contaminated_span_stats(df: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Surgical span-level decontamination: ExactSubstr's window-merge
     machinery pointed at a BENCHMARK instead of the corpus itself — any
     train k-gram occurring anywhere in the eval/benchmark text marks its
@@ -126,20 +121,20 @@ def contaminated_span_stats(
     base = _tokenized(df, "doc_id", "text")
     bench_toks = benchmark.select(tokens(F.col("text")).alias("__toks"))
     bench_grams = (
-        bench_toks.filter(F.size("__toks") >= k)
-        .select(F.explode(gram_seq_pretokenized(F.col("__toks"), k)).alias("gram"))
+        bench_toks.filter(F.size("__toks") >= SPAN_K)
+        .select(F.explode(gram_seq_pretokenized(F.col("__toks"), SPAN_K)).alias("gram"))
         .distinct()
     )
     dup_starts = (
-        _positional_grams(base, "doc_id", k)
+        _positional_grams(base, "doc_id")
         .join(F.broadcast(bench_grams), "gram", "leftsemi")
         .select("doc_id", "gpos")
     )
-    return span_stats_from_starts(base, dup_starts, id_col="doc_id", k=k)
+    return span_stats_from_starts(base, dup_starts, id_col="doc_id")
 
 
 def span_stats_from_starts(
-    base: DataFrame, dup_starts: DataFrame, *, id_col: str, k: int
+    base: DataFrame, dup_starts: DataFrame, *, id_col: str
 ) -> DataFrame:
     """Shared tail of the span-removal family: overlap-merge the marked
     [gpos, gpos+k-1] windows, cut covered positions, re-assemble, and
@@ -155,7 +150,7 @@ def span_stats_from_starts(
             "__brk",
             F.when(
                 F.lag("gpos").over(w).isNull()
-                | (F.col("gpos") > F.lag("gpos").over(w) + (k - 1)),
+                | (F.col("gpos") > F.lag("gpos").over(w) + (SPAN_K - 1)),
                 1,
             ).otherwise(0),
         )
@@ -166,7 +161,7 @@ def span_stats_from_starts(
         .groupBy(id_col, "__island")
         .agg(
             F.min("gpos").alias("__s"),
-            (F.max("gpos") + (k - 1)).alias("__e"),
+            (F.max("gpos") + (SPAN_K - 1)).alias("__e"),
         )
     )
     # r14 (VERDICT r13 #6): the r13 tail exploded the FULL token mass to

@@ -106,16 +106,22 @@ def fingerprint_md5(c: Column) -> Column:
     return F.md5(normalize_for_fingerprint(c))
 
 
-def winnow_fingerprints(df, *, k: int = 3, w: int = 4):
+#: Winnowing's word-gram length and window width (in grams); the
+#: registry's DuckDB twins read both.
+WINNOW_K, WINNOW_W = 3, 4
+
+
+def winnow_fingerprints(df):
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 "Winnowing: Local Algorithms for Document Fingerprinting").
 
-    Every window of ``w`` consecutive word-``k``-gram hashes contributes
-    its minimum hash; the distinct set of selected hashes is the
-    document's fingerprint. The winnowing guarantee: any run of
-    ``w + k - 1`` shared words between two documents selects at least one
-    common fingerprint — the property overlap/plagiarism detection and
-    partial-dup mining rely on, at ~1/w the density of the full gram set.
+    Every window of ``WINNOW_W`` consecutive word-``WINNOW_K``-gram
+    hashes contributes its minimum hash; the distinct set of selected
+    hashes is the document's fingerprint. The winnowing guarantee: any
+    run of ``w + k - 1`` shared words between two documents selects at
+    least one common fingerprint — the property overlap/plagiarism
+    detection and partial-dup mining rely on, at ~1/w the density of the
+    full gram set.
 
     Hashes are md5 hex strings ordered lexicographically, NOT xxhash64:
     md5 is the one hash both engines share, so the DuckDB oracle can
@@ -132,7 +138,7 @@ def winnow_fingerprints(df, *, k: int = 3, w: int = 4):
     where fp_digest = md5 of the ','-joined ascending fingerprint set.
     """
     return (
-        winnow_fp_rows(df, k=k, w=w)
+        winnow_fp_rows(df)
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_set("fp")).alias("__fps"))
         .select(
@@ -143,7 +149,7 @@ def winnow_fingerprints(df, *, k: int = 3, w: int = 4):
     )
 
 
-def winnow_fp_rows(df, *, k: int = 3, w: int = 4):
+def winnow_fp_rows(df):
     """The (id, fp) DISTINCT selected-fingerprint rows behind
     :func:`winnow_fingerprints` — factored out so pair mining can join
     on raw fingerprints while the digest query keeps its aggregate
@@ -154,28 +160,21 @@ def winnow_fp_rows(df, *, k: int = 3, w: int = 4):
 
     g = df.select(
         F.col("doc_id"),
-        F.posexplode(word_gram_seq(F.col("text"), k)).alias("pos", "gram"),
+        F.posexplode(word_gram_seq(F.col("text"), WINNOW_K)).alias("pos", "gram"),
     ).withColumn("h", F.md5("gram"))
     part = Window.partitionBy("doc_id")
-    frame = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
+    frame = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
     return (
         g.withColumn("n_grams", F.count(F.lit(1)).over(part))
         .withColumn("fp", F.min("h").over(frame))
         # full windows only (plus the clamped single window when n < w)
-        .filter(F.col("pos") <= F.greatest(F.col("n_grams") - w, F.lit(0)))
+        .filter(F.col("pos") <= F.greatest(F.col("n_grams") - WINNOW_W, F.lit(0)))
         .select("doc_id", "fp")
         .distinct()
     )
 
 
-def winnow_overlap_pairs(
-    df,
-    *,
-    k: int = 3,
-    w: int = 4,
-    min_shared: int = 2,
-    max_df: int | None = None,
-):
+def winnow_overlap_pairs(df, *, min_shared: int = 2, max_df: int | None = None):
     """MOSS-style copy detection between documents (Schleimer et al.
     SIGMOD'03 §5 — their deployed service matches documents BY shared
     winnowing fingerprints): every unordered pair sharing at least
@@ -211,9 +210,7 @@ def winnow_overlap_pairs(
     # 3.5s -> 2.7s; surfaced plan sheds the duplicated fingerprint
     # subtrees). The checkpointed rows are (id, fp) — a fraction of the
     # input text's bytes at any scale (one fingerprint per w-window).
-    fps = winnow_fp_rows(
-        df, k=k, w=w
-    ).localCheckpoint()
+    fps = winnow_fp_rows(df).localCheckpoint()
     totals = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__n"))
     joinable = fps
     if max_df is not None:
@@ -245,19 +242,19 @@ def winnow_overlap_pairs(
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    chunk_tokens: int = 64,
-    stride: int = 48,
-) -> DataFrame:
+#: chunk_documents' window length and stride in tokens (8 tokens of
+#: overlap); the registry's DuckDB twin reads both.
+CHUNK_TOKENS, CHUNK_STRIDE = 32, 24
+
+
+def chunk_documents(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Split documents into overlapping token windows — the context-window
     preprocessing step between cleaning and sequence packing: a training
-    pipeline needs bounded-length samples, and ``stride < chunk_tokens``
-    keeps ``chunk_tokens - stride`` tokens of overlap so no boundary
-    context is lost. Emits (id, chunk_idx, chunk_text, n_chunk_tokens);
-    windows start at every ``stride`` tokens while any token remains, so
+    pipeline needs bounded-length samples, and ``CHUNK_STRIDE <
+    CHUNK_TOKENS`` keeps ``CHUNK_TOKENS - CHUNK_STRIDE`` tokens of overlap
+    so no boundary context is lost. Emits (id, chunk_idx, chunk_text,
+    n_chunk_tokens); windows start at every ``CHUNK_STRIDE`` tokens while
+    any token remains, so
     the tail chunk may be short; zero-token documents emit no chunks.
 
     Scale: chunking is row-local fan-out (explode of a per-doc start
@@ -267,13 +264,13 @@ def chunk_documents(
     """
     toks = tokens(F.col(text_col))
     starts = F.sequence(
-        F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(stride)
+        F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(CHUNK_STRIDE)
     )
     exploded = (
         docs.filter(F.size(toks) > 0)
         .select(F.col(id_col), toks.alias("__toks"), F.posexplode(starts).alias("__i", "__start"))
     )
-    chunk = F.slice(F.col("__toks"), F.col("__start") + 1, chunk_tokens)
+    chunk = F.slice(F.col("__toks"), F.col("__start") + 1, CHUNK_TOKENS)
     return exploded.select(
         F.col(id_col),
         F.col("__i").cast("long").alias("chunk_idx"),
@@ -282,25 +279,24 @@ def chunk_documents(
     )
 
 
-def vocab_build(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_count: int = 2,
-    max_vocab: int = 10_000,
-) -> DataFrame:
-    """Corpus vocabulary: the ``max_vocab`` most frequent tokens with
-    ``count >= min_count``, assigned dense ids 1..K by (count DESC,
+#: vocab_build's vocabulary size and the count a token needs; the
+#: registry's DuckDB twin reads both.
+MAX_VOCAB, VOCAB_MIN_COUNT = 500, 5
+
+
+def vocab_build(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Corpus vocabulary: the ``MAX_VOCAB`` most frequent tokens with
+    ``count >= VOCAB_MIN_COUNT``, assigned dense ids 1..K by (count DESC,
     token ASC) — the deterministic total order makes the id assignment
     reproducible at any parallelism (a bare count-ordered row_number
     splits ties by partition order). Emits (token, n, vocab_id).
 
     Scale: token counts are one explode + partial-agg shuffle; the top-K
     selection is a sort-LIMIT (Spark's TakeOrderedAndProject: each
-    partition keeps its own top ``max_vocab``, one bounded merge — the
+    partition keeps its own top ``MAX_VOCAB``, one bounded merge — the
     WindowGroupLimit rank-pushdown does NOT fire on unpartitioned
     windows, measured, so a row_number-then-filter would sort the whole
-    token space). Only the max_vocab-row survivor set goes through the
+    token space). Only the MAX_VOCAB-row survivor set goes through the
     single-partition numbering window — the adjudicated bounded-window
     pattern.
     """
@@ -308,9 +304,9 @@ def vocab_build(
         docs.select(F.explode(tokens(F.col(text_col))).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= min_count)
+        .filter(F.col("n") >= VOCAB_MIN_COUNT)
         .orderBy(F.col("n").desc(), F.col("token"))
-        .limit(max_vocab)
+        .limit(MAX_VOCAB)
     )
     w = Window.orderBy(F.col("n").desc(), F.col("token"))
     return counts.select(
@@ -415,13 +411,14 @@ def sql_repair_encoding(expr: str) -> str:
     """DuckDB twin of :func:`repair_encoding`: the same ordered replace
     chain generated from the same pair table (single-source, like the
     MinHash affine constants)."""
-
-    def q(s: str) -> str:
-        return s.replace("'", "''")
-
     for bad, good in ENCODING_REPAIR_PAIRS:
-        expr = f"replace({expr}, '{q(bad)}', '{q(good)}')"
+        expr = f"replace({expr}, {sql_literal(bad)}, {sql_literal(good)})"
     return expr
+
+
+def sql_literal(s: str) -> str:
+    """``s`` as a DuckDB string literal."""
+    return "'" + s.replace("'", "''") + "'"
 
 
 #: URL matcher, written in the Java-regex ∩ RE2 subset (no lookaround,

@@ -18,16 +18,18 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+#: The regular grid's step (hourly); the registry's DuckDB twin reads it.
+STEP_SECONDS = 3600
+
 
 def resample_linear(
     df: DataFrame,
     key_cols: Sequence[str],
     ts_col: str,
     value_col: str,
-    step_seconds: int,
     tiebreak_col: str | None = None,
 ) -> DataFrame:
-    """Resample each key's series to a regular ``step_seconds`` grid,
+    """Resample each key's series to a regular ``STEP_SECONDS`` grid,
     linearly interpolating between the surrounding observations.
 
     Grid points span ``ceil(min_ts/step)*step .. max_ts`` per key. A
@@ -50,7 +52,7 @@ def resample_linear(
     # pair one observation's timestamp with another's value)
     df = df.filter(F.col(value_col).isNotNull())
     us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    step_us = int(step_seconds) * 1_000_000
+    step_us = STEP_SECONDS * 1_000_000
     # observations with EQUAL timestamps need a total order (repo window
     # rule) or the carried value is partition-order-dependent; grid rows
     # are unique per (key, us), so their null tiebreak never compares

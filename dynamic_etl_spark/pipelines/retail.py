@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from dynamic_etl_spark import generate as G
 from dynamic_etl_spark.io import (
     FileQueue,
+    PoisonPill,
     SkipRetry,
     latest_file,
     read_csv_schema_on_read,
@@ -399,7 +400,9 @@ def dw_load_pipeline(
     staging+swap. The fact loader replays the reference's richest
     lifecycle (scripts2/load_fact_sales_dw.py): oldest-unprocessed file
     via the processed-log queue (:65-77), header canonicalization +
-    alias resolution (:98,178-210), empty-dim guard -> leave the file
+    alias resolution (:98,178-210; a missing required column is a
+    PoisonPill — the file is marked processed, then the error surfaces,
+    :204-210), empty-dim guard -> leave the file
     unprocessed for retry (:156-175, U6 SkipRetry; the dim counts come
     from the ``load_dim_*`` step outputs in the context), per-row key
     resolution with drop-on-miss (:213-261), numeric cleanse
@@ -442,18 +445,25 @@ def dw_load_pipeline(
                 if ctx[f"load_{n}"] == 0:
                     raise SkipRetry(f"dimension {n} is empty; retry next run")
             raw = read_csv_schema_on_read(spark, path, sep=",")
-            resolved = resolve_aliases(
-                raw,
-                {
-                    "SALES_ID": ["SALES_ID", "SALE_ID"],
-                    "DATE_ID": ["DATE_ID"],
-                    "STORE_ID": ["STORE_ID"],
-                    "PRODUCT_ID": ["PRODUCT_ID"],
-                    "DISTRIBUTOR_ID": ["DISTRIBUTOR_ID", "DIST_ID"],
-                    "QUANTITY_SOLD": ["QUANTITY_SOLD", "QUANTITY", "QTY"],
-                    "NET_AMOUNT": ["NET_AMOUNT", "NET_SALES", "NET"],
-                },
-            )
+            try:
+                resolved = resolve_aliases(
+                    raw,
+                    {
+                        "SALES_ID": ["SALES_ID", "SALE_ID"],
+                        "DATE_ID": ["DATE_ID"],
+                        "STORE_ID": ["STORE_ID"],
+                        "PRODUCT_ID": ["PRODUCT_ID"],
+                        "DISTRIBUTOR_ID": ["DISTRIBUTOR_ID", "DIST_ID"],
+                        "QUANTITY_SOLD": ["QUANTITY_SOLD", "QUANTITY", "QTY"],
+                        "NET_AMOUNT": ["NET_AMOUNT", "NET_SALES", "NET"],
+                    },
+                )
+            except ValueError as exc:
+                # a structural defect no retry can fix: the queue marks
+                # the file processed, then the error surfaces (U6,
+                # load_fact_sales_dw.py:204-210), so it cannot wedge
+                # every later run
+                raise PoisonPill(f"{path}: {exc}") from exc
             typed = resolved.select(
                 F.col("SALES_ID").cast("long").alias("sales_id"),
                 F.col("DATE_ID").cast("int").alias("date_id"),

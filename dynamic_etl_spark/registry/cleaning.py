@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops import clean as C
 from dynamic_etl_spark.ops import dedup as D
+from dynamic_etl_spark.ops.joins import FUZZY_MAX_DISTANCE
 from dynamic_etl_spark.registry.core import Query, QueryRegistry, t
 from dynamic_etl_spark.session import local_df
 
@@ -854,11 +855,10 @@ def fuzzy_brand_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         dirty_col="raw_brand",
         dim_col="p_brand",
         block=lambda c: F.substring(c, -2, 2),
-        max_distance=2,
     )
 
 
-FUZZY_BRAND_ORACLE = """
+FUZZY_BRAND_ORACLE = f"""
 WITH dirty AS (
   SELECT DISTINCT
     CASE WHEN p_partkey % 5 = 0 THEN substr(p_brand, 1, 2) || substr(p_brand, 4)
@@ -872,7 +872,7 @@ cand AS (
          CAST(levenshtein(d.raw_brand, m.dim_val) AS BIGINT) AS dist
   FROM dirty d
   JOIN dim m ON right(d.raw_brand, 2) = right(m.dim_val, 2)
-  WHERE levenshtein(d.raw_brand, m.dim_val) <= 2
+  WHERE levenshtein(d.raw_brand, m.dim_val) <= {FUZZY_MAX_DISTANCE}
 )
 SELECT raw_brand, dim_val AS match_value, dist AS match_distance
 FROM (

@@ -17,12 +17,16 @@ from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops import pii as PII
 from dynamic_etl_spark.ops.decontam import (
+    DECONTAM_K,
+    DECONTAM_MIN_SHARED,
     contamination_profile,
     contamination_profile_bloom,
 )
 from dynamic_etl_spark.ops import text as TX
-from dynamic_etl_spark.ops.sample import sql_assign_shard, sql_uniform_affine
-from dynamic_etl_spark.ops.text import winnow_fingerprints
+from dynamic_etl_spark.ops.lsh import JACCARD_THRESHOLD
+from dynamic_etl_spark.ops.sample import SPLIT_SALT, sql_assign_shard, sql_uniform_affine
+from dynamic_etl_spark.ops.spans import SPAN_K
+from dynamic_etl_spark.ops.text import WINNOW_K, WINNOW_W, winnow_fingerprints
 from dynamic_etl_spark.registry.core import Query, QueryRegistry, t
 from dynamic_etl_spark.registry.llm import _SQL_NORM  # shared fingerprint twin
 from dynamic_etl_spark.registry.llm import sql_positional_grams, sql_span_tail
@@ -67,7 +71,7 @@ def _planted_decontam_inputs(spark: SparkSession, sf_dir: str):
 
 def benchmark_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, bench = _planted_decontam_inputs(spark, sf_dir)
-    return contamination_profile(corpus, bench, k=5, min_shared=5)
+    return contamination_profile(corpus, bench)
 
 
 def benchmark_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -77,12 +81,14 @@ def benchmark_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFra
     (ops/decontam.contamination_profile_bloom). Output equals the exact
     path — it shares DECONTAMINATION_ORACLE verbatim."""
     corpus, bench = _planted_decontam_inputs(spark, sf_dir)
-    return contamination_profile_bloom(corpus, bench, k=5, min_shared=5)
+    return contamination_profile_bloom(corpus, bench)
 
 
-_SQL_GRAMS_5 = """list_distinct(list_transform(
-           range(0, greatest(len(toks) - 5, 0) + 1),
-           i -> array_to_string(toks[i + 1 : i + 5], ' ')
+def _sql_gram_set(k: int) -> str:
+    """The distinct word k-grams of ``toks`` (ops/lsh.word_shingles)."""
+    return f"""list_distinct(list_transform(
+           range(0, greatest(len(toks) - {k}, 0) + 1),
+           i -> array_to_string(toks[i + 1 : i + {k}], ' ')
          ))"""
 
 #: Planted-fixture CTEs (bench + leaked corpus) shared verbatim by every
@@ -106,11 +112,11 @@ corpus AS (
 DECONTAMINATION_ORACLE = f"""
 {_PLANTED_FIXTURE_CTES}
 bgrams AS (
-  SELECT DISTINCT unnest({_SQL_GRAMS_5}) AS g
+  SELECT DISTINCT unnest({_sql_gram_set(DECONTAM_K)}) AS g
   FROM (SELECT {_SQL_TOKENS} AS toks FROM bench)
 ),
 cgrams AS (
-  SELECT doc_id, unnest({_SQL_GRAMS_5}) AS g
+  SELECT doc_id, unnest({_sql_gram_set(DECONTAM_K)}) AS g
   FROM (SELECT doc_id, {_SQL_TOKENS} AS toks FROM corpus)
 ),
 prof AS (
@@ -122,7 +128,7 @@ prof AS (
 )
 SELECT doc_id, n_grams, n_shared_grams,
        round(CAST(n_shared_grams AS DOUBLE) / n_grams, 6) AS contamination_ratio,
-       CAST(n_shared_grams >= 5 AS INT) AS is_contaminated
+       CAST(n_shared_grams >= {DECONTAM_MIN_SHARED} AS INT) AS is_contaminated
 FROM prof
 """
 
@@ -131,13 +137,13 @@ def benchmark_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Surgical span-level decontamination over the SAME planted fixture
     as benchmark_decontamination (ops/spans.contaminated_span_stats):
     instead of dropping contaminated documents, cut the maximal spans of
-    benchmark-overlapping 5-gram windows out of them. The planted
+    benchmark-overlapping SPAN_K-gram windows out of them. The planted
     80-char benchmark fragments come out; the document stays. Output is
     the span-removal profile renamed to the decontamination vocabulary."""
     from dynamic_etl_spark.ops.spans import contaminated_span_stats
 
     corpus, bench = _planted_decontam_inputs(spark, sf_dir)
-    return contaminated_span_stats(corpus, bench, k=5).select(
+    return contaminated_span_stats(corpus, bench).select(
         "doc_id",
         "n_tokens",
         F.col("n_dup_spans").alias("n_contam_spans"),
@@ -153,14 +159,14 @@ base AS (
   SELECT doc_id, {_SQL_TOKENS} AS toks FROM corpus
 ),
 bgr AS (
-  SELECT DISTINCT unnest({_SQL_GRAMS_5}) AS gram
+  SELECT DISTINCT unnest({_sql_gram_set(SPAN_K)}) AS gram
   FROM (SELECT {_SQL_TOKENS} AS toks FROM bench)
-  WHERE len(toks) >= 5
+  WHERE len(toks) >= {SPAN_K}
 ),
-g AS ({sql_positional_grams(5)}
+g AS ({sql_positional_grams()}
 ),
 d AS (SELECT g.doc_id, g.gpos FROM g JOIN bgr USING (gram)),
-{sql_span_tail(5)}
+{sql_span_tail()}
 SELECT b.doc_id,
        CAST(len(b.toks) AS BIGINT) AS n_tokens,
        CAST(COALESCE(st.n_spans, 0) AS BIGINT) AS n_contam_spans,
@@ -246,23 +252,22 @@ FROM dirty
 
 
 # ==========================================================================
-# Winnowing fingerprints (k=3 word grams, window w=4; md5 hashes so the
-# oracle reproduces selections bit-for-bit — see ops/text.py docstring)
+# Winnowing fingerprints (WINNOW_K word grams, windows of WINNOW_W; md5
+# hashes so the oracle reproduces selections bit-for-bit — see
+# ops/text.py docstring)
 # ==========================================================================
 
 def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return winnow_fingerprints(ensure_fanout_parallelism(docs), k=3, w=4)
+    return winnow_fingerprints(ensure_fanout_parallelism(docs))
 
 
-WINNOWING_ORACLE = f"""
-WITH base AS (
-  SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents
-),
-seq AS (
+# The DuckDB twin of ops/text.winnow_fp_rows over ``base(doc_id, toks)``:
+# the distinct selected fingerprints ``f(doc_id, fp)``.
+_SQL_WINNOW_FP = f"""seq AS (
   SELECT doc_id,
-         list_transform(range(0, greatest(len(toks) - 3, 0) + 1),
-                        i -> array_to_string(toks[i + 1 : i + 3], ' ')) AS grams
+         list_transform(range(0, greatest(len(toks) - {WINNOW_K}, 0) + 1),
+                        i -> array_to_string(toks[i + 1 : i + {WINNOW_K}], ' ')) AS grams
   FROM base
 ),
 g AS (
@@ -275,13 +280,19 @@ g AS (
 m AS (
   SELECT doc_id, n_grams, pos,
          min(md5(gram)) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
+                              ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp
   FROM g
 ),
 f AS (
   SELECT DISTINCT doc_id, fp FROM m
-  WHERE pos <= greatest(n_grams - 4, 0) + 1
-)
+  WHERE pos <= greatest(n_grams - {WINNOW_W}, 0) + 1
+)"""
+
+WINNOWING_ORACLE = f"""
+WITH base AS (
+  SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents
+),
+{_SQL_WINNOW_FP}
 SELECT doc_id, count(*) AS n_fingerprints,
        md5(string_agg(fp, ',' ORDER BY fp)) AS fp_digest
 FROM f
@@ -538,11 +549,11 @@ def leakage_safe_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     feed = docs.select("doc_id", "text").unionByName(resent)
     return leakage_safe_split(
-        feed, [("train", 0.98), ("validation", 0.01), ("test", 0.01)], salt=73
+        feed, [("train", 0.98), ("validation", 0.01), ("test", 0.01)]
     ).select("doc_id", "group_id", "group_size", "split")
 
 
-_SQL_U73G = sql_uniform_affine("group_id", 73)
+_SQL_SPLIT_U_GROUP = sql_uniform_affine("group_id", SPLIT_SALT)
 LEAKAGE_SAFE_SPLIT_ORACLE = f"""
 WITH feed AS (
   SELECT doc_id, text FROM documents
@@ -557,8 +568,8 @@ g AS (
   FROM feed
 )
 SELECT doc_id, group_id, group_size,
-       CASE WHEN {_SQL_U73G} < 0.98 THEN 'train'
-            WHEN {_SQL_U73G} < 0.99 THEN 'validation'
+       CASE WHEN {_SQL_SPLIT_U_GROUP} < 0.98 THEN 'train'
+            WHEN {_SQL_SPLIT_U_GROUP} < 0.99 THEN 'validation'
             ELSE 'test' END AS split
 FROM g
 """
@@ -592,13 +603,13 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     feed = docs.select("doc_id", "text").unionByName(resent)
     splits = [("train", 0.98), ("validation", 0.01), ("test", 0.01)]
 
-    holdout = leakage_safe_split(feed, splits, salt=73).select(
+    holdout = leakage_safe_split(feed, splits).select(
         "doc_id", "group_id", "split"
     )
     # naive scheme: the row's own id flips the coin; group_id rides along
     # (from the same grouped frame) purely to MEASURE the damage
     naive = hash_split(
-        holdout.drop("split"), uniform_affine(F.col("doc_id"), salt=73), splits
+        holdout.drop("split"), uniform_affine(F.col("doc_id"), SPLIT_SALT), splits
     )
 
     def _audit(assigned: DataFrame, scheme: str) -> DataFrame:
@@ -637,7 +648,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_U73D = sql_uniform_affine("doc_id", 73)
+_SQL_SPLIT_U_DOC = sql_uniform_affine("doc_id", SPLIT_SALT)
 SPLIT_LEAKAGE_AUDIT_ORACLE = f"""
 WITH feed AS (
   SELECT doc_id, text FROM documents
@@ -652,15 +663,15 @@ g AS (
 assigned AS (
   SELECT doc_id, group_id,
          'group_holdout' AS scheme,
-         CASE WHEN {_SQL_U73G} < 0.98 THEN 'train'
-              WHEN {_SQL_U73G} < 0.99 THEN 'validation'
+         CASE WHEN {_SQL_SPLIT_U_GROUP} < 0.98 THEN 'train'
+              WHEN {_SQL_SPLIT_U_GROUP} < 0.99 THEN 'validation'
               ELSE 'test' END AS split
   FROM g
   UNION ALL
   SELECT doc_id, group_id,
          'row_hash' AS scheme,
-         CASE WHEN {_SQL_U73D} < 0.98 THEN 'train'
-              WHEN {_SQL_U73D} < 0.99 THEN 'validation'
+         CASE WHEN {_SQL_SPLIT_U_DOC} < 0.98 THEN 'train'
+              WHEN {_SQL_SPLIT_U_DOC} < 0.99 THEN 'validation'
               ELSE 'test' END AS split
   FROM g
 ),
@@ -736,7 +747,7 @@ def shard_assignment_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return (
-        docs.withColumn("shard", assign_shard("doc_id", 16, salt=13))
+        docs.withColumn("shard", assign_shard("doc_id"))
         .groupBy("shard")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -754,7 +765,7 @@ SELECT shard, count(*) AS n_docs,
        CAST(sum(doc_id) AS BIGINT) AS doc_id_sum,
        CAST(sum(n_chars) AS BIGINT) AS total_chars
 FROM (
-  SELECT doc_id, n_chars, {sql_assign_shard("doc_id", 16, 13)} AS shard
+  SELECT doc_id, n_chars, {sql_assign_shard("doc_id")} AS shard
   FROM documents
 )
 GROUP BY shard
@@ -868,7 +879,7 @@ def exact_blocked_pair_source(frame: DataFrame) -> DataFrame:
     return (
         a.join(b, ["lang", "source"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6) >= 0.5)
+        .filter(F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6) >= JACCARD_THRESHOLD)
         .select("id_a", "id_b")
     )
 
@@ -889,7 +900,7 @@ def lsh_pair_source(frame: DataFrame) -> DataFrame:
     from dynamic_etl_spark.ops.lsh import minhash_near_dup_pairs
 
     pairs = minhash_near_dup_pairs(
-        frame, "doc_id", "text", threshold=0.5, hash_mode="md5"
+        frame, "doc_id", "text", hash_mode="md5"
     ).select("id_a", "id_b")
     meta = frame.select("doc_id", "lang", "source")
     return (
@@ -1038,7 +1049,7 @@ def curation_pipeline_accounting(
 
     # tier 4: ExactSubstr duplicated-span removal over the survivors
     s4 = (
-        duplicated_span_stats(s3, k=5)
+        duplicated_span_stats(s3)
         .select("doc_id", F.col("cleaned_text").alias("text"))
         .localCheckpoint()
     )
@@ -1140,7 +1151,7 @@ losers AS (
   WHERE round(CASE WHEN len(list_distinct(list_concat(a.grams, b.grams))) > 0
               THEN CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
                    / len(list_distinct(list_concat(a.grams, b.grams)))
-              ELSE 0.0 END, 6) >= 0.5
+              ELSE 0.0 END, 6) >= {JACCARD_THRESHOLD}
 )"""
 
 
@@ -1164,7 +1175,7 @@ losers AS (
     AND (CASE WHEN len(list_distinct(list_concat(a.grams, b.grams))) > 0
          THEN CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
               / len(list_distinct(list_concat(a.grams, b.grams)))
-         ELSE 0.0 END) >= 0.5
+         ELSE 0.0 END) >= {JACCARD_THRESHOLD}
 )"""
 
 
@@ -1746,13 +1757,13 @@ hit2 AS (
   FROM cand_cross c
   JOIN bg a ON c.id_new = a.doc_id
   JOIN cg o ON c.id_old = o.doc_id
-  WHERE {jac.format(a="a.grams", b="o.grams")} >= 0.5
+  WHERE {jac.format(a="a.grams", b="o.grams")} >= {JACCARD_THRESHOLD}
 ),
 edges2src AS (
   SELECT c.id_a, c.id_b FROM cand_within c
   JOIN bg a ON c.id_a = a.doc_id
   JOIN bg b ON c.id_b = b.doc_id
-  WHERE {jac.format(a="a.grams", b="b.grams")} >= 0.5
+  WHERE {jac.format(a="a.grams", b="b.grams")} >= {JACCARD_THRESHOLD}
 ),
 edges2 AS MATERIALIZED (
   SELECT id_a AS src, id_b AS dst FROM edges2src
@@ -1946,7 +1957,6 @@ def winnowing_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select("doc_id", dirty.alias("text"))
     return winnow_overlap_pairs(
         ensure_fanout_parallelism(d),
-        k=3, w=4,
         min_shared=WINNOW_PAIR_MIN_SHARED, max_df=WINNOW_PAIR_MAX_DF,
     )
 
@@ -1962,30 +1972,9 @@ WITH dirty AS (
   FROM documents
 ),
 base AS (
-  SELECT doc_id, {{tokens}} AS toks FROM dirty
+  SELECT doc_id, {_SQL_TOKENS} AS toks FROM dirty
 ),
-seq AS (
-  SELECT doc_id,
-         list_transform(range(0, greatest(len(toks) - 3, 0) + 1),
-                        i -> array_to_string(toks[i + 1 : i + 3], ' ')) AS grams
-  FROM base
-),
-g AS (
-  SELECT doc_id, len(grams) AS n_grams,
-         unnest(range(1, len(grams) + 1)) AS pos,
-         unnest(grams) AS gram
-  FROM seq
-),
-m AS (
-  SELECT doc_id, n_grams, pos,
-         min(md5(gram)) OVER (PARTITION BY doc_id ORDER BY pos
-                              ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fp
-  FROM g
-),
-f AS (
-  SELECT DISTINCT doc_id, fp FROM m
-  WHERE pos <= greatest(n_grams - 4, 0) + 1
-),
+{_SQL_WINNOW_FP},
 totals AS (SELECT doc_id, count(*) AS n FROM f GROUP BY doc_id),
 kept AS (
   SELECT f.doc_id, f.fp FROM f
@@ -2004,7 +1993,7 @@ SELECT p.id_a, p.id_b, p.shared_fps,
 FROM pairs p
 JOIN totals ta ON p.id_a = ta.doc_id
 JOIN totals tb ON p.id_b = tb.doc_id
-""".format(tokens=_SQL_TOKENS)
+"""
 
 
 QUERIES: QueryRegistry = {

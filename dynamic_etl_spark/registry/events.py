@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops import agg as A
+from dynamic_etl_spark.ops.layout import ZORDER_BITS
+from dynamic_etl_spark.ops.timeseries import STEP_SECONDS
 from dynamic_etl_spark.registry.core import Query, QueryRegistry, sql_dsum, t
 
 
@@ -709,11 +711,12 @@ def events_hourly_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
     return resample_linear(
-        ev, ["user_id"], "ts", "value", step_seconds=3600, tiebreak_col="event_id"
+        ev, ["user_id"], "ts", "value", tiebreak_col="event_id"
     ).orderBy("user_id", "grid_ts")
 
 
-RESAMPLE_ORACLE = """
+_STEP_US = STEP_SECONDS * 1_000_000
+RESAMPLE_ORACLE = f"""
 WITH obs AS (
   SELECT user_id, epoch_us(ts) AS us, value AS v, 0 AS is_grid,
          event_id AS tb
@@ -728,8 +731,8 @@ grid AS (
          CAST(NULL AS BIGINT) AS tb
   FROM span,
        unnest(generate_series(
-         CAST(-floor(-lo / 3600000000.0) * 3600000000 AS BIGINT), hi,
-         3600000000)) AS u(g)
+         CAST(-floor(-lo / {_STEP_US}.0) * {_STEP_US} AS BIGINT), hi,
+         {_STEP_US})) AS u(g)
 ),
 unioned AS (SELECT * FROM obs UNION ALL SELECT * FROM grid),
 win AS (
@@ -1207,7 +1210,7 @@ def heavy_hitter_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintained per-event-type heavy hitters (ops/agg.build/merge/
     finalize_heavy_hitter_state — Misra-Gries mergeable summaries,
     PODS'12): three date slices summarized independently, summaries
-    folded, k=8 counters emitted per type. Unlike the HLL sketch twin
+    folded, A.MG_K counters emitted per type. Unlike the HLL sketch twin
     (distinct_sketch_maintenance) this IS oracle-checkable: counts are
     exact integers and the compression offset is tie-robust, so DuckDB
     replays the identical build/merge tree."""
@@ -1220,8 +1223,8 @@ def heavy_hitter_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select("event_type", "user_id", "ts")
     merged = _three_slice(
         ev,
-        lambda df: build_heavy_hitter_state(df, ["event_type"], "user_id", k=8),
-        lambda a, b: merge_heavy_hitter_state(a, b, k=8),
+        lambda df: build_heavy_hitter_state(df, ["event_type"], "user_id"),
+        merge_heavy_hitter_state,
     )
     return finalize_heavy_hitter_state(merged, item_alias="user_id").orderBy(
         "event_type", F.desc("count_lower_bound"), "user_id"
@@ -1249,9 +1252,7 @@ def quantile_hist_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda df: build_quantile_hist_state(df, ["event_type"], "value", lo, hi, nb),
         merge_quantile_hist_state,
     )
-    return finalize_quantile_hist_state(
-        merged, lo, hi, nb, qs=(0.5, 0.9, 0.99)
-    ).orderBy("event_type", "q")
+    return finalize_quantile_hist_state(merged, lo, hi, nb).orderBy("event_type", "q")
 
 
 def rank_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1279,7 +1280,7 @@ def rank_sketch_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda df: build_kll_state(df, ["event_type"], "value"),
         merge_kll_state,
     )
-    return finalize_kll_state(merged, qs=(0.5, 0.9, 0.99)).orderBy("event_type", "q")
+    return finalize_kll_state(merged).orderBy("event_type", "q")
 
 
 def rank_sketch_finalize_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1307,10 +1308,18 @@ def rank_sketch_finalize_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("value").cast("double").alias("state_value"),
         )
     )
-    return finalize_kll_state(state, qs=(0.5, 0.9, 0.99)).orderBy("event_type", "q")
+    return finalize_kll_state(state).orderBy("event_type", "q")
 
 
-RANK_SKETCH_FINALIZE_ORACLE = """
+_Q_SELECT = ",\n".join(
+    f"         MIN(CASE WHEN c >= CEIL({q} * tot) THEN state_value END) AS q{i}"
+    for i, q in enumerate(A.QUANTILES)
+)
+_Q_STACK = "\nUNION ALL\n".join(
+    f"SELECT event_type, CAST({q} AS DOUBLE) AS q, ROUND(q{i}, 6) + 0.0 AS quantile_est FROM sel"
+    for i, q in enumerate(A.QUANTILES)
+)
+RANK_SKETCH_FINALIZE_ORACLE = f"""
 WITH weighted AS (
   SELECT event_type,
          CAST(event_id % 3 AS INTEGER) AS state_level,
@@ -1328,21 +1337,16 @@ cum AS (
 ),
 sel AS (
   SELECT event_type,
-         MIN(CASE WHEN c >= CEIL(0.5 * tot) THEN state_value END) AS q50,
-         MIN(CASE WHEN c >= CEIL(0.9 * tot) THEN state_value END) AS q90,
-         MIN(CASE WHEN c >= CEIL(0.99 * tot) THEN state_value END) AS q99
+{_Q_SELECT}
   FROM cum GROUP BY event_type
 )
-SELECT event_type, CAST(0.5 AS DOUBLE) AS q, ROUND(q50, 6) + 0.0 AS quantile_est FROM sel
-UNION ALL
-SELECT event_type, CAST(0.9 AS DOUBLE) AS q, ROUND(q90, 6) + 0.0 AS quantile_est FROM sel
-UNION ALL
-SELECT event_type, CAST(0.99 AS DOUBLE) AS q, ROUND(q99, 6) + 0.0 AS quantile_est FROM sel
+{_Q_STACK}
 ORDER BY event_type, q
 """
 
 
-QUANTILE_HIST_ORACLE = """
+_Q_VALUES = ", ".join(f"(CAST({q} AS DOUBLE))" for q in A.QUANTILES)
+QUANTILE_HIST_ORACLE = f"""
 WITH hist AS (
   SELECT event_type,
          CAST(CASE WHEN value < 0 THEN -1
@@ -1363,8 +1367,7 @@ cum AS (
 c2 AS (SELECT *, cum - state_n AS prev FROM cum),
 tq AS (
   SELECT c2.*, q, greatest(CAST(ceil(q * tot) AS BIGINT), 1) AS t
-  FROM c2 CROSS JOIN (VALUES (CAST(0.5 AS DOUBLE)), (CAST(0.9 AS DOUBLE)),
-                             (CAST(0.99 AS DOUBLE))) AS qs(q)
+  FROM c2 CROSS JOIN (VALUES {_Q_VALUES}) AS qs(q)
 )
 SELECT event_type, q,
        round(CASE WHEN state_bin = -1 THEN 0.0
@@ -1376,6 +1379,10 @@ FROM tq
 WHERE cum >= t AND prev < t
 ORDER BY event_type, q
 """
+
+
+# The tile is the top byte of the two-coordinate Morton key.
+_TILE_SHIFT = 2 * ZORDER_BITS - 8
 
 
 def events_zorder_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1392,11 +1399,11 @@ def events_zorder_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hour("ts").cast("long").alias("hod"),
         F.floor("value").cast("long").alias("val"),
     )
-    gx = normalize_to_grid(F.col("hod"), 0, 23, 16)
-    gy = normalize_to_grid(F.col("val"), 0, 500, 16)
-    z = zorder_key([gx, gy], 16)
+    gx = normalize_to_grid(F.col("hod"), 23)
+    gy = normalize_to_grid(F.col("val"), 500)
+    z = zorder_key([gx, gy])
     return (
-        ev.withColumn("tile", F.shiftright(z, 24))
+        ev.withColumn("tile", F.shiftright(z, _TILE_SHIFT))
         .groupBy("tile")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -1412,8 +1419,9 @@ def events_zorder_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zorder_tiles_oracle() -> str:
     from dynamic_etl_spark.ops.layout import sql_zorder_key
 
-    gx = "CAST(floor((least(greatest(hod, 0), 23) * 65535) / 23) AS BIGINT)"
-    gy = "CAST(floor((least(greatest(val, 0), 500) * 65535) / 500) AS BIGINT)"
+    cells = (1 << ZORDER_BITS) - 1
+    gx = f"CAST(floor((least(greatest(hod, 0), 23) * {cells}) / 23) AS BIGINT)"
+    gy = f"CAST(floor((least(greatest(val, 0), 500) * {cells}) / 500) AS BIGINT)"
     return f"""
 WITH g AS (
   SELECT CAST(hour(ts) AS BIGINT) AS hod,
@@ -1421,7 +1429,7 @@ WITH g AS (
   FROM events
 ),
 keyed AS (
-  SELECT hod, val, ({sql_zorder_key([gx, gy], 16)}) >> 24 AS tile FROM g
+  SELECT hod, val, ({sql_zorder_key([gx, gy])}) >> {_TILE_SHIFT} AS tile FROM g
 )
 SELECT tile, count(*) AS n_events,
        min(hod) AS hod_min, max(hod) AS hod_max,
@@ -1456,9 +1464,7 @@ def events_type_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).cast("double").alias("w"))
     )
-    ranks = pagerank(
-        pairs, "src", "dst", weight="w", max_iter=12, tol=1e-9, tol_check_every=4
-    )
+    ranks = pagerank(pairs, "src", "dst", weight="w")
     return ranks.select(
         F.col("v").alias("event_type"), F.round("rank", 6).alias("rank")
     ).orderBy(F.desc("rank"), "event_type")
@@ -1554,7 +1560,7 @@ ORDER BY rank_fp DESC, event_type
 def reservoir_sample_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintained per-event-type uniform reservoir (ops/sample.build/
     merge/finalize_reservoir_state): three date slices sampled
-    independently, reservoirs folded, n=5 rows per type emitted. The
+    independently, reservoirs folded, RESERVOIR_N rows per type emitted. The
     deterministic priority makes bottom-n selection merge-invariant, so
     the DuckDB twin ranks ONE-SHOT over all events — hash equality IS
     the proof that the maintained reservoir loses nothing."""
@@ -1567,14 +1573,15 @@ def reservoir_sample_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select("event_type", "event_id", "ts")
     merged = _three_slice(
         ev,
-        lambda df: build_reservoir_state(df, ["event_type"], "event_id", n=5),
-        lambda a, b: merge_reservoir_state(a, b, n=5),
+        lambda df: build_reservoir_state(df, ["event_type"], "event_id"),
+        merge_reservoir_state,
     )
     return finalize_reservoir_state(merged, item_alias="event_id").orderBy(
         "event_type", "priority", "event_id"
     )
 
 
+from dynamic_etl_spark.ops.sample import RESERVOIR_N
 from dynamic_etl_spark.ops.sample import sql_uniform_affine as _sql_u
 
 RESERVOIR_ORACLE = f"""
@@ -1589,14 +1596,15 @@ ranked AS (
   FROM pri
 )
 SELECT event_type, event_id, round(state_pri, 10) AS priority
-FROM ranked WHERE rn <= 5
+FROM ranked WHERE rn <= {RESERVOIR_N}
 ORDER BY event_type, priority, event_id
 """
 
 
 def _mg_sql(src: str, out: str) -> str:
-    """One Misra-Gries compression round (k = 8) as a CTE pair (ranked +
-    output): subtract the 9th largest counter per key, drop non-positive."""
+    """One Misra-Gries compression round (k = MG_K) as a CTE pair (ranked
+    + output): subtract the (MG_K+1)-th largest counter per key, drop
+    non-positive."""
     return f"""{out}_r AS (
   SELECT *,
          row_number() OVER (PARTITION BY event_type
@@ -1606,7 +1614,7 @@ def _mg_sql(src: str, out: str) -> str:
 {out} AS (
   SELECT event_type, state_item, state_cnt - off AS state_cnt
   FROM (
-    SELECT *, COALESCE(MAX(CASE WHEN rn = 9 THEN state_cnt END)
+    SELECT *, COALESCE(MAX(CASE WHEN rn = {A.MG_K + 1} THEN state_cnt END)
                  OVER (PARTITION BY event_type), 0) AS off
     FROM {out}_r
   )
@@ -1656,7 +1664,7 @@ ORDER BY event_type, count_lower_bound DESC, user_id
 def count_min_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintained Count-Min point-frequency sketch (ops/agg.build/merge/
     cm_estimate — Cormode-Muthukrishnan 2005): three date slices
-    sketched independently into depth-4 x width-256 counter grids,
+    sketched independently into depth-4 x width-CM_WIDTH counter grids,
     merged by elementwise addition (an exact monoid — merge tree ==
     one-shot bit-for-bit), then probed for every 10th user's event
     count. Completes the maintained-summary suite's frequency axis:
@@ -1676,13 +1684,13 @@ def count_min_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = t(spark, sf_dir, "events").select("user_id", "ts")
-    # width 32 is deliberately UNDERSIZED for the fixture's ~150 users
+    # CM_WIDTH is deliberately UNDERSIZED for the fixture's ~150 users
     # so bucket collisions actually occur and the overestimate column
     # carries nonzero values (real deployments size width ~ 2/epsilon);
     # the estimates stay overestimate-only either way
     merged = _three_slice(
         ev,
-        lambda df: build_cm_state(df, [], "user_id", width=32),
+        lambda df: build_cm_state(df, [], "user_id"),
         merge_cm_state,
     )
     hot = ev.filter(F.col("user_id") % 10 == 0)
@@ -1701,12 +1709,12 @@ def count_min_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COUNT_MIN_ORACLE = """
+COUNT_MIN_ORACLE = f"""
 WITH depths(d) AS (VALUES (0), (1), (2), (3)),
 buckets AS (
   SELECT user_id, d AS state_depth,
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1 + 8 * d, 8))::BIGINT
-           % 32 AS state_bucket
+           % {A.CM_WIDTH} AS state_bucket
   FROM events CROSS JOIN depths
 ),
 state AS (
@@ -1717,7 +1725,7 @@ probes AS (SELECT DISTINCT user_id FROM events WHERE user_id % 10 = 0),
 pb AS (
   SELECT user_id, d AS state_depth,
          ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1 + 8 * d, 8))::BIGINT
-           % 32 AS state_bucket
+           % {A.CM_WIDTH} AS state_bucket
   FROM probes CROSS JOIN depths
 ),
 est AS (

@@ -190,7 +190,7 @@ gen_dists AS (
          dtype AS distributor_type,
          state || ' City ' AS city,
          state,
-         {G.sql_random_date(seed + 23, "2015-01-01", 3650)} AS onboarding_date,
+         {G.sql_random_date(seed + 23, "2015-01-01")} AS onboarding_date,
          CASE WHEN {u(seed + 24)} < 0.85 THEN 'Y' ELSE 'N' END AS active_flag
   FROM gd0
 )"""

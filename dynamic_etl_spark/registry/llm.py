@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops import ann as ANN
+from dynamic_etl_spark.ops import bpe as BPE
 from dynamic_etl_spark.ops import lsh as L
 from dynamic_etl_spark.ops import pack as PK
 from dynamic_etl_spark.ops import sample as SMP
@@ -24,6 +25,7 @@ from dynamic_etl_spark.ops.multimodal import (
     strict_decoder,
     synthetic_media,
 )
+from dynamic_etl_spark.ops.spans import SPAN_K
 from dynamic_etl_spark.registry.core import Query, QueryRegistry, t
 from dynamic_etl_spark.session import ensure_fanout_parallelism
 
@@ -31,21 +33,21 @@ _SQL_TOKENS = "list_filter(string_split_regex(lower(text), '\\s+'), w -> w <> ''
 _SQL_NORM = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
 
-def sql_positional_grams(k: int) -> str:
-    """Shared CTE body: (doc_id, gpos, gram) for every k-token window of
+def sql_positional_grams() -> str:
+    """Shared CTE body: (doc_id, gpos, gram) for every SPAN_K-token window of
     ``src(doc_id, toks)`` — the DuckDB twin of ops/lsh.gram_seq_pretokenized
     with positions, single-sourced so the span-removal family's oracles
     track one definition (r7 review: the scrub oracle had hand-expanded
     copies of this and the tail below)."""
     return f"""
   SELECT doc_id,
-         unnest(range(0, len(toks) - {k} + 1)) AS gpos,
-         unnest(list_transform(range(0, len(toks) - {k} + 1),
-                i -> array_to_string(toks[i + 1 : i + {k}], ' '))) AS gram
-  FROM base WHERE len(toks) >= {k}"""
+         unnest(range(0, len(toks) - {SPAN_K} + 1)) AS gpos,
+         unnest(list_transform(range(0, len(toks) - {SPAN_K} + 1),
+                i -> array_to_string(toks[i + 1 : i + {SPAN_K}], ' '))) AS gram
+  FROM base WHERE len(toks) >= {SPAN_K}"""
 
 
-def sql_span_tail(k: int) -> str:
+def sql_span_tail() -> str:
     """Shared CTE chain for the span-removal family's oracles: given
     upstream CTEs ``base(doc_id, toks)`` and ``d(doc_id, gpos)`` (the
     marked window starts — corpus-repetition or benchmark membership,
@@ -56,11 +58,11 @@ def sql_span_tail(k: int) -> str:
     return f"""isl AS (
   SELECT doc_id, gpos,
          CASE WHEN lag(gpos) OVER w IS NULL
-                OR gpos > lag(gpos) OVER w + {k - 1} THEN 1 ELSE 0 END AS brk
+                OR gpos > lag(gpos) OVER w + {SPAN_K - 1} THEN 1 ELSE 0 END AS brk
   FROM d WINDOW w AS (PARTITION BY doc_id ORDER BY gpos)
 ),
 spans AS (
-  SELECT doc_id, island, MIN(gpos) AS s, MAX(gpos) + {k - 1} AS e
+  SELECT doc_id, island, MIN(gpos) AS s, MAX(gpos) + {SPAN_K - 1} AS e
   FROM (
     SELECT doc_id, gpos,
            SUM(brk) OVER (PARTITION BY doc_id ORDER BY gpos
@@ -502,22 +504,20 @@ def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole filter is a codegen expression — no shuffle, no RNG state."""
     docs = t(spark, sf_dir, "documents")
     return SMP.stratified_sample(
-        docs,
-        ["lang"],
-        {"en": 0.5, "es": 0.25, "de": 0.1},
-        SMP.uniform_affine("doc_id", salt=17),
-        default_fraction=0.75,
+        docs, "lang", SMP.uniform_affine("doc_id", salt=_SAMPLE_SALT)
     ).select("doc_id", "lang", "source", "n_chars")
 
 
-_SAMPLE_U = SMP.sql_uniform_affine("doc_id", salt=17)
+_SAMPLE_SALT = 17
+_SAMPLE_U = SMP.sql_uniform_affine("doc_id", salt=_SAMPLE_SALT)
+_LANG_FRACTION = " ".join(
+    f"WHEN '{lang}' THEN {frac}" for lang, frac in SMP.LANG_FRACTIONS.items()
+)
 
 STRATIFIED_SAMPLE_ORACLE = f"""
 SELECT doc_id, lang, source, n_chars FROM documents
-WHERE {_SAMPLE_U} < CASE lang WHEN 'en' THEN 0.5
-                              WHEN 'es' THEN 0.25
-                              WHEN 'de' THEN 0.1
-                              ELSE 0.75 END
+WHERE {_SAMPLE_U} < CASE lang {_LANG_FRACTION}
+                              ELSE {SMP.OTHER_LANG_FRACTION} END
 """
 
 
@@ -527,7 +527,7 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     no single-task global window anywhere in the plan."""
     docs = t(spark, sf_dir, "documents")
     toks = docs.select("doc_id", TX.token_count(F.col("text")).alias("n_tokens"))
-    return PK.sequence_pack(toks, "doc_id", "n_tokens", budget=512).select(
+    return PK.sequence_pack(toks, "doc_id", "n_tokens").select(
         "doc_id", "n_tokens", "global_offset", "seq_id", "seq_offset", "spans_boundary"
     )
 
@@ -550,9 +550,9 @@ o AS (
   FROM c
 )
 SELECT doc_id, n_tokens, global_offset,
-       global_offset // 512 AS seq_id,
-       global_offset % 512 AS seq_offset,
-       (last_tok // 512) > (global_offset // 512) AS spans_boundary
+       global_offset // {PK.SEQ_TOKENS} AS seq_id,
+       global_offset % {PK.SEQ_TOKENS} AS seq_offset,
+       (last_tok // {PK.SEQ_TOKENS}) > (global_offset // {PK.SEQ_TOKENS}) AS spans_boundary
 FROM o
 """
 
@@ -665,9 +665,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and "candidates" are now within noise warm (1.9s vs 2.0s at
     # sf0.1) — the r3 3.7x gap was a cold-compile artifact — so the
     # default (fewer stages, no persist) stays.
-    return L.minhash_near_dup_pairs(
-        _minhash_feed(spark, sf_dir), "doc_id", "text", threshold=0.5
-    )
+    return L.minhash_near_dup_pairs(_minhash_feed(spark, sf_dir), "doc_id", "text")
 
 
 def minhash_near_dup_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,8 +680,7 @@ def minhash_near_dup_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
     by THIS query's driver hash plus the brute-force recall pytest that
     pins the two modes' S-curves to the same family."""
     return L.minhash_near_dup_pairs(
-        _minhash_feed(spark, sf_dir), "doc_id", "text", threshold=0.5,
-        hash_mode="md5",
+        _minhash_feed(spark, sf_dir), "doc_id", "text", hash_mode="md5"
     )
 
 
@@ -761,7 +758,8 @@ j AS (
   JOIN sh a ON c.id_a = a.doc_id
   JOIN sh b ON c.id_b = b.doc_id
 )
-SELECT id_a, id_b, round(jac, 6) AS jaccard_sim FROM j WHERE jac >= 0.5
+SELECT id_a, id_b, round(jac, 6) AS jaccard_sim FROM j
+WHERE jac >= {L.JACCARD_THRESHOLD}
 """
 
 
@@ -785,7 +783,7 @@ def incremental_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     store rides the banded join exactly once in both shapes, so the
     two-pass form stays."""
     corpus, batch = _incremental_fixture(spark, sf_dir)
-    out = L.incremental_near_dup_merge(corpus, batch, "doc_id", "text", threshold=0.5)
+    out = L.incremental_near_dup_merge(corpus, batch, "doc_id", "text")
     return _incremental_surface(batch, out)
 
 
@@ -842,7 +840,7 @@ def incremental_near_dup_exacthash(spark: SparkSession, sf_dir: str) -> DataFram
     on any corpus hit, else admit its MIN-id member."""
     corpus, batch = _incremental_fixture(spark, sf_dir)
     out = L.incremental_near_dup_merge(
-        corpus, batch, "doc_id", "text", threshold=0.5, hash_mode="md5"
+        corpus, batch, "doc_id", "text", hash_mode="md5"
     )
     return _incremental_surface(batch, out)
 
@@ -901,14 +899,14 @@ cross_pairs AS (
   FROM cand_cross c
   JOIN bg a ON c.id_new = a.doc_id
   JOIN cg o ON c.id_old = o.doc_id
-  WHERE {_sql_jaccard("a.grams", "o.grams")} >= 0.5
+  WHERE {_sql_jaccard("a.grams", "o.grams")} >= {L.JACCARD_THRESHOLD}
 ),
 within_pairs AS (
   SELECT c.id_b AS id_new, c.id_a AS id_matched, 'batch' AS scope
   FROM cand_within c
   JOIN bg a ON c.id_a = a.doc_id
   JOIN bg b ON c.id_b = b.doc_id
-  WHERE {_sql_jaccard("a.grams", "b.grams")} >= 0.5
+  WHERE {_sql_jaccard("a.grams", "b.grams")} >= {L.JACCARD_THRESHOLD}
 ),
 dup_pairs AS (
   SELECT * FROM cross_pairs UNION ALL SELECT * FROM within_pairs
@@ -1063,10 +1061,12 @@ def _queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def embedding_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    return ANN.cosine_topk(emb, _queries(spark, sf_dir), "vec_id", "embedding", k=10)
+    return ANN.cosine_topk(
+        emb, _queries(spark, sf_dir), "vec_id", "embedding", k=ANN.ANN_TOPK
+    )
 
 
-TOPK_ORACLE = """
+TOPK_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings
   WHERE vec_id % 100 = 0
@@ -1085,7 +1085,7 @@ FROM (
   SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                                     ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
   FROM scored
-) WHERE rank <= 10
+) WHERE rank <= {ANN.ANN_TOPK}
 """
 
 #: The vectorized path's oracle (ADVICE r10 #1): cosine_topk_vectorized
@@ -1097,7 +1097,7 @@ FROM (
 #: a genuine sub-1e-12 gap (or the acknowledged ~5e-13 sliver around a
 #: 6dp half) ranks/displays differently between the raw and quantized
 #: forms.
-TOPK_VEC_ORACLE = """
+TOPK_VEC_ORACLE = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv FROM embeddings
   WHERE vec_id % 100 = 0
@@ -1116,7 +1116,7 @@ FROM (
   SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                                     ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
   FROM scored
-) WHERE rank <= 10
+) WHERE rank <= {ANN.ANN_TOPK}
 """
 
 
@@ -1127,12 +1127,14 @@ def embedding_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized path orders by round(sim, 12), the brute force by the raw
     sequential fold (TOPK_VEC_ORACLE vs TOPK_ORACLE)."""
     emb = t(spark, sf_dir, "embeddings")
-    return ANN.cosine_topk_vectorized(emb, _queries(spark, sf_dir), "vec_id", "embedding", k=10)
+    return ANN.cosine_topk_vectorized(
+        emb, _queries(spark, sf_dir), "vec_id", "embedding", k=ANN.ANN_TOPK
+    )
 
 
 def embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
-    return ANN.lsh_ann_topk(emb, _queries(spark, sf_dir), "vec_id", "embedding", k=10)
+    return ANN.lsh_ann_topk(emb, _queries(spark, sf_dir), "vec_id", "embedding")
 
 
 def embedding_ann_lsh_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1145,7 +1147,7 @@ def embedding_ann_lsh_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same plan shape as the xxhash twin; only the hash family changes."""
     emb = t(spark, sf_dir, "embeddings")
     return ANN.lsh_ann_topk(
-        emb, _queries(spark, sf_dir), "vec_id", "embedding", k=10, hash_mode="md5"
+        emb, _queries(spark, sf_dir), "vec_id", "embedding", hash_mode="md5"
     )
 
 
@@ -1156,7 +1158,7 @@ def embedding_ann_lsh_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cast is exact for |x| >= 2^-7 and near-exact below (the
 # embedding_label_centroids bound); a cross-engine bit flip would need a
 # projection within ~1e-27*n of zero — verified green at both driver sf.
-EMBEDDING_ANN_LSH_EXACTHASH_ORACLE = """
+EMBEDDING_ANN_LSH_EXACTHASH_ORACLE = f"""
 WITH ex AS (
   SELECT vec_id,
          unnest(range(1, len(embedding) + 1)) - 1 AS j,
@@ -1196,7 +1198,7 @@ FROM (
   SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                                     ORDER BY sim DESC, neighbor_id ASC) AS INT) AS rank
   FROM scored
-) WHERE rank <= 10
+) WHERE rank <= {ANN.ANN_TOPK}
 """
 
 
@@ -1213,7 +1215,7 @@ def embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves = [
         ANN.ivf_topk(
             emb, q.filter(F.col("vec_id") % 2 == par), "vec_id", "embedding",
-            k=10, index=idx,
+            index=idx,
         )
         for par in (0, 1)
     ]
@@ -1238,7 +1240,7 @@ def embedding_ann_ivf_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     return ANN.ivf_exacthash_topk(
         emb, _queries(spark, sf_dir), "vec_id", "embedding",
-        k=10, n_cells=_IVF_EH_CELLS, n_probe=_IVF_EH_PROBE,
+        n_cells=_IVF_EH_CELLS, n_probe=_IVF_EH_PROBE,
         iters=_IVF_EH_ITERS, scale=_IVF_EH_SCALE,
     )
 
@@ -1336,13 +1338,13 @@ SELECT query_id, neighbor_id, rank, cosine_sim FROM topk
 
 EMBEDDING_ANN_IVF_EXACTHASH_ORACLE = f"""
 WITH RECURSIVE {_sql_integer_lloyd_ctes(_IVF_EH_CELLS, _IVF_EH_ITERS, _IVF_EH_SCALE)},
-{_sql_cand_topk(" AND vec_id % 100 = 0", _IVF_EH_PROBE, 10)}
+{_sql_cand_topk(" AND vec_id % 100 = 0", _IVF_EH_PROBE, ANN.ANN_TOPK)}
 """
 
 
 def embedding_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus x corpus kNN join (ops/ann.knn_join): every vector gets
-    its 5 nearest corpus neighbors by cosine through one reusable IVF
+    its KNN_K nearest corpus neighbors by cosine through one reusable IVF
     index — multi-probe cell assignment is distributed (no driver
     collect), scoring is per-cell blockwise BLAS over bucketed
     candidates only. Rows-only: k-means cells are engine-specific;
@@ -1350,26 +1352,29 @@ def embedding_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce brute force bit-for-bit) and the 100k-vector recall >= 0.9
     stress gate (tests/test_scale_stress.py)."""
     emb = t(spark, sf_dir, "embeddings")
-    return ANN.knn_join(emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=4)
+    return ANN.knn_join(
+        emb, "vec_id", "embedding",
+        k=ANN.KNN_K, n_cells=ANN.KNN_CELLS, n_probe=ANN.KNN_PROBE,
+    )
 
 
 def embedding_knn_join_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embedding_knn_join through the integer-quantized Lloyd fit
-    (ops/ann.knn_join_exacthash): every vector probes its 4 nearest
-    cells of the same deterministic 8-cell fit the IVF twin proves,
-    candidates meet on the cell id, exact cosine ranks top-5 — the
-    corpus x corpus retrieval primitive with a driver hash. Same
-    (k, n_cells, n_probe) as the MLlib twin."""
+    (ops/ann.knn_join_exacthash): every vector probes its KNN_PROBE
+    nearest cells of the same deterministic KNN_CELLS-cell fit the IVF
+    twin proves, candidates meet on the cell id, exact cosine ranks
+    top-KNN_K — the corpus x corpus retrieval primitive with a driver
+    hash. Same (k, n_cells, n_probe) as the MLlib twin."""
     emb = t(spark, sf_dir, "embeddings")
     return ANN.knn_join_exacthash(
-        emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=4,
-        iters=_IVF_EH_ITERS, scale=_IVF_EH_SCALE,
+        emb, "vec_id", "embedding", iters=_IVF_EH_ITERS, scale=_IVF_EH_SCALE
     )
 
 
+_SQL_KNN_LLOYD = _sql_integer_lloyd_ctes(ANN.KNN_CELLS, _IVF_EH_ITERS, _IVF_EH_SCALE)
 EMBEDDING_KNN_JOIN_EXACTHASH_ORACLE = f"""
-WITH RECURSIVE {_sql_integer_lloyd_ctes(8, _IVF_EH_ITERS, _IVF_EH_SCALE)},
-{_sql_cand_topk("", 4, 5)}
+WITH RECURSIVE {_SQL_KNN_LLOYD},
+{_sql_cand_topk("", ANN.KNN_PROBE, ANN.KNN_K)}
 """
 
 
@@ -1383,7 +1388,10 @@ def embedding_density_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k-means cells are engine-specific); tests/test_llm.py pins the
     full-probe profile to the brute-force-derived densities exactly."""
     emb = t(spark, sf_dir, "embeddings")
-    topk = ANN.knn_join(emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=4)
+    topk = ANN.knn_join(
+        emb, "vec_id", "embedding",
+        k=ANN.KNN_K, n_cells=ANN.KNN_CELLS, n_probe=ANN.KNN_PROBE,
+    )
     return (
         topk.groupBy(F.col("query_id").alias("vec_id"))
         .agg(
@@ -1406,18 +1414,17 @@ def embedding_density_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the rows-only twin."""
     emb = t(spark, sf_dir, "embeddings")
     topk = ANN.knn_join_exacthash(
-        emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=4,
-        iters=_IVF_EH_ITERS, scale=_IVF_EH_SCALE,
+        emb, "vec_id", "embedding", iters=_IVF_EH_ITERS, scale=_IVF_EH_SCALE
     )
     slots = [
         F.max(F.when(F.col("rank") == i, F.col("cosine_sim"))).alias(f"__s{i}")
-        for i in range(1, 6)
+        for i in range(1, ANN.KNN_K + 1)
     ]
     piv = topk.groupBy(F.col("query_id").alias("vec_id")).agg(
         F.count(F.lit(1)).alias("n_neighbors"), *slots
     )
     total = F.lit(0.0)
-    for i in range(1, 6):
+    for i in range(1, ANN.KNN_K + 1):
         total = total + F.coalesce(F.col(f"__s{i}"), F.lit(0.0))
     mean = F.round(total / F.col("n_neighbors").cast("double"), 6)
     return piv.select(
@@ -1431,14 +1438,14 @@ def embedding_density_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _density_ordered_mean_sql() -> str:
     coalesced = " + ".join(
         f"COALESCE(MAX(CASE WHEN rank = {i} THEN cosine_sim END), 0.0)"
-        for i in range(1, 6)
+        for i in range(1, ANN.KNN_K + 1)
     )
     return f"round((0.0 + {coalesced}) / CAST(COUNT(*) AS DOUBLE), 6)"
 
 
 EMBEDDING_DENSITY_EXACTHASH_ORACLE = f"""
-WITH RECURSIVE {_sql_integer_lloyd_ctes(8, _IVF_EH_ITERS, _IVF_EH_SCALE)},
-{_sql_cand_topk_ctes("", 4, 5)}
+WITH RECURSIVE {_SQL_KNN_LLOYD},
+{_sql_cand_topk_ctes("", ANN.KNN_PROBE, ANN.KNN_K)}
 SELECT query_id AS vec_id,
        CAST(COUNT(*) AS BIGINT) AS n_neighbors,
        {_density_ordered_mean_sql()} AS mean_topk_sim,
@@ -1471,9 +1478,7 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ANN.cosine_near_dup_pairs(
-        _near_dup_corpus(spark, sf_dir), "vec_id", "embedding", threshold=0.9
-    )
+    return ANN.cosine_near_dup_pairs(_near_dup_corpus(spark, sf_dir), "vec_id", "embedding")
 
 
 # Oracle is exact brute force over the same planted corpus; the Spark side
@@ -1482,7 +1487,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S-curve retrieves with certainty in practice (verified at sf0.001 and
 # sf0.01 — the driver's correctness scales); false positives are
 # impossible (candidates are exact-verified before the threshold filter).
-EMBEDDING_NEAR_DUP_ORACLE = """
+EMBEDDING_NEAR_DUP_ORACLE = f"""
 WITH planted AS (
   SELECT vec_id + 1000000 AS vec_id,
          list_transform(range(1, len(embedding) + 1),
@@ -1504,7 +1509,7 @@ pairs AS (
   WHERE a.vec_id < b.vec_id
 )
 SELECT id_a, id_b, round(sim, 6) AS cosine_sim
-FROM pairs WHERE sim >= 0.9
+FROM pairs WHERE sim >= {ANN.NEAR_DUP_COSINE}
 """
 
 
@@ -1614,12 +1619,10 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes (verified empirically at sf0.001 and sf0.01, the driver's
     correctness scales)."""
     corpus = _near_dup_corpus(spark, sf_dir)
-    return ANN.semantic_dedup(
-        corpus, "vec_id", "embedding", threshold=0.95, n_cells=8
-    ).orderBy("vec_id")
+    return ANN.semantic_dedup(corpus, "vec_id", "embedding").orderBy("vec_id")
 
 
-SEMANTIC_DEDUP_ORACLE = """
+SEMANTIC_DEDUP_ORACLE = f"""
 WITH RECURSIVE planted AS (
   SELECT vec_id + 1000000 AS vec_id,
          list_transform(range(1, len(embedding) + 1),
@@ -1638,7 +1641,7 @@ pairs AS (
     AND list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])
         / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
            * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))
-        >= 0.95
+        >= {ANN.SEMDEDUP_THRESHOLD}
 ),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
@@ -1706,10 +1709,7 @@ def incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the admission rule is pure min/threshold algebra — deterministic at
     any parallelism."""
     corpus, batch = _incremental_semantic_fixture(spark, sf_dir)
-    out = ANN.incremental_semantic_merge(
-        corpus, batch, "vec_id", "embedding",
-        threshold=0.95, n_cells=8, n_probe=2,
-    )
+    out = ANN.incremental_semantic_merge(corpus, batch, "vec_id", "embedding")
     return _incremental_surface(batch, out, id_col="vec_id")
 
 
@@ -1740,12 +1740,12 @@ batch AS (
 cross_pairs AS (
   SELECT a.vec_id AS id_new, b.vec_id AS id_matched, 'existing' AS scope
   FROM batch a, corpus b
-  WHERE {_SQL_COS} >= 0.95
+  WHERE {_SQL_COS} >= {ANN.SEMDEDUP_THRESHOLD}
 ),
 within_pairs AS (
   SELECT b.vec_id AS id_new, a.vec_id AS id_matched, 'batch' AS scope
   FROM batch a, batch b
-  WHERE a.vec_id < b.vec_id AND {_SQL_COS} >= 0.95
+  WHERE a.vec_id < b.vec_id AND {_SQL_COS} >= {ANN.SEMDEDUP_THRESHOLD}
 ),
 dup_pairs AS (
   SELECT * FROM cross_pairs UNION ALL SELECT * FROM within_pairs
@@ -1791,7 +1791,7 @@ ORDER BY l.vec_id
 
 def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE tokenizer training (ops/bpe.train_bpe, Sennrich et
-    al. 2016): 16 merge rounds over the documents word-frequency table.
+    al. 2016): BPE.N_MERGES merge rounds over the documents word-frequency table.
     Oracle-backed since r8 (previously 'not SQL-expressible'): training
     is bit-deterministic (total-ordered argmax, greedy-leftmost apply),
     so a DuckDB recursive CTE replays the ENTIRE loop — per-round
@@ -1805,7 +1805,7 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dynamic_etl_spark.ops.bpe import train_bpe
 
     docs = ensure_fanout_parallelism(t(spark, sf_dir, "documents").select("text"))
-    return train_bpe(docs, "text", n_merges=16, min_count=2).orderBy("rank")
+    return train_bpe(docs, "text").orderBy("rank")
 
 
 def _sql_bpe_vt_cte() -> str:
@@ -1834,7 +1834,7 @@ vt(it, word, freq, syms) AS (
   SELECT * FROM (
     WITH base AS (
       SELECT it, word, freq, generate_subscripts(syms, 1) AS pos, unnest(syms) AS sym
-      FROM vt WHERE it < 16
+      FROM vt WHERE it < {BPE.N_MERGES}
     ),
     best AS (
       SELECT l, r FROM (
@@ -1842,7 +1842,7 @@ vt(it, word, freq, syms) AS (
                ROW_NUMBER() OVER (ORDER BY SUM(a.freq) DESC, a.sym, b.sym) AS rn
         FROM base a JOIN base b ON a.word = b.word AND b.pos = a.pos + 1
         GROUP BY a.sym, b.sym
-      ) WHERE rn = 1 AND cnt >= 2
+      ) WHERE rn = 1 AND cnt >= {BPE.MIN_COUNT}
     ),
     marked AS (
       SELECT p.it, p.word, p.freq, p.pos, p.sym,
@@ -1897,14 +1897,14 @@ picked AS (
 SELECT CAST(it AS BIGINT) AS rank, l AS "left", r AS "right",
        l || r AS merged, cnt AS pair_count
 FROM picked
-WHERE rn = 1 AND cnt >= 2 AND it < 16
+WHERE rn = 1 AND cnt >= {BPE.MIN_COUNT} AND it < {BPE.N_MERGES}
 ORDER BY rank
 """
 
 
 def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer ENCODE over the corpus with a freshly trained merge
-    table (ops/bpe.bpe_encode_profile): 16 merges trained on documents,
+    table (ops/bpe.bpe_encode_profile): BPE.N_MERGES merges trained on documents,
     then per-doc token counts + compression ratio. Python touches only
     the distinct-word table (Zipf-bounded); the corpus side is explode +
     join + one codegen aggregate. Oracle-backed since r8: every corpus
@@ -1918,7 +1918,7 @@ def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_fanout_parallelism(t(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     )
-    merges = train_bpe(docs, "text", n_merges=16, min_count=2).localCheckpoint()
+    merges = train_bpe(docs, "text").localCheckpoint()
     return bpe_encode_profile(docs, merges, "doc_id", "text").orderBy("doc_id")
 
 
@@ -1949,7 +1949,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric (tokens per word / chars per token, per language): a
     tokenizer trained on a mixed corpus over-fragments under-represented
     languages, and THIS is the table that shows it. Rides the same
-    16-merge training + distinct-word encode as bpe_encode_stats;
+    BPE.N_MERGES-merge training + distinct-word encode as bpe_encode_stats;
     per-language integer sums divide LAST (the divide-last parity
     rule), 6dp."""
     from dynamic_etl_spark.ops.bpe import bpe_encode_words, train_bpe
@@ -1957,7 +1957,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_fanout_parallelism(t(spark, sf_dir, "documents")).select(
         "doc_id", "lang", "text"
     )
-    merges = train_bpe(docs, "text", n_merges=16, min_count=2).localCheckpoint()
+    merges = train_bpe(docs, "text").localCheckpoint()
     words = docs.select(
         "lang", F.explode(F.split(F.col("text"), r"\s+")).alias("word")
     ).filter(F.length("word") > 0)
@@ -2441,12 +2441,12 @@ ORDER BY doc_id
 
 def vocabulary_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense-id vocabulary over the corpus (ops/text.vocab_build):
-    min_count 5, top 500 — ids assigned by (count DESC, token ASC) so
+    VOCAB_MIN_COUNT, top MAX_VOCAB — ids assigned by (count DESC, token ASC) so
     the mapping is reproducible at any parallelism; top-K runs as a
     distributed TakeOrdered, with only the K survivors numbered."""
-    return TX.vocab_build(
-        t(spark, sf_dir, "documents"), "doc_id", "text", min_count=5, max_vocab=500
-    ).orderBy("vocab_id")
+    return TX.vocab_build(t(spark, sf_dir, "documents"), "doc_id", "text").orderBy(
+        "vocab_id"
+    )
 
 
 VOCAB_ORACLE = f"""
@@ -2454,37 +2454,38 @@ WITH tok AS (
   SELECT unnest({_SQL_TOKENS}) AS token FROM documents
 ),
 c AS (
-  SELECT token, count(*) AS n FROM tok GROUP BY token HAVING count(*) >= 5
+  SELECT token, count(*) AS n FROM tok GROUP BY token
+  HAVING count(*) >= {TX.VOCAB_MIN_COUNT}
 )
 SELECT token, n,
        CAST(row_number() OVER (ORDER BY n DESC, token) AS BIGINT) AS vocab_id
 FROM c
-QUALIFY vocab_id <= 500
+QUALIFY vocab_id <= {TX.MAX_VOCAB}
 ORDER BY vocab_id
 """
 
 
 def document_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping context-window chunks (ops/text.chunk_documents):
-    32-token windows, stride 24 (8-token overlap) over the documents
-    corpus — the bounded-length sample prep between cleaning and
-    sequence packing."""
-    return TX.chunk_documents(
-        t(spark, sf_dir, "documents"), "doc_id", "text", chunk_tokens=32, stride=24
-    ).orderBy("doc_id", "chunk_idx")
+    CHUNK_TOKENS-token windows every CHUNK_STRIDE tokens over the
+    documents corpus — the bounded-length sample prep between cleaning
+    and sequence packing."""
+    return TX.chunk_documents(t(spark, sf_dir, "documents"), "doc_id", "text").orderBy(
+        "doc_id", "chunk_idx"
+    )
 
 
-CHUNKING_ORACLE = """
+CHUNKING_ORACLE = f"""
 WITH tk AS (
   SELECT doc_id,
          list_filter(regexp_split_to_array(lower(text), '\\s+'), x -> x <> '') AS toks
   FROM documents
 )
 SELECT doc_id,
-       CAST(start // 24 AS BIGINT) AS chunk_idx,
-       array_to_string(list_slice(toks, start + 1, start + 32), ' ') AS chunk_text,
-       CAST(len(list_slice(toks, start + 1, start + 32)) AS BIGINT) AS n_chunk_tokens
-FROM tk, unnest(generate_series(0, len(toks) - 1, 24)) AS u(start)
+       CAST(start // {TX.CHUNK_STRIDE} AS BIGINT) AS chunk_idx,
+       array_to_string(list_slice(toks, start + 1, start + {TX.CHUNK_TOKENS}), ' ') AS chunk_text,
+       CAST(len(list_slice(toks, start + 1, start + {TX.CHUNK_TOKENS})) AS BIGINT) AS n_chunk_tokens
+FROM tk, unnest(generate_series(0, len(toks) - 1, {TX.CHUNK_STRIDE})) AS u(start)
 WHERE len(toks) > 0
 ORDER BY doc_id, chunk_idx
 """

@@ -100,7 +100,7 @@ FROM (
 
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return Q.tfidf_topk(docs, k=3)
+    return Q.tfidf_topk(docs)
 
 
 TFIDF_ORACLE = """
@@ -123,8 +123,8 @@ ranked AS (
   FROM scored
 )
 SELECT doc_id, rank, term, tf, df, round(score, 6) AS tfidf
-FROM ranked WHERE rank <= 3
-""".format(tokens=_SQL_TOKENS)
+FROM ranked WHERE rank <= {k}
+""".format(tokens=_SQL_TOKENS, k=Q.TFIDF_K)
 
 
 
@@ -225,10 +225,10 @@ FROM docs d LEFT JOIN per p USING (doc_id)
 
 
 def pmi_collocations_top(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 PMI collocations (ops/quality.pmi_collocations): ranked by
+    """Top PMI collocations (ops/quality.pmi_collocations): ranked by
     the libm-free PMI ratio — exact integer products, one IEEE division."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return Q.pmi_collocations(docs, min_count=5, top_k=20)
+    return Q.pmi_collocations(docs)
 
 
 PMI_ORACLE = f"""
@@ -244,7 +244,10 @@ g2 AS (
   FROM base WHERE len(toks) >= 2
 ),
 nb AS (SELECT count(*) AS v FROM g2),
-bi AS (SELECT gram, count(*) AS n_xy FROM g2 GROUP BY gram HAVING count(*) >= 5),
+bi AS (
+  SELECT gram, count(*) AS n_xy FROM g2 GROUP BY gram
+  HAVING count(*) >= {Q.PMI_MIN_COUNT}
+),
 pairs AS (
   SELECT split_part(gram, ' ', 1) AS w1, split_part(gram, ' ', 2) AS w2, n_xy
   FROM bi
@@ -257,20 +260,20 @@ JOIN uni ux ON p.w1 = ux.w
 JOIN uni uy ON p.w2 = uy.w
 CROSS JOIN nu CROSS JOIN nb
 ORDER BY pmi_ratio DESC, w1, w2
-LIMIT 20
+LIMIT {Q.PMI_TOP_K}
 """
 
 
 def document_gram_exposure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated-gram exposure (ops/quality.
     cross_doc_gram_exposure): per doc, the fraction of its distinct word
-    3-grams that appear in at least one other document — the pair-free
+    EXPOSURE_K-grams that appear in at least one other document — the pair-free
     corpus-duplication gate (RefinedWeb-style) that scales linearly
     where the pairwise tiers scale with duplicate structure."""
     docs = ensure_fanout_parallelism(t(spark, sf_dir, "documents")).select(
         "doc_id", "text"
     )
-    return Q.cross_doc_gram_exposure(docs, id_col="doc_id", text_col="text", k=3)
+    return Q.cross_doc_gram_exposure(docs, id_col="doc_id", text_col="text")
 
 
 GRAM_EXPOSURE_ORACLE = f"""
@@ -280,8 +283,8 @@ WITH base AS (
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
-           range(0, greatest(len(toks) - 3, 0) + 1),
-           i -> array_to_string(toks[i + 1 : i + 3], ' ')
+           range(0, greatest(len(toks) - {Q.EXPOSURE_K}, 0) + 1),
+           i -> array_to_string(toks[i + 1 : i + {Q.EXPOSURE_K}], ' ')
          ))) AS gram
   FROM base
 ),
@@ -301,26 +304,24 @@ GROUP BY s.doc_id
 
 def duplicated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExactSubstr-style duplicated-span removal (Lee et al. 2022) at the
-    k=5 word threshold: any 5-gram occurring >= 2 times anywhere in the
-    corpus marks its window; overlapping windows merge into maximal
-    spans, which are cut from the token-normalized text."""
+    ops/spans.SPAN_K word threshold: any SPAN_K-gram occurring >= 2 times
+    anywhere in the corpus marks its window; overlapping windows merge
+    into maximal spans, which are cut from the token-normalized text."""
     from dynamic_etl_spark.ops.spans import duplicated_span_stats
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
-    return duplicated_span_stats(docs, k=5)
+    return duplicated_span_stats(docs)
 
-
-_SPAN_K = 5
 
 SPAN_REMOVAL_ORACLE = f"""
 WITH base AS (
   SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents
 ),
-g AS ({sql_positional_grams(_SPAN_K)}
+g AS ({sql_positional_grams()}
 ),
 c AS (SELECT gram FROM g GROUP BY gram HAVING COUNT(*) >= 2),
 d AS (SELECT g.doc_id, g.gpos FROM g JOIN c USING (gram)),
-{sql_span_tail(_SPAN_K)}
+{sql_span_tail()}
 SELECT b.doc_id,
        CAST(len(b.toks) AS BIGINT) AS n_tokens,
        CAST(COALESCE(st.n_spans, 0) AS BIGINT) AS n_dup_spans,
@@ -456,17 +457,13 @@ def encoding_repair_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_lit(s: str) -> str:
-    return s.replace("'", "''")
-
-
 ENCODING_REPAIR_ORACLE = f"""
 WITH feed AS (
   SELECT doc_id, lang,
          text
-         || CASE WHEN doc_id % 9 = 0 THEN '{_sql_lit(_ACCENT_SUFFIX)}' ELSE '' END
-         || CASE WHEN doc_id % 12 = 1 THEN '{_sql_lit(_PUNCT_SUFFIX)}' ELSE '' END
-         || CASE WHEN doc_id % 15 = 2 THEN '{_sql_lit(_NATIVE_SUFFIX)}' ELSE '' END
+         || CASE WHEN doc_id % 9 = 0 THEN {TX.sql_literal(_ACCENT_SUFFIX)} ELSE '' END
+         || CASE WHEN doc_id % 12 = 1 THEN {TX.sql_literal(_PUNCT_SUFFIX)} ELSE '' END
+         || CASE WHEN doc_id % 15 = 2 THEN {TX.sql_literal(_NATIVE_SUFFIX)} ELSE '' END
            AS text
   FROM documents
 ),
@@ -538,16 +535,12 @@ def url_filter_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_q(s: str) -> str:
-    return s.replace("'", "''")
-
-
 URL_FILTER_ORACLE = f"""
 WITH feed AS (
   SELECT doc_id,
          text
-         || CASE WHEN doc_id % 6 = 0 THEN '{_sql_q(_URL_ADS)}' ELSE '' END
-         || CASE WHEN doc_id % 10 = 3 THEN '{_sql_q(_URL_SPAM)}' ELSE '' END
+         || CASE WHEN doc_id % 6 = 0 THEN {TX.sql_literal(_URL_ADS)} ELSE '' END
+         || CASE WHEN doc_id % 10 = 3 THEN {TX.sql_literal(_URL_SPAM)} ELSE '' END
            AS text
   FROM documents
 ),
@@ -570,7 +563,7 @@ SELECT doc_id,
                 '{_URL_BLOCKLIST[1]}') THEN d END, ',' ORDER BY
                 CASE WHEN d IN ('{_URL_BLOCKLIST[0]}', '{_URL_BLOCKLIST[1]}')
                 THEN d END), '') AS blocked_domains,
-       trim(regexp_replace(regexp_replace(text, '{_sql_q(_URL_SCRUB)}', ' ', 'g'),
+       trim(regexp_replace(regexp_replace(text, {TX.sql_literal(_URL_SCRUB)}, ' ', 'g'),
                            '\\s+', ' ', 'g')) AS clean_text
 FROM dom
 GROUP BY doc_id, text
@@ -592,9 +585,7 @@ def hashed_linear_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-decimal dot product)."""
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     w = spark.createDataFrame(list(CLS_WEIGHTS), "bucket int, weight double")
-    return Q.hashed_linear_score(
-        docs, w, n_buckets=CLS_N_BUCKETS, bias=0.0, threshold=0.0
-    )
+    return Q.hashed_linear_score(docs, w, n_buckets=CLS_N_BUCKETS)
 
 
 CLS_ORACLE = """
@@ -613,10 +604,14 @@ per AS (
 )
 SELECT d.doc_id,
        CAST(coalesce(p.n_tokens, 0) AS BIGINT) AS n_tokens,
-       round(coalesce(CAST(p.s AS DOUBLE), 0.0) + 0.0, 6) + 0.0 AS logit,
-       (coalesce(CAST(p.s AS DOUBLE), 0.0) + 0.0 >= 0.0) AS passes
+       round(coalesce(CAST(p.s AS DOUBLE), 0.0), 6) + 0.0 AS logit,
+       (coalesce(CAST(p.s AS DOUBLE), 0.0) >= __THRESHOLD__) AS passes
 FROM (SELECT doc_id FROM documents) d LEFT JOIN per p USING (doc_id)
-""".replace("__VALUES__", '(0, -0.39), (1, -0.02), (2, 0.35), (3, -0.29), (4, 0.08), (5, 0.45), (6, -0.19), (7, 0.18), (8, -0.46), (9, -0.09), (10, 0.28), (11, -0.36), (12, 0.01), (13, 0.38), (14, -0.26), (15, 0.11), (16, 0.48), (17, -0.16), (18, 0.21), (19, -0.43), (20, -0.06), (21, 0.31), (22, -0.33), (23, 0.04), (24, 0.41), (25, -0.23), (26, 0.14), (27, -0.5), (28, -0.13), (29, 0.24), (30, -0.4), (31, -0.03), (32, 0.34), (33, -0.3), (34, 0.07), (35, 0.44), (36, -0.2), (37, 0.17), (38, -0.47), (39, -0.1), (40, 0.27), (41, -0.37), (42, 0.0), (43, 0.37), (44, -0.27), (45, 0.1), (46, 0.47), (47, -0.17), (48, 0.2), (49, -0.44), (50, -0.07), (51, 0.3), (52, -0.34), (53, 0.03), (54, 0.4), (55, -0.24), (56, 0.13), (57, 0.5), (58, -0.14), (59, 0.23), (60, -0.41), (61, -0.04), (62, 0.33), (63, -0.31)').replace("__NB__", "64").replace("__TOKENS__", _SQL_TOKENS)
+""".replace(
+    "__VALUES__", ", ".join(f"({b}, {w})" for b, w in CLS_WEIGHTS)
+).replace("__NB__", str(CLS_N_BUCKETS)).replace("__TOKENS__", _SQL_TOKENS).replace(
+    "__THRESHOLD__", str(Q.LOGIT_THRESHOLD)
+)
 
 # --------------------------------------------------------------------------
 # DSIR importance selection (Xie et al. 2023) — fit + score + select

@@ -343,15 +343,15 @@ def approx_distinct_exacthash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s")
     ).select("s.col_name", "s.v")
-    state = build_hll_md5_state(stacked, ["col_name"], "v", p=10)
-    return finalize_hll_md5_state(state, p=10).orderBy("col_name")
+    state = build_hll_md5_state(stacked, ["col_name"], "v")
+    return finalize_hll_md5_state(state).orderBy("col_name")
 
 
 def sql_hll_registers(src: str, key: str, value: str) -> str:
     """DuckDB twin of build_hll_md5_state over ``{src}({key}, {value})``
     — generated beside the Spark op so the hash slices, the bucket
     modulus, and the bin()-length rho can never drift apart."""
-    m = 1 << 10
+    m = 1 << A.HLL_P
     return f"""(
   SELECT {key}, bucket, MAX(rho) AS max_rho
   FROM (
@@ -373,7 +373,7 @@ def sql_hll_finalize(registers: str, key: str) -> str:
     then the one-division estimate from the SAME embedded constant."""
     from dynamic_etl_spark.ops.agg import _HLL_MD5_RMAX, hll_md5_scale_const
 
-    m = 1 << 10
+    m = 1 << A.HLL_P
     return f"""
 SELECT {key},
        CAST(COUNT(*) AS BIGINT) AS buckets_used,
@@ -783,7 +783,7 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("l_suppkey"))
         .alias("s_suppkey"),
     )
-    joined = salted_join(skewed, supplier, on=["s_suppkey"], buckets=8)
+    joined = salted_join(skewed, supplier, on=["s_suppkey"])
     return joined.select("l_orderkey", "l_linenumber", "s_suppkey", "s_name", "s_acctbal")
 
 

@@ -519,8 +519,8 @@ FROM proj
 #: relevance/diversity trade-off, 10 picks.
 MMR_ANCHOR_ID = 0
 MMR_K = 10
-_LAM = repr(0.5)
-_OML = repr(1.0 - 0.5)
+_LAM = repr(R.MMR_LAMBDA)
+_OML = repr(1.0 - R.MMR_LAMBDA)
 
 
 def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -528,7 +528,7 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ops/retrieval.mmr_select: greedy MMR, k driver rounds, each one
     corpus-linear TakeOrdered pass)."""
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return R.mmr_select(emb, anchor_id=MMR_ANCHOR_ID, k=MMR_K, lam=0.5)
+    return R.mmr_select(emb, anchor_id=MMR_ANCHOR_ID, k=MMR_K)
 
 
 #: The oracle replays the greedy loop verbatim in ONE recursive CTE:
@@ -598,7 +598,7 @@ def embedding_mmr_select_pooled(spark: SparkSession, sf_dir: str) -> DataFrame:
     + k checkpoints (ops/retrieval.mmr_select pool_size mode)."""
     emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     return R.mmr_select(
-        emb, anchor_id=MMR_ANCHOR_ID, k=MMR_K, lam=0.5, pool_size=MMR_POOL
+        emb, anchor_id=MMR_ANCHOR_ID, k=MMR_K, pool_size=MMR_POOL
     )
 
 

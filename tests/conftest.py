@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -10,6 +11,21 @@ sys.path.insert(0, REPO_ROOT)
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+
+_job_groups = itertools.count()
+
+
+def jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it ran, counted in a job
+    group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_configure(config):

@@ -26,16 +26,13 @@ pytestmark = pytest.mark.slow  # fast-tier skip (FULL_SUITE=1 runs it) — VERDI
 # covered by the round-start FULL_SUITE run.
 
 
-THRESH = 0.5
-
-
 def _ingest_batch(spark, corpus_root, store_root, batch):
     """One ingest run: admit batch against the versioned corpus+store,
     commit corpus delta and signature delta as new versions."""
     corpus = read_versioned(spark, corpus_root)
     store = read_versioned(spark, store_root)
     out = incremental_near_dup_merge(
-        corpus, batch, "doc_id", "text", threshold=THRESH, existing_banded=store
+        corpus, batch, "doc_id", "text", existing_banded=store
     )
     new_corpus = corpus.unionByName(out["accepted"])
     new_store = store.unionByName(out["new_banded"])

@@ -76,7 +76,7 @@ def test_contamination_flags_planted_leak_only(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in contamination_profile(corpus, bench, k=5, min_shared=5).collect()
+        for r in contamination_profile(corpus, bench).collect()
     }
     assert out[1]["is_contaminated"] == 1 and out[1]["n_shared_grams"] >= 5
     assert out[2]["is_contaminated"] == 0 and out[2]["n_shared_grams"] == 0
@@ -148,7 +148,7 @@ def test_winnowing_short_doc_single_window(spark):
     df = spark.createDataFrame(
         [(1, "just four words here"), (2, "ab")], "doc_id long, text string"
     )
-    rows = {r["doc_id"]: r for r in winnow_fingerprints(df, k=3, w=4).collect()}
+    rows = {r["doc_id"]: r for r in winnow_fingerprints(df).collect()}
     assert rows[1]["n_fingerprints"] == 1
     assert rows[2]["n_fingerprints"] == 1  # single token -> single gram
 
@@ -158,7 +158,7 @@ def test_winnowing_density(spark):
     whole point vs full-gram fingerprinting)."""
     text = " ".join(f"w{i}" for i in range(400))  # all-distinct grams
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-    row = winnow_fingerprints(df, k=3, w=4).collect()[0]
+    row = winnow_fingerprints(df).collect()[0]
     n_grams = 400 - 3 + 1
     # expected density for random hashes is 2/(w+1) = 0.4
     assert row["n_fingerprints"] < n_grams * 0.6
@@ -253,13 +253,11 @@ def test_bloom_path_equals_exact_contamination(spark):
     corpus, bench = _planted_decontam_inputs(spark, SF_SMALL)
     exact = {
         r["doc_id"]: (r["n_grams"], r["n_shared_grams"], r["is_contaminated"])
-        for r in contamination_profile(corpus, bench, k=5, min_shared=5).collect()
+        for r in contamination_profile(corpus, bench).collect()
     }
     bloom = {
         r["doc_id"]: (r["n_grams"], r["n_shared_grams"], r["is_contaminated"])
-        for r in contamination_profile_bloom(
-            corpus, bench, k=5, min_shared=5
-        ).collect()
+        for r in contamination_profile_bloom(corpus, bench).collect()
     }
     assert bloom == exact
 
@@ -278,11 +276,11 @@ def test_bloom_prefilter_under_tiny_filter_still_exact(spark, monkeypatch):
     monkeypatch.setattr(decontam, "BLOOM_HASHES", 2)
     exact = {
         r["doc_id"]: (r["n_grams"], r["n_shared_grams"])
-        for r in contamination_profile(corpus, bench, k=5, min_shared=5).collect()
+        for r in contamination_profile(corpus, bench).collect()
     }
     tiny = {
         r["doc_id"]: (r["n_grams"], r["n_shared_grams"])
-        for r in contamination_profile_bloom(corpus, bench, k=5, min_shared=5).collect()
+        for r in contamination_profile_bloom(corpus, bench).collect()
     }
     assert tiny == exact
 

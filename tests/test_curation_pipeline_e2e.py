@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from dynamic_etl_spark.catalog import load_table
 from dynamic_etl_spark.ops import lsh as L
+from dynamic_etl_spark.ops import pack, sample
 from dynamic_etl_spark.ops import text as TX
 from dynamic_etl_spark.ops.decontam import contamination_profile
 from dynamic_etl_spark.ops.graph import connected_components
@@ -64,7 +65,7 @@ def _run(spark, corpus, benchmark):
         )
         kept = kept.join(canon, "doc_id", "leftsemi")
         # near tier: LSH pairs -> components -> keep min-id survivor
-        pairs = L.minhash_near_dup_pairs(kept, "doc_id", "text", threshold=0.5)
+        pairs = L.minhash_near_dup_pairs(kept, "doc_id", "text")
         comp = connected_components(pairs, "id_a", "id_b")
         losers = comp.filter(F.col("v") != F.col("component")).select(
             F.col("v").alias("doc_id")
@@ -86,10 +87,10 @@ def _run(spark, corpus, benchmark):
     def pack(ctx):
         train = ctx["split"].filter(F.col("split") == "train")
         counted = train.withColumn("n_tokens", TX.token_count(F.col("text")))
-        return sequence_pack(counted, "doc_id", "n_tokens", budget=256)
+        return sequence_pack(counted, "doc_id", "n_tokens")
 
     def shard(ctx):
-        return ctx["pack"].withColumn("shard", assign_shard("doc_id", 4))
+        return ctx["pack"].withColumn("shard", assign_shard("doc_id"))
 
     pipe = Pipeline(
         "curation",
@@ -105,7 +106,9 @@ def _run(spark, corpus, benchmark):
     return pipe.run({"corpus": corpus, "benchmark": benchmark})
 
 
-def test_curation_pipeline_end_to_end(spark):
+def test_curation_pipeline_end_to_end(spark, monkeypatch):
+    monkeypatch.setattr(pack, "SEQ_TOKENS", 256)
+    monkeypatch.setattr(sample, "N_SHARDS", 4)
     corpus, benchmark = _fixture(spark)
     res = _run(spark, corpus, benchmark)
 

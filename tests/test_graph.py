@@ -100,6 +100,8 @@ def test_pagerank_matches_numpy_reference(spark, monkeypatch):
     from dynamic_etl_spark.ops.graph import pagerank
 
     monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
+    monkeypatch.setattr(graph, "PR_MAX_ITER", 60)
+    monkeypatch.setattr(graph, "PR_TOL", 1e-12)
 
     # 60-node graph with hubs, a cycle, and dangling vertices
     n = 60
@@ -113,9 +115,7 @@ def test_pagerank_matches_numpy_reference(spark, monkeypatch):
     df = spark.createDataFrame(edges, "src long, dst long, w double")
     got = {
         r["v"]: r["rank"]
-        for r in pagerank(
-            df, "src", "dst", weight="w", max_iter=60, tol=1e-12,
-        ).collect()
+        for r in pagerank(df, "src", "dst", weight="w").collect()
     }
     ref = _numpy_pagerank(edges, n, iters=60)
     assert abs(sum(got.values()) - 1.0) < 1e-9  # rank mass conserved
@@ -132,6 +132,7 @@ def test_pagerank_uniform_on_symmetric_cycle(spark, monkeypatch):
     from dynamic_etl_spark.ops.graph import pagerank
 
     monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
+    monkeypatch.setattr(graph, "PR_MAX_ITER", 30)
 
     n = 10
     df = spark.createDataFrame(
@@ -139,7 +140,7 @@ def test_pagerank_uniform_on_symmetric_cycle(spark, monkeypatch):
     )
     got = [
         r["rank"]
-        for r in pagerank(df, max_iter=30).collect()
+        for r in pagerank(df).collect()
     ]
     assert len(got) == n
     for r in got:
@@ -160,18 +161,21 @@ def test_pagerank_driver_path_matches_distributed(spark, monkeypatch):
     from dynamic_etl_spark.ops import graph
     from dynamic_etl_spark.ops.graph import pagerank
 
+    monkeypatch.setattr(graph, "PR_MAX_ITER", 40)
+    monkeypatch.setattr(graph, "PR_TOL", 1e-12)
+
     edges = [(i, (i * 3 + 1) % 40, float(1 + i % 3)) for i in range(40)] + [
         (i, (i + 1) % 40, 1.0) for i in range(0, 40, 2)
     ]
     df = spark.createDataFrame(edges, "src long, dst long, w double")
     fast = {
         r["v"]: r["rank"]
-        for r in pagerank(df, weight="w", max_iter=40, tol=1e-12).collect()
+        for r in pagerank(df, weight="w").collect()
     }
     monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
     dist = {
         r["v"]: r["rank"]
-        for r in pagerank(df, weight="w", max_iter=40, tol=1e-12).collect()
+        for r in pagerank(df, weight="w").collect()
     }
     assert fast.keys() == dist.keys()
     for v in fast:
@@ -187,11 +191,14 @@ def test_pagerank_zero_weight_edges_are_dangling(spark, monkeypatch):
     from dynamic_etl_spark.ops import graph
     from dynamic_etl_spark.ops.graph import pagerank
 
+    monkeypatch.setattr(graph, "PR_MAX_ITER", 40)
+    monkeypatch.setattr(graph, "PR_TOL", 1e-12)
+
     edges = [(1, 2, 1.0), (2, 1, 1.0), (3, 1, 0.0)]
     df = spark.createDataFrame(edges, "src long, dst long, w double")
     got = {
         r["v"]: r["rank"]
-        for r in pagerank(df, weight="w", max_iter=40, tol=1e-12).collect()
+        for r in pagerank(df, weight="w").collect()
     }
     ref = _numpy_pagerank([(s - 1, d - 1, w) for s, d, w in edges], 3, iters=40)
     assert set(got) == {1, 2, 3}
@@ -201,22 +208,25 @@ def test_pagerank_zero_weight_edges_are_dangling(spark, monkeypatch):
     monkeypatch.setattr(graph, "SMALL_GRAPH_THRESHOLD", 0)  # force the DISTRIBUTED loop
     dist = {
         r["v"]: r["rank"]
-        for r in pagerank(df, weight="w", max_iter=40, tol=1e-12).collect()
+        for r in pagerank(df, weight="w").collect()
     }
     for v in (1, 2, 3):
         assert abs(dist[v] - got[v]) < 1e-9
 
 
-def test_pagerank_fixed_point_python_ground_truth_and_float_agreement(spark):
+def test_pagerank_fixed_point_python_ground_truth_and_float_agreement(spark, monkeypatch):
     """The integer fixed-point PageRank (the oracle-checkable twin):
     (a) matches an independent pure-Python replay of the same integer
     recurrence exactly (incl. a dangling vertex and weighted edges);
     (b) lands within float tolerance of the double pagerank at the same
     iteration count (the floor drift is ~1e-9 relative at unit=1e12);
     (c) conserves mass: ranks sum to unit minus bounded floor drift."""
+    from dynamic_etl_spark.ops import graph
     from dynamic_etl_spark.ops.graph import pagerank, pagerank_fixed_point
 
     UNIT, ITERS = 10**12, 12
+    monkeypatch.setattr(graph, "PR_MAX_ITER", ITERS)
+    monkeypatch.setattr(graph, "PR_TOL", 0.0)
     edges = [(1, 2, 3), (2, 1, 1), (2, 3, 2), (1, 3, 1)]  # 3 is dangling
     df = spark.createDataFrame(edges, "src long, dst long, w long")
 
@@ -256,8 +266,6 @@ def test_pagerank_fixed_point_python_ground_truth_and_float_agreement(spark):
                 [(s, d, float(w)) for s, d, w in edges], "src long, dst long, w double"
             ),
             weight="w",
-            max_iter=ITERS,
-            tol=0.0,
         ).collect()
     }
     for v, fp in got.items():

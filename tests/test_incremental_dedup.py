@@ -10,7 +10,7 @@ import pytest
 from dynamic_etl_spark.ops import lsh as L
 
 K = 3
-THRESHOLD = 0.5
+THRESHOLD = L.JACCARD_THRESHOLD
 
 
 def _df(spark, rows):
@@ -81,7 +81,6 @@ def test_incremental_admission_semantics(spark):
         _df(spark, list(batch.items())),
         "doc_id",
         "text",
-        threshold=THRESHOLD,
     )
     accepted = {r["doc_id"] for r in out["accepted"].collect()}
     assert accepted == _brute_admit(existing, batch) == {11, 13, 14}
@@ -106,7 +105,7 @@ def test_component_rejected_whole_when_any_member_hits_existing(spark):
     }
     out = L.incremental_near_dup_merge(
         _df(spark, list(existing.items())), _df(spark, list(batch.items())),
-        "doc_id", "text", threshold=THRESHOLD,
+        "doc_id", "text",
     )
     assert out["accepted"].count() == 0
     assert _brute_admit(existing, batch) == set()
@@ -130,7 +129,7 @@ def test_incremental_matches_bruteforce_and_state_reuse(spark):
     }
     out1 = L.incremental_near_dup_merge(
         _df(spark, list(existing.items())), _df(spark, list(batch1.items())),
-        "doc_id", "text", threshold=THRESHOLD,
+        "doc_id", "text",
     )
     acc1 = {r["doc_id"] for r in out1["accepted"].collect()}
     assert acc1 == _brute_admit(existing, batch1) == {101, 102, 104}
@@ -149,7 +148,7 @@ def test_incremental_matches_bruteforce_and_state_reuse(spark):
     # path A: recompute corpus signatures from docs
     outA = L.incremental_near_dup_merge(
         _df(spark, list(existing2.items())), _df(spark, list(batch2.items())),
-        "doc_id", "text", threshold=THRESHOLD,
+        "doc_id", "text",
     )
     # path B: signature store = original corpus banded + batch1's delta
     store = L.minhash_banded_rows(
@@ -157,7 +156,7 @@ def test_incremental_matches_bruteforce_and_state_reuse(spark):
     ).unionByName(out1["new_banded"])
     outB = L.incremental_near_dup_merge(
         _df(spark, list(existing2.items())), _df(spark, list(batch2.items())),
-        "doc_id", "text", threshold=THRESHOLD, existing_banded=store,
+        "doc_id", "text", existing_banded=store,
     )
     accA = {r["doc_id"] for r in outA["accepted"].collect()}
     accB = {r["doc_id"] for r in outB["accepted"].collect()}
@@ -179,7 +178,7 @@ def test_incremental_md5_mode_matches_bruteforce_and_refuses_mixed_store(spark):
     }
     e_df, b_df = _df(spark, list(existing.items())), _df(spark, list(batch.items()))
     out = L.incremental_near_dup_merge(
-        e_df, b_df, "doc_id", "text", threshold=THRESHOLD, hash_mode="md5"
+        e_df, b_df, "doc_id", "text", hash_mode="md5"
     )
     acc = {r["doc_id"] for r in out["accepted"].collect()}
     assert acc == _brute_admit(existing, batch) == {101, 102, 104}
@@ -187,13 +186,13 @@ def test_incremental_md5_mode_matches_bruteforce_and_refuses_mixed_store(spark):
     xx_store = L.minhash_banded_rows(e_df, "doc_id", "text")
     with pytest.raises(ValueError, match="different hash mode"):
         L.incremental_near_dup_merge(
-            e_df, b_df, "doc_id", "text", threshold=THRESHOLD,
+            e_df, b_df, "doc_id", "text",
             existing_banded=xx_store, hash_mode="md5",
         )
     md5_store = L.minhash_banded_rows(e_df, "doc_id", "text", hash_mode="md5")
     with pytest.raises(ValueError, match="different hash mode"):
         L.incremental_near_dup_merge(
-            e_df, b_df, "doc_id", "text", threshold=THRESHOLD,
+            e_df, b_df, "doc_id", "text",
             existing_banded=md5_store,
         )
 
@@ -231,9 +230,9 @@ def test_incremental_distributed_cc_fallback_matches_driver_path(spark, monkeypa
         23: _sentence(50),          # unique -> admit
     }
     e_df, b_df = _df(spark, list(existing.items())), _df(spark, list(batch.items()))
-    fast = L.incremental_near_dup_merge(e_df, b_df, "doc_id", "text", threshold=THRESHOLD)
+    fast = L.incremental_near_dup_merge(e_df, b_df, "doc_id", "text")
     monkeypatch.setattr(L, "_SMALL_CC_THRESHOLD", 0)
-    slow = L.incremental_near_dup_merge(e_df, b_df, "doc_id", "text", threshold=THRESHOLD)
+    slow = L.incremental_near_dup_merge(e_df, b_df, "doc_id", "text")
     fast_ids = {r["doc_id"] for r in fast["accepted"].collect()}
     slow_ids = {r["doc_id"] for r in slow["accepted"].collect()}
     assert fast_ids == slow_ids == _brute_admit(existing, batch) == {20, 23}

@@ -14,8 +14,14 @@ from pyspark.sql import functions as F
 
 from dynamic_etl_spark.ops import ann as A
 
-THRESHOLD = 0.95
+THRESHOLD = A.SEMDEDUP_THRESHOLD
 DIM = 16
+
+
+def _cells(monkeypatch, n_cells: int, n_probe: int) -> None:
+    """Run the merge at ``n_cells`` k-means cells, ``n_probe`` probed."""
+    monkeypatch.setattr(A, "SEMDEDUP_CELLS", n_cells)
+    monkeypatch.setattr(A, "SEMDEDUP_PROBE", n_probe)
 
 
 def _vec(seed: int) -> list[float]:
@@ -70,7 +76,8 @@ def _brute_admit(existing: dict[int, list[float]], batch: dict[int, list[float]]
     return {min(m) for m in comps.values() if not m & cross_hit}
 
 
-def test_semantic_admission_semantics(spark):
+def test_semantic_admission_semantics(spark, monkeypatch):
+    _cells(monkeypatch, 3, 2)
     existing = {i: _vec(i) for i in range(10)}
     batch = {
         100: _near(existing[3]),  # near store -> reject
@@ -81,7 +88,6 @@ def test_semantic_admission_semantics(spark):
     }
     out = A.incremental_semantic_merge(
         _df(spark, existing), _df(spark, batch), "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=3, n_probe=2,
     )
     accepted = {r["vec_id"] for r in out["accepted"].collect()}
     assert accepted == _brute_admit(existing, batch) == {101, 102, 104}
@@ -99,10 +105,11 @@ def test_semantic_admission_semantics(spark):
     assert delta_ids == accepted
 
 
-def test_semantic_component_rejected_whole_on_store_hit(spark):
+def test_semantic_component_rejected_whole_on_store_hit(spark, monkeypatch):
     """A within-batch component with one member near the store is
     rejected entirely (the transitive near-dup convention the lexical
     tier pins)."""
+    _cells(monkeypatch, 2, 2)
     existing = {1: _vec(7)}
     batch = {
         20: _near(_vec(7)),          # near existing
@@ -110,17 +117,17 @@ def test_semantic_component_rejected_whole_on_store_hit(spark):
     }
     out = A.incremental_semantic_merge(
         _df(spark, existing), _df(spark, batch), "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=2, n_probe=2,
     )
     assert out["accepted"].count() == 0
     assert _brute_admit(existing, batch) == set()
 
 
-def test_semantic_matches_bruteforce_and_state_reuse(spark):
+def test_semantic_matches_bruteforce_and_state_reuse(spark, monkeypatch):
     """Two sequential batches: Spark admission equals the brute-force
     rule, and reusing the frozen fit + accumulated store gives results
     identical to re-assigning the grown corpus from docs (the
     store-reuse-equivalence contract, VERDICT r8 #4)."""
+    _cells(monkeypatch, 4, 2)
     existing = {i: _vec(i) for i in range(40)}
     batch1 = {
         100: _near(existing[3]),   # near existing 3 -> reject
@@ -132,7 +139,6 @@ def test_semantic_matches_bruteforce_and_state_reuse(spark):
     e_df = _df(spark, existing)
     out1 = A.incremental_semantic_merge(
         e_df, _df(spark, batch1), "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=4, n_probe=2,
     )
     centers = out1["centers"]
     acc1 = {r["vec_id"] for r in out1["accepted"].collect()}
@@ -152,7 +158,7 @@ def test_semantic_matches_bruteforce_and_state_reuse(spark):
     # path A: re-assign the grown corpus from docs under the SAME fit
     outA = A.incremental_semantic_merge(
         _df(spark, existing2), _df(spark, batch2), "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=4, n_probe=2, centers=centers,
+        centers=centers,
     )
     # path B: store = initial assignment + batch1's delta (never re-reads
     # the original corpus docs — the persistent-state path)
@@ -161,7 +167,6 @@ def test_semantic_matches_bruteforce_and_state_reuse(spark):
     )
     outB = A.incremental_semantic_merge(
         _df(spark, existing2), _df(spark, batch2), "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=4, n_probe=2,
         centers=centers, existing_assigned=store,
     )
     accA = {r["vec_id"] for r in outA["accepted"].collect()}
@@ -169,16 +174,16 @@ def test_semantic_matches_bruteforce_and_state_reuse(spark):
     assert accA == accB == expect2 == {202}
 
 
-def test_semantic_replay_rejects_everything(spark):
+def test_semantic_replay_rejects_everything(spark, monkeypatch):
     """Exactly-once replay contract: a re-delivered batch finds its
     admitted docs in the store under their own ids at cosine 1.0
     (self-pairs are NOT excluded) and re-rejects the whole batch."""
+    _cells(monkeypatch, 3, 2)
     existing = {i: _vec(i) for i in range(8)}
     batch = {100: _vec(50), 101: _vec(51), 102: _near(existing[2])}
     e_df, b_df = _df(spark, existing), _df(spark, batch)
     out = A.incremental_semantic_merge(
         e_df, b_df, "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=3, n_probe=2,
     )
     acc = {r["vec_id"] for r in out["accepted"].collect()}
     assert acc == {100, 101}
@@ -187,7 +192,6 @@ def test_semantic_replay_rejects_everything(spark):
     ).unionByName(out["new_assigned"])
     replay = A.incremental_semantic_merge(
         e_df.unionByName(out["accepted"]), b_df, "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=3, n_probe=2,
         centers=out["centers"], existing_assigned=store2,
     )
     assert replay["accepted"].count() == 0
@@ -205,6 +209,7 @@ def test_semantic_distributed_cc_fallback_matches_driver_path(spark, monkeypatch
     (admit_batch's hybrid seam, shared with the lexical tier)."""
     from dynamic_etl_spark.ops import graph as G
 
+    _cells(monkeypatch, 2, 2)
     existing = {1: _vec(7)}
     batch = {
         20: _vec(40),
@@ -214,8 +219,7 @@ def test_semantic_distributed_cc_fallback_matches_driver_path(spark, monkeypatch
     }
     e_df, b_df = _df(spark, existing), _df(spark, batch)
     fast = A.incremental_semantic_merge(
-        e_df, b_df, "vec_id", "embedding", threshold=THRESHOLD,
-        n_cells=2, n_probe=2,
+        e_df, b_df, "vec_id", "embedding",
     )
     fast_ids = {r["vec_id"] for r in fast["accepted"].collect()}
 
@@ -226,19 +230,19 @@ def test_semantic_distributed_cc_fallback_matches_driver_path(spark, monkeypatch
 
     monkeypatch.setattr(G, "admit_batch", forced_distributed)
     slow = A.incremental_semantic_merge(
-        e_df, b_df, "vec_id", "embedding", threshold=THRESHOLD,
-        n_cells=2, n_probe=2,
+        e_df, b_df, "vec_id", "embedding",
     )
     slow_ids = {r["vec_id"] for r in slow["accepted"].collect()}
     assert fast_ids == slow_ids == _brute_admit(existing, batch) == {20, 23}
 
 
-def test_semantic_within_pair_shared_cells_emits_once(spark):
+def test_semantic_within_pair_shared_cells_emits_once(spark, monkeypatch):
     """The r14 fused cogroup dedups within-batch pairs IN-CELL (emit
     only from min(shared probed cells)) instead of a distinct exchange:
     with n_cells == n_probe == 2 every doc probes BOTH cells, so every
     within pair meets twice — each must still surface exactly one
     dup_pairs row, with the sequential-fold cosine_sim."""
+    _cells(monkeypatch, 2, 2)
     existing = {1: _vec(5)}
     batch = {
         30: _vec(77),
@@ -247,7 +251,6 @@ def test_semantic_within_pair_shared_cells_emits_once(spark):
     }
     out = A.incremental_semantic_merge(
         _df(spark, existing), _df(spark, batch), "vec_id", "embedding",
-        threshold=THRESHOLD, n_cells=2, n_probe=2,
     )
     pairs = out["dup_pairs"].collect()
     assert [(r["id_new"], r["id_matched"], r["scope"]) for r in pairs] == [
@@ -261,6 +264,7 @@ def test_semantic_within_pair_shared_cells_emits_once(spark):
 def test_semantic_cell_overflow_raises(spark, monkeypatch):
     """Cells past MAX_CELL_ROWS refuse loudly instead of OOMing (the
     SemDeDup guard, shared by every BLAS cogroup in the repo)."""
+    _cells(monkeypatch, 1, 1)
     monkeypatch.setattr(A, "MAX_CELL_ROWS", 3)
     existing = {i: _vec(i) for i in range(6)}
     batch = {100 + i: _vec(100 + i) for i in range(6)}
@@ -269,7 +273,6 @@ def test_semantic_cell_overflow_raises(spark, monkeypatch):
     with pytest.raises(Exception, match="cell holds"):
         A.incremental_semantic_merge(
             _df(spark, existing), _df(spark, batch), "vec_id", "embedding",
-            threshold=THRESHOLD, n_cells=1, n_probe=1,
         )
 
 

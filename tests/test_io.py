@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import glob
-import itertools
 import os
 import shutil
 from pathlib import Path
@@ -25,7 +24,7 @@ from dynamic_etl_spark.io import (
     write_csv,
     write_staging_swap,
 )
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_of
 from tests.parity import canonicalize
 
 SCRATCH = Path(__file__).resolve().parent.parent / ".tmp" / "io"
@@ -361,15 +360,10 @@ def test_read_table_sidecar_matches_inference_for_every_retail_table(spark, reta
         retail_day / "dw" / n
         for n in ("dim_store", "dim_product", "dim_distributor", "dim_date", "fact_sales_dw")
     ]
-    sc = spark.sparkContext
     for path in map(str, tables):
         assert os.path.isfile(_sidecar(path)), path
-        sc.setJobGroup("read-table-sidecar", "read-table-sidecar")
-        try:
-            df = read_table(spark, path)
-        finally:
-            sc.setJobGroup(None, None)
-        assert not sc.statusTracker().getJobIdsForGroup("read-table-sidecar"), path
+        df, jobs = jobs_of(spark, lambda: read_table(spark, path))
+        assert jobs == 0, path
         assert df.schema == spark.read.parquet(path).schema, path
         assert df.count() == spark.read.parquet(path).count()
 
@@ -393,9 +387,9 @@ def test_csv_sidecar_read_matches_inference_without_a_job(spark, scratch):
     write_csv(df, str(out), sep="|")
     assert os.path.isfile(_sidecar(out))
 
-    back, jobs = _jobs_of(spark, lambda: read_csv_schema_on_read(spark, str(out), sep="|"))
+    back, jobs = jobs_of(spark, lambda: read_csv_schema_on_read(spark, str(out), sep="|"))
     assert jobs == 0
-    inferred, inference_jobs = _jobs_of(
+    inferred, inference_jobs = jobs_of(
         spark, lambda: read_csv_schema_on_read(spark, _part_file(out), sep="|")
     )
     assert inference_jobs > 0
@@ -406,7 +400,7 @@ def test_csv_sidecar_read_matches_inference_without_a_job(spark, scratch):
 
     bare = scratch / "bare"
     shutil.copytree(out, bare, ignore=shutil.ignore_patterns("_schema.json"))
-    same, bare_jobs = _jobs_of(spark, lambda: read_csv_schema_on_read(spark, str(bare), sep="|"))
+    same, bare_jobs = jobs_of(spark, lambda: read_csv_schema_on_read(spark, str(bare), sep="|"))
     assert bare_jobs > 0
     assert same.columns == back.columns and same.collect() == back.collect()
 
@@ -427,7 +421,7 @@ def test_retail_day_csvs_read_back_with_their_header(spark, retail_day):
     ]
     for directory, sep in extracts:
         assert os.path.isfile(_sidecar(directory)), directory
-        back, jobs = _jobs_of(
+        back, jobs = jobs_of(
             spark, lambda: read_csv_schema_on_read(spark, str(directory), sep=sep)
         )
         assert jobs == 0, directory
@@ -456,30 +450,15 @@ def test_read_table_without_sidecar_falls_back_to_inference(spark, scratch):
     assert sorted(r["id"] for r in df.collect()) == [0, 1, 2, 3]
 
 
-_memo_groups = itertools.count()
-
-
-def _jobs_of(spark, fn):
-    """``fn()`` and the number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"read-table-memo-{next(_memo_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_load_table_infers_a_corpus_file_once(spark, scratch):
     """A foreign single parquet file carries no sidecar; its footer is
     inferred on the first read only, and the remembered schema is the
     one inference finds."""
     path = str(scratch / "nation.parquet")
     shutil.copy(os.path.join(SF_SMALL, "nation.parquet"), path)
-    _, first = _jobs_of(spark, lambda: load_table(spark, str(scratch), "nation"))
+    _, first = jobs_of(spark, lambda: load_table(spark, str(scratch), "nation"))
     assert first >= 1  # the meter sees the inference job
-    df, second = _jobs_of(spark, lambda: load_table(spark, str(scratch), "nation"))
+    df, second = jobs_of(spark, lambda: load_table(spark, str(scratch), "nation"))
     assert second == 0
     plain = spark.read.parquet(path)
     assert df.schema == plain.schema
@@ -592,13 +571,8 @@ def test_compacting_a_partitioned_swap_keeps_string_partition_keys(spark, scratc
     assert sorted(n for n in os.listdir(path) if not n.startswith(("_", "."))) == [
         "store_code=001", "store_code=002", "store_code=003",
     ]
-    sc = spark.sparkContext
-    sc.setJobGroup("read-partitioned-table", "read-partitioned-table")
-    try:
-        back = read_table(spark, path)
-    finally:
-        sc.setJobGroup(None, None)
-    assert not sc.statusTracker().getJobIdsForGroup("read-partitioned-table")
+    back, jobs = jobs_of(spark, lambda: read_table(spark, path))
+    assert jobs == 0
     assert back.schema == df.schema
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 

@@ -15,12 +15,10 @@ convention as the shuffle budget)."""
 
 from __future__ import annotations
 
-import itertools
-
 import pytest
 
 from dynamic_etl_spark.registry import all_queries
-from tests.conftest import SF_SMALL
+from tests.conftest import SF_SMALL, jobs_of
 
 REGISTRY = all_queries()
 
@@ -170,27 +168,11 @@ _WARM_FIRST = {
     "flagship_star_join",
 }
 
-_group_seq = itertools.count()
-
-
-def _run_in_group(spark, fn, *args) -> int:
-    """Run fn(*args).count() inside a fresh job group; return the number
-    of Spark jobs the group spent."""
-    sc = spark.sparkContext
-    group = f"job-budget-{next(_group_seq)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn(*args).count()
-    finally:
-        sc.setJobGroup(None, None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
 def test_job_budget(spark, name):
     if name in _WARM_FIRST:
         REGISTRY[name].fn(spark, SF_SMALL).count()
-    jobs = _run_in_group(spark, REGISTRY[name].fn, spark, SF_SMALL)
+    _, jobs = jobs_of(spark, lambda: REGISTRY[name].fn(spark, SF_SMALL).count())
     budget = JOB_BUDGETS[name]
     assert jobs <= budget, (
         f"{name} spent {jobs} Spark jobs > budget {budget}: an extra eager "
@@ -205,13 +187,13 @@ def test_meter_detects_an_extra_checkpoint(spark):
     raise the count above the plain run — otherwise a real regression
     could hide."""
     name = "heavy_hitter_maintenance"
-    plain = _run_in_group(spark, REGISTRY[name].fn, spark, SF_SMALL)
+    _, plain = jobs_of(spark, lambda: REGISTRY[name].fn(spark, SF_SMALL).count())
 
     def mutated(spark_, sf_dir):
         # the deliberate regression: an extra eager checkpoint
         return REGISTRY[name].fn(spark_, sf_dir).localCheckpoint()
 
-    mutated_jobs = _run_in_group(spark, mutated, spark, SF_SMALL)
+    _, mutated_jobs = jobs_of(spark, lambda: mutated(spark, SF_SMALL).count())
     assert mutated_jobs > plain, (
         f"extra checkpoint did not move the job count ({mutated_jobs} vs "
         f"{plain}) — the meter is blind"
@@ -260,16 +242,7 @@ def test_retail_day_job_budget(spark, tmp_path):
         ),
         "dw_load": lambda: R.dw_load_pipeline(spark, src, ext, dw),
     }
-    sc = spark.sparkContext
-    jobs = {}
-    for dag, factory in dags.items():
-        group = f"job-budget-retail-{dag}-{next(_group_seq)}"
-        sc.setJobGroup(group, group)
-        try:
-            factory().run()
-        finally:
-            sc.setJobGroup(None, None)
-        jobs[dag] = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = {dag: jobs_of(spark, lambda: factory().run())[1] for dag, factory in dags.items()}
     over = {d: (n, RETAIL_DAY_JOB_BUDGETS[d]) for d, n in jobs.items()
             if n > RETAIL_DAY_JOB_BUDGETS[d]}
     assert not over, (

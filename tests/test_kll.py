@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from dynamic_etl_spark.catalog import load_table
 from dynamic_etl_spark.ops import kll
+from dynamic_etl_spark.ops.agg import QUANTILES as QS
 from dynamic_etl_spark.ops.kll import (
     DEFAULT_K,
     _compress,
@@ -26,7 +27,6 @@ from dynamic_etl_spark.ops.kll import (
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MID = "/root/testdata/sf0.01"
-QS = (0.5, 0.9, 0.99)
 
 # Repo-local scratch (the environment forbids writes outside /root/repo).
 _SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp", "kll")
@@ -75,9 +75,7 @@ def test_rank_error_within_bound_one_shot_and_merged(spark, sf_dir):
     sorted_vals = _true_ranks(pdf)
     n_max = max(len(v) for v in sorted_vals.values())
 
-    one_shot = finalize_kll_state(
-        build_kll_state(ev, ["event_type"], "value"), qs=QS
-    ).collect()
+    one_shot = finalize_kll_state(build_kll_state(ev, ["event_type"], "value")).collect()
     assert len(one_shot) == len(sorted_vals) * len(QS)
     err = _worst_rank_err(one_shot, sorted_vals)
     bound = kll_rank_error_bound(n_max, DEFAULT_K)
@@ -91,7 +89,7 @@ def test_rank_error_within_bound_one_shot_and_merged(spark, sf_dir):
     )
     s3 = build_kll_state(ev.filter(F.col("ts") >= cut2), ["event_type"], "value")
     merged = merge_kll_state(merge_kll_state(s1, s2), s3)
-    merged_rows = finalize_kll_state(merged, qs=QS).collect()
+    merged_rows = finalize_kll_state(merged).collect()
     err_m = _worst_rank_err(merged_rows, sorted_vals)
     bound_m = kll_rank_error_bound(n_max, DEFAULT_K, n_merges=2)
     assert err_m <= bound_m, f"merged rank error {err_m:.5f} > bound {bound_m:.5f}"
@@ -129,7 +127,7 @@ def test_merge_tree_shapes_all_within_bound(spark):
     }
     bound = kll_rank_error_bound(n_max, DEFAULT_K, n_merges=3)
     for shape, state in trees.items():
-        err = _worst_rank_err(finalize_kll_state(state, qs=QS).collect(), sorted_vals)
+        err = _worst_rank_err(finalize_kll_state(state).collect(), sorted_vals)
         assert err <= bound, f"{shape} tree rank error {err:.5f} > bound {bound:.5f}"
 
 
@@ -176,8 +174,8 @@ def test_exact_below_k_and_deterministic_rerun(spark):
     empirical quantile. Re-running the full build twice is bit-stable
     (crc32 coins, no RNG)."""
     ev = _events(spark, SF_SMALL)
-    r1 = finalize_kll_state(build_kll_state(ev, ["event_type"], "value"), qs=QS)
-    r2 = finalize_kll_state(build_kll_state(ev, ["event_type"], "value"), qs=QS)
+    r1 = finalize_kll_state(build_kll_state(ev, ["event_type"], "value"))
+    r2 = finalize_kll_state(build_kll_state(ev, ["event_type"], "value"))
     rows1 = sorted(map(tuple, r1.collect()))
     rows2 = sorted(map(tuple, r2.collect()))
     assert rows1 == rows2
@@ -211,7 +209,7 @@ def test_finalize_tie_invariance(spark):
     for perm in (rows, list(reversed(rows)), rows[::2] + rows[1::2]):
         for nparts in (1, 7):
             state = spark.createDataFrame(perm, schema).repartition(nparts)
-            got = sorted(map(tuple, finalize_kll_state(state, qs=QS).collect()))
+            got = sorted(map(tuple, finalize_kll_state(state).collect()))
             if base is None:
                 base = got
             assert got == base
@@ -264,7 +262,7 @@ def test_streaming_summary_maintains_rank_sketch(spark, scratch, monkeypatch):
             build=lambda b: build_kll_state(b, ["grp"], "value"),
             merge=merge_kll_state,
         )
-    maintained = finalize_kll_state(read_versioned(spark, state), qs=QS).collect()
+    maintained = finalize_kll_state(read_versioned(spark, state)).collect()
     by_grp = {}
     for g, v in all_rows:
         by_grp.setdefault(g, []).append(v)
@@ -288,7 +286,7 @@ def test_kll_empty_and_all_null_inputs(spark, monkeypatch):
     empty = spark.createDataFrame([], "grp string, value double")
     s_empty = build_kll_state(empty, ["grp"], "value")
     assert s_empty.count() == 0
-    assert finalize_kll_state(s_empty, qs=QS).count() == 0
+    assert finalize_kll_state(s_empty).count() == 0
 
     nulls = spark.createDataFrame([("a", None), ("b", None)], "grp string, value double")
     assert build_kll_state(nulls, ["grp"], "value").count() == 0
@@ -308,7 +306,7 @@ def test_kll_single_value_and_single_row(spark, monkeypatch):
     one = build_kll_state(
         spark.createDataFrame([("a", 7.5)], "grp string, value double"), ["grp"], "value"
     )
-    rows = finalize_kll_state(one, qs=QS).collect()
+    rows = finalize_kll_state(one).collect()
     assert [(r["q"], r["quantile_est"]) for r in sorted(rows, key=lambda r: r["q"])] == [
         (0.5, 7.5), (0.9, 7.5), (0.99, 7.5)
     ]
@@ -316,7 +314,7 @@ def test_kll_single_value_and_single_row(spark, monkeypatch):
         spark.createDataFrame([("a", 3.25)] * 500, "grp string, value double"),
         ["grp"], "value",
     )
-    for r in finalize_kll_state(const, qs=QS).collect():
+    for r in finalize_kll_state(const).collect():
         assert r["quantile_est"] == 3.25
 
 
@@ -336,7 +334,7 @@ def test_presketch_key_flush_preserves_correctness(spark, monkeypatch):
     assert set(per_key_rows) == {f"k{i:02d}" for i in range(40)}
     n_per = 8000 // 40
     assert max(per_key_rows.values()) <= kll_state_bound(n_per, k)
-    fin = finalize_kll_state(state, qs=QS).collect()
+    fin = finalize_kll_state(state).collect()
     by_grp = {}
     for g, v in rows:
         by_grp.setdefault(g, []).append(v)

@@ -43,11 +43,9 @@ def _brute_force_pairs(spark, docs, threshold):
 def test_minhash_lsh_finds_planted_near_dups(spark, docs_with_near_dups):
     found = {
         (r["id_a"], r["id_b"])
-        for r in L.minhash_near_dup_pairs(
-            docs_with_near_dups, "doc_id", "text", threshold=0.5
-        ).collect()
+        for r in L.minhash_near_dup_pairs(docs_with_near_dups, "doc_id", "text").collect()
     }
-    truth = _brute_force_pairs(spark, docs_with_near_dups, 0.5)
+    truth = _brute_force_pairs(spark, docs_with_near_dups, L.JACCARD_THRESHOLD)
     planted = {(d, d + 2000000) for (d, d2) in truth if d2 == d + 2000000}
     # no false positives (every reported pair passes exact Jaccard >= 0.5)
     assert found <= truth
@@ -68,7 +66,7 @@ def test_minhash_md5_mode_matches_family_guarantees(spark, docs_with_near_dups):
     found = {
         (r["id_a"], r["id_b"])
         for r in L.minhash_near_dup_pairs(
-            docs_with_near_dups, "doc_id", "text", threshold=0.5, hash_mode="md5"
+            docs_with_near_dups, "doc_id", "text", hash_mode="md5"
         ).collect()
     }
     truth = _brute_force_pairs(spark, docs_with_near_dups, 0.5)
@@ -223,13 +221,14 @@ def test_srp_md5_mode_bits_partition_invariant(spark):
     assert banded(emb.coalesce(1)) == base
 
 
-def test_lsh_ann_md5_mode_recall_and_bucketing(spark):
+def test_lsh_ann_md5_mode_recall_and_bucketing(spark, monkeypatch):
     """md5 hash mode keeps the xxhash twin's contract: useful recall vs
     brute force, candidates bucketed (never exhaustive)."""
+    monkeypatch.setattr(ANN, "ANN_TOPK", 5)
     emb = load_table(spark, SF_SMALL, "embeddings").cache()
     queries = emb.filter(F.col("vec_id") % 10 == 0)
     exact = ANN.cosine_topk(emb, queries, "vec_id", "embedding", k=5)
-    approx = ANN.lsh_ann_topk(emb, queries, "vec_id", "embedding", k=5, hash_mode="md5")
+    approx = ANN.lsh_ann_topk(emb, queries, "vec_id", "embedding", hash_mode="md5")
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     got = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(got & truth) / len(truth)
@@ -259,7 +258,8 @@ def test_vectorized_topk_matches_exact(spark):
     assert fast == exact
 
 
-def test_ivf_ann_recall_and_candidate_bound(spark):
+def test_ivf_ann_recall_and_candidate_bound(spark, monkeypatch):
+    monkeypatch.setattr(ANN, "ANN_TOPK", 5)
     emb = load_table(spark, SF_SMALL, "embeddings").cache()
     queries = emb.filter(F.col("vec_id") % 10 == 0)
     exact = ANN.cosine_topk(emb, queries, "vec_id", "embedding", k=5)
@@ -267,7 +267,7 @@ def test_ivf_ann_recall_and_candidate_bound(spark):
     # (no k-means refit per call — VERDICT r3 nit); the assignment is a
     # localCheckpoint, so no CacheManager entry to unpersist
     idx = ANN.build_ivf_index(emb, "vec_id", "embedding", n_cells=8)
-    ivf = ANN.ivf_topk(emb, queries, "vec_id", "embedding", k=5, index=idx)
+    ivf = ANN.ivf_topk(emb, queries, "vec_id", "embedding", index=idx)
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     got = {(r["query_id"], r["neighbor_id"]) for r in ivf.collect()}
     recall = len(got & truth) / len(truth)
@@ -277,15 +277,15 @@ def test_ivf_ann_recall_and_candidate_bound(spark):
     assert len(got) <= n_queries * 5
 
     for _ in range(2):
-        again = ANN.ivf_topk(emb, queries, "vec_id", "embedding", k=5, index=idx)
+        again = ANN.ivf_topk(emb, queries, "vec_id", "embedding", index=idx)
         got_again = {(r["query_id"], r["neighbor_id"]) for r in again.collect()}
         assert got_again == got
     # and a split query set against one index unions to the same result
     # (the registry embedding_ann_ivf shape)
     evens = queries.filter(F.col("vec_id") % 20 == 0)
     odds = queries.filter(F.col("vec_id") % 20 != 0)
-    a = ANN.ivf_topk(emb, evens, "vec_id", "embedding", k=5, index=idx)
-    b = ANN.ivf_topk(emb, odds, "vec_id", "embedding", k=5, index=idx)
+    a = ANN.ivf_topk(emb, evens, "vec_id", "embedding", index=idx)
+    b = ANN.ivf_topk(emb, odds, "vec_id", "embedding", index=idx)
     split = {(r["query_id"], r["neighbor_id"]) for r in a.unionByName(b).collect()}
     assert split == got
 
@@ -380,11 +380,12 @@ def test_knn_join_cross_side_refuses_mismatched_id_dtypes(spark):
     assert got.filter(F.col("query_id") == F.col("neighbor_id")).count() == 0
 
 
-def test_lsh_ann_recall_vs_bruteforce(spark):
+def test_lsh_ann_recall_vs_bruteforce(spark, monkeypatch):
+    monkeypatch.setattr(ANN, "ANN_TOPK", 5)
     emb = load_table(spark, SF_SMALL, "embeddings").cache()
     queries = emb.filter(F.col("vec_id") % 10 == 0)
     exact = ANN.cosine_topk(emb, queries, "vec_id", "embedding", k=5)
-    approx = ANN.lsh_ann_topk(emb, queries, "vec_id", "embedding", k=5)
+    approx = ANN.lsh_ann_topk(emb, queries, "vec_id", "embedding")
     truth = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
     got = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(got & truth) / len(truth)
@@ -513,9 +514,7 @@ def test_semantic_dedup_survivors_convention(spark, emb_with_planted_dups):
     """Full pass: every planted twin is absorbed into its base (MIN-id
     survivor convention), every other vector survives as its own
     component, and the output covers the corpus exactly once."""
-    out = ANN.semantic_dedup(
-        emb_with_planted_dups, "vec_id", "embedding", threshold=0.95, n_cells=8
-    ).collect()
+    out = ANN.semantic_dedup(emb_with_planted_dups, "vec_id", "embedding").collect()
     planted = _planted_ids(emb_with_planted_dups)
     by_id = {r["vec_id"]: r for r in out}
     assert len(by_id) == emb_with_planted_dups.count()
@@ -569,10 +568,13 @@ def _ref_bpe(word_freqs, n_merges, min_count, eow="</w>"):
     return merges
 
 
-def test_bpe_training_matches_reference(spark):
+def test_bpe_training_matches_reference(spark, monkeypatch):
     from collections import Counter
 
+    from dynamic_etl_spark.ops import bpe
     from dynamic_etl_spark.ops.bpe import train_bpe
+
+    monkeypatch.setattr(bpe, "N_MERGES", 12)
 
     texts = [
         "low lower lowest low low",
@@ -582,10 +584,10 @@ def test_bpe_training_matches_reference(spark):
     ]
     corpus = spark.createDataFrame([(t,) for t in texts], "text string")
     freqs = Counter(w for t in texts for w in t.split())
-    expect = _ref_bpe(freqs, n_merges=12, min_count=2)
+    expect = _ref_bpe(freqs, bpe.N_MERGES, bpe.MIN_COUNT)
     got = [
         (r["rank"], r["left"], r["right"], r["merged"], r["pair_count"])
-        for r in train_bpe(corpus, "text", n_merges=12, min_count=2)
+        for r in train_bpe(corpus, "text")
         .orderBy("rank")
         .collect()
     ]
@@ -593,24 +595,29 @@ def test_bpe_training_matches_reference(spark):
     assert len(got) >= 5  # the fixture must actually train several merges
 
 
-def test_bpe_training_partition_invariant(spark):
+def test_bpe_training_partition_invariant(spark, monkeypatch):
+    from dynamic_etl_spark.ops import bpe
     from dynamic_etl_spark.ops.bpe import train_bpe
+
+    monkeypatch.setattr(bpe, "N_MERGES", 6)
 
     texts = [("aaab aaab aab ab b",), ("aaab aab aab ab aaabaaab",)]
     one = spark.createDataFrame(texts, "text string").coalesce(1)
     many = spark.createDataFrame(texts, "text string").repartition(7)
-    m1 = [tuple(r) for r in train_bpe(one, n_merges=6).orderBy("rank").collect()]
-    m7 = [tuple(r) for r in train_bpe(many, n_merges=6).orderBy("rank").collect()]
+    m1 = [tuple(r) for r in train_bpe(one).orderBy("rank").collect()]
+    m7 = [tuple(r) for r in train_bpe(many).orderBy("rank").collect()]
     # the SAME corpus at different parallelism: bit-identical merge table
     assert m1 == m7
     assert len(m1) >= 4
 
 
-def test_bpe_early_stop_and_segment_roundtrip(spark):
+def test_bpe_early_stop_and_segment_roundtrip(spark, monkeypatch):
+    from dynamic_etl_spark.ops import bpe
     from dynamic_etl_spark.ops.bpe import bpe_segment, train_bpe
 
+    monkeypatch.setattr(bpe, "N_MERGES", 50)
     corpus = spark.createDataFrame([("ab ab cd",)], "text string")
-    merges = train_bpe(corpus, n_merges=50, min_count=2).collect()
+    merges = train_bpe(corpus).collect()
     # only pairs with weighted count >= 2 can merge; training must stop
     # early rather than loop 50 rounds
     assert 0 < len(merges) < 50
@@ -621,15 +628,18 @@ def test_bpe_early_stop_and_segment_roundtrip(spark):
     assert len(seg) <= 3
 
 
-def test_bpe_encode_profile_matches_reference_encode(spark):
+def test_bpe_encode_profile_matches_reference_encode(spark, monkeypatch):
     """The distributed encode (distinct-word segmentation + corpus join)
     must equal segmenting every word of every doc with the driver-side
     reference loop — same token counts, same char sums, same ratio."""
+    from dynamic_etl_spark.ops import bpe
     from dynamic_etl_spark.ops.bpe import (
         bpe_encode_profile,
         bpe_segment,
         train_bpe,
     )
+
+    monkeypatch.setattr(bpe, "N_MERGES", 10)
 
     texts = [
         (1, "low lower lowest low low"),
@@ -638,7 +648,7 @@ def test_bpe_encode_profile_matches_reference_encode(spark):
         (4, "the newest widest lowest the the"),
     ]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
-    merges = train_bpe(docs, "text", n_merges=10, min_count=2)
+    merges = train_bpe(docs, "text")
     ranks = {(r["left"], r["right"]): r["rank"] for r in merges.collect()}
 
     got = {
@@ -825,7 +835,7 @@ def test_ivf_exacthash_matches_python_replay_and_recall(spark):
         ((r["vec_id"], list(r["embedding"])) for r in emb.collect()),
         key=lambda t: t[0],
     )
-    SCALE, CELLS, PROBE, ITERS, K = 1 << 16, 8, 2, 5, 10
+    SCALE, CELLS, PROBE, ITERS, K = 1 << 16, 8, 2, 5, ANN.ANN_TOPK
     qv = {i: [math.floor(float(x) * SCALE) for x in v] for i, v in rows}
     cent = {c: list(qv[rows[c][0]]) for c in range(CELLS)}
 
@@ -873,7 +883,7 @@ def test_ivf_exacthash_matches_python_replay_and_recall(spark):
         (r["query_id"], r["rank"]): r["neighbor_id"]
         for r in ANN.ivf_exacthash_topk(
             emb, emb.filter(F.col("vec_id") % 100 == 0), "vec_id", "embedding",
-            k=K, n_cells=CELLS, n_probe=PROBE, iters=ITERS,
+            n_cells=CELLS, n_probe=PROBE, iters=ITERS,
         ).collect()
     }
     assert got == expect
@@ -895,23 +905,21 @@ def test_knn_join_exacthash_exhaustive_probe_equals_bruteforce(spark):
     corpus top-k bit-for-bit (the knn_join exact-equality convention);
     at the production 4/8 setting recall stays usable."""
     emb = load_table(spark, SF_SMALL, "embeddings").cache()
-    exhaustive = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-        for r in ANN.knn_join_exacthash(
-            emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=8, iters=3
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ANN, "KNN_PROBE", ANN.KNN_CELLS)
+        exhaustive = {
+            (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
+            for r in ANN.knn_join_exacthash(emb, "vec_id", "embedding", iters=3).collect()
+        }
     brute = {
         (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine_sim"])
-        for r in ANN.cosine_topk(emb, emb, "vec_id", "embedding", k=5).collect()
+        for r in ANN.cosine_topk(emb, emb, "vec_id", "embedding", k=ANN.KNN_K).collect()
     }
     assert exhaustive == brute
 
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in ANN.knn_join_exacthash(
-            emb, "vec_id", "embedding", k=5, n_cells=8, n_probe=4, iters=5
-        ).collect()
+        for r in ANN.knn_join_exacthash(emb, "vec_id", "embedding", iters=5).collect()
     }
     truth = {(q, n) for (q, _), (n, _) in brute.items()}
     recall = len(approx & truth) / len(truth)

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dynamic_etl_spark.catalog import load_table
+from dynamic_etl_spark.ops import agg
 from dynamic_etl_spark.ops.skew import salted_join
 from tests.conftest import SF_SMALL
 
@@ -18,7 +19,7 @@ def test_salted_join_equals_plain_join(spark):
     li = load_table(spark, SF_SMALL, "lineitem").limit(100)
     dim = load_table(spark, SF_SMALL, "supplier").filter(F.col("s_suppkey") % 2 == 0)
     fact = li.select("l_orderkey", F.col("l_suppkey").alias("s_suppkey"))
-    out = salted_join(fact, dim, on=["s_suppkey"], buckets=4)
+    out = salted_join(fact, dim, on=["s_suppkey"])
     plain = fact.join(dim, "s_suppkey")
     assert 0 < plain.count() < 100
     assert out.exceptAll(plain.select(*out.columns)).count() == 0
@@ -281,7 +282,7 @@ def test_fuzzy_blocked_match_resolves_typos(spark):
         r["raw"]: (r["match_value"], r["match_distance"])
         for r in fuzzy_blocked_match(
             dirty, dim, dirty_col="raw", dim_col="name",
-            block=lambda c: F.substring(c, -2, 2), max_distance=2,
+            block=lambda c: F.substring(c, -2, 2),
         ).collect()
     }
     assert out["Brnd#11"] == ("Brand#11", 1)
@@ -439,7 +440,7 @@ def test_url_extract_domain_and_scrub_hand_examples(spark):
     assert cleaned[12] == rows[11][1]  # chain untouched (host=good.site)
 
 
-def test_hll_md5_state_accuracy_merge_and_idempotence(spark):
+def test_hll_md5_state_accuracy_merge_and_idempotence(spark, monkeypatch):
     """The md5-register HLL (the oracle-checkable variant): (a) in the
     raw-estimate regime (n >> 2.5m) the uncorrected estimate lands
     within ~3x the theoretical standard error of exact; (b) the MAX
@@ -454,23 +455,24 @@ def test_hll_md5_state_accuracy_merge_and_idempotence(spark):
     )
 
     n, p = 60_000, 8  # m=256 -> n/m ~ 234, deep in the raw regime
+    monkeypatch.setattr(agg, "HLL_P", p)
     df = spark.range(n).select(F.col("id").alias("v"))
-    one_shot = build_hll_md5_state(df, [], "v", p=p)
-    est = finalize_hll_md5_state(one_shot, p=p).collect()[0]["raw_estimate"]
+    one_shot = build_hll_md5_state(df, [], "v")
+    est = finalize_hll_md5_state(one_shot).collect()[0]["raw_estimate"]
     se = 1.04 / (1 << (p // 2))  # ~6.5% at m=256
     assert abs(est - n) <= 3 * se * n, est
 
     halves = [df.filter(F.col("v") % 2 == i) for i in (0, 1)]
-    states = [build_hll_md5_state(h, [], "v", p=p) for h in halves]
+    states = [build_hll_md5_state(h, [], "v") for h in halves]
     merged = merge_hll_md5_state(states[0], states[1])
     regs = lambda s: {(r["bucket"], r["max_rho"]) for r in s.collect()}
     assert regs(merged) == regs(one_shot)
     assert regs(merge_hll_md5_state(merged, states[0])) == regs(one_shot)
 
 
-def test_hll_md5_precision_rides_in_the_state(spark):
-    """ADVICE r8: a state finalized (or merged) at a different p than it
-    was built with must refuse loudly, not mis-pad the empty buckets
+def test_hll_md5_precision_rides_in_the_state(spark, monkeypatch):
+    """ADVICE r8: a state finalized (or merged) at a different HLL_P than
+    it was built with (one persisted before HLL_P changed) must refuse loudly, not mis-pad the empty buckets
     into a plausible-looking estimate. The precision column also keeps
     mixed-p registers apart in merge so finalize catches the mix."""
     import pytest as _pytest
@@ -484,25 +486,28 @@ def test_hll_md5_precision_rides_in_the_state(spark):
     )
 
     df = spark.range(1000).select(F.col("id").alias("v"))
-    s8 = build_hll_md5_state(df, [], "v", p=8)
+    monkeypatch.setattr(agg, "HLL_P", 8)
+    s8 = build_hll_md5_state(df, [], "v")
     assert "hll_p" in s8.columns
     # wrong finalize precision -> evaluation-time raise_error
+    monkeypatch.setattr(agg, "HLL_P", 10)
     with _pytest.raises((PySparkException, Py4JJavaError)) as exc:
-        finalize_hll_md5_state(s8, p=10).collect()
+        finalize_hll_md5_state(s8).collect()
     assert "finalize_hll_md5_state" in str(exc.value)
     # mixed-p merge: registers stay apart, finalize refuses the mix
-    s10 = build_hll_md5_state(df, [], "v", p=10)
+    s10 = build_hll_md5_state(df, [], "v")
     mixed = merge_hll_md5_state(s8, s10)
     with _pytest.raises((PySparkException, Py4JJavaError)):
-        finalize_hll_md5_state(mixed, p=10).collect()
+        finalize_hll_md5_state(mixed).collect()
     # a pre-contract state (no hll_p column) is refused at plan time
+    monkeypatch.setattr(agg, "HLL_P", 8)
     legacy = s8.drop("hll_p")
     with _pytest.raises(ValueError, match="hll_p"):
-        finalize_hll_md5_state(legacy, p=8)
+        finalize_hll_md5_state(legacy)
     with _pytest.raises(ValueError, match="hll_p"):
         merge_hll_md5_state(legacy, s8)
     # the happy path is unchanged by the guard
-    est = finalize_hll_md5_state(s8, p=8).collect()[0]["raw_estimate"]
+    est = finalize_hll_md5_state(s8).collect()[0]["raw_estimate"]
     assert abs(est - 1000) <= 0.3 * 1000
 
 
@@ -523,7 +528,7 @@ def test_resample_linear_hand_example(spark):
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
     out = {
         str(r["grid_ts"]): r["v"]
-        for r in resample_linear(df, ["k"], "ts", "v", 3600, tiebreak_col="id").collect()
+        for r in resample_linear(df, ["k"], "ts", "v", tiebreak_col="id").collect()
     }
     # grid: 01:00, 02:00, 03:00 (span 00:30..03:30)
     assert out["2024-01-01 01:00:00"] == 10.0 + (40.0 - 10.0) * (30 / 90)
@@ -536,20 +541,23 @@ def test_resample_linear_hand_example(spark):
     df2 = spark.createDataFrame(
         rows2, "k int, ts string, v double, id int"
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    out2 = resample_linear(df2, ["k"], "ts", "v", 3600, tiebreak_col="id").collect()
+    out2 = resample_linear(df2, ["k"], "ts", "v", tiebreak_col="id").collect()
     assert len(out2) == 1 and out2[0]["v"] == 10.0 + 10.0 * (30 / 60)
 
 
-def test_chunk_documents_edges(spark):
+def test_chunk_documents_edges(spark, monkeypatch):
+    from dynamic_etl_spark.ops import text
     from dynamic_etl_spark.ops.text import chunk_documents
 
+    monkeypatch.setattr(text, "CHUNK_TOKENS", 3)
+    monkeypatch.setattr(text, "CHUNK_STRIDE", 2)
     rows = [
         (1, "a b c d e f g"),  # 7 tokens
         (2, "x y"),            # shorter than one chunk
         (3, "   "),            # zero tokens -> no chunks
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = chunk_documents(df, "doc_id", "text", chunk_tokens=3, stride=2)
+    out = chunk_documents(df, "doc_id", "text")
     got = {(r["doc_id"], r["chunk_idx"]): (r["chunk_text"], r["n_chunk_tokens"]) for r in out.collect()}
     assert got[(1, 0)] == ("a b c", 3)
     assert got[(1, 1)] == ("c d e", 3)
@@ -642,7 +650,7 @@ def test_resample_linear_span_without_grid_point_and_null_values(spark):
     df = spark.createDataFrame(
         rows, "k int, ts string, v double, id int"
     ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    out = resample_linear(df, ["k"], "ts", "v", 3600, tiebreak_col="id").collect()
+    out = resample_linear(df, ["k"], "ts", "v", tiebreak_col="id").collect()
     got = {(r["k"], str(r["grid_ts"])): r["v"] for r in out}
     assert all(k != 1 for k, _ in got)  # key 1: no grid point, no crash
     # key 2's 01:00 point interpolates across the null obs: 10 -> 30
@@ -650,7 +658,7 @@ def test_resample_linear_span_without_grid_point_and_null_values(spark):
     assert len(got) == 1
 
 
-def test_heavy_hitter_state_guarantees(spark):
+def test_heavy_hitter_state_guarantees(spark, monkeypatch):
     """Misra-Gries mergeable summaries (ops/agg): counters never
     overestimate, every item with true count > N/(k+1) survives any
     merge tree, and the summary never exceeds k rows per key."""
@@ -677,6 +685,7 @@ def test_heavy_hitter_state_guarantees(spark):
         rows.append((g, item, i))
     df = spark.createDataFrame(rows, "grp string, item long, seq long")
     k = 4
+    monkeypatch.setattr(agg, "MG_K", k)
 
     truth = {g: Counter() for g in ("a", "b")}
     for g, item, _ in rows:
@@ -686,9 +695,9 @@ def test_heavy_hitter_state_guarantees(spark):
     parts = [
         df.filter(F.col("seq") % 3 == r).select("grp", "item") for r in range(3)
     ]
-    states = [build_heavy_hitter_state(p, ["grp"], "item", k=k) for p in parts]
+    states = [build_heavy_hitter_state(p, ["grp"], "item") for p in parts]
     merged = merge_heavy_hitter_state(
-        merge_heavy_hitter_state(states[0], states[1], k=k), states[2], k=k
+        merge_heavy_hitter_state(states[0], states[1]), states[2]
     )
     out = finalize_heavy_hitter_state(merged).collect()
 
@@ -707,18 +716,19 @@ def test_heavy_hitter_state_guarantees(spark):
     # lose different information), but both must satisfy the guarantee;
     # the registry oracle separately pins the fold bit-for-bit.
     one_shot = finalize_heavy_hitter_state(
-        build_heavy_hitter_state(df, ["grp"], "item", k=k)
+        build_heavy_hitter_state(df, ["grp"], "item")
     ).collect()
     for r in one_shot:
         assert r["count_lower_bound"] <= truth[r["grp"]][r["item"]]
 
 
-def test_reservoir_state_merge_invariant(spark):
+def test_reservoir_state_merge_invariant(spark, monkeypatch):
     """Per-key uniform reservoir: any slicing folds to the SAME sample as
     the one-shot build (bottom-n of a deterministic priority), and the
     summary never exceeds n rows per key."""
     from collections import Counter
 
+    from dynamic_etl_spark.ops import sample
     from dynamic_etl_spark.ops.sample import (
         build_reservoir_state,
         finalize_reservoir_state,
@@ -729,20 +739,17 @@ def test_reservoir_state_merge_invariant(spark):
         (F.col("id") % 3).cast("string").alias("grp"), F.col("id").alias("rid")
     )
     n = 7
-    one_shot = finalize_reservoir_state(
-        build_reservoir_state(df, ["grp"], "rid", n=n)
-    )
+    monkeypatch.setattr(sample, "RESERVOIR_N", n)
+    one_shot = finalize_reservoir_state(build_reservoir_state(df, ["grp"], "rid"))
     # two different slicings, both folded pairwise
     for mod, parts in ((2, 2), (5, 5)):
         states = [
-            build_reservoir_state(
-                df.filter(F.col("rid") % mod == r), ["grp"], "rid", n=n
-            )
+            build_reservoir_state(df.filter(F.col("rid") % mod == r), ["grp"], "rid")
             for r in range(parts)
         ]
         acc = states[0]
         for s in states[1:]:
-            acc = merge_reservoir_state(acc, s, n=n)
+            acc = merge_reservoir_state(acc, s)
         folded = finalize_reservoir_state(acc)
         a = {(r["grp"], r["item"]) for r in folded.collect()}
         b = {(r["grp"], r["item"]) for r in one_shot.collect()}
@@ -768,7 +775,7 @@ def test_zorder_key_matches_python_interleave(spark):
     got = {
         (r["x"], r["y"]): r["z"]
         for r in df.select(
-            "x", "y", zorder_key([F.col("x"), F.col("y")], bits=8).alias("z")
+            "x", "y", zorder_key([F.col("x"), F.col("y")]).alias("z")
         ).collect()
     }
     for (x, y), z in got.items():
@@ -777,14 +784,16 @@ def test_zorder_key_matches_python_interleave(spark):
     assert quad == [(0, 0), (1, 0), (0, 1), (1, 1)]
 
 
-def test_normalize_to_grid_bounds_and_clamp(spark):
+def test_normalize_to_grid_bounds_and_clamp(spark, monkeypatch):
+    from dynamic_etl_spark.ops import layout
     from dynamic_etl_spark.ops.layout import normalize_to_grid
 
+    monkeypatch.setattr(layout, "ZORDER_BITS", 8)
     df = spark.createDataFrame([(-5,), (0,), (50,), (100,), (140,)], "v long")
     got = [
         r["g"]
         for r in df.select(
-            normalize_to_grid(F.col("v"), 0, 100, 8).alias("g")
+            normalize_to_grid(F.col("v"), 100).alias("g")
         ).collect()
     ]
     assert got[0] == 0 and got[1] == 0          # clamped low edge
@@ -792,7 +801,7 @@ def test_normalize_to_grid_bounds_and_clamp(spark):
     assert got[2] == (50 * 255) // 100          # exact integer quotient
 
 
-def test_quantile_hist_state_error_bound_and_merge(spark):
+def test_quantile_hist_state_error_bound_and_merge(spark, monkeypatch):
     """Histogram-quantile state: any slicing folds to the identical
     merged histogram (integer sums), and every estimate sits within one
     bin width of the exact interpolated percentile."""
@@ -804,6 +813,7 @@ def test_quantile_hist_state_error_bound_and_merge(spark):
     )
 
     lo, hi, nb = 0.0, 100.0, 50
+    monkeypatch.setattr(agg, "QUANTILES", (0.5, 0.9))
     width = (hi - lo) / nb
     df = spark.range(2000).select(
         (F.col("id") % 2).cast("string").alias("grp"),
@@ -828,9 +838,7 @@ def test_quantile_hist_state_error_bound_and_merge(spark):
 
     got = {
         (r["grp"], r["q"]): r["quantile_est"]
-        for r in finalize_quantile_hist_state(
-            folded, lo, hi, nb, qs=(0.5, 0.9)
-        ).collect()
+        for r in finalize_quantile_hist_state(folded, lo, hi, nb).collect()
     }
     exact = {
         (r["grp"], q): r[f"p{int(q*100)}"]
@@ -845,17 +853,18 @@ def test_quantile_hist_state_error_bound_and_merge(spark):
         assert abs(est - exact[k]) <= width, (k, est, exact[k])
 
 
-def test_count_min_merge_equals_oneshot_and_overestimates(spark):
+def test_count_min_merge_equals_oneshot_and_overestimates(spark, monkeypatch):
     """CM state is an exact monoid: any slice split folds to the
     one-shot sketch bit-for-bit, and every item's estimate is >= its
     true count (the CM guarantee — an underestimate anywhere means a
     broken bucket hash or a dropped counter)."""
     from dynamic_etl_spark.ops.agg import build_cm_state, cm_estimate, merge_cm_state
 
+    monkeypatch.setattr(agg, "CM_WIDTH", 16)
     items = spark.range(3000).select((F.col("id") % 97).alias("item"))
-    oneshot = build_cm_state(items, [], "item", width=16)
+    oneshot = build_cm_state(items, [], "item")
     parts = [
-        build_cm_state(items.filter(F.col("item") % 3 == r), [], "item", width=16)
+        build_cm_state(items.filter(F.col("item") % 3 == r), [], "item")
         for r in range(3)
     ]
     merged = merge_cm_state(merge_cm_state(parts[0], parts[1]), parts[2])
@@ -879,7 +888,7 @@ def test_count_min_merge_equals_oneshot_and_overestimates(spark):
     assert any(est[i] > exact[i] for i in exact)
 
 
-def test_count_min_keyed_estimate_and_unseen_probe(spark):
+def test_count_min_keyed_estimate_and_unseen_probe(spark, monkeypatch):
     """Keyed state holds one grid per key group: each (key, item)
     answers from ITS grid (cross-group counts never pool), a keyed
     probe missing the key columns is refused, and an unseen probe
@@ -889,7 +898,8 @@ def test_count_min_keyed_estimate_and_unseen_probe(spark):
     rows = spark.range(600).select(
         (F.col("id") % 2).alias("g"), (F.col("id") % 7).alias("item")
     )
-    keyed = build_cm_state(rows, ["g"], "item", width=64)
+    monkeypatch.setattr(agg, "CM_WIDTH", 64)
+    keyed = build_cm_state(rows, ["g"], "item")
     with pytest.raises(ValueError, match="needs probe columns"):
         cm_estimate(keyed, rows.select("item").distinct(), "item")
 
@@ -909,13 +919,14 @@ def test_count_min_keyed_estimate_and_unseen_probe(spark):
 
     # an unseen probe whose buckets hold no counters answers 0, not NULL
     # and not a dropped row (width 256 >> 7 items: some bucket is empty)
-    state = build_cm_state(rows, [], "item", width=256)
+    monkeypatch.setattr(agg, "CM_WIDTH", 256)
+    state = build_cm_state(rows, [], "item")
     unseen = spark.range(1).select(F.lit(999983).alias("item"))
     out = cm_estimate(state, unseen, "item").collect()
     assert len(out) == 1 and out[0]["cm_estimate"] >= 0
 
 
-def test_count_min_estimate_refuses_mixed_width_merge(spark):
+def test_count_min_estimate_refuses_mixed_width_merge(spark, monkeypatch):
     """Grids hashed at different widths must never answer probes as one
     sketch — the mismatch would read wrong buckets and can UNDERestimate
     (the failure CM promises away). merge keeps the grids apart by
@@ -923,15 +934,15 @@ def test_count_min_estimate_refuses_mixed_width_merge(spark):
     from dynamic_etl_spark.ops.agg import build_cm_state, cm_estimate, merge_cm_state
 
     items = spark.range(200).select((F.col("id") % 13).alias("item"))
-    mixed = merge_cm_state(
-        build_cm_state(items, [], "item", width=16),
-        build_cm_state(items, [], "item", width=32),
-    )
+    monkeypatch.setattr(agg, "CM_WIDTH", 16)
+    narrow = build_cm_state(items, [], "item")
+    monkeypatch.setattr(agg, "CM_WIDTH", 32)
+    mixed = merge_cm_state(narrow, build_cm_state(items, [], "item"))
     with pytest.raises(ValueError, match="mixed-width"):
         cm_estimate(mixed, items.select("item").distinct(), "item")
 
 
-def test_count_min_keyed_estimate_null_key_group(spark):
+def test_count_min_keyed_estimate_null_key_group(spark, monkeypatch):
     """groupBy keeps NULL key groups, so the keyed probe join must be
     null-safe — a null-unsafe join would answer 0 for a group the state
     DID count, an underestimate."""
@@ -940,7 +951,8 @@ def test_count_min_keyed_estimate_null_key_group(spark):
     rows = spark.createDataFrame(
         [(None, 1)] * 10 + [("a", 1)] * 3, "g string, item long"
     )
-    state = build_cm_state(rows, ["g"], "item", width=64)
+    monkeypatch.setattr(agg, "CM_WIDTH", 64)
+    state = build_cm_state(rows, ["g"], "item")
     probes = rows.select("g", "item").distinct()
     est = {
         (r["g"], r["item"]): r["cm_estimate"]
@@ -949,7 +961,7 @@ def test_count_min_keyed_estimate_null_key_group(spark):
     assert est == {(None, 1): 10, ("a", 1): 3}
 
 
-def test_count_min_mass_conservation_adversarial(spark):
+def test_count_min_mass_conservation_adversarial(spark, monkeypatch):
     """For ANY input multiset — constant streams, negatives, strings,
     near-Long.MAX values — every depth row of the grid holds exactly n
     total mass (the explode writes each item into every row once), and
@@ -967,9 +979,10 @@ def test_count_min_mass_conservation_adversarial(spark):
             (F.lit(9_223_372_036_854_775_000) - (F.col("id") % 5)).alias("item")
         ),
     ]
+    monkeypatch.setattr(agg, "CM_WIDTH", 8)
     for df in cases:
         n = df.count()
-        state = build_cm_state(df, [], "item", width=8)
+        state = build_cm_state(df, [], "item")
         per_depth = {
             r["state_depth"]: r["m"]
             for r in state.groupBy("state_depth")
@@ -988,7 +1001,7 @@ def test_count_min_mass_conservation_adversarial(spark):
         assert all(est[i] >= exact[i] for i in exact)
 
 
-def test_count_min_empty_state_raises_named_error(spark):
+def test_count_min_empty_state_raises_named_error(spark, monkeypatch):
     """cm_estimate over an EMPTY state (every slice filtered to zero
     rows) must name the real cause — collect_set over no rows is [],
     which used to fail the mixed-width check with a misleading
@@ -996,7 +1009,8 @@ def test_count_min_empty_state_raises_named_error(spark):
     from dynamic_etl_spark.ops.agg import build_cm_state, cm_estimate
 
     items = spark.range(100).select((F.col("id") % 7).alias("item"))
-    empty_state = build_cm_state(items.filter(F.lit(False)), [], "item", width=16)
+    monkeypatch.setattr(agg, "CM_WIDTH", 16)
+    empty_state = build_cm_state(items.filter(F.lit(False)), [], "item")
     probes = items.select("item").distinct()
     with pytest.raises(ValueError, match="empty state"):
         cm_estimate(empty_state, probes, "item")

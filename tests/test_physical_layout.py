@@ -110,10 +110,10 @@ def test_zorder_write_prunes_second_dimension(spark, tmp_path):
         .write.mode("overwrite")
         .parquet(linear_dir)
     )
-    # x/y are already grid coordinates in [0, 256): 8 bits each suffice;
-    # range-partitioning on the key gives each file a contiguous Morton range
+    # x/y are already grid coordinates in [0, 256); range-partitioning on
+    # the key gives each file a contiguous Morton range
     (
-        df.withColumn("__z", zorder_key([F.col("x"), F.col("y")], bits=8))
+        df.withColumn("__z", zorder_key([F.col("x"), F.col("y")]))
         .repartitionByRange(32, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")

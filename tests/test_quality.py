@@ -22,7 +22,7 @@ def _docs(spark, texts):
 def test_ngram_stats_counts_duplicates(spark):
     # "a b a b a": 2-grams = [a b, b a, a b, b a] -> total 4, distinct 2, top 2
     df = _docs(spark, ["a b a b a"])
-    row = Q.multi_ngram_stats(df, [2]).collect()[0]
+    row = Q.multi_ngram_stats(df).collect()[0]
     assert (row.total_2grams, row.distinct_2grams, row.top_2gram_count) == (4, 2, 2)
 
 
@@ -30,7 +30,7 @@ def test_ngram_stats_short_doc_zeros(spark):
     # 1 token < n=2: the WHEN guard must yield an empty array (unguarded
     # sequence(1, 0) would run DESCENDING and fabricate grams)
     df = _docs(spark, ["solo"])
-    row = Q.multi_ngram_stats(df, [2]).collect()[0]
+    row = Q.multi_ngram_stats(df).collect()[0]
     assert (row.total_2grams, row.distinct_2grams, row.top_2gram_count) == (0, 0, 0)
 
 
@@ -52,7 +52,7 @@ def test_repetition_profile_gates(spark):
 def test_tfidf_topk_hand_computed(spark):
     df = _docs(spark, ["apple apple banana", "banana cherry", "cherry cherry date"])
     out = {
-        (r.doc_id, r.rank): r for r in Q.tfidf_topk(df, k=2).collect()
+        (r.doc_id, r.rank): r for r in Q.tfidf_topk(df).collect()
     }
     # doc 0: apple tf=2 df=1, banana tf=1 df=2
     idf = lambda d: math.log(4.0 / (d + 1.0)) + 1.0  # noqa: E731
@@ -66,7 +66,7 @@ def test_tfidf_topk_hand_computed(spark):
 
 def test_tfidf_rank_tiebreak_is_term_order(spark):
     # both terms tf=1, df=1 -> identical score; rank must break by term asc
-    out = Q.tfidf_topk(_docs(spark, ["zeta alpha"]), k=2).collect()
+    out = Q.tfidf_topk(_docs(spark, ["zeta alpha"])).collect()
     ranked = sorted((r.rank, r.term) for r in out)
     assert ranked == [(1, "alpha"), (2, "zeta")]
 

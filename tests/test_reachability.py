@@ -29,7 +29,17 @@ bound to a function (``pick = G.sql_pick_from``). An option no product call
 sets is a constant with a code path only tests select: make it one, or
 put it on the commented ``KEEP_OPTIONS``.
 
-The third check is the unused-import rule of a linter (F401), which
+The third check extends that rule from options no product call sets to
+options every product call sets alike: a parameter or field to which all
+product calls give the same literal (a call that leaves it unset gives
+its default; a non-literal argument or ``*``/``**`` forwarding counts as
+a second value) is a constant too. Strings and lists of strings are
+exempt: a column, table or label name binds an operator to its input
+and selects no behaviour. Make the value a module constant, and where a
+DuckDB twin repeats it, have both sides read that constant; or put the
+option on the commented ``KEEP_ONE_VALUE``.
+
+The fourth check is the unused-import rule of a linter (F401), which
 this repository does not install: an AST scan of ``dynamic_etl_spark/``
 and ``tests/`` for imported names no code in the module uses. A
 re-export says so with ``# noqa: F401`` on its import statement.
@@ -113,6 +123,9 @@ KEEP_OPTIONS = {
     ("session.py", "get_spark", "master"),
     ("session.py", "get_spark", "shuffle_partitions"),
 }
+# Options every product call gives the same literal, each kept for a
+# stated reason. None is: each such value is a module constant.
+KEEP_ONE_VALUE: set[tuple[str, str, str]] = set()
 OPTION_ROOT_PATHS = ("dynamic_etl_spark", "perfbench", "bench.py", "__spark_entry__.py")
 
 
@@ -217,11 +230,11 @@ def _is_dataclass(node: ast.ClassDef) -> bool:
     return False
 
 
-def unset_options() -> set[tuple[str, str, str]]:
-    """(module path, function or dataclass, option) of every defaulted
-    parameter or field no product call sets."""
-    options: dict[tuple[str, str, str], None] = {}
-    positional: dict[tuple[str, str], list[str]] = {}
+def _signatures():
+    """Every top-level function and dataclass in ``dynamic_etl_spark/``:
+    ``{(module path, name): (positional names, all names, {option: default})}``
+    and the module paths that define each name."""
+    sigs: dict[tuple[str, str], tuple[list[str], list[str], dict[str, ast.expr]]] = {}
     by_name: dict[str, list[str]] = defaultdict(list)
     for path in _python_files(PACKAGE):
         rel = os.path.relpath(path, PACKAGE).replace(os.sep, "/")
@@ -229,22 +242,28 @@ def unset_options() -> set[tuple[str, str, str]]:
             if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 a = stmt.args
                 params = [p.arg for p in a.posonlyargs + a.args]
-                defaulted = params[len(params) - len(a.defaults):] + [
-                    p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
-                ]
+                names = params + [p.arg for p in a.kwonlyargs]
+                defaults = dict(zip(params[len(params) - len(a.defaults):], a.defaults))
+                defaults.update(
+                    (p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+                )
             elif isinstance(stmt, ast.ClassDef) and _is_dataclass(stmt):
                 fields = [
                     f for f in stmt.body
                     if isinstance(f, ast.AnnAssign) and isinstance(f.target, ast.Name)
                 ]
-                params = [f.target.id for f in fields]
-                defaulted = [f.target.id for f in fields if f.value is not None]
+                params = names = [f.target.id for f in fields]
+                defaults = {f.target.id: f.value for f in fields if f.value is not None}
             else:
                 continue
-            positional[(rel, stmt.name)] = params
+            sigs[(rel, stmt.name)] = (params, names, defaults)
             by_name[stmt.name].append(rel)
-            options.update(dict.fromkeys((rel, stmt.name, p) for p in defaulted))
-    set_: set[tuple[str, str, str]] = set()
+    return sigs, by_name
+
+
+def _product_calls(by_name: dict[str, list[str]]):
+    """``(callee name, call)`` of every call in the product to a name
+    ``dynamic_etl_spark/`` defines, resolved by name alone."""
     for root in OPTION_ROOT_PATHS:
         for path in _python_files(os.path.join(REPO_ROOT, root)):
             tree = _parse(path)
@@ -258,21 +277,37 @@ def unset_options() -> set[tuple[str, str, str]]:
                 and (target := getattr(n.value, "id", getattr(n.value, "attr", None))) in by_name
             }
             for call in ast.walk(tree):
-                if not isinstance(call, ast.Call):
-                    continue
-                name = getattr(call.func, "id", getattr(call.func, "attr", None))
-                name = aliases.get(name, name)
-                forwards = any(isinstance(a, ast.Starred) for a in call.args) or any(
-                    k.arg is None for k in call.keywords
-                )
-                keywords = {k.arg for k in call.keywords}
-                for rel in by_name.get(name, ()):
-                    given = set(positional[(rel, name)][: len(call.args)]) | keywords
-                    set_ |= {
-                        o for o in options
-                        if o[:2] == (rel, name) and (forwards or o[2] in given)
-                    }
-    return set(options) - set_
+                if isinstance(call, ast.Call):
+                    name = getattr(call.func, "id", getattr(call.func, "attr", None))
+                    name = aliases.get(name, name)
+                    if name in by_name:
+                        yield name, call
+
+
+def _forwards(call: ast.Call) -> bool:
+    return any(isinstance(a, ast.Starred) for a in call.args) or any(
+        k.arg is None for k in call.keywords
+    )
+
+
+def unset_options() -> set[tuple[str, str, str]]:
+    """(module path, function or dataclass, option) of every defaulted
+    parameter or field no product call sets."""
+    sigs, by_name = _signatures()
+    options = {
+        (rel, name, p) for (rel, name), (_, _, defaults) in sigs.items() for p in defaults
+    }
+    set_: set[tuple[str, str, str]] = set()
+    for name, call in _product_calls(by_name):
+        keywords = {k.arg for k in call.keywords}
+        for rel in by_name[name]:
+            params = sigs[(rel, name)][0]
+            given = set(params[: len(call.args)]) | keywords
+            set_ |= {
+                o for o in options
+                if o[:2] == (rel, name) and (_forwards(call) or o[2] in given)
+            }
+    return options - set_
 
 
 def test_only_the_keep_list_options_are_unset_by_the_product():
@@ -285,6 +320,65 @@ def test_only_the_keep_list_options_are_unset_by_the_product():
     assert not KEEP_OPTIONS - unset, (
         f"the product now sets (or no longer defines) {sorted(KEEP_OPTIONS - unset)}; "
         "drop it from KEEP_OPTIONS"
+    )
+
+
+def _literal(node: ast.expr) -> str | None:
+    """The ``repr`` of a literal argument (``1``, ``1.0`` and ``True``
+    stay distinct), or None for any other argument."""
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return None
+
+
+def _names_a_schema(literal: str) -> bool:
+    """A string, or a list or tuple of strings: a column, table or label
+    name binds an operator to its input and selects no behaviour."""
+    v = ast.literal_eval(literal)
+    return isinstance(v, str) or (
+        isinstance(v, (list, tuple)) and all(isinstance(x, str) for x in v)
+    )
+
+
+def single_valued_options() -> dict[tuple[str, str, str], str]:
+    """{(module path, function or dataclass, option): value} of every
+    parameter or field that all product calls give the same literal,
+    strings and lists of strings aside. A call that leaves an option
+    unset gives its default; a non-literal argument or ``*``/``**``
+    forwarding counts as a second value. Options no product call sets
+    are ``unset_options``'s."""
+    sigs, by_name = _signatures()
+    values: dict[tuple[str, str, str], set] = defaultdict(set)
+    for name, call in _product_calls(by_name):
+        for rel in by_name[name]:
+            params, names, defaults = sigs[(rel, name)]
+            given = dict(zip(params, call.args))
+            given.update((k.arg, k.value) for k in call.keywords if k.arg)
+            for p in names:
+                node = given.get(p, defaults.get(p))
+                if node is not None:
+                    values[(rel, name, p)].add(None if _forwards(call) else _literal(node))
+    unset = unset_options()
+    return {
+        option: value
+        for option, vals in values.items()
+        if len(vals) == 1 and (value := next(iter(vals))) is not None
+        and option not in unset and not _names_a_schema(value)
+    }
+
+
+def test_only_the_keep_list_options_take_one_value_in_the_product():
+    single = single_valued_options()
+    assert not single.keys() - KEEP_ONE_VALUE, (
+        "options in dynamic_etl_spark/ every product call gives one literal: "
+        f"{sorted((o, single[o]) for o in single.keys() - KEEP_ONE_VALUE)}; make "
+        "each a module constant that the oracle twin reads too, or keep-list it "
+        "with a reason"
+    )
+    assert not KEEP_ONE_VALUE - single.keys(), (
+        f"the product now gives more than one value to (or no longer defines) "
+        f"{sorted(KEEP_ONE_VALUE - single.keys())}; drop it from KEEP_ONE_VALUE"
     )
 
 

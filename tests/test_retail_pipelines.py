@@ -209,3 +209,28 @@ def test_dw_load_empty_dim_defers_file_then_retries(spark, scratch):
     name, rows = dw_load_pipeline(spark, src, ext, dw).run().outputs["load_fact_sales"]
     assert name == "fact_sales_20240617" and rows > 0
     assert "fact_sales_20240617" in ledger.read_text()
+
+
+def test_dw_load_poison_file_is_marked_and_the_next_file_loads(spark, scratch):
+    """A fact file missing a required column is a structural defect
+    (U6 PoisonPill, reference load_fact_sales_dw.py:204-210): the queue
+    marks it processed before the error surfaces, so it cannot wedge the
+    queue — the step's retry consumes the next file."""
+    from dynamic_etl_spark.io import read_csv_schema_on_read, write_csv
+
+    src, ext, dw = (str(scratch / p) for p in ("source", "extract", "dw"))
+    generation_pipeline(
+        spark, src, date_id=20240617,
+        n_stores=5, n_products=10, n_distributors=5, rows_per_day=20,
+    ).run()
+    extract_pipeline(spark, src, ext, date_id=20240617).run()
+    current = scratch / "extract" / "Current"
+    good = read_csv_schema_on_read(spark, str(current / "fact_sales_20240617"), sep=",")
+    (net,) = [c for c in good.columns if c.upper() == "NET_AMOUNT"]
+    # sorts ahead of the good file: the queue takes it first
+    write_csv(good.drop(net), str(current / "fact_sales_20240616"), sep=",")
+
+    name, rows = dw_load_pipeline(spark, src, ext, dw).run().outputs["load_fact_sales"]
+    assert name == "fact_sales_20240617" and rows > 0
+    ledger = (scratch / "dw" / "processed.log").read_text()
+    assert "fact_sales_20240616" in ledger and "fact_sales_20240617" in ledger

@@ -272,7 +272,7 @@ def test_mmr_matches_bruteforce(spark):
     )
     got = [
         (r.rank, r.vec_id, r.mmr_score)
-        for r in R.mmr_select(df, anchor_id=0, k=8, lam=0.5)
+        for r in R.mmr_select(df, anchor_id=0, k=8)
         .orderBy("rank")
         .collect()
     ]
@@ -301,7 +301,7 @@ def test_mmr_prefers_diversity_over_raw_relevance(spark):
     )
     picked = [
         r.vec_id
-        for r in R.mmr_select(df, anchor_id=0, k=4, lam=0.5).orderBy("rank").collect()
+        for r in R.mmr_select(df, anchor_id=0, k=4).orderBy("rank").collect()
     ]
     # first pick is the most relevant near-dup; the next three must NOT
     # all be near-dups (redundancy is penalized at cosine ~1.0)
@@ -352,9 +352,11 @@ def test_mmr_exhausts_small_candidate_sets(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_hashed_linear_score_hand_example(spark):
+def test_hashed_linear_score_hand_example(spark, monkeypatch):
+    from dynamic_etl_spark.ops import quality
     from dynamic_etl_spark.ops.quality import hashed_linear_score
 
+    monkeypatch.setattr(quality, "LOGIT_THRESHOLD", 0.05)
     docs = spark.createDataFrame(
         [(1, "foo bar foo"), (2, "baz"), (3, "")], "doc_id int, text string"
     )
@@ -369,18 +371,16 @@ def test_hashed_linear_score_hand_example(spark):
     )
     out = {
         r.doc_id: (r.n_tokens, r.logit, r.passes)
-        for r in hashed_linear_score(
-            docs, weights, n_buckets=n_buckets, bias=0.05, threshold=0.1
-        ).collect()
+        for r in hashed_linear_score(docs, weights, n_buckets=n_buckets).collect()
     }
-    # doc 1: 2*0.25 - 0.5 = 0.0 (+bias 0.05) — below threshold
+    # doc 1: 2*0.25 - 0.5 = 0.0 — below the 0.05 threshold
     # (bucket collisions would change the arithmetic; foo/bar/baz land
     # in distinct md5 buckets at n_buckets=8 — asserted so a tokenizer
     # or hash change fails loudly here, not in the arithmetic)
     assert len({bucket(t) for t in ("foo", "bar", "baz")}) == 3
-    assert out[1] == (3, pytest.approx(0.05), False)
-    assert out[2] == (1, pytest.approx(0.15), True)
-    assert out[3] == (0, pytest.approx(0.05), False)  # zero-token: bias only
+    assert out[1] == (3, pytest.approx(0.0), False)
+    assert out[2] == (1, pytest.approx(0.1), True)
+    assert out[3] == (0, pytest.approx(0.0), False)  # zero-token: logit 0
 
 
 def test_hashed_linear_score_unweighted_buckets_count_zero(spark):
@@ -388,7 +388,7 @@ def test_hashed_linear_score_unweighted_buckets_count_zero(spark):
 
     docs = spark.createDataFrame([(1, "zz zz")], "doc_id int, text string")
     weights = spark.createDataFrame([], "bucket int, weight double")
-    row = hashed_linear_score(docs, weights, n_buckets=4, threshold=0.0).collect()[0]
+    row = hashed_linear_score(docs, weights, n_buckets=4).collect()[0]
     assert (row.n_tokens, row.logit, row.passes) == (2, 0.0, True)
 
 
@@ -540,9 +540,9 @@ def test_mmr_pooled_small_pool_still_valid_selection(spark):
     from dynamic_etl_spark.catalog import load_table
 
     emb = load_table(spark, SF_SMALL, "embeddings").select("vec_id", "embedding")
-    exact = R.mmr_select(emb, anchor_id=MMR_ANCHOR_ID, k=3, lam=0.5).collect()
+    exact = R.mmr_select(emb, anchor_id=MMR_ANCHOR_ID, k=3).collect()
     pooled = R.mmr_select(
-        emb, anchor_id=MMR_ANCHOR_ID, k=3, lam=0.5, pool_size=32
+        emb, anchor_id=MMR_ANCHOR_ID, k=3, pool_size=32
     ).collect()
     assert pooled[0] == exact[0]
     assert len(pooled) == 3

@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from dynamic_etl_spark.ops import pack
+from dynamic_etl_spark.ops import pack, sample
 from dynamic_etl_spark.ops.pack import prefix_sum, sequence_pack
 from dynamic_etl_spark.ops.sample import (
     stratified_sample,
@@ -36,16 +36,12 @@ def test_uniforms_in_unit_interval_and_partition_invariant(spark):
         assert len({round(u, 3) for u in got1.values()}) > 100
 
 
-def test_stratified_sample_fractions_and_default(spark):
+def test_stratified_sample_fractions_and_default(spark, monkeypatch):
+    monkeypatch.setattr(sample, "LANG_FRACTIONS", {"en": 0.5, "es": 0.1, "de": 0.0})
+    monkeypatch.setattr(sample, "OTHER_LANG_FRACTION", 1.0)
     rows = [(i, ["en", "es", "de"][i % 3] if i % 10 else "fr") for i in range(9000)]
     df = spark.createDataFrame(rows, ["doc_id", "lang"])
-    out = stratified_sample(
-        df,
-        ["lang"],
-        {"en": 0.5, "es": 0.1, "de": 0.0},
-        uniform_affine("doc_id", salt=11),
-        default_fraction=1.0,
-    )
+    out = stratified_sample(df, "lang", uniform_affine("doc_id", salt=11))
     kept = out.groupBy("lang").count().collect()
     by_lang = {r["lang"]: r["count"] for r in kept}
     n_en = sum(1 for _, lang in rows if lang == "en")
@@ -56,11 +52,9 @@ def test_stratified_sample_fractions_and_default(spark):
     assert "de" not in by_lang  # fraction 0 drops the stratum entirely
     assert by_lang["fr"] == n_fr  # default 1.0 keeps unlisted strata
 
-    with pytest.raises(ValueError, match="does not match strata"):
-        stratified_sample(df, ["lang"], {("en", "x"): 0.5}, uniform_affine("doc_id"))
 
-
-def test_stratified_sample_is_row_stable(spark):
+def test_stratified_sample_is_row_stable(spark, monkeypatch):
+    monkeypatch.setattr(sample, "LANG_FRACTIONS", {"en": 0.3, "es": 0.7})
     # the same row makes the same decision regardless of partitioning
     df = spark.createDataFrame(
         [(i, "en" if i % 2 else "es") for i in range(2000)], ["doc_id", "lang"]
@@ -68,7 +62,7 @@ def test_stratified_sample_is_row_stable(spark):
     pick = lambda d: {
         r["doc_id"]
         for r in stratified_sample(
-            d, ["lang"], {"en": 0.3, "es": 0.7}, uniform_affine("doc_id", salt=5)
+            d, "lang", uniform_affine("doc_id", salt=5)
         ).collect()
     }
     assert pick(df.repartition(1)) == pick(df.repartition(13))
@@ -100,8 +94,9 @@ def test_prefix_sum_empty(spark):
     assert prefix_sum(empty, "k", "v").count() == 0
 
 
-def test_sequence_pack_hand_example(spark):
+def test_sequence_pack_hand_example(spark, monkeypatch):
     # budget 10; docs: 4, 9, 0, 8, 3 tokens in id order
+    monkeypatch.setattr(pack, "SEQ_TOKENS", 10)
     rows = [(1, 4), (2, 9), (3, 0), (4, 8), (5, 3)]
     df = spark.createDataFrame(rows, ["doc_id", "n_tokens"]).repartition(3)
     got = {
@@ -111,16 +106,13 @@ def test_sequence_pack_hand_example(spark):
             r["seq_offset"],
             r["spans_boundary"],
         )
-        for r in sequence_pack(df, "doc_id", "n_tokens", budget=10).collect()
+        for r in sequence_pack(df, "doc_id", "n_tokens").collect()
     }
     assert got[1] == (0, 0, 0, False)
     assert got[2] == (4, 0, 4, True)  # tokens 4..12 cross seq 0 -> 1
     assert got[3] == (13, 1, 3, False)  # empty doc pins to its offset
     assert got[4] == (13, 1, 3, True)  # tokens 13..20
     assert got[5] == (21, 2, 1, False)
-
-    with pytest.raises(ValueError, match="budget"):
-        sequence_pack(df, "doc_id", "n_tokens", budget=0)
 
 
 def test_hash_split_fractions_and_stability(spark):
@@ -166,22 +158,23 @@ def test_per_key_quota_sample_exact_counts_and_determinism(spark):
     assert {r["doc"] for r in out.collect()} == {r["doc"] for r in out2.collect()}
 
 
-def test_assign_shard_is_partitioning_independent(spark):
-    """Every row gets a shard id in [0, n_shards), the shards split the
+def test_assign_shard_is_partitioning_independent(spark, monkeypatch):
+    """Every row gets a shard id in [0, N_SHARDS), the shards split the
     rows, and a 7-way repartition moves no row: a loader recomputing
     shards from keys must agree with any earlier assignment."""
     from dynamic_etl_spark.ops.sample import assign_shard
 
+    monkeypatch.setattr(sample, "N_SHARDS", 8)
     df = spark.range(0, 1000).selectExpr("id AS doc_id")
     pairs = {
         (r.doc_id, r.shard)
-        for r in df.withColumn("shard", assign_shard("doc_id", 8, 13)).collect()
+        for r in df.withColumn("shard", assign_shard("doc_id")).collect()
     }
     assert len(pairs) == 1000
     assert {s for _, s in pairs} == set(range(8))
     again = {
         (r.doc_id, r.shard)
-        for r in df.repartition(7).withColumn("shard", assign_shard("doc_id", 8, 13)).collect()
+        for r in df.repartition(7).withColumn("shard", assign_shard("doc_id")).collect()
     }
     assert again == pairs
 
@@ -237,7 +230,7 @@ def test_weighted_sample_without_replacement_aes(spark):
     assert len(top1) == 1 and top1[0]["id"] in (1, 2)
 
 
-def test_leakage_safe_split_group_invariant(spark):
+def test_leakage_safe_split_group_invariant(spark, monkeypatch):
     """Every exact-duplicate group lands in exactly one split; the split
     decision is the canonical min-id's coin, so re-keyed noisy copies of
     a document always follow their group — never an independent flip."""
@@ -254,9 +247,8 @@ def test_leakage_safe_split_group_invariant(spark):
         (201, "Shared Beta Body Two"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = leakage_safe_split(
-        df, [("train", 0.8), ("validation", 0.1), ("test", 0.1)], salt=7
-    )
+    monkeypatch.setattr(sample, "SPLIT_SALT", 7)
+    out = leakage_safe_split(df, [("train", 0.8), ("validation", 0.1), ("test", 0.1)])
     pdf = out.toPandas()
     assert (pdf.groupby("group_id")["split"].nunique() == 1).all()
     a = pdf[pdf.doc_id.isin([100, 101, 102])]

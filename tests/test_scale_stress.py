@@ -26,6 +26,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from dynamic_etl_spark.ops import agg, ann, lsh
 from dynamic_etl_spark.ops.ann import cosine_near_dup_pairs, srp_banded_rows
 from dynamic_etl_spark.ops.graph import connected_components
 from dynamic_etl_spark.ops.lsh import minhash_banded_rows, minhash_near_dup_pairs
@@ -90,15 +91,14 @@ def _planted_pair_violations(df, id_a: str, id_b: str, every: int):
     ).count()
 
 
-def test_minhash_near_dup_million_docs(spark):
+def test_minhash_near_dup_million_docs(spark, monkeypatch):
     """1M docs through the full MinHash pipeline: exact recall of all
     2,000 planted pairs, near-linear candidates, bounded wall time."""
     start = time.perf_counter()
-    # threshold=0.0 keeps every LSH candidate in the output, so one run
+    # threshold 0.0 keeps every LSH candidate in the output, so one run
     # yields BOTH the candidate volume and (filtered >= 0.5) the verified set
-    out = minhash_near_dup_pairs(
-        _docs(spark, DOCS_N), "doc_id", "text", threshold=0.0
-    ).persist()
+    monkeypatch.setattr(lsh, "JACCARD_THRESHOLD", 0.0)
+    out = minhash_near_dup_pairs(_docs(spark, DOCS_N), "doc_id", "text").persist()
     candidates = out.count()
     elapsed = time.perf_counter() - start
 
@@ -113,9 +113,7 @@ def test_minhash_near_dup_million_docs(spark):
 
     # near-linearity across a 2x scale-up: quadratic candidate growth
     # would push the ratio toward 4
-    half = minhash_near_dup_pairs(
-        _docs(spark, DOCS_N // 2), "doc_id", "text", threshold=0.0
-    ).count()
+    half = minhash_near_dup_pairs(_docs(spark, DOCS_N // 2), "doc_id", "text").count()
     assert candidates <= 3 * half, f"candidates {candidates} vs {half} at half scale"
 
 
@@ -133,13 +131,14 @@ def test_minhash_banding_fans_out(spark):
     assert spread >= cores, f"banded signature stage ran in only {spread} partitions"
 
 
-def test_cosine_near_dup_hundred_k_vectors(spark):
+def test_cosine_near_dup_hundred_k_vectors(spark, monkeypatch):
     """100k embeddings through SRP-banded near-dup: exact recall of all
     1,000 planted pairs at wide bands (32-bit band hashes keep buckets
     unsaturated at this corpus size), bounded wall time."""
+    monkeypatch.setattr(ann, "NEAR_DUP_COSINE", 0.99)
     start = time.perf_counter()
     pairs = cosine_near_dup_pairs(
-        _vecs(spark, VECS_N), "vec_id", "emb", threshold=0.99, bits=64, bands=2
+        _vecs(spark, VECS_N), "vec_id", "emb", bits=64, bands=2
     ).persist()
     n = pairs.count()
     elapsed = time.perf_counter() - start
@@ -150,7 +149,7 @@ def test_cosine_near_dup_hundred_k_vectors(spark):
     assert elapsed < 40, f"100k-vector near-dup took {elapsed:.0f}s (measured ~4s)"
 
     half = cosine_near_dup_pairs(
-        _vecs(spark, VECS_N // 2), "vec_id", "emb", threshold=0.99, bits=64, bands=2
+        _vecs(spark, VECS_N // 2), "vec_id", "emb", bits=64, bands=2
     ).count()
     assert n <= 3 * half
 
@@ -284,8 +283,6 @@ def test_knn_join_adversarial_cell_skew(spark, monkeypatch):
     assert sizes[-1] > 1.5 * n / 8, f"cell sizes {sizes} — skew did not materialize"
 
     # (a) guard fires loudly when the hot cell exceeds the cap
-    from dynamic_etl_spark.ops import ann
-
     monkeypatch.setattr(ann, "MAX_CELL_ROWS", sizes[-1] - 1)
     with pytest.raises(Exception, match="raise n_cells"):
         knn_join(corpus, "vec_id", "emb", k=k, n_probe=4, index=idx).collect()
@@ -320,7 +317,7 @@ def test_heavy_hitter_hot_key_salt_bound(spark):
     salted result is bit-identical to the one-window form."""
     from dynamic_etl_spark.ops.agg import _mg_compress, _mg_salts, build_heavy_hitter_state
 
-    n, k = 1_000_000, 8
+    n, k = 1_000_000, agg.MG_K
     # one key: ~1M singleton items + 10 planted heavies (20k hits each)
     base = spark.range(n).select(
         F.lit("hot").alias("g"), (F.col("id") + 1000).alias("item")
@@ -338,7 +335,7 @@ def test_heavy_hitter_hot_key_salt_bound(spark):
     )
     df = base.unionByName(heavies)
 
-    got = build_heavy_hitter_state(df, ["g"], "item", k=k)
+    got = build_heavy_hitter_state(df, ["g"], "item")
     counts = df.groupBy("g", F.col("item").alias("state_item")).agg(
         F.count(F.lit(1)).alias("state_cnt")
     )
@@ -497,13 +494,14 @@ def test_ks_drift_binned_coincides_with_exact_at_fine_grid(spark, tmp_path, monk
     assert exact == binned
 
 
-def test_leakage_safe_split_giant_dup_group(spark):
+def test_leakage_safe_split_giant_dup_group(spark, monkeypatch):
     """VERDICT r6 #7: one fingerprint group holding ~10% of a 1M-row
     corpus. The fingerprint window must stay GROUP-bounded (the giant
     group reports its own size and one canonical min id — no global
     sort is involved), the whole group must land in exactly ONE split,
     and the hash-split fractions on the remaining mass must stay within
     tolerance — a giant group shifts totals, never the per-group coin."""
+    from dynamic_etl_spark.ops import sample
     from dynamic_etl_spark.ops.sample import leakage_safe_split
 
     n, dup_n = 1_000_000, 100_000
@@ -516,9 +514,8 @@ def test_leakage_safe_split_giant_dup_group(spark):
         .alias("text"),
     ).repartition(64)
 
-    out = leakage_safe_split(
-        docs, [("train", 0.9), ("val", 0.05), ("test", 0.05)], salt=3
-    )
+    monkeypatch.setattr(sample, "SPLIT_SALT", 3)
+    out = leakage_safe_split(docs, [("train", 0.9), ("val", 0.05), ("test", 0.05)])
     giant = out.filter(F.col("doc_id") < dup_n)
     g = giant.groupBy("group_id", "group_size", "split").count().collect()
     # the whole group: ONE (canonical-min-id, size, split) triple
@@ -595,7 +592,7 @@ def test_benchmark_span_scrub_million_docs_broadcast_shape(spark):
     ).repartition(64)
 
     start = time.time()
-    out = contaminated_span_stats(corpus, bench, k=5)
+    out = contaminated_span_stats(corpus, bench)
     # PRIMARY check (ADVICE r7 #3): the plan shape itself — the benchmark
     # gram set must arrive as the build side of a broadcast LEFT SEMI
     # join, i.e. the corpus never shuffles to meet the benchmark. The
@@ -626,7 +623,7 @@ def test_benchmark_span_scrub_million_docs_broadcast_shape(spark):
     assert elapsed < 480, f"span scrub stress took {elapsed:.0f}s"
 
 
-def test_incremental_semantic_admission_fifty_k_store(spark):
+def test_incremental_semantic_admission_fifty_k_store(spark, monkeypatch):
     """Incremental SEMANTIC admission at a 50k-vector store x 25k-vector
     batch (r9): every planted store copy is rejected with its exact
     source named, every fresh vector admits, the store delta covers
@@ -672,9 +669,11 @@ def test_incremental_semantic_admission_fifty_k_store(spark):
     start = time.perf_counter()
     centers = fit_semantic_centers(store_docs, "vec_id", "emb", n_cells=32)
     store = semantic_store_rows(store_docs, "vec_id", "emb", centers).localCheckpoint()
+    monkeypatch.setattr(ann, "SEMDEDUP_THRESHOLD", 0.99)
+    monkeypatch.setattr(ann, "SEMDEDUP_CELLS", 32)
+    monkeypatch.setattr(ann, "SEMDEDUP_PROBE", 4)
     out = incremental_semantic_merge(
         store_docs, batch_docs, "vec_id", "emb",
-        threshold=0.99, n_cells=32, n_probe=4,
         centers=centers, existing_assigned=store,
     )
     pairs = out["dup_pairs"]

@@ -9,14 +9,13 @@ boundary (starts exactly k apart do NOT merge), and the short-doc guard.
 
 from __future__ import annotations
 
+from dynamic_etl_spark.ops.spans import SPAN_K as K
 from dynamic_etl_spark.ops.spans import duplicated_span_stats
-
-K = 5
 
 
 def _run(spark, rows):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = duplicated_span_stats(df, k=K)
+    out = duplicated_span_stats(df)
     return {r["doc_id"]: r.asDict() for r in out.collect()}
 
 
@@ -83,7 +82,7 @@ def _scrub(spark, corpus_rows, bench_rows):
 
     corpus = spark.createDataFrame(corpus_rows, ["doc_id", "text"])
     bench = spark.createDataFrame(bench_rows, ["doc_id", "text"])
-    out = contaminated_span_stats(corpus, bench, k=K)
+    out = contaminated_span_stats(corpus, bench)
     return {r["doc_id"]: r.asDict() for r in out.collect()}
 
 

@@ -744,7 +744,7 @@ def test_streaming_summary_maintains_quantile_histogram(spark, scratch):
     } == one_shot
 
 
-def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch):
+def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch, monkeypatch):
     """run_streaming_summary with the Misra-Gries and reservoir builders
     — the two summary types the generic-runner claim had not yet
     exercised end-to-end. MG: the maintained state must equal the same
@@ -756,6 +756,7 @@ def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch)
     from pyspark.sql import functions as F
 
     from dynamic_etl_spark.io.versioned import read_versioned
+    from dynamic_etl_spark.ops import agg, sample
     from dynamic_etl_spark.ops.agg import (
         build_heavy_hitter_state,
         merge_heavy_hitter_state,
@@ -764,6 +765,9 @@ def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch)
         build_reservoir_state,
         merge_reservoir_state,
     )
+
+    monkeypatch.setattr(agg, "MG_K", 4)
+    monkeypatch.setattr(sample, "RESERVOIR_N", 10)
     from dynamic_etl_spark.streaming import file_stream, run_streaming_summary
 
     schema = "grp string, item long"
@@ -778,14 +782,14 @@ def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch)
     expected = None
     for rows in batches:
         bdf = spark.createDataFrame(rows, schema)
-        delta = build_heavy_hitter_state(bdf, ["grp"], "item", k=4)
-        expected = delta if expected is None else merge_heavy_hitter_state(expected, delta, k=4)
+        delta = build_heavy_hitter_state(bdf, ["grp"], "item")
+        expected = delta if expected is None else merge_heavy_hitter_state(expected, delta)
         expected = expected.localCheckpoint()
         bdf.coalesce(1).write.mode("append").parquet(src)
         run_streaming_summary(
             file_stream(spark, src, schema), state, ckpt,
-            build=lambda b: build_heavy_hitter_state(b, ["grp"], "item", k=4),
-            merge=lambda s, d: merge_heavy_hitter_state(s, d, k=4),
+            build=lambda b: build_heavy_hitter_state(b, ["grp"], "item"),
+            merge=merge_heavy_hitter_state,
         )
     maintained = sorted(map(tuple, read_versioned(spark, state).collect()))
     assert maintained == sorted(map(tuple, expected.collect()))
@@ -802,18 +806,16 @@ def test_streaming_summary_maintains_heavy_hitters_and_reservoir(spark, scratch)
         spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src2)
         run_streaming_summary(
             file_stream(spark, src2, schema), state2, ckpt2,
-            build=lambda b: build_reservoir_state(b, ["grp"], "item", n=10),
-            merge=lambda s, d: merge_reservoir_state(s, d, n=10),
+            build=lambda b: build_reservoir_state(b, ["grp"], "item"),
+            merge=merge_reservoir_state,
         )
-    one_shot = build_reservoir_state(
-        spark.createDataFrame(all_rows, schema), ["grp"], "item", n=10
-    )
+    one_shot = build_reservoir_state(spark.createDataFrame(all_rows, schema), ["grp"], "item")
     assert sorted(map(tuple, read_versioned(spark, state2).collect())) == sorted(
         map(tuple, one_shot.collect())
     )
 
 
-def test_streaming_summary_maintains_count_min(spark, scratch):
+def test_streaming_summary_maintains_count_min(spark, scratch, monkeypatch):
     """run_streaming_summary with the Count-Min builders: the maintained
     counter grid equals the one-shot sketch over everything (elementwise
     integer addition is lossless), so streaming point-frequency
@@ -821,12 +823,15 @@ def test_streaming_summary_maintains_count_min(spark, scratch):
     import os
 
     from dynamic_etl_spark.io.versioned import read_versioned
+    from dynamic_etl_spark.ops import agg
     from dynamic_etl_spark.ops.agg import (
         build_cm_state,
         cm_estimate,
         merge_cm_state,
     )
     from dynamic_etl_spark.streaming import file_stream, run_streaming_summary
+
+    monkeypatch.setattr(agg, "CM_WIDTH", 16)
 
     src = os.path.join(scratch, "src")
     state = os.path.join(scratch, "state")
@@ -843,14 +848,14 @@ def test_streaming_summary_maintains_count_min(spark, scratch):
             file_stream(spark, src, "item long"),
             state,
             ckpt,
-            build=lambda b: build_cm_state(b, [], "item", width=16),
+            build=lambda b: build_cm_state(b, [], "item"),
             merge=merge_cm_state,
         )
 
     one_shot = {
         (r["state_depth"], r["state_bucket"]): r["state_cnt"]
         for r in build_cm_state(
-            spark.createDataFrame(all_rows, "item long"), [], "item", width=16
+            spark.createDataFrame(all_rows, "item long"), [], "item"
         ).collect()
     }
     maintained_df = read_versioned(spark, state)
@@ -947,7 +952,7 @@ def test_streaming_summary_maintains_ks_drift_state(spark, scratch):
     assert all(v[2] > 0 for v in finalized.values())  # drift actually present
 
 
-def test_streaming_summary_maintains_md5_hll(spark, scratch):
+def test_streaming_summary_maintains_md5_hll(spark, scratch, monkeypatch):
     """run_streaming_summary with the md5-HLL register builders (the
     oracle-checkable distinct sketch, r8): MAX-merge is associative,
     commutative, AND idempotent, so the streamed register state equals
@@ -958,12 +963,15 @@ def test_streaming_summary_maintains_md5_hll(spark, scratch):
     import os
 
     from dynamic_etl_spark.io.versioned import read_versioned
+    from dynamic_etl_spark.ops import agg
     from dynamic_etl_spark.ops.agg import (
         build_hll_md5_state,
         finalize_hll_md5_state,
         merge_hll_md5_state,
     )
     from dynamic_etl_spark.streaming import file_stream, run_streaming_summary
+
+    monkeypatch.setattr(agg, "HLL_P", 8)
 
     src = os.path.join(scratch, "src")
     state = os.path.join(scratch, "state")
@@ -980,20 +988,18 @@ def test_streaming_summary_maintains_md5_hll(spark, scratch):
             file_stream(spark, src, "item long"),
             state,
             ckpt,
-            build=lambda b: build_hll_md5_state(b, [], "item", p=8),
+            build=lambda b: build_hll_md5_state(b, [], "item"),
             merge=merge_hll_md5_state,
         )
 
-    one_shot = build_hll_md5_state(
-        spark.createDataFrame(all_rows, "item long"), [], "item", p=8
-    )
+    one_shot = build_hll_md5_state(spark.createDataFrame(all_rows, "item long"), [], "item")
     maintained_df = read_versioned(spark, state)
     regs = lambda df: {(r["bucket"], r["max_rho"]) for r in df.collect()}
     assert regs(maintained_df) == regs(one_shot)
 
     # the finalized estimate off the streamed state is the one-shot
     # estimate (identical registers -> identical deterministic division)
-    est = lambda df: finalize_hll_md5_state(df, p=8).collect()[0]["raw_estimate"]
+    est = lambda df: finalize_hll_md5_state(df).collect()[0]["raw_estimate"]
     assert est(maintained_df) == est(one_shot)
 
 

@@ -17,6 +17,7 @@ from dynamic_etl_spark.io.versioned import (
     vacuum,
     write_versioned,
 )
+from tests.conftest import jobs_of
 
 
 def _read_at(spark, root, version):
@@ -55,13 +56,8 @@ def test_read_versioned_takes_the_committed_schema(spark, tmp_path):
     root = str(tmp_path / "t")
     write_versioned(_table(spark, 10, "a"), root)
     snapshot = os.path.join(root, "_versions", V._commit_record(root, 0)["dir"])
-    sc = spark.sparkContext
-    sc.setJobGroup("read-versioned", "read-versioned")
-    try:
-        df = read_versioned(spark, root)
-    finally:
-        sc.setJobGroup(None, None)
-    assert not sc.statusTracker().getJobIdsForGroup("read-versioned")
+    df, jobs = jobs_of(spark, lambda: read_versioned(spark, root))
+    assert jobs == 0
     assert df.schema == spark.read.parquet(snapshot).schema
     rows = sorted(map(tuple, df.collect()))
 
